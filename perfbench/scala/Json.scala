@@ -1,0 +1,27 @@
+package perfbench
+
+/** Minimal JSON writer for the artifact: maps, sequences, strings, numbers
+  * and booleans; non-finite numbers become `null`.
+  */
+object Json {
+  def render(v: Any): String = v match {
+    case null => "null"
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => s"${quote(k.toString)}:${render(x)}" }
+        .mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(render).mkString("[", ",", "]")
+    case x => quote(x.toString)
+  }
+
+  private def quote(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+}
