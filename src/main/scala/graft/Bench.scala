@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Benchmark main: one JSON line with per-query wall times at
   * SPARK_GRAFT_SF_DIR. Queries run in sorted name order (stable across
@@ -20,14 +20,6 @@ import org.apache.spark.sql.SparkSession
   * spark.sql.files.maxPartitionBytes when a scale-up table compresses so
   * well (1000x replicated text dictionary-encodes into a few MB) that the
   * default 128 MB split puts the whole table in one input partition.
-  *
-  * SPARK_GRAFT_ACTION=rdd (optional) drives each query through
-  * `queryExecution.toRdd.count()` instead of `count()`: the plan then
-  * materializes EVERY output column (and keeps the result orderBy), where
-  * the default count() lets Catalyst prune unused projections — a
-  * pure-expression query (regex extraction, stress kernels) otherwise
-  * measures only its scan. The default stays count() for cross-round
-  * comparability; BASELINE.md records a both-modes comparison.
   */
 object Bench {
   /** 1-minute load average, or -1 where /proc/loadavg doesn't exist.
@@ -57,47 +49,24 @@ object Bench {
     // not the engine. Warn loudly and stamp both numbers in the artifact
     // so every round's class is readable without archaeology.
     val cpusAvailable = Runtime.getRuntime.availableProcessors()
-    // `*` (local[*]) and other non-numeric masters are valid — the guard
-    // and the artifact field must not choke on them
+    // `*` and other non-numeric values mean every available core, as
+    // local[*] does — the guard and the artifact field must not choke on them
     val cpusNum = scala.util.Try(cpus.toInt).toOption
     if (cpusNum.exists(_ > cpusAvailable))
       System.err.println(s"[bench] WARNING: local[$cpus] exceeds the " +
         s"$cpusAvailable available cores — timings will measure " +
         "oversubscription; rerun with SPARK_GRAFT_CPUS<=" + cpusAvailable)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        cpusNum.getOrElse(cpusAvailable).toString)
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").foreach { conf =>
-      conf.split(",").map(_.trim).filter(_.contains("=")).foreach { kv =>
+    val conf = sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(
+      _.split(",").map(_.trim).filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        k -> v
+      })
+    val spark = GraftSession.local(cpusNum.getOrElse(cpusAvailable), conf: _*)
 
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
-    // SPARK_GRAFT_SPILL=1 adds per-query shuffle-spill accounting (memory +
-    // disk bytes spilled, from task metrics) to the JSON — the evidence
-    // channel for the spill-not-OOM runs (BASELINE.md): a heap-constrained
-    // run must show WHERE the pressure went.
-    val trackSpill = sys.env.get("SPARK_GRAFT_SPILL").contains("1")
-    val spillMem = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong(0L)
-    if (trackSpill) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          Option(t.taskMetrics).foreach { m =>
-            spillMem.addAndGet(m.memoryBytesSpilled)
-            spillDisk.addAndGet(m.diskBytesSpilled)
-          }
-      })
-    var spills = List.empty[(String, Long, Long)]
     var failed = List.empty[String]
     // SPARK_GRAFT_TIMES=1 adds the raw per-rep walls to the JSON — the
     // noise-triage channel: a flagged median is adjudicated from its own
@@ -109,23 +78,12 @@ object Bench {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
-      if (trackSpill) {
-        // zero the counters at the start of THIS query's timed window (after
-        // a drain), so session-warmup and the previous query's straggler
-        // tasks never attribute here; reps rides in the JSON so readers can
-        // normalize the per-window total to per-execution
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-        spillMem.set(0L); spillDisk.set(0L)
-      }
       var ok = true
       var i = 0
       while (ok && i < reps) {
         val t0 = System.nanoTime()
         try {
-          val df = fn(spark, sfDir)
-          if (sys.env.get("SPARK_GRAFT_ACTION").contains("rdd"))
-            df.queryExecution.toRdd.count()
-          else df.count()
+          fn(spark, sfDir).count()
           times += (System.nanoTime() - t0) / 1e9
         } catch {
           case e: Throwable =>
@@ -141,12 +99,6 @@ object Bench {
         if (!ok) { failed ::= name; -1.0 }
         else times.sorted.apply(times.size / 2)
       if (emitTimes) repTimes ::= ((name, times.toSeq))
-      if (trackSpill) {
-        // listener bus is async; drain so spill bytes attribute to the
-        // query that caused them
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-        spills ::= ((name, spillMem.getAndSet(0L), spillDisk.getAndSet(0L)))
-      }
       name -> med
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -158,17 +110,12 @@ object Bench {
     // 1-minute average reflects this benchmark's own 32 busy cores, which is
     // expected, not contention.
     val loaded = loadStart > LoadedThreshold
-    val spillJson =
-      if (!trackSpill) ""
-      else spills.reverse.map { case (n, m, d) =>
-        s""""$n":{"mem":$m,"disk":$d,"reps":$reps}"""
-      }.mkString(""","spills":{""", ",", "}")
     val timesJson =
       if (!emitTimes) ""
       else repTimes.reverse.map { case (n, ts) =>
         s""""$n":[${ts.mkString(",")}]"""
       }.mkString(""","times":{""", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","cpus":${cpusNum.getOrElse(-1)},"cpus_master":"$cpus","cpus_available":$cpusAvailable,"reps":$reps,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"loaded":$loaded$spillJson$timesJson}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","cpus":${cpusNum.getOrElse(-1)},"cpus_master":"$cpus","cpus_available":$cpusAvailable,"reps":$reps,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"loaded":$loaded$timesJson}"""
     println(line)
     // Full per-query artifact on disk: the driver's BENCH_r{N}.json keeps
     // only a truncated tail of stdout, which hides most of the suite from

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Plan inspector: `runMain graft.Explain <queryName> [sfDir]` prints the
   * formatted physical plan for one SparkEntry query (or all when no name is
@@ -8,12 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val names = if (args.nonEmpty) Seq(args(0)) else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"===== $n =====")

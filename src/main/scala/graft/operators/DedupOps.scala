@@ -492,8 +492,8 @@ object DedupOps {
 
   /** [[connectedComponents]] plus the number of propagation rounds it took
     * to converge — the scale-measurement surface (rounds ≈ component
-    * diameter + 1 is the algorithm's cost model; `tools.CcScale` records
-    * it against depth decades).
+    * diameter + 1 is the algorithm's cost model; BASELINE.md "Round-11:
+    * connected-components decades" records it against depth decades).
     */
   def connectedComponentsRounds(ids: DataFrame, idCol: String, pairs: DataFrame,
                                 maxIter: Int = 20,
@@ -597,7 +597,8 @@ object DedupOps {
     connectedComponentsStarsRounds(ids, idCol, pairs, maxIter, checkpointDir)._1
 
   /** [[connectedComponentsStars]] plus its converged round count (the
-    * O(log²) bound under measurement in `tools.CcScale`).
+    * O(log²) bound measured in BASELINE.md "Round-11: connected-components
+    * decades").
     */
   def connectedComponentsStarsRounds(ids: DataFrame, idCol: String,
                                      pairs: DataFrame, maxIter: Int = 25,

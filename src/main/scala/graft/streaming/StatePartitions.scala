@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Scale-adaptive state partitioning for streaming queries.
@@ -32,12 +33,16 @@ import org.apache.spark.sql.SparkSession
 object StatePartitions {
   val BytesPerPartitionKey = "spark.graft.streaming.statePartitionBytes"
 
-  /** Total bytes under a local path (file or directory tree). */
-  def dirBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-    walk(new java.io.File(path))
+  /** Total bytes under a path (file or directory tree) on whatever
+    * filesystem its URI names — a plain local path, `file:`, `s3a://`,
+    * `hdfs://` — measured through the session's Hadoop conf. A path that
+    * does not exist measures 0.
+    */
+  def dirBytes(s: SparkSession, path: String): Long = {
+    val p = new Path(path)
+    try p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength
+    catch { case _: java.io.FileNotFoundException => 0L }
   }
 
   def forBytes(s: SparkSession, inputBytes: Long): Int = {
@@ -69,7 +74,7 @@ object StatePartitions {
     try f finally s.conf.set(key, old)
   }
 
-  /** [[scaled]] with the volume read from a staged local input path. */
+  /** [[scaled]] with the volume read from a staged input path. */
   def scaledFor[A](s: SparkSession, path: String)(f: => A): A =
-    scaled(s, dirBytes(path))(f)
+    scaled(s, dirBytes(s, path))(f)
 }

@@ -313,8 +313,8 @@ object StreamingDedup {
     * index-self-contained filter that runs at ingestion cadence, O(16)
     * per candidate.
     *
-    * CHOOSING tau (measured curve: tools/VerifyTauCurve + BASELINE.md
-    * r16 table, labeled fixture, J ≥ 0.5 ground truth): the default
+    * CHOOSING tau (measured curve: BASELINE.md "Verify-tier tau operating
+    * curve", labeled fixture, J ≥ 0.5 ground truth): the default
     * 8/16 keeps 99% of candidate dups at 0.77 precision (its false
     * positives are mostly J ∈ [0.35, 0.5) genuine near-dups); for a
     * ≥ 0.85 precision target use 13/16 and accept ~38% candidate

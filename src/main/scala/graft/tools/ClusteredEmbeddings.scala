@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Clustered synthetic embedding fixture (VERDICT r14 item 6): the
   * testdata embeddings are near-isotropic random vectors — PQ's
@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   * are center + N(0, sigma²) noise via Box–Muller over splitmix64
   * streams. Distributed generation (one typed map over a range — no
   * driver-side data), written as `<dest>/embeddings.parquet` so every
-  * embeddings-table tool (AnnCurve, annRecallReport) runs on it
-  * unchanged.
+  * embeddings-table consumer (annRecallReport, the recall curves in
+  * BASELINE.md "Clustered embedding fixture") runs on it unchanged.
   *
   * Usage: `runMain graft.tools.ClusteredEmbeddings <destDir> [n]
   * [clusters] [dim] [sigma] [seed]`
@@ -56,12 +56,7 @@ object ClusteredEmbeddings {
     val dim = args.lift(3).map(_.toInt).getOrElse(64)
     val sigma = args.lift(4).map(_.toDouble).getOrElse(0.3)
     val seed = args.lift(5).map(_.toLong).getOrElse(42L)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(8)
     import spark.implicits._
     spark.range(n)
       .map(id => (id, vector(seed, clusters, dim, sigma, id)))

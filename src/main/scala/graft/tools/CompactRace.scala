@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Ledger, PFilter, PSink, PSource, Pipeline, Runner}
+import graft.core.{GraftSession, Ledger, PFilter, PSink, PSource, Pipeline, Runner}
 
 /** Maintenance-vs-committers soak (VERDICT r12 item 1 — the scale companion
   * to CoreSpec's compact-race test): W worker threads drive `runPerIndex`
@@ -47,12 +46,7 @@ object CompactRace {
     require(!steal || store == "naf",
       "the forced-steal arm needs the lease provider (store=naf): " +
         "create-exclusive has no token to steal")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(16)
 
     val ledgerDir = RaceStores.ledgerDir(spark, store, "graft_compact_race")
     val pipe = Pipeline(

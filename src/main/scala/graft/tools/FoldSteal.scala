@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession
 import graft.streaming.StreamingDedup
 
 /** Forced-steal soak for the standing-index FOLD (VERDICT r15 "what's
@@ -37,12 +37,7 @@ object FoldSteal {
     val perBatch = args.lift(1).map(_.toInt).getOrElse(150)
     val maxFiles = args.lift(2).map(_.toInt).getOrElse(4)
     val hardCap = nBatches * 4
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(8)
     import spark.implicits._
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.naf.impl", classOf[NonAtomicFileSystem].getName)

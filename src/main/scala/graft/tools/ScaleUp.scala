@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession
+
 /** Scale-factor multiplier for bench data: replicates an sf directory K
   * times with FOREIGN-KEY-CONSISTENT key offsets (copy k shifts every key
   * column by k·stride, so join fan-outs, group cardinalities per key, and
@@ -84,11 +86,7 @@ object ScaleUp {
     // (dimension tables in SingleCopy are always copied).
     val wanted: String => Boolean =
       if (args.length == 4) args(3).split(",").map(_.trim).toSet else _ => true
-    val spark = SparkSession.builder()
-      .appName("graft-scaleup").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(32, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     try {
       SingleCopy.foreach { t =>
         spark.read.parquet(s"$src/$t.parquet")

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Ledger, PFilter, PSink, PSource, Pipeline, Runner}
+import graft.core.{GraftSession, Ledger, PFilter, PSink, PSource, Pipeline, Runner}
 
 /** Multi-worker claim-protocol soak (the scale companion to CoreSpec's
   * 8-index race): W worker threads drive `runPerIndex` concurrently
@@ -29,12 +28,7 @@ object WorkerRace {
     // args(2) = store: `naf` runs the soak on the simulated non-atomic
     // object store with the lease lock provider (see RaceStores)
     val store = args.lift(2).getOrElse("file")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(16)
 
     val ledgerDir = RaceStores.ledgerDir(spark, store, "graft_worker_race")
     val pipe = Pipeline(

@@ -1002,4 +1002,34 @@ class CoreSpec extends SparkSpec {
       s.conf.unset(AdaptiveWidth.RowsPerPartitionKey)
     }
   }
+
+  test("GraftSession.local(3): master local[3], 3 shuffle partitions, UTC, no UI") {
+    // Probed in a fresh JVM on a non-UTC host zone, since this JVM's
+    // session already exists.
+    import scala.jdk.CollectionConverters._
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx512m",
+      "-Duser.timezone=America/Los_Angeles") ++ opens ++
+      Seq("-cp", sys.props("java.class.path"),
+        GraftSessionProbe.getClass.getName.stripSuffix("$"))
+    val proc = new ProcessBuilder(cmd: _*)
+      .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
+    assert(proc.waitFor() === 0)
+    assert(out.linesIterator.toSeq.last === "local[3] 3 UTC false")
+  }
+}
+
+/** Prints the policy a fresh `GraftSession.local(3)` reports: master,
+  * shuffle partitions, session time zone, and whether a UI is bound.
+  */
+object GraftSessionProbe {
+  def main(args: Array[String]): Unit = {
+    val s = GraftSession.local(3)
+    try println(Seq(s.sparkContext.master, s.conf.get("spark.sql.shuffle.partitions"),
+      s.conf.get("spark.sql.session.timeZone"), s.sparkContext.uiWebUrl.nonEmpty)
+      .mkString(" "))
+    finally s.stop()
+  }
 }

@@ -168,8 +168,8 @@ class SimilaritySpec extends SparkSpec {
       (got & truth).size.toDouble / truth.size
     }
     // deterministic init + fixed data → these are FIXED numbers, not flaky
-    // statistics; pin the budget ordering the AnnCurve table documents
-    // (4 B: m=8,k=16 → 8 B: m=16,k=16 → 16 B: m=16,k=256)
+    // statistics; pin the budget ordering that BASELINE.md's "PQ code-budget
+    // curve" documents (4 B: m=8,k=16 → 8 B: m=16,k=16 → 16 B: m=16,k=256)
     val r4 = recall(8, 16)
     val r8 = recall(16, 16)
     val r16 = recall(16, 256)
@@ -209,7 +209,7 @@ class SimilaritySpec extends SparkSpec {
     // a sampled-train index still ranks: recall@10 vs brute stays in the
     // same class as full-train (both trained on isotropic noise — the
     // documented PQ worst case; the pin is "not degenerate", the measured
-    // parity row lives in the AnnCurve table at sf0.1)
+    // parity rows live in BASELINE.md "Sample-bounded IVF/PQ training")
     val truth = SimilarityOps.topKCosine(emb, "vec_id", "embedding", 10, 6L)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val cbS = SimilarityOps.pqCodebooks(emb, "vec_id", "embedding",

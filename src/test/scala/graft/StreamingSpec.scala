@@ -401,7 +401,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("verify tier tau=8/16 operating point pinned on the labeled near-dup fixture") {
-    // the VerifyTauCurve fixture at nBase=400 (BASELINE.md r16 table):
+    // the labeled fixture of BASELINE.md "Verify-tier tau operating curve"
+    // at nBase=400:
     // engineered kept-prefix pairs with exact 3-shingle Jaccard
     // (m-2)/(116-(m-2)), label = J >= 0.5. The default tau = 8/16 must
     // keep its measured row: >= 99% of candidate dups verified (exactly
@@ -611,6 +612,15 @@ class StreamingSpec extends SparkSpec {
         StatePartitions.scaled(s, 1L << 20) { throw new RuntimeException("x") }
       }
       assert(s.conf.get("spark.sql.shuffle.partitions") === "32")
+      // a staged directory measures the same bytes as a plain path and as
+      // its file: URI (a URI walked as a java.io.File would measure 0)
+      val staged = java.nio.file.Files.createTempDirectory("state_parts_")
+      java.nio.file.Files.createDirectories(staged.resolve("sub"))
+      java.nio.file.Files.write(staged.resolve("a.json"), Array.fill[Byte](1000)(1))
+      java.nio.file.Files.write(staged.resolve("sub/b.json"), Array.fill[Byte](24)(1))
+      val plain = StatePartitions.dirBytes(s, staged.toString)
+      assert(plain >= 1024L)
+      assert(StatePartitions.dirBytes(s, staged.toUri.toString) === plain)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", old)
       s.conf.unset(StatePartitions.BytesPerPartitionKey)

@@ -1,13 +1,14 @@
 #!/bin/bash
-# Quiet-class launcher for the measurement tools (same plain-java convention
-# as bench_quiet.sh, but takes the main class + args instead of exec'ing
-# graft.Bench). Usage: tools/tool_quiet.sh graft.tools.DedupPhases [args...]
+# Quiet-class launcher (BASELINE.md convention): plain java, not sbt, so the
+# launcher's compile/JIT burst doesn't inflate loadavg_start. Runs the
+# compiled classes (sbt compile) against the Spark distribution's jars,
+# which ship the Scala library too.
+# Usage: tools/tool_quiet.sh <main class> [args...]
+#   e.g. tools/tool_quiet.sh graft.Bench   (env knobs as documented in Bench)
 set -e
 cd "$(dirname "$0")/.."
-SCALA_LIB=$(ls /root/.cache/coursier/v1/https/*/artifactory/maven-all/org/scala-lang/scala-library/2.13.17/scala-library-2.13.17.jar | head -1)
 ADD_OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 exec java $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp target/scala-2.13/classes:"$SCALA_LIB":'/opt/spark/jars/*' \
+  -cp target/scala-2.13/classes:'/opt/spark/jars/*' \
   "$@"
