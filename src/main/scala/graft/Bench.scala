@@ -1,10 +1,12 @@
 package graft
 import graft.core.GraftSession
 
-/** Benchmark main: one JSON line with per-query wall times at
-  * SPARK_GRAFT_SF_DIR. Queries run in sorted name order (stable across
-  * rounds for the driver's BENCH_r{N} comparison) and the cache is cleared
-  * between queries so persisted subplans from one query can't skew the next.
+/** Benchmark main: per-query wall times at SPARK_GRAFT_SF_DIR. The full
+  * JSON line (medians and per-rep `times`) goes to an artifact file; the
+  * last stdout line is a compact summary that names it. Queries run in
+  * sorted name order (stable across rounds for the driver's BENCH_r{N}
+  * comparison) and the cache is cleared between queries so persisted
+  * subplans from one query can't skew the next.
   *
   * Each query runs SPARK_GRAFT_REPS times (default 3) and reports the
   * median, so one loaded run on a shared VM can't fail the 2× gate. A query
@@ -13,7 +15,8 @@ import graft.core.GraftSession
   *
   * SPARK_GRAFT_QUERIES (comma-separated names, optional) restricts the run
   * to the named queries, so a single suspicious timing can be re-measured
-  * without paying for the whole suite.
+  * without paying for the whole suite; unknown names are reported on
+  * stderr.
   *
   * SPARK_GRAFT_CONF (optional, "key=value,key=value") passes extra Spark
   * confs into the session — e.g. a smaller
@@ -64,26 +67,21 @@ object Bench {
       })
     val spark = GraftSession.local(cpusNum.getOrElse(cpusAvailable), conf: _*)
 
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_QUERIES"), "bench")
     var failed = List.empty[String]
-    // SPARK_GRAFT_TIMES=1 adds the raw per-rep walls to the JSON — the
-    // noise-triage channel: a flagged median is adjudicated from its own
-    // rep spread (scheduling noise reads as a wide spread around a stable
-    // floor; a code regression moves the floor).
-    val emitTimes = sys.env.get("SPARK_GRAFT_TIMES").contains("1")
+    // raw per-rep walls — the noise-triage channel: a flagged median is
+    // adjudicated from its own rep spread (scheduling noise reads as a wide
+    // spread around a stable floor; a code regression moves the floor)
     var repTimes = List.empty[(String, Seq[Double])]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val results = selected.map { q =>
+      val name = q.name
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
       var ok = true
       var i = 0
       while (ok && i < reps) {
         val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).count()
+          q.run(spark, sfDir).count()
           times += (System.nanoTime() - t0) / 1e9
         } catch {
           case e: Throwable =>
@@ -98,10 +96,10 @@ object Bench {
       val med =
         if (!ok) { failed ::= name; -1.0 }
         else times.sorted.apply(times.size / 2)
-      if (emitTimes) repTimes ::= ((name, times.toSeq))
-      name -> med
+      repTimes ::= ((name, times.toSeq))
+      q -> med
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    val qs = results.map { case (q, v) => s"\"" + q.name + "\":" + v }
       .mkString("{", ",", "}")
     val errs = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -110,44 +108,55 @@ object Bench {
     // 1-minute average reflects this benchmark's own 32 busy cores, which is
     // expected, not contention.
     val loaded = loadStart > LoadedThreshold
-    val timesJson =
-      if (!emitTimes) ""
-      else repTimes.reverse.map { case (n, ts) =>
-        s""""$n":[${ts.mkString(",")}]"""
-      }.mkString(""","times":{""", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","cpus":${cpusNum.getOrElse(-1)},"cpus_master":"$cpus","cpus_available":$cpusAvailable,"reps":$reps,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"loaded":$loaded$timesJson}"""
-    println(line)
-    // Full per-query artifact on disk: the driver's BENCH_r{N}.json keeps
-    // only a truncated tail of stdout, which hides most of the suite from
-    // round-over-round comparison — this file carries every median.
-    // Skipped for partial runs (SPARK_GRAFT_QUERIES) so a one-query
-    // re-measure never masquerades as a full suite.
-    if (only.isEmpty) {
-      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full_latest.json")
-      val p = java.nio.file.Paths.get(outPath)
-      // Quiet-machine rule, machine-enforced: a loaded run must not replace
-      // a quiet artifact — it lands beside it as <name>.loaded.json so the
-      // numbers are still recorded but can never be mistaken for the
-      // engine's quiet-machine medians.
-      val dest =
-        if (loaded && java.nio.file.Files.exists(p) &&
-            !new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-              .contains("\"loaded\":true")) {
-          System.err.println(s"[bench] loadavg_start $loadStart > $LoadedThreshold: " +
-            s"keeping quiet artifact $outPath, writing $outPath.loaded.json")
-          java.nio.file.Paths.get(outPath + ".loaded.json")
-        } else p
-      java.nio.file.Files.write(dest, (line + "\n").getBytes("UTF-8"))
-    }
-    // Driver-parse channel (VERDICT r16 item 2): the one-line JSON printed
-    // above is followed by Spark shutdown chatter and sbt's [success]
-    // trailer, so a parser that takes the LAST stdout line has returned
-    // null since round 10. Mirror the line to a fixed filename at the cwd
-    // (repo root under `sbt runMain`) and re-print it after spark.stop()
-    // so it is the last line THIS process emits.
-    java.nio.file.Files.write(java.nio.file.Paths.get("bench_last.json"),
-      (line + "\n").getBytes("UTF-8"))
+    val timesJson = repTimes.reverse.map { case (n, ts) =>
+      s""""$n":[${ts.mkString(",")}]"""
+    }.mkString("{", ",", "}")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","cpus":${cpusNum.getOrElse(-1)},"cpus_master":"$cpus","cpus_available":$cpusAvailable,"reps":$reps,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"loaded":$loaded,"times":$timesJson}"""
+    // The full line goes to a file only: the driver keeps a truncated tail
+    // of stdout, so stdout gets the compact line below, which names it.
+    // A partial run (SPARK_GRAFT_QUERIES) writes bench_last.json, so a
+    // one-query re-measure never masquerades as a full suite.
+    val full = selected.size == SparkEntry.registry.size
+    val outPath =
+      if (full) sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full_latest.json")
+      else "bench_last.json"
+    val p = java.nio.file.Paths.get(outPath)
+    // Quiet-machine rule, machine-enforced: a loaded run must not replace
+    // a quiet artifact — it lands beside it as <name>.loaded.json so the
+    // numbers are still recorded but can never be mistaken for the
+    // engine's quiet-machine medians.
+    val dest =
+      if (full && loaded && java.nio.file.Files.exists(p) &&
+          !new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+            .contains("\"loaded\":true")) {
+        System.err.println(s"[bench] loadavg_start $loadStart > $LoadedThreshold: " +
+          s"keeping quiet artifact $outPath, writing $outPath.loaded.json")
+        java.nio.file.Paths.get(outPath + ".loaded.json")
+      } else p
+    java.nio.file.Files.write(dest, (line + "\n").getBytes("UTF-8"))
+    val families = results.groupBy(_._1.family).toSeq.sortBy(_._1)
+      .map { case (f, rs) => f -> rs.map(_._2).filter(_ >= 0).sum }
     spark.stop()
-    println(line)
+    println(compactLine(total, results.size, failed.sorted, families, loaded,
+      cpusNum.getOrElse(-1), reps, sfDir, dest.toAbsolutePath.toString))
+  }
+
+  /** The one stdout line the driver parses: the suite total, counts, the
+    * first errors, per-family totals and the run stamp, plus the path of
+    * the artifact that holds the full line. At most 10 error names are
+    * listed, so the line stays well under the driver's 2,000-character
+    * stdout tail whatever the number of queries.
+    */
+  def compactLine(total: Double, n: Int, errors: Seq[String],
+      families: Seq[(String, Double)], loaded: Boolean, cpus: Int, reps: Int,
+      sf: String, artifact: String): String = {
+    def str(s: String) = Verify.jsonString(s)
+    val errs = errors.take(10).map(str).mkString("[", ",", "]")
+    val fams = families.map { case (f, t) => s"${str(f)}:$t" }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":$total,"unit":"sec","n":$n,""" +
+      s""""n_errors":${errors.size},"errors":$errs,"families":$fams,""" +
+      s""""loaded":$loaded,"cpus":$cpus,"reps":$reps,"sf":${str(sf)},""" +
+      s""""artifact":${str(artifact)}}"""
   }
 }

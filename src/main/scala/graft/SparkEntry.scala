@@ -1,58 +1,23 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
-import graft.core.DriverParquet
-import graft.core.DriverParquet.{DoubleArrT, DoubleT, IntT, StringT}
-import graft.functions.{Physics, Text}
-import graft.operators.{CurationOps, DedupOps, MultimodalOps, RelationalOps, SimilarityOps, StatsOps, TextOps}
-import graft.sinks.TarSink
-import graft.sources.{Tables, TarSource}
+import graft.queries._
+import graft.queries.RelationalQueries.qJoinRegionalRevenue
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2, with a DuckDB-equivalent `oracleSql` for the t2 hash check.
-  *
-  * Conventions for oracle parity:
-  *  - every computed float column is rounded identically on both sides
-  *    (rounding width ≫ worst-case summation-order error);
-  *  - counts/sums of integers are CAST to BIGINT in SQL (DuckDB sums to
-  *    HUGEINT otherwise);
-  *  - both sides ORDER BY the key columns;
-  *  - aggregate aliases match exactly (driver sorts columns by name).
+/** Driver contract over the query registry. Each query is declared once, as
+  * a [[graft.queries.Q]] in its family's file under `graft.queries`, with
+  * its DuckDB oracle next to its run; `queries` and `oracleSql` are both
+  * derived from that one declaration.
   */
 object SparkEntry {
 
-  /** Epsilon-stabilized rounding for oracle float parity. Aggregates of
-    * 2-decimal inputs often terminate *exactly* on a rounding half-boundary
-    * (e.g. var = 114.87585), where Spark (BigDecimal HALF_UP) and DuckDB
-    * (scale + rint) disagree. A tiny epsilon — far above algorithmic
-    * summation-order noise, far below the rounding width — pushes exact halves
-    * consistently off the boundary. The identical `+ eps` appears in every
-    * oracleSql round().
-    */
-  private def rnd(c: org.apache.spark.sql.Column, d: Int): org.apache.spark.sql.Column =
-    round(c + lit(if (d <= 2) 1e-6 else 1e-9), d)
-  private def rnd(name: String, d: Int): org.apache.spark.sql.Column = rnd(col(name), d)
+  val families: Seq[Family] = Seq(RelationalQueries, TextQueries,
+    DedupQueries, AnnQueries, StreamingQueries, MeshSourceQueries,
+    PipelineQueries, MediaQueries)
 
-  /** Tmp output dir for a sink→source round-trip query, CLEARED first: a
-    * stale store from a prior run with a different mesh/variable set (or a
-    * `dir.hashCode` collision between two sf dirs) must never leak into the
-    * re-read glob and break the oracle comparison.
-    */
-  private def freshTmpDir(prefix: String, dir: String): String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/${prefix}_${math.abs(dir.hashCode)}"
-    val p = new java.io.File(out)
-    if (p.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(p)
-    }
-    out
-  }
+  /** Every query by name. */
+  lazy val registry: Map[String, Q] = Q.index(families.flatMap(_.queries))
 
   /** Flagship: regional-revenue 5-table join (NS-cylinder join shape,
     * reference `domains/mesh/sources/ns_cylinder.py:17-40`) on sf0.001.
@@ -60,11149 +25,23 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     qJoinRegionalRevenue(spark, "/root/testdata/sf0.001")
 
-  // ---------------------------------------------------------------- queries
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_mean_filter" -> (qMeanFilter _),
-    "q_field_stats" -> (qFieldStats _),
-    "q_welford_state" -> (qWelfordState _),
-    "q_join_regional_revenue" -> (qJoinRegionalRevenue _),
-    "q_tpch_q1" -> (qTpchQ1 _),
-    "q_tpch_q3" -> (qTpchQ3 _),
-    "q_semi_customers_with_orders" -> (qSemiCustomersWithOrders _),
-    "q_anti_customers_without_orders" -> (qAntiCustomersWithoutOrders _),
-    "q_distinct_edges" -> (qDistinctEdges _),
-    "q_keep_first_dedup" -> (qKeepFirstDedup _),
-    "q_permutation_ids" -> (qPermutationIds _),
-    "q_window_lag_delta" -> (qWindowLagDelta _),
-    "q_pivot_event_matrix" -> (qPivotEventMatrix _),
-    "q_grid_stats" -> (qGridStats _),
-    "q_year_partition_counts" -> (qYearPartitionCounts _),
-    "q_nan_inf_census" -> (qNanInfCensus _),
-    "q_von_mises" -> (qVonMises _),
-    "q_precision_cast" -> (qPrecisionCast _),
-    "q_field_select_pushdown" -> (qFieldSelectPushdown _),
-    "q_global_inject" -> (qGlobalInject _),
-    "q_array_explode" -> (qArrayExplode _),
-    "q_point_to_cell_mean" -> (qPointToCellMean _),
-    "q_json_extract" -> (qJsonExtract _),
-    "q_json_flatten" -> (qJsonFlatten _),
-    "q_exact_dedup" -> (qExactDedup _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_dup_spans" -> (qDupSpans _),
-    "q_dup_span_removal" -> (qDupSpanRemoval _),
-    "q_semantic_dedup" -> (qSemanticDedup _),
-    "q_embedding_outliers" -> (qEmbeddingOutliers _),
-    "q_unigram_lm" -> (qUnigramLm _),
-    "q_nb_classify" -> (qNbClassify _),
-    "q_perplexity_buckets" -> (qPerplexityBuckets _),
-    "q_bigram_lm" -> (qBigramLm _),
-    "q_token_entropy" -> (qTokenEntropy _),
-    "q_chunk_tokens" -> (qChunkTokens _),
-    "q_tokenizer_fertility" -> (qTokenizerFertility _),
-    "q_length_buckets" -> (qLengthBuckets _),
-    "q_cdc_chunks" -> (qCdcChunks _),
-    "q_bpe_encode" -> (qBpeEncode _),
-    "q_unigram_tokenize" -> (qUnigramTokenize _),
-    "q_wordpiece_tokenize" -> (qWordpieceTokenize _),
-    "q_bpe_roundtrip" -> (qBpeRoundtrip _),
-    "q_gopher_rules" -> (qGopherRules _),
-    "q_passage_dedup" -> (qPassageDedup _),
-    "q_tfidf" -> (qTfidf _),
-    "q_streaming_dedup" -> (qStreamingDedup _),
-    "q_streaming_incremental" -> (qStreamingIncremental _),
-    "q_streaming_folding" -> (qStreamingFolding _),
-    "q_streaming_folding_verify" -> (qStreamingFoldingVerify _),
-    "q_jaccard_pairs" -> (qJaccardPairs _),
-    "q_lsh_jaccard" -> (qLshJaccard _),
-    "q_minhash_signatures" -> (qMinhashSignatures _),
-    "q_lsh_band_pairs" -> (qLshBandPairs _),
-    "q_simhash" -> (qSimhash _),
-    "q_cosine_pairs" -> (qCosinePairs _),
-    "q_topk_cosine" -> (qTopkCosine _),
-    "q_text_quality" -> (qTextQuality _),
-    "q_repetition" -> (qRepetition _),
-    "q_lang_id" -> (qLangId _),
-    "q_classifier_eval" -> (qClassifierEval _),
-    "q_doc_fingerprints" -> (qDocFingerprints _),
-    "q_token_stats" -> (qTokenStats _),
-    "q_multimodal_frames" -> (qMultimodalFrames _),
-    "q_webdataset" -> (qWebdataset _),
-    "q_shard_plan" -> (qShardPlan _),
-    "q_media_decode" -> (qMediaDecode _),
-    "q_audio_spectral" -> (qAudioSpectral _),
-    "q_audio_fingerprint" -> (qAudioFingerprint _),
-    "q_audio_fp_pairs" -> (qAudioFpPairs _),
-    "q_jpeg_decode" -> (qJpegDecode _),
-    "q_video_frames" -> (qVideoFrames _),
-    "q_gif_decode" -> (qGifDecode _),
-    "q_image_resize" -> (qImageResize _),
-    "q_audio_resample" -> (qAudioResample _),
-    "q_image_orient" -> (qImageOrient _),
-    "q_audio_normalize" -> (qAudioNormalize _),
-    "q_mp4_meta" -> (qMp4Meta _),
-    "q_avc_sps" -> (qAvcSps _),
-    "q_audio_meta" -> (qAudioMeta _),
-    "q_mesh_quality" -> (qMeshQuality _),
-    "q_atom_offsets" -> (qAtomOffsets _),
-    "q_ann_pairs" -> (qAnnPairs _),
-    "q_hard_negatives" -> (qHardNegatives _),
-    "q_pq_topk" -> (qPqTopk _),
-    "q_ivfpq_topk" -> (qIvfPqTopk _),
-    "q_ivfpq_residual_cos" -> (qIvfPqResidualCosTopk _),
-    "q_scalar_quantize" -> (qScalarQuantize _),
-    "q_int8_topk" -> (qInt8Topk _),
-    "q_hamming_topk" -> (qHammingTopk _),
-    "q_ivfsq_topk" -> (qIvfSqTopk _),
-    "q_ivfsq_residual_topk" -> (qIvfSqResidualTopk _),
-    "q_ann_recall" -> (qAnnRecall _),
-    "q_pca_project" -> (qPcaProject _),
-    "q_random_projection" -> (qRandomProjection _),
-    "q_grid_coarsen" -> (qGridCoarsen _),
-    "q_regrid" -> (qRegrid _),
-    "q_vti_roundtrip" -> (qVtiRoundtrip _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_sessionize" -> (qSessionize _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_asof_null" -> (qAsofNull _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_spatial_join" -> (qSpatialJoin _),
-    "q_point_in_polygon" -> (qPointInPolygon _),
-    "q_resample" -> (qResample _),
-    "q_skyline" -> (qSkyline _),
-    "q_mad_outliers" -> (qMadOutliers _),
-    "q_mad_approx" -> (qMadApprox _),
-    "q_privacy_report" -> (qPrivacyReport _),
-    "q_dp_counts" -> (qDpCounts _),
-    "q_bucketed_join" -> (qBucketedJoin _),
-    "q_redact" -> (qRedact _),
-    "q_secret_scan" -> (qSecretScan _),
-    "q_luhn_cards" -> (qLuhnCards _),
-    "q_zipf_slope" -> (qZipfSlope _),
-    "q_blocklist" -> (qBlocklist _),
-    "q_token_budget" -> (qTokenBudget _),
-    "q_wall_nodes" -> (qWallNodes _),
-    "q_union_priority" -> (qUnionPriority _),
-    "q_era5_routing" -> (qEra5Routing _),
-    "q_era5_fetch" -> (qEra5Fetch _),
-    "q_ahmedml_fetch" -> (qAhmedmlFetch _),
-    "q_boundary_box" -> (qBoundaryBox _),
-    "q_boundary_hemisphere" -> (qBoundaryHemisphere _),
-    "q_boundary_hole" -> (qBoundaryHole _),
-    "q_merge_points" -> (qMergePoints _),
-    "q_vtu_roundtrip" -> (qVtuRoundtrip _),
-    "q_tet_quality" -> (qTetQuality _),
-    "q_field_info" -> (qFieldInfo _),
-    "q_atomic_info" -> (qAtomicInfo _),
-    "q_quality_gate" -> (qQualityGate _),
-    "q_stratified_sample" -> (qStratifiedSample _),
-    "q_domain_mix" -> (qDomainMix _),
-    "q_weighted_sample" -> (qWeightedSample _),
-    "q_quantiles" -> (qQuantiles _),
-    "q_zscore_gate" -> (qZscoreGate _),
-    "q_profile" -> (qProfile _),
-    "q_profile_approx" -> (qProfileApprox _),
-    "q_approx_distinct" -> (qApproxDistinct _),
-    "q_theta_sketch" -> (qThetaSketch _),
-    "q_heavy_hitters" -> (qHeavyHitters _),
-    "q_histogram" -> (qHistogram _),
-    "q_corr_matrix" -> (qCorrMatrix _),
-    "q_pack_sequences" -> (qPackSequences _),
-    "q_random_mesh" -> (qRandomMesh _),
-    "q_partition_indices" -> (qPartitionIndices _),
-    "q_random_dataarray" -> (qRandomDataarray _),
-    "q_random_atoms" -> (qRandomAtoms _),
-    "q_d3plot_roundtrip" -> (qD3plotRoundtrip _),
-    "q_d3plot_sph" -> (qD3plotSph _),
-    "q_kfile_thickness" -> (qKfileThickness _),
-    "q_stl_roundtrip" -> (qStlRoundtrip _),
-    "q_zarr_roundtrip" -> (qZarrRoundtrip _),
-    "q_zarr_f16_roundtrip" -> (qZarrF16Roundtrip _),
-    "q_salted_join" -> (qSaltedJoin _),
-    "q_bloom_prune" -> (qBloomPrune _),
-    "q_netcdf_roundtrip" -> (qNetcdfRoundtrip _),
-    "q_netcdf_packed" -> (qNetcdfPacked _),
-    "q_grib2_decode" -> (qGrib2Decode _),
-    "q_geotiff_grid" -> (qGeotiffGrid _),
-    "q_netcdf_time" -> (qNetcdfTime _),
-    "q_netcdf_auto" -> (qNetcdfAuto _),
-    "q_ivf_topk" -> (qIvfTopk _),
-    "q_ivf_append" -> (qIvfAppend _),
-    "q_simhash_pairs" -> (qSimhashPairs _),
-    "q_atomic_stats" -> (qAtomicStats _),
-    "q_aselmdb_roundtrip" -> (qAselmdbRoundtrip _),
-    "q_ledger_summary" -> (qLedgerSummary _),
-    "q_ledger_detail" -> (qLedgerDetail _),
-    "q_pipeline_e2e" -> (qPipelineE2e _),
-    "q_pipeline_partial" -> (qPipelinePartial _),
-    "q_dashboard_index" -> (qDashboardIndex _),
-    "q_dashboard_summary" -> (qDashboardSummary _),
-    "q_dashboard_workers" -> (qDashboardWorkers _),
-    "q_dashboard_stages" -> (qDashboardStages _),
-    "q_dashboard_logs" -> (qDashboardLogs _),
-    "q_dashboard_artifacts" -> (qDashboardArtifacts _),
-    "q_dashboard_workers_multi" -> (qDashboardWorkersMulti _),
-    "q_dashboard_stages_idx" -> (qDashboardStagesIdx _),
-    "q_dashboard_progress" -> (qDashboardProgress _),
-    "q_ledger_reset" -> (qLedgerReset _),
-    "q_pipeline_from_config" -> (qPipelineFromConfig _),
-    "q_text_pipeline_e2e" -> (qTextPipelineE2e _),
-    "q_volume_assembly" -> (qVolumeAssembly _),
-    "q_drivaerml_fetch" -> (qDrivaermlFetch _),
-    "q_ahmedml_multi" -> (qAhmedmlMulti _),
-    "q_mesh_sink_layout" -> (qMeshSinkLayout _),
-    "q_grid_sidecar" -> (qGridSidecar _),
-    "q_ansys_routing" -> (qAnsysRouting _),
-    "q_ansys_decode" -> (qAnsysDecode _),
-    "q_netcdf4_roundtrip" -> (qNetcdf4Roundtrip _),
-    "q_streaming_stats" -> (qStreamingStats _),
-    "q_streaming_cms" -> (qStreamingCms _),
-    "q_streaming_kmv" -> (qStreamingKmv _),
-    "q_streaming_trending" -> (qStreamingTrending _),
-    "q_streaming_sessions" -> (qStreamingSessions _),
-    "q_warc_roundtrip" -> (qWarcRoundtrip _),
-    "q_pagerank" -> (qPageRank _),
-    "q_shortest_paths" -> (qShortestPaths _),
-    "q_rollup" -> (qRollup _),
-    "q_range_window" -> (qRangeWindow _),
-    "q_streaming_join" -> (qStreamingJoin _),
-    "q_text_normalize" -> (qTextNormalize _),
-    "q_robots_filter" -> (qRobotsFilter _),
-    "q_edit_verify" -> (qEditVerify _),
-    "q_corpus_diff" -> (qCorpusDiff _),
-    "q_image_phash" -> (qImagePhash _),
-    "q_phash_pairs" -> (qPhashPairs _),
-    "q_incremental_dedup" -> (qIncrementalDedup _),
-    "q_tfrecord" -> (qTfrecord _),
-    "q_ngram_lang_id" -> (qNgramLangId _),
-    "q_phrase_search" -> (qPhraseSearch _),
-    "q_assign_splits" -> (qAssignSplits _),
-    "q_leakage_safe_splits" -> (qLeakageSafeSplits _),
-    "q_containment" -> (qContainment _),
-    "q_keep_best" -> (qKeepBest _),
-    "q_readability" -> (qReadability _),
-    "q_parquet_meta" -> (qParquetMeta _),
-    "q_topk_per_group" -> (qTopkPerGroup _),
-    "q_avro_roundtrip" -> (qAvroRoundtrip _),
-    "q_orc_roundtrip" -> (qOrcRoundtrip _),
-    "q_zip_roundtrip" -> (qZipRoundtrip _),
-    "q_column_lineage" -> (qColumnLineage _),
-    "q_scd2" -> (qScd2 _),
-    "q_interval_merge" -> (qIntervalMerge _),
-    "q_skew_report" -> (qSkewReport _),
-    "q_cdc_apply" -> (qCdcApply _),
-    "q_transitions" -> (qTransitions _),
-    "q_chi_square" -> (qChiSquare _),
-    "q_ks_test" -> (qKsTest _),
-    "q_psi" -> (qPsi _),
-    "q_funnel" -> (qFunnel _),
-    "q_cohort_retention" -> (qCohortRetention _),
-    "q_triangles" -> (qTriangles _),
-    "q_jaro_winkler" -> (qJaroWinkler _),
-    "q_entity_resolution" -> (qEntityResolution _),
-    "q_sample_n_per_group" -> (qSampleNPerGroup _),
-    "q_quality_report" -> (qQualityReport _),
-    "q_zorder" -> (qZorder _),
-    "q_html_extract" -> (qHtmlExtract _),
-    "q_url_normalize" -> (qUrlNormalize _),
-    "q_bm25_topk" -> (qBm25Topk _),
-  )
-
-  /** SimHash banded pair detection vs an all-pairs popcount oracle: the
-    * pigeonhole banding must find EXACTLY the pairs within the Hamming
-    * radius (it is lossless, unlike probabilistic LSH).
-    */
-  private def qSimhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val sigs = DedupOps.simhash(Tables.documents(s, dir), "doc_id", "text")
-    DedupOps.simhashPairs(sigs, "doc_id", maxHamming = 3)
-      .select(col("ia"), col("ib"), col("hamming"))
-      .orderBy("ia", "ib")
-  }
-
-  /** IVF top-k at nProbe = k (every list probed): provably exhaustive, so
-    * the brute-force SQL mirror applies exactly — this gates the IVF
-    * machinery (quantizer, list assignment, probe ranking, re-rank) while
-    * SimilaritySpec pins the recall/probe trade at nProbe < k.
-    */
-  private def qIvfTopk(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
-      k = 16, iters = 3, dimHint = 64)
-    SimilarityOps.ivfTopK(emb, "vec_id", "embedding", k = 5, maxQueryId = 20L,
-      centroids = cents, nProbe = 16)
-      .orderBy("ia", "rank")
-  }
-
-  /** Incremental-append IVF probe (VERDICT r15 item 3): base build over
-    * the even-id half, two parity appends over the odd ids with the
-    * FROZEN quantizer, a compaction fold, then a probe over the LOADED
-    * committed read set at nProbe = nlist. Exhaustive probing makes the
-    * brute-force SQL the oracle for the whole append/fold/read-set
-    * chain: a row lost, duplicated, or misassigned anywhere in it
-    * changes the ranked output.
-    */
-  private def qIvfAppend(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val base = emb.filter(col("vec_id") % 2 === 0)
-    val cents = SimilarityOps.ivfCentroids(base, "vec_id", "embedding",
-      k = 16, iters = 3, dimHint = 64)
-    val idx = freshTmpDir("ivf_append", dir)
-    SimilarityOps.saveIvfIndex(
-      SimilarityOps.ivfLists(base, "vec_id", "embedding", cents), cents, idx)
-    SimilarityOps.appendToIvfIndex(
-      emb.filter(col("vec_id") % 4 === 1), "vec_id", "embedding", idx)
-    SimilarityOps.appendToIvfIndex(
-      emb.filter(col("vec_id") % 4 === 3), "vec_id", "embedding", idx)
-    SimilarityOps.compactIvfIndex(s, idx, maxParts = 2)
-    val (lists, loadedCents) = SimilarityOps.loadIvfIndex(s, idx)
-    SimilarityOps.ivfTopKOverLists(lists, emb, "vec_id", "embedding",
-      k = 5, maxQueryId = 20L, loadedCents, nProbe = 16)
-      .orderBy("ia", "rank")
-  }
-
-  /** NetCDF classic sink→source cycle (the da-domain's real format):
-    * events aggregated onto per-event-type (time, lat, lon) record grids,
-    * written as CDF-1 files, re-read by `NetCdfSource`, reduced per
-    * (variable, record). `<f8` cells round-trip bit-exactly, so the oracle
-    * rebuilds the same sums straight from events (fills contribute 0).
-    */
-  /** §2.7 streaming as a CORRECTNESS entry: the events table read as a
-    * FILE STREAM (`readStream.parquet`), put through the same
-    * `StreamingStats.windowedGridStats` used by the batch path, driven to
-    * completion with `Trigger.AvailableNow` into a memory sink (complete
-    * output mode — no window sits unflushed behind the watermark), then
-    * compared against a pure batch SQL mirror of the tumbling window. The
-    * stream/batch agreement the reference can't express is what this row
-    * gates.
-    */
-  /** §2.7 streaming CMS as a CORRECTNESS entry: the documents table
-    * replayed as a file stream, tokens exploded, and the d×w register
-    * table maintained as ONE streaming aggregation (complete mode — the
-    * state IS the sketch, bounded by precision not key cardinality),
-    * drained with AvailableNow. The oracle rebuilds the registers from
-    * the batch table with the same row-salted md5 buckets, so stream and
-    * batch must agree register-for-register.
-    */
-  /** Streaming KMV distinct estimation: lineitem replayed as a file
-    * stream, the per-returnflag k-smallest-hash sketch maintained as ONE
-    * streaming aggregation (semilattice state — k longs per set), drained
-    * with AvailableNow, and the final estimates compared against the
-    * oracle's batch rebuild of the identical sketch plus the exact
-    * distinct counts.
-    */
-  private def qStreamingKmv(s: SparkSession, dir: String): DataFrame = {
-    val k = 256
-    val raw = s.read.parquet(s"$dir/lineitem.parquet")
-    val streamDir = freshTmpDir("graft_stream_kmv", dir)
-    val hconf = s.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-    val dstP = new org.apache.hadoop.fs.Path(s"$streamDir/lineitem.parquet")
-    org.apache.hadoop.fs.FileUtil.copy(srcP.getFileSystem(hconf), srcP,
-      dstP.getFileSystem(hconf), dstP, false, hconf)
-    val stream = s.readStream.schema(raw.schema)
-      .option("recursiveFileLookup", "true").parquet(streamDir)
-    val sk = graft.streaming.StreamingSketch.kmvSketch(
-      stream.select(col("l_returnflag"), col("l_partkey")),
-      "l_returnflag", "l_partkey", k)
-    val qname = s"graft_kmv_${math.abs(dir.hashCode)}"
-    graft.streaming.StatePartitions.scaledFor(s, streamDir) {
-      val q = sk.writeStream.format("memory").queryName(qname)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val exact = Tables.lineitem(s, dir).groupBy(col("l_returnflag"))
-      .agg(countDistinct(col("l_partkey")).as("n_exact"))
-    s.table(qname)
-      .select(col("l_returnflag"),
-        when(size(col("sketch")) >= k,
-          lit((k - 1).toDouble) * lit(StatsOps.KmvM)
-            / element_at(col("sketch"), k).cast("double"))
-          .otherwise(size(col("sketch")).cast("double")).as("_est"))
-      .join(exact, "l_returnflag")
-      .select(col("l_returnflag"), col("n_exact"),
-        rnd("_est", 4).as("kmv_est"))
-      .orderBy("l_returnflag")
-  }
-
-  /** Streaming trending report: event-time windowed type counts
-    * maintained as ONE watermarked streaming aggregation (complete
-    * mode), drained with AvailableNow, then the per-window top-2 types
-    * ranked post-drain — the "what's trending per hour" dashboard
-    * query. The oracle rebuilds windows and ranks from the batch table
-    * with the same window arithmetic.
-    */
-  private def qStreamingTrending(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir) // set nanosAsLong reader conf
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    val streamDir = freshTmpDir("graft_stream_trend", dir)
-    val hconf = s.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val dstP = new org.apache.hadoop.fs.Path(s"$streamDir/events.parquet")
-    org.apache.hadoop.fs.FileUtil.copy(srcP.getFileSystem(hconf), srcP,
-      dstP.getFileSystem(hconf), dstP, false, hconf)
-    val stream = graft.sources.Tables.normalizeTs(
-      s.readStream.schema(raw.schema)
-        .option("recursiveFileLookup", "true").parquet(streamDir))
-    val counts = stream.withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "60 days"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val qname = s"graft_trend_${math.abs(dir.hashCode)}"
-    graft.streaming.StatePartitions.scaledFor(s, streamDir) {
-      val q = counts.writeStream.format("memory").queryName(qname)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val w = Window.partitionBy("window_start")
-      .orderBy(col("n").desc, col("event_type"))
-    s.table(qname)
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 2)
-      .select(col("window_start"), col("rank"), col("event_type"), col("n"))
-      .orderBy("window_start", "rank")
-  }
-
-  private def qStreamingCms(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/documents.parquet")
-    val streamDir = freshTmpDir("graft_stream_cms", dir)
-    val hconf = s.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val dstP = new org.apache.hadoop.fs.Path(s"$streamDir/documents.parquet")
-    org.apache.hadoop.fs.FileUtil.copy(srcP.getFileSystem(hconf), srcP,
-      dstP.getFileSystem(hconf), dstP, false, hconf)
-    val stream = s.readStream.schema(raw.schema)
-      .option("recursiveFileLookup", "true").parquet(streamDir)
-    val toks = stream.select(explode(Text.tokens(col("text"))).as("tok"))
-      .filter(col("tok") =!= "")
-    val regs = graft.streaming.StreamingSketch.cmsRegisters(toks, "tok",
-      d = 3, w = 1024L)
-    val qname = s"graft_cms_${math.abs(dir.hashCode)}"
-    graft.streaming.StatePartitions.scaledFor(s, streamDir) {
-      val q = regs.writeStream.format("memory").queryName(qname)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(qname)
-      .filter(col("cnt") >= 100)
-      .select(col("j"), col("bucket"), col("cnt"))
-      .orderBy("j", "bucket")
-  }
-
-  private def qStreamingStats(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir) // sets the nanosAsLong reader conf for the session
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    // The file-stream source owns a DIRECTORY (its real deployment shape:
-    // an ingest dir files land in); the test table is a bare file, so stage
-    // it into one (one driver-side file copy of a fixture, not a data path).
-    val streamDir = freshTmpDir("graft_stream_src", dir)
-    // Hadoop FileUtil handles BOTH layouts: a bare parquet file and a
-    // Spark-written directory of part files (a plain Files.copy of the
-    // latter would create an empty dir and the stream would see no files)
-    val hconf = s.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val dstP = new org.apache.hadoop.fs.Path(s"$streamDir/events.parquet")
-    val fs = srcP.getFileSystem(hconf)
-    org.apache.hadoop.fs.FileUtil.copy(fs, srcP, dstP.getFileSystem(hconf), dstP,
-      false, hconf)
-    // recursive lookup: see q_streaming_dedup — a directory-shaped table
-    // otherwise yields a silently-empty stream
-    val stream = graft.sources.Tables.normalizeTs(
-      s.readStream.schema(raw.schema)
-        .option("recursiveFileLookup", "true").parquet(streamDir))
-    val agg = graft.streaming.StreamingStats.windowedGridStats(
-      stream, "ts", Seq("event_type"), "value",
-      windowDur = "30 days", watermarkDelay = "1 hour")
-    val qname = s"graft_stream_${math.abs(dir.hashCode)}"
-    graft.streaming.StatePartitions.scaledFor(s, streamDir) {
-      val q = agg.writeStream.format("memory").queryName(qname)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(qname)
-      .select(col("window_start"), col("event_type"), col("n"),
-        rnd("mean", 4).as("mean"), rnd("var_pop", 4).as("var_pop"),
-        rnd("min", 4).as("min"), rnd("max", 4).as("max"))
-      .orderBy("window_start", "event_type")
-  }
-
-  /** §2.7 streaming sessionization as a CORRECTNESS entry: the events
-    * table replayed as a file stream through `StreamingSessions.sessionAgg`
-    * (native `session_window` + watermark), driven with AvailableNow. All
-    * staged data files process in ONE batch (maxFilesPerTrigger = staged
-    * file count, so no event is late against a watermark raised by a
-    * sibling file), then a far-future sentinel file advances the watermark
-    * and the no-data flush batch emits every real session in APPEND mode;
-    * the sentinel's own session is filtered by its negative user id. The
-    * oracle replays the session_window gap rule (windows merge on touch,
-    * so `diff > gap` breaks — spec-pinned) over the batch table.
-    */
-  private def qStreamingSessions(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir) // sets the nanosAsLong reader conf for the session
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    val streamDir = freshTmpDir("graft_stream_sess", dir)
-    val hconf = s.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val dstP = new org.apache.hadoop.fs.Path(s"$streamDir/events.parquet")
-    val dfs = dstP.getFileSystem(hconf)
-    org.apache.hadoop.fs.FileUtil.copy(srcP.getFileSystem(hconf), srcP, dfs, dstP,
-      false, hconf)
-    var nFiles = 0 // staged data files — ONE batch must hold all of them
-    val it = dfs.listFiles(dstP, true)
-    while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) nFiles += 1 }
-    // the driver has shipped events.ts as TIMESTAMP(NANOS)→long (under
-    // nanosAsLong) AND as TIMESTAMP(MICROS)→NTZ across rounds; the
-    // sentinel must be written in the SAME physical encoding as the
-    // staged byte-copied data files (the stream reads both under one
-    // schema), so branch on what the raw read produced
-    val tsIsLong =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val sentinelTs: org.apache.spark.sql.Column =
-      if (tsIsLong) { // ns-encoded long: ~5 years past the last real event
-        val maxTsNs = raw.agg(max("ts")).head().getLong(0)
-        lit(maxTsNs + 157784630000000000L)
-      } else { // NTZ µs: same offset, same NTZ logical type (UTC session)
-        val maxTsUs = raw.agg(max(unix_micros(col("ts")
-          .cast(org.apache.spark.sql.types.TimestampType)))).head().getLong(0)
-        timestamp_micros(lit(maxTsUs + 157784630000000L))
-          .cast(org.apache.spark.sql.types.TimestampNTZType)
-      }
-    raw.limit(1).select( // sentinel ~5 years past the last real event
-      lit(-1L).as("event_id"), sentinelTs.as("ts"),
-      lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-      lit(0.0).as("value"), lit("{}").as("props"))
-      .coalesce(1).write.parquet(s"$streamDir/sentinel")
-    // pin the sentinel's modification time explicitly LATER than every
-    // staged data file, so the file source can never order it into the
-    // first trigger (where the data files' events would be late-dropped)
-    val sentIt = dfs.listFiles(new org.apache.hadoop.fs.Path(s"$streamDir/sentinel"), true)
-    while (sentIt.hasNext) {
-      val f = sentIt.next()
-      if (f.getPath.getName.endsWith(".parquet"))
-        dfs.setTimes(f.getPath, System.currentTimeMillis() + 600000L, -1)
-    }
-    val stream = Tables.normalizeTs(s.readStream.schema(raw.schema)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", math.max(1, nFiles).toString)
-      .parquet(streamDir))
-    val agg = graft.streaming.StreamingSessions.sessionAgg(
-      stream, "user_id", "ts", "value", gap = "1 hour", watermarkDelay = "1 hour")
-    val qname = s"graft_sessions_${math.abs(dir.hashCode)}"
-    graft.streaming.StatePartitions.scaledFor(s, streamDir) {
-      val q = agg.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val emitted = s.table(qname).where(col("user_id") >= 0)
-    // loud guard against silent late-drops: every real event must be in
-    // exactly one emitted session
-    val nEmitted = emitted.agg(coalesce(sum("n_events"), lit(0L))).head().getLong(0)
-    val nRaw = raw.count()
-    require(nEmitted == nRaw,
-      s"streaming sessions dropped events: emitted $nEmitted of $nRaw")
-    emitted
-      .select(col("user_id"),
-        unix_micros(col("session_start")).as("session_start_us"),
-        col("n_events"), rnd("sum_value", 4).as("sum_value"))
-      .orderBy("user_id", "session_start_us")
-  }
-
-  /** NetCDF-4 sink→source cycle: the same record-grid contract as
-    * q_netcdf_roundtrip but through the HDF5 CONTAINER (`Hdf5Store` —
-    * superblock, symbol-table group, contiguous f64 datasets), the storage
-    * layer the reference's netcdf_writer produces via the netCDF4 lib.
-    */
-  private def qNetcdf4Roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val g = Tables.events(s, dir)
-      .select(col("event_type").as("variable"), (col("event_id") % 2).as("t"),
-        (col("user_id") % 8).as("i"), (col("user_id") % 16).as("j"), col("value"))
-      .groupBy("variable", "t", "i", "j").agg(sum("value").as("value"))
-    val out = freshTmpDir("graft_nc4_rt", dir)
-    graft.sinks.NetCdf4Sink.writeRecordGrids(g, out, shape = (8, 16), nRecs = 2)
-    val (vars, data) = graft.sources.Hdf5Source.read(s, out)
-    // the inner join keeps data variables only (coordinate scales carry
-    // is_scale) and proves the DIMENSION_LIST names came back from the
-    // binary container
-    val dataVars = vars.filter(!col("is_scale"))
-      .select(col("variable"), array_join(col("dim_names"), ",").as("dims"))
-    data.join(broadcast(dataVars), "variable")
-      .groupBy(col("variable"), (col("pos") / 128).cast("long").as("t"), col("dims"))
-      .agg(count(lit(1)).as("n_cells"), rnd(sum("value"), 2).as("sum_value"))
-      .select("variable", "t", "n_cells", "sum_value", "dims")
-      .orderBy("variable", "t")
-  }
-
-  private def qNetcdfRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val g = Tables.events(s, dir)
-      .select(col("event_type").as("variable"), (col("event_id") % 2).as("t"),
-        (col("user_id") % 8).as("i"), (col("user_id") % 16).as("j"), col("value"))
-      .groupBy("variable", "t", "i", "j").agg(sum("value").as("value"))
-    val out = freshTmpDir("graft_nc_rt", dir)
-    // CDF-5 (64-bit classic): the widened container is what the round trip
-    // gates; CDF-1 stays pinned in NetCdfSpec/CodecPropertySpec
-    graft.sinks.NetCdfSink.writeRecordGrids(g, out, shape = (8, 16), nRecs = 2,
-      version = 5)
-    val (_, data) = graft.sources.NetCdfSource.read(s, out)
-    data.groupBy(col("variable"), (col("pos") / 128).cast("long").as("t"))
-      .agg(count(lit(1)).as("n_cells"), rnd(sum("value"), 2).as("sum_value"))
-      .orderBy("variable", "t")
-  }
-
-  /** CF packed-data decode (xarray `decode_cf`, the reference's transparent
-    * ERA5/GFS read path): grids quantized to int16 IN SQL (clamped floor —
-    * floor is bit-deterministic across engines, round's tie rule is not),
-    * written short-packed with `scale_factor`/`add_offset`/`_FillValue`
-    * attributes, re-read with `decodeCf = true`. Holes at (i + j) % 5 == 0
-    * exercise fill → NaN; the unpack `stored * scale + offset` is exact
-    * double math both engines repeat.
-    */
-  private def qNetcdfPacked(s: SparkSession, dir: String): DataFrame = {
-    val g = Tables.events(s, dir)
-      .select(col("event_type").as("variable"), (col("event_id") % 2).as("t"),
-        (col("user_id") % 8).as("i"), (col("user_id") % 16).as("j"), col("value"))
-      .groupBy("variable", "t", "i", "j").agg(sum("value").as("value"))
-    val packed = g.filter(((col("i") + col("j")) % 5) =!= 0)
-      .withColumn("stored",
-        least(greatest(floor((col("value") - lit(0.5)) / lit(0.01)), lit(-32767L)),
-          lit(32767L)).cast("int"))
-    val out = freshTmpDir("graft_nc_packed", dir)
-    graft.sinks.NetCdfSink.writePackedGrids(packed, out, shape = (8, 16),
-      nRecs = 2, scale = 0.01, offset = 0.5)
-    // DSv2 relation: a `variable` predicate would push into the decoder's
-    // wanted set (Dsv2SourcesSpec); this query keeps every variable
-    val data = s.read.format("graft.sources.NetCdfDataSource")
-      .option("path", out).option("decodeCf", "true").load()
-    data.filter(!isnan(col("value")))
-      .groupBy(col("variable"), (col("pos") / 128).cast("long").as("t"))
-      .agg(count(lit(1)).as("n_cells"), rnd(sum("value"), 2).as("sum_value"))
-      .orderBy("variable", "t")
-  }
-
-  /** GRIB2 decode end-to-end — the actual wire format behind GFS/HRRR
-    * (the reference delegates this decode to earth2studio, `gfs.py:46-77`):
-    * per variable, a multi-message .grib2 file (one message per record,
-    * 12-bit simple packing, section-6 bitmap holes at (i+j)%5==0, 0.25°
-    * lat/lon grid) is rendered from event values and decoded back
-    * distributed (`GribSource.read`). The oracle recomputes the packed
-    * integers AND the unpack (−20.0 + X·0.01, the (R + X·2^E)/10^D
-    * evaluation both engines repeat exactly) plus every grid/identity
-    * field from the section walk.
-    */
-  private def qGrib2Decode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.GribSource
-    val g = Tables.events(s, dir)
-      .select(col("event_type").as("variable"), (col("event_id") % 2).as("t"),
-        (col("user_id") % 8).as("i"), (col("user_id") % 16).as("j"), col("value"))
-      .groupBy("variable", "t", "i", "j").agg(sum("value").as("value"))
-    val packed = g.filter(((col("i") + col("j")) % 5) =!= 0)
-      .withColumn("stored",
-        least(greatest(floor((col("value") + lit(20.0)) / lit(0.01)), lit(0L)),
-          lit(4095L)).cast("long"))
-    // deterministic variable → parameter-number map (sorted order; the
-    // collect is bounded by event-type cardinality)
-    val varNumber = g.select("variable").distinct().collect()
-      .map(_.getString(0)).sorted.zipWithIndex.toMap
-    val out = freshTmpDir("graft_grib2", dir)
-    GribSource.writeGrids(packed, out, shape = (8, 16), nRecs = 2, varNumber)
-    val numVar = varNumber.toSeq.map { case (v, n) => (n, v) }
-      .toDF("number", "variable")
-    GribSource.read(s, out)
-      .filter(!isnan(col("value")))
-      .groupBy(col("number"), col("forecast_hours"))
-      .agg(count(lit(1)).as("n_cells"), rnd(sum("value"), 2).as("sum_value"),
-        first(col("ni")).as("ni"), first(col("nj")).as("nj"),
-        first(col("lat1")).as("lat1"), first(col("lon1")).as("lon1"),
-        first(col("di")).as("di"), first(col("dj")).as("dj"),
-        first(col("ref_year")).as("ref_year"))
-      .join(broadcast(numVar), "number")
-      .select(col("variable"), col("forecast_hours"), col("n_cells"),
-        col("sum_value"), col("ni"), col("nj"), col("lat1"), col("lon1"),
-        col("di"), col("dj"), col("ref_year"))
-      .orderBy("variable", "forecast_hours")
-  }
-
-  /** GeoTIFF raster round trip end-to-end: the event grid becomes one
-    * two-page GeoTIFF per variable (page 0 uint16 with predictor-2
-    * LZW / PackBits / uncompressed cycling by variable, page 1 float32
-    * LZW; absent cells = GDAL-nodata holes), read back distributed with
-    * PixelIsArea cell centers off ModelPixelScale/Tiepoint. The oracle
-    * recomputes the quantization, the float32 decode cast, the nodata
-    * census, and the lat/lon envelope from the event stream.
-    */
-  private def qGeotiffGrid(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.GeoTiffSource
-    val g = Tables.events(s, dir)
-      .select(col("event_type").as("variable"), (col("user_id") % 8).as("i"),
-        (col("user_id") % 16).as("j"), col("value"))
-      .groupBy("variable", "i", "j").agg(sum("value").as("value"))
-    val cells = g.filter(((col("i") + col("j")) % 5) =!= 0)
-      .withColumn("stored",
-        least(greatest(floor((col("value") + lit(20.0)) / lit(0.01)), lit(0L)),
-          lit(65534L)).cast("long"))
-    val out = freshTmpDir("graft_geotiff", dir)
-    GeoTiffSource.writeRasters(cells, out, shape = (8, 16),
-      grid = (50.0, 10.0, 0.25, 0.25))
-    GeoTiffSource.read(s, out)
-      .filter(!isnan(col("value")))
-      .groupBy(col("variable"), col("page"))
-      .agg(count(lit(1)).as("n_cells"),
-        rnd(sum("value"), 2).as("sum_value"),
-        first("width").as("width"), first("height").as("height"),
-        first("compression").as("compression"), first("bits").as("bits"),
-        first("sample_format").as("sample_format"),
-        min("lat").as("min_lat"), max("lat").as("max_lat"),
-        min("lon").as("min_lon"), max("lon").as("max_lon"))
-      .orderBy("variable", "page")
-  }
-
-  /** CF time-coordinate decoding end-to-end (xarray `decode_times`): the
-    * packed fixture gains a real `time` record variable whose `units`
-    * attribute reads "hours since 1990-01-01 00:00:00" with 6-hourly
-    * steps; `decodeTimes = true` converts it to epoch seconds at decode,
-    * which join the per-record data aggregates. The oracle computes the
-    * same calendar arithmetic as literals (epoch(1990-01-01) = 631152000).
-    */
-  private def qNetcdfTime(s: SparkSession, dir: String): DataFrame = {
-    val g = Tables.events(s, dir)
-      .select(col("event_type").as("variable"), (col("event_id") % 2).as("t"),
-        (col("user_id") % 8).as("i"), (col("user_id") % 16).as("j"), col("value"))
-      .groupBy("variable", "t", "i", "j").agg(sum("value").as("value"))
-    val packed = g.filter(((col("i") + col("j")) % 5) =!= 0)
-      .withColumn("stored",
-        least(greatest(floor((col("value") - lit(0.5)) / lit(0.01)), lit(-32767L)),
-          lit(32767L)).cast("int"))
-    val out = freshTmpDir("graft_nc_time", dir)
-    graft.sinks.NetCdfSink.writePackedGrids(packed, out, shape = (8, 16),
-      nRecs = 2, scale = 0.01, offset = 0.5,
-      timeUnits = Some("hours since 1990-01-01 00:00:00"), timeStep = 6)
-    val (_, data) = graft.sources.NetCdfSource.read(s, out,
-      decodeCf = true, decodeTimes = true)
-    val times = data.filter(col("variable") === "time")
-      .select(col("file"), col("pos").as("t"),
-        col("value").cast("long").as("time_s"))
-    data.filter(col("variable") =!= "time" && !isnan(col("value")))
-      .groupBy(col("file"), col("variable"), (col("pos") / 128).cast("long").as("t"))
-      .agg(count(lit(1)).as("n_cells"), rnd(sum("value"), 2).as("sum_value"))
-      .join(times, Seq("file", "t"))
-      .select(col("variable"), col("t"), col("time_s"), col("n_cells"),
-        col("sum_value"))
-      .orderBy("variable", "t")
-  }
-
-  /** Skew-salted equi-join vs a plain-join oracle: salting must be
-    * result-invariant (it only changes the shuffle layout), so the salted
-    * lineitem⋈orders aggregates equal DuckDB's plain join.
-    */
-  private def qSaltedJoin(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("k"), col("l_partkey"), col("l_quantity"))
-    val ord = Tables.orders(s, dir)
-      .select(col("o_orderkey").as("k"), col("o_orderpriority"))
-    graft.operators.RelationalOps.saltedJoin(li, ord, "k", "l_partkey", nSalts = 8)
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), rnd(sum("l_quantity"), 2).as("sum_qty"))
-      .orderBy("o_orderpriority")
-  }
-
-  /** Zarr v2 sink→source cycle (the reference's primary output format):
-    * events aggregated onto a 32×64 grid, written as a real chunked+zlib
-    * zarr array (8×16 chunks, executor-parallel disjoint chunk writes),
-    * re-read distributed, and reduced. `<f8` cells round-trip bit-exactly,
-    * so the oracle rebuilds the same lattice (fill = 0) straight from the
-    * events table.
-    */
-  private def qZarrRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val g = Tables.events(s, dir)
-      .select((col("user_id") % 32).as("i"), (col("event_id") % 64).as("j"),
-        col("value"))
-      .groupBy("i", "j").agg(sum("value").as("value"))
-    val out = freshTmpDir("graft_zarr_rt", dir)
-    graft.sinks.ZarrStore.writeArray2D(g, out, shape = (32L, 64L), chunks = (8, 16))
-    graft.sinks.ZarrStore.readArray2D(s, out)
-      .agg(count(lit(1)).as("n_cells"),
-        rnd(sum("value"), 2).as("sum_value"),
-        rnd(min("value"), 2).as("min_value"),
-        rnd(max("value"), 2).as("max_value"))
-  }
-
-  /** float16-tagged Zarr cycle (reference `precision.py:40-45` requests a
-    * half-width artifact; Spark has no half type, so the request rides
-    * column METADATA): integer cell counts (mod 1024 — exactly
-    * representable in binary16) are tagged `float16` by
-    * [[graft.operators.FieldOps.precisionCast]], the writer narrows the
-    * on-disk dtype to `<f2` via [[graft.sinks.ZarrStore.dtypeFor]], and
-    * the read-back decodes real half bytes. The emitted `dtype` column
-    * asserts the artifact width inside the oracle gate itself.
-    */
-  private def qZarrF16Roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val g = Tables.events(s, dir)
-      .select((col("user_id") % 16).as("i"), (col("event_id") % 32).as("j"))
-      .groupBy("i", "j")
-      .agg((count(lit(1)) % 1024).cast("double").as("value"))
-    val tagged = graft.operators.FieldOps.precisionCast(g, "float16")
-    val out = freshTmpDir("graft_zarr_f16", dir)
-    graft.sinks.ZarrStore.writeArray2D(tagged, out, shape = (16L, 32L),
-      chunks = (8, 8), dtype = graft.sinks.ZarrStore.dtypeFor(tagged))
-    val dtype = graft.sinks.ZarrStore.arrayDtype(s, out)
-    graft.sinks.ZarrStore.readArray2D(s, out)
-      .agg(count(lit(1)).as("n_cells"),
-        sum("value").cast("long").as("sum_value"),
-        min("value").cast("long").as("min_value"),
-        max("value").cast("long").as("max_value"))
-      .select(lit(dtype).as("dtype"), col("n_cells"), col("sum_value"),
-        col("min_value"), col("max_value"))
-  }
-
-  /** Full d3plot sink→source cycle: embeddings-derived shell meshes (quads
-    * of 4 consecutive points, 2 runs) with 2 states of node vectors and
-    * 2-layer shell stress/strain, written as real d3plot binaries and
-    * re-read by `D3PlotSource`. Float32 words round-trip exactly; stress/
-    * epsp are exact binary fractions of the cell id so their sums admit a
-    * closed-form oracle; dx mirrors the double→float32 cast per term.
-    */
-  private def qD3plotRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val pts = emb.select((col("vec_id") % 2).cast("long").as("mesh_id"),
-      col("vec_id").cast("long").as("point_id"),
-      col("embedding")(0).cast("double").as("x"),
-      col("embedding")(1).cast("double").as("y"),
-      col("embedding")(2).cast("double").as("z"))
-    val w = Window.partitionBy("mesh_id").orderBy("point_id")
-    val quads = pts
-      .withColumn("g", ((row_number().over(w) - 1) / 4).cast("long"))
-      .groupBy(col("mesh_id"), col("g").as("cell_id"))
-      .agg(sort_array(collect_list(col("point_id"))).as("vertices"),
-        count(lit(1)).as("nv"))
-      .filter(col("nv") === 4).drop("nv")
-      .withColumn("part_id", lit(1L))
-    val states = Seq(0, 1).map { t =>
-      emb.select((col("vec_id") % 2).cast("long").as("mesh_id"),
-        lit(t).as("t"), lit(t * 0.5).as("time"),
-        col("vec_id").cast("long").as("point_id"),
-        (col("embedding")(3).cast("double") +
-          lit(t) * col("embedding")(4).cast("double")).as("dx"),
-        lit(0.0).as("dy"), lit(0.0).as("dz"))
-    }.reduce(_ unionByName _)
-    val shellData = Seq(0, 1).flatMap { t =>
-      Seq(0, 1).map { l =>
-        quads.select(col("mesh_id"), lit(t).as("t"), col("cell_id"),
-          lit(l).as("layer"),
-          ((col("cell_id") + 1) * 0.25 * (l + 1)).as("sx"),
-          lit(0.0).as("sy"), lit(0.0).as("sz"), lit(0.0).as("txy"),
-          lit(0.0).as("tyz"), lit(0.0).as("tzx"),
-          ((col("cell_id") + lit(t)) * 0.125).as("epsp"))
-      }
-    }.reduce(_ unionByName _)
-    val out = freshTmpDir("graft_d3p_rt", dir)
-    graft.sinks.D3PlotSink.write(pts, quads, states, shellData, out)
-
-    // through the DSv2 relation: family grouping + D3Select block pruning
-    // happen in the scan, so each table decodes only its own blocks
-    def rel(table: String) = s.read.format("graft.sources.D3PlotDataSource")
-      .option("path", s"$out/*").option("table", table).load()
-    val (rp, rs, rsh) = (rel("points"), rel("states"), rel("shell"))
-    def meshOf(c: org.apache.spark.sql.Column) =
-      regexp_extract(c, "/(\\d+)/d3plot$", 1).cast("long")
-    val np = rp.groupBy(meshOf(col("mesh_id")).as("mesh_id"))
-      .agg(count(lit(1)).as("n_points"))
-    val st = rs.groupBy(meshOf(col("mesh_id")).as("mesh_id"))
-      .agg(countDistinct(col("t")).as("n_states"), sum(col("dx")).as("sdx"))
-    val sh = rsh.groupBy(meshOf(col("mesh_id")).as("mesh_id"))
-      .agg((count(lit(1)) / 4).cast("long").as("n_cells"),
-        sum(col("sx")).as("ssx"), sum(col("epsp")).as("sepsp"))
-    np.join(st, Seq("mesh_id")).join(sh, Seq("mesh_id"))
-      .select(col("mesh_id"), col("n_points"), col("n_cells"), col("n_states"),
-        rnd(col("sdx"), 2).as("sum_dx"), rnd(col("ssx"), 2).as("sum_sx"),
-        rnd(col("sepsp"), 2).as("sum_epsp"))
-      .orderBy("mesh_id")
-  }
-
-  /** SPH particle universe cycle (reference Rust `src/rust/src/d3plot/`
-    * reads SPH state data; here the flag-driven decode is its own long
-    * universe): 100 embeddings-derived particles with 2 states of scalar
-    * fields — every value an exact binary fraction of (id, t), so the
-    * float32 words round-trip exactly — written as a real SPH d3plot
-    * (element-data-flags block, node & material list, per-state particle
-    * block) and re-read by `readSph`. Aggregates per decoded field name;
-    * the static particle list folds in as its own row.
-    */
-  private def qD3plotSph(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).filter(col("vec_id") < 100)
-    val pts = emb.select(lit(0L).as("mesh_id"),
-      col("vec_id").cast("long").as("point_id"),
-      col("embedding")(0).cast("double").as("x"),
-      col("embedding")(1).cast("double").as("y"),
-      col("embedding")(2).cast("double").as("z"))
-    val states = Seq(0, 1).map { t =>
-      emb.select(lit(0L).as("mesh_id"), lit(t).as("t"), lit(t * 0.5).as("time"),
-        col("vec_id").cast("long").as("point_id"),
-        col("embedding")(3).cast("double").as("dx"),
-        lit(0.0).as("dy"), lit(0.0).as("dz"))
-    }.reduce(_ unionByName _)
-    val sph = Seq(0, 1).map { t =>
-      emb.select(lit(0L).as("mesh_id"), lit(t).as("t"),
-        col("vec_id").cast("long").as("particle_id"),
-        (col("vec_id") % 3 + 1).cast("long").as("material"),
-        ((col("vec_id") + 1) * 0.25).as("radius"),
-        ((col("vec_id") + lit(t)) * 0.5).as("pressure"),
-        ((col("vec_id") % 13) * 0.75).as("density"),
-        (col("vec_id") % 7).cast("double").as("neighbors"),
-        ((col("vec_id") + 2) * 0.125).as("mass"))
-    }.reduce(_ unionByName _)
-    val out = freshTmpDir("graft_d3p_sph", dir)
-    graft.sinks.D3PlotSink.writeSph(pts, states, sph, out)
-    val (particles, sphStates) = graft.sources.D3PlotSource.readSph(s, s"$out/*")
-    val agg = sphStates.groupBy(col("field"))
-      .agg(count(lit(1)).as("n"), rnd(sum("value"), 2).as("sum_value"))
-    val plist = particles
-      .agg(count(lit(1)).as("n"),
-        rnd(sum(col("material") + col("node_id")), 2).as("sum_value"))
-      .select(lit("particle_list").as("field"), col("n"), col("sum_value"))
-    agg.unionByName(plist).orderBy("field")
-  }
-
-  /** Binary STL sink→source cycle: consecutive point triples per mesh as
-    * facets, written as binary STL (computed facet normals) and re-read;
-    * STL repeats vertices per facet, so each kept point appears exactly
-    * once and the coordinate sum mirrors a rank-filtered scan.
-    */
-  private def qStlRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val pts = emb.select((col("vec_id") % 3).cast("long").as("mesh_id"),
-      col("vec_id").cast("long").as("point_id"),
-      col("embedding")(0).cast("double").as("x"),
-      col("embedding")(1).cast("double").as("y"),
-      col("embedding")(2).cast("double").as("z"))
-    val w = Window.partitionBy("mesh_id").orderBy("point_id")
-    val tris = pts
-      .withColumn("g", ((row_number().over(w) - 1) / 3).cast("long"))
-      .groupBy(col("mesh_id"), col("g").as("cell_id"))
-      .agg(sort_array(collect_list(col("point_id"))).as("vertices"),
-        count(lit(1)).as("nv"))
-      .filter(col("nv") === 3).drop("nv")
-    val out = freshTmpDir("graft_stl_rt", dir)
-    graft.sinks.StlSink.write(pts, tris, out)
-
-    val (rp, rc, _) = graft.sources.StlSource.read(s, s"$out")
-    def meshOf = regexp_extract(col("mesh_id"), "mesh_(\\d+)\\.stl", 1).cast("long")
-    rp.groupBy(meshOf.as("mesh_id"))
-      .agg(count(lit(1)).as("n_points"), sum(col("x")).as("sx"))
-      .join(rc.groupBy(meshOf.as("mesh_id")).agg(count(lit(1)).as("n_facets")),
-        Seq("mesh_id"))
-      .select(col("mesh_id"), col("n_points"), col("n_facets"),
-        rnd(col("sx"), 2).as("sum_x"))
-      .orderBy("mesh_id")
-  }
-
-  /** MeshInfoFilter inventory (`mesh_info.py:94`): per-group field records
-    * through the operator's JSON-lines contract and back out (from_json +
-    * explode), proving the round trip.
-    */
-  private def qFieldInfo(s: SparkSession, dir: String): DataFrame = {
-    val info = graft.operators.FieldOps.fieldInfo(
-      Tables.customer(s, dir), "c_mktsegment", Seq("c_acctbal", "c_name"))
-    val schema = "array<struct<field:string,dtype:string,n_non_null:bigint,est_bytes:bigint>>"
-    info.select(col("c_mktsegment"), col("n_rows"),
-      explode(from_json(col("fields_json"), schema, Map.empty[String, String])).as("f"))
-      .select(col("c_mktsegment"), col("n_rows"), col("f.field").as("field"),
-        col("f.dtype").as("dtype"), col("f.n_non_null").as("n_non_null"),
-        col("f.est_bytes").as("est_bytes"))
-      .orderBy("c_mktsegment", "field")
-  }
-
-  /** AtomicInfoFilter (`atomic_info.py:44-76`): structural metadata over
-    * synthesized systems (embeddings as atom arrays). `species` (an
-    * array_distinct) is excluded: its ORDER is engine-specific; the
-    * order-free `n_species` is checked instead.
-    */
-  private def qAtomicInfo(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val systems = emb.select(col("vec_id").as("sys_id"),
-      transform(col("embedding"),
-        x => (floor(x.cast("double") * 4) + 5).cast("int")).as("atomic_numbers"),
-      slice(col("embedding"), 1, 8).as("edge_index_src"),
-      lit(true).as("pbc"),
-      col("embedding")(0).cast("double").as("energy"))
-    graft.graph.GraphOps.atomicInfo(systems)
-      .select(col("sys_id"), col("n_atoms").cast("long").as("n_atoms"),
-        col("n_edges").cast("long").as("n_edges"),
-        col("n_species").cast("long").as("n_species"),
-        col("pbc"), rnd("energy", 4).as("energy"))
-      .orderBy("sys_id")
-  }
-
-  /** AtomicStatsFilter (`domains/atm/filters/stats.py:273`): per-field
-    * moments over system-level array columns — explode + one grouped agg
-    * (partial/final combine; no row blowup beyond the atom rows).
-    */
-  private def qAtomicStats(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val systems = emb.select(col("vec_id").as("sys_id"),
-      transform(col("embedding"), x => x.cast("double")).as("positions"),
-      transform(col("embedding"),
-        x => floor(x.cast("double") * 4) + 5).as("charges"))
-    val p = graft.graph.GraphOps.perAtomFieldStats(systems, "positions")
-      .withColumn("field", lit("positions"))
-    val c = graft.graph.GraphOps.perAtomFieldStats(systems, "charges")
-      .withColumn("field", lit("charges"))
-    p.unionByName(c)
-      .select(col("field"), col("n"),
-        rnd("mean", 4).as("mean"), rnd("var_pop", 4).as("var_pop"),
-        rnd("min", 4).as("min"), rnd("max", 4).as("max"))
-      .orderBy("field")
-  }
-
-  /** ASELMDBSource round trip (`domains/atm/sources/aselmdb.py:647,806`):
-    * embeddings → ASE JSON rows (numpy arrays in `__ndarray__` form) →
-    * executor-built LMDB shard files → page-walk read-back → typed systems.
-    * Values survive exactly: float→double casts and Double↔string JSON
-    * round-trips are lossless, so the oracle mirrors straight off the
-    * original embeddings parquet.
-    */
-  private def qAselmdbRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val json = emb.select(col("vec_id").cast("long").as("row_id"),
-      concat(
-        lit("{\"numbers\":{\"__ndarray__\":[["), size(col("embedding")),
-        lit("],\"int64\",["),
-        concat_ws(",", transform(col("embedding"),
-          x => (floor(x.cast("double") * 4) + 5).cast("long").cast("string"))),
-        lit("]]},\"positions\":{\"__ndarray__\":[["), size(col("embedding")),
-        lit("],\"float64\",["),
-        concat_ws(",", transform(col("embedding"),
-          x => x.cast("double").cast("string"))),
-        lit("]]},\"energy\":"),
-        col("embedding")(0).cast("double").cast("string"), lit("}")).as("json"))
-      .repartition(4) // several LMDB shards, several branch/overflow layouts
-    val out = freshTmpDir("graft_ase_rt", dir)
-    graft.sinks.AseLmdbSink.write(json, out)
-    // DSv2 relation: pruning `json` away skips the zlib inflate entirely
-    // (Dsv2SourcesSpec); this query decodes it for the systems table
-    val sys = graft.sources.AseLmdbSource.systems(
-      s.read.format("graft.sources.AseLmdbDataSource").option("path", out).load())
-    sys.select(col("sys_id"),
-      size(col("atomic_numbers")).cast("long").as("n_atoms"),
-      size(array_distinct(col("atomic_numbers"))).cast("long").as("n_species"),
-      rnd("energy", 4).as("energy"),
-      rnd(aggregate(col("positions"), lit(0.0), (acc, x) => acc + x), 4).as("sum_pos"))
-      .orderBy("sys_id")
-  }
-
-  /** The ledger-oracle pipeline: STATIC name/params (only the load closure
-    * touches `dir`), so `canonicalConfig`/`configHash` — the §2.5 config
-    * identity — are compile-time-known and the oracle can assert the exact
-    * run_id and config length as literals.
-    */
-  private def ledgerPipelineFor(dir: String): graft.core.Pipeline =
-    graft.core.Pipeline(
-      graft.core.PSource("orders_by_mod8", Map("table" -> "orders", "mod" -> "8"),
-        sp => Tables.orders(sp, dir).withColumn("idx", col("o_orderkey") % 8)),
-      Vector(graft.core.PFilter("open_orders", Map("status" -> "O"),
-        df => df.filter(col("o_orderstatus") === "O"))),
-      None) // metrics-only run: the count action drives execution
-
-  /** Ledger-as-data (§2.5: checkpoint/resume, run identity, stage metrics,
-    * DB schema — reference `core/pipeline_store.py:540-620`): run the static
-    * pipeline twice on a fresh ledger — first executes, second resumes to a
-    * full skip — then summarize the ledger PARQUET itself. Every emitted
-    * value is deterministic: counts come from the orders table, the run id
-    * and config length from the byte-stable canonical config.
-    */
-  private def qLedgerSummary(s: SparkSession, dir: String): DataFrame = {
-    val ledgerDir = freshTmpDir("graft_ledger_rt", dir)
-    val pipe = ledgerPipelineFor(dir)
-    graft.core.Runner.runPipeline(s, pipe, "idx", ledgerDir)
-    val r2 = graft.core.Runner.runPipeline(s, pipe, "idx", ledgerDir)
-    val runId = pipe.configHash.take(16)
-    val idxRes = s.read.parquet(s"$ledgerDir/index_results")
-      .filter(col("run_id") === runId && col("status") === "completed")
-    val runs = s.read.parquet(s"$ledgerDir/runs").filter(col("run_id") === runId)
-    val stages = new graft.core.Ledger(ledgerDir).stageMetrics(s, runId)
-    idxRes
-      .agg(count(lit(1)).as("n_index_rows"),
-        countDistinct(col("idx")).as("n_indices"),
-        min(col("idx")).as("min_idx"), max(col("idx")).as("max_idx"),
-        max(col("n_rows")).as("observed_rows"),
-        (min(col("wall_ns")) > 0).cast("int").as("wall_positive"))
-      .crossJoin(runs.agg(count(lit(1)).as("n_runs"),
-        max(col("run_id")).as("run_id"),
-        max(length(col("config_json"))).cast("long").as("config_len")))
-      .crossJoin(stages.agg(
-        (count(lit(1)) > 0).cast("int").as("has_stage_metrics"),
-        (min(col("wall_ns")) >= 0).cast("int").as("stage_wall_nonneg")))
-      .withColumn("run2_executed", lit(r2.nExecuted))
-      .withColumn("run2_skipped", lit(r2.nSkipped))
-  }
-
-  /** §2.5 row-level detail (serialization `core/serialization.py:108-345`,
-    * registry `core/registry.py:26-257`, DB logging
-    * `core/pipeline_store.py:592-604`): run the ledger pipeline, write one
-    * structured log row per executed index with a message DERIVED FROM THE
-    * DATA (per-index row count), then emit one output row per index by
-    * joining index_results ⋈ logs over the ledger parquet — the stricter
-    * row-level variant of q_ledger_summary's aggregate gating. The
-    * serialization round trip (save → load through a registry of stage
-    * factories) is gated as configHash equality; the registry inventory
-    * rides along as name lists.
-    */
-  private def qLedgerDetail(s: SparkSession, dir: String): DataFrame = {
-    val ledgerDir = freshTmpDir("graft_ledger_dt", dir)
-    val pipe = ledgerPipelineFor(dir)
-
-    val reg = new graft.core.Registry
-    reg.registerSource("orders_by_mod8")(ps => graft.core.PSource(
-      "orders_by_mod8", ps,
-      sp => Tables.orders(sp, dir).withColumn("idx", col("o_orderkey") % ps("mod").toInt)))
-    reg.registerFilter("open_orders")(ps => graft.core.PFilter(
-      "open_orders", ps, df => df.filter(col("o_orderstatus") === ps("status"))))
-    val yml = s"$ledgerDir/pipeline.yaml"
-    graft.core.Serialization.save(pipe, yml)
-    val loaded = graft.core.Serialization.load(yml, reg)
-    val serdeOk = loaded.configHash == pipe.configHash
-
-    val res = graft.core.Runner.runPipeline(s, pipe, "idx", ledgerDir)
-    val ledger = new graft.core.Ledger(ledgerDir)
-    // one log row per executed index — the collect is bounded by the
-    // 8-value index domain (idx = o_orderkey % 8)
-    val perIdx = pipe.dataFrame(s).groupBy(col("idx")).count()
-      .collect().map(r => ("INFO", "graft.runner",
-        s"completed idx ${r.getLong(0)} with ${r.getLong(1)} rows", r.getLong(0)))
-    ledger.recordLogs(s, res.runId, perIdx.toSeq)
-
-    val idxRes = s.read.parquet(s"$ledgerDir/index_results")
-      .filter(col("run_id") === res.runId && col("status") === "completed")
-      // peak_memory_bytes is runtime-dependent (executor task peaks), so
-      // the gate pins presence + sanity, not the value
-      .select(col("idx"), col("status"),
-        (col("peak_memory_bytes").isNotNull &&
-          col("peak_memory_bytes") >= 0).cast("int").as("peak_mem_nonneg"))
-    val logs = ledger.logs(s, res.runId)
-      .select(col("idx"), col("level").as("log_level"), col("message").as("log_message"))
-    idxRes.join(logs, "idx")
-      .withColumn("serde_hash_equal", lit(if (serdeOk) 1 else 0))
-      .withColumn("registry_sources", lit(reg.sourceNames.mkString(",")))
-      .withColumn("registry_filters", lit(reg.filterNames.mkString(",")))
-      .orderBy("idx")
-  }
-
-  /** §2.5 end-to-end composition gate: the ACTUAL Pipeline builder drives
-    * source → FieldSelectFilter → PrecisionFilter → per-index stats into a
-    * parquet artifact through Runner's ledger (run 1 executes and writes;
-    * run 2 resumes to a full skip, leaving the artifact untouched). The
-    * emitted rows are read back from the SINK ARTIFACT, not the in-session
-    * DataFrame — proving the §2.2/2.3 operators compose through the public
-    * API and the resume contract holds around a real sink (reference
-    * `run/__init__.py:169-315` driving the `core/base.py:448-502` chain).
-    */
-  private def qPipelineE2e(s: SparkSession, dir: String): DataFrame = {
-    val ledgerDir = freshTmpDir("graft_pipe_e2e", dir)
-    val artDir = s"$ledgerDir/artifact"
-    val pipe = graft.core.Pipeline(
-      graft.core.PSource("lineitem_by_mod8", Map("table" -> "lineitem", "mod" -> "8"),
-        sp => Tables.lineitem(sp, dir).withColumn("idx", col("l_orderkey") % 8)),
-      Vector(
-        graft.core.PFilter("field_select",
-          Map("include" -> "l_returnflag,l_quantity,l_extendedprice"),
-          df => graft.operators.FieldOps.fieldSelect(df, keep = Seq("idx"),
-            include = Seq("l_returnflag", "l_quantity", "l_extendedprice"))),
-        graft.core.PFilter("precision_f32", Map("target" -> "float"),
-          df => graft.operators.FieldOps.precisionCast(df)),
-        graft.core.PFilter("stats_by_idx_flag", Map("groups" -> "idx,l_returnflag"),
-          df => df.groupBy(col("idx"), col("l_returnflag"))
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("l_quantity").cast("double")).as("sum_qty"),
-              min(col("l_extendedprice")).as("min_price"),
-              max(col("l_extendedprice")).as("max_price"),
-              avg(col("l_extendedprice").cast("double")).as("avg_price")))),
-      Some(graft.core.PSink("parquet_artifact", Map("path" -> "artifact"),
-        df => { df.write.mode("overwrite").parquet(artDir); Seq(artDir) })))
-    val r1 = graft.core.Runner.runPipeline(s, pipe, "idx", ledgerDir)
-    val r2 = graft.core.Runner.runPipeline(s, pipe, "idx", ledgerDir)
-    s.read.parquet(artDir)
-      .select(col("idx"), col("l_returnflag").as("return_flag"),
-        col("n_rows"),
-        rnd("sum_qty", 4).as("sum_qty"),
-        col("min_price"), col("max_price"),
-        rnd("avg_price", 4).as("avg_price"))
-      .withColumn("run1_executed", lit(r1.nExecuted))
-      .withColumn("run2_executed", lit(r2.nExecuted))
-      .withColumn("run2_skipped", lit(r2.nSkipped))
-      .withColumn("artifact_written", lit(if (r1.writtenPaths.nonEmpty) 1 else 0))
-      .orderBy("idx", "return_flag")
-  }
-
-  /** §2.5 PARTIAL-failure resume — the case the ledger exists for
-    * (reference `core/base.py:595-602`, `test_checkpoint.py`): run 1
-    * executes per-index (one committed artifact partition + one ledger row
-    * per index) and CRASHES at index 5 via an injected driver-side fault,
-    * leaving indices 0-4 durable and an errors row for 5; run 2 resumes and
-    * executes exactly the remaining 3 (the errored index retries). The
-    * output reads the SINK ARTIFACT (all 8 partitions, identical to a
-    * clean run) and pins run1_completed=5 / run1_failed=1 /
-    * run2_executed=3 / run2_skipped=5 as literals the oracle re-asserts.
-    */
-  private def qPipelinePartial(s: SparkSession, dir: String): DataFrame = {
-    val ledgerDir = freshTmpDir("graft_pipe_part", dir)
-    val artDir = s"$ledgerDir/artifact"
-    val pipe = graft.core.Pipeline(
-      graft.core.PSource("lineitem_by_mod8", Map("table" -> "lineitem", "mod" -> "8"),
-        sp => Tables.lineitem(sp, dir).withColumn("idx", col("l_orderkey") % 8)),
-      Vector(
-        graft.core.PFilter("stats_by_idx_flag", Map("groups" -> "idx,l_returnflag"),
-          df => df.groupBy(col("idx"), col("l_returnflag"))
-            .agg(count(lit(1)).as("n_rows"),
-              rnd(sum(col("l_quantity")), 4).as("sum_qty")))),
-      Some(graft.core.PSink("parquet_partitioned", Map("path" -> "artifact"),
-        df => graft.sinks.Sinks.partitionedParquet(df, artDir, Seq("idx")))))
-    val crashed =
-      try {
-        graft.core.Runner.runPerIndex(s, pipe, "idx", ledgerDir,
-          beforeIndex = i => if (i == 5L) throw new RuntimeException("injected fault"))
-        false
-      } catch { case e: RuntimeException if e.getMessage == "injected fault" => true }
-    val runId = pipe.configHash.take(16)
-    val ledger = new graft.core.Ledger(ledgerDir)
-    val run1Completed = ledger.completedIndices(s, runId).count()
-    val run1Failed = ledger.failedIndices(s, runId).count()
-    // output_files provenance recorded by the crashed run: one partition
-    // dir per completed index (0-4)
-    val crashedPaths = ledger.outputFiles(s, runId)
-      .select("path").collect().map(_.getString(0)).toSet
-    val r2 = graft.core.Runner.runPerIndex(s, pipe, "idx", ledgerDir)
-    // the resumed run returns the crashed run's recorded paths (reference
-    // is_completed cache contract) plus its own three
-    val resumedPaths = crashedPaths.subsetOf(r2.outputPaths.toSet)
-    s.read.parquet(artDir)
-      .select(col("idx").cast("long").as("idx"),
-        col("l_returnflag").as("return_flag"), col("n_rows"), col("sum_qty"))
-      .withColumn("run1_crashed", lit(if (crashed) 1 else 0))
-      .withColumn("run1_completed", lit(run1Completed))
-      .withColumn("run1_failed", lit(run1Failed))
-      .withColumn("run1_recorded_paths", lit(crashedPaths.size.toLong))
-      .withColumn("run2_executed", lit(r2.nExecuted))
-      .withColumn("run2_skipped", lit(r2.nSkipped))
-      .withColumn("run2_returns_crashed_paths", lit(if (resumedPaths) 1 else 0))
-      .withColumn("run2_total_paths", lit(r2.outputPaths.size.toLong))
-      .orderBy("idx", "return_flag")
-  }
-
-  /** Shared fixture for the DashboardStore parity gates: the static orders
-    * pipeline run PER-INDEX with an injected fault at idx 5 — leaving the
-    * ledger in the dashboard's most interesting state: 5 completed indices
-    * (0-4, each with its real row count), 1 failed (5, with its message),
-    * 2 untouched (6-7). Returns (ledger, runId).
-    */
-  private def dashboardLedgerFor(s: SparkSession, dir: String,
-                                 tag: String): (graft.core.Ledger, String) = {
-    val ledgerDir = freshTmpDir(tag, dir)
-    val pipe = ledgerPipelineFor(dir)
-    try graft.core.Runner.runPerIndex(s, pipe, "idx", ledgerDir,
-      beforeIndex = i => if (i == 5L) throw new RuntimeException("injected fault"))
-    catch { case e: RuntimeException if e.getMessage == "injected fault" => () }
-    (new graft.core.Ledger(ledgerDir), pipe.configHash.take(16))
-  }
-
-  /** DashboardStore `index_df` (`dashboard/data.py:86-135`): the per-index
-    * drill-down view — status resolves retry-wins, failed-only indices
-    * merge in, the error message rides along. Row counts come from the
-    * real orders data (per-residue 'O' counts), so the oracle replays
-    * them; wall/peak/gpu are runtime-dependent and gate as booleans (gpu
-    * must be EXACTLY zero on a CPU run — `gpu_memory_bytes` is null).
-    */
-  private def qDashboardIndex(s: SparkSession, dir: String): DataFrame = {
-    val (ledger, runId) = dashboardLedgerFor(s, dir, "graft_dash_idx")
-    val nRows = s.read.parquet(s"${ledger.path}/index_results")
-      .filter(col("run_id") === runId && col("status") === "completed")
-      .groupBy(col("idx").cast("long").as("idx"))
-      .agg(max("n_rows").as("n_rows"))
-    ledger.indexDf(s, runId)
-      .join(nRows, Seq("idx"), "left")
-      .select(col("idx"), col("status"), col("error"),
-        coalesce(col("n_rows"), lit(0L)).as("n_rows"),
-        (col("gpu_memory_mb") === 0.0).cast("int").as("gpu_mb_zero"),
-        (col("wall_time_s") >= 0.0).cast("int").as("wall_nonneg"))
-      .orderBy("idx")
-  }
-
-  /** DashboardStore `summary` (`pipeline_store.py:1248-1295` via
-    * `dashboard/data.py:169-190`): total/completed/failed/remaining
-    * counters with retry-wins failed accounting, plus the completed row
-    * total tied back to the orders data.
-    */
-  private def qDashboardSummary(s: SparkSession, dir: String): DataFrame = {
-    val (ledger, runId) = dashboardLedgerFor(s, dir, "graft_dash_sum")
-    val completedRows = s.read.parquet(s"${ledger.path}/index_results")
-      .filter(col("run_id") === runId && col("status") === "completed")
-      .groupBy(col("idx")).agg(max("n_rows").as("n"))
-      .agg(sum("n").as("completed_rows"))
-    // no caller-supplied total: the per-index run recorded total_indices=8
-    // at start (pipeline_runs parity), and the view reads it back
-    ledger.summaryDf(s, runId)
-      .crossJoin(completedRows)
-      .select(col("total"), col("completed"), col("failed"), col("remaining"),
-        (col("total_elapsed_s") >= 0.0).cast("int").as("elapsed_nonneg"),
-        col("completed_rows"))
-  }
-
-  /** DashboardStore `workers_df` (`dashboard/data.py:192-231` +
-    * `indices_by_worker`): per-worker completed/failed counts. Spark's
-    * claiming worker is the driver session (executors are task slots, not
-    * index claimants), so this single-session run pins exactly one worker
-    * row — with its row throughput tied to the orders data.
-    */
-  private def qDashboardWorkers(s: SparkSession, dir: String): DataFrame = {
-    val (ledger, runId) = dashboardLedgerFor(s, dir, "graft_dash_wrk")
-    val workerRows = s.read.parquet(s"${ledger.path}/index_results")
-      .filter(col("run_id") === runId && col("status") === "completed")
-      .groupBy(col("worker_id"), col("idx")).agg(max("n_rows").as("n"))
-      .groupBy("worker_id").agg(sum("n").as("worker_rows"))
-    ledger.workersDf(s, runId)
-      .join(workerRows, Seq("worker_id"), "left")
-      .select(col("worker_id"), col("completed"), col("failed"),
-        coalesce(col("worker_rows"), lit(0L)).as("worker_rows"))
-      .orderBy("worker_id")
-  }
-
-  /** DashboardStore `logs_df` (`dashboard/data.py:283-321`): the leveled,
-    * bounded log tail. One log row per index is written with a
-    * data-derived message (per-index 'O'-order row counts) at
-    * idx-dependent levels (even → INFO, odd → WARNING), then the view is
-    * read back at minLevel=WARNING — pinning the numeric level mapping,
-    * the level gate, and the message content against the orders data.
-    */
-  private def qDashboardLogs(s: SparkSession, dir: String): DataFrame = {
-    val ledgerDir = freshTmpDir("graft_dash_log", dir)
-    val pipe = ledgerPipelineFor(dir)
-    graft.core.Runner.runPipeline(s, pipe, "idx", ledgerDir)
-    val runId = pipe.configHash.take(16)
-    val ledger = new graft.core.Ledger(ledgerDir)
-    // bounded collect: the 8-value index domain (idx = o_orderkey % 8)
-    val perIdx = pipe.dataFrame(s).groupBy(col("idx")).count()
-      .collect().map { r =>
-        val idx = r.getLong(0)
-        (if (idx % 2 == 0) "INFO" else "WARNING", "graft.runner",
-          s"idx $idx completed ${r.getLong(1)} rows", idx)
-      }
-    ledger.recordLogs(s, runId, perIdx.toSeq)
-    ledger.logsDf(s, runId, limit = 500, minLevel = 30)
-      .select(col("idx"), col("level"), col("level_num"), col("logger_name"),
-        col("message"))
-      .orderBy("idx")
-  }
-
-  /** DashboardStore `stage_df` (`dashboard/data.py:137-167`): the per-stage
-    * time-breakdown view over a batch `runPipeline` (which records scheduler
-    * stage metrics; stage timings are runtime values, so the gate pins the
-    * view's STRUCTURE — rows exist, stage_order is contiguous from 0, walls
-    * and task counts are sane — plus the deterministic run accounting).
-    */
-  private def qDashboardStages(s: SparkSession, dir: String): DataFrame = {
-    val ledgerDir = freshTmpDir("graft_dash_stg", dir)
-    val pipe = ledgerPipelineFor(dir)
-    val r1 = graft.core.Runner.runPipeline(s, pipe, "idx", ledgerDir)
-    val runId = pipe.configHash.take(16)
-    new graft.core.Ledger(ledgerDir).stageDf(s, runId)
-      .agg(
-        (count(lit(1)) > 0).cast("int").as("has_stages"),
-        (min(col("stage_order")) === 0).cast("int").as("order_from_zero"),
-        (countDistinct(col("stage_order")) === count(lit(1)))
-          .cast("int").as("order_distinct"),
-        (min(col("wall_time_s")) >= 0.0).cast("int").as("wall_nonneg"),
-        (min(col("executor_run_s")) >= 0.0).cast("int").as("exec_nonneg"),
-        (min(col("n_tasks")) > 0).cast("int").as("tasks_pos"))
-      .withColumn("run_executed", lit(r1.nExecuted))
-  }
-
-  /** The text-curation flagship composition through the SAME public
-    * Pipeline/Runner machinery as the mesh e2e: documents → token-count
-    * gate → exact dedup keep-first → blocklist gate → per-(idx, lang)
-    * token accounting → parquet artifact, with run 2 resuming to a full
-    * ledger skip. Every stage is a public operator (`Text.tokens`,
-    * `DedupOps.dedupKeepFirst`, `TextOps.blocklistScan`) and every
-    * number in the artifact is integer-exact, so the oracle replays the
-    * whole chain — gates, survivor set, and accounting — with zero
-    * rounding anywhere.
-    */
-  /** Provenance tables + artifact views (`pipeline_store.py:540-620`
-    * output_files/filter_artifacts; `dashboard/data.py:247-288`
-    * output_paths/artifacts/all_artifacts): a per-index run whose sink
-    * writes one artifact per index and whose second filter reports one
-    * side file per index through the `PFilter.artifacts()` contract. The
-    * emitted row set ties every count back to the orders data (per-residue
-    * 'O'-order row counts ride along from index_results) and pins the view
-    * shapes: one seq-0 output path per index named by its index, one
-    * artifact per index at filter_order 1, eight artifacts total, and the
-    * resumed run returning all eight recorded paths with zero executions.
-    */
-  private def qDashboardArtifacts(s: SparkSession, dir: String): DataFrame = {
-    val ledgerDir = freshTmpDir("graft_dash_art", dir)
-    val artRoot = s"$ledgerDir/filter_art"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(artRoot))
-    val pendingArts =
-      new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
-    val sinkCalls = new java.util.concurrent.atomic.AtomicInteger(0)
-    val pipe = graft.core.Pipeline(
-      graft.core.PSource("orders_by_mod8", Map("table" -> "orders", "mod" -> "8"),
-        sp => Tables.orders(sp, dir).withColumn("idx", col("o_orderkey") % 8)),
-      Vector(
-        graft.core.PFilter("open_orders", Map("status" -> "O"),
-          df => df.filter(col("o_orderstatus") === "O")),
-        graft.core.PFilter("stats_probe", Map("kind" -> "marker"),
-          df => {
-            // one side file per transform call — runPerIndex applies the
-            // chain per slice, so each index gets exactly one
-            val p = s"$artRoot/probe_${pendingArts.get().size}_${sinkCalls.get()}.txt"
-            java.nio.file.Files.write(java.nio.file.Paths.get(p), "ok".getBytes)
-            pendingArts.set(pendingArts.get() :+ p)
-            df
-          },
-          artifacts = () => { val a = pendingArts.get(); pendingArts.set(Nil); a }),
-      ),
-      Some(graft.core.PSink("per_idx_parquet", Map("path" -> "artifact"),
-        df => {
-          val p = s"$ledgerDir/artifact/part_${sinkCalls.getAndIncrement()}"
-          df.write.mode("overwrite").parquet(p)
-          Seq(p)
-        })))
-    val r1 = graft.core.Runner.runPerIndex(s, pipe, "idx", ledgerDir)
-    val r2 = graft.core.Runner.runPerIndex(s, pipe, "idx", ledgerDir)
-    val ledger = new graft.core.Ledger(ledgerDir)
-    val runId = r1.runId
-    val nRows = s.read.parquet(s"$ledgerDir/index_results")
-      .filter(col("run_id") === runId && col("status") === "completed")
-      .groupBy(col("idx").cast("long").as("idx"))
-      .agg(max("n_rows").as("n_rows"))
-    // indices run in sorted order, so sink call k serves index k — the
-    // output path suffix pins that attribution
-    val outs = ledger.outputFiles(s, runId)
-      .groupBy(col("idx").cast("long").as("idx"))
-      .agg(count(lit(1)).as("n_output_files"),
-        sum(when(col("path") === concat(lit(s"$ledgerDir/artifact/part_"),
-          col("idx")), 1).otherwise(0)).as("path_named_by_idx"),
-        max("seq").as("max_seq"))
-    val arts = ledger.filterArtifacts(s, runId)
-      .groupBy(col("idx").cast("long").as("idx"))
-      .agg(count(lit(1)).as("n_artifacts"),
-        max("filter_name").as("filter_name"),
-        max("filter_order").as("filter_order"))
-    val allArts = ledger.allArtifactsDf(s, runId)
-      .agg(count(lit(1)).as("total_artifacts"))
-    outs.join(arts, Seq("idx")).join(nRows, Seq("idx"))
-      .crossJoin(allArts)
-      .withColumn("run2_executed", lit(r2.nExecuted))
-      .withColumn("run2_recorded_paths", lit(r2.outputPaths.size.toLong))
-      .orderBy("idx")
-  }
-
-  /** Two claiming workers through one ledger (reference workers table +
-    * `indices_by_worker`, `pipeline_store.py:1200-1246,1687-1810`): w_1
-    * runs per-index and crashes at index 5 (completing 0–4), w_2 resumes
-    * under a fresh invocation and completes the rest (the errored index
-    * retried by the OTHER worker). `workersDf` must show both claimants
-    * with their own completed counts, retry-wins failed accounting (w_1's
-    * error row is superseded by w_2's completion), identity columns
-    * populated, and per-worker row throughput tied to the orders data.
-    */
-  private def qDashboardWorkersMulti(s: SparkSession, dir: String): DataFrame = {
-    val ledgerDir = freshTmpDir("graft_dash_mw", dir)
-    val pipe = ledgerPipelineFor(dir)
-    try graft.core.Runner.runPerIndex(s, pipe, "idx", ledgerDir,
-      beforeIndex = i => if (i == 5L) throw new RuntimeException("injected fault"),
-      workerId = "w_1", invocationId = Some("inv_1"))
-    catch { case e: RuntimeException if e.getMessage == "injected fault" => () }
-    val r2 = graft.core.Runner.runPerIndex(s, pipe, "idx", ledgerDir,
-      workerId = "w_2", invocationId = Some("inv_2"))
-    val runId = pipe.configHash.take(16)
-    val ledger = new graft.core.Ledger(ledgerDir)
-    val workerRows = s.read.parquet(s"$ledgerDir/index_results")
-      .filter(col("run_id") === runId && col("status") === "completed")
-      .groupBy(col("worker_id"), col("idx")).agg(max("n_rows").as("n"))
-      .groupBy("worker_id").agg(sum("n").as("worker_rows"))
-    ledger.workersDf(s, runId)
-      .join(workerRows, Seq("worker_id"), "left")
-      .select(col("worker_id"), col("completed"), col("failed"),
-        coalesce(col("worker_rows"), lit(0L)).as("worker_rows"),
-        (col("pid") > 0).cast("int").as("pid_positive"),
-        (length(col("hostname")) > 0).cast("int").as("hostname_nonempty"),
-        (col("last_heartbeat") >= col("started_at")).cast("int")
-          .as("heartbeat_ordered"),
-        col("invocation_id"))
-      .withColumn("run2_executed", lit(r2.nExecuted))
-      .orderBy("worker_id")
-  }
-
-  /** Per-index stage-metrics grain (`pipeline_store.py:565-572` keys stage
-    * rows (idx, run_id, stage_order)): a clean per-index run must leave,
-    * for EVERY index, at least one stage row whose stage_order numbering
-    * restarts from zero and stays distinct within the index — the exact
-    * reference grain, available in this mode because each index runs in
-    * its own job group.
-    */
-  private def qDashboardStagesIdx(s: SparkSession, dir: String): DataFrame = {
-    val ledgerDir = freshTmpDir("graft_dash_sgi", dir)
-    val pipe = ledgerPipelineFor(dir)
-    val r1 = graft.core.Runner.runPerIndex(s, pipe, "idx", ledgerDir)
-    val runId = pipe.configHash.take(16)
-    new graft.core.Ledger(ledgerDir).stageMetrics(s, runId)
-      .groupBy(col("idx").cast("long").as("idx"))
-      .agg((count(lit(1)) > 0).cast("int").as("has_stages"),
-        (min(col("stage_order")) === 0).cast("int").as("order_from_zero"),
-        (countDistinct(col("stage_order")) === count(lit(1)))
-          .cast("int").as("order_distinct"),
-        (min(col("wall_ns")) >= 0).cast("int").as("wall_nonneg"))
-      .withColumn("run_executed", lit(r1.nExecuted))
-      .orderBy("idx")
-  }
-
-  /** Progress/stall view (`run/progress_monitor.py` + `run/progress_app
-    * .py` — the reference's live monitor polls exactly these numbers from
-    * the store): over the crashed-at-5 dashboard fixture, the run-level
-    * counters (8 total / 5 completed / 1 failed / 2 remaining), the worker
-    * census, and the STALL DETECTOR — a second session's claimant is
-    * injected holding idx 6 with a heartbeat ten minutes older than `now`,
-    * and must surface as the one stalled worker (the driver's own
-    * heartbeat is fresh, so its held index does not). Throughput and ETA
-    * are wall-clock-dependent and gate as booleans; completed row totals
-    * tie back to the orders data.
-    */
-  private def qDashboardProgress(s: SparkSession, dir: String): DataFrame = {
-    val (ledger, runId) = dashboardLedgerFor(s, dir, "graft_dash_prg")
-    val now = System.currentTimeMillis()
-    ledger.recordWorkerHeartbeat(s, runId, "w_stuck", 77L, "otherhost",
-      "inv_x", Some(6L), 0L, now - 600000L)
-    val stalledIdx = ledger.stalledWorkersDf(s, runId, 60000L, now)
-      .select("current_index").collect().map(_.getLong(0)).headOption
-      .getOrElse(-1L)
-    val completedRows = s.read.parquet(s"${ledger.path}/index_results")
-      .filter(col("run_id") === runId && col("status") === "completed")
-      .groupBy(col("idx")).agg(max("n_rows").as("n"))
-      .agg(sum("n").as("completed_rows"))
-    ledger.progressDf(s, runId, stallThresholdMs = 60000L, nowMs = now)
-      .select(col("total"), col("completed"), col("failed"), col("remaining"),
-        col("n_workers"), col("n_stalled"), col("first_stalled_worker"),
-        (col("throughput_per_min") > 0.0).cast("int").as("throughput_pos"),
-        (col("eta_s") >= 0.0).cast("int").as("eta_nonneg"))
-      .withColumn("stalled_index", lit(stalledIdx))
-      .crossJoin(completedRows)
-  }
-
-  /** Destructive store edits — the reference's `reset_index(i)` /
-    * `reset()` (`pipeline_store.py:1455-1508`): run A completes per-index,
-    * `resetIndex(3)` clears exactly index 3's records so the resume
-    * re-runs it alone; a SECOND pipeline (run B) sharing the ledger is
-    * then `resetRun`-cleared while run A's records survive untouched. The
-    * oracle replays run A's per-index accounting from orders and pins the
-    * reset counters analytically.
-    */
-  private def qLedgerReset(s: SparkSession, dir: String): DataFrame = {
-    val ledgerDir = freshTmpDir("graft_reset", dir)
-    val sinkA = new java.util.concurrent.atomic.AtomicInteger(0)
-    val pipeA = graft.core.Pipeline(
-      graft.core.PSource("orders_by_mod6", Map("table" -> "orders", "mod" -> "6"),
-        sp => Tables.orders(sp, dir).withColumn("idx", col("o_orderkey") % 6)),
-      Vector(graft.core.PFilter("open_orders", Map("status" -> "O"),
-        df => df.filter(col("o_orderstatus") === "O"))),
-      Some(graft.core.PSink("per_idx_parquet", Map("path" -> "art_a"),
-        df => {
-          val p = s"$ledgerDir/art_a/part_${sinkA.getAndIncrement()}"
-          df.write.mode("overwrite").parquet(p)
-          Seq(p)
-        })))
-    val pipeB = graft.core.Pipeline(
-      graft.core.PSource("orders_by_mod4", Map("table" -> "orders", "mod" -> "4"),
-        sp => Tables.orders(sp, dir).withColumn("idx", col("o_orderkey") % 4)),
-      Vector.empty,
-      Some(graft.core.PSink("noop_count", Map.empty,
-        df => { df.count(); Nil })))
-    val rA = graft.core.Runner.runPerIndex(s, pipeA, "idx", ledgerDir)
-    val rB = graft.core.Runner.runPerIndex(s, pipeB, "idx", ledgerDir)
-    val ledger = new graft.core.Ledger(ledgerDir)
-    ledger.resetIndex(s, rA.runId, 3L)
-    val afterReset = ledger.completedIndices(s, rA.runId).count() // 5
-    val rA2 = graft.core.Runner.runPerIndex(s, pipeA, "idx", ledgerDir)
-    ledger.resetRun(s, rB.runId)
-    val bCompleted = ledger.completedIndices(s, rB.runId).count() // 0
-    val bMetaCleared =
-      if (ledger.runMeta(s, rB.runId) == (None, None)) 1 else 0
-    s.read.parquet(s"${ledger.path}/index_results")
-      .filter(col("run_id") === rA.runId && col("status") === "completed")
-      .groupBy(col("idx").cast("long").as("idx"))
-      .agg(max("n_rows").as("n_rows"))
-      .withColumn("a_completed_after_reset", lit(afterReset))
-      .withColumn("resume_executed", lit(rA2.nExecuted.toLong))
-      .withColumn("resume_skipped", lit(rA2.nSkipped.toLong))
-      .withColumn("b_completed_after_reset", lit(bCompleted))
-      .withColumn("b_meta_cleared", lit(bMetaCleared))
-      .orderBy("idx")
-  }
-
-  /** Config-file-driven execution END TO END (`core/serialization.py:
-    * 301-345` → `run_pipeline`, SURVEY §3.3's third entry point): the
-    * pipeline spec is SAVED to YAML, loaded back through a registry of
-    * stage factories in a separate code path, and the LOADED pipeline runs
-    * through the public Runner into a parquet artifact. The oracle replays
-    * the artifact values from orders; hash_equal pins `load(save(p))`
-    * reproducing the exact config identity that names the checkpoint
-    * store, and the run accounting pins that the loaded pipeline actually
-    * executed (not the directly-built twin).
-    */
-  private def qPipelineFromConfig(s: SparkSession, dir: String): DataFrame = {
-    val ledgerDir = freshTmpDir("graft_pipe_cfg", dir)
-    val artDir = s"$ledgerDir/artifact"
-    val reg = new graft.core.Registry
-    reg.registerSource("orders_by_mod8")(ps => graft.core.PSource(
-      "orders_by_mod8", ps,
-      sp => Tables.orders(sp, dir)
-        .withColumn("idx", col("o_orderkey") % ps("mod").toInt)))
-    reg.registerFilter("open_orders")(ps => graft.core.PFilter(
-      "open_orders", ps, df => df.filter(col("o_orderstatus") === ps("status"))))
-    reg.registerFilter("count_by_idx")(ps => graft.core.PFilter(
-      "count_by_idx", ps,
-      df => df.groupBy(col("idx"))
-        .agg(count(lit(1)).as("n_open"), sum(col("o_custkey")).as("sum_cust"))))
-    reg.registerSink("parquet_artifact")(ps => graft.core.PSink(
-      "parquet_artifact", ps,
-      df => { df.write.mode("overwrite").parquet(artDir); Seq(artDir) }))
-
-    val direct = graft.core.Pipeline(
-      reg.source("orders_by_mod8", Map("table" -> "orders", "mod" -> "8")),
-      Vector(reg.filter("open_orders", Map("status" -> "O")),
-        reg.filter("count_by_idx", Map("groups" -> "idx"))),
-      Some(reg.sink("parquet_artifact", Map("path" -> "artifact"))))
-    val yml = s"$ledgerDir/pipeline.yaml"
-    graft.core.Serialization.save(direct, yml)
-    val loaded = graft.core.Serialization.load(yml, reg)
-    val hashEqual = loaded.configHash == direct.configHash
-    val r1 = graft.core.Runner.runPipeline(s, loaded, "idx", ledgerDir)
-    s.read.parquet(artDir)
-      .select(col("idx"), col("n_open"), col("sum_cust"))
-      .withColumn("hash_equal", lit(if (hashEqual) 1 else 0))
-      .withColumn("run_executed", lit(r1.nExecuted))
-      .withColumn("artifact_recorded", lit(r1.outputPaths.size.toLong))
-      .orderBy("idx")
-  }
-
-  private def qTextPipelineE2e(s: SparkSession, dir: String): DataFrame = {
-    val ledgerDir = freshTmpDir("graft_pipe_text", dir)
-    val artDir = s"$ledgerDir/artifact"
-    val pipe = graft.core.Pipeline(
-      graft.core.PSource("documents_by_mod4",
-        Map("table" -> "documents", "mod" -> "4"),
-        sp => Tables.documents(sp, dir).withColumn("idx", col("doc_id") % 4)),
-      Vector(
-        graft.core.PFilter("token_gate", Map("minTokens" -> "20"),
-          df => df.filter(
-            size(graft.functions.Text.tokens(col("text"))) >= 20)),
-        graft.core.PFilter("exact_dedup_keep_first", Map("key" -> "norm_md5"),
-          df => graft.operators.DedupOps.dedupKeepFirst(df, "doc_id", "text")),
-        graft.core.PFilter("blocklist_gate",
-          Map("terms" -> "slow,dup,stream", "maxHits" -> "2"),
-          // row-local gate form (r17): the old join(blocklistScan(df)…,
-          // left_semi) duplicated the token-gate+dedup subtree into both
-          // join sides; same row set (see TextOps.blocklistGate)
-          df => TextOps.blocklistGate(df, "text",
-            Seq("slow", "dup", "stream"), maxHits = 2)),
-        graft.core.PFilter("stats_by_idx_lang", Map("groups" -> "idx,lang"),
-          df => df.groupBy(col("idx"), col("lang"))
-            .agg(count(lit(1)).as("n_docs"),
-              sum(size(graft.functions.Text.tokens(col("text"))).cast("long"))
-                .as("sum_tokens")))),
-      Some(graft.core.PSink("parquet_artifact", Map("path" -> "artifact"),
-        df => { df.write.mode("overwrite").parquet(artDir); Seq(artDir) })))
-    val r1 = graft.core.Runner.runPipeline(s, pipe, "idx", ledgerDir)
-    val r2 = graft.core.Runner.runPipeline(s, pipe, "idx", ledgerDir)
-    s.read.parquet(artDir)
-      .select(col("idx"), col("lang"), col("n_docs"), col("sum_tokens"))
-      .withColumn("run1_executed", lit(r1.nExecuted))
-      .withColumn("run2_executed", lit(r2.nExecuted))
-      .withColumn("run2_skipped", lit(r2.nSkipped))
-      .orderBy("idx", "lang")
-  }
-
-  /** Quality gate over `qualityFeatures`: thresholds compare exact rationals
-    * (int/int divisions), so the kept set is engine-stable without rounding.
-    */
-  private def qQualityGate(s: SparkSession, dir: String): DataFrame =
-    graft.operators.CurationOps.qualityGate(
-      TextOps.qualityFeatures(Tables.documents(s, dir), "doc_id", "text"),
-      minTokens = 20, minStopRatio = 0.02, maxDigitRatio = 0.1)
-      .select(col("doc_id"),
-        col("n_tokens").cast("long").as("n_tokens"),
-        rnd("stop_ratio", 4).as("stop_ratio"),
-        rnd("digit_ratio", 4).as("digit_ratio"),
-        rnd("quality_score", 4).as("quality_score"))
-      .orderBy("doc_id")
-
-  /** Content-hash stratified sample: partitioning-independent training-mix
-    * split (the scale-correct replacement for rand-based sampleBy).
-    */
-  private def qStratifiedSample(s: SparkSession, dir: String): DataFrame =
-    graft.operators.CurationOps.stratifiedSampleByHash(
-      Tables.documents(s, dir), "lang", "doc_id",
-      Map("en" -> 0.5, "de" -> 0.25, "fr" -> 0.1, "es" -> 0.25))
-      .select(col("doc_id"), col("lang"))
-      .orderBy("doc_id")
-
-  /** Deterministic domain-mixing gate: weights derived from each source's
-    * numeric suffix ((i mod 4)·0.75 + 0.5 → 0.5 / 1.25 / 2.0 / 2.75 —
-    * exact binary fractions, so both engines' fractional-copy comparison
-    * is bit-identical), epochs fanned out shuffle-free. Output pins the
-    * full-epoch replication (equal per-epoch censuses) and the
-    * hash-selected fractional tail per source.
-    */
-  private def qDomainMix(s: SparkSession, dir: String): DataFrame = {
-    val weights = (0 until 20)
-      .map(i => s"src$i" -> ((i % 4) * 0.75 + 0.5)).toMap
-    graft.operators.CurationOps.mixSources(
-      Tables.documents(s, dir), "source", "doc_id", weights)
-      .groupBy(col("source"), col("epoch"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("sum_chars"))
-      .orderBy("source", "epoch")
-  }
-
-  /** §2.5 partition_indices co-location contract (`run/base.py:316-423`):
-    * each curator index must land in EXACTLY ONE scan partition and each
-    * partition must host exactly one index — that per-index isolation is
-    * what makes skip/retry/intersect work. Surfaced as a query over the
-    * DSv2 source with `spark_partition_id()`: n_partitions per mesh and
-    * the worst-case meshes-per-partition, both pinned to 1.
-    */
-  private def qPartitionIndices(s: SparkSession, dir: String): DataFrame = {
-    val base = s.read.format("graft.sources.RandomMeshSource")
-      .option("n_meshes", 6).option("points_per_mesh", 400).option("seed", 11)
-      .load()
-      .select(col("mesh_id"), spark_partition_id().as("pid"))
-    val perMesh = base.groupBy("mesh_id")
-      .agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("pid")).as("n_partitions"))
-    val worst = base.groupBy("pid")
-      .agg(countDistinct(col("mesh_id")).as("m"))
-      .agg(max(col("m")).as("max_meshes_per_partition"))
-    perMesh.crossJoin(worst).orderBy("mesh_id")
-  }
-
-  /** RandomDataArraySource (`da/sources/random.py:39`): the grid contract —
-    * per (sample, variable): cell count, the 1 h/index time coordinate, and
-    * the exact linspace lat/lon coordinate sums (lat 90 → -90 inclusive,
-    * lon [0, 360) half-open). The seeded value stream is pinned in
-    * RandomMeshSourceSpec.
-    */
-  private def qRandomDataarray(s: SparkSession, dir: String): DataFrame =
-    graft.sources.RandomSynthetic.dataArrays(s, nSamples = 3, nLat = 19,
-      nLon = 36, variables = Seq("u10m", "v10m", "t2m"), seed = 5L)
-      .groupBy(col("sample_idx"), col("variable"))
-      .agg(count(lit(1)).as("n_cells"),
-        date_format(max(col("time")), "yyyy-MM-dd HH:mm:ss").as("time"),
-        rnd(sum("lat"), 4).as("sum_lat"), rnd(sum("lon"), 4).as("sum_lon"))
-      .orderBy("sample_idx", "variable")
-
-  /** RandomAtomicSource (`atm/sources/random.py:39`): the structural
-    * contract — atom counts, atomic numbers inside the common-element set,
-    * positions inside the 10 Å box, energies in the DFT range, the cubic
-    * cell — as per-sample gates. The seeded streams are pinned in
-    * RandomMeshSourceSpec.
-    */
-  private def qRandomAtoms(s: SparkSession, dir: String): DataFrame = {
-    val (atoms, systems) = graft.sources.RandomSynthetic.atoms(
-      s, nSamples = 4, nAtoms = 50, seed = 3L)
-    val zs = graft.sources.RandomSynthetic.Elements.map(lit(_))
-    atoms.groupBy(col("sample_idx"))
-      .agg(count(lit(1)).as("n_atoms"),
-        sum(col("atom_id")).as("sum_atom_id"),
-        min(col("atomic_number").isin(zs.toIndexedSeq: _*).cast("int")).as("z_in_set"),
-        (min(least(col("x"), col("y"), col("z"))) >= 0 &&
-          max(greatest(col("x"), col("y"), col("z"))) < 10.0).cast("int").as("pos_in_box"))
-      .join(systems.select(col("sample_idx"),
-        (col("energy") >= -500.0 && col("energy") < -100.0).cast("int").as("energy_in_range"),
-        (size(col("stresses")) === 6).cast("int").as("six_stresses"),
-        col("cell"), col("pbc").cast("int").as("pbc")), Seq("sample_idx"))
-      .orderBy("sample_idx")
-  }
-
-  /** RandomMeshSource (custom DSv2, one partition per mesh index): the
-    * structural contract — exactly `points_per_mesh` rows per mesh with
-    * dense point ids — checked against a pure generator oracle; the
-    * splitmix64 value stream itself is pinned in RandomMeshSourceSpec.
-    */
-  private def qRandomMesh(s: SparkSession, dir: String): DataFrame =
-    s.read.format("graft.sources.RandomMeshSource")
-      .option("n_meshes", 6).option("points_per_mesh", 500).option("seed", 7)
-      .load()
-      .groupBy(col("mesh_id"))
-      .agg(count(lit(1)).as("n_points"),
-        min(col("point_id")).as("min_pid"),
-        max(col("point_id")).as("max_pid"),
-        sum(col("point_id")).as("sum_pid"))
-      .orderBy("mesh_id")
-
-  /** Tetrahedral MeshQualityFilter report (`quality.py:180-262,648`): tets
-    * assembled from embeddings (4 consecutive vectors = 1 tet, 3 meshes),
-    * aspect / signed-volume / signed-scaled-Jacobian statistics. The oracle
-    * mirrors the exact arithmetic ORDER of the Geometry kernels (IEEE ops in
-    * identical order ⇒ bit-equal per-cell values; aggregate means are
-    * epsilon-round-guarded). Dihedral-angle columns are spec-pinned in
-    * MeshSpec instead (acos + outward-normal sign machinery has no practical
-    * SQL mirror).
-    */
-  private def qTetQuality(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val tet = (col("vec_id") / 4).cast("long")
-    val pts = emb.select((tet % 3).as("mesh_id"),
-      col("vec_id").cast("long").as("point_id"),
-      col("embedding")(0).cast("double").as("x"),
-      col("embedding")(1).cast("double").as("y"),
-      col("embedding")(2).cast("double").as("z"))
-    val cls = emb.select(tet.as("tet"), col("vec_id").cast("long").as("pid"))
-      .groupBy("tet")
-      .agg(sort_array(collect_list(col("pid"))).as("vertices"), count(lit(1)).as("nv"))
-      .filter(col("nv") === 4)
-      .select((col("tet") % 3).as("mesh_id"), col("tet").as("cell_id"), col("vertices"))
-    graft.mesh.MeshOps.tetQualityReport(pts, cls)
-      .select(col("mesh_id"), col("n_cells"),
-        rnd("geom_min_aspect_ratio", 4).as("aspect_min"),
-        rnd("geom_max_aspect_ratio", 4).as("aspect_max"),
-        rnd("geom_mean_aspect_ratio", 4).as("aspect_mean"),
-        rnd("vol_min", 6).as("vol_min"),
-        rnd("vol_max", 6).as("vol_max"),
-        rnd("vol_mean", 6).as("vol_mean"),
-        rnd("vol_std", 6).as("vol_std"),
-        col("vol_n_inverted"),
-        rnd("jac_min", 6).as("jac_min"),
-        rnd("jac_max", 6).as("jac_max"),
-        rnd("jac_mean", 6).as("jac_mean"),
-        col("jac_n_inverted"), col("jac_n_poor"))
-      .orderBy("mesh_id")
-  }
-
-  /** Full VTU sink→source cycle in the production layout (appended raw +
-    * vtkZLibDataCompressor blocks, the format nearly all real-world VTU
-    * uses): meshes derived from the embeddings table, written as
-    * appended-zlib .vtu, re-read by `VtkXmlSource`, then aggregated. Binary
-    * Float64 is bit-exact through the cycle, so the oracle can compute the
-    * same aggregates straight from the parquet table.
-    */
-  private def qVtuRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val pts = emb.select((col("vec_id") % 4).cast("long").as("mesh_id"),
-      col("vec_id").cast("long").as("point_id"),
-      col("embedding")(0).cast("double").as("x"),
-      col("embedding")(1).cast("double").as("y"),
-      col("embedding")(2).cast("double").as("z"))
-    // cells: consecutive point triples per mesh (leftover <3 group dropped)
-    val w = Window.partitionBy("mesh_id").orderBy("point_id")
-    val cls = pts
-      .withColumn("g", ((row_number().over(w) - 1) / 3).cast("long"))
-      .groupBy(col("mesh_id"), col("g").as("cell_id"))
-      .agg(sort_array(collect_list(col("point_id"))).as("vertices"),
-        count(lit(1)).as("nv"))
-      .filter(col("nv") === 3).drop("nv")
-    val pd = emb.select((col("vec_id") % 4).cast("long").as("mesh_id"),
-      col("vec_id").cast("long").as("point_id"), lit("v").as("field"),
-      col("embedding")(3).cast("double").as("value"))
-    val out = freshTmpDir("graft_vtu_rt", dir)
-    graft.sinks.VtuSink.write(pts, cls, pd, out, format = "appended-zlib")
-
-    // read back through the DSv2 relation: Catalyst derives the array
-    // pruning per branch (the n_points/sum_x branch decodes Points only,
-    // the sum_v branch decodes only the "v" array) — Dsv2SourcesSpec pins
-    // that the pruning truly reaches the parser
-    val wide = s.read.format("graft.sources.VtuDataSource")
-      .option("path", out).load()
-    val rc = s.read.format("graft.sources.VtuDataSource")
-      .option("path", out).option("table", "cells").load()
-    def meshOf = regexp_extract(col("mesh_id"), "mesh_(\\d+)\\.vtu", 1).cast("long")
-    val np = wide.groupBy(meshOf.as("mesh_id"))
-      .agg(count(lit(1)).as("n_points"), sum("x").as("sx"))
-    val nc = rc.groupBy(meshOf.as("mesh_id")).agg(count(lit(1)).as("n_cells"))
-    val sv = wide.groupBy(meshOf.as("mesh_id")).agg(sum(col("v")).as("sv"))
-    np.join(nc, Seq("mesh_id")).join(sv, Seq("mesh_id"))
-      .select(col("mesh_id"), col("n_points"), col("n_cells"),
-        rnd(col("sx"), 2).as("sum_x"), rnd(col("sv"), 2).as("sum_v"))
-      .orderBy("mesh_id")
-  }
-
-  /** DrivAerML multi-part volume assembly (`drivaerml.py:275-301,624-733`):
-    * meshes written as VTU, byte-sharded into the `run_<i>/
-    * volume_<i>.vtu.NN.part` layout, re-assembled by `DrivAerMlSource`
-    * (contiguity-checked concat, one task per run) and aggregated. The
-    * assembled bytes are identical to the written file, so the oracle is
-    * the same parquet-side mirror as q_vtu_roundtrip.
-    */
-  private def qVolumeAssembly(s: SparkSession, dir: String): DataFrame = {
-    val root = freshTmpDir("graft_dml_runs", dir)
-    drivaerFixture(s, dir, root)
-    drivaerSummary(s, root)
-  }
-
-  /** The DrivAerML sharded run layout shared by q_volume_assembly (local)
-    * and q_drivaerml_fetch (over loopback HTTP): 4 meshes written as VTU
-    * and byte-sharded into `run_<i>/volume_<i>.vtu.NN.part` files small
-    * enough (1500 B) that every run has several parts.
-    */
-  private def drivaerFixture(s: SparkSession, dir: String, root: String): Unit = {
-    val emb = Tables.embeddings(s, dir)
-    val pts = emb.select((col("vec_id") % 4).cast("long").as("mesh_id"),
-      col("vec_id").cast("long").as("point_id"),
-      col("embedding")(0).cast("double").as("x"),
-      col("embedding")(1).cast("double").as("y"),
-      col("embedding")(2).cast("double").as("z"))
-    val w = Window.partitionBy("mesh_id").orderBy("point_id")
-    val cls = pts
-      .withColumn("g", ((row_number().over(w) - 1) / 3).cast("long"))
-      .groupBy(col("mesh_id"), col("g").as("cell_id"))
-      .agg(sort_array(collect_list(col("point_id"))).as("vertices"),
-        count(lit(1)).as("nv"))
-      .filter(col("nv") === 3).drop("nv")
-    val pd = emb.select((col("vec_id") % 4).cast("long").as("mesh_id"),
-      col("vec_id").cast("long").as("point_id"), lit("v").as("field"),
-      col("embedding")(3).cast("double").as("value"))
-    val flat = freshTmpDir("graft_dml_flat", dir)
-    graft.sinks.VtuSink.write(pts, cls, pd, flat, format = "appended-zlib")
-    // small shards force several .NN.part files per run
-    graft.sources.DrivAerMlSource.shardToRunLayout(s, flat, root, partBytes = 1500)
-  }
-
-  private def drivaerSummary(s: SparkSession, root: String): DataFrame = {
-    val (rp, rc, rpd) = graft.sources.DrivAerMlSource.readVolume(s, root)
-    def runOf = regexp_extract(col("mesh_id"), "run_(\\d+)", 1).cast("long")
-    val np = rp.groupBy(runOf.as("mesh_id"))
-      .agg(count(lit(1)).as("n_points"), sum("x").as("sx"))
-    val nc = rc.groupBy(runOf.as("mesh_id")).agg(count(lit(1)).as("n_cells"))
-    val sv = rpd.filter(col("field") === "v")
-      .groupBy(runOf.as("mesh_id")).agg(sum("value").as("sv"))
-    np.join(nc, Seq("mesh_id")).join(sv, Seq("mesh_id"))
-      .select(col("mesh_id"), col("n_points"), col("n_cells"),
-        rnd(col("sx"), 2).as("sum_x"), rnd(col("sv"), 2).as("sum_v"))
-      .orderBy("mesh_id")
-  }
-
-  /** DrivAerML fetch→assemble END TO END over a real transport
-    * (`drivaerml.py:79`'s HF download of multi-part ~50 GB volumes, minus
-    * only the remote hostname): the sharded `.NN.part` run layout is
-    * published through a loopback HTTP server, staged via the checksummed
-    * [[graft.sources.HttpFetcher]], and assembled from the cache by the
-    * same contiguity-checked reader as q_volume_assembly. `staged_multi`
-    * pins that MORE objects than runs traveled — i.e. the multi-part
-    * layout itself crossed the transport, not a pre-joined file.
-    */
-  private def qDrivaermlFetch(s: SparkSession, dir: String): DataFrame = {
-    val srv = freshTmpDir("graft_dml_srv", dir)
-    drivaerFixture(s, dir, srv)
-    val (root, nStaged) = stageOverLoopback(srv)
-    drivaerSummary(s, root)
-      .withColumn("staged_multi", lit(if (nStaged > 4) 1 else 0))
-  }
-
-  /** AhmedML multi-mode DomainMesh assembly (`ahmedml.py:379-394,600-728`):
-    * the dataset's exact run layout (volume VTU with CellData fields,
-    * boundary VTP with PointData, STL geometry, slice planes, CSV
-    * metadata) is fixtured from the embeddings table, then read back
-    * through every mode — `readDomain` (interior = volume cell centroids
-    * carrying cell data as point data, fp32 downcast; boundary kept as the
-    * `surface` part), `readStl`, `readSlices`, and the CSV global-data
-    * attach (`-`→`_` keys, `varref_` prefix, missing geo file for runs
-    * 1..2 → NULL). The fp32 casts are lossless for the raw embedding
-    * values (parquet float32), so only the centroid/cell-sum derivations
-    * carry rounding, absorbed by the epsilon round guard.
-    */
-  private def qAhmedmlMulti(s: SparkSession, dir: String): DataFrame = {
-    val root = freshTmpDir("graft_ahmedml", dir)
-    ahmedFixture(s, dir, root)
-    ahmedSummary(s, root)
-  }
-
-  /** The AhmedML run-directory fixture shared by q_ahmedml_multi (local
-    * filesystem) and q_ahmedml_fetch (published over loopback HTTP and
-    * staged through the checksummed Fetcher): 3 runs × (volume VTU +
-    * boundary VTP + STL + 2 slice VTPs + force/moment CSVs, with run 0
-    * alone carrying geo_parameters — runs 1-2 exercise the missing-file
-    * skip).
-    */
-  private def ahmedFixture(s: SparkSession, dir: String, root: String): Unit = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-    val base = emb.select((col("vec_id") % 3).cast("long").as("mesh_id"),
-      col("vec_id").cast("long").as("point_id"),
-      col("embedding")(0).cast("double").as("x"),
-      col("embedding")(1).cast("double").as("y"),
-      col("embedding")(2).cast("double").as("z"),
-      col("embedding")(3).cast("double").as("v"))
-    val w = Window.partitionBy("mesh_id").orderBy("point_id")
-    val cls = base
-      .withColumn("g", ((row_number().over(w) - 1) / 3).cast("long"))
-      .groupBy(col("mesh_id"), col("g").as("cell_id"))
-      .agg(sort_array(collect_list(col("point_id"))).as("vertices"),
-        sum("v").as("p"), count(lit(1)).as("nv"))
-      .filter(col("nv") === 3)
-    val cells = cls.select("mesh_id", "cell_id", "vertices")
-    val cellData = cls.select(col("mesh_id"), col("cell_id"),
-      lit("p").as("field"), col("p").as("value"))
-    val pts = base.select("mesh_id", "point_id", "x", "y", "z")
-    val pd = base.select(col("mesh_id"), col("point_id"),
-      lit("cp").as("field"), col("v").as("value"))
-    val noPd = Seq.empty[(Long, Long, String, Double)]
-      .toDF("mesh_id", "point_id", "field", "value")
-
-    // The five mesh writes are independent jobs over disjoint output paths
-    // — submit them from a small pool so each job's straggler tail
-    // back-fills with the next job's tasks (guide §2.6) instead of running
-    // five scan+collect_list pipelines strictly end to end.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val writes = Seq[() => Unit](
-        () => { graft.sinks.VtuSink.write(pts, cells, noPd, root,
-          format = "appended-zlib", cellData = Some(cellData),
-          nameTemplate = "run_{id}/volume_{id}.vtu"); () },
-        () => { graft.sinks.VtuSink.write(pts, cells, pd, root,
-          format = "appended-zlib",
-          nameTemplate = "run_{id}/boundary_{id}.vtp", polyData = true); () },
-        () => { graft.sinks.StlSink.write(pts, cells, root,
-          nameTemplate = "run_{id}/ahmed_{id}.stl"); () },
-        () => { graft.sinks.VtuSink.write(pts, cells, pd, root,
-          nameTemplate = "run_{id}/slices/xNormal-autocfd-{id}.vtp",
-          polyData = true); () },
-        () => { graft.sinks.VtuSink.write(pts, cells, pd, root,
-          nameTemplate = s"run_{id}/slices/yNormal-autocfd-{id}.vtp",
-          polyData = true); () })
-      val futs = writes.map(w => scala.concurrent.Future(w())(ec))
-      // Await ALL futures (not sequentially first-to-last): if one write
-      // fails, the others must still be awaited before leaving the block,
-      // or the downstream CSV writes and reads of `root` would race jobs
-      // still running in the pool on the failure path.
-      val all = scala.concurrent.Future.sequence(futs)(
-        scala.collection.BuildFrom.buildFromIterableOps, ec)
-      try scala.concurrent.Await.result(all,
-        scala.concurrent.duration.Duration.Inf)
-      catch {
-        case e: Throwable =>
-          pool.shutdownNow()
-          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-          throw e
-      }
-    } finally pool.shutdown()
-    (0 until 3).foreach { r =>
-      graft.sources.AhmedMlSource.writeCsv(s, s"$root/run_$r/force_mom_$r.csv",
-        Seq("cd" -> (0.25 + r / 8.0), "cl" -> (-r / 16.0)))
-      graft.sources.AhmedMlSource.writeCsv(s,
-        s"$root/run_$r/force_mom_varref_$r.csv", Seq("cd" -> (r / 4.0)))
-      if (r == 0) // runs 1..2 exercise the missing-file skip
-        graft.sources.AhmedMlSource.writeCsv(s,
-          s"$root/run_$r/geo_parameters_$r.csv", Seq("slant-angle" -> 25.0))
-    }
-  }
-
-  /** The 4-mode AhmedML domain summary over a run-directory root — the
-    * read side of both ahmedml gates.
-    */
-  private def ahmedSummary(s: SparkSession, root: String): DataFrame = {
-    val d = graft.sources.AhmedMlSource.readDomain(s, root)
-    val interior = d.interiorPoints.groupBy("run_id")
-      .agg(count(lit(1)).as("n_interior"),
-        sum(col("x").cast("double")).as("sum_cx"))
-    val ipd = d.interiorPointData.filter(col("field") === "p")
-      .groupBy("run_id").agg(sum(col("value").cast("double")).as("sum_p"))
-    val surf = d.surfacePoints.groupBy("run_id")
-      .agg(count(lit(1)).as("n_surface_points"))
-    val scp = d.surfacePointData.filter(col("field") === "cp")
-      .groupBy("run_id").agg(sum(col("value").cast("double")).as("sum_cp"))
-    val (_, stlC, _) = graft.sources.AhmedMlSource.readStl(s, root)
-    val stl = stlC.groupBy("run_id").agg(count(lit(1)).as("n_stl_facets"))
-    val (slp, _, _) = graft.sources.AhmedMlSource.readSlices(s, root)
-    val slices = slp.select("run_id", "slice_name").distinct()
-      .groupBy("run_id").agg(count(lit(1)).as("n_slices"))
-    val gd = d.globalData.groupBy("run_id")
-      .pivot("key", Seq("cd", "varref_cd", "slant_angle"))
-      .agg(first(col("value").cast("double")))
-    interior.join(ipd, Seq("run_id")).join(surf, Seq("run_id"))
-      .join(scp, Seq("run_id")).join(stl, Seq("run_id"))
-      .join(slices, Seq("run_id")).join(gd, Seq("run_id"), "left")
-      .select(col("run_id"), col("n_interior"), rnd("sum_cx", 2).as("sum_cx"),
-        rnd("sum_p", 2).as("sum_p"), col("n_surface_points"),
-        rnd("sum_cp", 2).as("sum_cp"), col("n_stl_facets"), col("n_slices"),
-        col("cd"), col("varref_cd"), col("slant_angle"))
-      .orderBy("run_id")
-  }
-
-  /** AhmedML fetch→assemble END TO END over a real transport
-    * (`ahmedml.py:284-312`'s HF download path, minus only the remote
-    * hostname): the full 3-run dataset layout — nested slice dirs, CSVs
-    * and all — is PUBLISHED through a loopback HTTP server, staged by
-    * [[graft.sources.HttpFetcher.stage]] with per-object SHA-256
-    * verification into the content-addressed cache (the reference's
-    * skip-if-verified behavior), and only then assembled through the
-    * same 4-mode domain reader as q_ahmedml_multi. n_staged pins the
-    * 22-object manifest that actually traveled over HTTP.
-    */
-  private def qAhmedmlFetch(s: SparkSession, dir: String): DataFrame = {
-    val srv = freshTmpDir("graft_ahmed_srv", dir)
-    ahmedFixture(s, dir, srv)
-    val (root, nStaged) = stageOverLoopback(srv)
-    ahmedSummary(s, root).withColumn("n_staged", lit(nStaged))
-  }
-
-  /** MeshSink naming-template layout (`mesh_writer.py:71,113-146`): write
-    * partitioned by the template column, then re-read and recover the key
-    * FROM THE FILE PATHS (`input_file_name` + regexp) — the oracle checks
-    * that the on-disk layout itself carries the right rows per key.
-    */
-  private def qMeshSinkLayout(s: SparkSession, dir: String): DataFrame = {
-    val out = freshTmpDir("graft_meshsink", dir)
-    val li = Tables.lineitem(s, dir).select(col("l_returnflag").as("flag"),
-      col("l_quantity"))
-    graft.sinks.Sinks.partitionedParquet(li, out, Seq("flag"))
-    s.read.parquet(out)
-      .withColumn("_file", input_file_name())
-      .groupBy(regexp_extract(col("_file"), "flag=([^/]+)/", 1).as("flag"))
-      .agg(count(lit(1)).as("n_rows"), rnd(sum("l_quantity"), 2).as("sum_qty"))
-      .orderBy("flag")
-  }
-
-  /** GridSidecarSink (`grid_sidecar.py:50`): one zarr array per field beside
-    * the mesh outputs. Field names are discovered from the STORE LAYOUT (not
-    * hardcoded), each array read back dense (fills = 0), aggregated per
-    * field against the source events.
-    */
-  private def qGridSidecar(s: SparkSession, dir: String): DataFrame = {
-    val out = freshTmpDir("graft_sidecar", dir)
-    val g = Tables.events(s, dir)
-      .select(col("event_type").as("field"), (col("user_id") % 16).as("i"),
-        (col("event_id") % 32).as("j"), col("value"))
-      .groupBy("field", "i", "j").agg(sum("value").as("value"))
-    graft.sinks.Sinks.gridSidecar(g, out, shape = (16L, 32L), chunks = (8, 8))
-    // store-layout discovery: one dir per field (bounded by the field count)
-    val root = new java.io.File(out)
-    val fields = root.listFiles().filter(f => f.isDirectory && !f.getName.startsWith("."))
-      .map(_.getName).sorted
-    fields.map { f =>
-      graft.sinks.ZarrStore.readArray2D(s, s"$out/$f").withColumn("field", lit(f))
-    }.reduce(_ unionByName _)
-      .groupBy("field")
-      .agg(count(lit(1)).as("n_cells"), rnd(sum("value"), 2).as("sum_value"))
-      .orderBy("field")
-  }
-
-  /** AnsysRSTSource curator contract (`ansys_rst.py:187-310`): decoded
-    * result rows (the DPF boundary) → subset selection, known-result
-    * location registry (unknown defaults nodal), vector-component field
-    * naming, and the nodal/elemental routing split — summarized per routed
-    * field. Results synthesized from events; `stress` and the unknown
-    * `custom_result` are OUTSIDE the subset, so their absence from the
-    * output is part of what the oracle checks.
-    */
-  private def qAnsysRouting(s: SparkSession, dir: String): DataFrame = {
-    val names = Seq("temperature", "displacement", "heat_flux", "stress", "custom_result")
-    val raw = Tables.events(s, dir).select(
-      (col("user_id") % 3).as("mesh_id"),
-      element_at(typedLit(names), (col("event_id") % 5 + 1).cast("int")).as("result"),
-      (col("event_id") % 100).as("idx"),
-      when(col("event_id") % 2 === 0, lit(null).cast("string"))
-        .otherwise((col("event_id") % 3).cast("string")).as("component"),
-      col("value"))
-    val (pd, cd) = graft.sources.AnsysResults.route(raw,
-      subset = Seq("temperature", "displacement", "heat_flux"))
-    pd.select(lit("nodal").as("loc"), col("field"), col("value"))
-      .unionByName(cd.select(lit("elemental").as("loc"), col("field"), col("value")))
-      .groupBy("loc", "field")
-      .agg(count(lit(1)).as("n"), rnd(sum("value"), 2).as("sum_value"))
-      .orderBy("loc", "field")
-  }
-
-  /** WallNodeFilter mask (`wall_node.py:68-100`): events as a displacement
-    * series (user=node, event sequence=time, value=dx) — keep nodes whose
-    * max |d − d₀| ≥ threshold.
-    */
-  private def qWallNodes(s: SparkSession, dir: String): DataFrame = {
-    val disps = Tables.events(s, dir).select(
-      (col("user_id") % 4).as("mesh_id"), col("user_id").as("point_id"),
-      col("event_id").as("t"), col("value").as("dx"),
-      lit(0.0).as("dy"), lit(0.0).as("dz"))
-    graft.mesh.MeshOps.deformingNodes(disps, 10.0)
-      .orderBy("mesh_id", "point_id")
-  }
-
-  /** ERA5 multi-backend routing (`era5.py:377-382`): highest-priority backend
-    * wins per key — two derived "backends" over supplier balances.
-    */
-  private def qUnionPriority(s: SparkSession, dir: String): DataFrame = {
-    val b0 = Tables.supplier(s, dir).filter(col("s_nationkey") < 12)
-      .select(col("s_suppkey"), rnd(col("s_acctbal"), 2).as("v"))
-    val b1 = Tables.supplier(s, dir)
-      .select(col("s_suppkey"), rnd(col("s_acctbal") * 2, 2).as("v"))
-    RelationalOps.unionHighestPriority(Seq((b0, 0), (b1, 1)), Seq("s_suppkey"))
-      .orderBy("s_suppkey")
-  }
-
-  /** ERA5 lexicon routing (`era5.py:47-51` registry + `377-382` merge):
-    * two derived "backends" speak different variable dialects — backend 0
-    * names 2-metre temperature `VAR_2T` (MARS style) and covers only part
-    * of the key space (plus a junk variable no lexicon maps); backend 1
-    * names it `2t` and adds `10u`. Routing translates to canonical names,
-    * drops the unmapped variable, and backend 0 wins where it has data.
-    */
-  private def qEra5Routing(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    def grid(mult: Double) = ev.groupBy((col("user_id") % 50).as("k"))
-      .agg(rnd(sum("value") * mult, 2).as("value"))
-    // stage REAL per-variable .nc files (one dir per backend) and read them
-    // back through the DSv2 relation — the variable `isin` prefilter pushes
-    // into the scan (vars=[...] in the plan), so each backend reads only
-    // its lexicon's variables at the decoder, the Catalyst-native form of
-    // the reference's `variables` selection (`era5.py:103-382`)
-    val out = freshTmpDir("graft_era5_rt", dir)
-    def rows(g: DataFrame, v: String) =
-      g.select(lit(v).as("variable"), lit(0).as("t"), lit(0).as("i"),
-        col("k").cast("int").as("j"), col("value"))
-    graft.sinks.NetCdfSink.writeRecordGrids(
-      rows(grid(1.0), "VAR_2T").unionByName(rows(grid(1.0), "junk")),
-      s"$out/b0", shape = (1, 50), nRecs = 1)
-    graft.sinks.NetCdfSink.writeRecordGrids(
-      rows(grid(2.0), "2t").unionByName(rows(grid(3.0), "10u")),
-      s"$out/b1", shape = (1, 50), nRecs = 1)
-    // the lattice is dense (fill 0.0 at absent k), so keep only ks the
-    // events actually cover — the oracle recomputes from events alone
-    val present = grid(1.0).select(col("k"))
-    def rel(sub: String, vars: Seq[String]) =
-      s.read.format("graft.sources.NetCdfDataSource")
-        .option("path", s"$out/$sub").load()
-        .filter(col("variable").isin(vars: _*))
-        .select(col("variable"), col("pos").as("k"), col("value"))
-        .join(present, Seq("k"), "left_semi")
-    // junk stays in b0's frame on purpose: the scan proves multi-variable
-    // pushdown and the LEXICON proves the unmapped-variable drop
-    val b0 = rel("b0", Seq("VAR_2T", "junk"))
-      .filter(col("variable") =!= "VAR_2T" || col("k") < 30)
-    val b1 = rel("b1", Seq("2t", "10u"))
-    RelationalOps.lexiconRoute(Seq(
-      (b0, 0, Map("t2m" -> "VAR_2T")),
-      (b1, 1, Map("t2m" -> "2t", "u10" -> "10u"))), "variable", Seq("k"))
-      .select(col("variable"), col("k"), col("value"))
-      .orderBy("variable", "k")
-  }
-
-  /** ERA5 fetch→route→decode END TO END over a real transport
-    * (`era5.py:377-382` backend routing atop the actual download layer):
-    * the per-variable `.nc` files are PUBLISHED through a loopback HTTP
-    * server, fetched by [[graft.sources.HttpFetcher.stage]] with SHA-256
-    * verification into the content-addressed cache, and only then decoded
-    * through the ranged `NetCdfDataSource` relation with variable pushdown
-    * — the same chain a production ERA5 pull takes (download → verify →
-    * cache → route → decode), minus nothing but the remote hostname.
-    * Routing, lexicons, and the oracle are q_era5_routing's exactly;
-    * n_staged pins the manifest (one object per variable per backend).
-    */
-  /** Publish every regular file under `srv` through a loopback HTTP server
-    * and stage the manifest back through [[graft.sources.HttpFetcher]]
-    * with SHA-256 verification into the content-addressed cache — the
-    * real download→verify→cache transport under the fetch-e2e gates.
-    * Returns (staged root, object count). stage() is EAGER, so every
-    * object is on local disk (and verified) before the server stops.
-    */
-  private def stageOverLoopback(srv: String): (String, Int) = {
-    import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Paths.get(srv)
-    // Exclude Hadoop checksum sidecars (".name.crc") from the manifest:
-    // they are transport-local artifacts, not dataset objects, and whether
-    // they exist depends on a JVM-global FileSystem flag other sinks
-    // mutate (setWriteChecksum) — counting them made n_staged depend on
-    // which queries ran earlier in the session.
-    val files = java.nio.file.Files.walk(base).iterator().asScala
-      .filter(p => java.nio.file.Files.isRegularFile(p) &&
-        !p.getFileName.toString.endsWith(".crc")).toSeq
-      .sortBy(_.toString)
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    // The default (null) executor serves every request on the dispatch
-    // thread — the fetcher now stages from a small pool (guide §2.6), so
-    // give the server matching parallelism or the concurrent GETs would
-    // re-serialize here.
-    val srvPool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    server.setExecutor(srvPool)
-    server.createContext("/", new com.sun.net.httpserver.HttpHandler {
-      override def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-        val rel = ex.getRequestURI.getPath.stripPrefix("/")
-        val f = base.resolve(rel).normalize()
-        if (f.startsWith(base) && java.nio.file.Files.isRegularFile(f)) {
-          val bytes = java.nio.file.Files.readAllBytes(f)
-          ex.sendResponseHeaders(200, bytes.length.toLong)
-          ex.getResponseBody.write(bytes)
-        } else ex.sendResponseHeaders(404, -1)
-        ex.close()
-      }
-    })
-    server.start()
-    val root =
-      try {
-        val port = server.getAddress.getPort
-        val manifest = files.map { f =>
-          val rel = base.relativize(f).toString
-          (s"http://127.0.0.1:$port/$rel", rel)
-        }
-        // independent per-file hashing — overlap it on the same small pool
-        // the transport uses (the manifest digest pass was a sequential
-        // read+sha256 of every object before any byte traveled)
-        val digPool = java.util.concurrent.Executors.newFixedThreadPool(4)
-        val digests =
-          try files.map { f =>
-            f -> digPool.submit(new java.util.concurrent.Callable[String] {
-              override def call(): String =
-                java.security.MessageDigest.getInstance("SHA-256")
-                  .digest(java.nio.file.Files.readAllBytes(f))
-                  .map(b => f"$b%02x").mkString
-            })
-          }.map { case (f, fut) =>
-            base.relativize(f).toString -> fut.get()
-          }.toMap
-          finally digPool.shutdown()
-        new graft.sources.HttpFetcher().stage(manifest, digests)
-      } finally { server.stop(0); srvPool.shutdown() }
-    (root, files.size)
-  }
-
-  private def qEra5Fetch(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    def grid(mult: Double) = ev.groupBy((col("user_id") % 50).as("k"))
-      .agg(rnd(sum("value") * mult, 2).as("value"))
-    val srv = freshTmpDir("graft_era5_srv", dir)
-    def rows(g: DataFrame, v: String) =
-      g.select(lit(v).as("variable"), lit(0).as("t"), lit(0).as("i"),
-        col("k").cast("int").as("j"), col("value"))
-    graft.sinks.NetCdfSink.writeRecordGrids(
-      rows(grid(1.0), "VAR_2T").unionByName(rows(grid(1.0), "junk")),
-      s"$srv/b0", shape = (1, 50), nRecs = 1)
-    graft.sinks.NetCdfSink.writeRecordGrids(
-      rows(grid(2.0), "2t").unionByName(rows(grid(3.0), "10u")),
-      s"$srv/b1", shape = (1, 50), nRecs = 1)
-    val (root, nStaged) = stageOverLoopback(srv)
-
-    val present = grid(1.0).select(col("k"))
-    def rel(sub: String, vars: Seq[String]) =
-      s.read.format("graft.sources.NetCdfDataSource")
-        .option("path", s"$root/$sub").load()
-        .filter(col("variable").isin(vars: _*))
-        .select(col("variable"), col("pos").as("k"), col("value"))
-        .join(present, Seq("k"), "left_semi")
-    val b0 = rel("b0", Seq("VAR_2T", "junk"))
-      .filter(col("variable") =!= "VAR_2T" || col("k") < 30)
-    val b1 = rel("b1", Seq("2t", "10u"))
-    RelationalOps.lexiconRoute(Seq(
-      (b0, 0, Map("t2m" -> "VAR_2T")),
-      (b1, 1, Map("t2m" -> "2t", "u10" -> "10u"))), "variable", Seq("k"))
-      .select(col("variable"), col("k"), col("value"))
-      .withColumn("n_staged", lit(nStaged))
-      .orderBy("variable", "k")
-  }
-
-  /** BoxTunnel boundary generator (`generators.py:70-120`): deterministic
-    * six-face vertex grid, summarized per boundary.
-    */
-  private def qBoundaryBox(s: SparkSession, dir: String): DataFrame =
-    graft.mesh.Boundaries.boxTunnel(s, 0.0, 10.0, -2.0, 2.0, 0.0, 4.0, 8)
-      .groupBy(col("boundary"))
-      .agg(count(lit(1)).as("n_vertices"),
-        rnd(sum(col("x") + col("y") + col("z")), 4).as("coord_sum"),
-        rnd(min("x"), 4).as("min_x"), rnd(max("z"), 4).as("max_z"))
-      .orderBy("boundary")
-
-  /** HemisphereBoundaries (`generators.py:133`, `_geometry.py:217,308`):
-    * lattice + freestream inlet/outlet split + symmetry disk. Vertex-id
-    * sums pin the shared ids and the inward-winding enforcement; centroid
-    * sums pin the lattice coordinates.
-    */
-  private def qBoundaryHemisphere(s: SparkSession, dir: String): DataFrame =
-    graft.mesh.Boundaries.hemisphere(s, radius = 2.0, nTheta = 12, nPhi = 5,
-      ux = 1.0, uy = 0.25, uz = 0.5)
-      .groupBy(col("boundary"))
-      .agg(count(lit(1)).as("n_cells"),
-        sum("v0").as("sum_v0"), sum("v1").as("sum_v1"), sum("v2").as("sum_v2"),
-        rnd(sum("cx"), 4).as("sum_cx"), rnd(sum("cy"), 4).as("sum_cy"),
-        rnd(sum("cz"), 4).as("sum_cz"))
-      .orderBy("boundary")
-
-  /** Hemisphere with a silhouette hole carved from the symmetry disk
-    * (`generators.py:183-186` silhouette_loops + constrained_delaunay_disk):
-    * a 4-vertex star-shaped loop at azimuths π/12 + j·π/2, radius 0.8,
-    * carved by the azimuth-merge annulus triangulation. The oracle rebuilds
-    * the whole lattice — dome AND annulus (merge pairings included) — and
-    * pins counts, vertex-id sums, centroid sums, and AREAS; the symmetry
-    * area sum equals rim polygon − hole polygon (exact carve).
-    */
-  private def qBoundaryHole(s: SparkSession, dir: String): DataFrame = {
-    val hole = Seq.tabulate(4) { j =>
-      val a = math.Pi / 12 + j * (math.Pi / 2)
-      (0.8 * math.cos(a), 0.8 * math.sin(a))
-    }
-    graft.mesh.Boundaries.hemisphereWithHole(s, radius = 2.0, nTheta = 12,
-      nPhi = 5, ux = 1.0, uy = 0.25, uz = 0.5, hole = hole)
-      .groupBy(col("boundary"))
-      .agg(count(lit(1)).as("n_cells"),
-        sum("v0").as("sum_v0"), sum("v1").as("sum_v1"), sum("v2").as("sum_v2"),
-        rnd(sum("cx"), 4).as("sum_cx"), rnd(sum("cy"), 4).as("sum_cy"),
-        rnd(sum("cz"), 4).as("sum_cz"), rnd(sum("area"), 4).as("sum_area"))
-      .orderBy("boundary")
-  }
-
-  /** Format-dispatching NetCDF ingestion (`era5.py` reads classic and
-    * netCDF-4 transparently through xarray): the same record grids written
-    * BOTH as classic CDF-1 and as netCDF-4/HDF5 containers into one store,
-    * read back through the magic-byte dispatcher, reduced per (format,
-    * variable). The netCDF-4 files additionally carry their time/lat/lon
-    * coordinate scales — one set per file — which the oracle reconstructs
-    * from the index sums.
-    */
-  private def qNetcdfAuto(s: SparkSession, dir: String): DataFrame = {
-    val g = Tables.events(s, dir)
-      .select(col("event_type").as("variable"), (col("event_id") % 2).as("t"),
-        (col("user_id") % 8).as("i"), (col("user_id") % 16).as("j"), col("value"))
-      .groupBy("variable", "t", "i", "j").agg(sum("value").as("value"))
-    val out = freshTmpDir("graft_nc_auto", dir)
-    graft.sinks.NetCdfSink.writeRecordGrids(g, out, shape = (8, 16), nRecs = 2)
-    graft.sinks.NetCdf4Sink.writeRecordGrids(g, out, shape = (8, 16), nRecs = 2)
-    // third format in the same dir: GRIB2 messages (12-bit simple packing
-    // with bitmap holes) — the dispatcher must route all three by magic
-    val packed = g.filter(((col("i") + col("j")) % 5) =!= 0)
-      .withColumn("stored",
-        least(greatest(floor((col("value") + lit(20.0)) / lit(0.01)), lit(0L)),
-          lit(4095L)).cast("long"))
-    val varNumber = g.select("variable").distinct().collect()
-      .map(_.getString(0)).sorted.zipWithIndex.toMap
-    graft.sources.GribSource.writeGrids(packed, out, shape = (8, 16),
-      nRecs = 2, varNumber)
-    val (vars, data) = graft.sources.NetCdfAutoSource.read(s, out,
-      globFilter = "*")
-    // the format label comes from the DISPATCHER's vars table, so the
-    // oracle gates the magic-byte routing itself, not a filename guess;
-    // NaN = GRIB bitmap holes (same contract as CF fill)
-    data.filter(!isnan(col("value")))
-      .join(broadcast(vars.select("file", "variable", "format")),
-        Seq("file", "variable"))
-      .groupBy("format", "variable")
-      .agg(count(lit(1)).as("n_values"), rnd(sum("value"), 2).as("sum_value"))
-      .orderBy("format", "variable")
-  }
-
-  /** Ansys `.rst` decode end-to-end (`ansys_rst.py:187`, local subset of
-    * the DPF boundary): render a thermal and a structural results file with
-    * values derived from events, read them back through the distributed
-    * `AnsysRstSource`, route via the known-result registry, and aggregate
-    * per (file, location, field). The bounded collects (40/15/30/12 rows)
-    * only BUILD the binary fixtures; the decode+route path is distributed.
-    */
-  private def qAnsysDecode(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.AnsysRst
-    def sums(mod: Int): Array[Double] = {
-      val m = Tables.events(s, dir)
-        .groupBy((col("event_id") % mod).as("k")).agg(sum("value").as("v"))
-        .collect().map(r => (r.getLong(0).toInt, r.getDouble(1))).toMap
-      Array.tabulate(mod)(i => m.getOrElse(i, 0.0))
-    }
-    // geometry subset: node coords derived from the same sums (x, x/2, x/4
-    // — exact binary scalings), elements = consecutive index triangles
-    def geomNodes(n: Int): Array[Array[Double]] =
-      sums(n).map(v => Array(v, v * 0.5, v * 0.25))
-    def geomElems(nelm: Int): Array[Array[Int]] =
-      Array.tabulate(nelm)(j => Array(j, j + 1, j + 2))
-    val out = freshTmpDir("graft_rst_fx", dir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    java.nio.file.Files.write(java.nio.file.Paths.get(out, "thermal.rst"),
-      AnsysRst.render(AnsysRst.AnalysisThermal, 40, 15, Seq(
-        AnsysRst.RstSet(1, 1, sums(40).map(v => Array(v)),
-          sums(15).map(v => Array(v, v * 2, v * 3)))),
-        geomNodes(40), geomElems(15)))
-    java.nio.file.Files.write(java.nio.file.Paths.get(out, "structural.rst"),
-      AnsysRst.render(AnsysRst.AnalysisStructural, 30, 12, Seq(
-        AnsysRst.RstSet(1, 1, sums(30).map(v => Array(v, v * 2, v * 3)),
-          sums(12).map(v => Array(v, v * 2, v * 3, v * 4, v * 5, v * 6)))),
-        geomNodes(30), geomElems(12)))
-    val raw = graft.sources.AnsysRstSource.read(s, out)
-    val (pd, cd) = graft.sources.AnsysResults.route(
-      raw.select("mesh_id", "result", "idx", "component", "value"))
-    val results = pd
-      .select(col("mesh_id"), lit("nodal").as("loc"), col("field"), col("value"))
-      .unionByName(cd.select(col("mesh_id"), lit("elemental").as("loc"),
-        col("field"), col("value")))
-      .groupBy("mesh_id", "loc", "field")
-      .agg(count(lit(1)).as("n_values"), rnd(sum("value"), 2).as("sum_value"))
-    val (gp, gc) = graft.sources.AnsysRstSource.readGeometry(s, out)
-    val geomPts = gp.groupBy("mesh_id")
-      .agg(count(lit(1)).as("n_values"),
-        rnd(sum(col("x") + col("y") + col("z")), 2).as("sum_value"))
-      .select(col("mesh_id"), lit("geometry").as("loc"), lit("nodes").as("field"),
-        col("n_values"), col("sum_value"))
-    val geomCells = gc.select(col("mesh_id"),
-      (size(col("vertices")).cast("long") +
-        aggregate(col("vertices"), lit(0L), (a, v) => a + v)).cast("double").as("w"))
-      .groupBy("mesh_id")
-      .agg(count(lit(1)).as("n_values"), rnd(sum("w"), 2).as("sum_value"))
-      .select(col("mesh_id"), lit("geometry").as("loc"), lit("cells").as("field"),
-        col("n_values"), col("sum_value"))
-    results.unionByName(geomPts).unionByName(geomCells)
-      .orderBy("mesh_id", "loc", "field")
-  }
-
-  /** CleanFilter point merge (`clean.py:39`): embedding components as coords,
-    * tol-quantized duplicate collapse to the min id.
-    */
-  private def qMergePoints(s: SparkSession, dir: String): DataFrame = {
-    val pts = Tables.embeddings(s, dir).select(
-      (col("vec_id") % 8).as("mesh_id"), col("vec_id").as("point_id"),
-      element_at(col("embedding"), 1).cast("double").as("x"),
-      element_at(col("embedding"), 2).cast("double").as("y"),
-      element_at(col("embedding"), 3).cast("double").as("z"))
-    graft.mesh.MeshOps.mergeDuplicatePoints(pts, 0.25)
-      .orderBy("mesh_id", "point_id")
-  }
-
-  /** PII-style redaction census: md5 of scrubbed text + replacement counts. */
-  /** Secret scanning over documents salted with synthetic credentials
-    * (a high-entropy 68-char mixed-case key for every 7th doc, a
-    * zero-entropy 30-char filler for every 11th): candidate census,
-    * entropy-gated secret count, and the max rounded entropy — the
-    * oracle rebuilds the same salted text and replays candidates,
-    * per-occurrence character entropy, and the gate.
-    */
-  private def qSecretScan(s: SparkSession, dir: String): DataFrame = {
-    val salted = Tables.documents(s, dir).select(col("doc_id"),
-      concat(col("text"),
-        when(col("doc_id") % 7 === 0,
-          concat(lit(" key_"), md5(col("doc_id").cast("string")),
-            upper(md5((col("doc_id") + 1).cast("string")))))
-          .otherwise(lit("")),
-        when(col("doc_id") % 11 === 0, concat(lit(" "), lit("a" * 30)))
-          .otherwise(lit(""))).as("text"))
-    TextOps.secretScan(salted, "doc_id", "text", minEntropy = 2.8)
-      .orderBy("doc_id")
-  }
-
-  /** Luhn-gated card scan over documents salted with known fixtures:
-    * every 7th doc a valid spaced Visa-format number, every 11th an
-    * off-by-one INVALID dashed variant, every 13th a valid 15-digit
-    * (odd-length — the parity branch). Letter-wrapped salts keep the
-    * fixtures out of accidental digit runs in the surrounding text;
-    * both engines run the identical regex + checksum over the same
-    * salted text, so natural candidates in the corpus census match too.
-    */
-  private def qLuhnCards(s: SparkSession, dir: String): DataFrame = {
-    val salted = Tables.documents(s, dir).select(col("doc_id"),
-      concat(col("text"),
-        when(col("doc_id") % 7 === 0, lit(" card 4539 5787 6362 1486 ok"))
-          .otherwise(lit("")),
-        when(col("doc_id") % 11 === 0, lit(" ref 4539-5787-6362-1487."))
-          .otherwise(lit("")),
-        when(col("doc_id") % 13 === 0, lit(" pay 378282246310005 now"))
-          .otherwise(lit(""))).as("text"))
-    TextOps.luhnScan(salted, "doc_id", "text").orderBy("doc_id")
-  }
-
-  /** Zipf rank-frequency slope over the corpus's top-100 tokens: the
-    * oracle replays the census, the (freq desc, token) rank order, and
-    * the identical closed-form OLS algebra, so the fit matches at the
-    * rounded boundary.
-    */
-  private def qZipfSlope(s: SparkSession, dir: String): DataFrame =
-    TextOps.zipfSlope(Tables.documents(s, dir), "text", topN = 100)
-      .select(col("n"), rnd("slope", 4).as("slope_r"),
-        rnd("intercept", 4).as("intercept_r"), rnd("r2", 4).as("r2_r"))
-
-  /** Blocklist gate over three terms that occur naturally in the corpus
-    * (no salting needed — the filter is exercised by real text); docs
-    * with more than two total hits fail.
-    */
-  private def qBlocklist(s: SparkSession, dir: String): DataFrame =
-    TextOps.blocklistScan(Tables.documents(s, dir), "doc_id", "text",
-      terms = Seq("slow", "dup", "stream"), maxHits = 2)
-      .orderBy("doc_id")
-
-  private def qRedact(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.CurationOps
-    Tables.documents(s, dir)
-      .select(col("doc_id"), md5(CurationOps.redact(col("text"))).as("clean_md5"),
-        (length(col("text")) - length(CurationOps.redact(col("text"))))
-          .cast("long").as("chars_removed"))
-      .orderBy("doc_id")
-  }
-
-  /** Number of BPE merges the corpus-trained tokenizer learns — small
-    * enough that common words stay multi-token (the encode keeps real
-    * dynamic range for budget/packing), large enough to compress ~2.5×
-    * over characters on the synthetic vocabulary.
-    */
-  private val BpeNumMerges = 40
-
-  /** Materialization point for the corpus-trained BPE merges table (same
-    * oracle-constant contract as [[AnnPlanesDir]]; content is a pure
-    * function of the corpus at `dir`, so within one Verify/Bench run every
-    * BPE query rewrites identical values).
-    */
-  private val BpeMergesDir = s"$MatRoot/bpe_merges"
-
-  /** Shared BPE front-end for every token-accounting query: train the
-    * merges on the corpus (driver-side, vocabulary-bounded), materialize
-    * them for the oracle's recursive-CTE mirror, and return the
-    * distributed per-document encode (n_pretokens, n_bpe_tokens,
-    * bpe_tokens).
-    */
-  private def bpeCounts(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, dir)
-    val merges = TextOps.trainBpe(docs, "text", BpeNumMerges)
-    DriverParquet.write(s, BpeMergesDir,
-      Seq("rank" -> IntT, "lhs" -> StringT, "rhs" -> StringT),
-      merges.zipWithIndex.map { case ((l, r), i) => Seq(i, l, r) })
-    TextOps.bpeEncode(docs, "doc_id", "text", merges)
-  }
-
-  /** Real-BPE encode gate: per document — pre-token count, merges-table
-    * BPE token count, and the md5 of the full token stream. The DuckDB
-    * oracle re-runs the ENCODE itself (recursive CTE over the materialized
-    * merges: leftmost lowest-rank pair per step), so the distributed typed
-    * map is checked against an independent implementation of the same
-    * published algorithm — not against a precomputed answer.
-    */
-  private def qBpeEncode(s: SparkSession, dir: String): DataFrame =
-    bpeCounts(s, dir)
-      .select(col("doc_id"), col("n_pretokens"), col("n_bpe_tokens"),
-        md5(concat_ws(" ", col("bpe_tokens"))).as("tok_md5"))
-      .orderBy("doc_id")
-
-  /** Unigram-LM (SentencePiece-family) Viterbi tokenization gate: per
-    * document — pre-token count, the optimal segmentation's total score,
-    * and its piece count under the corpus n-gram vocabulary with exact
-    * integer scores s(p) = |p|² + ⌊log₂ count(p)⌋. The oracle recomputes
-    * the VOCAB from scratch and replays the DP by exhaustive path
-    * enumeration (max score, then min pieces) — an independent algorithm
-    * against the distributed Viterbi.
-    */
-  private def qUnigramTokenize(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val vocab = TextOps.unigramVocab(docs, "text", maxN = 4)
-    TextOps.unigramEncode(docs, "doc_id", "text", vocab, maxN = 4)
-      .orderBy("doc_id")
-  }
-
-  /** WordPiece greedy longest-match gate: per document — pre-token,
-    * piece, and UNK counts under the corpus position-classed n-gram
-    * vocabulary. The oracle replays the greedy walk in a recursive CTE
-    * (longest matching piece per step via a correlated max — the BPE
-    * oracle's scalar-subquery device).
-    */
-  private def qWordpieceTokenize(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val vocab = TextOps.wordpieceVocab(docs, "text", maxN = 4)
-    TextOps.wordpieceEncode(docs, "doc_id", "text", vocab, maxN = 4)
-      .orderBy("doc_id")
-  }
-
-  /** BPE id round trip — the lossless-inverse gate: tokens → deterministic
-    * id vocabulary (lexicographic rank) → id streams → DECODE back through
-    * the vocab → in-order concatenation. The md5 of the reconstruction is
-    * compared against the oracle's INDEPENDENT pre-token concatenation
-    * (plus an id-stream checksum over the oracle's own recomputed vocab),
-    * so encode, id assignment, and decode are all checked jointly.
-    */
-  private def qBpeRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val enc = bpeCounts(s, dir)
-    val vocab = TextOps.bpeVocab(enc)
-    val ids = TextOps.bpeToIds(enc, "doc_id", vocab)
-    val dec = TextOps.bpeDecode(ids, "doc_id", vocab)
-    val sums = ids.select(col("doc_id"),
-      size(col("ids")).cast("long").as("n_tokens"),
-      aggregate(col("ids"), lit(0L), (a, x) => a + x).as("sum_ids"))
-    enc.select(col("doc_id")).join(sums, Seq("doc_id"), "left")
-      .join(dec, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("sum_ids"), lit(0L)).as("sum_ids"),
-        md5(coalesce(col("decoded"), lit("")).cast("binary")).as("recon_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Token-budget greedy prefix per language: docs in doc_id order until
-    * the cumulative REAL tokenizer token count (merges-table BPE — not the
-    * pre-tokenizer pattern count) passes 10k tokens.
-    */
-  private def qTokenBudget(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.CurationOps
-    val prepared = Tables.documents(s, dir).select(col("doc_id"), col("lang"))
-      .join(bpeCounts(s, dir).select(col("doc_id"),
-        col("n_bpe_tokens").as("n_tokens")), "doc_id")
-    CurationOps.tokenBudgetSelect(prepared, "lang", "doc_id", "n_tokens", 10000L)
-      .select(col("doc_id"), col("lang"), col("n_tokens"),
-        col("cum_tokens").cast("long").as("cum_tokens"))
-      .orderBy("lang", "doc_id")
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.run }
+
+  def oracleSql: Map[String, String] =
+    registry.map { case (n, q) => n -> q.oracle }
+
+  /** The queries a main runs, sorted by name: all of them, or the subset a
+    * comma-separated `spec` names (SPARK_GRAFT_QUERIES, or Explain's
+    * argument). Unknown names are reported on stderr under `[tag]`, so a
+    * typo cannot silently select nothing.
+    */
+  def select(spec: Option[String], tag: String): Seq[Q] = {
+    val only = spec.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .filter(_.nonEmpty)
+    only.foreach(o => (o -- registry.keySet).toSeq.sorted.foreach(n =>
+      System.err.println(s"[$tag] unknown query: $n")))
+    registry.values.filter(q => only.forall(_.contains(q.name)))
+      .toSeq.sortBy(_.name)
   }
-
-  /** Event sessionization (inactivity gap > 1 h starts a new session):
-    * per-(user, session) event counts and value sums.
-    */
-  private def qSessionize(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.sessionize(Tables.events(s, dir), "user_id", "ts", 3600L,
-      tieBreak = Seq("event_id"))
-      .groupBy(col("user_id"), col("session_id"))
-      .agg(count(lit(1)).as("n_events"), rnd(sum("value"), 2).as("sum_value"))
-      .orderBy("user_id", "session_id")
-
-  /** As-of join gate: every click is enriched with the value of the same
-    * user's most recent at-or-before purchase (right side collapsed to one
-    * row per (user, ts) first), then aggregated per user. The oracle runs
-    * DuckDB's NATIVE `ASOF LEFT JOIN`, so the union+window plan is checked
-    * against an independent implementation of the same published
-    * semantics. Timestamps in the fixture are µs-aligned, so the µs
-    * (Spark) vs ns (DuckDB) representations order identically.
-    */
-  private def qAsofJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val right = ev.where(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts")).agg(max("value").as("ref_value"))
-    val left = ev.where(col("event_type") === "click")
-      .select("user_id", "event_id", "ts")
-    RelationalOps.asOfJoin(left, "user_id", "ts", right, "user_id", "ts", "ref_value")
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_clicks"),
-        count("asof_ref_value").as("n_matched"),
-        rnd(sum("asof_ref_value"), 4).as("sum_ref"))
-      .orderBy("user_id")
-  }
-
-  /** Adversarial as-of fixture: every purchase row of a `user_id % 5 = 0`
-    * user carries a NULL ref_value, so matched-but-null rows flow through
-    * the join at scale. The presence semantics (ADVICE r6: a matched
-    * null-valued right row yields null, never a fallback to an earlier
-    * non-null row) is what DuckDB's native ASOF LEFT JOIN pins here: a
-    * fallback implementation would inflate n_matched/sum_ref for exactly
-    * those users.
-    */
-  private def qAsofNull(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val right = ev.where(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts"))
-      .agg(when(col("user_id") % 5 === 0, lit(null).cast("double"))
-        .otherwise(max("value")).as("ref_value"))
-    val left = ev.where(col("event_type") === "click")
-      .select("user_id", "event_id", "ts")
-    RelationalOps.asOfJoin(left, "user_id", "ts", right, "user_id", "ts", "ref_value")
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_clicks"),
-        count("asof_ref_value").as("n_matched"),
-        rnd(sum("asof_ref_value"), 4).as("sum_ref"))
-      .orderBy("user_id")
-  }
-
-  /** Bucketized range join gate: sampled lineitems (points = ship day)
-    * against per-order service windows of bounded length (≤ 13 days, so
-    * bucket width 14 puts every interval on ≤ 2 buckets). The oracle is
-    * the plain inequality join DuckDB plans natively (IEJoin); the Spark
-    * side must produce the identical match set through the bucket
-    * equi-join + containment filter.
-    */
-  private def qRangeJoin(s: SparkSession, dir: String): DataFrame = {
-    val epoch = lit("1992-01-01")
-    val pts = Tables.lineitem(s, dir)
-      .where(col("l_orderkey") % 97 === 0)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        datediff(col("l_shipdate"), epoch).cast("long").as("p_day"),
-        col("l_extendedprice"))
-    val iv = Tables.orders(s, dir)
-      .where(col("o_orderkey") % 89 === 0)
-      .select(col("o_orderkey"),
-        datediff(col("o_orderdate"), epoch).cast("long").as("iv_start"),
-        (datediff(col("o_orderdate"), epoch) + col("o_orderkey") % 14)
-          .cast("long").as("iv_end"))
-    RelationalOps.rangeJoin(pts, "p_day", iv, "iv_start", "iv_end", bucketWidth = 14L)
-      .groupBy("o_orderkey")
-      .agg(count(lit(1)).as("n_pts"),
-        countDistinct("l_orderkey").as("n_orders"),
-        rnd(sum("l_extendedprice"), 4).as("sum_price"))
-      .orderBy("o_orderkey")
-  }
-
-  /** Fixture polygons for q_point_in_polygon: CLOSED integer rings — an
-    * axis-aligned square, a CONCAVE L (parity > 1 crossing on some
-    * rays), and a triangle (non-axis-aligned edges exercise the
-    * cross-multiplied intersection test).
-    */
-  private val PipPolys: Seq[(Long, Seq[(Long, Long)])] = Seq(
-    1L -> Seq((100L, 100L), (300L, 100L), (300L, 300L), (100L, 300L),
-      (100L, 100L)),
-    2L -> Seq((0L, 0L), (200L, 0L), (200L, 100L), (100L, 100L),
-      (100L, 200L), (0L, 200L), (0L, 0L)),
-    3L -> Seq((250L, 250L), (450L, 250L), (350L, 420L), (250L, 250L)))
-
-  /** Point-in-polygon containment census: event points against the three
-    * fixture rings through bbox-cell candidates + integer ray-cast
-    * parity; the oracle is the brute-force all-pairs edge test over the
-    * same rings.
-    */
-  private def qPointInPolygon(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val polys = PipPolys.map { case (id, vs) =>
-      (id, vs.map(_._1), vs.map(_._2))
-    }.toDF("poly_id", "xs", "ys")
-    // px spreads via event_id·7 (user_id tops out near 150 at small sf,
-    // which would leave the x>250 polygons pointless)
-    val pts = Tables.events(s, dir).select(col("event_id").as("id"),
-      ((col("event_id") * 7) % 500).as("x"), (col("event_id") % 500).as("y"))
-    RelationalOps.pointInPolygonJoin(pts, "id", "x", "y",
-        polys, "poly_id", "xs", "ys", cellSize = 128L)
-      .groupBy("poly_id")
-      .agg(count(lit(1)).as("n_inside"), sum("pid").as("sum_pid"))
-      .orderBy("poly_id")
-  }
-
-  /** Spatial radius self-join: all event-point pairs within distance 5
-    * on an integer grid, via 3×3 cell-neighborhood candidates + exact
-    * integer distance filter. The oracle is the brute-force O(n²)
-    * distance join — a genuinely different algorithm producing the
-    * identical pair set.
-    */
-  private def qSpatialJoin(s: SparkSession, dir: String): DataFrame = {
-    val pts = Tables.events(s, dir).select(col("event_id").as("id"),
-      (col("user_id") % 500).as("x"), (col("event_id") % 500).as("y"))
-    RelationalOps.radiusJoin(pts, "id", "x", "y", radius = 5L)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** Regular-grid resampling of the per-user event series at step 50:
-    * forward fill + linear interpolation at each tick, replayed
-    * tick-for-tick by the oracle's window mirror.
-    */
-  private def qResample(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.resample(
-      Tables.events(s, dir).select((col("user_id") % 20).as("k"),
-        col("event_id"), col("value")),
-      "k", "event_id", "value", step = 50L)
-      .select(col("k"), col("tick"), rnd("ffill", 4).as("ffill"),
-        rnd("interp", 4).as("interp"))
-      .orderBy("k", "tick")
-
-  /** Pareto frontier of lineitem on (max l_quantity, min
-    * l_extendedprice): per-partition local frontiers, then the bounded
-    * dominance anti-join. The oracle is the NOT EXISTS dominance query —
-    * a different algorithm over the same strict-dominance order.
-    */
-  private def qSkyline(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.skyline(
-      Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_linenumber"),
-        col("l_quantity"), col("l_extendedprice")),
-      Seq(("l_quantity", true), ("l_extendedprice", false)))
-      .orderBy("l_orderkey", "l_linenumber")
-
-  /** Robust MAD outlier census per returnflag over extended prices —
-    * exact medians, rounded-deviation comparison at k = 3.
-    */
-  private def qMadOutliers(s: SparkSession, dir: String): DataFrame =
-    StatsOps.madOutliers(Tables.lineitem(s, dir), "l_returnflag",
-      "l_extendedprice", k = 3.0)
-      .select(col("l_returnflag"), col("n"), rnd("med", 4).as("med"),
-        rnd("mad", 4).as("mad"), col("n_outliers"))
-      .orderBy("l_returnflag")
-
-  /** The bounded-memory MAD census (GK-sketch medians) on the SAME
-    * fixture as q_mad_outliers — at gate scales the sketch degenerates to
-    * the exact rank-⌈n/2⌉ order statistic (the approxGroupQuantiles gate
-    * contract: allowed rank error 2·n/accuracy < 1 needs accuracy > 2n;
-    * 10⁶ covers sf0.1's ~300k-row flag groups, where the default 10⁵ only
-    * covered sf0.01 — found by the sf0.1 oracle gate), which the oracle
-    * replays with a rank window, while the identical code path runs
-    * bounded-memory at production accuracy.
-    */
-  private def qMadApprox(s: SparkSession, dir: String): DataFrame =
-    StatsOps.madOutliersApprox(Tables.lineitem(s, dir), "l_returnflag",
-      "l_extendedprice", k = 3.0, accuracy = 1000000)
-      .select(col("l_returnflag"), col("n"), rnd("med", 4).as("med"),
-        rnd("mad", 4).as("mad"), col("n_outliers"))
-      .orderBy("l_returnflag")
-
-  /** k-anonymity / l-diversity release report over customer quasi-
-    * identifiers (nation × market segment) with the account-balance
-    * thousand-bucket as the sensitive attribute; k = 5, l = 3.
-    */
-  private def qPrivacyReport(s: SparkSession, dir: String): DataFrame =
-    CurationOps.privacyReport(
-      Tables.customer(s, dir).select(col("c_nationkey"), col("c_mktsegment"),
-        floor(col("c_acctbal") / 1000).as("bal_bucket")),
-      Seq("c_nationkey", "c_mktsegment"), "bal_bucket", k = 5L, l = 3L)
-
-  /** ε-DP Laplace-noised per-language counts (ε=0.5, seed 42): the
-    * oracle replays the seeded hash→uniform→inverse-CDF noise exactly.
-    */
-  private def qDpCounts(s: SparkSession, dir: String): DataFrame =
-    CurationOps.dpNoisyCounts(Tables.documents(s, dir), "lang",
-      epsilon = 0.5, seed = 42L)
-      .select(col("lang"), col("n"), rnd("noisy", 4).as("noisy_r"))
-      .orderBy("lang")
-
-  /** Weighted sample without replacement (A-ES keys from the 60-bit md5
-    * draw): top-50 documents by ln(u)/n_chars — reproducible
-    * quality-weighted selection, mirrored end-to-end in SQL.
-    */
-  private def qWeightedSample(s: SparkSession, dir: String): DataFrame =
-    CurationOps.weightedSample(
-      Tables.documents(s, dir).select(col("doc_id"), col("n_chars")),
-      "doc_id", "n_chars", k = 50)
-      .select(col("doc_id"), col("n_chars"), col("rank"),
-        rnd("_score", 6).as("score"))
-      .orderBy("rank")
-
-  /** Concat-and-cut context-window packing of the document stream: every
-    * document's offset, first window, and windows spanned at L=512 —
-    * offsets in REAL tokenizer tokens (merges-table BPE), which is what a
-    * training loader actually packs.
-    */
-  private def qPackSequences(s: SparkSession, dir: String): DataFrame =
-    CurationOps.packSequences(
-      bpeCounts(s, dir).select(col("doc_id"), col("n_bpe_tokens").as("n_toks")),
-      "doc_id", "n_toks", contextLen = 512L)
-      .select(col("doc_id"), col("n_toks"), col("start_off"),
-        col("pack_id"), col("n_packs"))
-      .orderBy("doc_id")
-
-  /** Fixed-width price histogram per return flag. */
-  private def qHistogram(s: SparkSession, dir: String): DataFrame =
-    StatsOps.histogram(Tables.lineitem(s, dir), "l_returnflag",
-      "l_extendedprice", binWidth = 5000.0)
-      .orderBy("l_returnflag", "bin")
-
-  /** One-pass Pearson correlation matrix over the lineitem numerics. */
-  private def qCorrMatrix(s: SparkSession, dir: String): DataFrame =
-    StatsOps.correlationMatrix(Tables.lineitem(s, dir),
-      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-      .select(col("col_a"), col("col_b"), rnd("corr", 6).as("corr"))
-      .orderBy("col_a", "col_b")
-
-  /** Sketch-quantile gate: `percentile_approx` (the mergeable GK summary —
-    * the documented 100 TB switch for the exact profilers) over
-    * l_extendedprice per return flag. Accuracy is set above the group row
-    * count, where the sketch degenerates to the exact lower order
-    * statistic at rank max(1, ⌈q·n⌉) — which the oracle recomputes with a
-    * plain rank window, so the production code path is gate-checked
-    * against independent SQL.
-    */
-  private def qProfileApprox(s: SparkSession, dir: String): DataFrame =
-    StatsOps.approxGroupQuantiles(Tables.lineitem(s, dir),
-      "l_returnflag", "l_extendedprice",
-      Seq(0.25, 0.5, 0.75, 0.95), accuracy = 1000000)
-      .select(col("l_returnflag"), col("n"),
-        rnd("q25", 4).as("q25"), rnd("q50", 4).as("q50"),
-        rnd("q75", 4).as("q75"), rnd("q95", 4).as("q95"))
-      .orderBy("l_returnflag")
-
-  /** Engine-portable HLL distinct gate: register sketch from the shared
-    * 60-bit md5 hash, estimate + linear-counting correction recomputed
-    * bit-for-bit by the oracle; exact distinct alongside shows the sketch
-    * error the 1.04/√m bound promises.
-    */
-  private def qApproxDistinct(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(s, dir)
-    val exact = li.groupBy(col("l_returnflag"))
-      .agg(countDistinct(col("l_partkey")).as("n_exact"))
-    exact.join(StatsOps.hllDistinct(li, "l_returnflag", "l_partkey", p = 12),
-        "l_returnflag")
-      .select(col("l_returnflag"), col("n_exact"),
-        rnd("hll_estimate", 4).as("hll_est"))
-      .orderBy("l_returnflag")
-  }
-
-  /** KMV/theta-sketch corpus-overlap estimates between the three
-    * l_returnflag partitions of lineitem's partkey universe: per-set
-    * bounded sketches (k smallest distinct 60-bit md5 hashes, map-side
-    * partial aggregation), then pairwise union / intersection /
-    * difference estimates computed from the two k-long ARRAYS alone —
-    * the 100 TB corpus-overlap answer without a corpus × corpus join.
-    * The exact tier (distinct sizes + pairwise intersections) rides
-    * along as the verification baseline, and the oracle rebuilds the
-    * identical sketches from the same md5 hashes.
-    */
-  private def qThetaSketch(s: SparkSession, dir: String): DataFrame = {
-    val k = 256
-    val li = Tables.lineitem(s, dir)
-      .select(col("l_returnflag").as("set"), col("l_partkey").as("v"))
-    val est = StatsOps.thetaSetOps(StatsOps.kmvSketch(li, "set", "v", k), k)
-    val dv = li.distinct
-    val exact = dv.as("a").join(dv.as("b"),
-        col("a.v") === col("b.v") && col("a.set") < col("b.set"))
-      .groupBy(col("a.set").as("set_a"), col("b.set").as("set_b"))
-      .agg(count(lit(1)).as("n_intersect"))
-    val sizes = dv.groupBy(col("set")).agg(count(lit(1)).as("n"))
-    est.join(exact, Seq("set_a", "set_b"))
-      .join(sizes.select(col("set").as("set_a"), col("n").as("n_a")), "set_a")
-      .join(sizes.select(col("set").as("set_b"), col("n").as("n_b")), "set_b")
-      .select(col("set_a"), col("set_b"), col("n_a"), col("n_b"),
-        col("n_intersect"),
-        rnd("est_a", 4).as("est_a"), rnd("est_b", 4).as("est_b"),
-        rnd("est_union", 4).as("est_union"),
-        rnd("est_intersect", 4).as("est_intersect"),
-        rnd("est_a_not_b", 4).as("est_a_not_b"))
-      .orderBy("set_a", "set_b")
-  }
-
-  /** Count-Min heavy hitters over the corpus token stream: the d×w
-    * bounded-state sketch estimates per-token frequencies, candidates keep
-    * `min ≥ threshold`. The oracle rebuilds the identical sketch (same
-    * row-salted md5 buckets), so estimates — collisions included — match
-    * exactly, and `n_exact` rides along to pin the overestimate invariant.
-    */
-  private def qHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.documents(s, dir)
-      .select(explode(Text.tokens(col("text"))).as("tok"))
-      .filter(col("tok") =!= "")
-    StatsOps.cmsHeavyHitters(toks, "tok", d = 3, w = 1024L, threshold = 200L)
-      .select(col("key").as("token"), col("n_exact"), col("cms_estimate"))
-      .orderBy("token")
-  }
-
-  /** Single-pass column profile of lineitem: numeric and string columns in
-    * one aggregation job, exploded to the long layout.
-    */
-  private def qProfile(s: SparkSession, dir: String): DataFrame =
-    StatsOps.profileColumns(Tables.lineitem(s, dir),
-      Seq("l_quantity", "l_extendedprice", "l_partkey", "l_returnflag", "l_linestatus"))
-      .select(col("column"), col("n"), col("n_null"), col("n_distinct"),
-        rnd("min_num", 4).as("min_num"), rnd("max_num", 4).as("max_num"),
-        rnd("mean", 4).as("mean"), col("min_str"), col("max_str"))
-      .orderBy("column")
-
-  /** Group-wise z-score outlier gate over event values (|z| ≤ 2 on the
-    * rounded score), aggregated per type.
-    */
-  private def qZscoreGate(s: SparkSession, dir: String): DataFrame =
-    CurationOps.zScoreFilter(
-      Tables.events(s, dir).select(col("event_type"), col("value")),
-      "event_type", "value", maxZ = 2.0)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_kept"), rnd(sum("value"), 4).as("sum_kept"))
-      .orderBy("event_type")
-
-  /** Exact per-group quantile vector (linear interpolation — the
-    * `quantile_cont` convention both engines share).
-    */
-  private def qQuantiles(s: SparkSession, dir: String): DataFrame =
-    StatsOps.groupQuantiles(Tables.lineitem(s, dir), "l_returnflag",
-      "l_extendedprice", Seq(0.25, 0.5, 0.75, 0.95))
-      .select(col("l_returnflag"), col("n"),
-        rnd("q25", 4).as("q25"), rnd("q50", 4).as("q50"),
-        rnd("q75", 4).as("q75"), rnd("q95", 4).as("q95"))
-      .orderBy("l_returnflag")
-
-  /** Passage-level exact dedup at 3-token granularity: per document, how
-    * many of its passages repeat anywhere in the corpus (the repeated-
-    * boilerplate signal paragraph dedup gates on). Hash-only shuffles.
-    */
-  private def qPassageDedup(s: SparkSession, dir: String): DataFrame =
-    DedupOps.passageStats(Tables.documents(s, dir), "doc_id", "text", width = 3)
-      .orderBy("doc_id")
-
-  /** TF-IDF top-3 terms per document (smooth idf), rank ties broken on the
-    * term so both engines order identically.
-    */
-  private def qTfidf(s: SparkSession, dir: String): DataFrame =
-    TextOps.tfidfTopTerms(Tables.documents(s, dir), "doc_id", "text", k = 3)
-      .select(col("doc_id"), col("rank"), col("term"), rnd("score", 6).as("score"))
-      .orderBy("doc_id", "rank")
-
-  /** Bucketed co-located join gate: both fact tables are written
-    * bucketed + sorted on the join key (`colocateBucketed` — the one-time
-    * shuffle), then joined bucket-aligned with a `merge` hint. At 100 TB
-    * this is the difference between shuffling the fact table on every
-    * query and never shuffling it again; PlanSpec pins the zero-Exchange
-    * join. Results must equal the plain join, which is what the oracle
-    * runs.
-    */
-  private def qBucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    RelationalOps.colocateBucketed(
-      Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_totalprice"),
-      "g_orders_bkt", "o_orderkey", buckets = 8)
-    RelationalOps.colocateBucketed(
-      Tables.lineitem(s, dir).select("l_orderkey", "l_extendedprice", "l_discount"),
-      "g_lineitem_bkt", "l_orderkey", buckets = 8)
-    val o = s.table("g_orders_bkt")
-    val l = s.table("g_lineitem_bkt")
-    // revenue in EXACT integer cents·basis-points: a float Σ ext·(1−disc)
-    // is summation-order-dependent, and at sf0.1's ~6k rows/group the
-    // cross-engine drift (~1e-4 on a 3e8 sum) can flip a 2-decimal
-    // boundary that the 1e-9 epsilon cannot absorb (found by the sf0.1
-    // oracle gate). Prices/discounts are 2-decimal by construction, so
-    // the scaled products are exact longs and the sum is order-free.
-    o.hint("merge").join(l, o("o_orderkey") === l("l_orderkey"))
-      .groupBy((col("o_orderkey") % 100).as("grp"))
-      .agg(count(lit(1)).as("n_items"),
-        rnd(sum(round(col("l_extendedprice") * 100).cast("long") *
-          (lit(10000L) - round(col("l_discount") * 10000).cast("long")))
-          .cast("double") / lit(1000000.0), 2)
-          .as("revenue"))
-      .orderBy("grp")
-  }
-
-  /** Near-dup triples planted deterministically over the embeddings table:
-    * each vector gets two perturbed copies (±0.003/component, exact integer
-    * arithmetic × 0.0005 mirrored bit-for-bit in DuckDB via an indexed
-    * list_transform lambda), giving planted cosines ≈ 0.9999 against a
-    * random-pair background ≤ 0.56 — the separation regime where LSH-based
-    * near-dup detection is meaningful. The (i+1) matches DuckDB's 1-based
-    * lambda index.
-    */
-  private[graft] def plantedTriples(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    Seq(0, 1, 2).map { c =>
-      emb.select((col("vec_id") * 3 + c).cast("long").as("id"),
-        transform(col("embedding"), (x, i) =>
-          x.cast("double") +
-            lit(c) * (((col("vec_id") * 31 + (i + 1) * 7) % 13) - 6) * lit(0.0005))
-          .cast("array<float>").as("embedding"))
-    }.reduce(_ unionByName _)
-  }
-
-  /** Dedup cluster resolution at scale: multi-table hyperplane-LSH candidate
-    * pairs (bucket join, never all-pairs) → exact-cosine verify at τ=0.9 →
-    * connected components → survivor per cluster. The edge generation is the
-    * O(n²)-free path; the brute-force recursive-CTE oracle checks the same
-    * cluster labels. Within-triple redundancy (3 edges per planted triangle)
-    * plus cluster-level comparison make the LSH edge set effectively
-    * recall-complete at the planted cos ≈ 0.9999 (see SimilaritySpec pin).
-    */
-  private def qDedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val trip = plantedTriples(s, dir)
-    val pairs = SimilarityOps.annCosinePairsMulti(trip, "id", "embedding",
-      tau = 0.9, nTables = 6, planesPerTable = 12, dimHint = 64)
-      .select(col("ia").as("da"), col("ib").as("db"))
-    DedupOps.resolveClusters(trip.select("id"), "id", pairs)
-      .select(col("id").as("vec_id"), col("component"), col("is_survivor"))
-      .orderBy("vec_id")
-  }
-
-  /** Structured-grid block-mean coarsening (VTI grid restriction,
-    * `vti.py:17-41` long layout): events mapped onto a (i, j) grid, factor-4
-    * block means.
-    */
-  private def qGridCoarsen(s: SparkSession, dir: String): DataFrame =
-    graft.grid.GridOps.coarsen(
-      Tables.events(s, dir).select(col("event_type").as("field"),
-        (col("user_id") % 32).as("i"), (col("event_id") % 64).as("j"),
-        col("value")),
-      Seq("i", "j"), 4)
-      .select(col("field"), col("i"), col("j"), col("n_cells"),
-        rnd("value", 4).as("value"))
-      .orderBy("field", "i", "j")
-
-  /** Bilinear regrid of the 32×64 event lattice to 9×12 — the ERA5-style
-    * resolution change: the oracle replays the endpoint-aligned mapping,
-    * the four corner weights, and the inner-join sparse-cell semantics;
-    * every ratio is the same IEEE double on both engines and outputs
-    * round at the standard boundary.
-    */
-  private def qRegrid(s: SparkSession, dir: String): DataFrame = {
-    val src = Tables.events(s, dir)
-      .groupBy(col("event_type").as("field"),
-        (col("user_id") % 32).as("i"), (col("event_id") % 64).as("j"))
-      .agg(sum("value").as("value"))
-    graft.grid.GridOps.regridBilinear(src, "i", "j",
-      srcNi = 32, srcNj = 64, dstNi = 9, dstNj = 12)
-      .select(col("field"), col("i"), col("j"),
-        rnd("value", 4).as("value_r"), rnd("w_cover", 4).as("w_cover_r"))
-      .orderBy("field", "i", "j")
-  }
-
-  /** VTI ImageData sink→source cycle THROUGH THE DSv2 RELATION: events
-    * aggregated onto a dense 32×64 point lattice (one Float64 PointData
-    * array per event_type, fill 0), written as a real `.vti` (appended raw,
-    * UInt64 headers) and re-read via `VtiDataSource` — schema inference
-    * from the XML header only, per-array ranged payload reads, lattice
-    * indices/coordinates computed from WholeExtent. `<f8` cells round-trip
-    * bit-exactly, so the oracle rebuilds the lattice straight from events;
-    * the position-weighted checksum pins the x-fastest array order.
-    */
-  private def qVtiRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val grid = Tables.events(s, dir)
-      .groupBy(col("event_type").as("field"),
-        (col("user_id") % 32).cast("int").as("i"),
-        (col("event_id") % 64).cast("int").as("j"))
-      .agg(sum("value").as("value"))
-      .withColumn("grid_id", lit("g")).withColumn("k", lit(0))
-    val out = freshTmpDir("graft_vti_rt", dir)
-    graft.sinks.VtiSink.write(grid, out, extent = (0, 31, 0, 63, 0, 0))
-    val wide = s.read.format("graft.sources.VtiDataSource")
-      .option("path", out).load()
-    // bounded collect: the event-type domain (a handful of values)
-    val fields = grid.select("field").distinct()
-      .collect().map(_.getString(0)).sorted
-    val per = fields.map { f =>
-      wide.select(lit(f).as("field"), col("i"), col("j"), col(f).as("v"))
-    }.reduce(_ unionByName _)
-    per.groupBy("field").agg(
-      count(lit(1)).as("n_points"),
-      rnd(sum("v"), 2).as("sum_value"),
-      rnd(sum((col("i") + col("j") * 100).cast("double") * col("v")), 2).as("wsum"))
-      .orderBy("field")
-  }
-
-  /** ANN scale path: MULTI-TABLE hyperplane LSH → bucket join → exact cosine
-    * verify. The (L, k) here are RECALL-driven for the low τ=0.25 target: at
-    * τ=0.25 the per-plane collision probability is only ~0.58, so k must stay
-    * small (3) for any recall and the candidate set is dense — at this τ that
-    * is inherent to hyperplane LSH, not a tuning miss. The scale discipline is
-    * `annPlanesFor(n, targetBucket)`: k = log2(n/targetBucket) keeps bucket
-    * occupancy (and therefore within-bucket join work) CONSTANT as n grows,
-    * and L buys recall back geometrically; high-τ near-dup detection (the 100
-    * TB dedup case, cf. qDedupClusters at τ=0.9, k=12) is where LSH prunes
-    * hard. FULLY oracle-gated: the hyperplane constants are materialized to
-    * `AnnPlanesDir` as a parquet table (tbl, plane, w DOUBLE[]) the oracle
-    * SQL `list_dot_product`s against — signatures, buckets, candidates, and
-    * the verify cosine are all recomputed in DuckDB. Both engines widen the
-    * float components to double BEFORE multiplying and fold sequentially,
-    * so the sign tests and scores are bit-identical. `SimilaritySpec` still
-    * pins recall ≥ 0.9 vs brute force.
-    */
-  /** Materialize the hyperplanes shared by q_ann_pairs and
-    * q_hard_negatives (one definition — the "identical planes" invariant
-    * their oracles rely on; content is a pure function of
-    * (dim, nTables, k, seed), so a concurrent overwrite rewrites the
-    * same values) and return the planes-per-table k. Bounded
-    * driver-side dump: L·k plane rows, 64 doubles each.
-    */
-  private def writeAnnPlanes(s: SparkSession): Int = {
-    import s.implicits._
-    val k = SimilarityOps.annPlanesFor(n = 2000L, targetBucket = 250L)
-    DriverParquet.write(s, AnnPlanesDir,
-      Seq("tbl" -> IntT, "plane" -> IntT, "w" -> DoubleArrT),
-      SimilarityOps.tablePlanes(dim = 64, nTables = 12, planesPerTable = k)
-        .flatMap { case (t, pls) =>
-          pls.zipWithIndex.map { case (pl, p) =>
-            Seq(t, p, pl.map(_.toDouble).toSeq) }
-        })
-    k
-  }
-
-  private def qAnnPairs(s: SparkSession, dir: String): DataFrame = {
-    val k = writeAnnPlanes(s)
-    val emb = Tables.embeddings(s, dir)
-    SimilarityOps.annCosinePairsMulti(emb, "vec_id", "embedding",
-      tau = 0.25, nTables = 12, planesPerTable = k, dimHint = 64)
-      .orderBy("ia", "ib")
-  }
-
-  /** Contrastive hard-negative mining over the SAME LSH tables as
-    * q_ann_pairs (identical planes, materialized for the oracle): bucket
-    * collisions that score BELOW 0.1 cosine, reduced to the 3 hardest
-    * per min-id anchor. The oracle replays buckets, the inverted cosine
-    * gate, and the (cos desc, ib) ranking.
-    */
-  private def qHardNegatives(s: SparkSession, dir: String): DataFrame = {
-    val k = writeAnnPlanes(s)
-    SimilarityOps.hardNegativePairs(Tables.embeddings(s, dir),
-      "vec_id", "embedding", tauMax = 0.1, perAnchorK = 3,
-      nTables = 12, planesPerTable = k, dimHint = 64)
-      .orderBy("ia", "rank")
-  }
-
-  /** Product-quantization ADC top-k: train per-subspace codebooks on the
-    * embeddings (one Lloyd job per round), materialize them to
-    * `PqCodebooksDir` as (sub, code, c DOUBLE[]), and rank every corpus
-    * vector for each query id < 20 by the summed per-subspace table
-    * distances. The oracle recomputes subvector slices, the argmin code
-    * per (vector, subspace) (ties → lowest code, the `pqAssign` struct
-    * order), the query distance tables, and the ADC sum — every dot the
-    * same double-widened sequential fold (`list_dot_product`), every
-    * squared distance the same `(v·v − 2·v·c) + c·c` association.
-    */
-  private def qPqTopk(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-    val books = SimilarityOps.pqCodebooks(emb, "vec_id", "embedding",
-      m = 8, k = 16, iters = 2, dimHint = 64)
-    // bounded codebook dump: m·k rows × subDim doubles — the broadcast index
-    DriverParquet.write(s, PqCodebooksDir,
-      Seq("sub" -> IntT, "code" -> IntT, "c" -> DoubleArrT),
-      books.zipWithIndex.flatMap { case (cb, sub) =>
-        cb.zipWithIndex.map { case (c, code) =>
-          Seq(sub, code, c.map(_.toDouble).toSeq) }
-      })
-    SimilarityOps.pqTopK(emb, "vec_id", "embedding", k = 5, maxQueryId = 20L,
-      books, dimHint = 64)
-      .orderBy("ia", "rank")
-  }
-
-  /** int8 scalar-quantization gate: per-dimension ranges, exact code
-    * censuses (the round-half-up arithmetic is engine-identical on the
-    * non-negative scaled values), and the rounded dequantization error.
-    */
-  /** Materialization point for the q_ivfsq_topk coarse quantizer (the
-    * [[SemCentroidsDir]] contract).
-    */
-  private val IvfSqCentroidsDir = s"$MatRoot/ivfsq_centroids"
-
-  /** IVF + SQ8 composed search: nProbe = 2 of 8 coarse lists pruned per
-    * query, exact-integer int8 ranking within the probed lists. The
-    * oracle replays the probe selection against the materialized
-    * quantizer, the code table, and the ranking — pruning included.
-    */
-  private def qIvfSqTopk(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-    val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
-      k = 8, iters = 3, dimHint = 64)
-    DriverParquet.write(s, IvfSqCentroidsDir,
-      Seq("cid" -> IntT, "w" -> DoubleArrT),
-      cents.zipWithIndex.map { case (c, i) => Seq(i, c.map(_.toDouble).toSeq) })
-    SimilarityOps.ivfSq8TopK(emb, "vec_id", "embedding",
-      queryIds = Seq(0L, 1L, 2L), k = 5, cents, nProbe = 2)
-      .orderBy("qid", "rank")
-  }
-
-  /** Materialization point for the q_ivfsq_residual_topk coarse
-    * quantizer — FLOAT values, because the residual subtraction is float
-    * arithmetic and the oracle must subtract the same floats.
-    */
-  private val IvfSqResCentroidsDir = s"$MatRoot/ivfsqres_centroids"
-
-  /** IVF + RESIDUAL SQ8 search (the FAISS residual discipline): codes
-    * quantize x − centroid(x) — per-dim ranges train on the residuals,
-    * whose dynamic range is the within-cluster gap — and ranking is the
-    * cosine of the dequantized reconstruction with the TRUE vector norm
-    * riding the index as a sidecar. The oracle replays everything:
-    * assignment and probe pruning against the materialized quantizer,
-    * the float residual subtraction (explicit FLOAT casts — Spark's
-    * zip_with subtracts floats), the recomputed residual code table, the
-    * three score terms (〈q,c〉 + 〈q,mn_float〉 + Σ q·(code+128)·scale), and
-    * the epsilon-stabilized rounded cosine ranking.
-    */
-  private def qIvfSqResidualTopk(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-    val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
-      k = 8, iters = 3, dimHint = 64)
-    DriverParquet.write(s, IvfSqResCentroidsDir,
-      Seq("cid" -> IntT, "w" -> DriverParquet.FloatArrT),
-      cents.zipWithIndex.map { case (c, i) => Seq(i, c.toSeq) })
-    SimilarityOps.ivfSq8ResidualTopK(emb, "vec_id", "embedding",
-      queryIds = Seq(0L, 1L, 2L), k = 5, cents, nProbe = 2)
-      .orderBy("qid", "rank")
-  }
-
-  /** SQ8 quantized search: top-10 neighbors for three query vectors by
-    * EXACT integer int8 dot (the codegen ByteVecDot kernel over binary
-    * code columns) — a ranking with no float arithmetic anywhere, which
-    * the oracle replays from its own recomputed code table.
-    */
-  private def qInt8Topk(s: SparkSession, dir: String): DataFrame =
-    SimilarityOps.int8TopK(Tables.embeddings(s, dir), "vec_id", "embedding",
-      queryIds = Seq(0L, 1L, 2L), k = 10)
-      .orderBy("qid", "rank")
-
-  /** Binary-quantized search: top-10 neighbors for three query vectors
-    * by EXACT integer Hamming distance (the codegen ByteVecHamming
-    * kernel over midrange-thresholded packed sign bits) — like the SQ8
-    * gate, a ranking with no float arithmetic, replayed by the oracle
-    * from its own recomputed bit table.
-    */
-  private def qHammingTopk(s: SparkSession, dir: String): DataFrame =
-    SimilarityOps.hammingTopK(Tables.embeddings(s, dir), "vec_id", "embedding",
-      queryIds = Seq(0L, 1L, 2L), k = 10)
-      .orderBy("qid", "rank")
-
-  private def qScalarQuantize(s: SparkSession, dir: String): DataFrame =
-    SimilarityOps.scalarQuantize(Tables.embeddings(s, dir), "vec_id", "embedding")
-      .select(col("pos"), col("n"),
-        rnd("mn", 5).as("mn_r"), rnd("mx", 5).as("mx_r"),
-        col("n_codes"), col("code_min"), col("code_max"),
-        rnd("mean_abs_err", 6).as("mean_abs_err_r"))
-      .orderBy("pos")
-
-  /** Same materialized-constant contract as [[AnnPlanesDir]], for the PCA
-    * basis (trained per run like the PQ codebooks).
-    */
-  private val PcaBasisDir = s"$MatRoot/pca_basis"
-
-  /** PCA projection gate: top-2 basis trained by the one-pass covariance +
-    * deterministic power iteration, materialized (components stored
-    * float-truncated so both engines fold identical widened doubles — the
-    * hyperplane precedent), every embedding projected onto it. The oracle
-    * re-applies the projection with `list_dot_product`, so the distributed
-    * application — not a copied answer — is what's checked; basis sanity
-    * (orthonormality, eigenvalue order) is spec-pinned.
-    */
-  private def qPcaProject(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-    val (mean, comps) = SimilarityOps.pcaComponents(emb, "vec_id", "embedding",
-      k = 2, iters = 50, dimHint = 64)
-    val rows = comps.zipWithIndex.map { case ((v, lam), c) =>
-      val wf = v.map(_.toFloat)
-      var md = 0.0
-      var i = 0
-      while (i < 64) { md += mean(i) * wf(i).toDouble; i += 1 }
-      (c, wf.map(_.toDouble).toSeq, md, lam)
-    }
-    DriverParquet.write(s, PcaBasisDir,
-      Seq("comp" -> IntT, "w" -> DoubleArrT, "mu_dot" -> DoubleT,
-        "eigenvalue" -> DoubleT),
-      rows.map { case (c, w, md, lam) => Seq(c, w, md, lam) })
-    val projs = rows.map { case (c, _, md, _) =>
-      (rnd(graft.operators.SimilarityOps.dot(col("embedding"),
-        typedLit(comps(c)._1.map(_.toFloat))) - lit(md), 5)).as(s"p${c}_r")
-    }
-    emb.select(col("vec_id") +: projs: _*).orderBy("vec_id")
-  }
-
-  /** Same materialized-constant contract as [[AnnPlanesDir]], for the
-    * IVF-PQ composed index (coarse centroids + its own codebooks).
-    */
-  private val IvfPqCentroidsDir = s"$MatRoot/ivfpq_centroids"
-  private val IvfPqCodebooksDir = s"$MatRoot/ivfpq_codebooks"
-
-  private val IvfPqResCentroidsDir = s"$MatRoot/ivfpqres_centroids"
-  private val IvfPqResCodebooksDir = s"$MatRoot/ivfpqres_codebooks"
-
-  /** IVF-PQ RESIDUAL search ranked by the norm-corrected cosine estimate
-    * (VERDICT r15 item 2): codebooks train on x − centroid(x), the ADC
-    * L2 sum converts through the polarization identity with the true-norm
-    * sidecar — cos ≈ (‖q‖² + ‖x‖² − ‖q − x̂‖²)/(2‖q‖‖x‖). The oracle
-    * recomputes routing, float residual subtraction, codes, per-list ADC
-    * tables, norms, and the identity from the same materialized
-    * constants, so candidate restriction AND the score algebra are both
-    * checked.
-    */
-  private def qIvfPqResidualCosTopk(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-    val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
-      k = 8, iters = 2, dimHint = 64)
-    DriverParquet.write(s, IvfPqResCentroidsDir,
-      Seq("cid" -> IntT, "c" -> DoubleArrT),
-      cents.zipWithIndex.map { case (c, cid) =>
-        Seq(cid, c.map(_.toDouble).toSeq) })
-    val books = SimilarityOps.pqCodebooks(
-      SimilarityOps.residualFrame(emb, "vec_id", "embedding", cents),
-      "vec_id", "resid", m = 8, k = 16, iters = 2, dimHint = 64)
-    DriverParquet.write(s, IvfPqResCodebooksDir,
-      Seq("sub" -> IntT, "code" -> IntT, "c" -> DoubleArrT),
-      books.zipWithIndex.flatMap { case (cb, sub) =>
-        cb.zipWithIndex.map { case (c, code) =>
-          Seq(sub, code, c.map(_.toDouble).toSeq) }
-      })
-    SimilarityOps.ivfPqResidualCosineTopK(emb, "vec_id", "embedding",
-      k = 5, maxQueryId = 20L, cents, books, nProbe = 3, dimHint = 64)
-      .orderBy("ia", "rank")
-  }
-
-  /** IVF-PQ composed gate: coarse routing restricts candidates to the
-    * probed lists, ADC ranks them. Both trained structures materialize so
-    * the oracle recomputes routing, probing, codes, distance tables, and
-    * ranks from the SAME constants — the candidate restriction makes this
-    * strictly stronger than the exhaustive-equivalence trick q_ivf_topk
-    * uses (a wrong probe set changes the result rows here).
-    */
-  private def qIvfPqTopk(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-    val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
-      k = 8, iters = 2, dimHint = 64)
-    DriverParquet.write(s, IvfPqCentroidsDir,
-      Seq("cid" -> IntT, "c" -> DoubleArrT),
-      cents.zipWithIndex.map { case (c, cid) =>
-        Seq(cid, c.map(_.toDouble).toSeq) })
-    val books = SimilarityOps.pqCodebooks(emb, "vec_id", "embedding",
-      m = 8, k = 16, iters = 2, dimHint = 64)
-    DriverParquet.write(s, IvfPqCodebooksDir,
-      Seq("sub" -> IntT, "code" -> IntT, "c" -> DoubleArrT),
-      books.zipWithIndex.flatMap { case (cb, sub) =>
-        cb.zipWithIndex.map { case (c, code) =>
-          Seq(sub, code, c.map(_.toDouble).toSeq) }
-      })
-    SimilarityOps.ivfPqTopK(emb, "vec_id", "embedding", k = 5, maxQueryId = 20L,
-      cents, books, nProbe = 3, dimHint = 64)
-      .orderBy("ia", "rank")
-  }
-
-  /** Materialization points for the q_ann_recall trained structures (same
-    * contract as [[IvfSqCentroidsDir]] / PqCodebooksDir — content is a
-    * pure function of the training parameters).
-    */
-  private val AnnRecallCentroidsDir = s"$MatRoot/ann_recall_centroids"
-  private val AnnRecallCodebooksDir = s"$MatRoot/ann_recall_codebooks"
-
-  /** ANN recall report (VERDICT r12 #6): measured recall@10 of each
-    * quantized tier — IVF with REAL pruning (2 of 8 lists), PQ ADC, SQ8
-    * flat, binary-Hamming flat — against brute-force cosine ground truth
-    * on 8 query vectors. The oracle recomputes every tier from the
-    * materialized structures (routing, probing, codes, distance tables,
-    * ranking) AND the ground truth, then re-derives each recall fraction —
-    * so the measured numbers, not just the report plumbing, are gated.
-    */
-  private def qAnnRecall(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-    val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
-      k = 8, iters = 3, dimHint = 64)
-    DriverParquet.write(s, AnnRecallCentroidsDir,
-      Seq("cid" -> IntT, "w" -> DoubleArrT),
-      cents.zipWithIndex.map { case (c, i) => Seq(i, c.map(_.toDouble).toSeq) })
-    val books = SimilarityOps.pqCodebooks(emb, "vec_id", "embedding",
-      m = 8, k = 16, iters = 2, dimHint = 64)
-    DriverParquet.write(s, AnnRecallCodebooksDir,
-      Seq("sub" -> IntT, "code" -> IntT, "c" -> DoubleArrT),
-      books.zipWithIndex.flatMap { case (cb, sub) =>
-        cb.zipWithIndex.map { case (c, code) =>
-          Seq(sub, code, c.map(_.toDouble).toSeq) }
-      })
-    SimilarityOps.annRecallReport(emb, "vec_id", "embedding",
-      k = 10, maxQueryId = 8L, cents, nProbe = 2, books, dimHint = 64)
-      .orderBy("tier")
-  }
-
-  /** Root for oracle-constant materialization (hyperplanes, JL matrix,
-    * k-means centroids, BPE merges): overridable via GRAFT_DATA_DIR /
-    * -Dgraft.data.dir, defaulting to `data/` under the process working
-    * directory — the oracle SQL strings interpolate the SAME resolved
-    * absolute path, so Spark writer and DuckDB reader agree on any
-    * checkout location (not just /root/repo).
-    */
-  // lazy: BpeMergesDir is declared earlier in the object and would otherwise
-  // read this val before its in-order initializer ran (→ "null/bpe_merges")
-  private[graft] lazy val MatRoot: String =
-    sys.env.get("GRAFT_DATA_DIR").orElse(sys.props.get("graft.data.dir"))
-      .getOrElse(new java.io.File("data").getAbsolutePath)
-
-  /** Fixed materialization point for the q_ann_pairs hyperplane constants —
-    * the oracle SQL is a static string, so the path cannot vary with the sf
-    * dir; the content is a pure function of (seed, L, k, dim) and identical
-    * for every run, so a concurrent overwrite rewrites the same values.
-    */
-  private val AnnPlanesDir = s"$MatRoot/ann_planes"
-
-  /** Same materialized-constant contract as [[AnnPlanesDir]], for the
-    * perceptual-hash table q_phash_pairs' oracle brute-forces over
-    * (banding is recall-exact at ≤ maxHamming, so banded output ≡ the
-    * brute pair scan).
-    */
-  private val PhashTableDir = s"$MatRoot/phash_table"
-
-  /** Same contract as [[PhashTableDir]], for the audio fingerprints
-    * q_audio_fp_pairs' oracle brute-forces over.
-    */
-  private val AudioFpDir = s"$MatRoot/audio_fp"
-
-  /** Staging point for the parquet-footer gate: the oracle's
-    * `parquet_metadata()` needs a literal path in static SQL, so the
-    * query copies the sf dir's file here first (same contract as the
-    * other materialized oracle constants).
-    */
-  private val PqMetaDir = s"$MatRoot/pq_meta"
-
-  /** Same materialized-constant contract as [[AnnPlanesDir]], for the JL
-    * projection matrix.
-    */
-  private val RpPlanesDir = s"$MatRoot/rp_planes"
-
-  /** Same materialized-constant contract as [[AnnPlanesDir]], for the PQ
-    * codebooks (trained per run; the check flow is sequential, so the
-    * oracle reads exactly the codebooks this run quantized with).
-    */
-  private val PqCodebooksDir = s"$MatRoot/pq_codebooks"
-
-  /** Johnson–Lindenstrauss projection gate: every embedding reduced 64→8
-    * through the materialized matrix; DuckDB recomputes each component with
-    * `list_dot_product` (same double-widened sequential fold as the
-    * codegen'd dot → bit-identical values before the shared rounding).
-    */
-  private def qRandomProjection(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val outDim = 8
-    DriverParquet.write(s, RpPlanesDir,
-      Seq("plane" -> IntT, "w" -> DoubleArrT),
-      SimilarityOps.hyperplanes(64, outDim, seed = 20260813L).zipWithIndex
-        .map { case (w, j) => Seq(j, w.map(_.toDouble).toSeq) })
-    SimilarityOps.randomProject(Tables.embeddings(s, dir), "vec_id", "embedding",
-      outDim = outDim, dim = 64, seed = 20260813L)
-      .select(col("vec_id") +: (0 until outDim).map(j => rnd(s"r$j", 6).as(s"r$j")): _*)
-      .orderBy("vec_id")
-  }
-
-  /** Offset-preallocated parallel-write plan (`atm/sinks/zarr_writer.py:467`):
-    * distributed exclusive prefix sum — two-pass range-partitioned cumsum,
-    * NOT a single-task global window.
-    */
-  private def qAtomOffsets(s: SparkSession, dir: String): DataFrame =
-    graft.graph.GraphOps.exclusivePrefixSum(
-      Tables.documents(s, dir).select(col("doc_id"), col("n_chars")),
-      "doc_id", "n_chars")
-      .select("doc_id", "n_chars", "offset")
-      .orderBy("doc_id")
-
-  /** MeshQualityFilter geometry kernels (`quality.py:147-426`) over 2-D
-    * triangles synthesized per lineitem row: aspect ratio, equiangle
-    * skewness, signed scaled Jacobian, area — aggregated per return flag.
-    */
-  private def qMeshQuality(s: SparkSession, dir: String): DataFrame = {
-    import graft.mesh.Geometry
-    val wide = Tables.lineitem(s, dir).select(col("l_returnflag"),
-      col("l_quantity").cast("double").as("x0"),
-      (col("l_discount") * 100.0).as("y0"), lit(0.0).as("z0"),
-      (col("l_extendedprice") / 1000.0).as("x1"),
-      (col("l_tax") * 100.0).as("y1"), lit(0.0).as("z1"),
-      (col("l_linenumber") * 7.0).as("x2"),
-      (col("l_partkey") % 13).cast("double").as("y2"), lit(0.0).as("z2"))
-    val v0 = Geometry.Vec.at(0); val v1 = Geometry.Vec.at(1); val v2 = Geometry.Vec.at(2)
-    val angles = Geometry.triangleAngles(v0, v1, v2)
-    val edges = Geometry.triangleEdgeLens(v0, v1, v2)
-    val perCell = wide.select(col("l_returnflag"),
-      edges.reduce(least(_, _)).as("min_edge"),
-      Geometry.aspectRatio(edges).as("aspect"),
-      Geometry.equiangleSkewness(angles, math.Pi / 3).as("skew"),
-      Geometry.scaledJacobianTri2D(v0, v1, v2).as("jac"),
-      Geometry.triangleArea(v0, v1, v2).as("area"))
-      // exclude zero-edge (duplicate-vertex) cells: their ~1e30 aspect would
-      // dominate the mean with pure eps noise on both engines
-      .filter(col("min_edge") > 1e-12)
-    perCell.groupBy(col("l_returnflag")).agg(
-      count(lit(1)).as("n"),
-      rnd(avg("aspect"), 4).as("aspect_mean"),
-      rnd(max("aspect"), 2).as("aspect_max"),
-      rnd(avg("skew"), 4).as("skew_mean"),
-      rnd(avg("jac"), 4).as("jac_mean"),
-      sum(when(col("jac") < 0.0, 1L).otherwise(0L)).as("n_inverted"),
-      rnd(avg("area"), 4).as("area_mean"))
-      .orderBy("l_returnflag")
-  }
-
-  // ------------------------------------------ LLM-pipeline queries (SURVEY §7.1.9)
-
-  private val ShingleK = 3
-
-  /** Exact dedup (`dropDuplicates` family): canonical-content groups with
-    * survivor id and copy count — one hash-groupBy, map-side combine.
-    */
-  private def qExactDedup(s: SparkSession, dir: String): DataFrame =
-    DedupOps.exactDupGroups(Tables.documents(s, dir), "doc_id", "text")
-      .orderBy("fp")
-
-  /** Max shingle document-frequency for the Jaccard queries (stop-shingle cut). */
-  private val MaxShingleDf = 100
-
-  /** N-gram Jaccard near-dup: sparse inverted-index join over 3-gram
-    * shingles, ultra-common shingles dropped (bounds the pair blowup).
-    */
-  private def qJaccardPairs(s: SparkSession, dir: String): DataFrame = {
-    // persisted: the maxDocFreq stop-shingle cut references the shingle set
-    // twice (df aggregate + semi-join probe side) — same discipline as
-    // qLshJaccard's shared set
-    val sh = DedupOps.shingleSet(Tables.documents(s, dir), "doc_id", "text", ShingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    DedupOps.jaccardPairs(sh, "doc_id", 0.2, maxDocFreq = Some(MaxShingleDf))
-      .select(col("da"), col("db"), rnd("jac", 4).as("jac"))
-      .orderBy("da", "db")
-  }
-
-  /** The composed scale path: LSH band candidates → Jaccard verification —
-    * the O(n²)-free near-dup pipeline end to end.
-    */
-  private def qLshJaccard(s: SparkSession, dir: String): DataFrame = {
-    // one shared, persisted shingle set feeds both the LSH and verify tiers
-    val sh = DedupOps.shingleSet(Tables.documents(s, dir), "doc_id", "text", ShingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands = DedupOps.bandPairs(DedupOps.minhashSignatures(sh, "doc_id"), "doc_id")
-    DedupOps.jaccardPairs(sh, "doc_id", 0.2, candidates = Some(cands),
-      maxDocFreq = Some(MaxShingleDf))
-      .select(col("da"), col("db"), rnd("jac", 4).as("jac"))
-      .orderBy("da", "db")
-  }
-
-  /** MinHash signatures: 16 permutation minima per doc, one aggregation pass. */
-  private def qMinhashSignatures(s: SparkSession, dir: String): DataFrame =
-    DedupOps.minhashSignatures(
-      DedupOps.shingleSet(Tables.documents(s, dir), "doc_id", "text", ShingleK),
-      "doc_id")
-      .orderBy("doc_id")
-
-  /** LSH banding: candidate pairs sharing any (band, band-key) bucket — the
-    * O(n²)-avoiding near-dup scale path.
-    */
-  private def qLshBandPairs(s: SparkSession, dir: String): DataFrame =
-    DedupOps.bandPairs(
-      DedupOps.minhashSignatures(
-        DedupOps.shingleSet(Tables.documents(s, dir), "doc_id", "text", ShingleK),
-        "doc_id"),
-      "doc_id")
-      .orderBy("da", "db")
-
-  /** SimHash 32-bit fingerprints: per-bit weighted sums packed to a long. */
-  private def qSimhash(s: SparkSession, dir: String): DataFrame =
-    DedupOps.simhash(Tables.documents(s, dir), "doc_id", "text")
-      .orderBy("doc_id")
-
-  /** Embedding near-dup: all-pairs cosine ≥ τ (brute-force verification tier). */
-  private def qCosinePairs(s: SparkSession, dir: String): DataFrame =
-    SimilarityOps.cosinePairs(Tables.embeddings(s, dir), "vec_id", "embedding", 0.3)
-      .orderBy("ia", "ib")
-
-  /** ANN baseline: brute-force cosine top-k for a query subset, deterministic
-    * tie-break on (rounded score desc, id asc).
-    */
-  private def qTopkCosine(s: SparkSession, dir: String): DataFrame =
-    SimilarityOps.topKCosine(Tables.embeddings(s, dir), "vec_id", "embedding", 5, 20L)
-      .orderBy("ia", "rank")
-
-  /** Cross-source n-gram decontamination report: per source pair, the
-    * shared 5-gram shingle hashes and the contaminated document counts on
-    * each side (k = 5 because the synthetic corpus has a tiny vocabulary;
-    * published setups use 8–13 on natural text).
-    */
-  private def qDecontaminate(s: SparkSession, dir: String): DataFrame =
-    DedupOps.crossSourceOverlap(Tables.documents(s, dir), "doc_id", "text",
-      "source", k = 5)
-      .orderBy("src_a", "src_b")
-
-  /** Cross-document duplicated-span coverage (RefinedWeb/C4-style dup
-    * n-gram fraction): per doc, the share of its 5-gram positions whose
-    * shingle occurs in at least one OTHER document — corpus-internal
-    * boilerplate, distinct from within-doc repetition (q_repetition) and
-    * cross-source leakage (q_decontaminate).
-    */
-  private def qDupSpans(s: SparkSession, dir: String): DataFrame =
-    DedupOps.dupSpanCoverage(Tables.documents(s, dir), "doc_id", "text", k = 5)
-      .select(col("doc_id"), col("n_spans"), col("n_dup"),
-        rnd("dup_frac", 4).as("dup_frac"))
-      .orderBy("doc_id")
-
-  /** Exact-substring span removal gate: the cleaned text's md5 is the
-    * strongest possible check — the oracle rebuilds every document's
-    * surviving token stream (window-max coverage over 1-based positions,
-    * in-order concat) and a single off-by-one in the coverage window or
-    * concat order changes the hash.
-    */
-  private def qDupSpanRemoval(s: SparkSession, dir: String): DataFrame =
-    DedupOps.removeDupSpans(Tables.documents(s, dir), "doc_id", "text", k = 5)
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-        md5(col("clean_text").cast("binary")).as("clean_md5"))
-      .orderBy("doc_id")
-
-  /** SemDedup semantic deduplication over embeddings: k-means clusters
-    * (the IVF coarse quantizer), within-cluster exact cosine ≥ τ, CC group
-    * resolution, min-id survivors. The centroids are materialized to
-    * `SemCentroidsDir` so the oracle recomputes assignment (argmax with
-    * ties → lowest cid — bit-identical double dots), the within-cluster
-    * pair set, and the groups (recursive CTE) entirely in SQL.
-    */
-  private def qSemanticDedup(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-    val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
-      k = 16, iters = 3, dimHint = 64)
-    // bounded quantizer dump (k rows × dim doubles); written per run so the
-    // oracle reads EXACTLY the centroids this run clustered with
-    DriverParquet.write(s, SemCentroidsDir,
-      Seq("cid" -> IntT, "w" -> DoubleArrT),
-      cents.zipWithIndex.map { case (c, i) => Seq(i, c.map(_.toDouble).toSeq) })
-    SimilarityOps.semanticDedup(emb, "vec_id", "embedding", tau = 0.3, cents)
-      .select(col("id").as("vec_id"), col("cid"), col("component"),
-        col("is_survivor"))
-      .orderBy("vec_id")
-  }
-
-  /** Fixed materialization point for the q_semantic_dedup quantizer — the
-    * oracle SQL is static, so the path cannot vary with the sf dir; the
-    * driver's Verify→check flow is sequential, so the check always reads
-    * the centroids the immediately-preceding run wrote.
-    */
-  private val SemCentroidsDir = s"$MatRoot/sem_centroids"
-
-  /** Materialization point for the q_embedding_outliers quantizer (same
-    * contract as [[SemCentroidsDir]]).
-    */
-  private val EmbOutCentroidsDir = s"$MatRoot/embout_centroids"
-
-  /** Embedding-based quality gate (the curation filter beside SemDedup):
-    * every vector's cosine to its OWN k-means centroid is the quality
-    * signal, and a per-cluster z-score gate (|z| ≤ 2 on the rounded
-    * score — the zScoreFilter discipline) drops the embedding outliers a
-    * contaminated or mis-encoded document produces. The oracle replays
-    * assignment against the materialized quantizer and the identical
-    * z gate.
-    */
-  private def qEmbeddingOutliers(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-    val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
-      k = 8, iters = 3, dimHint = 64)
-    DriverParquet.write(s, EmbOutCentroidsDir,
-      Seq("cid" -> IntT, "w" -> DoubleArrT),
-      cents.zipWithIndex.map { case (c, i) => Seq(i, c.map(_.toDouble).toSeq) })
-    val assigned = SimilarityOps.centroidAssignment(emb, "vec_id",
-      "embedding", cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val totals = assigned.groupBy("cid").agg(count(lit(1)).as("n_total"))
-    CurationOps.zScoreFilter(assigned, "cid", "cos_c", maxZ = 2.0)
-      .groupBy("cid")
-      .agg(count(lit(1)).as("n_kept"), rnd(sum("cos_c"), 4).as("sum_cos"))
-      .join(totals, "cid")
-      .select(col("cid"), col("n_total"), col("n_kept"), col("sum_cos"))
-      .orderBy("cid")
-  }
-
-  /** Gopher-style repetition metrics over word bigrams: top-n-gram and
-    * duplicate-n-gram occupancy per document — the standard boilerplate /
-    * spam signal for quality gating.
-    */
-  private def qRepetition(s: SparkSession, dir: String): DataFrame =
-    TextOps.repetitionStats(Tables.documents(s, dir), "doc_id", "text", n = 2)
-      .select(col("doc_id"), col("n_ngrams"),
-        rnd("top_fraction", 4).as("top_fraction"),
-        rnd("dup_fraction", 4).as("dup_fraction"))
-      .orderBy("doc_id")
-
-  /** Streaming MinHash-LSH near-dup candidates run to completion over the
-    * documents table staged as a file-stream source: signatures are pure
-    * column math per row, and the ONLY stateful operator is the
-    * per-(band, bucket) `flatMapGroupsWithState` (watermark-bounded
-    * state). The oracle recomputes signatures and band collisions in SQL —
-    * the streaming and batch faces produce the same pair set by
-    * construction.
-    */
-  private def qStreamingDedup(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/documents.parquet")
-    val streamDir = freshTmpDir("graft_stream_docs", dir)
-    val hconf = s.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val dstP = new org.apache.hadoop.fs.Path(s"$streamDir/documents.parquet")
-    val fs = srcP.getFileSystem(hconf)
-    org.apache.hadoop.fs.FileUtil.copy(fs, srcP, dstP.getFileSystem(hconf), dstP,
-      false, hconf)
-    // recursive lookup: a Spark-WRITTEN table is a directory of part
-    // files; without it the file-stream source silently discovers ZERO
-    // files one level down and the query "succeeds" on an empty stream
-    val stream = s.readStream.schema(raw.schema)
-      .option("recursiveFileLookup", "true").parquet(streamDir)
-      .withColumn("ts", to_timestamp(lit("2026-01-01 00:00:00")))
-    val cand = graft.streaming.StreamingDedup.nearDupCandidates(
-      stream, "doc_id", "text", "ts", k = ShingleK, watermarkDelayMs = 3600000L)
-    val qname = s"graft_sdedup_${math.abs(dir.hashCode)}"
-    graft.streaming.StatePartitions.scaledFor(s, streamDir) {
-      val q = cand.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(qname).groupBy(col("ia"), col("ib"))
-      .agg(count(lit(1)).as("n_bands"))
-      .orderBy("ia", "ib")
-  }
-
-  /** Streaming snapshot-ingest dedup against a STANDING index
-    * ([[graft.streaming.StreamingDedup.incrementalCandidates]]): odd docs
-    * arrive as a file stream and classify against the even-doc batch index
-    * through stateless stream-static equi-joins (append mode, no
-    * watermark, no state store). The drain folds the match rows into the
-    * exact > near_candidate > novel verdict with min matching index id;
-    * the oracle replays fingerprints, signatures, band keys, and the fold
-    * in SQL.
-    */
-  private def qStreamingIncremental(s: SparkSession, dir: String): DataFrame = {
-    val streamDir = freshTmpDir("graft_stream_incr", dir)
-    val docs = Tables.documents(s, dir)
-    // the ingest batch: every odd doc, PLUS exact copies of a slice of the
-    // index (even doc_id % 100 == 0, re-keyed odd) so the exact tier fires
-    val incoming = docs.filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id") % 100 === 0)
-        .select((col("doc_id") + 500001L).as("doc_id"), col("text")))
-    incoming.coalesce(1).write.mode("overwrite").parquet(streamDir)
-    val index = docs.filter(col("doc_id") % 2 === 0)
-    val stream = s.readStream.schema(incoming.schema)
-      .option("recursiveFileLookup", "true").parquet(streamDir)
-    val cand = graft.streaming.StreamingDedup.incrementalCandidates(
-      stream, index, "doc_id", "text", ShingleK)
-    val qname = s"graft_sincr_${math.abs(dir.hashCode)}"
-    graft.streaming.StatePartitions.scaledFor(s, streamDir) {
-      val q = cand.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val verdicts = s.table(qname).groupBy(col("id").as("doc_id")).agg(
-      min(when(col("tier") === "exact", col("old_id"))).as("_ex"),
-      min(when(col("tier") === "near", col("old_id"))).as("_nr"),
-      countDistinct(when(col("tier") === "near", col("old_id")))
-        .as("n_near_cands"))
-    s.read.parquet(streamDir).select(col("doc_id"))
-      .join(verdicts, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("_ex").isNotNull, "exact")
-          .when(col("_nr").isNotNull, "near_candidate")
-          .otherwise("novel").as("verdict"),
-        coalesce(col("_ex"), col("_nr")).as("match_id"),
-        coalesce(col("n_near_cands"), lit(0L)).as("n_near_cands"))
-      .orderBy("doc_id")
-  }
-
-  /** Folding snapshot-ingest dedup (`StreamingDedup.foldingIncrementalDedup`):
-    * two file-source batches replayed through TWO AvailableNow runs over
-    * one checkpoint (the kill-between-batches resume shape). Batch 1 is
-    * the odd-of-three docs plus re-keyed copies of index docs; batch 2 is
-    * the two-of-three docs plus re-keyed copies of BATCH-1 docs — those
-    * must match the FOLDED index (batch 1's novel fingerprints), which is
-    * exactly what the static-index variant can't do.
-    */
-  private def qStreamingFolding(s: SparkSession, dir: String): DataFrame = {
-    val root = freshTmpDir("graft_stream_fold", dir)
-    val docs = Tables.documents(s, dir)
-    val index = docs.filter(col("doc_id") % 3 === 0).select("doc_id", "text")
-    val b1 = docs.filter(col("doc_id") % 3 === 1).select("doc_id", "text")
-      .unionByName(docs.filter(col("doc_id") % 15 === 0)
-        .select((col("doc_id") + 600001L).as("doc_id"), col("text")))
-    val b2 = docs.filter(col("doc_id") % 3 === 2).select("doc_id", "text")
-      .unionByName(docs.filter(col("doc_id") % 15 === 10)
-        .select((col("doc_id") + 700001L).as("doc_id"), col("text")))
-    val (inDir, idxDir, outDir, ckDir) =
-      (s"$root/in", s"$root/idx", s"$root/out", s"$root/ck")
-    graft.streaming.StreamingDedup.seedIndex(index, "doc_id", "text",
-      ShingleK, idxDir)
-    def run(): Unit = graft.streaming.StatePartitions.scaledFor(s, inDir) {
-      val stream = s.readStream.schema("doc_id LONG, text STRING")
-        .option("recursiveFileLookup", "true").parquet(inDir)
-      graft.streaming.StreamingDedup.foldingIncrementalDedup(stream,
-        "doc_id", "text", ShingleK, idxDir, outDir, ckDir)
-        .awaitTermination()
-    }
-    b1.coalesce(1).write.parquet(s"$inDir/f1")
-    run()
-    b2.coalesce(1).write.parquet(s"$inDir/f2")
-    run()
-    val verdicts = s.read.parquet(outDir).groupBy(col("id").as("doc_id")).agg(
-      min(when(col("tier") === "exact", col("old_id"))).as("_ex"),
-      min(when(col("tier") === "near", col("old_id"))).as("_nr"),
-      countDistinct(when(col("tier") === "near", col("old_id")))
-        .as("n_near_cands"))
-    b1.select("doc_id").withColumn("batch", lit(1))
-      .unionByName(b2.select("doc_id").withColumn("batch", lit(2)))
-      .join(verdicts, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("batch"),
-        when(col("_ex").isNotNull, "exact")
-          .when(col("_nr").isNotNull, "near_candidate")
-          .otherwise("novel").as("verdict"),
-        coalesce(col("_ex"), col("_nr")).as("match_id"),
-        coalesce(col("n_near_cands"), lit(0L)).as("n_near_cands"))
-      .orderBy("doc_id")
-  }
-
-  /** Folding loop with the IN-LOOP VERIFY TIER and forced index
-    * compaction: same two-batch fixture as [[qStreamingFolding]], but
-    * near candidates are scored by MinHash signature-component agreement
-    * (the unbiased Jaccard estimate, ≥ 8/16 components at τ = 0.5 —
-    * integer on both engines) against the signature rows the index now
-    * carries; survivors install as `near_verified`, the rest are
-    * rejected. `maxIndexFiles = 4` forces the fold/compaction path to
-    * run under the oracle too (folding changes file layout, never rows).
-    */
-  private def qStreamingFoldingVerify(s: SparkSession, dir: String): DataFrame = {
-    val root = freshTmpDir("graft_stream_foldv", dir)
-    val docs = Tables.documents(s, dir)
-    val index = docs.filter(col("doc_id") % 3 === 0).select("doc_id", "text")
-    val b1 = docs.filter(col("doc_id") % 3 === 1).select("doc_id", "text")
-      .unionByName(docs.filter(col("doc_id") % 15 === 0)
-        .select((col("doc_id") + 600001L).as("doc_id"), col("text")))
-    val b2 = docs.filter(col("doc_id") % 3 === 2).select("doc_id", "text")
-      .unionByName(docs.filter(col("doc_id") % 15 === 10)
-        .select((col("doc_id") + 700001L).as("doc_id"), col("text")))
-    val (inDir, idxDir, outDir, ckDir) =
-      (s"$root/in", s"$root/idx", s"$root/out", s"$root/ck")
-    graft.streaming.StreamingDedup.seedIndex(index, "doc_id", "text",
-      ShingleK, idxDir)
-    def run(): Unit = graft.streaming.StatePartitions.scaledFor(s, inDir) {
-      val stream = s.readStream.schema("doc_id LONG, text STRING")
-        .option("recursiveFileLookup", "true").parquet(inDir)
-      graft.streaming.StreamingDedup.foldingIncrementalDedup(stream,
-        "doc_id", "text", ShingleK, idxDir, outDir, ckDir,
-        maxIndexFiles = 4, verifyTau = 0.5)
-        .awaitTermination()
-    }
-    b1.coalesce(1).write.parquet(s"$inDir/f1")
-    run()
-    b2.coalesce(1).write.parquet(s"$inDir/f2")
-    run()
-    val verdicts = s.read.parquet(outDir).groupBy(col("id").as("doc_id")).agg(
-      min(when(col("tier") === "exact", col("old_id"))).as("_ex"),
-      min(when(col("tier") === "near_verified", col("old_id"))).as("_nv"),
-      countDistinct(when(col("tier") === "near_verified", col("old_id")))
-        .as("n_verified"))
-    b1.select("doc_id").withColumn("batch", lit(1))
-      .unionByName(b2.select("doc_id").withColumn("batch", lit(2)))
-      .join(verdicts, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("batch"),
-        when(col("_ex").isNotNull, "exact")
-          .when(col("_nv").isNotNull, "near_verified")
-          .otherwise("novel").as("verdict"),
-        coalesce(col("_ex"), col("_nv")).as("match_id"),
-        coalesce(col("n_verified"), lit(0L)).as("n_verified"))
-      .orderBy("doc_id")
-  }
-
-  /** Gopher rule-set gate (minWords lowered to 20 for the short synthetic
-    * docs so the verdict varies): every metric and the combined `passes`
-    * recompute in SQL — exact integer-ratio fractions, unrounded
-    * threshold comparisons mirrored on both sides.
-    */
-  private def qGopherRules(s: SparkSession, dir: String): DataFrame =
-    TextOps.gopherRules(Tables.documents(s, dir), "doc_id", "text",
-      minWords = 20)
-      .select(col("doc_id"), col("n_words"),
-        rnd("mean_word_len", 4).as("mean_word_len"),
-        rnd("alpha_word_frac", 4).as("alpha_word_frac"),
-        col("n_stop_hits"),
-        rnd("bullet_line_frac", 4).as("bullet_line_frac"),
-        rnd("ellipsis_line_frac", 4).as("ellipsis_line_frac"),
-        col("n_symbols"), rnd("symbol_ratio", 4).as("symbol_ratio"),
-        col("passes"))
-      .orderBy("doc_id")
-
-  /** CCNet-style unigram LM gate: corpus-frequency token probabilities,
-    * per-doc mean log-prob (the in-domain perplexity heuristic — gate on
-    * both tails).
-    */
-  private def qUnigramLm(s: SparkSession, dir: String): DataFrame =
-    TextOps.unigramLogProb(Tables.documents(s, dir), "doc_id", "text")
-      .select(col("doc_id"), col("n_tokens"), rnd("avg_logp", 4).as("avg_logp"))
-      .orderBy("doc_id")
-
-  /** Supervised Naive Bayes language classifier over a real train/test
-    * split (doc_id % 5 picks the held-out fifth): trained distributed on
-    * the training docs' (text, lang), every held-out doc scored against
-    * every label. The oracle recomputes the Laplace-smoothed likelihoods,
-    * priors, and open-vocabulary floor from the same split, and the
-    * predicted flag ranks on ROUNDED scores (ties broken by label) so
-    * the argmax is engine-exact.
-    */
-  private def qNbClassify(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    TextOps.naiveBayesClassify(
-      docs.filter(col("doc_id") % 5 =!= 0),
-      docs.filter(col("doc_id") % 5 === 0),
-      "doc_id", "text", "lang")
-      .withColumn("score_r", rnd("score", 4))
-      .withColumn("predicted", row_number().over(
-        Window.partitionBy("doc_id")
-          .orderBy(col("score_r").desc, col("lang"))) === 1)
-      .select(col("doc_id"), col("lang").as("label"), col("score_r"),
-        col("predicted"), col("n_tokens"))
-      .orderBy("doc_id", "label")
-  }
-
-  /** CCNet head/middle/tail perplexity split under the corpus unigram LM:
-    * rounded perplexities against rounded interpolated tertiles, so the
-    * bucket assignment is engine-exact. 500 per-doc rows gate the whole
-    * score→threshold→bucket path.
-    */
-  private def qPerplexityBuckets(s: SparkSession, dir: String): DataFrame =
-    TextOps.perplexityBuckets(Tables.documents(s, dir), "doc_id", "text")
-      .orderBy("doc_id")
-
-  /** Tokenizer fertility report (tokens per character by language — the
-    * standard tokenizer-evaluation metric; high fertility on a language
-    * means the vocabulary underserves it and its documents burn budget):
-    * REAL merges-table BPE counts over the corpus, reduced per language.
-    */
-  private def qTokenizerFertility(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), length(col("text")).as("nc"))
-      .join(bpeCounts(s, dir).select(col("doc_id"), col("n_bpe_tokens")), "doc_id")
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"),
-        sum("n_bpe_tokens").as("n_tokens"),
-        sum("nc").cast("long").as("n_chars"),
-        rnd(sum(col("n_bpe_tokens")).cast("double") / sum(col("nc")), 6)
-          .as("fertility_r"))
-      .orderBy("lang")
-
-  /** Length-bucket batching report over REAL BPE token counts: per
-    * 32-token bucket (context 256), the sequence census and the padding
-    * waste batches would pay — the width/maxLen selection report.
-    */
-  private def qLengthBuckets(s: SparkSession, dir: String): DataFrame =
-    CurationOps.lengthBuckets(
-      bpeCounts(s, dir).select(col("doc_id"), col("n_bpe_tokens")),
-      "doc_id", "n_bpe_tokens", width = 32, maxLen = 256)
-      .select(col("bucket_len"), col("n_seqs"), col("sum_tokens"),
-        col("n_padded"), rnd("waste_frac", 6).as("waste_frac_r"))
-      .orderBy("bucket_len")
-
-  /** Content-defined chunking gate: boundary rule, chunk reassembly, and
-    * corpus-wide chunk dedup all recomputed by the oracle; the per-chunk
-    * md5 means a boundary off by one token changes the gated hashes.
-    */
-  private def qCdcChunks(s: SparkSession, dir: String): DataFrame = {
-    val chunks = TextOps.cdcChunks(Tables.documents(s, dir), "doc_id", "text",
-      w = 3, mod = 8)
-    val freq = chunks.groupBy("chunk_md5")
-      .agg(countDistinct(col("doc_id")).as("df"))
-    chunks.join(freq, "chunk_md5")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_chunks"),
-        sum("n_tokens").as("n_tokens"),
-        max("n_tokens").as("max_chunk"),
-        sum(when(col("df") > 1, 1L).otherwise(0L)).as("n_dup_chunks"))
-      .orderBy("doc_id")
-  }
-
-  /** Overlapping 64/48 chunking (embedding prep) over the REAL BPE token
-    * stream — chunk geometry and fingerprints in tokenizer tokens.
-    */
-  private def qChunkTokens(s: SparkSession, dir: String): DataFrame =
-    TextOps.chunkTokenArray(bpeCounts(s, dir), "doc_id", "bpe_tokens",
-      width = 64, stride = 48)
-      .orderBy("doc_id", "chunk_idx")
-
-  /** Per-doc Shannon token entropy (diversity gate). */
-  private def qTokenEntropy(s: SparkSession, dir: String): DataFrame =
-    TextOps.tokenEntropy(Tables.documents(s, dir), "doc_id", "text")
-      .select(col("doc_id"), col("n_tokens"), col("n_distinct"),
-        rnd("entropy", 4).as("entropy"))
-      .orderBy("doc_id")
-
-  /** Bigram LM score: mean log p(w|prev) over corpus bigram counts. */
-  private def qBigramLm(s: SparkSession, dir: String): DataFrame =
-    TextOps.bigramLogProb(Tables.documents(s, dir), "doc_id", "text")
-      .select(col("doc_id"), col("n_bigrams"), rnd("avg_logp", 4).as("avg_logp"))
-      .orderBy("doc_id")
-
-  /** Text quality scoring: length/token/stopword/digit features + composite. */
-  private def qTextQuality(s: SparkSession, dir: String): DataFrame =
-    TextOps.qualityFeatures(Tables.documents(s, dir), "doc_id", "text")
-      .select(col("doc_id"),
-        col("n_chars").cast("long").as("n_chars"),
-        col("n_tokens").cast("long").as("n_tokens"),
-        col("n_stopwords").cast("long").as("n_stopwords"),
-        rnd("avg_token_len", 4).as("avg_token_len"),
-        rnd("stop_ratio", 4).as("stop_ratio"),
-        rnd("digit_ratio", 4).as("digit_ratio"),
-        rnd("quality_score", 4).as("quality_score"))
-      .orderBy("doc_id")
-
-  /** Language-ID: stopword-hit argmax with fixed priority order. */
-  private def qLangId(s: SparkSession, dir: String): DataFrame =
-    TextOps.languageId(Tables.documents(s, dir), "doc_id", "text")
-      .select(col("doc_id") +:
-        TextOps.stopwords.map { case (l, _) => col(s"s_$l").cast("long").as(s"s_$l") } :+
-        col("lang_pred"): _*)
-      .orderBy("doc_id")
-
-  /** Classifier evaluation of the lang-ID predictions against the true
-    * `lang` column: per-class confusion counts and precision/recall/F1
-    * through `StatsOps.classifierReport` — the metric gate a supervised
-    * curation filter reports before it prunes a corpus. All counts are
-    * exact; the rational metrics round at the standard boundary.
-    */
-  private def qClassifierEval(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val pred = TextOps.languageId(docs, "doc_id", "text")
-      .select(col("doc_id"), col("lang_pred"))
-    StatsOps.classifierReport(
-      docs.select(col("doc_id"), col("lang")).join(pred, "doc_id"),
-      "lang", "lang_pred")
-      .select(col("label"), col("n_true"), col("n_pred"), col("tp"),
-        rnd("precision", 4).as("precision_r"),
-        rnd("recall", 4).as("recall_r"),
-        rnd("f1", 4).as("f1_r"))
-      .orderBy("label")
-  }
-
-  /** Document fingerprints: canonical-content md5 per doc. */
-  private def qDocFingerprints(s: SparkSession, dir: String): DataFrame =
-    TextOps.fingerprints(Tables.documents(s, dir), "doc_id", "text")
-      .orderBy("doc_id")
-
-  /** BPE-ish token accounting per (lang, source). */
-  private def qTokenStats(s: SparkSession, dir: String): DataFrame = {
-    val nt = Text.bpeTokenCount(col("text"))
-    Tables.documents(s, dir)
-      .groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(nt.cast("long")).as("sum_tokens"),
-        rnd(avg(nt), 4).as("avg_tokens"))
-      .orderBy("lang", "source")
-  }
-
-  /** `.k` keyword parsing as an oracle row (parse_k_file, `d3plot.py:
-    * 158-227`): keyword decks synthesized from events sums — *PART cards
-    * mapping part → section, *SECTION_SHELL cards carrying t1..t4 =
-    * (v, 2v, 3v, 4v) so the parsed thickness is their mean — parsed
-    * DISTRIBUTED per file over binaryFile. The bounded collect (6 sums)
-    * only builds the deck text.
-    */
-  private def qKfileThickness(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // residue class 4 is EXCLUDED on both sides, so the deck for part 4
-    // genuinely exercises the empty-class default (v = 1) instead of the
-    // default being dead code at every populated scale
-    val sums = Tables.events(s, dir)
-      .where(col("event_id") % 6 =!= 4)
-      .groupBy((col("event_id") % 6).as("p")).agg(sum("value").as("v"))
-      .collect().map(r => r.getLong(0) -> (math.abs(r.getDouble(1)) + 1)).toMap
-      .withDefaultValue(1.0) // empty residue class → v = 1 (oracle spine mirrors)
-    val out = freshTmpDir("graft_kfile", dir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    (0 until 3).foreach { f =>
-      val sb = new StringBuilder
-      sb.append("$ synthesized keyword deck\n")
-      (0 until 2).foreach { j =>
-        val p = f * 2 + j
-        val v = sums(p.toLong)
-        sb.append("*PART\n").append(s"part_$p\n").append(s"${p + 1} ${p + 101} 1\n")
-        sb.append("*SECTION_SHELL\n").append(s"${p + 101}\n")
-        sb.append(s"$v ${v * 2} ${v * 3} ${v * 4}\n")
-      }
-      java.nio.file.Files.write(java.nio.file.Paths.get(out, s"k$f.k"),
-        sb.toString.getBytes("US-ASCII"))
-    }
-    s.read.format("binaryFile").option("pathGlobFilter", "*.k").load(out)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val stem = path.split("/").last.stripSuffix(".k")
-        graft.sources.D3PlotSource.parseKFile(new String(bytes, "US-ASCII"))
-          .toSeq.map { case (pid, t) => (stem, pid, t) }
-      }.toDF("mesh_id", "part_id", "thickness")
-      .select(col("mesh_id"), col("part_id"), rnd("thickness", 2).as("thickness"))
-      .orderBy("mesh_id", "part_id")
-  }
-
-  /** Cycle-pad a group's event samples to exactly `n`: the multimodal
-    * fixtures have fixed payload geometry (image dims, DFT length, box
-    * parameters), so a group smaller than `n` — which only happens at
-    * tiny scale factors — wraps around deterministically instead of
-    * failing the whole query; a group with >= n samples is take(n),
-    * unchanged. The oracle mirrors this with a `p % count` position
-    * join (see [[cycCte]]), so both engines see identical samples at
-    * every scale factor.
-    */
-  private def cyclePad[T: scala.reflect.ClassTag](rows: Array[T],
-                                                  n: Int): Array[T] =
-    if (rows.length >= n) rows.take(n)
-    else Array.tabulate(n)(i => rows(i % rows.length))
-
-  /** Real multimodal decode end-to-end: per user group, a 16-bit PCM WAV
-    * (all the group's quantized event values; RMS and peak are
-    * order-independent, and the squared sums are integer-valued doubles
-    * below 2^53, so they are EXACT on both engines), a 16×25 BMP (the
-    * first 400 samples by event_id, value-derived channels), and a 20×20
-    * RGBA PNG (same 400 samples, alpha from a fourth multiplier — the
-    * zlib inflate + unfilter path) are synthesized on executors, decoded
-    * back by the pure-JVM codecs in `functions/Media`, and reduced.
-    * Quantization uses floor, which is bit-deterministic across engines
-    * (round's tie rule is not); both image codecs are lossless, so the
-    * channel means recompute exactly from events.
-    */
-  private def qMediaDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    val payloads = quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2) // event_id order fixes the image
-        val smp = cyclePad(rows, 400)
-        val wav = graft.functions.Media.renderWav(8000, 1, rows.map(_._3))
-        def ch(v: Int, m: Int): Int = (((v.toLong * m) % 256 + 256) % 256).toInt
-        val px = smp.map(r => (ch(r._3, 1), ch(r._3, 3), ch(r._3, 7)))
-        val bmp = graft.functions.Media.renderBmp(16, 25, px)
-        val rgba = smp.flatMap(r =>
-          Seq(ch(r._3, 1), ch(r._3, 3), ch(r._3, 7), ch(r._3, 11)))
-        val png = graft.functions.Media.renderPng(20, 20, 4, rgba)
-        (g, wav, bmp, png)
-      }.toDF("g", "wav", "bmp", "png")
-    val wavF = MultimodalOps.wavFeatures(payloads, "g", "wav")
-    val bmpF = MultimodalOps.bmpFeatures(payloads, "g", "bmp")
-    val pngF = MultimodalOps.pngFeatures(payloads, "g", "png")
-      .select(col("g"), col("width").as("png_w"), col("height").as("png_h"),
-        col("n_channels").as("png_ch"), rnd("mean_a", 4).as("mean_a"))
-    wavF.join(bmpF, "g").join(pngF, "g")
-      .select(col("g"), col("sample_rate"), col("n_channels"), col("n_frames"),
-        rnd("rms", 4).as("rms"), col("peak"), col("width"), col("height"),
-        rnd("mean_r", 4).as("mean_r"), rnd("mean_g", 4).as("mean_g"),
-        rnd("mean_b", 4).as("mean_b"),
-        col("png_w"), col("png_h"), col("png_ch"), col("mean_a"))
-      .orderBy("g")
-  }
-
-  /** Same materialized-constant contract as [[AnnPlanesDir]], for the DFT
-    * twiddle vectors (a pure function of the frame length).
-    */
-  private val DftTwiddlesDir = s"$MatRoot/dft_twiddles"
-
-  /** Audio spectral analysis end-to-end: per group a mono PCM WAV is
-    * synthesized from the first 256 quantized events, decoded back, and
-    * put through the windowed DFT (4 frames × 64 samples). The twiddle
-    * vectors materialize so DuckDB re-runs the transform itself —
-    * `list_dot_product` reproduces the identical left-to-right double
-    * folds — and recomputes energy, spectral centroid, and the peak bin
-    * from the event stream, not from our output.
-    */
-  private def qAudioSpectral(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    DriverParquet.write(s, DftTwiddlesDir,
-      Seq("k" -> IntT, "re_w" -> DoubleArrT, "im_w" -> DoubleArrT),
-      MultimodalOps.dftTwiddles(64).map { case (k, re, im) => Seq(k, re, im) })
-    MultimodalOps.audioSpectral(audioCorpus(s, dir, withCopies = false),
-      "g", "wav", frameLen = 64, nFrames = 4)
-      .select(col("g"), col("frame"),
-        rnd("energy", 4).as("energy_r"), rnd("centroid", 4).as("centroid_r"),
-        col("peak_bin"), rnd("peak_mag", 4).as("peak_mag_r"))
-      .orderBy("g", "frame")
-  }
-
-  /** The 10 base WAV clips shared by the spectral queries, optionally
-    * extended per base with an EXACT copy (g+100) and a one-sample
-    * perturbed copy (g+200, sample 0 shifted +50 — a few fingerprint
-    * bits at most) for the near-dup gate.
-    */
-  private def audioCorpus(s: SparkSession, dir: String,
-                          withCopies: Boolean): DataFrame = {
-    import s.implicits._
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .flatMapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2) // event_id order fixes the signal
-        val sm = cyclePad(rows, 256).map(_._3)
-        val base = graft.functions.Media.renderWav(8000, 1, sm)
-        if (!withCopies) Seq((g, base))
-        else {
-          val pert = sm.clone()
-          pert(0) = math.min(pert(0) + 50, 32767)
-          Seq((g, base), (g + 100L, base),
-            (g + 200L, graft.functions.Media.renderWav(8000, 1, pert)))
-        }
-      }.toDF("g", "wav")
-  }
-
-  /** Chromaprint-style fingerprints over the 10 base clips: the oracle
-    * replays the DFT (materialized twiddles), the rounded band energies,
-    * and the frame-gradient bit packing.
-    */
-  private def qAudioFingerprint(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    DriverParquet.write(s, DftTwiddlesDir,
-      Seq("k" -> IntT, "re_w" -> DoubleArrT, "im_w" -> DoubleArrT),
-      MultimodalOps.dftTwiddles(64).map { case (k, re, im) => Seq(k, re, im) })
-    MultimodalOps.audioFingerprint(
-      audioCorpus(s, dir, withCopies = false), "g", "wav")
-      .orderBy("g")
-  }
-
-  /** Banded-Hamming audio near-dup pairs over the 30-clip corpus
-    * (bases + exact copies + one-sample perturbations): engine runs the
-    * band-bucketed join, oracle brute-forces Hamming over the
-    * materialized fingerprint table — equality is the pigeonhole recall
-    * proof, as in q_phash_pairs.
-    */
-  private def qAudioFpPairs(s: SparkSession, dir: String): DataFrame = {
-    val payloads = audioCorpus(s, dir, withCopies = true)
-    MultimodalOps.audioFingerprint(payloads, "g", "wav")
-      .coalesce(1).write.mode("overwrite").parquet(AudioFpDir)
-    MultimodalOps.audioNearDupPairs(payloads, "g", maxHamming = 6,
-      payloadCol = "wav")
-      .orderBy("ia", "ib")
-  }
-
-  /** Baseline JPEG decode end-to-end: per group, a 48×48 YCbCr 4:4:4 image
-    * (6×6 grid of flat 8×8 blocks, restart markers every block row) and a
-    * 16×16 grayscale image are ENCODED from quantized event values, then
-    * decoded back through the full DCT/Huffman path (`Media.decodeJpeg`).
-    * Flat blocks are DC-only and the DC quant step (8) divides the
-    * level-shifted block DC exactly, so decode is bit-exact and the
-    * per-channel means are SQL-expressible from the event stream itself.
-    */
-  private def qJpegDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    val payloads = quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2) // event_id order fixes the images
-        val smp = cyclePad(rows, 60) // positions 1..60 drive all four images
-        def ch(v: Int, m: Int): Int = (((v.toLong * m) % 256 + 256) % 256).toInt
-        val bs = smp.take(36).map(_._3) // 6×6 flat blocks → 48×48 color
-        val color = new Array[Int](48 * 48 * 3)
-        for (y <- 0 until 48; x <- 0 until 48) {
-          val v = bs((y / 8) * 6 + x / 8)
-          val o = (y * 48 + x) * 3
-          color(o) = ch(v, 5); color(o + 1) = ch(v, 9); color(o + 2) = ch(v, 13)
-        }
-        val gs = smp.slice(36, 40).map(_._3) // 2×2 flat blocks → 16×16 gray
-        val gray = new Array[Int](16 * 16)
-        for (y <- 0 until 16; x <- 0 until 16)
-          gray(y * 16 + x) = ch(gs((y / 8) * 2 + x / 8), 1)
-        // 4:2:0: 32×32 = 2×2 MCUs; per-MCU constant chroma + per-8×8 luma
-        // keep the box filter and DCT exact through the subsampled path
-        val cs = smp.slice(40, 44).map(_._3)  // 4 MCU chroma seeds
-        val ls = smp.slice(44, 60).map(_._3)  // 16 luma blocks
-        val sub = new Array[Int](32 * 32 * 3)
-        for (y <- 0 until 32; x <- 0 until 32) {
-          val o = (y * 32 + x) * 3
-          sub(o) = ch(ls((y / 8) * 4 + x / 8), 3)
-          val m = (y / 16) * 2 + x / 16
-          sub(o + 1) = ch(cs(m), 7); sub(o + 2) = ch(cs(m), 11)
-        }
-        (g, graft.functions.Media.renderJpeg(48, 48, 3, color, restartInterval = 6),
-          graft.functions.Media.renderJpeg(16, 16, 1, gray),
-          graft.functions.Media.renderJpeg(32, 32, 3, sub, subsample420 = true),
-          // SOF2 progressive render of the same flat-block color image:
-          // DC first+refine scans reconstruct the DC exactly, AC scans are
-          // pure EOB runs, so the decode is bit-exact like baseline and
-          // shares the same SQL means
-          graft.functions.Media.renderJpegProgressive(48, 48, 3, color))
-      }.toDF("g", "jpg", "gjpg", "sjpg", "pjpg")
-    val colorF = MultimodalOps.jpegFeatures(payloads, "g", "jpg")
-    val grayF = MultimodalOps.jpegFeatures(payloads, "g", "gjpg")
-      .select(col("g"), col("width").as("g_w"), col("height").as("g_h"),
-        col("n_channels").as("g_ch"), rnd("mean_y", 4).as("g_mean"))
-    val subF = MultimodalOps.jpegFeatures(payloads, "g", "sjpg")
-      .select(col("g"), col("width").as("s_w"), col("height").as("s_h"),
-        rnd("mean_y", 4).as("s_mean_y"), rnd("mean_cb", 4).as("s_mean_cb"),
-        rnd("mean_cr", 4).as("s_mean_cr"))
-    val progF = MultimodalOps.jpegFeatures(payloads, "g", "pjpg")
-      .select(col("g"), col("width").as("p_w"), col("height").as("p_h"),
-        rnd("mean_y", 4).as("p_mean_y"), rnd("mean_cb", 4).as("p_mean_cb"),
-        rnd("mean_cr", 4).as("p_mean_cr"))
-    colorF.join(grayF, "g").join(subF, "g").join(progF, "g")
-      .select(col("g"), col("width"), col("height"), col("n_channels"),
-        rnd("mean_y", 4).as("mean_y"), rnd("mean_cb", 4).as("mean_cb"),
-        rnd("mean_cr", 4).as("mean_cr"),
-        col("g_w"), col("g_h"), col("g_ch"), col("g_mean"),
-        col("s_w"), col("s_h"), col("s_mean_y"), col("s_mean_cb"),
-        col("s_mean_cr"),
-        col("p_w"), col("p_h"), col("p_mean_y"), col("p_mean_cb"),
-        col("p_mean_cr"))
-      .orderBy("g")
-  }
-
-  /** Video pixel decode end-to-end: per group, 24 single-MB 16×16 H.264
-    * IDR frames from quantized event values — every 4th frame I_PCM
-    * (lossless), the rest flat Intra16x16-DC at qp 30 so the full CAVLC +
-    * Hadamard-DC + quant/dequant + inverse-transform chain reduces to a
-    * closed-form integer recurrence the DuckDB oracle mirrors literally.
-    * The decode (`MultimodalOps.videoFrames` → `functions/H264`) is the
-    * real bitstream path: Annex-B split, SPS/PPS parse, slice decode,
-    * entropy decode, prediction, reconstruction.
-    */
-  private def qVideoFrames(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.H264
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("long").as("v"))
-    val payloads = quant.as[(Long, Long, Long)].groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        def ch(v: Long, m: Long): Int = (((v * m) % 256 + 256) % 256).toInt
-        val frames = cyclePad(rows, 24).map { case (_, _, v) =>
-          H264.Yuv(16, 16, Array.fill(256)(ch(v, 1)),
-            Array.fill(64)(ch(v, 3)), Array.fill(64)(ch(v, 7)))
-        }
-        val (bytes, _) = H264.encodeStream(frames.toIndexedSeq, 30,
-          (i, _, _) => if (i % 4 == 0) H264.MbPcm else H264.MbI16(2, 0))
-        (g, bytes)
-      }.toDF("g", "payload")
-    MultimodalOps.videoFrames(payloads, "g")
-      .orderBy("g", "frame_idx")
-  }
-
-  /** Image resize end-to-end: 16×16 BMPs from quantized event values,
-    * box-average downscale ×4 (exact integer block means), RE-ENCODE,
-    * decode again — and gate on position-weighted per-channel checksums
-    * of the resized pixels, which the oracle recomputes pixel-for-pixel
-    * from the event stream (Σ block // 16 per 4×4 block, then Σ pos·c).
-    */
-  private def qImageResize(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    val payloads = quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        def ch(v: Int, m: Int): Int = (((v.toLong * m) % 256 + 256) % 256).toInt
-        val px = cyclePad(rows, 256)
-          .map(r => (ch(r._3, 1), ch(r._3, 3), ch(r._3, 7)))
-        (g, graft.functions.Media.renderBmp(16, 16, px))
-      }.toDF("g", "bmp")
-    MultimodalOps.resizeBox(payloads, "g", factor = 4, "bmp")
-      .select(col("g"), col("in_w"), col("in_h"), col("out_w"), col("out_h"),
-        col("resized"))
-      .as[(Long, Int, Int, Int, Int, Array[Byte])]
-      .map { case (g, iw, ih, ow, oh, bytes) =>
-        val m = graft.functions.Media.decodeBmp(bytes)
-        var (wr, wg, wb) = (0L, 0L, 0L)
-        m.pixels.zipWithIndex.foreach { case ((r, gg, b), p) =>
-          wr += p.toLong * r; wg += p.toLong * gg; wb += p.toLong * b
-        }
-        (g, iw, ih, ow, oh, wr, wg, wb)
-      }
-      .toDF("g", "in_w", "in_h", "out_w", "out_h", "wsum_r", "wsum_g", "wsum_b")
-      .orderBy("g")
-  }
-
-  /** Audio peak normalization end-to-end: the 256-sample WAVs scale to
-    * a 30000 target peak in exact integer rational arithmetic, re-encode,
-    * decode — gated on the input peak and the position-weighted checksum
-    * of the normalized stream, both recomputed from the event stream.
-    */
-  private def qAudioNormalize(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    val payloads = quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        (g, graft.functions.Media.renderWav(8000, 1,
-          cyclePad(rows, 256).map(_._3)))
-      }.toDF("g", "wav")
-    MultimodalOps.normalizeAudioPeak(payloads, "g", targetPeak = 30000, "wav")
-      .select(col("g"), col("peak_in"), col("normalized"))
-      .as[(Long, Int, Array[Byte])]
-      .map { case (g, peak, bytes) =>
-        val w = graft.functions.Media.decodeWav(bytes)
-        var ws = 0L
-        w.samples.zipWithIndex.foreach { case (sm, p) => ws += p.toLong * sm }
-        (g, peak, ws)
-      }
-      .toDF("g", "peak_in", "wsum")
-      .orderBy("g")
-  }
-
-  /** Image orientation end-to-end: 16×16 BMPs run through flip_h /
-    * flip_v / rot90, each re-encoded and decoded again; the position-
-    * weighted red checksums gate the PERMUTATIONS exactly (a mean would
-    * be orientation-blind), with the oracle recomputing each mapped
-    * position from the event stream.
-    */
-  private def qImageOrient(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    val payloads = quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        def ch(v: Int, m: Int): Int = (((v.toLong * m) % 256 + 256) % 256).toInt
-        val px = cyclePad(rows, 256)
-          .map(r => (ch(r._3, 1), ch(r._3, 3), ch(r._3, 7)))
-        (g, graft.functions.Media.renderBmp(16, 16, px))
-      }.toDF("g", "bmp")
-    def wsum(op: String, name: String) = {
-      MultimodalOps.orientImage(payloads, "g", op, "bmp")
-        .select(col("g"), col("oriented"))
-        .as[(Long, Array[Byte])]
-        .map { case (g, bytes) =>
-          val m = graft.functions.Media.decodeBmp(bytes)
-          var ws = 0L
-          m.pixels.zipWithIndex.foreach { case ((r, _, _), p) =>
-            ws += p.toLong * r
-          }
-          (g, ws)
-        }.toDF("g", name)
-    }
-    wsum("flip_h", "ws_flip_h")
-      .join(wsum("flip_v", "ws_flip_v"), "g")
-      .join(wsum("rot90", "ws_rot90"), "g")
-      .orderBy("g")
-  }
-
-  /** Audio resample end-to-end: 256-sample mono WAVs from quantized
-    * event values, box decimation ×4 (floor-division block means — the
-    * SQL `//` convention, exact on negative PCM too), RE-ENCODE at
-    * 2 kHz, decode again — gated on the position-weighted checksum of
-    * the resampled stream, recomputed sample-for-sample by the oracle.
-    */
-  private def qAudioResample(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    val payloads = quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        (g, graft.functions.Media.renderWav(8000, 1,
-          cyclePad(rows, 256).map(_._3)))
-      }.toDF("g", "wav")
-    MultimodalOps.resampleAudioBox(payloads, "g", factor = 4, "wav")
-      .select(col("g"), col("in_rate"), col("out_rate"), col("n_in"),
-        col("n_out"), col("resampled"))
-      .as[(Long, Int, Int, Int, Int, Array[Byte])]
-      .map { case (g, ir, or, ni, no, bytes) =>
-        val w = graft.functions.Media.decodeWav(bytes)
-        var ws = 0L
-        w.samples.zipWithIndex.foreach { case (sm, p) => ws += p.toLong * sm }
-        (g, ir, or, ni, no, ws)
-      }
-      .toDF("g", "in_rate", "out_rate", "n_in", "n_out", "wsum")
-      .orderBy("g")
-  }
-
-  /** GIF decode end-to-end: per group, a two-frame animated GIF (frame 0
-    * plain, frame 1 INTERLACED, distinct GCE delays) is encoded from
-    * quantized event values over a 64-color palette, then decoded back
-    * through the full LZW + deinterlace path (`Gif.decode`). Palette
-    * entries are modular ramps of the index, so per-channel means AND the
-    * position-weighted red checksum (the deinterlace gate — means are
-    * row-permutation invariant, Σ pos·r is not) are SQL-expressible from
-    * the event stream itself.
-    */
-  private def qGifDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    val palette = Array.tabulate(64)(i => ((i * 5) % 256, (i * 9) % 256,
-      (i * 13) % 256))
-    val payloads = quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2) // event_id order fixes the frames
-        val smp = cyclePad(rows, 512)
-        def idx(v: Int): Int = ((v % 64) + 64) % 64
-        val f0 = smp.take(256).map(r => idx(r._3))
-        val f1 = smp.slice(256, 512).map(r => idx(r._3))
-        (g, graft.functions.Gif.render(16, 16, palette, Seq(f0, f1),
-          interlaced = Seq(false, true), delaysCs = Seq(4, 7)))
-      }.toDF("g", "gif")
-    MultimodalOps.gifFeatures(payloads, "g", "gif")
-      .select(col("g"), col("frame"), col("width"), col("height"),
-        col("n_colors"), col("interlaced"), col("delay_cs"),
-        rnd("mean_r", 4).as("mean_r"), rnd("mean_g", 4).as("mean_g"),
-        rnd("mean_b", 4).as("mean_b"), col("wsum_r"))
-      .orderBy("g", "frame")
-  }
-
-  /** MP4/ISO-BMFF container parse end-to-end: per group, a two-track MP4
-    * (avc1 video + mp4a audio) is synthesized box-by-box from quantized
-    * event values — odd groups use the 64-bit version-1 header variants
-    * and co64 offsets, the audio track the constant-size stsz form — then
-    * parsed back distributed (`Mp4.parse`). Every output field (geometry,
-    * durations, sample/keyframe/chunk census, byte totals) is recomputed
-    * by the oracle from the event stream itself, so the box walk is
-    * checked against the parameters, not against its own output.
-    */
-  private def qMp4Meta(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.Mp4
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    val payloads = quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2) // event_id order fixes the params
-        val smp = cyclePad(rows, 71) // max position: sizes rn 9 .. 8+63
-        def m(i: Int, k: Int): Int = ((smp(i - 1)._3 % k) + k) % k // 1-indexed rn
-        val vw = 16 * (1 + m(1, 16)); val vh = 8 * (1 + m(2, 32))
-        val n = 24 + m(3, 40); val d = 100 + m(4, 50)
-        val ks = 1 + m(5, 7); val cs = 1 + m(6, 9)
-        val foff = 4096L + 16 * m(7, 64)
-        val sizes = Array.tabulate(n)(i => 200L + m(9 + i, 800)) // rn 9 .. 8+n
-        val ach = 1 + m(1, 2); val arate = 8000 * (1 + m(2, 5))
-        val asz = 128L + m(3, 128); val an = 40L + m(4, 60)
-        val aspc = 1 + m(5, 11); val afoff = 8192L + 16 * m(6, 64)
-        val v1 = g % 2 == 1
-        val video = Mp4.TrackSpec(1L, "vide", "avc1", vw, vh, 0, 0,
-          600L, d.toLong, Right(sizes), Some(ks), cs, foff, 512L, v1)
-        val audio = Mp4.TrackSpec(2L, "soun", "mp4a", 0, 0, ach, arate,
-          arate.toLong, 256L, Left((asz, an)), None, aspc, afoff, 512L, v1 = false)
-        (g, Mp4.render("isom", 1000L, 500L + m(7, 5000), Seq(video, audio), v1))
-      }.toDF("g", "mp4")
-    MultimodalOps.mp4Meta(payloads, "g", "mp4")
-      .orderBy("g", "track_id")
-  }
-
-  /** AVC/H.264 SPS gate: per group a baseline-profile sequence parameter
-    * set is rendered from event-derived geometry (macroblock counts,
-    * frame-crop offsets, level), then parsed back DISTRIBUTED through the
-    * exp-Golomb reader — codec-level width/height must reproduce the
-    * §7.4.2.1.1 arithmetic the oracle recomputes from the raw parameters.
-    * This is the bitstream-truth layer under q_mp4_meta's container walk.
-    */
-  private def qAvcSps(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.Avc
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    val payloads = quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        val smp = cyclePad(rows, 8)
-        def m(i: Int, k: Int): Int = ((smp(i - 1)._3 % k) + k) % k
-        val sps = Avc.Sps(profileIdc = 66, levelIdc = 10 + m(1, 41),
-          widthMbs = 2 + m(2, 39), heightMapUnits = 2 + m(3, 29),
-          frameMbsOnly = m(4, 2) == 0,
-          cropL = m(5, 4), cropR = m(6, 4), cropT = m(7, 2), cropB = m(8, 2))
-        (g, Avc.renderSps(sps))
-      }.toDF("g", "sps")
-    payloads.as[(Long, Array[Byte])].map { case (g, nal) =>
-      val p = graft.functions.Avc.parseSps(nal)
-      (g, p.profileIdc, p.levelIdc, p.width, p.height,
-        if (p.frameMbsOnly) 1 else 0)
-    }.toDF("g", "profile", "level", "width", "height", "frame_mbs_only")
-      .orderBy("g")
-  }
-
-  /** Compressed-audio metadata gate: per group a FLAC STREAMINFO stream
-    * and an MPEG-1 Layer III frame are synthesized from event-derived
-    * parameters and parsed back distributed — geometry, rates, duration,
-    * and the Layer III frame-length arithmetic all recomputed by the
-    * oracle from the raw parameters.
-    */
-  private def qAudioMeta(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.AudioMeta
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    val rates = Array(8000, 16000, 22050, 24000, 32000, 44100, 48000, 96000)
-    val kbps = Array(32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-    val payloads = quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        val smp = cyclePad(rows, 8)
-        def m(i: Int, k: Int): Int = ((smp(i - 1)._3 % k) + k) % k
-        val flac = AudioMeta.renderFlacStreamInfo(AudioMeta.FlacInfo(
-          minBlock = 4096, maxBlock = 4096, sampleRate = rates(m(1, 8)),
-          channels = 1 + m(2, 8), bitsPerSample = if (m(3, 2) == 0) 16 else 24,
-          totalSamples = 1000L + m(4, 100000)))
-        val mp3 = AudioMeta.renderMp3Frame(AudioMeta.Mp3Frame(
-          bitrateKbps = kbps(m(5, 14)), sampleRate = Array(44100, 48000, 32000)(m(6, 3)),
-          padding = m(7, 2) == 1, channels = 1 + m(8, 2)))
-        (g, flac, mp3)
-      }.toDF("g", "flac", "mp3")
-    payloads.as[(Long, Array[Byte], Array[Byte])].map { case (g, fb, mb) =>
-      val f = AudioMeta.parseFlacStreamInfo(fb)
-      val m3 = AudioMeta.parseMp3Frame(mb)
-      (g, f.sampleRate, f.channels, f.bitsPerSample, f.totalSamples,
-        f.durationSec,
-        m3.bitrateKbps, m3.sampleRate, m3.channels, m3.frameBytes.toLong)
-    }.toDF("g", "f_rate", "f_channels", "f_bits", "f_samples", "dur",
-      "m_bitrate", "m_rate", "m_channels", "m_frame_bytes")
-      // the shared eps-stabilized rounding (HALF_UP on both engines), not
-      // a typed-map rint (HALF_EVEN) — boundary halves must agree
-      .select(col("g"), col("f_rate"), col("f_channels"), col("f_bits"),
-        col("f_samples"), rnd("dur", 4).as("dur_r"), col("m_bitrate"),
-        col("m_rate"), col("m_channels"), col("m_frame_bytes"))
-      .orderBy("g")
-  }
-
-  /** Multimodal binary plumbing: opaque payload + frame-sampled window
-    * fingerprints (pure binary column arithmetic; ASCII text ⇒ the DuckDB
-    * VARCHAR mirror hashes the same bytes).
-    */
-  private def qMultimodalFrames(s: SparkSession, dir: String): DataFrame =
-    MultimodalOps.frameSample(
-      MultimodalOps.withPayload(Tables.documents(s, dir), "doc_id", "text"),
-      "doc_id", 4, 32)
-      .select(col("doc_id"), col("n_bytes").cast("long").as("n_bytes"),
-        col("frame"), col("off"), col("frame_md5"))
-      .orderBy("doc_id", "frame")
-
-  /** WebDataset tar-shard round trip: per group, the first 40 events become
-    * samples of two members each (`<key>.txt` decimal text, `<key>.bin` a
-    * repeated byte whose value/length derive from v), assembled into one
-    * `.tar` (even g) or `.tar.gz` (odd g) shard by [[graft.sinks.TarSink]]
-    * and read back by [[graft.sources.TarSource.readSamples]] — sample
-    * grouping happens inside the per-shard parse task, zero shuffles. The
-    * oracle recomputes every aggregate (member/byte censuses, the decimal
-    * values parsed back out of the txt payloads, the bin byte checksum)
-    * from the events table, so the cycle is checked against the
-    * parameters, not its own output. Member payloads are built with pure
-    * column expressions (encode / unhex∘repeat∘hex) — codegen end to end.
-    */
-  private def qWebdataset(s: SparkSession, dir: String): DataFrame = {
-    val out = freshTmpDir("graft_wds", dir)
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("long").as("v"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("g").orderBy("event_id")
-    val ranked = quant.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 40)
-      .withColumn("key", format_string("%02d-%04d", col("g"), col("rn")))
-      .withColumn("shard", concat(lit("shard-"), col("g"),
-        when(col("g") % 2 === 0, lit(".tar")).otherwise(lit(".tar.gz"))))
-    val txt = ranked.select(col("shard"),
-      concat(col("key"), lit(".txt")).as("name"),
-      encode(col("v").cast("string"), "UTF-8").as("payload"),
-      (col("rn") * 2).as("seq"))
-    val bin = ranked.select(col("shard"),
-      concat(col("key"), lit(".bin")).as("name"),
-      unhex(repeat(lpad(hex(pmod(col("v"), lit(256))), 2, "0"),
-        (pmod(abs(col("v")), lit(13)) + 1).cast("int"))).as("payload"),
-      (col("rn") * 2 + 1).as("seq"))
-    TarSink.writeShards(txt.unionByName(bin), out, mtime = 1700000000L).count()
-    val samples = TarSource.readSamples(s, s"$out/*")
-    val m = samples.select(col("shard"), col("key"),
-        explode(arrays_zip(col("exts"), col("payloads"))).as("z"))
-      .select(col("shard"), col("key"),
-        col("z.exts").as("ext"), col("z.payloads").as("payload"))
-    m.groupBy(regexp_extract(col("shard"), "shard-(\\d+)", 1)
-        .cast("int").as("g"))
-      .agg(
-        countDistinct(col("key")).as("n_samples"),
-        count(lit(1)).as("n_members"),
-        sum(when(col("ext") === "txt", length(col("payload")))
-          .otherwise(lit(0L))).as("txt_chars"),
-        sum(when(col("ext") === "txt",
-          decode(col("payload"), "UTF-8").cast("long"))).as("sum_v"),
-        sum(when(col("ext") === "bin", length(col("payload")))
-          .otherwise(lit(0L))).as("bin_bytes"),
-        sum(when(col("ext") === "bin",
-          conv(hex(substring(col("payload"), 1, 1)), 16, 10).cast("long")
-            * length(col("payload"))).otherwise(lit(0L))).as("bin_sum"))
-      .orderBy("g")
-  }
-
-  /** Shard-plan gate: deterministic size-aware shard assignment over the
-    * document corpus (sample size = n_chars + a fixed per-member
-    * overhead), reduced to per-shard censuses. The oracle replays the
-    * exclusive running sum as one SQL window — the two-pass distributed
-    * form must agree with it exactly.
-    */
-  private def qShardPlan(s: SparkSession, dir: String): DataFrame =
-    TarSink.planShards(
-      Tables.documents(s, dir)
-        .select(col("doc_id"), (col("n_chars") + lit(1024L)).as("sz")),
-      "doc_id", "sz", targetBytes = 65536L)
-      .groupBy("shard_id")
-      .agg(count(lit(1)).as("n_samples"),
-        sum(col("sz")).as("n_bytes"),
-        min(col("doc_id")).as("first_doc"),
-        max(col("doc_id")).as("last_doc"))
-      .orderBy("shard_id")
-
-  /** Deterministic HTML page synthesized from a document row — the shared
-    * fixture for the WARC round trip and the HTML-extraction gate. Built
-    * with pure column concat so the oracle rebuilds the identical string;
-    * exercises comments, title with entities, style and script blocks
-    * (the script contains `<`/`>`/a fake `</div>` literal — the classic
-    * strip-tags traps), anchors with query-string hrefs around the corpus
-    * word `dup`, and the common entity set.
-    */
-  private def htmlFixture: org.apache.spark.sql.Column = concat(
-    lit("<html><!-- gen "), col("doc_id"), lit(" --><head><title> Doc "),
-    col("doc_id"), lit(" &amp; "), col("lang"),
-    lit(" </title><style>p { color: #333; }</style>" +
-      "<script type=\"text/javascript\">if (1 < 2) { var x = \"</div>\"; }" +
-      "</script></head><body><h1>Doc "),
-    col("doc_id"), lit("</h1><p>"),
-    replace(col("text"), lit("dup"),
-      concat(lit("<a href=\"/t?id="), col("doc_id"),
-        lit("&amp;utm_source=x\">dup</a>"))),
-    lit("</p><p>&quot;tail&quot; &#39;q&#39;&nbsp;end</p></body></html>"))
-
-  /** The same fixture as [[htmlFixture]], as a DuckDB SQL expression over a
-    * `documents` row (doc_id, lang, text).
-    */
-  private val htmlFixtureSql: String =
-    """'<html><!-- gen ' || CAST(doc_id AS VARCHAR) || ' --><head><title> Doc ' ||
-      |  CAST(doc_id AS VARCHAR) || ' &amp; ' || lang ||
-      |  ' </title><style>p { color: #333; }</style>' ||
-      |  '<script type="text/javascript">if (1 < 2) { var x = "</div>"; }' ||
-      |  '</script></head><body><h1>Doc ' || CAST(doc_id AS VARCHAR) ||
-      |  '</h1><p>' ||
-      |  replace(text, 'dup', '<a href="/t?id=' || CAST(doc_id AS VARCHAR) ||
-      |    '&amp;utm_source=x">dup</a>') ||
-      |  '</p><p>&quot;tail&quot; &#39;q&#39;&nbsp;end</p></body></html>'""".stripMargin
-
-  /** WARC (ISO 28500) round trip — the container a web-text curation
-    * pipeline STARTS from: each document becomes an HTTP `response`
-    * capture ([[htmlFixture]] as entity body, 404s for every 11th doc),
-    * four crawl files (alternating plain / per-record-gzip-member
-    * compression) written by [[graft.sinks.WarcSink]] and read back by
-    * [[graft.sources.WarcSource.readRecords]] — one task per crawl file
-    * both ways, bytes never shuffle. The oracle recomputes every aggregate
-    * (record/status censuses, HTTP-wrapped content lengths INCLUDING the
-    * status-line/digit arithmetic, body byte hashes, doc ids parsed back
-    * out of the target URIs) from the documents table, so the cycle is
-    * checked against the parameters, not its own output.
-    */
-  private def qWarcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = freshTmpDir("graft_warc", dir)
-    val recs = Tables.documents(s, dir).select(
-      concat(lit("crawl-"), col("doc_id") % 4,
-        when(col("doc_id") % 2 === 0, lit(".warc")).otherwise(lit(".warc.gz")))
-        .as("file"),
-      col("doc_id").as("seq"), lit("response").as("warc_type"),
-      concat(lit("https://ex"), col("doc_id") % 7, lit(".com/doc/"),
-        col("doc_id")).as("uri"),
-      when(col("doc_id") % 11 === 0, lit(404)).otherwise(lit(200)).as("status"),
-      lit("text/html").as("mime"),
-      encode(htmlFixture, "UTF-8").as("payload"))
-    graft.sinks.WarcSink.writeFiles(recs, out,
-      date = "2026-01-01T00:00:00Z").count()
-    graft.sources.WarcSource.readRecords(s, s"$out/*")
-      .groupBy(regexp_extract(col("file"), "crawl-(\\d+)", 1).cast("int").as("g"))
-      .agg(
-        count(lit(1)).as("n_records"),
-        sum(when(col("warc_type") === "response", 1L).otherwise(0L)).as("n_resp"),
-        sum(when(col("http_status") === 200, 1L).otherwise(0L)).as("n_ok"),
-        sum(when(col("http_status") === 404, 1L).otherwise(0L)).as("n_404"),
-        // the warcinfo record has no target URI — cast only response rows
-        // (Spark 4 ANSI mode rejects casting '' to a number)
-        sum(when(col("warc_type") === "response",
-          regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1).cast("long")))
-          .as("sum_doc"),
-        sum(when(col("warc_type") === "response", length(col("body")))
-          .otherwise(lit(0))).cast("long").as("body_bytes"),
-        sum(when(col("warc_type") === "response", col("content_length")))
-          .as("content_len"),
-        sum(when(col("warc_type") === "response",
-          conv(substring(md5(col("body")), 1, 8), 16, 10).cast("long"))
-          .otherwise(lit(0L))).as("body_hash"))
-      .orderBy("g")
-  }
-
-  /** HTML→text extraction gate over [[htmlFixture]] pages:
-    * [[graft.operators.TextOps.htmlExtract]]'s full regexp chain (comment/
-    * script/style drop, title and anchor-text capture, tag strip, entity
-    * decode, whitespace collapse, link density) replayed step-for-step by
-    * the oracle — both engines run the same RE2-safe patterns, so this
-    * pins the extraction ALGORITHM, not just row counts.
-    */
-  private def qHtmlExtract(s: SparkSession, dir: String): DataFrame =
-    TextOps.htmlExtract(
-      Tables.documents(s, dir).select(col("doc_id"), htmlFixture.as("html")),
-      "doc_id", "html")
-      .select(col("doc_id"), col("title"), col("n_links"),
-        col("n_text_chars"), col("link_density"), col("text_md5"))
-      .orderBy("doc_id")
-
-  /** URL canonicalization gate: three deterministic URL shapes per
-    * documents row (uppercase scheme/host + default port + tracking params
-    * + fragment; userinfo + non-default port + doubled path slashes +
-    * mixed params; bare host with no path/query), normalized by
-    * [[graft.operators.TextOps.urlNormalize]]; the oracle replays the
-    * same facet regexes and parameter filtering in SQL.
-    */
-  private def qUrlNormalize(s: SparkSession, dir: String): DataFrame = {
-    val url = when(col("doc_id") % 3 === 0,
-        concat(lit("HTTPS://WWW.Example"), col("doc_id") % 5,
-          lit(".COM:443/Path/"), col("lang"), lit("/"), col("doc_id"),
-          lit("?utm_source=feed&id="), col("doc_id"), lit("&ref_=rss#sec")))
-      .when(col("doc_id") % 3 === 1,
-        concat(lit("http://user@Blog.Site"), col("doc_id") % 5,
-          lit(".org:8080/posts//"), col("doc_id"), lit("/?a=1&gclid=xyz&b=2")))
-      .otherwise(concat(lit("https://cdn"), col("doc_id") % 5, lit(".net")))
-    TextOps.urlNormalize(
-      Tables.documents(s, dir).select(col("doc_id"), url.as("u")),
-      "doc_id", "u")
-      .select(col("doc_id"), col("scheme"), col("host"), col("domain"),
-        col("path"), col("path_depth"), col("n_params"),
-        col("n_params_kept"), col("url_norm"))
-      .orderBy("doc_id")
-  }
-
-  /** BM25 ranked retrieval gate: three fixed multi-term queries over the
-    * document corpus, scored by [[graft.operators.TextOps.bm25TopK]]
-    * (Lucene-form idf, k1=1.2 b=0.75) — the oracle recomputes tf/df/dl/
-    * avgdl and the full saturation formula in SQL, so scores AND ranks are
-    * pinned end to end.
-    */
-  private def qBm25Topk(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val queries = Seq((1, "hash"), (1, "join"), (2, "window"), (2, "scan"),
-      (3, "stream"), (3, "batch"), (3, "spark"))
-      .toDF("query_id", "term")
-    TextOps.bm25TopK(Tables.documents(s, dir), "doc_id", "text",
-      queries, "query_id", "term", k = 5)
-      .orderBy("query_id", "rank")
-  }
-
-  /** §2.7 stream-stream interval join as a CORRECTNESS entry: the events
-    * table replayed as TWO file streams (impressions = even event ids,
-    * clicks = odd), joined by [[graft.streaming.StreamingJoin.intervalJoin]]
-    * on user within [impression.ts, impression.ts + 1 hour] — watermarks on
-    * both sides plus the event-time constraint in the join condition are
-    * what bound the join state. Matched pairs land in a memory sink
-    * (append; inner-join matches emit in the arrival batch) and reduce to
-    * per-user censuses. The oracle replays the join in MICROSECOND
-    * arithmetic — the stream side compares µs-normalized timestamps, so
-    * the mirror floor-divides epoch_ns the same way rather than comparing
-    * at ns precision.
-    */
-  private def qStreamingJoin(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir) // sets the nanosAsLong reader conf for the session
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    val streamDir = freshTmpDir("graft_stream_join", dir)
-    val hconf = s.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val dstP = new org.apache.hadoop.fs.Path(s"$streamDir/events.parquet")
-    org.apache.hadoop.fs.FileUtil.copy(srcP.getFileSystem(hconf), srcP,
-      dstP.getFileSystem(hconf), dstP, false, hconf)
-    def stream() = graft.sources.Tables.normalizeTs(
-      s.readStream.schema(raw.schema)
-        .option("recursiveFileLookup", "true").parquet(streamDir))
-    val impressions = stream().filter(col("event_id") % 2 === 0)
-      .select(col("user_id"), col("ts").as("i_ts"))
-    val clicks = stream().filter(col("event_id") % 2 === 1)
-      .select(col("user_id"), col("ts").as("c_ts"), col("value"))
-    val pairs = graft.streaming.StreamingJoin.intervalJoin(
-      impressions, clicks, "user_id", "i_ts", "c_ts",
-      window = "1 HOUR", watermarkDelay = "1 hour")
-    val qname = s"graft_sj_${math.abs(dir.hashCode)}"
-    graft.streaming.StatePartitions.scaledFor(s, streamDir) {
-      val q = pairs.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(qname)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(unix_micros(col("c_ts")) - unix_micros(col("i_ts")))
-          .as("sum_delay_us"),
-        rnd(sum(col("value")), 4).as("sum_value"))
-      .orderBy("user_id")
-  }
-
-  /** Unicode normalization gate: each document gets a deterministic messy
-    * tail (combining accent, curly quotes, en dash, a control byte, a
-    * zero-width space), normalized by
-    * [[graft.operators.TextOps.normalizeText]]. The oracle builds the
-    * IDENTICAL input with chr() concatenation and replays the fold chain
-    * over DuckDB's `nfc_normalize` — two independent NFC implementations
-    * (ICU-style JDK vs utf8proc) must land on the same bytes, md5-pinned.
-    */
-  private def qTextNormalize(s: SparkSession, dir: String): DataFrame = {
-    val messy = concat(col("text"),
-      lit(" cafe\u0301 \u2019quote\u2019 a\u2013b \u0007 x\u200By"))
-    TextOps.normalizeText(
-      Tables.documents(s, dir).select(col("doc_id"), messy.as("t")),
-      "doc_id", "t")
-      .select(col("doc_id"), col("n_chars_before"), col("n_chars_after"),
-        col("norm_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** robots.txt gate: seven synthetic domains each publish an 8-line
-    * robots.txt (comment, `*` group with nested Allow/Disallow prefixes, a
-    * trailing bot-specific group that must be IGNORED by the group
-    * tracking), applied to five URL shapes per document by
-    * [[graft.operators.TextOps.robotsFilter]] — longest-match, Allow wins
-    * ties, no-match allows. The oracle re-parses the same robots text in
-    * SQL (fixed 8-line explode, ignore-nulls group window) and replays the
-    * precedence arithmetic.
-    */
-  private def qRobotsFilter(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val robots = docs.select((col("doc_id") % 7).as("g")).distinct()
-      .select(concat(lit("ex"), col("g"), lit(".com")).as("domain"),
-        concat(
-          lit("User-agent: *\n# crawl rules\nDisallow: /private\nAllow: /private/ok"),
-          col("g"),
-          lit("\nDisallow: /tmp\n\nUser-agent: bot\nDisallow: /")).as("robots"))
-    val urls = docs.select(col("doc_id"),
-      concat(lit("ex"), col("doc_id") % 7, lit(".com")).as("domain"),
-      when(col("doc_id") % 5 === 0, concat(lit("/doc/"), col("doc_id")))
-        .when(col("doc_id") % 5 === 1, concat(lit("/private/x"), col("doc_id")))
-        .when(col("doc_id") % 5 === 2,
-          concat(lit("/private/ok"), col("doc_id") % 7, lit("/page")))
-        .when(col("doc_id") % 5 === 3, concat(lit("/tmp/"), col("doc_id")))
-        .otherwise(lit("/")).as("path"))
-    TextOps.robotsFilter(urls, "doc_id", "domain", "path",
-      robots, "domain", "robots")
-      .orderBy("doc_id")
-  }
-
-  /** Edit-distance verification tier over the LSH band candidates: the
-    * strictest near-dup confirmation (character-level Levenshtein
-    * similarity), candidate-driven like the Jaccard tier. Both engines
-    * compute unit-cost Levenshtein natively, so the oracle checks the
-    * whole band→verify composition.
-    */
-  private def qEditVerify(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val cands = DedupOps.bandPairs(
-      DedupOps.minhashSignatures(
-        DedupOps.shingleSet(docs, "doc_id", "text", ShingleK), "doc_id"),
-      "doc_id")
-    DedupOps.editDistanceVerify(docs, "doc_id", "text", cands, minSim = 0.4)
-      .orderBy("da", "db")
-  }
-
-  /** Corpus snapshot diff gate: snapshot B is the documents table with
-    * every 17th doc dropped, every 13th rewritten, and a shifted-id copy
-    * of every 19th added; [[graft.operators.CurationOps.corpusDiff]]
-    * classifies ids into added/removed/changed/unchanged and the oracle
-    * rebuilds both snapshots and the classification in SQL.
-    */
-  private def qCorpusDiff(s: SparkSession, dir: String): DataFrame = {
-    val a = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val b = a.filter(col("doc_id") % 17 =!= 0)
-      .select(col("doc_id"),
-        when(col("doc_id") % 13 === 0, concat(col("text"), lit(" v2")))
-          .otherwise(col("text")).as("text"))
-      .unionByName(a.filter(col("doc_id") % 19 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-    CurationOps.corpusDiff(a, b, "doc_id", "text")
-      .orderBy("doc_id")
-  }
-
-  /** Perceptual image hash gate: per group a 16×16 BMP is rendered from
-    * the first 256 quantized events (the media-fixture construction),
-    * decoded back through the real codec, and hashed by
-    * [[graft.operators.MultimodalOps.imageHashes]] (aHash + dHash over
-    * exact integer luma cell sums). The oracle rebuilds the pixels, cell
-    * sums, thresholds, and BOTH 64/56-bit packings from the event stream
-    * (HUGEINT shifts wrapped to signed), so the hashes are pinned
-    * bit-for-bit.
-    */
-  private def qImagePhash(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    val payloads = quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .mapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2) // event_id order fixes the image
-        def ch(v: Int, m: Int): Int = (((v.toLong * m) % 256 + 256) % 256).toInt
-        val px = cyclePad(rows, 256)
-          .map(r => (ch(r._3, 1), ch(r._3, 3), ch(r._3, 7)))
-        (g, graft.functions.Media.renderBmp(16, 16, px))
-      }.toDF("g", "bmp")
-    MultimodalOps.imageHashes(payloads, "g", "bmp").orderBy("g")
-  }
-
-  /** Image corpus for the near-dup gate: the q_image_phash base images
-    * (g 0–9) plus, per base, a NEAR-DUP copy under g+100 (one pixel's
-    * red channel shifted — a few aHash bits at most) and an EXACT copy
-    * under g+200 (Hamming 0). Deterministic event-stream pixels, so the
-    * corpus is identical across runs.
-    */
-  private def phashCorpus(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val quant = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("int").as("v"))
-    quant.as[(Long, Long, Int)].groupByKey(_._1)
-      .flatMapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(_._2) // event_id order fixes the image
-        def ch(v: Int, m: Int): Int = (((v.toLong * m) % 256 + 256) % 256).toInt
-        val px = cyclePad(rows, 256)
-          .map(r => (ch(r._3, 1), ch(r._3, 3), ch(r._3, 7)))
-        val base = graft.functions.Media.renderBmp(16, 16, px)
-        val perturbed = px.clone()
-        perturbed(0) = ((perturbed(0)._1 + 8) % 256, perturbed(0)._2,
-          perturbed(0)._3)
-        Seq((g, base),
-          (g + 100L, graft.functions.Media.renderBmp(16, 16, perturbed)),
-          (g + 200L, base))
-      }.toDF("g", "bmp")
-  }
-
-  /** Banded perceptual-hash near-dup pairs over the 30-image corpus: the
-    * engine runs the band-bucketed join (never all-pairs), the oracle
-    * brute-forces Hamming over the materialized hash table — equal
-    * output IS the pigeonhole recall proof at ≤ maxHamming. Exact copies
-    * pin Hamming 0; perturbed copies land within a few bits.
-    */
-  private def qPhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val payloads = phashCorpus(s, dir)
-    MultimodalOps.imageHashes(payloads, "g", "bmp")
-      .select(col("g"), col("ahash"))
-      .coalesce(1).write.mode("overwrite").parquet(PhashTableDir)
-    MultimodalOps.imageNearDupPairs(payloads, "g", maxHamming = 8,
-      payloadCol = "bmp")
-      .orderBy("ia", "ib")
-  }
-
-  /** Incremental-dedup gate: odd doc ids arrive as the INCOMING batch,
-    * even ids are the standing index;
-    * [[graft.operators.DedupOps.incrementalDedup]] classifies each
-    * incoming doc exact/near/novel with its matching index id. The oracle
-    * recomputes fingerprints, the cross-side band probe, and the
-    * candidate-restricted shingle Jaccard from the shared signature CTEs
-    * (a doc's signature is side-independent, so the corpus-wide CTEs
-    * restrict by parity at the joins).
-    */
-  private def qIncrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    // the incoming batch = odd docs + re-ingested copies of every 50th
-    // index doc under shifted ids, so the exact tier fires too
-    val incoming = docs.filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 500000L).as("doc_id"), col("text")))
-    DedupOps.incrementalDedup(
-      docs.filter(col("doc_id") % 2 === 0), incoming,
-      "doc_id", "text", ShingleK, tau = 0.5)
-      .orderBy("doc_id")
-  }
-
-  /** TFRecord round trip — the training-data EXPORT gate: each document
-    * becomes a `tf.train.Example` (text as BytesList, [doc_id, n_chars] as
-    * a packed Int64List) in one of four shard files written by
-    * [[graft.sinks.TfRecordSink]] (masked-CRC32C framing, hand-encoded
-    * protobuf) and read back by [[graft.sources.TfRecordSource]] with both
-    * checksums enforced. The oracle recomputes every aggregate from the
-    * documents table, so the cycle is checked against the parameters.
-    */
-  private def qTfrecord(s: SparkSession, dir: String): DataFrame = {
-    val out = freshTmpDir("graft_tfrec", dir)
-    val rows = Tables.documents(s, dir).select(
-      concat(lit("part-"), col("doc_id") % 4, lit(".tfrecord")).as("shard"),
-      col("doc_id").as("seq"),
-      encode(col("text"), "UTF-8").as("text"),
-      array(col("doc_id"), col("n_chars")).as("ids"))
-    graft.sinks.TfRecordSink.writeExamples(rows, out,
-      bytesFeatures = Seq("text"), int64Features = Seq("ids")).count()
-    graft.sources.TfRecordSource.readExamples(s, s"$out/*",
-      bytesFeatures = Seq("text"), int64Features = Seq("ids"))
-      .groupBy(regexp_extract(col("shard"), "part-(\\d+)", 1).cast("int").as("g"))
-      .agg(count(lit(1)).as("n_records"),
-        sum(element_at(col("ids"), 1)).as("sum_doc"),
-        sum(element_at(col("ids"), 2)).as("sum_chars"),
-        sum(length(col("text"))).cast("long").as("text_bytes"),
-        sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"))
-          .as("text_hash"))
-      .orderBy("g")
-  }
-
-  /** Cavnar–Trenkle char-trigram language ID: profiles trained from the
-    * labeled corpus (top-50 trigrams per language), every document
-    * classified by out-of-place distance. The oracle re-trains the
-    * profiles AND re-classifies in SQL — identical rank windows,
-    * identical penalty arithmetic.
-    */
-  private def qNgramLangId(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val profiles = TextOps.charNgramProfiles(docs, "lang", "text", n = 3, k = 50)
-    TextOps.charNgramLangId(docs, "doc_id", "text", profiles, n = 3, k = 50)
-      .orderBy("doc_id")
-  }
-
-  /** Exact phrase search over positional postings ("batch stream" as
-    * adjacent tokens), per-doc occurrence counts + first position; the
-    * oracle rebuilds 1-based positions with generate_series and aligns
-    * consecutive terms the same way.
-    */
-  private def qPhraseSearch(s: SparkSession, dir: String): DataFrame =
-    TextOps.phraseSearch(Tables.documents(s, dir), "doc_id", "text",
-      Seq("batch", "stream"))
-      .orderBy("doc_id")
-
-  /** Deterministic split assignment (train 90 / val 5 / test 5): a pure
-    * row function of the id's md5 bucket, so the oracle replays every
-    * assignment exactly — the stability property that prevents cross-
-    * release train/test leakage.
-    */
-  private def qAssignSplits(s: SparkSession, dir: String): DataFrame =
-    CurationOps.assignSplits(Tables.documents(s, dir), "doc_id",
-      Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
-      .select(col("doc_id"), col("split"))
-      .orderBy("doc_id")
-
-  /** Leakage-safe splits over the REAL near-dup structure: LSH→Jaccard
-    * pairs (the q_lsh_jaccard gate at τ=0.5) resolve to components, and
-    * the split hashes the component — cluster members land in one split
-    * by construction. The oracle replays pairs, the recursive-CTE
-    * component walk, and the md5 component split.
-    */
-  private def qLeakageSafeSplits(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    // one shared, persisted shingle set feeds both the LSH and verify tiers
-    val shingles = DedupOps.shingleSet(docs, "doc_id", "text", ShingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = DedupOps.jaccardPairs(shingles, "doc_id", tau = 0.5,
-      candidates = Some(DedupOps.bandPairs(
-        DedupOps.minhashSignatures(shingles, "doc_id"), "doc_id")),
-      maxDocFreq = Some(MaxShingleDf))
-      .select(col("da"), col("db"))
-    CurationOps.leakageSafeSplits(docs, "doc_id", pairs,
-      Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
-      .select(col("doc_id"), col("component"), col("split"))
-      .orderBy("doc_id")
-  }
-
-  /** Asymmetric containment (|A∩B|/|A| ≥ 0.8, directed): the subsumption
-    * pairs Jaccard misses; same stop-shingle cut as the Jaccard gate.
-    */
-  private def qContainment(s: SparkSession, dir: String): DataFrame =
-    DedupOps.containmentPairs(
-      // persisted: the stop-shingle cut + sizes + both join sides all
-      // reference the shingle set (qLshJaccard discipline)
-      DedupOps.shingleSet(Tables.documents(s, dir), "doc_id", "text", ShingleK)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      "doc_id", tau = 0.8, maxDocFreq = Some(MaxShingleDf))
-      .orderBy("da", "db")
-
-  /** Quality-based dedup survivor gate: LSH-banded Jaccard pairs (τ=0.5)
-    * resolved into components, survivor = LONGEST doc per component
-    * (min-id tie-break) via
-    * [[graft.operators.DedupOps.resolveClustersBest]]. The oracle walks
-    * the same pair graph with a recursive CTE and replays the argmax.
-    */
-  private def qKeepBest(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    // one shared, persisted shingle set feeds both the LSH and verify tiers
-    val shingles = DedupOps.shingleSet(docs, "doc_id", "text", ShingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = DedupOps.jaccardPairs(shingles, "doc_id", tau = 0.5,
-      candidates = Some(DedupOps.bandPairs(
-        DedupOps.minhashSignatures(shingles, "doc_id"), "doc_id")),
-      maxDocFreq = Some(MaxShingleDf))
-      .select(col("da"), col("db"))
-    DedupOps.resolveClustersBest(
-      docs.select(col("doc_id"), col("n_chars")), "doc_id", pairs, "n_chars")
-      .select(col("doc_id"), col("component"), col("n_chars"), col("is_survivor"))
-      .orderBy("doc_id")
-  }
-
-  /** Flesch readability over documents with deterministic sentence
-    * punctuation injected (the corpus text is unpunctuated); the oracle
-    * replays the same injection and regexp counts.
-    */
-  private def qReadability(s: SparkSession, dir: String): DataFrame =
-    TextOps.readability(
-      Tables.documents(s, dir).select(col("doc_id"),
-        replace(col("text"), lit(" scan"), lit(". scan")).as("t")),
-      "doc_id", "t")
-      .orderBy("doc_id")
-
-  /** Parquet footer audit gate: the documents table's own file is staged
-    * to the fixed materialization point and its footer parsed by
-    * [[graft.sources.ParquetFooter]] (pure-JVM Thrift compact protocol,
-    * footer-only positioned reads); DuckDB's native `parquet_metadata`
-    * reads THE SAME FILE as a fully independent implementation — two
-    * unrelated parsers must agree on every row group, column chunk,
-    * codec, size, and statistic.
-    */
-  private def qParquetMeta(s: SparkSession, dir: String): DataFrame = {
-    val hconf = s.sparkContext.hadoopConfiguration
-    val src0 = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val sfs = src0.getFileSystem(hconf)
-    // normalize both table layouts to ONE bare file: the table may be a
-    // bare parquet file (the driver's testdata) or a Spark-written
-    // directory of part files (the ScaleUp output) — stage the
-    // lexicographically-first part so both sides read the same footer
-    val srcP =
-      if (sfs.getFileStatus(src0).isDirectory)
-        sfs.listStatus(src0)
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath).minBy(_.getName.toString)
-      else src0
-    val dstP = new org.apache.hadoop.fs.Path(s"$PqMetaDir/documents.parquet")
-    val dfs = dstP.getFileSystem(hconf)
-    dfs.delete(dstP, true) // a stale dir/file from another layout blocks copy
-    org.apache.hadoop.fs.FileUtil.copy(sfs, srcP, dfs, dstP, false, true, hconf)
-    graft.sources.ParquetFooter.readMetadata(s, s"$PqMetaDir/documents.parquet")
-      .select(col("rg"), col("col_name"), col("type"), col("num_values"),
-        col("codec"), col("n_compressed"), col("n_uncompressed"),
-        col("null_count"), col("min_v"), col("max_v"))
-      .orderBy("rg", "col_name")
-  }
-
-  /** Bounded top-k-per-group gate: best 5 docs per (lang, source) group
-    * by (n_chars desc, id asc) via the custom [[graft.functions.TopKAgg]]
-    * Aggregator — state ≤ k, map-side partials, only k rows per group per
-    * partition shuffle. The oracle replays with the window form the
-    * aggregator replaces; semilattice determinism is what makes the two
-    * agree exactly.
-    */
-  private def qTopkPerGroup(s: SparkSession, dir: String): DataFrame =
-    graft.functions.TopK.topKPerGroup(
-      Tables.documents(s, dir)
-        .select(concat(col("lang"), lit("_"), col("source")).as("grp"),
-          col("doc_id"), col("n_chars")),
-      "grp", "doc_id", "n_chars", k = 5)
-      .select(col("grp"), col("rank"), col("doc_id"),
-        col("n_chars").cast("long").as("n_chars"))
-      .orderBy("grp", "rank")
-
-  /** Avro object-container round trip: documents become records (nullable
-    * string union, long, double, boolean fields; schema derived from the
-    * frame) across four files alternating the null and deflate codecs,
-    * written by [[graft.sinks.AvroSink]] and read back by
-    * [[graft.sources.AvroSource]] with sync markers verified. The oracle
-    * recomputes every aggregate (null-branch counts included) from the
-    * documents table.
-    */
-  /** Columnar-format interchange through Spark's native ORC source: a
-    * pruned lineitem projection lands partitioned-by-returnflag in ORC,
-    * reads back with a pushed row-group predicate, and aggregates with
-    * order-independent reductions (counts, integer-valued quantity sums,
-    * min/max). The oracle aggregates the original parquet — any loss in
-    * the ORC cycle (types, partition-column recovery, predicate
-    * semantics) breaks the match. PlanSpec pins that the predicate
-    * actually reaches the ORC scan.
-    */
-  private def qOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = freshTmpDir("graft_orc", dir)
-    Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"), col("l_returnflag"),
-        col("l_quantity"), col("l_extendedprice"))
-      .write.mode("overwrite").partitionBy("l_returnflag").orc(out)
-    s.read.orc(out)
-      .filter(col("l_quantity") > 25)
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"), sum("l_quantity").as("sum_qty"),
-        countDistinct("l_partkey").as("n_parts"),
-        min("l_extendedprice").as("min_price"),
-        max("l_extendedprice").as("max_price"))
-      .orderBy("l_returnflag")
-  }
-
-  /** ZIP container round trip: documents shard into archives (one per
-    * doc_id%4, zero-padded entry names so lexicographic = numeric
-    * order), written executor-side, read back through the central
-    * directory with per-entry CRC verification. Gated on per-shard
-    * entry census, byte totals, and the md5 of the name-ordered text
-    * concatenation — the oracle recomputes all three from the documents
-    * table, so truncation, mis-decode, or entry loss anywhere in the
-    * cycle breaks the match.
-    */
-  private def qZipRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.ZipSource
-    val docs = Tables.documents(s, dir).select(
-      (col("doc_id") % 4).cast("string").as("shard"),
-      format_string("doc_%06d.txt", col("doc_id")).as("name"),
-      col("text").cast("binary").as("data"))
-    val out = freshTmpDir("graft_zip", dir)
-    ZipSource.writeArchives(docs, "shard", "name", "data", out)
-    ZipSource.read(s, out)
-      .select(regexp_extract(col("file"), "([0-9]+)\\.zip$", 1)
-        .cast("long").as("shard"),
-        col("name"), col("size"), col("data").cast("string").as("txt"))
-      .groupBy("shard")
-      .agg(count(lit(1)).as("n_entries"), sum("size").as("total_bytes"),
-        md5(concat_ws("",
-          transform(array_sort(collect_list(struct(col("name"), col("txt")))),
-            x => x.getField("txt"))).cast("binary")).as("text_md5"))
-      .orderBy("shard")
-  }
-
-  private def qAvroRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = freshTmpDir("graft_avro", dir)
-    val rows = Tables.documents(s, dir).select(
-      concat(lit("part-"), col("doc_id") % 4,
-        when(col("doc_id") % 2 === 0, lit(".avro"))
-          .otherwise(lit(".deflate.avro"))).as("file"),
-      col("doc_id").as("seq"),
-      col("doc_id"),
-      when(col("doc_id") % 23 === 0, lit(null).cast("string"))
-        .otherwise(col("lang")).as("lang"),
-      col("n_chars"),
-      (col("n_chars") * 0.5).as("score"),
-      (col("doc_id") % 2 === 0).as("flag"))
-    graft.sinks.AvroSink.writeFiles(rows, out).count()
-    graft.sources.AvroSource.readFiles(s, s"$out/*.avro")
-      .groupBy(regexp_extract(col("file"), "part-(\\d+)", 1).cast("int").as("g"))
-      .agg(count(lit(1)).as("n_records"),
-        sum(col("doc_id")).as("sum_doc"),
-        sum(when(col("lang").isNull, 1L).otherwise(0L)).as("n_null_lang"),
-        countDistinct(col("lang")).as("n_langs"),
-        sum(col("n_chars")).as("sum_chars"),
-        rnd(sum(col("score")), 4).as("sum_score"),
-        sum(when(col("flag"), 1L).otherwise(0L)).as("n_flags"))
-      .orderBy("g")
-  }
-
-  /** Column-lineage gate: [[graft.plans.Lineage.columnLineage]] analyzes
-    * the flagship five-table join's Catalyst plan (never executing it)
-    * and must recover exactly which source columns feed each output —
-    * r_name/n_name pass through their dimensions, revenue derives from
-    * lineitem's price and discount, the count literal from nothing. The
-    * oracle is the hand-derived edge list.
-    */
-  private def qColumnLineage(s: SparkSession, dir: String): DataFrame =
-    graft.plans.Lineage.columnLineage(qJoinRegionalRevenue(s, dir))
-      .orderBy("out_col", "src_table", "src_col")
-
-  /** SCD-2 gate: per-user event-type history collapsed into validity
-    * intervals by [[graft.operators.RelationalOps.scd2]]; the oracle
-    * replays the lag/lead windows in µs arithmetic with the same
-    * (ts, event id) ordering.
-    */
-  /** Gaps-and-islands merge of per-customer-bucket service windows:
-    * overlapping intervals coalesce via the two-window break/island
-    * formulation, replayed window-for-window by the oracle.
-    */
-  private def qIntervalMerge(s: SparkSession, dir: String): DataFrame = {
-    val epoch = lit("1992-01-01")
-    val iv = Tables.orders(s, dir).select(
-      (col("o_custkey") % 50).as("k"),
-      datediff(col("o_orderdate"), epoch).cast("long").as("s0"),
-      (datediff(col("o_orderdate"), epoch) + col("o_orderkey") % 14)
-        .cast("long").as("s1"))
-    RelationalOps.mergeIntervals(iv, "k", "s0", "s1")
-      .select(col("k"), col("island"), col("start").as("start_day"),
-        col("end").as("end_day"), col("n_intervals"))
-      .orderBy("k", "island")
-  }
-
-  /** Join-key skew diagnosis over lineitem's partkey: per-key census
-    * fold + bounded top-k heaviest keys — the report that picks between
-    * plain, broadcast, salted, and AQE-skew joins.
-    */
-  private def qSkewReport(s: SparkSession, dir: String): DataFrame =
-    StatsOps.skewReport(Tables.lineitem(s, dir), "l_partkey", topK = 5)
-      .select(col("rank"), col("key"), col("n"), col("n_keys"),
-        col("n_rows"), col("max_count"),
-        rnd("avg_count", 4).as("avg_count"), rnd("skew", 4).as("skew"))
-      .orderBy("rank")
-
-  /** CDC change-set apply (warehouse MERGE): each customer's latest
-    * order refreshes the account balance ('U'), every 97th ordered
-    * customer is a tombstone ('D'), latest-wins per key — then a
-    * per-segment census of the merged table. The oracle folds the same
-    * change set with a window + left join.
-    */
-  private def qCdcApply(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.customer(s, dir)
-    val latest = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(max(struct(col("o_orderdate"), col("o_orderkey"),
-        col("o_totalprice"))).as("_m"))
-      .select(col("o_custkey").as("c_custkey"),
-        col("_m.o_orderkey").as("_seq"), col("_m.o_totalprice").as("_price"))
-    val changes = base.join(latest, "c_custkey")
-      .withColumn("c_acctbal", col("_price"))
-      .withColumn("_op", when(col("c_custkey") % 97 === 0, lit("D"))
-        .otherwise(lit("U")))
-      .drop("_price")
-    RelationalOps.applyChangeSet(base, changes, Seq("c_custkey"), "_seq", "_op")
-      .groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n"), rnd(sum("c_acctbal"), 2).as("sum_bal"))
-      .orderBy("c_mktsegment")
-  }
-
-  /** First-order Markov transition matrix over per-user event-type
-    * sequences: lag window + |states|²-bounded pair reduce, row-
-    * normalized probabilities.
-    */
-  private def qTransitions(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.transitionMatrix(Tables.events(s, dir), "user_id",
-      "event_id", "event_id", "event_type")
-      .select(col("prev_state"), col("next_state"), col("n"),
-        rnd("p", 6).as("p"))
-      .orderBy("prev_state", "next_state")
-
-  /** Two-sample KS drift test between the click and view value
-    * distributions — exact integer-rational D with the argmax value,
-    * replayed integer-for-integer by the oracle.
-    */
-  private def qKsTest(s: SparkSession, dir: String): DataFrame =
-    StatsOps.ksTest(Tables.events(s, dir), "event_type", "value",
-      a = "click", b = "view")
-      .select(col("n_a"), col("n_b"), col("d_num"), rnd("d", 6).as("d"),
-        col("at_v"))
-
-  /** PSI drift score between the click and view value distributions at
-    * bin width 0.5 — deterministic skip-census for one-sided bins.
-    */
-  private def qPsi(s: SparkSession, dir: String): DataFrame =
-    StatsOps.psi(Tables.events(s, dir), "event_type", "value",
-      a = "click", b = "view", binWidth = 0.5)
-      .select(col("n_bins"), col("n_skipped"), col("n_a"), col("n_b"),
-        rnd("psi", 4).as("psi"))
-
-  /** Pearson chi-square contingency of event_type × user-id bucket:
-    * the full grid (zero cells included), expected counts from exact
-    * integer marginals, per-cell contributions, and the statistic + dof
-    * on every row.
-    */
-  private def qChiSquare(s: SparkSession, dir: String): DataFrame =
-    StatsOps.chiSquare(
-      Tables.events(s, dir).select(col("event_type"),
-        (col("user_id") % 4).as("bucket")),
-      "event_type", "bucket")
-      .select(col("event_type"), col("bucket"), col("n_obs"),
-        rnd("expected", 4).as("expected"), rnd("contrib", 4).as("contrib"),
-        rnd("chi2", 4).as("chi2"), col("dof"))
-      .orderBy("event_type", "bucket")
-
-  private def qScd2(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.scd2(Tables.events(s, dir), "user_id", "ts", "event_id",
-      "event_type")
-      .select(col("user_id"), col("event_type"),
-        unix_micros(col("valid_from")).as("valid_from"),
-        unix_micros(col("valid_to")).as("valid_to"))
-      .orderBy("user_id", "valid_from", "event_type")
-
-  /** Funnel gate (signup → click → purchase, strictly ordered firsts):
-    * per-depth user censuses + total signup→purchase delay, via
-    * [[graft.operators.RelationalOps.funnel]].
-    */
-  private def qFunnel(s: SparkSession, dir: String): DataFrame =
-    // every 19th event only — at full density every user completes the
-    // funnel and the gate would not discriminate depths
-    RelationalOps.funnel(Tables.events(s, dir).filter(col("event_id") % 19 === 0),
-      "user_id", "ts", "event_type",
-      Seq("signup", "click", "purchase"))
-      .groupBy(col("reached"))
-      .agg(count(lit(1)).as("n_users"),
-        coalesce(sum(when(col("reached") === 3,
-          unix_micros(col("t_2")) - unix_micros(col("t_0")))), lit(0L))
-          .as("sum_delay_us"))
-      .orderBy("reached")
-
-  /** Daily cohort retention matrix over the events month. */
-  private def qCohortRetention(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.cohortRetention(Tables.events(s, dir), "user_id", "ts")
-      .orderBy("cohort_day", "offset_days")
-
-  /** Degree-ordered triangle counting on the 30-node event graph; the
-    * oracle counts the same triangles with the INDEPENDENT id-ordered
-    * brute construction, so the orientation trick is checked against a
-    * different algorithm.
-    */
-  private def qTriangles(s: SparkSession, dir: String): DataFrame =
-    graft.graph.GraphOps.triangleCounts(
-      Tables.events(s, dir).select((col("user_id") % 30).as("src"),
-        (col("event_id") % 30).as("dst")),
-      "src", "dst")
-      .orderBy("node")
-
-  /** Jaro–Winkler gate over all corpus-vocabulary word pairs (a bounded
-    * brute tier — vocabulary², like the cosine baselines): our
-    * [[graft.functions.StringSim]] implementation against DuckDB's NATIVE
-    * `jaro_winkler_similarity` — two independent implementations of the
-    * match-window/transposition/prefix-boost algorithm must agree digit
-    * for digit on every pair above the threshold.
-    */
-  /** Entity resolution over the 2000 part names: first-char blocking →
-    * Jaro-Winkler ≥ 0.95 verify → connected components; per-entity
-    * member census with the lexicographic representative. The oracle
-    * replays blocking + DuckDB's own jaro_winkler_similarity + the
-    * recursive-CTE min-label walk.
-    */
-  private def qEntityResolution(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // fixture id assignment: dense ids in name order (single-partition
-    // window over the 2 k-row dim table — id ASSIGNMENT only, the
-    // resolution itself never globally sorts)
-    val recs = Tables.part(s, dir).select(col("p_name").as("name")).distinct()
-      .withColumn("id", row_number().over(Window.orderBy("name")).cast("long"))
-    val resolved = DedupOps.resolveEntities(recs, "id", "name", 0.95)
-    resolved.join(recs, "id")
-      .groupBy(col("entity"))
-      .agg(count(lit(1)).as("n_members"), min(col("name")).as("rep_name"))
-      .orderBy("entity")
-  }
-
-  private def qJaroWinkler(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val vocab = Tables.documents(s, dir)
-      .select(explode(split(col("text"), " ")).as("w"))
-      .filter(col("w") =!= "").distinct()
-    vocab.select(col("w").as("wa"))
-      .crossJoin(vocab.select(col("w").as("wb")))
-      .filter(col("wa") < col("wb"))
-      .as[(String, String)]
-      .map { case (a, b) =>
-        (a, b, graft.functions.StringSim.jaroWinkler(a, b))
-      }
-      .toDF("wa", "wb", "jw")
-      // filter on the ROUNDED value: a raw-double cut could flip an
-      // exact-boundary pair on a 1-ulp cross-engine difference
-      .select(col("wa"), col("wb"), round(col("jw") + lit(1e-9), 6).as("jw"))
-      .filter(col("jw") >= 0.7)
-      .orderBy("wa", "wb")
-  }
-
-  /** Exact-N-per-group sample gate: 10 docs per language by the md5
-    * priority draw through the bounded aggregator; the oracle replays
-    * with the window form over the same 60-bit-bucket-as-double priority.
-    */
-  private def qSampleNPerGroup(s: SparkSession, dir: String): DataFrame =
-    CurationOps.sampleNPerGroup(Tables.documents(s, dir), "lang", "doc_id", 10)
-      .select(col("lang"), col("rank"), col("doc_id"))
-      .orderBy("lang", "rank")
-
-  /** Data-quality contract gate: five declarative expectations over the
-    * documents table — evaluated in ONE aggregation job by
-    * [[graft.operators.StatsOps.qualityReport]] — with mixed passes and
-    * deliberate failures; the oracle recomputes every satisfaction
-    * fraction.
-    */
-  private def qQualityReport(s: SparkSession, dir: String): DataFrame =
-    StatsOps.qualityReport(Tables.documents(s, dir), Seq(
-      StatsOps.NotNull("text"),
-      StatsOps.Unique("doc_id"),
-      StatsOps.Unique("text", threshold = 0.99), // clone families fail this
-      StatsOps.InRange("n_chars", 1, 400, threshold = 0.9),
-      StatsOps.MatchesRegex("lang", "^[a-z]{2}$")))
-      .orderBy("rule", "column", "threshold")
-
-  /** Z-order locality gate: user/event coordinates interleaved to a
-    * Morton key, rows bucketed by its top bits, per-bucket bounding
-    * boxes — confined boxes are the pruning evidence. Pure bit
-    * arithmetic, replayed exactly by the oracle.
-    */
-  private def qZorder(s: SparkSession, dir: String): DataFrame =
-    CurationOps.zOrderStats(
-      Tables.events(s, dir).select((col("user_id") % 256).as("x"),
-        (col("event_id") % 256).as("y")),
-      "x", "y", bits = 8, bucketShift = 8)
-      .orderBy("bucket")
-
-  /** PageRank gate: a 45-node link graph derived from events (src =
-    * user_id mod 40, dst = event_id mod 45 — nodes 40–44 have no
-    * out-edges, so the dangling-mass path is exercised), 5 power-iteration
-    * rounds at damping 0.85 via [[graft.graph.GraphOps.pageRank]]. The
-    * oracle replays all 5 rounds as chained CTEs — same formula, same
-    * operand nesting — so only summation order differs (absorbed by the
-    * shared rounding).
-    */
-  /** BFS hop distances from node 0 over the link-graph fixture — min-
-    * distance relaxation with observe-driven convergence; the oracle is
-    * the recursive-CTE walk bounded by the graph's node count.
-    */
-  private def qShortestPaths(s: SparkSession, dir: String): DataFrame =
-    graft.graph.GraphOps.shortestPaths(
-      Tables.events(s, dir).select((col("user_id") % 40).as("src"),
-        (col("event_id") % 45).as("dst")),
-      "src", "dst", sources = Seq(0L))
-      .orderBy("node")
-
-  /** Rollup (grouping-sets) aggregation over returnflag × linestatus —
-    * the OLAP subtotal lattice, with rollup NULLs folded to a marker so
-    * both engines emit identical keys.
-    */
-  private def qRollup(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .rollup("l_returnflag", "l_linestatus")
-      .agg(count(lit(1)).as("n"), sum("l_quantity").as("sum_qty"))
-      .select(coalesce(col("l_returnflag"), lit("(all)")).as("rf"),
-        coalesce(col("l_linestatus"), lit("(all)")).as("ls"),
-        col("n"), col("sum_qty"))
-      .orderBy("rf", "ls")
-
-  /** Range-frame moving aggregate: per user, the sum/count of event
-    * values within the last 100 event-ids (RANGE frame — value-based,
-    * not row-based; the frame contracts on gaps, which is the semantic
-    * difference this query pins).
-    */
-  private def qRangeWindow(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy("event_id")
-      .rangeBetween(-100, 0)
-    Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"),
-        count(lit(1)).over(w).as("n_frame"),
-        rnd(sum("value").over(w), 4).as("sum_frame"))
-      .orderBy("user_id", "event_id")
-  }
-
-  private def qPageRank(s: SparkSession, dir: String): DataFrame = {
-    val edges = Tables.events(s, dir).select(
-      (col("user_id") % 40).as("src"), (col("event_id") % 45).as("dst"))
-    graft.graph.GraphOps.pageRank(edges, "src", "dst", iterations = 5)
-      .select(col("node"), rnd(col("rank"), 6).as("rank"))
-      .orderBy("node")
-  }
-
-  /** MeanFilter (`domains/mesh/filters/mean.py:42`): per-group mean of every
-    * field — one shuffle, partial+final hash agg.
-    */
-  private def qMeanFilter(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        rnd(avg("l_quantity"), 4).as("mean_qty"),
-        rnd(avg("l_extendedprice"), 4).as("mean_price"),
-        rnd(avg("l_discount"), 6).as("mean_disc"),
-        rnd(avg("l_tax"), 6).as("mean_tax"))
-      .orderBy("l_returnflag", "l_linestatus")
-
-  /** MeshStatsFilter (`domains/mesh/filters/stats.py:232`): full stats family
-    * per field over the long (field, value) layout.
-    */
-  private def qFieldStats(s: SparkSession, dir: String): DataFrame = {
-    val long = StatsOps.toLong(Tables.lineitem(s, dir),
-      Seq("l_quantity", "l_discount", "l_tax"))
-    StatsOps.fieldStats(long)
-      .select(col("field"), col("n"),
-        rnd(col("mean"), 4).as("mean"),
-        rnd(col("var_pop"), 4).as("var_pop"),
-        rnd(col("std_pop"), 4).as("std_pop"),
-        rnd(col("min"), 4).as("min"),
-        rnd(col("max"), 4).as("max"),
-        rnd(col("median"), 4).as("median"),
-        rnd(col("abs_mean"), 4).as("abs_mean"),
-        rnd(col("abs_max"), 4).as("abs_max"),
-        rnd(col("skew"), 4).as("skew"),
-        rnd(col("kurt"), 4).as("kurt"))
-      .orderBy("field")
-  }
-
-  /** Welford mergeable-state emission (`stats.py:675-836`) via the custom
-    * Chan-merge Aggregator; central moments normalized by n for float-stable
-    * oracle comparison.
-    */
-  private def qWelfordState(s: SparkSession, dir: String): DataFrame = {
-    val long = StatsOps.toLong(Tables.lineitem(s, dir),
-      Seq("l_quantity", "l_discount", "l_tax"))
-    StatsOps.welfordState(long, Seq("field"), "value")
-      .select(col("field"), col("n"),
-        rnd(col("mean"), 6).as("mean"),
-        rnd(col("m2") / col("n"), 4).as("mom2"),
-        rnd(col("m3") / col("n"), 4).as("mom3"),
-        rnd(col("m4") / col("n"), 3).as("mom4"),
-        rnd(col("min"), 4).as("min"),
-        rnd(col("max"), 4).as("max"),
-        rnd(col("abs_sum") / col("n"), 6).as("abs_mean"))
-      .orderBy("field")
-  }
-
-  /** Bloom-prune gate: lineitem pre-filtered by the Bloom of the urgent
-    * orders' keys before any join — the runtime-filter pattern. The oracle
-    * rebuilds the identical position set and membership test, so the
-    * bloom-pass census (false positives INCLUDED, a deterministic function
-    * of the hash family) and the exact-match census must both agree;
-    * `n_false_pos` additionally pins pass ⊇ match.
-    */
-  private def qBloomPrune(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(s, dir)
-    val urgent = Tables.orders(s, dir)
-      .filter(col("o_orderpriority") === "1-URGENT")
-    val pruned = RelationalOps.bloomPruneJoin(li, "l_orderkey",
-      urgent, "o_orderkey", m = 16384L, d = 3)
-    val bloomCnt = pruned.groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n_bloom_pass"))
-    val trueCnt = li.join(urgent.select("o_orderkey"),
-        li("l_orderkey") === col("o_orderkey"), "left_semi")
-      .groupBy("l_returnflag").agg(count(lit(1)).as("n_true"))
-    bloomCnt.join(trueCnt, "l_returnflag")
-      .select(col("l_returnflag"), col("n_bloom_pass"), col("n_true"),
-        (col("n_bloom_pass") - col("n_true")).as("n_false_pos"))
-      .orderBy("l_returnflag")
-  }
-
-  /** NS-cylinder join shape (`ns_cylinder.py:17-40`): fact ⋈ fact ⋈ dim with
-    * broadcast small dims — lineitem ⋈ orders ⋈ customer ⋈ B(nation) ⋈ B(region).
-    */
-  /** TPC-H Q1 (pricing summary): the canonical scan-heavy OLAP
-    * aggregation. Money sums run in EXACT decimal arithmetic and cast to
-    * double only once at the end (a 60 k-term double sum would be
-    * re-association-sensitive across engines), so every figure —
-    * including the averages — is bit-deterministic.
-    */
-  private def qTpchQ1(s: SparkSession, dir: String): DataFrame = {
-    // tight scales keep the triple product inside exact decimal range
-    // (12,2)×(4,2)×(4,2) → scale-6 precision ~22, well under 38 in BOTH
-    // engines (wider scales would overflow DuckDB's 38 cap on the
-    // charge product and silently promote to double)
-    val price = col("l_extendedprice").cast("decimal(12,2)")
-    val disc = col("l_discount").cast("decimal(4,2)")
-    val tax = col("l_tax").cast("decimal(4,2)")
-    val one = lit(1).cast("decimal(4,2)")
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") <= lit("1998-09-02"))
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(sum("l_quantity").as("sum_qty"),
-        sum(price).cast("double").as("sum_base_price"),
-        sum(price * (one - disc)).cast("double").as("sum_disc_price"),
-        sum(price * (one - disc) * (one + tax)).cast("double").as("sum_charge"),
-        count(lit(1)).as("count_order"))
-      .select(col("l_returnflag"), col("l_linestatus"), col("sum_qty"),
-        rnd("sum_base_price", 2).as("sum_base_price"),
-        rnd("sum_disc_price", 2).as("sum_disc_price"),
-        rnd("sum_charge", 2).as("sum_charge"),
-        rnd(col("sum_qty") / col("count_order"), 4).as("avg_qty"),
-        rnd(col("sum_base_price") / col("count_order"), 4).as("avg_price"),
-        col("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-  }
-
-  /** TPC-H Q3 (shipping priority): the canonical selective three-way
-    * join + top-k, with revenue in exact decimal and the broadcast-dim
-    * plan Catalyst picks for the bounded customer filter.
-    */
-  private def qTpchQ3(s: SparkSession, dir: String): DataFrame = {
-    val price = col("l_extendedprice").cast("decimal(12,2)")
-    val disc = col("l_discount").cast("decimal(4,2)")
-    val one = lit(1).cast("decimal(4,2)")
-    val cut = lit("1996-03-15")
-    Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-      .join(Tables.orders(s, dir).filter(col("o_orderdate") < cut),
-        col("c_custkey") === col("o_custkey"))
-      .join(Tables.lineitem(s, dir).filter(col("l_shipdate") > cut),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-      .agg(sum(price * (one - disc)).cast("double").as("revenue"))
-      .select(col("l_orderkey"), rnd("revenue", 2).as("revenue"),
-        col("o_orderdate"), col("o_orderpriority"))
-      .orderBy(col("revenue").desc, col("o_orderdate"), col("l_orderkey"))
-      .limit(10)
-  }
-
-  private def qJoinRegionalRevenue(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name"), col("n_name"))
-      .agg(
-        count(lit(1)).as("n_items"),
-        // exact integer cents·basis-points (order-free sum): a float
-        // Σ ext·(1−disc) drifts ~4e-4 against the oracle at sf0.1's
-        // ~24k-row nation groups — the round-11 standing float-sum rule
-        rnd(sum(round(col("l_extendedprice") * 100).cast("long") *
-          (lit(10000L) - round(col("l_discount") * 10000).cast("long")))
-          .cast("double") / lit(1000000.0), 2).as("revenue"))
-      .orderBy("r_name", "n_name")
-
-  /** CleanFilter referenced-only semantics (`clean.py:39`) / checkpoint-skip
-    * shape: left-semi join.
-    */
-  private def qSemiCustomersWithOrders(s: SparkSession, dir: String): DataFrame =
-    Tables.customer(s, dir)
-      .join(Tables.orders(s, dir).select(col("o_custkey").as("c_custkey")),
-        Seq("c_custkey"), "left_semi")
-      .select("c_custkey", "c_mktsegment", "c_acctbal")
-      .orderBy("c_custkey")
-
-  /** Checkpoint-resume remaining-work (`core/base.py:595-602`): work-list
-    * anti-joined against the completed ledger (here: customers minus those
-    * with an urgent order).
-    */
-  private def qAntiCustomersWithoutOrders(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.remaining(
-      Tables.customer(s, dir),
-      Tables.orders(s, dir).filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey").as("c_custkey")),
-      "c_custkey")
-      .select("c_custkey", "c_mktsegment", "c_acctbal")
-      .orderBy("c_custkey")
-
-  /** EdgeComputeFilter (`edge_compute.py:40`): canonical distinct edge set. */
-  private def qDistinctEdges(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.canonicalEdges(Tables.lineitem(s, dir), "l_partkey", "l_suppkey")
-      .orderBy("edge_a", "edge_b")
-
-  /** CleanFilter duplicate-removal keep-first (`clean.py:39`). */
-  private def qKeepFirstDedup(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.keepFirst(Tables.lineitem(s, dir),
-      Seq("l_partkey", "l_suppkey"), "l_orderkey")
-      .orderBy("l_partkey", "l_suppkey")
-
-  /** RandomPermutationFilter id reassignment (`random_permutation.py:83-139`). */
-  private def qPermutationIds(s: SparkSession, dir: String): DataFrame =
-    RelationalOps.reassignIds(
-      Tables.lineitem(s, dir).select("l_returnflag", "l_orderkey", "l_linenumber"),
-      Seq("l_returnflag"), Seq(col("l_orderkey"), col("l_linenumber")))
-      .filter(col("new_id") <= 100)
-      .orderBy("l_returnflag", "new_id")
-
-  /** Pivoted-timestep flattening as long-format lag (`SURVEY §2.6`):
-    * per-entity ordered delta via window lag.
-    */
-  private def qWindowLagDelta(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"),
-        rnd(col("value") - lag(col("value"), 1).over(w), 2).as("delta"))
-      .orderBy("user_id", "event_id")
-  }
-
-  /** Displacement-timestep pivot (`mesh_zarr.py:105`): wide per-key matrix. */
-  private def qPivotEventMatrix(s: SparkSession, dir: String): DataFrame = {
-    val types = Seq("click", "error", "purchase", "signup", "view")
-    val pivoted = Tables.events(s, dir)
-      .groupBy(col("user_id"))
-      .pivot("event_type", types)
-      .agg(sum(col("value")))
-    pivoted.select(col("user_id") +: types.map(t => rnd(col(t), 2).as(t)): _*)
-      .orderBy("user_id")
-  }
-
-  /** DataArrayStatsFilter (`domains/da/filters/stats.py:47`): grouped moments
-    * with time reduced into (variable, hour) grid cells.
-    */
-  private def qGridStats(s: SparkSession, dir: String): DataFrame = {
-    val obs = Tables.events(s, dir)
-      .withColumn("hour", date_trunc("hour", col("ts")))
-    StatsOps.gridStats(obs, Seq("event_type", "hour"), "value")
-      .select(col("event_type"), col("hour"), col("n"),
-        rnd(col("mean"), 4).as("mean"),
-        rnd(col("var_pop"), 4).as("var_pop"),
-        col("min"), col("max"))
-      .orderBy("event_type", "hour")
-  }
-
-  /** NetCDF4Sink year-split layout (`netcdf_writer.py:55-74`): the partition
-    * keys (variable, year) and their contents.
-    */
-  private def qYearPartitionCounts(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), year(col("ts")).as("yr"))
-      .agg(count(lit(1)).as("n"), rnd(sum("value"), 2).as("sum_value"))
-      .orderBy("event_type", "yr")
-
-  /** MeshQualityFilter NaN/Inf/null census (`quality.py:693`). */
-  private def qNanInfCensus(s: SparkSession, dir: String): DataFrame =
-    StatsOps.nanInfCensus(Tables.lineitem(s, dir),
-      Seq("l_quantity", "l_extendedprice", "l_discount"))
-
-  /** Von Mises stress kernel (Rust `d3plot/stress.rs:30`) as pure column
-    * arithmetic, aggregated per group.
-    */
-  private def qVonMises(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(s, dir)
-    val vm = Physics.vonMises(
-      col("l_quantity"), col("l_extendedprice") / 1000.0, col("l_discount") * 100.0,
-      col("l_tax") * 10.0, col("l_linenumber").cast("double"), col("l_quantity") / 2.0)
-    li.withColumn("vm", vm)
-      .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n"),
-        rnd(avg("vm"), 4).as("vm_mean"),
-        rnd(min("vm"), 4).as("vm_min"),
-        rnd(max("vm"), 4).as("vm_max"))
-      .orderBy("l_returnflag")
-  }
-
-  /** PrecisionFilter (`precision.py:94`): float64 → float32 downcast. */
-  private def qPrecisionCast(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        col("l_extendedprice").cast("float").as("price_f32"),
-        col("l_discount").cast("float").as("disc_f32"))
-      .orderBy("l_orderkey", "l_linenumber")
-
-  /** FieldSelectFilter + reader-level pruning (`field_select.py:61`,
-    * `_key_filter.py:45`): projection + predicate, both pushed to the scan.
-    */
-  private def qFieldSelectPushdown(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") < to_timestamp(lit("1996-07-01")) &&
-        col("l_discount") > 0.05)
-      .select("l_orderkey", "l_shipdate")
-      .orderBy("l_orderkey", "l_shipdate")
-
-  /** GlobalDataFilter (`global_data.py:51`): constant + derived globals
-    * broadcast onto every row.
-    */
-  private def qGlobalInject(s: SparkSession, dir: String): DataFrame = {
-    val g = Tables.supplier(s, dir).agg(rnd(avg("s_acctbal"), 4).as("s_avg"))
-    RelationalOps.injectGlobals(
-      Tables.customer(s, dir).select("c_custkey", "c_acctbal"),
-      Map("rho_inf" -> 1.225), Some(g))
-      .orderBy("c_custkey")
-  }
-
-  /** TensorDict field flattening (`stats.py:107-138`): array column → long
-    * (id, pos, value) via posexplode.
-    */
-  private def qArrayExplode(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos0", "val")))
-      .select(col("vec_id"), (col("pos0") + 1).as("pos"),
-        col("val").cast("double").as("val"))
-      .orderBy("vec_id", "pos")
-
-  /** PointDataToCellDataFilter (`point_data_to_cell.py:39`): vertex values
-    * averaged onto their cell — explode + groupBy(cell).
-    */
-  private def qPointToCellMean(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"), explode(col("embedding")).as("v"))
-      .groupBy(col("vec_id"), col("label"))
-      .agg(count(lit(1)).as("n_vertices"),
-        rnd(avg(col("v").cast("double")), 6).as("cell_mean"))
-      .orderBy("vec_id")
-
-  /** JSON detail-column extraction (`quality.py:72` uses JSON payloads):
-    * get_json_object + aggregation.
-    */
-  /** Nested-JSON flattening cycle: per user group, a document with a
-    * nested item ARRAY is serialized with `to_json` and parsed back with
-    * a typed `from_json` schema, the array explodes to relational rows,
-    * and a post-flatten predicate aggregates — the serialize → parse →
-    * explode → filter chain every JSON ingest runs. The oracle computes
-    * the same census straight from the events, so any loss in the JSON
-    * cycle (ordering, typing, null handling) breaks the match.
-    */
-  private def qJsonFlatten(s: SparkSession, dir: String): DataFrame = {
-    val quant0 = Tables.events(s, dir).select(
-      (col("user_id") % 10).as("g"), col("event_id"),
-      least(greatest(floor(col("value") * 100), lit(-32768L)), lit(32767L))
-        .cast("long").as("v"))
-    // real JSON documents are bounded-size: cap each group's item array
-    // at 1000 (unbounded docs would grow with the corpus — a fixture
-    // artifact, not a JSON-cycle property)
-    val w = Window.partitionBy("g").orderBy("event_id")
-    val quant = quant0.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= 1000).drop("_rn")
-    val docs = quant.groupBy("g").agg(
-      to_json(struct(col("g"),
-        sort_array(collect_list(struct(col("event_id").as("id"), col("v"))))
-          .as("items"))).as("doc"))
-    val schema = org.apache.spark.sql.types.DataType.fromDDL(
-      "struct<g: bigint, items: array<struct<id: bigint, v: bigint>>>")
-    docs.select(from_json(col("doc"), schema).as("j"))
-      .select(col("j.g").as("g"), explode(col("j.items")).as("item"))
-      .filter(col("item.v") > 0)
-      .groupBy("g")
-      .agg(count(lit(1)).as("n_pos"), sum("item.v").as("sum_pos"),
-        min("item.id").as("min_id"), max("item.id").as("max_id"))
-      .orderBy("g")
-  }
-
-  private def qJsonExtract(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("k").as("sum_k"),
-        rnd(avg("k"), 4).as("avg_k"))
-      .orderBy("event_type")
-
-  // ------------------------------------------------------------- oracle SQL
-
-  /** DuckDB mirrors of the Text/Dedup column primitives. The md5-derived
-    * 60-bit hash is `CAST('0x' || substr(md5(s),1,15) AS BIGINT)` — identical
-    * bytes hashed on both sides (ASCII text ⇒ VARCHAR == UTF-8 binary).
-    */
-  private val NormSql = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-  private def hash64Sql(e: String): String =
-    s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
-
-  /** Distinct (doc_id, 3-gram shingle) rows — mirrors `Text.shingles(c, 3)`. */
-  private val ShingleCte =
-    s"""ws AS (SELECT doc_id, string_split($NormSql, ' ') AS w FROM documents),
-       |pos AS (SELECT doc_id, w, unnest(generate_series(1, len(w) - ${ShingleK - 1})) AS i
-       |        FROM ws WHERE len(w) >= $ShingleK),
-       |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i:i+${ShingleK - 1}], ' ') AS sh FROM pos)""".stripMargin
-
-  private val SigCols = DedupOps.permA.indices.map { i =>
-    s"min((${DedupOps.permA(i)} * h + ${DedupOps.permB(i)}) % ${DedupOps.MinhashPrime}) AS sig_$i"
-  }.mkString(", ")
-
-  private val SigCte =
-    s"""$ShingleCte,
-       |h AS (SELECT doc_id, ${hash64Sql("sh")} % ${DedupOps.MinhashPrime} AS h FROM sh),
-       |sig AS (SELECT doc_id, $SigCols FROM h GROUP BY 1)""".stripMargin
-
-  /** Signature column projections for the verify-tier folding oracle. */
-  private def sigColsOf(alias: String): String =
-    DedupOps.permA.indices.map(i => s"$alias.sig_$i").mkString(", ")
-  private val SigColList = sigColsOf("s")
-  private val SigColListBare =
-    DedupOps.permA.indices.map(i => s"sig_$i").mkString(", ")
-
-  /** Count of agreeing signature components between two sig-row aliases —
-    * the integer form of the MinHash Jaccard estimate (est ≥ τ ⇔ this sum
-    * ≥ τ·NumPerms; exact on both engines, no float threshold to chase).
-    */
-  private def sigAgreeSql(a: String, b: String): String =
-    DedupOps.permA.indices
-      .map(i => s"(CASE WHEN $a.sig_$i = $b.sig_$i THEN 1 ELSE 0 END)")
-      .mkString("(", " + ", ")")
-
-  /** Cycle CTE over the quantized-event `r` CTE (columns g, v, rn): `e`
-    * holds exactly `n` positions per group, wrapping `rn` modulo the
-    * group's row count — the SQL mirror of [[cyclePad]], an identity
-    * whenever every group has >= n rows (gs.p % c == gs.p).
-    */
-  private def cycCte(n: Int): String =
-    s"""cnt AS (SELECT g, count(*) AS c FROM r GROUP BY 1),
-       |e AS (SELECT cnt.g, gs.p + 1 AS rn, r.v
-       |  FROM cnt CROSS JOIN generate_series(0, ${n - 1}) gs(p)
-       |  JOIN r ON r.g = cnt.g AND r.rn = (gs.p % cnt.c) + 1)""".stripMargin
-
-  private val BandUnion = (0 until DedupOps.NumPerms / DedupOps.BandRows).map { b =>
-    val ks = (0 until DedupOps.BandRows).map(r => s"sig_${b * DedupOps.BandRows + r}").mkString(", ")
-    s"SELECT doc_id, $b AS band, concat_ws('_', $ks) AS bk FROM sig"
-  }.mkString(" UNION ALL ")
-
-  // 64-bit simhash mirror (matches DedupOps.simhash's default width; the
-  // 60-bit hash leaves bits 60-63 structurally zero on both sides)
-  private val SimhashBitSums = (0 until 64).map { j =>
-    s"sum(((h >> $j) & 1) * 2 - 1) AS b_$j"
-  }.mkString(", ")
-  private val SimhashPacked = (0 until 64).map { j =>
-    s"(CASE WHEN b_$j > 0 THEN CAST(${1L << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-  }.mkString(" + ")
-
-  /** Double-precision cosine between two embedding rows (aliases a, b). */
-  private def cosSql(a: String, b: String): String =
-    s"""list_dot_product($a.embedding::DOUBLE[], $b.embedding::DOUBLE[]) /
-       | (sqrt(list_dot_product($a.embedding::DOUBLE[], $a.embedding::DOUBLE[])) *
-       |  sqrt(list_dot_product($b.embedding::DOUBLE[], $b.embedding::DOUBLE[])))""".stripMargin
-
-  private val StopPatterns: Map[String, String] = TextOps.stopwords.toMap
-
-  /** Shared CTE chain re-running the BPE ENCODE in DuckDB against the
-    * materialized merges table: per distinct pre-token, a recursive CTE
-    * merges the leftmost occurrence of the lowest-rank adjacent pair one
-    * step at a time (provably equivalent to the classic all-occurrences
-    * formulation — see [[graft.functions.Bpe]]); `doc_bpe` then rebuilds
-    * every document's ordered token stream from its word sequence. Callers
-    * must open with `WITH RECURSIVE`.
-    */
-  private def bpeCtes: String =
-    s"""words AS (
-       |  SELECT DISTINCT unnest(regexp_extract_all(text, '${Text.BpePattern}')) AS w
-       |  FROM documents),
-       |enc AS (
-       |  SELECT w, regexp_extract_all(w, '.') AS syms, 0 AS step FROM words
-       |  UNION ALL
-       |  SELECT w, syms[1:bi-1] || [syms[bi] || syms[bi+1]] || syms[bi+2:], step + 1
-       |  FROM (
-       |    SELECT w, syms, step,
-       |      (SELECT i FROM (SELECT unnest(range(1, len(syms))) AS i) t
-       |       JOIN '$BpeMergesDir/*.parquet' m
-       |         ON m.lhs = syms[i] AND m.rhs = syms[i+1]
-       |       ORDER BY m.rank, i LIMIT 1) AS bi
-       |    FROM enc) WHERE bi IS NOT NULL),
-       |final AS (
-       |  SELECT w, syms FROM (
-       |    SELECT w, syms, row_number() OVER (PARTITION BY w ORDER BY step DESC) rn
-       |    FROM enc) WHERE rn = 1),
-       |dw AS (
-       |  SELECT doc_id, t.i AS i, ws[t.i] AS w
-       |  FROM (SELECT doc_id, regexp_extract_all(text, '${Text.BpePattern}') AS ws
-       |        FROM documents) d,
-       |  LATERAL (SELECT unnest(range(1, len(ws)+1)) AS i) t),
-       |doc_enc AS (
-       |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pretokens,
-       |         CAST(sum(len(syms)) AS BIGINT) AS n_bpe_tokens,
-       |         flatten(list(syms ORDER BY i)) AS toks
-       |  FROM dw JOIN final USING (w) GROUP BY doc_id),
-       |doc_bpe AS (
-       |  SELECT d.doc_id, d.lang, coalesce(n_pretokens, 0) AS n_pretokens,
-       |         coalesce(n_bpe_tokens, 0) AS n_bpe_tokens,
-       |         coalesce(toks, CAST([] AS VARCHAR[])) AS toks
-       |  FROM documents d LEFT JOIN doc_enc USING (doc_id))""".stripMargin
-
-  def oracleSql: Map[String, String] = coreOracleSql ++ llmOracleSql
-
-  private def llmOracleSql: Map[String, String] = Map(
-    "q_exact_dedup" ->
-      s"""SELECT md5($NormSql) AS fp, min(doc_id) AS keep_id, count(*) AS n_copies
-         |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin,
-
-    "q_jaccard_pairs" ->
-      s"""WITH $ShingleCte,
-         |sh2 AS (SELECT s.doc_id, s.sh FROM sh s
-         |        JOIN (SELECT sh FROM sh GROUP BY 1 HAVING count(*) <= $MaxShingleDf) f
-         |        USING (sh)),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM sh2 GROUP BY 1),
-         |p AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS c
-         |      FROM sh2 a JOIN sh2 b USING (sh) WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
-         |SELECT da, db, round(CAST(c AS DOUBLE) / (x.sz + y.sz - c) + 1e-9, 4) AS jac
-         |FROM p JOIN sz x ON x.doc_id = p.da JOIN sz y ON y.doc_id = p.db
-         |WHERE CAST(c AS DOUBLE) / (x.sz + y.sz - c) >= 0.2
-         |ORDER BY da, db""".stripMargin,
-
-    "q_lsh_jaccard" ->
-      s"""WITH $SigCte,
-         |band AS ($BandUnion),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |         FROM band a JOIN band b USING (band, bk) WHERE a.doc_id < b.doc_id),
-         |sh2 AS (SELECT s.doc_id, s.sh FROM sh s
-         |        JOIN (SELECT sh FROM sh GROUP BY 1 HAVING count(*) <= $MaxShingleDf) f
-         |        USING (sh)),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM sh2 GROUP BY 1),
-         |p AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS c
-         |      FROM sh2 a JOIN sh2 b USING (sh) WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         |pc AS (SELECT p.* FROM p JOIN cand USING (da, db))
-         |SELECT da, db, round(CAST(c AS DOUBLE) / (x.sz + y.sz - c) + 1e-9, 4) AS jac
-         |FROM pc JOIN sz x ON x.doc_id = pc.da JOIN sz y ON y.doc_id = pc.db
-         |WHERE CAST(c AS DOUBLE) / (x.sz + y.sz - c) >= 0.2
-         |ORDER BY da, db""".stripMargin,
-
-    "q_minhash_signatures" ->
-      s"""WITH $SigCte
-         |SELECT * FROM sig ORDER BY doc_id""".stripMargin,
-
-    "q_lsh_band_pairs" ->
-      s"""WITH $SigCte,
-         |band AS ($BandUnion)
-         |SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |FROM band a JOIN band b USING (band, bk)
-         |WHERE a.doc_id < b.doc_id ORDER BY da, db""".stripMargin,
-
-    // The streaming candidate stream aggregates to the SAME band-collision
-    // set as the batch face: signatures are identical column math, so the
-    // per-pair colliding-band count recomputes exactly.
-    "q_streaming_dedup" ->
-      s"""WITH $SigCte,
-         |band AS ($BandUnion)
-         |SELECT a.doc_id AS ia, b.doc_id AS ib, CAST(count(*) AS BIGINT) AS n_bands
-         |FROM band a JOIN band b USING (band, bk)
-         |WHERE a.doc_id < b.doc_id
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // Streaming snapshot-ingest mirror: fingerprint equality (exact) and
-    // band collisions (near candidates) against the even-doc index, folded
-    // exact > near_candidate > novel with min matching index id — the same
-    // CTE family as q_incremental_dedup, minus its batch verify tier (the
-    // stream emits candidate grade; verification stays a batch pass).
-    "q_streaming_incremental" ->
-      s"""WITH $SigCte,
-         |band AS ($BandUnion),
-         |cp AS (SELECT doc_id + 500001 AS doc_id, doc_id AS src
-         |  FROM documents WHERE doc_id % 100 = 0),
-         |nw AS (SELECT doc_id FROM documents WHERE doc_id % 2 = 1
-         |  UNION ALL SELECT doc_id FROM cp),
-         |fp AS (SELECT doc_id, md5($NormSql) AS f FROM documents),
-         |ex AS (SELECT n.doc_id, min(o.doc_id) AS m
-         |  FROM fp n JOIN fp o ON n.f = o.f
-         |  WHERE n.doc_id % 2 = 1 AND o.doc_id % 2 = 0 GROUP BY 1
-         |  UNION ALL
-         |  SELECT cp.doc_id, min(o.doc_id)
-         |  FROM cp JOIN fp s ON s.doc_id = cp.src
-         |    JOIN fp o ON o.f = s.f AND o.doc_id % 2 = 0 GROUP BY 1),
-         |cand AS (SELECT a.doc_id AS dn, b.doc_id AS dod
-         |  FROM band a JOIN band b USING (band, bk)
-         |  WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-         |  UNION ALL
-         |  SELECT cp.doc_id, b.doc_id
-         |  FROM cp JOIN band a ON a.doc_id = cp.src
-         |    JOIN band b USING (band, bk)
-         |  WHERE b.doc_id % 2 = 0),
-         |nearc AS (SELECT dn AS doc_id, min(dod) AS m,
-         |  CAST(count(DISTINCT dod) AS BIGINT) AS nc FROM cand GROUP BY 1)
-         |SELECT nw.doc_id,
-         |  CASE WHEN ex.m IS NOT NULL THEN 'exact'
-         |       WHEN nearc.m IS NOT NULL THEN 'near_candidate'
-         |       ELSE 'novel' END AS verdict,
-         |  coalesce(ex.m, nearc.m) AS match_id,
-         |  coalesce(nearc.nc, CAST(0 AS BIGINT)) AS n_near_cands
-         |FROM nw LEFT JOIN ex USING (doc_id) LEFT JOIN nearc USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    // Folding mirror: batch-1 verdicts vs the seed index; batch-1's novel
-    // arrivals (no exact match anywhere) fold their fp + band keys in;
-    // batch-2 verdicts run against seed ∪ novel1. Within-batch exact
-    // matches go to the min-arrival-id winner of each fingerprint group
-    // (within-batch NEAR candidates are out of contract on this path).
-    "q_streaming_folding" ->
-      s"""WITH $SigCte,
-         |band AS ($BandUnion),
-         |fp AS (SELECT doc_id, md5($NormSql) AS f FROM documents),
-         |arr AS (
-         |  SELECT doc_id AS aid, doc_id AS src, 1 AS batch FROM documents WHERE doc_id % 3 = 1
-         |  UNION ALL SELECT doc_id + 600001, doc_id, 1 FROM documents WHERE doc_id % 15 = 0
-         |  UNION ALL SELECT doc_id AS aid, doc_id AS src, 2 AS batch FROM documents WHERE doc_id % 3 = 2
-         |  UNION ALL SELECT doc_id + 700001, doc_id, 2 FROM documents WHERE doc_id % 15 = 10),
-         |afp AS (SELECT a.aid, a.batch, fp.f FROM arr a JOIN fp ON fp.doc_id = a.src),
-         |aband AS (SELECT a.aid, a.batch, band.band, band.bk
-         |  FROM arr a JOIN band ON band.doc_id = a.src),
-         |idx0 AS (SELECT doc_id AS old_id, f FROM fp WHERE doc_id % 3 = 0),
-         |idxb0 AS (SELECT doc_id AS old_id, band, bk FROM band WHERE doc_id % 3 = 0),
-         |ex1raw AS (
-         |  SELECT n.aid, i.old_id AS m FROM afp n JOIN idx0 i ON n.f = i.f WHERE n.batch = 1
-         |  UNION ALL
-         |  SELECT n.aid, w.win FROM afp n
-         |    JOIN (SELECT f, min(aid) AS win FROM afp WHERE batch = 1 GROUP BY 1) w
-         |    ON n.f = w.f WHERE n.batch = 1 AND n.aid > w.win),
-         |ex1 AS (SELECT aid, min(m) AS m FROM ex1raw GROUP BY 1),
-         |novel1 AS (SELECT aid FROM afp WHERE batch = 1
-         |  AND aid NOT IN (SELECT aid FROM ex1)),
-         |idx1 AS (SELECT old_id, f FROM idx0
-         |  UNION ALL SELECT n.aid, a.f FROM novel1 n JOIN afp a ON a.aid = n.aid),
-         |idxb1 AS (SELECT old_id, band, bk FROM idxb0
-         |  UNION ALL SELECT n.aid, ab.band, ab.bk FROM novel1 n JOIN aband ab ON ab.aid = n.aid),
-         |ex2raw AS (
-         |  SELECT n.aid, i.old_id AS m FROM afp n JOIN idx1 i ON n.f = i.f WHERE n.batch = 2
-         |  UNION ALL
-         |  SELECT n.aid, w.win FROM afp n
-         |    JOIN (SELECT f, min(aid) AS win FROM afp WHERE batch = 2 GROUP BY 1) w
-         |    ON n.f = w.f WHERE n.batch = 2 AND n.aid > w.win),
-         |ex2 AS (SELECT aid, min(m) AS m FROM ex2raw GROUP BY 1),
-         |ex AS (SELECT * FROM ex1 UNION ALL SELECT * FROM ex2),
-         |nr AS (
-         |  SELECT n.aid, min(i.old_id) AS m, CAST(count(DISTINCT i.old_id) AS BIGINT) AS nc
-         |  FROM aband n JOIN idxb0 i ON n.band = i.band AND n.bk = i.bk
-         |  WHERE n.batch = 1 GROUP BY 1
-         |  UNION ALL
-         |  SELECT n.aid, min(i.old_id), CAST(count(DISTINCT i.old_id) AS BIGINT)
-         |  FROM aband n JOIN idxb1 i ON n.band = i.band AND n.bk = i.bk
-         |  WHERE n.batch = 2 GROUP BY 1)
-         |SELECT arr.aid AS doc_id, arr.batch AS batch,
-         |  CASE WHEN ex.m IS NOT NULL THEN 'exact'
-         |       WHEN nr.m IS NOT NULL THEN 'near_candidate'
-         |       ELSE 'novel' END AS verdict,
-         |  coalesce(ex.m, nr.m) AS match_id,
-         |  coalesce(nr.nc, CAST(0 AS BIGINT)) AS n_near_cands
-         |FROM arr LEFT JOIN ex ON ex.aid = arr.aid
-         |  LEFT JOIN nr ON nr.aid = arr.aid
-         |ORDER BY doc_id""".stripMargin,
-
-    // Verify-tier folding mirror: the near tier additionally requires ≥ 8
-    // of 16 signature components to agree between the arrival and the
-    // index doc (the MinHash Jaccard estimate at τ = 0.5 — integer
-    // arithmetic on both engines); folded novel arrivals contribute their
-    // source doc's signature, exactly what the index's sig rows carry.
-    "q_streaming_folding_verify" ->
-      s"""WITH $SigCte,
-         |band AS ($BandUnion),
-         |fp AS (SELECT doc_id, md5($NormSql) AS f FROM documents),
-         |arr AS (
-         |  SELECT doc_id AS aid, doc_id AS src, 1 AS batch FROM documents WHERE doc_id % 3 = 1
-         |  UNION ALL SELECT doc_id + 600001, doc_id, 1 FROM documents WHERE doc_id % 15 = 0
-         |  UNION ALL SELECT doc_id AS aid, doc_id AS src, 2 AS batch FROM documents WHERE doc_id % 3 = 2
-         |  UNION ALL SELECT doc_id + 700001, doc_id, 2 FROM documents WHERE doc_id % 15 = 10),
-         |afp AS (SELECT a.aid, a.batch, fp.f FROM arr a JOIN fp ON fp.doc_id = a.src),
-         |aband AS (SELECT a.aid, a.batch, band.band, band.bk
-         |  FROM arr a JOIN band ON band.doc_id = a.src),
-         |asig AS (SELECT a.aid, $SigColList FROM arr a JOIN sig s ON s.doc_id = a.src),
-         |idx0 AS (SELECT doc_id AS old_id, f FROM fp WHERE doc_id % 3 = 0),
-         |idxb0 AS (SELECT doc_id AS old_id, band, bk FROM band WHERE doc_id % 3 = 0),
-         |isig0 AS (SELECT doc_id AS old_id, $SigColListBare FROM sig WHERE doc_id % 3 = 0),
-         |ex1raw AS (
-         |  SELECT n.aid, i.old_id AS m FROM afp n JOIN idx0 i ON n.f = i.f WHERE n.batch = 1
-         |  UNION ALL
-         |  SELECT n.aid, w.win FROM afp n
-         |    JOIN (SELECT f, min(aid) AS win FROM afp WHERE batch = 1 GROUP BY 1) w
-         |    ON n.f = w.f WHERE n.batch = 1 AND n.aid > w.win),
-         |ex1 AS (SELECT aid, min(m) AS m FROM ex1raw GROUP BY 1),
-         |novel1 AS (SELECT aid FROM afp WHERE batch = 1
-         |  AND aid NOT IN (SELECT aid FROM ex1)),
-         |idx1 AS (SELECT old_id, f FROM idx0
-         |  UNION ALL SELECT n.aid, a.f FROM novel1 n JOIN afp a ON a.aid = n.aid),
-         |idxb1 AS (SELECT old_id, band, bk FROM idxb0
-         |  UNION ALL SELECT n.aid, ab.band, ab.bk FROM novel1 n JOIN aband ab ON ab.aid = n.aid),
-         |isig1 AS (SELECT old_id, $SigColListBare FROM isig0
-         |  UNION ALL SELECT n.aid, ${sigColsOf("a")} FROM novel1 n JOIN asig a ON a.aid = n.aid),
-         |ex2raw AS (
-         |  SELECT n.aid, i.old_id AS m FROM afp n JOIN idx1 i ON n.f = i.f WHERE n.batch = 2
-         |  UNION ALL
-         |  SELECT n.aid, w.win FROM afp n
-         |    JOIN (SELECT f, min(aid) AS win FROM afp WHERE batch = 2 GROUP BY 1) w
-         |    ON n.f = w.f WHERE n.batch = 2 AND n.aid > w.win),
-         |ex2 AS (SELECT aid, min(m) AS m FROM ex2raw GROUP BY 1),
-         |ex AS (SELECT * FROM ex1 UNION ALL SELECT * FROM ex2),
-         |nr AS (
-         |  SELECT n.aid, min(i.old_id) AS m, CAST(count(DISTINCT i.old_id) AS BIGINT) AS nc
-         |  FROM aband n JOIN idxb0 i ON n.band = i.band AND n.bk = i.bk
-         |    JOIN asig a ON a.aid = n.aid
-         |    JOIN isig0 s ON s.old_id = i.old_id
-         |  WHERE n.batch = 1 AND ${sigAgreeSql("a", "s")} >= ${DedupOps.NumPerms / 2}
-         |  GROUP BY 1
-         |  UNION ALL
-         |  SELECT n.aid, min(i.old_id), CAST(count(DISTINCT i.old_id) AS BIGINT)
-         |  FROM aband n JOIN idxb1 i ON n.band = i.band AND n.bk = i.bk
-         |    JOIN asig a ON a.aid = n.aid
-         |    JOIN isig1 s ON s.old_id = i.old_id
-         |  WHERE n.batch = 2 AND ${sigAgreeSql("a", "s")} >= ${DedupOps.NumPerms / 2}
-         |  GROUP BY 1)
-         |SELECT arr.aid AS doc_id, arr.batch AS batch,
-         |  CASE WHEN ex.m IS NOT NULL THEN 'exact'
-         |       WHEN nr.m IS NOT NULL THEN 'near_verified'
-         |       ELSE 'novel' END AS verdict,
-         |  coalesce(ex.m, nr.m) AS match_id,
-         |  coalesce(nr.nc, CAST(0 AS BIGINT)) AS n_verified
-         |FROM arr LEFT JOIN ex ON ex.aid = arr.aid
-         |  LEFT JOIN nr ON nr.aid = arr.aid
-         |ORDER BY doc_id""".stripMargin,
-
-    "q_simhash" ->
-      s"""WITH t AS (SELECT doc_id, unnest(string_split($NormSql, ' ')) AS tok FROM documents),
-         |h AS (SELECT doc_id, ${hash64Sql("tok")} AS h FROM t),
-         |b AS (SELECT doc_id, $SimhashBitSums FROM h GROUP BY 1)
-         |SELECT doc_id, CAST($SimhashPacked AS BIGINT) AS simhash FROM b ORDER BY doc_id""".stripMargin,
-
-    // All-pairs popcount mirror: banding is lossless (pigeonhole), so the
-    // banded pair set must equal the brute-force Hamming filter.
-    "q_simhash_pairs" ->
-      s"""WITH t AS (SELECT doc_id, unnest(string_split($NormSql, ' ')) AS tok FROM documents),
-         |h AS (SELECT doc_id, ${hash64Sql("tok")} AS h FROM t),
-         |b AS (SELECT doc_id, $SimhashBitSums FROM h GROUP BY 1),
-         |s AS (SELECT doc_id, CAST($SimhashPacked AS BIGINT) AS sh FROM b)
-         |SELECT a.doc_id AS ia, c.doc_id AS ib,
-         |  CAST(bit_count(xor(a.sh, c.sh)) AS INTEGER) AS hamming
-         |FROM s a JOIN s c ON a.doc_id < c.doc_id
-         |WHERE bit_count(xor(a.sh, c.sh)) <= 3
-         |ORDER BY ia, ib""".stripMargin,
-
-    // Image near-dup mirror: brute-force Hamming over the materialized
-    // perceptual-hash table — banding is recall-exact at ≤ maxHamming by
-    // pigeonhole, so the engine's bucketed join must equal this scan.
-    "q_phash_pairs" ->
-      s"""WITH h AS (SELECT g, ahash FROM '$PhashTableDir/*.parquet')
-         |SELECT a.g AS ia, b.g AS ib,
-         |  CAST(bit_count(xor(a.ahash, b.ahash)) AS INTEGER) AS hamming
-         |FROM h a JOIN h b ON a.g < b.g
-         |WHERE bit_count(xor(a.ahash, b.ahash)) <= 8
-         |ORDER BY ia, ib""".stripMargin,
-
-    "q_cosine_pairs" ->
-      s"""WITH p AS (SELECT a.vec_id AS ia, b.vec_id AS ib,
-         |  round(${cosSql("a", "b")} + 1e-9, 4) AS cos_r
-         |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-         |SELECT ia, ib, cos_r FROM p WHERE cos_r >= 0.3 ORDER BY ia, ib""".stripMargin,
-
-    // Full LSH mirror: the Spark side materializes its hyperplane constants
-    // to the fixed parquet below (content a pure function of the seed), so
-    // DuckDB recomputes signature bits (list_dot_product folds the same
-    // double-widened products in the same order → bit-identical signs),
-    // buckets, per-table candidate pairs, and the exact verify cosine.
-    "q_ann_pairs" ->
-      s"""WITH pl AS (SELECT tbl, plane, w
-         |    FROM '$AnnPlanesDir/*.parquet'),
-         |dots AS (SELECT e.vec_id, p.tbl, p.plane,
-         |    list_dot_product(e.embedding::DOUBLE[], p.w) AS dp
-         |  FROM embeddings e CROSS JOIN pl p),
-         |sig AS (SELECT vec_id, tbl,
-         |    CAST(sum(CASE WHEN dp > 0 THEN 1 << plane ELSE 0 END) AS BIGINT)
-         |      AS bucket
-         |  FROM dots GROUP BY 1, 2),
-         |cand AS (SELECT DISTINCT s1.vec_id AS ia, s2.vec_id AS ib
-         |  FROM sig s1 JOIN sig s2 ON s1.tbl = s2.tbl
-         |    AND s1.bucket = s2.bucket AND s1.vec_id < s2.vec_id),
-         |sc AS (SELECT c.ia, c.ib, round(${cosSql("a", "b")} + 1e-9, 4) AS cos_r
-         |  FROM cand c JOIN embeddings a ON a.vec_id = c.ia
-         |    JOIN embeddings b ON b.vec_id = c.ib)
-         |SELECT ia, ib, cos_r FROM sc WHERE cos_r >= 0.25 ORDER BY ia, ib""".stripMargin,
-
-    // Hard-negative mirror: identical LSH buckets, the INVERTED cosine
-    // gate (< 0.1), and the (cos DESC, ib) per-anchor top-3 ranking.
-    "q_hard_negatives" ->
-      s"""WITH pl AS (SELECT tbl, plane, w
-         |    FROM '$AnnPlanesDir/*.parquet'),
-         |dots AS (SELECT e.vec_id, p.tbl, p.plane,
-         |    list_dot_product(e.embedding::DOUBLE[], p.w) AS dp
-         |  FROM embeddings e CROSS JOIN pl p),
-         |sig AS (SELECT vec_id, tbl,
-         |    CAST(sum(CASE WHEN dp > 0 THEN 1 << plane ELSE 0 END) AS BIGINT)
-         |      AS bucket
-         |  FROM dots GROUP BY 1, 2),
-         |cand AS (SELECT DISTINCT s1.vec_id AS ia, s2.vec_id AS ib
-         |  FROM sig s1 JOIN sig s2 ON s1.tbl = s2.tbl
-         |    AND s1.bucket = s2.bucket AND s1.vec_id < s2.vec_id),
-         |sc AS (SELECT c.ia, c.ib, round(${cosSql("a", "b")} + 1e-9, 4) AS cos_r
-         |  FROM cand c JOIN embeddings a ON a.vec_id = c.ia
-         |    JOIN embeddings b ON b.vec_id = c.ib),
-         |neg AS (SELECT ia, ib, cos_r,
-         |    row_number() OVER (PARTITION BY ia ORDER BY cos_r DESC, ib) AS rn
-         |  FROM sc WHERE cos_r < 0.1)
-         |SELECT ia, CAST(rn AS INT) AS rank, ib, cos_r
-         |FROM neg WHERE rn <= 3 ORDER BY ia, rank""".stripMargin,
-
-    // Full PQ-ADC mirror against the materialized codebooks: subvector
-    // slices, per-(vector, subspace) argmin codes (ties -> lowest code),
-    // query distance tables, and the summed asymmetric distance are all
-    // recomputed in SQL with the same (v.v - 2*v.c) + c.c association and
-    // double-widened sequential dots as the Spark expressions.
-    "q_pq_topk" ->
-      s"""WITH cb AS (SELECT sub, code, c FROM '$PqCodebooksDir/*.parquet'),
-         |sv AS (SELECT e.vec_id, s.sub,
-         |    list_slice(e.embedding, s.sub * 8 + 1, s.sub * 8 + 8)::DOUBLE[] AS v
-         |  FROM embeddings e
-         |  CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s),
-         |d AS (SELECT sv.vec_id, sv.sub, cb.code,
-         |    (list_dot_product(sv.v, sv.v) - 2.0 * list_dot_product(sv.v, cb.c))
-         |      + list_dot_product(cb.c, cb.c) AS d
-         |  FROM sv JOIN cb ON cb.sub = sv.sub),
-         |asg AS (SELECT vec_id AS ib, sub, code FROM (
-         |    SELECT vec_id, sub, code,
-         |      row_number() OVER (PARTITION BY vec_id, sub ORDER BY d, code) AS rn
-         |    FROM d) z WHERE rn = 1),
-         |qd AS (SELECT vec_id AS ia, sub, code, d FROM d WHERE vec_id < 20),
-         |sc AS (SELECT q.ia, a.ib, round(sum(q.d) + 1e-9, 4) AS adist_r
-         |  FROM qd q JOIN asg a ON a.sub = q.sub AND a.code = q.code
-         |  WHERE q.ia <> a.ib GROUP BY 1, 2),
-         |rk AS (SELECT ia, ib, adist_r,
-         |    row_number() OVER (PARTITION BY ia ORDER BY adist_r, ib) AS rank
-         |  FROM sc)
-         |SELECT ia, CAST(rank AS INT) AS rank, ib, adist_r
-         |FROM rk WHERE rank <= 5 ORDER BY ia, rank""".stripMargin,
-
-    // PCA mirror: the materialized basis re-applied with list_dot_product
-    // (same widened-float folds), centering via the stored mu_dot.
-    "q_pca_project" ->
-      s"""WITH b AS (SELECT comp, w, mu_dot FROM '$PcaBasisDir/*.parquet'),
-         |pr AS (SELECT e.vec_id, b.comp,
-         |    list_dot_product(e.embedding::DOUBLE[], b.w::DOUBLE[]) - b.mu_dot AS p
-         |  FROM embeddings e CROSS JOIN b)
-         |SELECT vec_id,
-         |  round(max(CASE WHEN comp = 0 THEN p END) + 1e-9, 5) AS p0_r,
-         |  round(max(CASE WHEN comp = 1 THEN p END) + 1e-9, 5) AS p1_r
-         |FROM pr GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // int8 scalar-quantization mirror: ranges, codes, and dequant error
-    // recomputed per dimension; round-half-up agrees on the non-negative
-    // scaled values, so codes match exactly.
-    // IVF+SQ8 mirror: probe selection vs the materialized quantizer,
-    // the recomputed code table, and the same pruned integer ranking.
-    "q_ivfsq_topk" ->
-      s"""WITH cent AS (SELECT cid, w FROM '$IvfSqCentroidsDir/*.parquet'),
-         |xs AS (SELECT vec_id AS id, CAST(t.i - 1 AS INT) AS pos,
-         |    CAST(embedding[CAST(t.i AS INT)] AS DOUBLE) AS x
-         |  FROM embeddings,
-         |    LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i) t),
-         |rg AS (SELECT pos, min(x) AS mn, max(x) AS mx FROM xs GROUP BY 1),
-         |cd AS (SELECT id, pos, CASE WHEN mx = mn THEN 0
-         |    ELSE CAST(round((x - mn) / (mx - mn) * 255.0) AS INT) - 128
-         |    END AS code
-         |  FROM xs JOIN rg USING (pos)),
-         |sc AS (SELECT e.vec_id, c.cid,
-         |    list_dot_product(e.embedding::DOUBLE[], c.w) AS s
-         |  FROM embeddings e CROSS JOIN cent c),
-         |asg AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn
-         |  FROM sc) z WHERE rn = 1),
-         |probes AS (SELECT vec_id AS qid, cid FROM (SELECT vec_id, cid,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn
-         |  FROM sc WHERE vec_id IN (0, 1, 2)) z WHERE rn <= 2),
-         |cand AS (SELECT p.qid, a.vec_id AS id
-         |  FROM probes p JOIN asg a ON a.cid = p.cid),
-         |d AS (SELECT cand.qid, cand.id,
-         |    CAST(sum(qc.code * cc.code) AS BIGINT) AS qdot
-         |  FROM cand
-         |  JOIN cd qc ON qc.id = cand.qid
-         |  JOIN cd cc ON cc.id = cand.id AND cc.pos = qc.pos
-         |  GROUP BY 1, 2),
-         |r AS (SELECT qid, id, qdot,
-         |    row_number() OVER (PARTITION BY qid ORDER BY qdot DESC, id) AS rn
-         |  FROM d)
-         |SELECT qid, CAST(rn AS INT) AS rank, id AS vec_id, qdot
-         |FROM r WHERE rn <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // ANN recall mirror: ground truth (brute cosine top-10, queries 0-7)
-    // and EVERY tier recomputed from the materialized structures — IVF
-    // routing/probing (2 of 8 lists), PQ argmin codes + ADC sums, SQ8 and
-    // binary code tables (self excluded, matching the searched-k+1-drop-
-    // self form) — then each recall fraction re-derived from the overlap.
-    "q_ann_recall" ->
-      s"""WITH cent AS (SELECT cid, w FROM '$AnnRecallCentroidsDir/*.parquet'),
-         |cb AS (SELECT sub, code, c FROM '$AnnRecallCodebooksDir/*.parquet'),
-         |tsc AS (SELECT a.vec_id AS q, b.vec_id AS nb,
-         |  round(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) /
-         | (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) *
-         |  sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))) + 1e-9, 4) AS cos_r
-         |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-         |  WHERE a.vec_id < 8),
-         |truth AS (SELECT q, nb FROM (SELECT q, nb,
-         |    row_number() OVER (PARTITION BY q ORDER BY cos_r DESC, nb) AS rn
-         |  FROM tsc) z WHERE rn <= 10),
-         |poss AS (SELECT count(*) AS possible FROM truth),
-         |csc AS (SELECT e.vec_id, c.cid,
-         |    list_dot_product(e.embedding::DOUBLE[], c.w) AS s
-         |  FROM embeddings e CROSS JOIN cent c),
-         |asgc AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn
-         |  FROM csc) z WHERE rn = 1),
-         |probes AS (SELECT vec_id AS q, cid FROM (SELECT vec_id, cid,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn
-         |  FROM csc WHERE vec_id < 8) z WHERE rn <= 2),
-         |isc AS (SELECT t.q, t.nb, t.cos_r
-         |  FROM tsc t JOIN probes p ON p.q = t.q
-         |  JOIN asgc m ON m.vec_id = t.nb AND m.cid = p.cid),
-         |ivf AS (SELECT q, nb FROM (SELECT q, nb,
-         |    row_number() OVER (PARTITION BY q ORDER BY cos_r DESC, nb) AS rn
-         |  FROM isc) z WHERE rn <= 10),
-         |sv AS (SELECT e.vec_id, s.sub,
-         |    list_slice(e.embedding, s.sub * 8 + 1, s.sub * 8 + 8)::DOUBLE[] AS v
-         |  FROM embeddings e
-         |  CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s),
-         |pd AS (SELECT sv.vec_id, sv.sub, cb.code,
-         |    (list_dot_product(sv.v, sv.v) - 2.0 * list_dot_product(sv.v, cb.c))
-         |      + list_dot_product(cb.c, cb.c) AS d
-         |  FROM sv JOIN cb ON cb.sub = sv.sub),
-         |pasg AS (SELECT vec_id AS nb, sub, code FROM (
-         |    SELECT vec_id, sub, code,
-         |      row_number() OVER (PARTITION BY vec_id, sub ORDER BY d, code) AS rn
-         |    FROM pd) z WHERE rn = 1),
-         |pqd AS (SELECT vec_id AS q, sub, code, d FROM pd WHERE vec_id < 8),
-         |psc AS (SELECT qq.q, a.nb, round(sum(qq.d) + 1e-9, 4) AS adist_r
-         |  FROM pqd qq JOIN pasg a ON a.sub = qq.sub AND a.code = qq.code
-         |  WHERE qq.q <> a.nb GROUP BY 1, 2),
-         |pq AS (SELECT q, nb FROM (SELECT q, nb,
-         |    row_number() OVER (PARTITION BY q ORDER BY adist_r, nb) AS rn
-         |  FROM psc) z WHERE rn <= 10),
-         |xs AS (SELECT vec_id AS id, CAST(t.i - 1 AS INT) AS pos,
-         |    CAST(embedding[CAST(t.i AS INT)] AS DOUBLE) AS x
-         |  FROM embeddings,
-         |    LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i) t),
-         |rg AS (SELECT pos, min(x) AS mn, max(x) AS mx FROM xs GROUP BY 1),
-         |cdq AS (SELECT id, pos, CASE WHEN mx = mn THEN 0
-         |    ELSE CAST(round((x - mn) / (mx - mn) * 255.0) AS INT) - 128
-         |    END AS code
-         |  FROM xs JOIN rg USING (pos)),
-         |s8d AS (SELECT qc.id AS q, cc.id AS nb,
-         |    CAST(sum(qc.code * cc.code) AS BIGINT) AS qdot
-         |  FROM cdq qc JOIN cdq cc ON cc.pos = qc.pos AND cc.id <> qc.id
-         |  WHERE qc.id < 8 GROUP BY 1, 2),
-         |s8 AS (SELECT q, nb FROM (SELECT q, nb,
-         |    row_number() OVER (PARTITION BY q ORDER BY qdot DESC, nb) AS rn
-         |  FROM s8d) z WHERE rn <= 10),
-         |bb AS (SELECT id, pos, CASE WHEN mx = mn THEN 0
-         |    WHEN x > (mn + mx) / 2.0 THEN 1 ELSE 0 END AS bit
-         |  FROM xs JOIN rg USING (pos)),
-         |bd AS (SELECT qb.id AS q, b2.id AS nb,
-         |    CAST(sum(CASE WHEN qb.bit <> b2.bit THEN 1 ELSE 0 END) AS BIGINT) AS hd
-         |  FROM bb qb JOIN bb b2 ON b2.pos = qb.pos AND b2.id <> qb.id
-         |  WHERE qb.id < 8 GROUP BY 1, 2),
-         |bin AS (SELECT q, nb FROM (SELECT q, nb,
-         |    row_number() OVER (PARTITION BY q ORDER BY hd, nb) AS rn
-         |  FROM bd) z WHERE rn <= 10),
-         |hits AS (
-         |  SELECT 'ivf' AS tier, count(*) AS hits
-         |    FROM ivf JOIN truth USING (q, nb)
-         |  UNION ALL SELECT 'pq', count(*) FROM pq JOIN truth USING (q, nb)
-         |  UNION ALL SELECT 'sq8', count(*) FROM s8 JOIN truth USING (q, nb)
-         |  UNION ALL SELECT 'binary', count(*) FROM bin JOIN truth USING (q, nb))
-         |SELECT tier, CAST(8 AS BIGINT) AS n_queries, 10 AS k,
-         |  CAST(hits AS BIGINT) AS hits, CAST(possible AS BIGINT) AS possible,
-         |  round(hits / CAST(possible AS DOUBLE) + 1e-9, 4) AS recall
-         |FROM hits, poss ORDER BY tier""".stripMargin,
-
-    // SQ8 mirror: the identical per-dim quantization, integer dots via
-    // a (pos-keyed) sum, and the same (dot DESC, id) ranking.
-    // Residual-SQ8 mirror: the full FAISS residual pipeline in SQL —
-    // coarse assignment + probe pruning vs the materialized FLOAT
-    // quantizer, float residual subtraction (matching Spark's zip_with
-    // float math bit-for-bit), per-dim ranges over residuals, half-up
-    // codes, then the three-term reconstruction dot over the stored
-    // codes divided by true norms (the 4-byte sidecar), rounded with the
-    // shared epsilon. mn enters the score FLOAT-cast (the engine bakes
-    // mn as a float literal vector).
-    "q_ivfsq_residual_topk" ->
-      s"""WITH cent AS (SELECT cid, w FROM '$IvfSqResCentroidsDir/*.parquet'),
-         |sc AS (SELECT e.vec_id, c.cid,
-         |    list_dot_product(e.embedding::DOUBLE[], c.w::DOUBLE[]) AS s
-         |  FROM embeddings e CROSS JOIN cent c),
-         |asg AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn
-         |  FROM sc) z WHERE rn = 1),
-         |probes AS (SELECT vec_id AS qid, cid FROM (SELECT vec_id, cid,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn
-         |  FROM sc WHERE vec_id IN (0, 1, 2)) z WHERE rn <= 2),
-         |res AS (SELECT e.vec_id AS id, CAST(t.i - 1 AS INT) AS pos,
-         |    CAST(CAST(e.embedding[CAST(t.i AS INT)] AS FLOAT)
-         |      - CAST(c.w[CAST(t.i AS INT)] AS FLOAT) AS DOUBLE) AS r
-         |  FROM embeddings e JOIN asg a USING (vec_id)
-         |    JOIN cent c ON c.cid = a.cid,
-         |    LATERAL (SELECT unnest(range(1, len(e.embedding) + 1)) AS i) t),
-         |rg AS (SELECT pos, min(r) AS mn, max(r) AS mx FROM res GROUP BY 1),
-         |cd AS (SELECT id, pos,
-         |    CASE WHEN mx = mn THEN 0
-         |      ELSE CAST(round((r - mn) / (mx - mn) * 255.0) AS INT) - 128
-         |    END AS code,
-         |    CASE WHEN mx = mn THEN 0.0 ELSE (mx - mn) / 255.0 END AS scale
-         |  FROM res JOIN rg USING (pos)),
-         |nrm AS (SELECT vec_id AS id,
-         |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nb
-         |  FROM embeddings),
-         |cand AS (SELECT p.qid, p.cid, a.vec_id AS id
-         |  FROM probes p JOIN asg a ON a.cid = p.cid WHERE a.vec_id <> p.qid),
-         |md AS (SELECT q.vec_id AS qid,
-         |    sum(CAST(q.embedding[pos + 1] AS DOUBLE)
-         |      * CAST(CAST(rg.mn AS FLOAT) AS DOUBLE)) AS mdot
-         |  FROM embeddings q CROSS JOIN rg WHERE q.vec_id IN (0, 1, 2)
-         |  GROUP BY 1),
-         |sd AS (SELECT cand.qid, cand.id,
-         |    sum(CAST(q.embedding[cd.pos + 1] AS DOUBLE)
-         |      * ((cd.code + 128) * cd.scale)) AS sdot
-         |  FROM cand JOIN cd ON cd.id = cand.id
-         |    JOIN embeddings q ON q.vec_id = cand.qid
-         |  GROUP BY 1, 2),
-         |scored AS (SELECT cand.qid, cand.id,
-         |    round((cdq.s + md.mdot + sd.sdot) / (qn.nb * cn.nb) + 1e-9, 4)
-         |      AS cos_r
-         |  FROM cand
-         |    JOIN sc cdq ON cdq.vec_id = cand.qid AND cdq.cid = cand.cid
-         |    JOIN md ON md.qid = cand.qid
-         |    JOIN sd ON sd.qid = cand.qid AND sd.id = cand.id
-         |    JOIN nrm qn ON qn.id = cand.qid
-         |    JOIN nrm cn ON cn.id = cand.id),
-         |r AS (SELECT qid, id, cos_r,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_r DESC, id) AS rn
-         |  FROM scored)
-         |SELECT qid, CAST(rn AS INT) AS rank, id AS vec_id, cos_r
-         |FROM r WHERE rn <= 5 ORDER BY qid, rank""".stripMargin,
-
-    "q_int8_topk" ->
-      """WITH xs AS (SELECT vec_id AS id, CAST(t.i - 1 AS INT) AS pos,
-        |    CAST(embedding[CAST(t.i AS INT)] AS DOUBLE) AS x
-        |  FROM embeddings,
-        |    LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i) t),
-        |rg AS (SELECT pos, min(x) AS mn, max(x) AS mx FROM xs GROUP BY 1),
-        |cd AS (SELECT id, pos, CASE WHEN mx = mn THEN 0
-        |    ELSE CAST(round((x - mn) / (mx - mn) * 255.0) AS INT) - 128
-        |    END AS code
-        |  FROM xs JOIN rg USING (pos)),
-        |q AS (SELECT id AS qid, pos, code AS qc FROM cd WHERE id IN (0, 1, 2)),
-        |d AS (SELECT q.qid, c.id, CAST(sum(q.qc * c.code) AS BIGINT) AS qdot
-        |  FROM q JOIN cd c USING (pos) GROUP BY 1, 2),
-        |r AS (SELECT qid, id, qdot,
-        |    row_number() OVER (PARTITION BY qid ORDER BY qdot DESC, id) AS rn
-        |  FROM d)
-        |SELECT qid, CAST(rn AS INT) AS rank, id AS vec_id, qdot
-        |FROM r WHERE rn <= 10 ORDER BY qid, rank""".stripMargin,
-
-    // Binary-quantization mirror: midrange-thresholded bits per dim
-    // (min/max are exact under any aggregation order, unlike a mean),
-    // Hamming = per-pos mismatch count (bit packing is lossless and pad
-    // bits cancel), ranking (distance ASC, id) as the engine's negated
-    // total order.
-    "q_hamming_topk" ->
-      """WITH xs AS (SELECT vec_id AS id, CAST(t.i - 1 AS INT) AS pos,
-        |    CAST(embedding[CAST(t.i AS INT)] AS DOUBLE) AS x
-        |  FROM embeddings,
-        |    LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i) t),
-        |rg AS (SELECT pos, min(x) AS mn, max(x) AS mx FROM xs GROUP BY 1),
-        |b AS (SELECT id, pos, CASE WHEN mx = mn THEN 0
-        |    WHEN x > (mn + mx) / 2.0 THEN 1 ELSE 0 END AS bit
-        |  FROM xs JOIN rg USING (pos)),
-        |q AS (SELECT id AS qid, pos, bit AS qb FROM b WHERE id IN (0, 1, 2)),
-        |d AS (SELECT q.qid, b.id,
-        |    CAST(sum(CASE WHEN q.qb <> b.bit THEN 1 ELSE 0 END) AS BIGINT) AS hd
-        |  FROM q JOIN b USING (pos) GROUP BY 1, 2),
-        |r AS (SELECT qid, id, hd,
-        |    row_number() OVER (PARTITION BY qid ORDER BY hd, id) AS rn
-        |  FROM d)
-        |SELECT qid, CAST(rn AS INT) AS rank, id AS vec_id, hd
-        |FROM r WHERE rn <= 10 ORDER BY qid, rank""".stripMargin,
-
-    "q_scalar_quantize" ->
-      """WITH x AS (SELECT e.vec_id, CAST(t.i - 1 AS INT) AS pos,
-        |    CAST(e.embedding[t.i] AS DOUBLE) AS x
-        |  FROM embeddings e,
-        |  LATERAL (SELECT unnest(generate_series(1, len(e.embedding))) AS i) t),
-        |r AS (SELECT pos, min(x) AS mn, max(x) AS mx FROM x GROUP BY 1),
-        |c AS (SELECT x.pos, x.x, r.mn, r.mx,
-        |    CASE WHEN mx = mn THEN 0
-        |         ELSE CAST(round((x - mn) / (mx - mn) * 255.0) - 128 AS INT)
-        |    END AS code
-        |  FROM x JOIN r USING (pos)),
-        |q AS (SELECT pos, x, mn, mx, code,
-        |    mn + (code + 128) * (mx - mn) / 255.0 AS xq FROM c)
-        |SELECT pos, CAST(count(*) AS BIGINT) AS n,
-        |  round(min(mn) + 1e-9, 5) AS mn_r, round(max(mx) + 1e-9, 5) AS mx_r,
-        |  CAST(count(DISTINCT code) AS BIGINT) AS n_codes,
-        |  CAST(min(code) AS INT) AS code_min, CAST(max(code) AS INT) AS code_max,
-        |  round(avg(abs(x - xq)) + 1e-9, 6) AS mean_abs_err_r
-        |FROM q GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // IVF-PQ mirror: coarse routing (max-dot assignment, top-nProbe probe
-    // sets — ties to the lowest cid on both engines), candidate pairs from
-    // probed-list membership, then the q_pq_topk ADC recomputation
-    // restricted to those candidates. All constants read from the two
-    // materialized index structures.
-    "q_ivfpq_topk" ->
-      s"""WITH ct AS (SELECT cid, c FROM '$IvfPqCentroidsDir/*.parquet'),
-         |cb AS (SELECT sub, code, c FROM '$IvfPqCodebooksDir/*.parquet'),
-         |cd AS (SELECT e.vec_id, ct.cid,
-         |    list_dot_product(e.embedding::DOUBLE[], ct.c) AS dp
-         |  FROM embeddings e CROSS JOIN ct),
-         |asgc AS (SELECT vec_id, cid FROM (
-         |    SELECT vec_id, cid,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dp DESC, cid) AS rn
-         |    FROM cd) z WHERE rn = 1),
-         |probe AS (SELECT vec_id AS ia, cid FROM (
-         |    SELECT vec_id, cid,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dp DESC, cid) AS rn
-         |    FROM cd WHERE vec_id < 20) z WHERE rn <= 3),
-         |sv AS (SELECT e.vec_id, s.sub,
-         |    list_slice(e.embedding, s.sub * 8 + 1, s.sub * 8 + 8)::DOUBLE[] AS v
-         |  FROM embeddings e
-         |  CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s),
-         |d AS (SELECT sv.vec_id, sv.sub, cb.code,
-         |    (list_dot_product(sv.v, sv.v) - 2.0 * list_dot_product(sv.v, cb.c))
-         |      + list_dot_product(cb.c, cb.c) AS d
-         |  FROM sv JOIN cb ON cb.sub = sv.sub),
-         |asg AS (SELECT vec_id AS ib, sub, code FROM (
-         |    SELECT vec_id, sub, code,
-         |      row_number() OVER (PARTITION BY vec_id, sub ORDER BY d, code) AS rn
-         |    FROM d) z WHERE rn = 1),
-         |cand AS (SELECT DISTINCT p.ia, mem.vec_id AS ib
-         |  FROM probe p JOIN asgc mem ON mem.cid = p.cid AND mem.vec_id <> p.ia),
-         |qd AS (SELECT vec_id AS ia, sub, code, d FROM d WHERE vec_id < 20),
-         |sc AS (SELECT c.ia, c.ib, round(sum(q.d) + 1e-9, 4) AS adist_r
-         |  FROM cand c JOIN asg a ON a.ib = c.ib
-         |  JOIN qd q ON q.ia = c.ia AND q.sub = a.sub AND q.code = a.code
-         |  GROUP BY 1, 2),
-         |rk AS (SELECT ia, ib, adist_r,
-         |    row_number() OVER (PARTITION BY ia ORDER BY adist_r, ib) AS rank
-         |  FROM sc)
-         |SELECT ia, CAST(rank AS INT) AS rank, ib, adist_r
-         |FROM rk WHERE rank <= 5 ORDER BY ia, rank""".stripMargin,
-
-    // Residual IVF-PQ cosine mirror: routing, FLOAT residual subtraction,
-    // per-vector residual codes, ADC L2 sums over the query's per-list
-    // residual, and the polarization-identity score with true-norm
-    // sidecars — candidate restriction AND score algebra replayed from
-    // the same materialized constants.
-    "q_ivfpq_residual_cos" ->
-      s"""WITH ct AS (SELECT cid, c FROM '$IvfPqResCentroidsDir/*.parquet'),
-         |cb AS (SELECT sub, code, c FROM '$IvfPqResCodebooksDir/*.parquet'),
-         |cd AS (SELECT e.vec_id, ct.cid,
-         |    list_dot_product(e.embedding::DOUBLE[], ct.c) AS dp
-         |  FROM embeddings e CROSS JOIN ct),
-         |asgc AS (SELECT vec_id, cid FROM (
-         |    SELECT vec_id, cid,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dp DESC, cid) AS rn
-         |    FROM cd) z WHERE rn = 1),
-         |probe AS (SELECT vec_id AS ia, cid FROM (
-         |    SELECT vec_id, cid,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dp DESC, cid) AS rn
-         |    FROM cd WHERE vec_id < 20) z WHERE rn <= 3),
-         |rv AS (SELECT e.vec_id, list_transform(generate_series(1, 64),
-         |      i -> CAST(CAST(e.embedding[i] AS FLOAT)
-         |        - CAST(ct.c[i] AS FLOAT) AS DOUBLE)) AS r
-         |  FROM embeddings e JOIN asgc a USING (vec_id)
-         |    JOIN ct ON ct.cid = a.cid),
-         |sv AS (SELECT rv.vec_id, s.sub,
-         |    list_slice(rv.r, s.sub * 8 + 1, s.sub * 8 + 8) AS v
-         |  FROM rv CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s),
-         |d AS (SELECT sv.vec_id, sv.sub, cb.code,
-         |    (list_dot_product(sv.v, sv.v) - 2.0 * list_dot_product(sv.v, cb.c))
-         |      + list_dot_product(cb.c, cb.c) AS d
-         |  FROM sv JOIN cb ON cb.sub = sv.sub),
-         |asg AS (SELECT vec_id AS ib, sub, code FROM (
-         |    SELECT vec_id, sub, code,
-         |      row_number() OVER (PARTITION BY vec_id, sub ORDER BY d, code) AS rn
-         |    FROM d) z WHERE rn = 1),
-         |qrv AS (SELECT p.ia, p.cid, list_transform(generate_series(1, 64),
-         |      i -> CAST(CAST(e.embedding[i] AS FLOAT)
-         |        - CAST(ct.c[i] AS FLOAT) AS DOUBLE)) AS r
-         |  FROM probe p JOIN embeddings e ON e.vec_id = p.ia
-         |    JOIN ct ON ct.cid = p.cid),
-         |qsv AS (SELECT q.ia, q.cid, s.sub,
-         |    list_slice(q.r, s.sub * 8 + 1, s.sub * 8 + 8) AS v
-         |  FROM qrv q CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS sub) s),
-         |qd AS (SELECT q.ia, q.cid, q.sub, cb.code,
-         |    (list_dot_product(q.v, q.v) - 2.0 * list_dot_product(q.v, cb.c))
-         |      + list_dot_product(cb.c, cb.c) AS d
-         |  FROM qsv q JOIN cb ON cb.sub = q.sub),
-         |nrm AS (SELECT vec_id,
-         |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS n
-         |  FROM embeddings),
-         |cand AS (SELECT DISTINCT p.ia, p.cid, mem.vec_id AS ib
-         |  FROM probe p JOIN asgc mem ON mem.cid = p.cid AND mem.vec_id <> p.ia),
-         |sc AS (SELECT c.ia, c.ib,
-         |    round((qn.n * qn.n + nn.n * nn.n - sum(q.d))
-         |      / (2.0 * qn.n * nn.n) + 1e-9, 4) AS cos_r
-         |  FROM cand c JOIN asg a ON a.ib = c.ib
-         |  JOIN qd q ON q.ia = c.ia AND q.cid = c.cid
-         |    AND q.sub = a.sub AND q.code = a.code
-         |  JOIN nrm qn ON qn.vec_id = c.ia
-         |  JOIN nrm nn ON nn.vec_id = c.ib
-         |  GROUP BY c.ia, c.ib, qn.n, nn.n),
-         |rk AS (SELECT ia, ib, cos_r,
-         |    row_number() OVER (PARTITION BY ia ORDER BY cos_r DESC, ib) AS rank
-         |  FROM sc)
-         |SELECT ia, CAST(rank AS INT) AS rank, ib, cos_r
-         |FROM rk WHERE rank <= 5 ORDER BY ia, rank""".stripMargin,
-
-    "q_random_projection" ->
-      (s"""WITH p AS (SELECT plane, w FROM '$RpPlanesDir/*.parquet'),
-        |d AS (SELECT e.vec_id, p.plane,
-        |    list_dot_product(e.embedding::DOUBLE[], p.w) * sqrt(3.0 / 8.0) AS comp
-        |  FROM embeddings e CROSS JOIN p)
-        |SELECT vec_id,
-        |""".stripMargin +
-        (0 until 8).map(j =>
-          s"  round(max(CASE WHEN plane = $j THEN comp END) + 1e-9, 6) AS r$j")
-          .mkString(",\n") +
-        "\nFROM d GROUP BY 1 ORDER BY 1"),
-
-    "q_topk_cosine" ->
-      s"""WITH sc AS (SELECT a.vec_id AS ia, b.vec_id AS ib,
-         |  round(${cosSql("a", "b")} + 1e-9, 4) AS cos_r
-         |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-         |  WHERE a.vec_id < 20),
-         |r AS (SELECT ia, ib, cos_r,
-         |  CAST(row_number() OVER (PARTITION BY ia ORDER BY cos_r DESC, ib) AS INTEGER) AS rank
-         |  FROM sc)
-         |SELECT ia, rank, ib, cos_r FROM r WHERE rank <= 5 ORDER BY ia, rank""".stripMargin,
-
-    // Same mirror as q_topk_cosine: at nProbe = k the IVF search is
-    // exhaustive by construction.
-    "q_ivf_topk" ->
-      s"""WITH sc AS (SELECT a.vec_id AS ia, b.vec_id AS ib,
-         |  round(${cosSql("a", "b")} + 1e-9, 4) AS cos_r
-         |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-         |  WHERE a.vec_id < 20),
-         |r AS (SELECT ia, ib, cos_r,
-         |  CAST(row_number() OVER (PARTITION BY ia ORDER BY cos_r DESC, ib) AS INTEGER) AS rank
-         |  FROM sc)
-         |SELECT ia, rank, ib, cos_r FROM r WHERE rank <= 5 ORDER BY ia, rank""".stripMargin,
-
-    // append path: exhaustive probe over the loaded committed read set
-    // equals brute-force — same oracle as q_ivf_topk by construction
-    "q_ivf_append" ->
-      s"""WITH sc AS (SELECT a.vec_id AS ia, b.vec_id AS ib,
-         |  round(${cosSql("a", "b")} + 1e-9, 4) AS cos_r
-         |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-         |  WHERE a.vec_id < 20),
-         |r AS (SELECT ia, ib, cos_r,
-         |  CAST(row_number() OVER (PARTITION BY ia ORDER BY cos_r DESC, ib) AS INTEGER) AS rank
-         |  FROM sc)
-         |SELECT ia, rank, ib, cos_r FROM r WHERE rank <= 5 ORDER BY ia, rank""".stripMargin,
-
-    // 5-gram shingle hashes rebuilt with the shared md5 mirror; the join
-    // fan is bounded by the source count on both engines.
-    "q_decontaminate" ->
-      s"""WITH ws AS (SELECT doc_id, source, string_split($NormSql, ' ') AS w
-         |  FROM documents),
-         |pos AS (SELECT doc_id, source, w,
-         |    unnest(generate_series(1, len(w) - 4)) AS i
-         |  FROM ws WHERE len(w) >= 5),
-         |sh AS (SELECT DISTINCT doc_id, source,
-         |    ${hash64Sql("array_to_string(w[i:i+4], ' ')")} AS h
-         |  FROM pos),
-         |ss AS (SELECT DISTINCT source, h FROM sh),
-         |shared AS (SELECT a.source AS src_a, b.source AS src_b,
-         |    CAST(count(DISTINCT a.h) AS BIGINT) AS n_shared_shingles
-         |  FROM ss a JOIN ss b ON a.h = b.h AND a.source < b.source
-         |  GROUP BY 1, 2),
-         |cont AS (SELECT s.source AS src_a, t.source AS src_b, s.doc_id
-         |  FROM sh s JOIN ss t ON s.h = t.h AND s.source <> t.source),
-         |cd AS (SELECT src_a, src_b, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-         |  FROM cont GROUP BY 1, 2)
-         |SELECT sp.src_a, sp.src_b, sp.n_shared_shingles,
-         |  ca.n_docs AS n_docs_a, cb.n_docs AS n_docs_b
-         |FROM shared sp
-         |JOIN cd ca ON ca.src_a = sp.src_a AND ca.src_b = sp.src_b
-         |JOIN cd cb ON cb.src_a = sp.src_b AND cb.src_b = sp.src_a
-         |ORDER BY 1, 2""".stripMargin,
-
-    // Per-POSITION 5-gram hashes (no distinct — coverage counts slots);
-    // the doc frequency joins back on the hash, dup means df > 1.
-    "q_dup_spans" ->
-      s"""WITH ws AS (SELECT doc_id, string_split($NormSql, ' ') AS w
-         |  FROM documents),
-         |pos AS (SELECT doc_id,
-         |    ${hash64Sql("array_to_string(w[i:i+4], ' ')")} AS h
-         |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 4)) AS i
-         |        FROM ws WHERE len(w) >= 5) t),
-         |dfq AS (SELECT h, count(DISTINCT doc_id) AS df FROM pos GROUP BY 1),
-         |cov AS (SELECT p.doc_id, CAST(count(*) AS BIGINT) AS n_spans,
-         |    CAST(sum(CASE WHEN d.df > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
-         |  FROM pos p JOIN dfq d ON d.h = p.h GROUP BY 1)
-         |SELECT doc_id, n_spans, n_dup,
-         |  round(CAST(n_dup AS DOUBLE) / n_spans + 1e-9, 4) AS dup_frac
-         |FROM cov ORDER BY doc_id""".stripMargin,
-
-    // Span-removal mirror: same 5-gram df, dup start flags windowed over
-    // dense 1-based positions (ROWS 4 PRECEDING), surviving tokens
-    // re-concatenated in order — the md5 pins the full cleaned text.
-    "q_dup_span_removal" ->
-      s"""WITH ws AS (SELECT doc_id, string_split($NormSql, ' ') AS w
-         |  FROM documents),
-         |tok AS (SELECT doc_id, w[t.i] AS tok, t.i AS i
-         |  FROM ws, LATERAL (SELECT unnest(range(1, len(w) + 1)) AS i) t),
-         |st AS (SELECT doc_id, i,
-         |    ${hash64Sql("array_to_string(w[i:i+4], ' ')")} AS h
-         |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 4)) AS i
-         |        FROM ws WHERE len(w) >= 5) t),
-         |dfq AS (SELECT h, count(DISTINCT doc_id) AS df FROM st GROUP BY 1),
-         |ds AS (SELECT doc_id, i, CASE WHEN df > 1 THEN 1 ELSE 0 END AS dup
-         |  FROM st JOIN dfq USING (h)),
-         |m AS (SELECT t.doc_id, t.i, t.tok, coalesce(ds.dup, 0) AS dup
-         |  FROM tok t LEFT JOIN ds ON ds.doc_id = t.doc_id AND ds.i = t.i),
-         |cov AS (SELECT doc_id, i, tok,
-         |    max(dup) OVER (PARTITION BY doc_id ORDER BY i
-         |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS c
-         |  FROM m)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  CAST(sum(c) AS BIGINT) AS n_removed,
-         |  md5(coalesce(string_agg(CASE WHEN c = 0 THEN tok END, ' ' ORDER BY i), ''))
-         |    AS clean_md5
-         |FROM cov GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // Embedding-outlier mirror: assignment against the materialized
-    // quantizer (argmax dot, ties -> lowest cid), cosine to the OWN
-    // centroid with its list_dot_product norm, identical rounded z gate.
-    "q_embedding_outliers" ->
-      s"""WITH cent AS (SELECT cid, w FROM '$EmbOutCentroidsDir/*.parquet'),
-         |sc AS (SELECT e.vec_id, c.cid,
-         |    list_dot_product(e.embedding::DOUBLE[], c.w) AS s,
-         |    sqrt(list_dot_product(e.embedding::DOUBLE[],
-         |      e.embedding::DOUBLE[])) AS vn,
-         |    sqrt(list_dot_product(c.w, c.w)) AS cn
-         |  FROM embeddings e CROSS JOIN cent c),
-         |asg AS (SELECT vec_id, cid, s / (vn * cn) AS cos_c FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY s DESC, cid) AS rn FROM sc) z WHERE rn = 1),
-         |st AS (SELECT cid, avg(cos_c) AS mu, stddev_pop(cos_c) AS sd,
-         |    CAST(count(*) AS BIGINT) AS n_total
-         |  FROM asg GROUP BY 1),
-         |kept AS (SELECT a.cid, a.cos_c FROM asg a JOIN st USING (cid)
-         |  WHERE sd = 0 OR round(abs((cos_c - mu) / sd) + 1e-9, 6) <= 2.0)
-         |SELECT CAST(k.cid AS INT) AS cid, st.n_total,
-         |  CAST(count(*) AS BIGINT) AS n_kept,
-         |  round(sum(k.cos_c) + 1e-9, 4) AS sum_cos
-         |FROM kept k JOIN st USING (cid)
-         |GROUP BY 1, 2 ORDER BY cid""".stripMargin,
-
-    // SemDedup mirror: assignment = argmax dot (ties -> lowest cid) against
-    // the materialized quantizer — double-widened dots are bit-identical —
-    // then within-cluster pairs at the rounded cosine and the same
-    // recursive-CTE component resolution as q_dedup_clusters.
-    "q_semantic_dedup" ->
-      s"""WITH RECURSIVE
-         |cent AS (SELECT cid, w FROM '$SemCentroidsDir/*.parquet'),
-         |sc AS (SELECT e.vec_id AS id, c.cid,
-         |    list_dot_product(e.embedding::DOUBLE[], c.w) AS s
-         |  FROM embeddings e CROSS JOIN cent c),
-         |asg AS (SELECT id, cid FROM (SELECT id, cid,
-         |    row_number() OVER (PARTITION BY id ORDER BY s DESC, cid) AS rn
-         |  FROM sc) z WHERE rn = 1),
-         |p AS (SELECT a.vec_id AS da, b.vec_id AS db
-         |  FROM embeddings a
-         |  JOIN asg ia ON ia.id = a.vec_id
-         |  JOIN embeddings b ON b.vec_id > a.vec_id
-         |  JOIN asg ib ON ib.id = b.vec_id AND ib.cid = ia.cid
-         |  WHERE round(${cosSql("a", "b")} + 1e-9, 4) >= 0.3),
-         |sym(x, y) AS (SELECT da, db FROM p UNION SELECT db, da FROM p),
-         |walk(node, label) AS (
-         |  SELECT vec_id, vec_id FROM embeddings
-         |  UNION
-         |  SELECT s.y, w.label FROM walk w JOIN sym s ON s.x = w.node)
-         |SELECT w.node AS vec_id, CAST(a2.cid AS INT) AS cid,
-         |  CAST(min(w.label) AS BIGINT) AS component,
-         |  w.node = min(w.label) AS is_survivor
-         |FROM walk w JOIN asg a2 ON a2.id = w.node
-         |GROUP BY w.node, a2.cid ORDER BY 1""".stripMargin,
-
-    // Gopher rules mirror: every fraction is an exact integer ratio
-    // (identical doubles both engines), so the unrounded threshold
-    // comparisons in `passes` agree bit-for-bit; display values are
-    // eps-rounded as usual.
-    "q_gopher_rules" ->
-      s"""WITH ww AS (SELECT doc_id, w
-         |  FROM (SELECT doc_id, unnest(string_split($NormSql, ' ')) AS w
-         |        FROM documents) t WHERE w <> ''),
-         |wa AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         |    avg(CAST(length(w) AS DOUBLE)) AS mwl,
-         |    avg(CASE WHEN regexp_matches(w, '[a-z]') THEN 1.0 ELSE 0.0 END) AS awf,
-         |    CAST(sum(CASE WHEN w IN ('the','be','to','of','and','that','have','with')
-         |         THEN 1 ELSE 0 END) AS BIGINT) AS nstop
-         |  FROM ww GROUP BY 1),
-         |la AS (SELECT doc_id,
-         |    avg(CASE WHEN regexp_matches(trim(ln), '^[-*•]') THEN 1.0 ELSE 0.0 END) AS blf,
-         |    avg(CASE WHEN regexp_matches(trim(ln), '\\.\\.\\.$$') THEN 1.0 ELSE 0.0 END) AS elf
-         |  FROM (SELECT doc_id, unnest(string_split(text, chr(10))) AS ln
-         |        FROM documents) t GROUP BY 1),
-         |sy AS (SELECT doc_id,
-         |    CAST(len(regexp_extract_all(text, '#')) +
-         |         len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS nsym
-         |  FROM documents)
-         |SELECT wa.doc_id, n_words,
-         |  round(mwl + 1e-9, 4) AS mean_word_len,
-         |  round(awf + 1e-9, 4) AS alpha_word_frac,
-         |  nstop AS n_stop_hits,
-         |  round(blf + 1e-9, 4) AS bullet_line_frac,
-         |  round(elf + 1e-9, 4) AS ellipsis_line_frac,
-         |  nsym AS n_symbols,
-         |  round(CAST(nsym AS DOUBLE) / n_words + 1e-9, 4) AS symbol_ratio,
-         |  (n_words >= 20 AND n_words <= 100000 AND mwl >= 3 AND mwl <= 10
-         |   AND CAST(nsym AS DOUBLE) / n_words < 0.1 AND blf < 0.9
-         |   AND elf < 0.3 AND awf >= 0.8 AND nstop >= 2) AS passes
-         |FROM wa JOIN la ON la.doc_id = wa.doc_id
-         |JOIN sy ON sy.doc_id = wa.doc_id
-         |ORDER BY wa.doc_id""".stripMargin,
-
-    // Unigram LM mirror: the same corpus vocabulary counts, the same
-    // exact c/N division, ln() differing only in the last ulp (absorbed
-    // by the eps round).
-    "q_unigram_lm" ->
-      s"""WITH t AS (SELECT doc_id, unnest(string_split($NormSql, ' ')) AS tok
-         |  FROM documents),
-         |tt AS (SELECT doc_id, tok FROM t WHERE tok <> ''),
-         |v AS (SELECT tok, count(*) AS c FROM tt GROUP BY 1),
-         |n AS (SELECT CAST(sum(c) AS BIGINT) AS nt FROM v)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  round(avg(ln(CAST(c AS DOUBLE) / nt)) + 1e-9, 4) AS avg_logp
-         |FROM tt JOIN v USING (tok) CROSS JOIN n
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // NB mirror: Laplace likelihoods, priors, and the open-vocabulary
-    // floor recomputed from the same doc_id % 5 split; the predicted
-    // flag ranks ROUNDED scores (ties by label), engine-exact.
-    "q_nb_classify" ->
-      s"""WITH tr AS (SELECT doc_id, lang, $NormSql AS nt
-         |  FROM documents WHERE doc_id % 5 <> 0),
-         |te AS (SELECT doc_id, $NormSql AS nt
-         |  FROM documents WHERE doc_id % 5 = 0),
-         |trk AS (SELECT lang, tok FROM (
-         |    SELECT lang, unnest(string_split(nt, ' ')) AS tok FROM tr) z
-         |  WHERE tok <> ''),
-         |ltc AS (SELECT lang, tok, count(*) AS c FROM trk GROUP BY 1, 2),
-         |lt AS (SELECT lang, CAST(sum(c) AS BIGINT) AS t FROM ltc GROUP BY 1),
-         |v AS (SELECT count(DISTINCT tok) AS v FROM trk),
-         |pri AS (SELECT lang, count(*) AS d FROM tr GROUP BY 1),
-         |nd AS (SELECT count(*) AS nd FROM tr),
-         |tet AS (SELECT doc_id, tok FROM (
-         |    SELECT doc_id, unnest(string_split(nt, ' ')) AS tok FROM te) z
-         |  WHERE tok <> ''),
-         |ten AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
-         |  FROM tet GROUP BY 1),
-         |iv AS (SELECT tet.doc_id, ltc.lang,
-         |    sum(ln((ltc.c + 1.0) / (lt.t + v.v))) AS s, count(*) AS k
-         |  FROM tet JOIN ltc USING (tok) JOIN lt USING (lang) CROSS JOIN v
-         |  GROUP BY 1, 2),
-         |base AS (SELECT te.doc_id, pri.lang,
-         |    ln(CAST(pri.d AS DOUBLE) / nd.nd) AS lp, lt.t
-         |  FROM te CROSS JOIN pri JOIN lt USING (lang) CROSS JOIN nd),
-         |sc AS (SELECT base.doc_id, base.lang,
-         |    base.lp + coalesce(iv.s, 0) +
-         |      (coalesce(ten.n, 0) - coalesce(iv.k, 0))
-         |        * ln(1.0 / (base.t + v.v)) AS score,
-         |    coalesce(ten.n, 0) AS n_tokens
-         |  FROM base CROSS JOIN v
-         |  LEFT JOIN iv ON base.doc_id = iv.doc_id AND base.lang = iv.lang
-         |  LEFT JOIN ten ON ten.doc_id = base.doc_id)
-         |SELECT doc_id, lang AS label, round(score + 1e-9, 4) AS score_r,
-         |  (row_number() OVER (PARTITION BY doc_id
-         |     ORDER BY round(score + 1e-9, 4) DESC, lang) = 1) AS predicted,
-         |  CAST(n_tokens AS BIGINT) AS n_tokens
-         |FROM sc ORDER BY doc_id, label""".stripMargin,
-
-    // Fertility mirror over the shared BPE re-encode CTE.
-    "q_tokenizer_fertility" ->
-      s"""WITH RECURSIVE $bpeCtes
-         |SELECT b.lang, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(b.n_bpe_tokens) AS BIGINT) AS n_tokens,
-         |  CAST(sum(length(d.text)) AS BIGINT) AS n_chars,
-         |  round(sum(b.n_bpe_tokens) * 1.0 / sum(length(d.text)) + 1e-9, 6)
-         |    AS fertility_r
-         |FROM doc_bpe b JOIN documents d USING (doc_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Length-bucket mirror over the shared BPE re-encode CTE: same capped
-    // counts, same floor-div bucket rule, same waste ratios.
-    "q_length_buckets" ->
-      s"""WITH RECURSIVE $bpeCtes,
-         |cap AS (SELECT doc_id, least(n_bpe_tokens, 256) AS c FROM doc_bpe),
-         |b AS (SELECT doc_id, c,
-         |    CAST(floor((c + 31) / 32) AS BIGINT) * 32 AS bucket_len FROM cap),
-         |g AS (SELECT bucket_len, CAST(count(*) AS BIGINT) AS n_seqs,
-         |    CAST(sum(c) AS BIGINT) AS sum_tokens
-         |  FROM b GROUP BY 1)
-         |SELECT bucket_len, n_seqs, sum_tokens,
-         |  bucket_len * n_seqs AS n_padded,
-         |  round(CASE WHEN bucket_len * n_seqs > 0
-         |        THEN 1.0 - CAST(sum_tokens AS DOUBLE) / (bucket_len * n_seqs)
-         |        ELSE 0.0 END + 1e-9, 6) AS waste_frac_r
-         |FROM g ORDER BY 1""".stripMargin,
-
-    // CDC mirror: 1-based end positions carry the boundary flags, the
-    // cumulative window closes chunks, chunk md5s and the corpus dedup
-    // join are rebuilt from scratch.
-    "q_cdc_chunks" ->
-      s"""WITH ws AS (SELECT doc_id, string_split($NormSql, ' ') AS w
-         |  FROM documents),
-         |nz AS (SELECT * FROM ws WHERE len(w) > 0),
-         |ends AS (SELECT doc_id, i + 2 AS p,
-         |    CASE WHEN ${hash64Sql("array_to_string(w[i:i+2], ' ')")} % 8 = 0
-         |         THEN 1 ELSE 0 END AS flag
-         |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i
-         |        FROM nz WHERE len(w) >= 3) t),
-         |tok AS (SELECT doc_id, w[t.i] AS tok, t.i AS p
-         |  FROM nz, LATERAL (SELECT unnest(range(1, len(w) + 1)) AS i) t),
-         |m AS (SELECT t.doc_id, t.p, t.tok, coalesce(e.flag, 0) AS flag
-         |  FROM tok t LEFT JOIN ends e ON e.doc_id = t.doc_id AND e.p = t.p),
-         |c AS (SELECT doc_id, p, tok,
-         |    coalesce(sum(flag) OVER (PARTITION BY doc_id ORDER BY p
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk
-         |  FROM m),
-         |ch AS (SELECT doc_id, chunk, CAST(count(*) AS BIGINT) AS n_tokens,
-         |    md5(string_agg(tok, ' ' ORDER BY p)) AS h
-         |  FROM c GROUP BY 1, 2),
-         |fr AS (SELECT h, count(DISTINCT doc_id) AS df FROM ch GROUP BY 1)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-         |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-         |  CAST(max(n_tokens) AS BIGINT) AS max_chunk,
-         |  CAST(sum(CASE WHEN df > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks
-         |FROM ch JOIN fr USING (h) GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // CCNet bucket mirror: same rounded mean log-prob → rounded
-    // perplexity → rounded quantile_cont tertiles → CASE split.
-    "q_perplexity_buckets" ->
-      s"""WITH t AS (SELECT doc_id, unnest(string_split($NormSql, ' ')) AS tok
-         |  FROM documents),
-         |tt AS (SELECT doc_id, tok FROM t WHERE tok <> ''),
-         |v AS (SELECT tok, count(*) AS c FROM tt GROUP BY 1),
-         |n AS (SELECT CAST(sum(c) AS BIGINT) AS nt FROM v),
-         |lp AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |    round(avg(ln(CAST(c AS DOUBLE) / nt)) + 1e-9, 4) AS lr
-         |  FROM tt JOIN v USING (tok) CROSS JOIN n GROUP BY doc_id),
-         |pp AS (SELECT doc_id, n_tokens, round(exp(-lr) + 1e-9, 4) AS pp_r
-         |  FROM lp),
-         |th AS (SELECT round(quantile_cont(pp_r, 1.0/3) + 1e-9, 4) AS t1,
-         |    round(quantile_cont(pp_r, 2.0/3) + 1e-9, 4) AS t2 FROM pp)
-         |SELECT doc_id, n_tokens, pp_r,
-         |  CASE WHEN pp_r <= t1 THEN 'head'
-         |       WHEN pp_r <= t2 THEN 'middle' ELSE 'tail' END AS bucket
-         |FROM pp CROSS JOIN th ORDER BY doc_id""".stripMargin,
-
-    // Chunking mirror over the REAL BPE token stream: the shared encode
-    // CTE rebuilds each document's token list, then the same slice/md5
-    // geometry as before runs over tokenizer tokens.
-    "q_chunk_tokens" ->
-      s"""WITH RECURSIVE $bpeCtes,
-         |d AS (SELECT doc_id, toks FROM doc_bpe WHERE len(toks) > 0),
-         |c AS (SELECT doc_id, CAST(i.i AS INTEGER) AS chunk_idx, toks
-         |  FROM d, LATERAL (SELECT unnest(range((len(toks) - 1) // 48 + 1)) AS i) i)
-         |SELECT doc_id, chunk_idx,
-         |  CAST(chunk_idx * 48 AS INTEGER) AS start_tok,
-         |  CAST(least(64, len(toks) - chunk_idx * 48) AS INTEGER) AS n_tok,
-         |  md5(array_to_string(toks[(chunk_idx * 48 + 1):(chunk_idx * 48 + 64)], ' '))
-         |    AS chunk_md5
-         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // Full BPE-encode mirror: DuckDB re-runs the encode itself (recursive
-    // CTE over the materialized merges), then hashes the rebuilt stream.
-    "q_bpe_encode" ->
-      s"""WITH RECURSIVE $bpeCtes
-         |SELECT doc_id, n_pretokens, n_bpe_tokens,
-         |  md5(array_to_string(toks, ' ')) AS tok_md5
-         |FROM doc_bpe ORDER BY doc_id""".stripMargin,
-
-    // WordPiece mirror: vocabulary recomputed from scratch (position-
-    // classed n-grams) and the greedy walk replayed in a recursive CTE,
-    // longest match per step via a correlated max.
-    "q_wordpiece_tokenize" ->
-      s"""WITH RECURSIVE
-         |words AS (SELECT DISTINCT unnest(regexp_extract_all(text,
-         |    '${Text.BpePattern}')) AS w FROM documents),
-         |vocab AS (SELECT DISTINCT
-         |    CASE WHEN CAST(t.i AS INT) > 1 THEN '##' ELSE '' END
-         |      || substr(w, CAST(t.i AS INT), n) AS piece
-         |  FROM words,
-         |    LATERAL (SELECT unnest(range(1, len(w) + 1)) AS i) t,
-         |    (SELECT unnest([1, 2, 3, 4]) AS n) nn
-         |  WHERE t.i + n - 1 <= len(w)),
-         |walk(w, pos, ntok, unk) AS (
-         |  SELECT w, 0, CAST(0 AS BIGINT), FALSE FROM words
-         |  UNION ALL
-         |  SELECT w, CASE WHEN ml IS NULL THEN len(w) ELSE pos + ml END,
-         |    CASE WHEN ml IS NULL THEN CAST(1 AS BIGINT) ELSE ntok + 1 END,
-         |    ml IS NULL
-         |  FROM (
-         |    SELECT w, pos, ntok,
-         |      (SELECT max(n) FROM (SELECT unnest([1, 2, 3, 4]) AS n) t
-         |       JOIN vocab v ON v.piece =
-         |         (CASE WHEN pos > 0 THEN '##' ELSE '' END)
-         |           || substr(w, CAST(pos + 1 AS INT), CAST(n AS INT))
-         |       WHERE pos + n <= len(w)) AS ml
-         |    FROM walk WHERE pos < len(w) AND NOT unk)),
-         |fin AS (SELECT w, ntok, CASE WHEN unk THEN 1 ELSE 0 END AS u
-         |  FROM walk WHERE pos = len(w)),
-         |dw AS (SELECT doc_id, ws[CAST(t.i AS INT)] AS w
-         |  FROM (SELECT doc_id, regexp_extract_all(text, '${Text.BpePattern}') AS ws
-         |        FROM documents) d,
-         |  LATERAL (SELECT unnest(range(1, len(ws) + 1)) AS i) t),
-         |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pretokens,
-         |    CAST(sum(f.ntok) AS BIGINT) AS n_wp_tokens,
-         |    CAST(sum(f.u) AS BIGINT) AS n_unk
-         |  FROM dw JOIN fin f USING (w) GROUP BY 1)
-         |SELECT d.doc_id, coalesce(a.n_pretokens, 0) AS n_pretokens,
-         |  coalesce(a.n_wp_tokens, 0) AS n_wp_tokens,
-         |  coalesce(a.n_unk, 0) AS n_unk
-         |FROM documents d LEFT JOIN agg a USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    // Unigram mirror: vocabulary recomputed from scratch (n-gram census
-    // over distinct pre-token words, integer |p|² + ⌊log₂ c⌋ scores) and
-    // the Viterbi replayed by exhaustive path enumeration with the same
-    // (max score, min pieces) total order.
-    "q_unigram_tokenize" -> {
-      val ilog2 = (40 to 1 by -1)
-        .map(b => s"WHEN count(*) >= ${1L << b} THEN $b").mkString(" ")
-      s"""WITH RECURSIVE
-         |words AS (SELECT DISTINCT unnest(regexp_extract_all(text,
-         |    '${Text.BpePattern}')) AS w FROM documents),
-         |occ AS (SELECT substr(w, CAST(t.i AS INT), n) AS piece
-         |  FROM words,
-         |    LATERAL (SELECT unnest(range(1, len(w) + 1)) AS i) t,
-         |    (SELECT unnest([1, 2, 3, 4]) AS n) nn
-         |  WHERE t.i + n - 1 <= len(w)),
-         |vocab AS (SELECT piece,
-         |    CAST(len(piece) * len(piece) + CASE $ilog2 ELSE 0 END AS BIGINT) AS s
-         |  FROM occ GROUP BY piece),
-         |paths(w, j, score, np) AS (
-         |  SELECT w, 0, CAST(0 AS BIGINT), CAST(0 AS BIGINT) FROM words
-         |  UNION
-         |  SELECT p.w, p.j + len(v.piece), p.score + v.s, p.np + 1
-         |  FROM paths p JOIN vocab v
-         |    ON substr(p.w, CAST(p.j + 1 AS INT), CAST(len(v.piece) AS INT)) = v.piece
-         |  WHERE p.j < len(p.w)),
-         |best AS (SELECT w, score, np FROM (
-         |  SELECT w, score, np,
-         |    row_number() OVER (PARTITION BY w ORDER BY score DESC, np ASC) AS rn
-         |  FROM paths WHERE j = len(w)) WHERE rn = 1),
-         |dw AS (SELECT doc_id, ws[CAST(t.i AS INT)] AS w
-         |  FROM (SELECT doc_id, regexp_extract_all(text, '${Text.BpePattern}') AS ws
-         |        FROM documents) d,
-         |  LATERAL (SELECT unnest(range(1, len(ws) + 1)) AS i) t),
-         |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pretokens,
-         |    CAST(sum(b.score) AS BIGINT) AS total_score,
-         |    CAST(sum(b.np) AS BIGINT) AS n_pieces
-         |  FROM dw JOIN best b USING (w) GROUP BY 1)
-         |SELECT d.doc_id, coalesce(a.n_pretokens, 0) AS n_pretokens,
-         |  coalesce(a.total_score, 0) AS total_score,
-         |  coalesce(a.n_pieces, 0) AS n_pieces
-         |FROM documents d LEFT JOIN agg a USING (doc_id)
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    // Round-trip mirror: the oracle re-derives the id vocabulary
-    // (lexicographic rank over its own recomputed token set), the id-sum
-    // checksum, and the reconstruction md5 from an INDEPENDENT pre-token
-    // concatenation — decode must land byte-identical.
-    "q_bpe_roundtrip" ->
-      s"""WITH RECURSIVE $bpeCtes,
-         |vocab AS (SELECT tok, CAST(row_number() OVER (ORDER BY tok) - 1 AS BIGINT) AS id
-         |  FROM (SELECT DISTINCT unnest(toks) AS tok FROM doc_bpe)),
-         |tp AS (SELECT doc_id, toks[t.i] AS tok, t.i AS i
-         |  FROM doc_bpe, LATERAL (SELECT unnest(range(1, len(toks) + 1)) AS i) t),
-         |j AS (SELECT doc_id, i, tok, id FROM tp JOIN vocab USING (tok)),
-         |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |    CAST(sum(id) AS BIGINT) AS sum_ids,
-         |    md5(string_agg(tok, '' ORDER BY i)) AS recon_md5
-         |  FROM j GROUP BY doc_id)
-         |SELECT d.doc_id, coalesce(n_tokens, 0) AS n_tokens,
-         |  coalesce(sum_ids, 0) AS sum_ids,
-         |  coalesce(recon_md5, md5('')) AS recon_md5
-         |FROM documents d LEFT JOIN agg USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // Entropy mirror: the same one-pass algebraic split
-    // H = ln(n) − Σ c·ln(c)/n over per-doc token counts.
-    "q_token_entropy" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-        |  FROM documents),
-        |c AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS c
-        |  FROM t WHERE tok <> '' GROUP BY 1, 2),
-        |a AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-        |    CAST(count(*) AS BIGINT) AS n_distinct,
-        |    -sum(c * ln(CAST(c AS DOUBLE))) AS sclogc
-        |  FROM c GROUP BY 1)
-        |SELECT doc_id, n_tokens, n_distinct,
-        |  round(ln(CAST(n_tokens AS DOUBLE)) + sclogc / n_tokens + 1e-9, 4)
-        |    AS entropy
-        |FROM a ORDER BY doc_id""".stripMargin,
-
-    // Bigram LM mirror: parallel unnest zips token and subscript, lag
-    // builds the same bigram stream, counts divide exactly.
-    "q_bigram_lm" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-        |t AS (SELECT doc_id, unnest(l) AS tok,
-        |    unnest(range(1, len(l) + 1)) AS i FROM d),
-        |b AS (SELECT doc_id, lag(tok) OVER (PARTITION BY doc_id ORDER BY i) AS prev,
-        |    tok FROM t),
-        |bg AS (SELECT * FROM b WHERE prev IS NOT NULL),
-        |c2 AS (SELECT prev, tok, CAST(count(*) AS BIGINT) AS c2 FROM bg GROUP BY 1, 2),
-        |c1 AS (SELECT prev, CAST(count(*) AS BIGINT) AS c1 FROM bg GROUP BY 1)
-        |SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        |  round(avg(ln(CAST(c2 AS DOUBLE) / c1)) + 1e-9, 4) AS avg_logp
-        |FROM bg JOIN c2 USING (prev, tok) JOIN c1 USING (prev)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Same bigram stream rebuilt with a list comprehension; the fractions
-    // are exact small-integer ratios, eps-rounded on both sides.
-    "q_repetition" ->
-      """WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-        |  FROM documents),
-        |b AS (SELECT doc_id,
-        |    unnest([ws[i] || ' ' || ws[i + 1] for i in generate_series(1, len(ws) - 1)]) AS bg
-        |  FROM w),
-        |c AS (SELECT doc_id, bg, count(*) AS n FROM b GROUP BY 1, 2)
-        |SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_ngrams,
-        |  round(max(n) * 1.0 / sum(n) + 1e-9, 4) AS top_fraction,
-        |  round(1.0 - count(*) * 1.0 / sum(n) + 1e-9, 4) AS dup_fraction
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_text_quality" ->
-      s"""WITH f AS (SELECT doc_id, length(text) AS n_chars,
-         |    len(string_split($NormSql, ' ')) AS n_tokens,
-         |    len(regexp_extract_all(lower(text), '${StopPatterns("en")}')) AS n_stop,
-         |    length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit
-         |  FROM documents),
-         |g AS (SELECT doc_id, n_chars, n_tokens, n_stop,
-         |    CAST(n_chars - n_tokens + 1 AS DOUBLE) / n_tokens AS atl,
-         |    CAST(n_stop AS DOUBLE) / n_tokens AS sr,
-         |    CAST(n_digit AS DOUBLE) / n_chars AS dr
-         |  FROM f)
-         |SELECT doc_id, n_chars, n_tokens, n_stop AS n_stopwords,
-         |  round(atl + 1e-9, 4) AS avg_token_len, round(sr + 1e-9, 4) AS stop_ratio,
-         |  round(dr + 1e-9, 4) AS digit_ratio,
-         |  round(least(1.0, greatest(0.0, 0.2 + sr * 2.0 + atl * 0.05 - dr * 3.0)) + 1e-9, 4)
-         |    AS quality_score
-         |FROM g ORDER BY doc_id""".stripMargin,
-
-    "q_lang_id" ->
-      s"""WITH sc AS (SELECT doc_id,
-         |    len(regexp_extract_all(lower(text), '${StopPatterns("en")}')) AS s_en,
-         |    len(regexp_extract_all(lower(text), '${StopPatterns("de")}')) AS s_de,
-         |    len(regexp_extract_all(lower(text), '${StopPatterns("fr")}')) AS s_fr,
-         |    len(regexp_extract_all(lower(text), '${StopPatterns("es")}')) AS s_es
-         |  FROM documents),
-         |b AS (SELECT *, greatest(s_en, s_de, s_fr, s_es) AS best FROM sc)
-         |SELECT doc_id, s_en, s_de, s_fr, s_es,
-         |  CASE WHEN s_en = best AND best > 0 THEN 'en'
-         |       WHEN s_de = best AND best > 0 THEN 'de'
-         |       WHEN s_fr = best AND best > 0 THEN 'fr'
-         |       WHEN s_es = best AND best > 0 THEN 'es'
-         |       ELSE 'und' END AS lang_pred
-         |FROM b ORDER BY doc_id""".stripMargin,
-
-    "q_doc_fingerprints" ->
-      s"""SELECT doc_id, md5($NormSql) AS fp FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Eval-metrics mirror: the q_lang_id prediction CTE joined to the
-    // true labels, then per-class counts and the identical rational
-    // metric algebra (0.0 on zero denominators, F1 from the UNROUNDED
-    // precision/recall).
-    "q_classifier_eval" ->
-      s"""WITH sc AS (SELECT doc_id,
-         |    len(regexp_extract_all(lower(text), '${StopPatterns("en")}')) AS s_en,
-         |    len(regexp_extract_all(lower(text), '${StopPatterns("de")}')) AS s_de,
-         |    len(regexp_extract_all(lower(text), '${StopPatterns("fr")}')) AS s_fr,
-         |    len(regexp_extract_all(lower(text), '${StopPatterns("es")}')) AS s_es
-         |  FROM documents),
-         |b AS (SELECT *, greatest(s_en, s_de, s_fr, s_es) AS best FROM sc),
-         |pr AS (SELECT doc_id,
-         |  CASE WHEN s_en = best AND best > 0 THEN 'en'
-         |       WHEN s_de = best AND best > 0 THEN 'de'
-         |       WHEN s_fr = best AND best > 0 THEN 'fr'
-         |       WHEN s_es = best AND best > 0 THEN 'es'
-         |       ELSE 'und' END AS pred
-         |  FROM b),
-         |j AS (SELECT d.lang AS truth, pr.pred
-         |  FROM documents d JOIN pr USING (doc_id)),
-         |t AS (SELECT truth AS label, count(*) AS n_true FROM j GROUP BY 1),
-         |p AS (SELECT pred AS label, count(*) AS n_pred FROM j GROUP BY 1),
-         |c AS (SELECT truth AS label, count(*) AS tp FROM j
-         |  WHERE truth = pred GROUP BY 1),
-         |lbl AS (SELECT label FROM t UNION SELECT label FROM p),
-         |m AS (SELECT lbl.label, coalesce(t.n_true, 0) AS n_true,
-         |    coalesce(p.n_pred, 0) AS n_pred, coalesce(c.tp, 0) AS tp
-         |  FROM lbl LEFT JOIN t USING (label) LEFT JOIN p USING (label)
-         |  LEFT JOIN c USING (label)),
-         |x AS (SELECT label, n_true, n_pred, tp,
-         |    CASE WHEN n_pred > 0 THEN CAST(tp AS DOUBLE) / n_pred
-         |         ELSE 0.0 END AS prec,
-         |    CASE WHEN n_true > 0 THEN CAST(tp AS DOUBLE) / n_true
-         |         ELSE 0.0 END AS rec
-         |  FROM m)
-         |SELECT label, CAST(n_true AS BIGINT) AS n_true,
-         |  CAST(n_pred AS BIGINT) AS n_pred, CAST(tp AS BIGINT) AS tp,
-         |  round(prec + 1e-9, 4) AS precision_r,
-         |  round(rec + 1e-9, 4) AS recall_r,
-         |  round(CASE WHEN prec + rec > 0 THEN 2.0 * prec * rec / (prec + rec)
-         |        ELSE 0.0 END + 1e-9, 4) AS f1_r
-         |FROM x ORDER BY label""".stripMargin,
-
-    "q_token_stats" ->
-      s"""WITH t AS (SELECT lang, source,
-         |    len(regexp_extract_all(text, '${Text.BpePattern}')) AS nt FROM documents)
-         |SELECT lang, source, count(*) AS n_docs, CAST(sum(nt) AS BIGINT) AS sum_tokens,
-         |  round(avg(nt) + 1e-9, 4) AS avg_tokens
-         |FROM t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // Deck numbers are Double.toString round-trips, so the parsed
-    // thickness is the exact mean (v + 2v + 3v + 4v)/4 of the Spark-side
-    // sums; the oracle rebuilds it from its own sums under the eps round.
-    "q_kfile_thickness" ->
-      """WITH s AS (SELECT event_id % 6 AS p, abs(sum(value)) + 1 AS v
-        |  FROM events WHERE event_id % 6 <> 4 GROUP BY 1),
-        |v AS (SELECT spine.p, coalesce(s.v, CAST(1.0 AS DOUBLE)) AS v
-        |  FROM range(6) spine(p) LEFT JOIN s ON s.p = spine.p)
-        |SELECT 'k' || CAST(p // 2 AS VARCHAR) AS mesh_id, p + 1 AS part_id,
-        |  round((v + v * 2 + v * 3 + v * 4) / 4 + 1e-6, 2) AS thickness
-        |FROM v ORDER BY 1, 2""".stripMargin,
-
-    // The WAV/BMP payloads round-trip 16-bit samples and 8-bit channels
-    // exactly, so every feature recomputes straight from events.
-    "q_media_decode" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-        |  FROM events),
-        |wav AS (SELECT g, CAST(count(*) AS BIGINT) AS n_frames,
-        |    round(sqrt(sum(CAST(v * v AS DOUBLE)) / count(*)) + 1e-9, 4) AS rms,
-        |    CAST(max(abs(v)) AS INT) AS peak
-        |  FROM q GROUP BY 1),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-        |  FROM q),
-        |${cycCte(400)},
-        |img AS (SELECT g,
-        |    round(avg(CAST((v % 256 + 256) % 256 AS DOUBLE)) + 1e-9, 4) AS mean_r,
-        |    round(avg(CAST((v * 3 % 256 + 256) % 256 AS DOUBLE)) + 1e-9, 4) AS mean_g,
-        |    round(avg(CAST((v * 7 % 256 + 256) % 256 AS DOUBLE)) + 1e-9, 4) AS mean_b,
-        |    round(avg(CAST((v * 11 % 256 + 256) % 256 AS DOUBLE)) + 1e-9, 4) AS mean_a
-        |  FROM e GROUP BY 1)
-        |SELECT wav.g, 8000 AS sample_rate, 1 AS n_channels, wav.n_frames,
-        |  wav.rms, wav.peak, 16 AS width, 25 AS height,
-        |  img.mean_r, img.mean_g, img.mean_b,
-        |  20 AS png_w, 20 AS png_h, 4 AS png_ch, img.mean_a
-        |FROM wav JOIN img USING (g) ORDER BY g""".stripMargin,
-
-    // DFT mirror: frames rebuilt from the event stream, the transform
-    // re-run against the materialized twiddle vectors (list_dot_product =
-    // the same left-to-right double fold), energy exact in integers.
-    "q_audio_spectral" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-         |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-         |  FROM events),
-         |r AS (SELECT g, v,
-         |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-         |  FROM q),
-        |${cycCte(256)},
-         |f AS (SELECT g, CAST((rn - 1) // 64 AS INT) AS frame, rn, v
-         |  FROM e),
-         |s AS (SELECT g, frame, list(CAST(v AS DOUBLE) ORDER BY rn) AS sv
-         |  FROM f GROUP BY 1, 2),
-         |tw AS (SELECT k, re_w, im_w FROM '$DftTwiddlesDir/*.parquet'),
-         |d AS (SELECT g, frame, k,
-         |    list_dot_product(sv, re_w) AS re, list_dot_product(sv, im_w) AS im,
-         |    list_dot_product(sv, sv) AS e2
-         |  FROM s CROSS JOIN tw),
-         |m AS (SELECT g, frame, k, sqrt(re * re + im * im) / 64 AS mag, e2 FROM d),
-         |agg AS (SELECT g, frame, max(e2) / 64 AS energy,
-         |    sum(k * mag) / sum(mag) AS centroid
-         |  FROM m GROUP BY 1, 2),
-         |pk AS (SELECT g, frame, k AS peak_bin, mag AS peak_mag FROM (
-         |    SELECT g, frame, k, mag,
-         |      row_number() OVER (PARTITION BY g, frame ORDER BY mag DESC, k) AS rn
-         |    FROM m) z WHERE rn = 1)
-         |SELECT agg.g, agg.frame, round(agg.energy + 1e-9, 4) AS energy_r,
-         |  round(agg.centroid + 1e-9, 4) AS centroid_r,
-         |  CAST(pk.peak_bin AS INT) AS peak_bin,
-         |  round(pk.peak_mag + 1e-9, 4) AS peak_mag_r
-         |FROM agg JOIN pk USING (g, frame) ORDER BY g, frame""".stripMargin,
-
-    // Fingerprint mirror: the spectral DFT CTEs, band energies over bins
-    // 1..32 (4 bins/band, 8 bands) ROUNDED at 6 dp, gradient bit set
-    // when band energy falls frame-to-frame, packed LSB-at-(frame·8+band).
-    "q_audio_fingerprint" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-         |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-         |  FROM events),
-         |r AS (SELECT g, v,
-         |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-         |  FROM q),
-         |${cycCte(256)},
-         |f AS (SELECT g, CAST((rn - 1) // 64 AS INT) AS frame, rn, v
-         |  FROM e),
-         |s AS (SELECT g, frame, list(CAST(v AS DOUBLE) ORDER BY rn) AS sv
-         |  FROM f GROUP BY 1, 2),
-         |tw AS (SELECT k, re_w, im_w FROM '$DftTwiddlesDir/*.parquet'),
-         |d AS (SELECT g, frame, k,
-         |    list_dot_product(sv, re_w) AS re, list_dot_product(sv, im_w) AS im
-         |  FROM s CROSS JOIN tw),
-         |m AS (SELECT g, frame, k, sqrt(re * re + im * im) / 64 AS mag FROM d),
-         |bd AS (SELECT g, frame, CAST((k - 1) // 4 AS INT) AS band,
-         |    round(sum(mag) + 1e-9, 6) AS en
-         |  FROM m WHERE k >= 1 GROUP BY 1, 2, 3),
-         |bits AS (SELECT a.g, a.frame * 8 + a.band AS idx,
-         |    CASE WHEN a.en > b.en THEN 1 ELSE 0 END AS bit
-         |  FROM bd a JOIN bd b
-         |    ON a.g = b.g AND a.band = b.band AND b.frame = a.frame + 1)
-         |SELECT g, CAST(sum(CASE WHEN bit = 1
-         |    THEN (CAST(1 AS BIGINT) << idx) ELSE 0 END) AS BIGINT) AS fp
-         |FROM bits GROUP BY 1 ORDER BY g""".stripMargin,
-
-    // Audio near-dup mirror: brute-force Hamming over the materialized
-    // fingerprint table (same recall-exactness argument as q_phash_pairs).
-    "q_audio_fp_pairs" ->
-      s"""WITH h AS (SELECT g, fp FROM '$AudioFpDir/*.parquet')
-         |SELECT a.g AS ia, b.g AS ib,
-         |  CAST(bit_count(xor(a.fp, b.fp)) AS INTEGER) AS hamming
-         |FROM h a JOIN h b ON a.g < b.g
-         |WHERE bit_count(xor(a.fp, b.fp)) <= 6
-         |ORDER BY ia, ib""".stripMargin,
-
-    "q_jpeg_decode" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-        |  FROM q),
-        |${cycCte(60)},
-        |c AS (SELECT g,
-        |    round(avg(CAST((v * 5 % 256 + 256) % 256 AS DOUBLE)) + 1e-9, 4) AS mean_y,
-        |    round(avg(CAST((v * 9 % 256 + 256) % 256 AS DOUBLE)) + 1e-9, 4) AS mean_cb,
-        |    round(avg(CAST((v * 13 % 256 + 256) % 256 AS DOUBLE)) + 1e-9, 4) AS mean_cr
-        |  FROM e WHERE rn <= 36 GROUP BY 1),
-        |gr AS (SELECT g,
-        |    round(avg(CAST((v % 256 + 256) % 256 AS DOUBLE)) + 1e-9, 4) AS g_mean
-        |  FROM e WHERE rn BETWEEN 37 AND 40 GROUP BY 1),
-        |sc AS (SELECT g,
-        |    round(avg(CAST((v * 7 % 256 + 256) % 256 AS DOUBLE)) + 1e-9, 4) AS s_mean_cb,
-        |    round(avg(CAST((v * 11 % 256 + 256) % 256 AS DOUBLE)) + 1e-9, 4) AS s_mean_cr
-        |  FROM e WHERE rn BETWEEN 41 AND 44 GROUP BY 1),
-        |sl AS (SELECT g,
-        |    round(avg(CAST((v * 3 % 256 + 256) % 256 AS DOUBLE)) + 1e-9, 4) AS s_mean_y
-        |  FROM e WHERE rn BETWEEN 45 AND 60 GROUP BY 1)
-        |SELECT c.g, 48 AS width, 48 AS height, 3 AS n_channels,
-        |  c.mean_y, c.mean_cb, c.mean_cr,
-        |  16 AS g_w, 16 AS g_h, 1 AS g_ch, gr.g_mean,
-        |  32 AS s_w, 32 AS s_h, sl.s_mean_y, sc.s_mean_cb, sc.s_mean_cr,
-        |  48 AS p_w, 48 AS p_h,
-        |  c.mean_y AS p_mean_y, c.mean_cb AS p_mean_cb, c.mean_cr AS p_mean_cr
-        |FROM c JOIN gr USING (g) JOIN sc USING (g) JOIN sl USING (g)
-        |ORDER BY g""".stripMargin,
-
-    // Video-decode mirror: the H.264 Intra16x16-DC closed loop at qp 30
-    // (luma MF0=13107 qbits=20, chroma qPc=29 MF0=7282 qbits=19) reduced
-    // to its exact integer recurrence for flat single-MB frames —
-    // quantize (sign-magnitude, intra rounding 2f), DC dequant, inverse
-    // transform rounding, clip — plus the lossless I_PCM frames.
-    "q_video_frames" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-        |  FROM q),
-        |${cycCte(24)},
-        |f AS (SELECT g, rn - 1 AS frame_idx, (rn % 4 = 1) AS pcm,
-        |    (v % 256 + 256) % 256 AS yv,
-        |    (v * 3 % 256 + 256) % 256 AS cbv,
-        |    (v * 7 % 256 + 256) % 256 AS crv
-        |  FROM e),
-        |z AS (SELECT g, frame_idx, pcm, yv, cbv, crv,
-        |    CASE WHEN yv < 128
-        |      THEN -((abs(128 * (yv - 128)) * 13107 + 699050) // 2097152)
-        |      ELSE (128 * (yv - 128) * 13107 + 699050) // 2097152 END AS zy,
-        |    CASE WHEN cbv < 128
-        |      THEN -((abs(64 * (cbv - 128)) * 7282 + 349524) // 1048576)
-        |      ELSE (64 * (cbv - 128) * 7282 + 349524) // 1048576 END AS zcb,
-        |    CASE WHEN crv < 128
-        |      THEN -((abs(64 * (crv - 128)) * 7282 + 349524) // 1048576)
-        |      ELSE (64 * (crv - 128) * 7282 + 349524) // 1048576 END AS zcr
-        |  FROM f),
-        |-- (160z+1)>>1 == 80z exactly for either sign; the final >>6 is a
-        |-- FLOOR division, while DuckDB // truncates toward zero, so the
-        |-- negative branch shifts by 63 first (trunc((x-63)/64) == floor(x/64))
-        |rec AS (SELECT g, frame_idx,
-        |    CASE WHEN pcm THEN yv
-        |      ELSE least(greatest(128 + CASE WHEN 80 * zy + 32 >= 0
-        |        THEN (80 * zy + 32) // 64
-        |        ELSE (80 * zy + 32 - 63) // 64 END, 0), 255) END AS ry,
-        |    CASE WHEN pcm THEN cbv
-        |      ELSE least(greatest(128 + CASE WHEN 144 * zcb + 32 >= 0
-        |        THEN (144 * zcb + 32) // 64
-        |        ELSE (144 * zcb + 32 - 63) // 64 END, 0), 255) END AS rcb,
-        |    CASE WHEN pcm THEN crv
-        |      ELSE least(greatest(128 + CASE WHEN 144 * zcr + 32 >= 0
-        |        THEN (144 * zcr + 32) // 64
-        |        ELSE (144 * zcr + 32 - 63) // 64 END, 0), 255) END AS rcr
-        |  FROM z)
-        |SELECT g, CAST(frame_idx AS INT) AS frame_idx,
-        |  16 AS width, 16 AS height,
-        |  CAST(256 * ry AS BIGINT) AS sum_y,
-        |  CAST(64 * rcb AS BIGINT) AS sum_cb,
-        |  CAST(64 * rcr AS BIGINT) AS sum_cr
-        |FROM rec ORDER BY g, frame_idx""".stripMargin,
-
-    // Peak-normalize mirror: the same integer rational gain (floor
-    // division — negative PCM included) from the event stream.
-    "q_audio_normalize" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-        |  FROM q),
-        |${cycCte(256)},
-        |t AS (SELECT g, v, rn - 1 AS p FROM e),
-        |pk AS (SELECT g, CAST(max(abs(v)) AS BIGINT) AS peak FROM t GROUP BY 1),
-        |n AS (SELECT t.g, t.p,
-        |    CASE WHEN pk.peak = 0 THEN t.v
-        |         ELSE (t.v * 30000) // pk.peak END AS s,
-        |    pk.peak
-        |  FROM t JOIN pk ON t.g = pk.g)
-        |SELECT g, CAST(max(peak) AS INT) AS peak_in,
-        |  CAST(sum(p * s) AS BIGINT) AS wsum
-        |FROM n GROUP BY g ORDER BY g""".stripMargin,
-
-    // Orientation mirror: each op's mapped position recomputed from the
-    // event stream (y = p//16, x = p%16; flip_h → y·16+15−x,
-    // flip_v → (15−y)·16+x, rot90 cw → x·16+15−y).
-    "q_image_orient" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-        |  FROM q),
-        |${cycCte(256)},
-        |px AS (SELECT g, rn - 1 AS p, (v % 256 + 256) % 256 AS cr
-        |  FROM e)
-        |SELECT g,
-        |  CAST(sum(((p // 16) * 16 + (15 - p % 16)) * cr) AS BIGINT) AS ws_flip_h,
-        |  CAST(sum(((15 - p // 16) * 16 + p % 16) * cr) AS BIGINT) AS ws_flip_v,
-        |  CAST(sum(((p % 16) * 16 + (15 - p // 16)) * cr) AS BIGINT) AS ws_rot90
-        |FROM px GROUP BY g ORDER BY g""".stripMargin,
-
-    // Audio-resample mirror: every output sample recomputed from the
-    // event stream (4-sample block sums // 4, floor division), then the
-    // position-weighted checksum.
-    "q_audio_resample" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-        |  FROM q),
-        |${cycCte(256)},
-        |blk AS (SELECT g, (rn - 1) // 4 AS p, sum(v) // 4 AS sm
-        |  FROM e GROUP BY 1, 2)
-        |SELECT g, 8000 AS in_rate, 2000 AS out_rate, 256 AS n_in,
-        |  64 AS n_out, CAST(sum(p * sm) AS BIGINT) AS wsum
-        |FROM blk GROUP BY g ORDER BY g""".stripMargin,
-
-    // Resize mirror: every output pixel recomputed from the event stream
-    // (4×4 block sums // 16), then the position-weighted checksums.
-    "q_image_resize" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-        |  FROM q),
-        |${cycCte(256)},
-        |px AS (SELECT g, rn - 1 AS p,
-        |    (v % 256 + 256) % 256 AS cr,
-        |    (v * 3 % 256 + 256) % 256 AS cg,
-        |    (v * 7 % 256 + 256) % 256 AS cb
-        |  FROM e),
-        |blk AS (SELECT g,
-        |    ((p // 16) // 4) * 4 + (p % 16) // 4 AS o,
-        |    sum(cr) // 16 AS vr, sum(cg) // 16 AS vg, sum(cb) // 16 AS vb
-        |  FROM px GROUP BY 1, 2)
-        |SELECT g, 16 AS in_w, 16 AS in_h, 4 AS out_w, 4 AS out_h,
-        |  CAST(sum(o * vr) AS BIGINT) AS wsum_r,
-        |  CAST(sum(o * vg) AS BIGINT) AS wsum_g,
-        |  CAST(sum(o * vb) AS BIGINT) AS wsum_b
-        |FROM blk GROUP BY g ORDER BY g""".stripMargin,
-
-    // GIF mirror: palette ramps + frame geometry + the deinterlace gate
-    // (Σ pos·r over NATURAL row order) re-derived from the event stream.
-    "q_gif_decode" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-        |  FROM q),
-        |${cycCte(512)},
-        |px AS (SELECT g,
-        |    CASE WHEN rn <= 256 THEN 0 ELSE 1 END AS frame,
-        |    CASE WHEN rn <= 256 THEN rn - 1 ELSE rn - 257 END AS p,
-        |    ((v % 64) + 64) % 64 AS idx
-        |  FROM e)
-        |SELECT g, CAST(frame AS INT) AS frame, 16 AS width, 16 AS height,
-        |  64 AS n_colors, frame = 1 AS interlaced,
-        |  CAST(CASE WHEN frame = 0 THEN 4 ELSE 7 END AS INT) AS delay_cs,
-        |  round(avg(CAST(idx * 5 % 256 AS DOUBLE)) + 1e-9, 4) AS mean_r,
-        |  round(avg(CAST(idx * 9 % 256 AS DOUBLE)) + 1e-9, 4) AS mean_g,
-        |  round(avg(CAST(idx * 13 % 256 AS DOUBLE)) + 1e-9, 4) AS mean_b,
-        |  CAST(sum(p * (idx * 5 % 256)) AS BIGINT) AS wsum_r
-        |FROM px GROUP BY g, frame ORDER BY g, frame""".stripMargin,
-
-    // MP4 mirror: every container field re-derived from the event stream
-    // with the same modular arithmetic the fixture builder uses, so the
-    // box walk is checked against the parameters.
-    // Audio-metadata mirror: FLAC geometry/duration and the Layer III
-    // frame-length arithmetic recomputed from the raw parameters.
-    "q_audio_meta" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-        |  FROM q),
-        |${cycCte(8)},
-        |p AS (SELECT g,
-        |    max(CASE WHEN rn = 1 THEN v END) AS v1,
-        |    max(CASE WHEN rn = 2 THEN v END) AS v2,
-        |    max(CASE WHEN rn = 3 THEN v END) AS v3,
-        |    max(CASE WHEN rn = 4 THEN v END) AS v4,
-        |    max(CASE WHEN rn = 5 THEN v END) AS v5,
-        |    max(CASE WHEN rn = 6 THEN v END) AS v6,
-        |    max(CASE WHEN rn = 7 THEN v END) AS v7,
-        |    max(CASE WHEN rn = 8 THEN v END) AS v8
-        |  FROM e GROUP BY g),
-        |par AS (SELECT g,
-        |    CASE ((v1 % 8) + 8) % 8 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-        |      WHEN 2 THEN 22050 WHEN 3 THEN 24000 WHEN 4 THEN 32000
-        |      WHEN 5 THEN 44100 WHEN 6 THEN 48000 ELSE 96000 END AS fr,
-        |    1 + ((v2 % 8) + 8) % 8 AS fc,
-        |    CASE WHEN ((v3 % 2) + 2) % 2 = 0 THEN 16 ELSE 24 END AS fb,
-        |    1000 + ((v4 % 100000) + 100000) % 100000 AS fs,
-        |    CASE ((v5 % 14) + 14) % 14 WHEN 0 THEN 32 WHEN 1 THEN 40
-        |      WHEN 2 THEN 48 WHEN 3 THEN 56 WHEN 4 THEN 64 WHEN 5 THEN 80
-        |      WHEN 6 THEN 96 WHEN 7 THEN 112 WHEN 8 THEN 128 WHEN 9 THEN 160
-        |      WHEN 10 THEN 192 WHEN 11 THEN 224 WHEN 12 THEN 256
-        |      ELSE 320 END AS mk,
-        |    CASE ((v6 % 3) + 3) % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-        |      ELSE 32000 END AS mr,
-        |    ((v7 % 2) + 2) % 2 AS pad,
-        |    1 + ((v8 % 2) + 2) % 2 AS mc
-        |  FROM p)
-        |SELECT g, CAST(fr AS INT) AS f_rate, CAST(fc AS INT) AS f_channels,
-        |  CAST(fb AS INT) AS f_bits, CAST(fs AS BIGINT) AS f_samples,
-        |  round(CAST(fs AS DOUBLE) / fr + 1e-9, 4) AS dur_r,
-        |  CAST(mk AS INT) AS m_bitrate, CAST(mr AS INT) AS m_rate,
-        |  CAST(mc AS INT) AS m_channels,
-        |  CAST(floor(144.0 * mk * 1000 / mr) + pad AS BIGINT) AS m_frame_bytes
-        |FROM par ORDER BY g""".stripMargin,
-
-    // SPS mirror: §7.4.2.1.1 geometry recomputed from the event-derived
-    // parameters — crop units 2 (X) and 2·(2−frame_mbs_only) (Y), field
-    // doubling when frame_mbs_only = 0.
-    "q_avc_sps" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-        |  FROM q),
-        |${cycCte(8)},
-        |p AS (SELECT g,
-        |    max(CASE WHEN rn = 1 THEN v END) AS v1,
-        |    max(CASE WHEN rn = 2 THEN v END) AS v2,
-        |    max(CASE WHEN rn = 3 THEN v END) AS v3,
-        |    max(CASE WHEN rn = 4 THEN v END) AS v4,
-        |    max(CASE WHEN rn = 5 THEN v END) AS v5,
-        |    max(CASE WHEN rn = 6 THEN v END) AS v6,
-        |    max(CASE WHEN rn = 7 THEN v END) AS v7,
-        |    max(CASE WHEN rn = 8 THEN v END) AS v8
-        |  FROM e GROUP BY g),
-        |par AS (SELECT g,
-        |    10 + ((v1 % 41) + 41) % 41 AS lvl,
-        |    2 + ((v2 % 39) + 39) % 39 AS wmbs,
-        |    2 + ((v3 % 29) + 29) % 29 AS hmu,
-        |    CASE WHEN ((v4 % 2) + 2) % 2 = 0 THEN 1 ELSE 0 END AS fmof,
-        |    ((v5 % 4) + 4) % 4 AS cl, ((v6 % 4) + 4) % 4 AS cr,
-        |    ((v7 % 2) + 2) % 2 AS ct, ((v8 % 2) + 2) % 2 AS cb
-        |  FROM p)
-        |SELECT g, 66 AS profile, CAST(lvl AS INT) AS level,
-        |  CAST(wmbs * 16 - 2 * (cl + cr) AS INT) AS width,
-        |  CAST(CASE WHEN fmof = 1 THEN hmu * 16 - 2 * (ct + cb)
-        |       ELSE 2 * hmu * 16 - 4 * (ct + cb) END AS INT) AS height,
-        |  CAST(fmof AS INT) AS frame_mbs_only
-        |FROM par ORDER BY g""".stripMargin,
-
-    "q_mp4_meta" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-        |  FROM q),
-        |${cycCte(71)},
-        |p AS (SELECT g,
-        |    max(CASE WHEN rn = 1 THEN v END) AS v1,
-        |    max(CASE WHEN rn = 2 THEN v END) AS v2,
-        |    max(CASE WHEN rn = 3 THEN v END) AS v3,
-        |    max(CASE WHEN rn = 4 THEN v END) AS v4,
-        |    max(CASE WHEN rn = 5 THEN v END) AS v5,
-        |    max(CASE WHEN rn = 6 THEN v END) AS v6,
-        |    max(CASE WHEN rn = 7 THEN v END) AS v7
-        |  FROM e GROUP BY g),
-        |par AS (SELECT g,
-        |    16 * (1 + ((v1 % 16) + 16) % 16) AS vw,
-        |    8 * (1 + ((v2 % 32) + 32) % 32) AS vh,
-        |    24 + ((v3 % 40) + 40) % 40 AS n,
-        |    100 + ((v4 % 50) + 50) % 50 AS d,
-        |    1 + ((v5 % 7) + 7) % 7 AS ks,
-        |    1 + ((v6 % 9) + 9) % 9 AS cs,
-        |    4096 + 16 * (((v7 % 64) + 64) % 64) AS foff,
-        |    1 + ((v1 % 2) + 2) % 2 AS ach,
-        |    8000 * (1 + ((v2 % 5) + 5) % 5) AS arate,
-        |    128 + ((v3 % 128) + 128) % 128 AS asz,
-        |    40 + ((v4 % 60) + 60) % 60 AS an,
-        |    1 + ((v5 % 11) + 11) % 11 AS aspc,
-        |    8192 + 16 * (((v6 % 64) + 64) % 64) AS afoff,
-        |    500 + ((v7 % 5000) + 5000) % 5000 AS mvdur
-        |  FROM p),
-        |vb AS (SELECT e.g,
-        |    CAST(sum(200 + ((v % 800) + 800) % 800) AS BIGINT) AS vbytes
-        |  FROM e JOIN par USING (g) WHERE rn BETWEEN 9 AND 8 + n GROUP BY e.g),
-        |vid AS (SELECT par.g, 'isom' AS brand, CAST(1000 AS BIGINT) AS mv_timescale,
-        |    CAST(mvdur AS BIGINT) AS mv_duration, CAST(1 AS BIGINT) AS track_id,
-        |    'vide' AS handler, 'avc1' AS codec,
-        |    CAST(vw AS INTEGER) AS width, CAST(vh AS INTEGER) AS height,
-        |    CAST(0 AS INTEGER) AS channels, CAST(0 AS INTEGER) AS sample_rate,
-        |    CAST(600 AS BIGINT) AS timescale, CAST(n * d AS BIGINT) AS duration,
-        |    CAST(n AS BIGINT) AS n_samples, vbytes AS total_bytes,
-        |    CAST((n + ks - 1) // ks AS BIGINT) AS n_sync,
-        |    CAST((n + cs - 1) // cs AS BIGINT) AS n_chunks,
-        |    CAST(foff AS BIGINT) AS first_off
-        |  FROM par JOIN vb USING (g)),
-        |aud AS (SELECT g, 'isom' AS brand, CAST(1000 AS BIGINT) AS mv_timescale,
-        |    CAST(mvdur AS BIGINT) AS mv_duration, CAST(2 AS BIGINT) AS track_id,
-        |    'soun' AS handler, 'mp4a' AS codec,
-        |    CAST(0 AS INTEGER) AS width, CAST(0 AS INTEGER) AS height,
-        |    CAST(ach AS INTEGER) AS channels, CAST(arate AS INTEGER) AS sample_rate,
-        |    CAST(arate AS BIGINT) AS timescale, CAST(an * 256 AS BIGINT) AS duration,
-        |    CAST(an AS BIGINT) AS n_samples, CAST(an * asz AS BIGINT) AS total_bytes,
-        |    CAST(an AS BIGINT) AS n_sync,
-        |    CAST((an + aspc - 1) // aspc AS BIGINT) AS n_chunks,
-        |    CAST(afoff AS BIGINT) AS first_off
-        |  FROM par)
-        |SELECT * FROM vid UNION ALL SELECT * FROM aud
-        |ORDER BY g, track_id""".stripMargin,
-
-    "q_asof_join" ->
-      """WITH r AS (SELECT user_id, ts, max(value) AS ref_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |l AS (SELECT user_id, event_id, ts
-        |  FROM events WHERE event_type = 'click')
-        |SELECT l.user_id, CAST(count(*) AS BIGINT) AS n_clicks,
-        |  CAST(count(r.ref_value) AS BIGINT) AS n_matched,
-        |  round(sum(r.ref_value) + 1e-9, 4) AS sum_ref
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_asof_null" ->
-      """WITH r AS (SELECT user_id, ts,
-        |    CASE WHEN user_id % 5 = 0 THEN NULL ELSE max(value) END AS ref_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |l AS (SELECT user_id, event_id, ts
-        |  FROM events WHERE event_type = 'click')
-        |SELECT l.user_id, CAST(count(*) AS BIGINT) AS n_clicks,
-        |  CAST(count(r.ref_value) AS BIGINT) AS n_matched,
-        |  round(sum(r.ref_value) + 1e-9, 4) AS sum_ref
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_range_join" ->
-      """WITH p AS (SELECT l_orderkey, l_linenumber,
-        |    date_diff('day', DATE '1992-01-01', l_shipdate) AS p_day,
-        |    l_extendedprice
-        |  FROM lineitem WHERE l_orderkey % 97 = 0),
-        |iv AS (SELECT o_orderkey,
-        |    date_diff('day', DATE '1992-01-01', o_orderdate) AS iv_start,
-        |    date_diff('day', DATE '1992-01-01', o_orderdate) + o_orderkey % 14 AS iv_end
-        |  FROM orders WHERE o_orderkey % 89 = 0)
-        |SELECT iv.o_orderkey, CAST(count(*) AS BIGINT) AS n_pts,
-        |  CAST(count(DISTINCT p.l_orderkey) AS BIGINT) AS n_orders,
-        |  round(sum(p.l_extendedprice) + 1e-9, 4) AS sum_price
-        |FROM p JOIN iv ON p.p_day BETWEEN iv.iv_start AND iv.iv_end
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Resample mirror: identical union + two-frame window over (ts, kind)
-    // with obs-before-tick tie order; identical interpolation arithmetic.
-    "q_resample" ->
-      """WITH o AS (SELECT user_id % 20 AS k, event_id AS ts, value AS v
-        |  FROM events),
-        |b AS (SELECT k, (min(ts) // 50) * 50 AS t0, (max(ts) // 50) * 50 AS t1
-        |  FROM o GROUP BY 1),
-        |ticks AS (SELECT k, unnest(generate_series(t0, t1, 50)) AS ts FROM b),
-        |u AS (SELECT k, ts, v, 0 AS kind FROM o
-        |  UNION ALL SELECT k, ts, NULL AS v, 1 AS kind FROM ticks),
-        |w AS (SELECT k, ts, kind,
-        |    last_value(v IGNORE NULLS) OVER
-        |      (PARTITION BY k ORDER BY ts, kind
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-        |    last_value(CASE WHEN kind = 0 THEN ts END IGNORE NULLS) OVER
-        |      (PARTITION BY k ORDER BY ts, kind
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pt,
-        |    first_value(v IGNORE NULLS) OVER
-        |      (PARTITION BY k ORDER BY ts, kind
-        |       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-        |    first_value(CASE WHEN kind = 0 THEN ts END IGNORE NULLS) OVER
-        |      (PARTITION BY k ORDER BY ts, kind
-        |       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nt
-        |  FROM u)
-        |SELECT k, ts AS tick, round(pv + 1e-9, 4) AS ffill,
-        |  round(CASE WHEN nt IS NULL OR nt = pt THEN pv
-        |    ELSE pv + (nv - pv) * (ts - pt) / (nt - pt) END + 1e-9, 4) AS interp
-        |FROM w WHERE kind = 1 AND pv IS NOT NULL
-        |ORDER BY k, tick""".stripMargin,
-
-    // Skyline mirror: the NOT EXISTS dominance formulation.
-    // Skyline mirror in O(n log n): the NOT EXISTS dominance formulation is
-    // O(n²) in DuckDB (inequality + OR defeats IEJoin — at sf0.1's 600k
-    // rows the blockwise NL join ran for half an hour; found by the sf0.1
-    // oracle gate). Equivalent window form: s is dominated iff
-    // min(price | q > s.q) <= s.p  OR  min(price | q >= s.q) < s.p.
-    "q_skyline" ->
-      """WITH t AS (SELECT l_orderkey, l_linenumber, l_quantity,
-        |    l_extendedprice FROM lineitem),
-        |g AS (SELECT l_quantity AS q, min(l_extendedprice) AS mp
-        |  FROM t GROUP BY 1),
-        |r AS (SELECT q, mp,
-        |    min(mp) OVER (ORDER BY q DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS min_gt,
-        |    min(mp) OVER (ORDER BY q DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS min_ge
-        |  FROM g)
-        |SELECT t.l_orderkey, t.l_linenumber, t.l_quantity, t.l_extendedprice
-        |FROM t JOIN r ON t.l_quantity = r.q
-        |WHERE (r.min_gt IS NULL OR r.min_gt > t.l_extendedprice)
-        |  AND r.min_ge >= t.l_extendedprice
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // MAD mirror: quantile_cont medians, identical rounded-deviation gate.
-    "q_mad_outliers" ->
-      """WITH med AS (SELECT l_returnflag AS g,
-        |    quantile_cont(l_extendedprice, 0.5) AS m
-        |  FROM lineitem GROUP BY 1),
-        |dev AS (SELECT l.l_returnflag AS g,
-        |    abs(l.l_extendedprice - med.m) AS ad, med.m
-        |  FROM lineitem l JOIN med ON l.l_returnflag = med.g),
-        |mad AS (SELECT g, quantile_cont(ad, 0.5) AS md FROM dev GROUP BY 1)
-        |SELECT d.g AS l_returnflag, CAST(count(*) AS BIGINT) AS n,
-        |  round(max(d.m) + 1e-9, 4) AS med, round(max(mad.md) + 1e-9, 4) AS mad,
-        |  CAST(sum(CASE WHEN round(d.ad + 1e-9, 6) >
-        |    3.0 * round(mad.md + 1e-9, 6) THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_outliers
-        |FROM dev d JOIN mad ON d.g = mad.g GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Approx-MAD mirror: the GK degeneracy contract — medians are the
-    // exact rank-⌈n/2⌉ order statistics, replayed with rank windows.
-    "q_mad_approx" ->
-      """WITH r AS (SELECT l_returnflag AS g, l_extendedprice AS v,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_extendedprice) AS rn,
-        |    count(*) OVER (PARTITION BY l_returnflag) AS n
-        |  FROM lineitem),
-        |med AS (SELECT g, max(CASE WHEN rn = greatest(1,
-        |      CAST(ceil(0.5 * n) AS BIGINT)) THEN v END) AS m
-        |  FROM r GROUP BY g),
-        |dev AS (SELECT r.g, abs(r.v - med.m) AS ad, med.m
-        |  FROM r JOIN med USING (g)),
-        |r2 AS (SELECT g, ad, m,
-        |    row_number() OVER (PARTITION BY g ORDER BY ad) AS rn2,
-        |    count(*) OVER (PARTITION BY g) AS n2
-        |  FROM dev),
-        |mad AS (SELECT g, max(CASE WHEN rn2 = greatest(1,
-        |      CAST(ceil(0.5 * n2) AS BIGINT)) THEN ad END) AS md
-        |  FROM r2 GROUP BY g)
-        |SELECT d.g AS l_returnflag, CAST(count(*) AS BIGINT) AS n,
-        |  round(max(d.m) + 1e-9, 4) AS med,
-        |  round(max(mad.md) + 1e-9, 4) AS mad,
-        |  CAST(sum(CASE WHEN round(d.ad + 1e-9, 6) >
-        |    3.0 * round(mad.md + 1e-9, 6) THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_outliers
-        |FROM dev d JOIN mad USING (g) GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // DP mirror: the seeded md5→uniform→inverse-CDF Laplace draw
-    // replayed term for term (b = 1/ε = 2, u = hash60/2^60, the same
-    // 1e-12 log floor).
-    "q_dp_counts" ->
-      """WITH g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
-        |  FROM documents GROUP BY 1),
-        |h AS (SELECT lang, n,
-        |    CAST(CAST('0x' || substr(md5(lang || '#' || '42'), 1, 15)
-        |      AS BIGINT) AS DOUBLE) / 1152921504606846976.0 - 0.5 AS c
-        |  FROM g)
-        |SELECT lang, n,
-        |  round(n + -2.0 * sign(c) * ln(greatest(1e-12, 1.0 - 2.0 * abs(c)))
-        |    + 1e-9, 4) AS noisy_r
-        |FROM h ORDER BY lang""".stripMargin,
-
-    // Privacy mirror: the same two-level aggregation.
-    "q_privacy_report" ->
-      """WITH g AS (SELECT c_nationkey, c_mktsegment,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(count(DISTINCT floor(c_acctbal / 1000)) AS BIGINT) AS n_sens
-        |  FROM customer GROUP BY 1, 2)
-        |SELECT CAST(count(*) AS BIGINT) AS n_groups,
-        |  CAST(sum(CASE WHEN n < 5 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_groups_below_k,
-        |  CAST(sum(CASE WHEN n < 5 THEN n ELSE 0 END) AS BIGINT)
-        |    AS n_rows_at_risk,
-        |  min(n) AS min_group_size,
-        |  CAST(sum(CASE WHEN n_sens < 3 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_groups_below_l,
-        |  min(n_sens) AS min_diversity
-        |FROM g""".stripMargin,
-
-    // Point-in-polygon mirror: brute-force all-pairs edge test (no
-    // cells) with the IDENTICAL integer crossing condition.
-    "q_point_in_polygon" -> {
-      val edges = PipPolys.flatMap { case (id, vs) =>
-        vs.sliding(2).map { w =>
-          s"($id, ${w(0)._1}, ${w(0)._2}, ${w(1)._1}, ${w(1)._2})"
-        }
-      }.mkString(", ")
-      s"""WITH p AS (SELECT event_id AS pid, (event_id * 7) % 500 AS px,
-         |    event_id % 500 AS py FROM events),
-         |e(poly_id, x1, y1, x2, y2) AS (VALUES $edges),
-         |cr AS (SELECT p.pid, p.px, p.py, e.poly_id FROM p JOIN e ON
-         |  ((e.y1 > p.py) != (e.y2 > p.py)) AND
-         |  ((e.y2 > e.y1 AND (e.x1 - p.px) * (e.y2 - e.y1)
-         |      + (e.x2 - e.x1) * (p.py - e.y1) > 0)
-         |   OR (e.y2 < e.y1 AND (e.x1 - p.px) * (e.y2 - e.y1)
-         |      + (e.x2 - e.x1) * (p.py - e.y1) < 0))),
-         |ins AS (SELECT pid, poly_id FROM cr
-         |  GROUP BY 1, 2 HAVING count(*) % 2 = 1)
-         |SELECT CAST(poly_id AS BIGINT) AS poly_id,
-         |  CAST(count(*) AS BIGINT) AS n_inside,
-         |  CAST(sum(pid) AS BIGINT) AS sum_pid
-         |FROM ins GROUP BY 1 ORDER BY poly_id""".stripMargin
-    },
-
-    // Spatial mirror: brute-force distance join (no cells) — same pairs.
-    "q_spatial_join" ->
-      """WITH p AS (SELECT event_id AS id, user_id % 500 AS x,
-        |    event_id % 500 AS y FROM events)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  CAST((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-        |    AS BIGINT) AS dist2
-        |FROM p a JOIN p b ON a.id < b.id
-        |  AND (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 25
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_weighted_sample" ->
-      """WITH s AS (SELECT doc_id, n_chars,
-        |    ln((CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |        + 0.5) / 1152921504606846976.0)
-        |      / CAST(n_chars AS DOUBLE) AS score
-        |  FROM documents
-        |  WHERE n_chars > 0),  -- mirror the A-ES positive-weight guard
-        |r AS (SELECT doc_id, n_chars, score,
-        |    CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS rank
-        |  FROM s)
-        |SELECT doc_id, n_chars, rank, round(score + 1e-9, 6) AS score
-        |FROM r WHERE rank <= 50 ORDER BY rank""".stripMargin,
-
-    "q_pack_sequences" ->
-      s"""WITH RECURSIVE $bpeCtes,
-         |d AS (SELECT doc_id, n_bpe_tokens AS n_toks FROM doc_bpe),
-         |o AS (SELECT doc_id, n_toks,
-        |    CAST(coalesce(sum(n_toks) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS start_off
-        |  FROM d)
-        |SELECT doc_id, n_toks, start_off, start_off // 512 AS pack_id,
-        |  CASE WHEN n_toks > 0
-        |       THEN (start_off + n_toks - 1) // 512 - start_off // 512 + 1
-        |       ELSE 0 END AS n_packs
-        |FROM o ORDER BY doc_id""".stripMargin,
-
-    "q_histogram" ->
-      """SELECT l_returnflag, CAST(floor(l_extendedprice / 5000.0) AS BIGINT) AS bin,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_corr_matrix" ->
-      """SELECT col_a, col_b, round(c + 1e-9, 6) AS corr FROM (
-        |  SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b,
-        |    corr(l_quantity, l_extendedprice) AS c FROM lineitem
-        |  UNION ALL SELECT 'l_quantity', 'l_discount',
-        |    corr(l_quantity, l_discount) FROM lineitem
-        |  UNION ALL SELECT 'l_quantity', 'l_tax',
-        |    corr(l_quantity, l_tax) FROM lineitem
-        |  UNION ALL SELECT 'l_extendedprice', 'l_discount',
-        |    corr(l_extendedprice, l_discount) FROM lineitem
-        |  UNION ALL SELECT 'l_extendedprice', 'l_tax',
-        |    corr(l_extendedprice, l_tax) FROM lineitem
-        |  UNION ALL SELECT 'l_discount', 'l_tax',
-        |    corr(l_discount, l_tax) FROM lineitem)
-        |ORDER BY col_a, col_b""".stripMargin,
-
-    "q_profile" -> {
-      def num(c: String) =
-        s"""SELECT '$c' AS "column", CAST(count(*) AS BIGINT) AS n,
-           |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-           |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-           |  round(CAST(min($c) AS DOUBLE) + 1e-9, 4) AS min_num,
-           |  round(CAST(max($c) AS DOUBLE) + 1e-9, 4) AS max_num,
-           |  round(avg($c) + 1e-9, 4) AS mean,
-           |  CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
-           |FROM lineitem""".stripMargin
-      def str(c: String) =
-        s"""SELECT '$c' AS "column", CAST(count(*) AS BIGINT) AS n,
-           |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-           |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-           |  CAST(NULL AS DOUBLE) AS min_num, CAST(NULL AS DOUBLE) AS max_num,
-           |  CAST(NULL AS DOUBLE) AS mean,
-           |  min($c) AS min_str, max($c) AS max_str
-           |FROM lineitem""".stripMargin
-      (Seq("l_quantity", "l_extendedprice", "l_partkey").map(num) ++
-        Seq("l_returnflag", "l_linestatus").map(str))
-        .mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY \"column\"")
-    },
-
-    "q_zscore_gate" ->
-      """WITH s AS (SELECT event_type, avg(value) AS mu, stddev_pop(value) AS sd
-        |  FROM events GROUP BY 1),
-        |k AS (SELECT e.event_type, e.value
-        |  FROM events e JOIN s USING (event_type)
-        |  WHERE s.sd = 0 OR round(abs((e.value - s.mu) / s.sd) + 1e-9, 6) <= 2.0)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_kept,
-        |  round(sum(value) + 1e-9, 4) AS sum_kept
-        |FROM k GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_quantiles" ->
-      """SELECT l_returnflag, CAST(count(l_extendedprice) AS BIGINT) AS n,
-        |  round(quantile_cont(l_extendedprice, 0.25) + 1e-9, 4) AS q25,
-        |  round(quantile_cont(l_extendedprice, 0.5) + 1e-9, 4) AS q50,
-        |  round(quantile_cont(l_extendedprice, 0.75) + 1e-9, 4) AS q75,
-        |  round(quantile_cont(l_extendedprice, 0.95) + 1e-9, 4) AS q95
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // GK-sketch mirror: at accuracy > n the sketch answer is the exact
-    // lower order statistic at rank max(1, floor(q*n)) — a rank window.
-    "q_profile_approx" -> {
-      def qc(q: Double, nm: String): String =
-        s"""round(max(CASE WHEN rn = greatest(1, CAST(ceil($q * n) AS BIGINT))
-           |  THEN v END) + 1e-9, 4) AS $nm""".stripMargin
-      s"""WITH r AS (SELECT l_returnflag AS g, l_extendedprice AS v,
-         |    row_number() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice) AS rn,
-         |    count(*) OVER (PARTITION BY l_returnflag) AS n
-         |  FROM lineitem)
-         |SELECT g AS l_returnflag, CAST(max(n) AS BIGINT) AS n,
-         |  ${qc(0.25, "q25")}, ${qc(0.5, "q50")}, ${qc(0.75, "q75")},
-         |  ${qc(0.95, "q95")}
-         |FROM r GROUP BY g ORDER BY l_returnflag""".stripMargin
-    },
-
-    // Portable-HLL mirror: identical registers from the shared 60-bit md5
-    // hash, identical exact-integer inverse-power sum, identical estimate
-    // arithmetic (alpha interpolated from the same double).
-    "q_approx_distinct" -> {
-      val m = 4096L; val w = 48
-      val alpha = 0.7213 / (1.0 + 1.079 / m)
-      val rankCase = (w - 1 to 0 by -1).reverse // ascending b → CASE order
-      val chain = (w - 1 to 0 by -1)
-        .map(b => s"WHEN rest >= ${1L << b} THEN ${w - b}")
-        .mkString(" ")
-      s"""WITH h AS (SELECT l_returnflag AS g,
-         |    CAST('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15) AS BIGINT) AS hv
-         |  FROM lineitem),
-         |s AS (SELECT g, hv % $m AS reg, hv // $m AS rest FROM h),
-         |r AS (SELECT g, reg, CASE $chain ELSE ${w + 1} END AS rk FROM s),
-         |regs AS (SELECT g, reg, max(rk) AS mj FROM r GROUP BY 1, 2),
-         |a AS (SELECT g, CAST(count(*) AS BIGINT) AS present,
-         |    CAST(sum(CAST(1 AS BIGINT) << CAST(${w + 1} - mj AS INTEGER)) AS BIGINT)
-         |      AS sum_scaled
-         |  FROM regs GROUP BY 1),
-         |e AS (SELECT g,
-         |    CAST(sum_scaled + ($m - present) * (CAST(1 AS BIGINT) << ${w + 1})
-         |      AS DOUBLE) / ${math.pow(2.0, (w + 1).toDouble)} AS sum_inv,
-         |    CAST($m - present AS DOUBLE) AS zeros
-         |  FROM a),
-         |est AS (SELECT g,
-         |    CASE WHEN zeros > 0 AND CAST($alpha AS DOUBLE) * $m * $m / sum_inv <= ${2.5 * m}
-         |         THEN ${m.toDouble} * ln(${m.toDouble} / zeros)
-         |         ELSE CAST($alpha AS DOUBLE) * $m * $m / sum_inv END AS hll
-         |  FROM e),
-         |x AS (SELECT l_returnflag AS g,
-         |    CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_exact
-         |  FROM lineitem GROUP BY 1)
-         |SELECT g AS l_returnflag, n_exact, round(hll + 1e-9, 4) AS hll_est
-         |FROM x JOIN est USING (g) ORDER BY l_returnflag""".stripMargin
-    },
-
-    // KMV/theta mirror: identical k-smallest-distinct-md5 sketches per
-    // set (window rank over distinct hashes), identical θ = min(θ_A, θ_B)
-    // in exact BIGINT domain, identical n·M/θ double arithmetic.
-    "q_theta_sketch" -> {
-      val k = 256
-      val M = "1152921504606846976" // 2^60, the 60-bit md5 hash space
-      s"""WITH dv AS (SELECT DISTINCT l_returnflag AS s, l_partkey AS v FROM lineitem),
-         |h AS (SELECT DISTINCT s,
-         |    CAST('0x' || substr(md5(CAST(v AS VARCHAR)), 1, 15) AS BIGINT) AS hv
-         |  FROM dv),
-         |rk AS (SELECT s, hv, row_number() OVER (PARTITION BY s ORDER BY hv) AS rn FROM h),
-         |sk AS (SELECT s, hv FROM rk WHERE rn <= $k),
-         |st AS (SELECT s, count(*) AS n, max(hv) AS kth FROM sk GROUP BY 1),
-         |th AS (SELECT s, n, kth,
-         |    CASE WHEN n >= $k THEN kth ELSE CAST($M AS BIGINT) END AS theta,
-         |    CASE WHEN n >= $k THEN ${(k - 1).toDouble} * ${M}e0 / CAST(kth AS DOUBLE)
-         |         ELSE CAST(n AS DOUBLE) END AS est
-         |  FROM st),
-         |pairs AS (SELECT a.s AS sa, b.s AS sb, least(a.theta, b.theta) AS theta,
-         |    a.est AS est_a, b.est AS est_b
-         |  FROM th a, th b WHERE a.s < b.s),
-         |ap AS (SELECT p.sa, p.sb, count(*) AS na FROM pairs p
-         |  JOIN sk ka ON ka.s = p.sa AND ka.hv < p.theta GROUP BY 1, 2),
-         |bp AS (SELECT p.sa, p.sb, count(*) AS nb FROM pairs p
-         |  JOIN sk kb ON kb.s = p.sb AND kb.hv < p.theta GROUP BY 1, 2),
-         |ip AS (SELECT p.sa, p.sb, count(*) AS ni FROM pairs p
-         |  JOIN sk ka ON ka.s = p.sa AND ka.hv < p.theta
-         |  JOIN sk kb ON kb.s = p.sb AND kb.hv = ka.hv GROUP BY 1, 2),
-         |ex AS (SELECT a.s AS sa, b.s AS sb, CAST(count(*) AS BIGINT) AS n_intersect
-         |  FROM dv a JOIN dv b ON a.v = b.v AND a.s < b.s GROUP BY 1, 2),
-         |sz AS (SELECT s, CAST(count(*) AS BIGINT) AS n FROM dv GROUP BY 1)
-         |SELECT p.sa AS set_a, p.sb AS set_b, sza.n AS n_a, szb.n AS n_b,
-         |  ex.n_intersect,
-         |  round(p.est_a + 1e-9, 4) AS est_a, round(p.est_b + 1e-9, 4) AS est_b,
-         |  round((ap.na + bp.nb - ip.ni) * ${M}e0 / CAST(p.theta AS DOUBLE) + 1e-9, 4)
-         |    AS est_union,
-         |  round(ip.ni * ${M}e0 / CAST(p.theta AS DOUBLE) + 1e-9, 4) AS est_intersect,
-         |  round((ap.na - ip.ni) * ${M}e0 / CAST(p.theta AS DOUBLE) + 1e-9, 4)
-         |    AS est_a_not_b
-         |FROM pairs p
-         |JOIN ap ON ap.sa = p.sa AND ap.sb = p.sb
-         |JOIN bp ON bp.sa = p.sa AND bp.sb = p.sb
-         |JOIN ip ON ip.sa = p.sa AND ip.sb = p.sb
-         |JOIN ex ON ex.sa = p.sa AND ex.sb = p.sb
-         |JOIN sz sza ON sza.s = p.sa
-         |JOIN sz szb ON szb.s = p.sb
-         |ORDER BY set_a, set_b""".stripMargin
-    },
-
-    // Trending mirror: the same 60-day epoch-aligned windows and the
-    // same (n DESC, type) rank from the batch table.
-    "q_streaming_trending" ->
-      """WITH e AS (SELECT event_type, epoch_ns(ts) // 1000 AS us FROM events),
-        |w AS (SELECT make_timestamp(us - us % 5184000000000) AS window_start,
-        |    event_type FROM e),
-        |c AS (SELECT window_start, event_type, CAST(count(*) AS BIGINT) AS n
-        |  FROM w GROUP BY 1, 2),
-        |r AS (SELECT window_start, event_type, n,
-        |    CAST(row_number() OVER (PARTITION BY window_start
-        |      ORDER BY n DESC, event_type) AS INT) AS rank
-        |  FROM c)
-        |SELECT window_start, rank, event_type, n FROM r
-        |WHERE rank <= 2 ORDER BY window_start, rank""".stripMargin,
-
-    // Streaming-KMV mirror: batch-side sketch rebuild (the stream is a
-    // replay of the same table, and the k-min state is a semilattice).
-    "q_streaming_kmv" -> {
-      val k = 256
-      val M = "1152921504606846976"
-      s"""WITH dv AS (SELECT DISTINCT l_returnflag AS s, l_partkey AS v
-         |  FROM lineitem),
-         |h AS (SELECT DISTINCT s,
-         |    CAST('0x' || substr(md5(CAST(v AS VARCHAR)), 1, 15) AS BIGINT) AS hv
-         |  FROM dv),
-         |rk AS (SELECT s, hv, row_number() OVER (PARTITION BY s ORDER BY hv) AS rn
-         |  FROM h),
-         |st AS (SELECT s, count(*) AS n, max(hv) AS kth
-         |  FROM rk WHERE rn <= $k GROUP BY 1),
-         |est AS (SELECT s,
-         |    CASE WHEN n >= $k THEN ${(k - 1).toDouble} * ${M}e0 / CAST(kth AS DOUBLE)
-         |         ELSE CAST(n AS DOUBLE) END AS e
-         |  FROM st),
-         |x AS (SELECT l_returnflag AS s,
-         |    CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_exact
-         |  FROM lineitem GROUP BY 1)
-         |SELECT s AS l_returnflag, n_exact, round(e + 1e-9, 4) AS kmv_est
-         |FROM x JOIN est USING (s) ORDER BY l_returnflag""".stripMargin
-    },
-
-    // Streaming-CMS mirror: batch-side register rebuild (the stream is a
-    // replay of the same table, and CMS registers are a monoid).
-    "q_streaming_cms" ->
-      s"""WITH t AS (SELECT unnest(string_split($NormSql, ' ')) AS tok FROM documents),
-         |tt AS (SELECT tok FROM t WHERE tok <> ''),
-         |occ AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM tt GROUP BY 1),
-         |hb AS (SELECT tok, c, j,
-         |    CAST('0x' || substr(md5(CAST(j AS VARCHAR) || '_' || tok), 1, 15)
-         |      AS BIGINT) % 1024 AS bucket
-         |  FROM occ, (SELECT unnest(generate_series(0, 2)) AS j) s),
-         |sk AS (SELECT j, bucket, CAST(sum(c) AS BIGINT) AS cnt
-         |  FROM hb GROUP BY 1, 2)
-         |SELECT CAST(j AS INT) AS j, bucket, cnt FROM sk
-         |WHERE cnt >= 100 ORDER BY j, bucket""".stripMargin,
-
-    // Count-Min mirror: identical row-salted md5 buckets, identical d×w
-    // sketch (bucket counts = Σ exact counts hashing there), identical
-    // min-over-rows estimates and threshold cut — collisions and all.
-    "q_heavy_hitters" ->
-      s"""WITH t AS (SELECT unnest(string_split($NormSql, ' ')) AS tok FROM documents),
-         |tt AS (SELECT tok FROM t WHERE tok <> ''),
-         |occ AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM tt GROUP BY 1),
-         |hb AS (SELECT tok, c, j,
-         |    CAST('0x' || substr(md5(CAST(j AS VARCHAR) || '_' || tok), 1, 15)
-         |      AS BIGINT) % 1024 AS bucket
-         |  FROM occ, (SELECT unnest(generate_series(0, 2)) AS j) s),
-         |sk AS (SELECT j, bucket, CAST(sum(c) AS BIGINT) AS cnt
-         |  FROM hb GROUP BY 1, 2),
-         |est AS (SELECT hb.tok, hb.c AS n_exact, min(sk.cnt) AS cms_estimate
-         |  FROM hb JOIN sk USING (j, bucket) GROUP BY 1, 2)
-         |SELECT tok AS token, n_exact, cms_estimate
-         |FROM est WHERE cms_estimate >= 200 ORDER BY token""".stripMargin,
-
-    "q_passage_dedup" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |c AS (SELECT doc_id,
-        |    md5(array_to_string(toks[(i.i*3+1):(i.i*3+3)], ' ')) AS h
-        |  FROM d, LATERAL (SELECT unnest(range(CAST(floor(len(toks)/3) AS BIGINT))) AS i) i
-        |  WHERE len(toks) >= 3),
-        |g AS (SELECT h, CAST(count(*) AS BIGINT) AS n FROM c GROUP BY 1)
-        |SELECT c.doc_id, CAST(count(*) AS BIGINT) AS n_passages,
-        |  CAST(sum(CASE WHEN g.n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
-        |FROM c JOIN g USING (h)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_tfidf" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM t WHERE term <> '' GROUP BY 1, 2),
-        |dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df_t FROM tf GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-        |s AS (SELECT tf.doc_id, tf.term,
-        |    tf.tf * (ln((n.n_docs + 1.0) / (dfreq.df_t + 1.0)) + 1.0) AS score
-        |  FROM tf JOIN dfreq USING (term) CROSS JOIN n),
-        |r AS (SELECT doc_id, term, score,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rank
-        |  FROM s)
-        |SELECT doc_id, CAST(rank AS INT) AS rank, term,
-        |  round(score + 1e-9, 6) AS score
-        |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    // revenue mirrored in exact integer cents·basis-points (order-free
-    // sum; a float Σ drifts past the 2-decimal boundary at sf0.1 group
-    // sizes — see qBucketedJoin).
-    "q_bucketed_join" ->
-      """SELECT o_orderkey % 100 AS grp, CAST(count(*) AS BIGINT) AS n_items,
-        |  round(CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
-        |    (10000 - CAST(round(l_discount * 10000) AS BIGINT))) AS DOUBLE)
-        |    / 1000000 + 1e-9, 2) AS revenue
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_multimodal_frames" ->
-      s"""WITH d AS (SELECT doc_id, text, octet_length(encode(text)) AS n FROM documents),
-         |f AS (SELECT doc_id, text, n, unnest(generate_series(0, 3)) AS frame FROM d),
-         |o AS (SELECT doc_id, text, n, frame,
-         |      greatest(1, 1 + (frame * (n - 32)) // 3) AS off FROM f)
-         |SELECT doc_id, n AS n_bytes, CAST(frame AS INTEGER) AS frame, off,
-         |  md5(substring(text, CAST(off AS INTEGER), 32)) AS frame_md5
-         |FROM o ORDER BY doc_id, frame""".stripMargin,
-
-    // Shard-plan mirror: one SQL window replays the exclusive running sum
-    // the Spark side computes with the two-pass distributed form.
-    "q_shard_plan" ->
-      """WITH d AS (SELECT doc_id, n_chars + 1024 AS sz FROM documents),
-        |c AS (SELECT doc_id, sz,
-        |    coalesce(sum(sz) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-        |  FROM d),
-        |a AS (SELECT doc_id, sz, CAST(floor(off / 65536) AS BIGINT) AS shard_id
-        |  FROM c)
-        |SELECT shard_id, CAST(count(*) AS BIGINT) AS n_samples,
-        |  CAST(sum(sz) AS BIGINT) AS n_bytes,
-        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM a GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Tar/WebDataset cycle: every aggregate recomputed from the event
-    // stream the shards were synthesized from — txt payloads parse back to
-    // the exact decimal values, bin byte census from the (value, length)
-    // parameters.
-    "q_webdataset" ->
-      """WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v
-        |  FROM events),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) AS rn
-        |  FROM q),
-        |t AS (SELECT g, v FROM r WHERE rn <= 40)
-        |SELECT CAST(g AS INT) AS g,
-        |  CAST(count(*) AS BIGINT) AS n_samples,
-        |  CAST(count(*) * 2 AS BIGINT) AS n_members,
-        |  CAST(sum(len(CAST(v AS VARCHAR))) AS BIGINT) AS txt_chars,
-        |  CAST(sum(v) AS BIGINT) AS sum_v,
-        |  CAST(sum(abs(v) % 13 + 1) AS BIGINT) AS bin_bytes,
-        |  CAST(sum(((v % 256 + 256) % 256) * (abs(v) % 13 + 1)) AS BIGINT) AS bin_sum
-        |FROM t GROUP BY 1 ORDER BY 1""".stripMargin,
-  )
-
-  /** q_mesh_quality mirror: identical edge/angle/Jacobian formulas inline
-    * (eps = 1e-30 guards and acos clamps match `graft.mesh.Geometry`).
-    */
-  private val MeshQualityOracle: (String, String) = "q_mesh_quality" ->
-    s"""WITH tri AS (SELECT l_returnflag,
-       |    CAST(l_quantity AS DOUBLE) AS x0, l_discount*100.0 AS y0,
-       |    l_extendedprice/1000.0 AS x1, l_tax*100.0 AS y1,
-       |    l_linenumber*7.0 AS x2, CAST(l_partkey % 13 AS DOUBLE) AS y2
-       |  FROM lineitem),
-       |e AS (SELECT l_returnflag,
-       |    x1-x0 AS ax, y1-y0 AS ay,        -- e01
-       |    x2-x0 AS bx, y2-y0 AS by,        -- e02
-       |    x2-x1 AS cx, y2-y1 AS cy         -- e12
-       |  FROM tri),
-       |m AS (SELECT l_returnflag,
-       |    sqrt(ax*ax+ay*ay) AS la, sqrt(bx*bx+by*by) AS lb, sqrt(cx*cx+cy*cy) AS lc,
-       |    acos(least(1.0, greatest(-1.0, (ax*bx+ay*by)/(sqrt(ax*ax+ay*ay)*sqrt(bx*bx+by*by)+1e-30)))) AS a0,
-       |    acos(least(1.0, greatest(-1.0, ((-ax)*cx+(-ay)*cy)/(sqrt(ax*ax+ay*ay)*sqrt(cx*cx+cy*cy)+1e-30)))) AS a1,
-       |    acos(least(1.0, greatest(-1.0, ((-bx)*(-cx)+(-by)*(-cy))/(sqrt(bx*bx+by*by)*sqrt(cx*cx+cy*cy)+1e-30)))) AS a2,
-       |    (ax*by - ay*bx) / (sqrt(ax*ax+ay*ay)*sqrt(bx*bx+by*by) + 1e-30) AS jac,
-       |    abs(ax*by - ay*bx) / 2.0 AS area
-       |  FROM e),
-       |q AS (SELECT l_returnflag,
-       |    greatest(la, lb, lc) / (least(la, lb, lc) + 1e-30) AS aspect,
-       |    least(la, lb, lc) AS min_edge,
-       |    least(1.0, greatest(0.0,
-       |      greatest(greatest(a0, a1, a2) - pi()/3, pi()/3 - least(a0, a1, a2))
-       |        / (pi() - pi()/3))) AS skew,
-       |    jac, area
-       |  FROM m)
-       |SELECT l_returnflag, count(*) AS n,
-       |  round(avg(aspect) + 1e-9, 4) AS aspect_mean,
-       |  round(max(aspect) + 1e-6, 2) AS aspect_max,
-       |  round(avg(skew) + 1e-9, 4) AS skew_mean,
-       |  round(avg(jac) + 1e-9, 4) AS jac_mean,
-       |  CAST(sum(CASE WHEN jac < 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_inverted,
-       |  round(avg(area) + 1e-9, 4) AS area_mean
-       |FROM q WHERE min_edge > 1e-12 GROUP BY 1 ORDER BY 1""".stripMargin
-
-  private def coreOracleSql: Map[String, String] = Map(
-    MeshQualityOracle,
-
-    // TPC-H Q1 mirror: exact decimal money sums, one cast to double.
-    "q_tpch_q1" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
-        |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
-        |    + 1e-6, 2) AS sum_base_price,
-        |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))))
-        |    AS DOUBLE) + 1e-6, 2) AS sum_disc_price,
-        |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-        |    * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))
-        |    * (CAST(1 AS DECIMAL(4,2)) + CAST(l_tax AS DECIMAL(4,2))))
-        |    AS DOUBLE) + 1e-6, 2) AS sum_charge,
-        |  round(sum(l_quantity) / count(*) + 1e-9, 4) AS avg_qty,
-        |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
-        |    / count(*) + 1e-9, 4) AS avg_price,
-        |  CAST(count(*) AS BIGINT) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // TPC-H Q3 mirror: same decimal revenue, same deterministic top-10.
-    "q_tpch_q3" ->
-      """WITH j AS (SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
-        |    CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
-        |      * (CAST(1 AS DECIMAL(4,2)) - CAST(l.l_discount AS DECIMAL(4,2))))
-        |      AS DOUBLE) AS revenue
-        |  FROM customer c
-        |  JOIN orders o ON c.c_custkey = o.o_custkey
-        |  JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |  WHERE c.c_mktsegment = 'BUILDING'
-        |    AND o.o_orderdate < TIMESTAMP '1996-03-15'
-        |    AND l.l_shipdate > TIMESTAMP '1996-03-15'
-        |  GROUP BY 1, 2, 3)
-        |SELECT l_orderkey, round(revenue + 1e-6, 2) AS revenue,
-        |  o_orderdate, o_orderpriority
-        |FROM j ORDER BY revenue DESC, o_orderdate, l_orderkey
-        |LIMIT 10""".stripMargin,
-
-    // Secret-scan mirror: the same salted text, candidates, per-
-    // occurrence character entropy (nats), and the rounded gate.
-    "q_secret_scan" ->
-      """WITH d AS (SELECT doc_id, text ||
-        |    CASE WHEN doc_id % 7 = 0 THEN ' key_' ||
-        |      md5(CAST(doc_id AS VARCHAR)) ||
-        |      upper(md5(CAST(doc_id + 1 AS VARCHAR))) ELSE '' END ||
-        |    CASE WHEN doc_id % 11 = 0 THEN ' ' || repeat('a', 30)
-        |      ELSE '' END AS text
-        |  FROM documents),
-        |cand AS (SELECT doc_id,
-        |    unnest(regexp_extract_all(text, '[A-Za-z0-9+/=_-]{20,}')) AS c
-        |  FROM d),
-        |cr AS (SELECT doc_id, c, row_number() OVER () AS cid FROM cand),
-        |ch AS (SELECT doc_id, cid,
-        |    unnest(regexp_extract_all(c, '.')) AS chr FROM cr),
-        |cc AS (SELECT doc_id, cid, chr, CAST(count(*) AS BIGINT) AS n
-        |  FROM ch GROUP BY 1, 2, 3),
-        |he AS (SELECT doc_id, cid, CAST(sum(n) AS BIGINT) AS L,
-        |    -sum(n * ln(CAST(n AS DOUBLE))) AS sclogc
-        |  FROM cc GROUP BY 1, 2),
-        |hr AS (SELECT doc_id,
-        |    round(ln(CAST(L AS DOUBLE)) + sclogc / L + 1e-9, 4) AS h
-        |  FROM he),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_candidates,
-        |    CAST(sum(CASE WHEN h >= 2.8 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_secrets,
-        |    max(h) AS max_entropy
-        |  FROM hr GROUP BY 1)
-        |SELECT d2.doc_id, coalesce(a.n_candidates, 0) AS n_candidates,
-        |  coalesce(a.n_secrets, 0) AS n_secrets,
-        |  coalesce(a.max_entropy, 0.0) AS max_entropy
-        |FROM documents d2 LEFT JOIN agg a USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Luhn mirror: identical salts, identical candidate regex, and the
-    // checksum replayed as a list comprehension — double every second
-    // digit from the right ((len-i)%2=1 in 1-based left order), fold >9
-    // by subtracting 9, valid iff the sum ≡ 0 mod 10.
-    "q_luhn_cards" ->
-      """WITH sal AS (SELECT doc_id, text ||
-        |    CASE WHEN doc_id % 7 = 0 THEN ' card 4539 5787 6362 1486 ok'
-        |      ELSE '' END ||
-        |    CASE WHEN doc_id % 11 = 0 THEN ' ref 4539-5787-6362-1487.'
-        |      ELSE '' END ||
-        |    CASE WHEN doc_id % 13 = 0 THEN ' pay 378282246310005 now'
-        |      ELSE '' END AS t
-        |  FROM documents),
-        |c AS (SELECT doc_id,
-        |    unnest(regexp_extract_all(t, '[0-9](?:[ -]?[0-9]){12,18}')) AS m
-        |  FROM sal),
-        |g AS (SELECT doc_id, regexp_replace(m, '[^0-9]', '', 'g') AS dg FROM c),
-        |v AS (SELECT doc_id, dg,
-        |    (list_sum([CASE WHEN (len(dg) - i) % 2 = 1 THEN
-        |         CASE WHEN 2 * CAST(dg[i] AS INT) > 9
-        |              THEN 2 * CAST(dg[i] AS INT) - 9
-        |              ELSE 2 * CAST(dg[i] AS INT) END
-        |       ELSE CAST(dg[i] AS INT) END
-        |       FOR i IN range(1, len(dg) + 1)]) % 10 = 0) AS ok
-        |  FROM g),
-        |a AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_candidates,
-        |    CAST(sum(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
-        |    max(CASE WHEN ok THEN substr(dg, len(dg) - 3, 4) END) AS valid_last4
-        |  FROM v GROUP BY 1)
-        |SELECT s.doc_id, coalesce(a.n_candidates, 0) AS n_candidates,
-        |  coalesce(a.n_valid, 0) AS n_valid, a.valid_last4
-        |FROM sal s LEFT JOIN a USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Zipf mirror: identical census, (freq DESC, token) ranks, and the
-    // same closed-form OLS sums — slope/intercept/R² of ln(freq) on
-    // ln(rank) over the top-100 tokens.
-    "q_zipf_slope" ->
-      s"""WITH tk AS (SELECT unnest(string_split($NormSql, ' ')) AS tok
-         |  FROM documents),
-         |t2 AS (SELECT tok FROM tk WHERE tok <> ''),
-         |cen AS (SELECT tok, CAST(count(*) AS BIGINT) AS c
-         |  FROM t2 GROUP BY 1),
-         |top AS (SELECT tok, c FROM cen ORDER BY c DESC, tok LIMIT 100),
-         |rk AS (SELECT c, row_number() OVER (ORDER BY c DESC, tok) AS r
-         |  FROM top),
-         |p AS (SELECT ln(CAST(r AS DOUBLE)) AS x,
-         |    ln(CAST(c AS DOUBLE)) AS y FROM rk),
-         |m AS (SELECT CAST(count(*) AS DOUBLE) AS n, sum(x) AS sx,
-         |    sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx,
-         |    sum(y * y) AS syy FROM p)
-         |SELECT CAST(n AS BIGINT) AS n,
-         |  round((n * sxy - sx * sy) / (n * sxx - sx * sx) + 1e-9, 4)
-         |    AS slope_r,
-         |  round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n
-         |    + 1e-9, 4) AS intercept_r,
-         |  round((n * sxy - sx * sy) * (n * sxy - sx * sy)
-         |    / ((n * sxx - sx * sx) * (n * syy - sy * sy)) + 1e-9, 4)
-         |    AS r2_r
-         |FROM m""".stripMargin,
-
-    // Blocklist mirror: the identical word-boundary alternation under
-    // RE2 over the same canonical form; pass = at most two total hits.
-    "q_blocklist" ->
-      s"""SELECT doc_id, CAST(len(h) AS BIGINT) AS n_hits,
-         |  CAST(len(list_distinct(h)) AS BIGINT) AS n_terms,
-         |  len(h) <= 2 AS pass
-         |FROM (SELECT doc_id,
-         |    regexp_extract_all($NormSql, '\\b(slow|dup|stream)\\b', 1) AS h
-         |  FROM documents)
-         |ORDER BY doc_id""".stripMargin,
-
-    "q_redact" -> {
-      val r = graft.operators.CurationOps.redactions
-      val scrub = r.foldLeft("text") { case (acc, (pat, rep)) =>
-        s"regexp_replace($acc, '$pat', '$rep', 'g')"
-      }
-      s"""SELECT doc_id, md5($scrub) AS clean_md5,
-         |  CAST(length(text) - length($scrub) AS BIGINT) AS chars_removed
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-
-    // Budget selection over REAL tokenizer tokens: the shared encode CTE
-    // supplies per-doc BPE counts, then the same greedy-prefix window.
-    "q_token_budget" ->
-      s"""WITH RECURSIVE $bpeCtes,
-         |t AS (SELECT doc_id, lang, n_bpe_tokens AS n_tokens FROM doc_bpe),
-         |c AS (SELECT doc_id, lang, n_tokens,
-         |  CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens FROM t)
-         |SELECT doc_id, lang, n_tokens, cum_tokens FROM c
-         |WHERE cum_tokens <= 10000 ORDER BY lang, doc_id""".stripMargin,
-
-    "q_wall_nodes" ->
-      """WITH d AS (SELECT user_id % 4 AS mesh_id, user_id AS point_id, value,
-        |  first_value(value) OVER (PARTITION BY user_id ORDER BY event_id) AS v0
-        |  FROM events),
-        |m AS (SELECT mesh_id, point_id, max(abs(value - v0)) AS md
-        |  FROM d GROUP BY 1, 2)
-        |SELECT mesh_id, point_id FROM m WHERE md >= 10.0
-        |ORDER BY mesh_id, point_id""".stripMargin,
-
-    "q_union_priority" ->
-      """WITH b0 AS (SELECT s_suppkey, round(s_acctbal + 1e-6, 2) AS v, 0 AS p
-        |  FROM supplier WHERE s_nationkey < 12),
-        |b1 AS (SELECT s_suppkey, round(s_acctbal * 2 + 1e-6, 2) AS v, 1 AS p
-        |  FROM supplier),
-        |u AS (SELECT * FROM b0 UNION ALL SELECT * FROM b1),
-        |r AS (SELECT s_suppkey, v,
-        |  row_number() OVER (PARTITION BY s_suppkey ORDER BY p) AS rn FROM u)
-        |SELECT s_suppkey, v FROM r WHERE rn = 1 ORDER BY s_suppkey""".stripMargin,
-
-    // Lexicon routing mirror: after canonical renaming, t2m keys < 30 come
-    // from backend 0 (priority), the rest from backend 1 (doubled sums);
-    // u10 only exists in backend 1 (tripled); junk has no lexicon entry.
-    "q_era5_routing" ->
-      """WITH g AS (SELECT user_id % 50 AS k, sum(value) AS sv
-        |  FROM events GROUP BY 1)
-        |SELECT 't2m' AS variable, k, round(sv + 1e-6, 2) AS value
-        |  FROM g WHERE k < 30
-        |UNION ALL
-        |SELECT 't2m', k, round(sv * 2 + 1e-6, 2) FROM g WHERE k >= 30
-        |UNION ALL
-        |SELECT 'u10', k, round(sv * 3 + 1e-6, 2) FROM g
-        |ORDER BY 1, 2""".stripMargin,
-
-    // Fetch e2e mirror: the values are q_era5_routing's exactly (transport
-    // must not change data); n_staged pins the 4-object manifest that
-    // actually traveled over HTTP (one .nc per variable per backend).
-    "q_era5_fetch" ->
-      """WITH g AS (SELECT user_id % 50 AS k, sum(value) AS sv
-        |  FROM events GROUP BY 1)
-        |SELECT 't2m' AS variable, k, round(sv + 1e-6, 2) AS value, 4 AS n_staged
-        |  FROM g WHERE k < 30
-        |UNION ALL
-        |SELECT 't2m', k, round(sv * 2 + 1e-6, 2), 4 FROM g WHERE k >= 30
-        |UNION ALL
-        |SELECT 'u10', k, round(sv * 3 + 1e-6, 2), 4 FROM g
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q_boundary_box" ->
-      """WITH g AS (SELECT CAST(a.i AS DOUBLE)/7 AS u, CAST(b.j AS DOUBLE)/7 AS v
-        |  FROM (SELECT unnest(generate_series(0, 7)) AS i) a,
-        |       (SELECT unnest(generate_series(0, 7)) AS j) b),
-        |f AS (
-        |  SELECT 'inlet' AS boundary, 0.0 AS x, -2.0 + v*4.0 AS y, u*4.0 AS z FROM g
-        |  UNION ALL SELECT 'outlet', 10.0, -2.0 + v*4.0, u*4.0 FROM g
-        |  UNION ALL SELECT 'wall_ymin', u*10.0, -2.0, v*4.0 FROM g
-        |  UNION ALL SELECT 'wall_ymax', u*10.0, 2.0, v*4.0 FROM g
-        |  UNION ALL SELECT 'wall_zmin', u*10.0, -2.0 + v*4.0, 0.0 FROM g
-        |  UNION ALL SELECT 'wall_zmax', u*10.0, -2.0 + v*4.0, 4.0 FROM g)
-        |SELECT boundary, count(*) AS n_vertices,
-        |  round(sum(x + y + z) + 1e-9, 4) AS coord_sum,
-        |  round(min(x) + 1e-9, 4) AS min_x, round(max(z) + 1e-9, 4) AS max_z
-        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // The full hemisphere construction mirrored in SQL: same lattice,
-    // same centroid/normal/winding expressions, same freestream split.
-    // Sub-expressions are parenthesized to match Spark's evaluation order
-    // so trig arguments are bit-identical on both sides.
-    "q_boundary_hemisphere" ->
-      """WITH strip AS (
-        |  SELECT 12 + k AS cell_id, k // 24 AS r, (k % 24) // 2 AS i, k % 2 = 1 AS b
-        |  FROM (SELECT unnest(generate_series(0, 71)) AS k)),
-        |cells AS (
-        |  SELECT k AS cell_id, FALSE AS sym, -1 AS r0, 0 AS i0, 0 AS r1,
-        |    k AS i1, 0 AS r2, k + 1 AS i2
-        |  FROM (SELECT unnest(generate_series(0, 11)) AS k)
-        |  UNION ALL
-        |  SELECT cell_id, FALSE, r, CASE WHEN b THEN i + 1 ELSE i END, r + 1, i,
-        |    CASE WHEN b THEN r + 1 ELSE r END, i + 1
-        |  FROM strip
-        |  UNION ALL
-        |  SELECT 84 + k, TRUE, -2, 0, 3, k, 3, k + 1
-        |  FROM (SELECT unnest(generate_series(0, 11)) AS k)),
-        |corners AS (
-        |  SELECT cell_id, sym, 0 AS c, r0 AS r, i0 AS i FROM cells
-        |  UNION ALL SELECT cell_id, sym, 1, r1, i1 FROM cells
-        |  UNION ALL SELECT cell_id, sym, 2, r2, i2 FROM cells),
-        |pts AS (
-        |  SELECT cell_id, sym, c,
-        |    CASE WHEN r = -1 THEN 0 WHEN r = -2 THEN 49
-        |         ELSE 1 + r * 12 + (i % 12) END AS vid,
-        |    CASE WHEN r < 0 THEN 0.0
-        |         ELSE (2.0 * sin((r + 1) * (pi() / 8))) * cos((i % 12) * (2 * pi() / 12)) END AS x,
-        |    CASE WHEN r = -1 THEN 2.0 WHEN r = -2 OR r = 3 THEN 0.0
-        |         ELSE 2.0 * cos((r + 1) * (pi() / 8)) END AS y,
-        |    CASE WHEN r < 0 THEN 0.0
-        |         ELSE (2.0 * sin((r + 1) * (pi() / 8))) * sin((i % 12) * (2 * pi() / 12)) END AS z
-        |  FROM corners),
-        |tri AS (
-        |  SELECT cell_id, sym,
-        |    max(CASE WHEN c = 0 THEN vid END) AS v0,
-        |    max(CASE WHEN c = 1 THEN vid END) AS v1,
-        |    max(CASE WHEN c = 2 THEN vid END) AS v2,
-        |    max(CASE WHEN c = 0 THEN x END) AS x0, max(CASE WHEN c = 0 THEN y END) AS y0,
-        |    max(CASE WHEN c = 0 THEN z END) AS z0,
-        |    max(CASE WHEN c = 1 THEN x END) AS x1, max(CASE WHEN c = 1 THEN y END) AS y1,
-        |    max(CASE WHEN c = 1 THEN z END) AS z1,
-        |    max(CASE WHEN c = 2 THEN x END) AS x2, max(CASE WHEN c = 2 THEN y END) AS y2,
-        |    max(CASE WHEN c = 2 THEN z END) AS z2
-        |  FROM pts GROUP BY 1, 2),
-        |geo AS (
-        |  SELECT cell_id, sym, v0, v1, v2,
-        |    (x0 + x1 + x2) / 3 AS cx, (y0 + y1 + y2) / 3 AS cy, (z0 + z1 + z2) / 3 AS cz,
-        |    (y1 - y0) * (z2 - z0) - (z1 - z0) * (y2 - y0) AS nx,
-        |    (z1 - z0) * (x2 - x0) - (x1 - x0) * (z2 - z0) AS ny,
-        |    (x1 - x0) * (y2 - y0) - (y1 - y0) * (x2 - x0) AS nz
-        |  FROM tri),
-        |lab AS (
-        |  SELECT CASE WHEN sym THEN 'symmetry'
-        |              WHEN cx * (1.0 / sqrt(1.3125)) + cy * (0.25 / sqrt(1.3125))
-        |                   + cz * (0.5 / sqrt(1.3125)) <= 0 THEN 'inlet'
-        |              ELSE 'outlet' END AS boundary,
-        |    v0, CASE WHEN flip THEN v2 ELSE v1 END AS w1,
-        |    CASE WHEN flip THEN v1 ELSE v2 END AS w2, cx, cy, cz
-        |  FROM (SELECT *, CASE WHEN sym THEN ny < 0
-        |                       ELSE cx * nx + cy * ny + cz * nz > 0 END AS flip
-        |        FROM geo))
-        |SELECT boundary, count(*) AS n_cells,
-        |  CAST(sum(v0) AS BIGINT) AS sum_v0, CAST(sum(w1) AS BIGINT) AS sum_v1,
-        |  CAST(sum(w2) AS BIGINT) AS sum_v2,
-        |  round(sum(cx) + 1e-9, 4) AS sum_cx, round(sum(cy) + 1e-9, 4) AS sum_cy,
-        |  round(sum(cz) + 1e-9, 4) AS sum_cz
-        |FROM lab GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Hole-carve mirror: dome CTEs as in q_boundary_hemisphere (minus the
-    // disk fan), plus the azimuth-merge annulus — rim-edge triangles pair
-    // with the last hole vertex at/before their start azimuth, hole-edge
-    // triangles with the first rim vertex at/after their end azimuth. All
-    // trig arguments parenthesized to Spark's trees; the symmetry area sum
-    // is the exact rim-polygon − hole-polygon carve.
-    "q_boundary_hole" ->
-      """WITH strip AS (
-        |  SELECT 12 + k AS cell_id, k // 24 AS r, (k % 24) // 2 AS i, k % 2 = 1 AS b
-        |  FROM (SELECT unnest(generate_series(0, 71)) AS k)),
-        |cells AS (
-        |  SELECT k AS cell_id, -1 AS r0, 0 AS i0, 0 AS r1, k AS i1, 0 AS r2, k + 1 AS i2
-        |  FROM (SELECT unnest(generate_series(0, 11)) AS k)
-        |  UNION ALL
-        |  SELECT cell_id, r, CASE WHEN b THEN i + 1 ELSE i END, r + 1, i,
-        |    CASE WHEN b THEN r + 1 ELSE r END, i + 1
-        |  FROM strip),
-        |corners AS (
-        |  SELECT cell_id, 0 AS c, r0 AS r, i0 AS i FROM cells
-        |  UNION ALL SELECT cell_id, 1, r1, i1 FROM cells
-        |  UNION ALL SELECT cell_id, 2, r2, i2 FROM cells),
-        |pts AS (
-        |  SELECT cell_id, c,
-        |    CASE WHEN r = -1 THEN 0 ELSE 1 + r * 12 + (i % 12) END AS vid,
-        |    CASE WHEN r = -1 THEN 0.0
-        |         ELSE (2.0 * sin((r + 1) * (pi() / 8))) * cos((i % 12) * (2 * pi() / 12)) END AS x,
-        |    CASE WHEN r = -1 THEN 2.0 WHEN r = 3 THEN 0.0
-        |         ELSE 2.0 * cos((r + 1) * (pi() / 8)) END AS y,
-        |    CASE WHEN r = -1 THEN 0.0
-        |         ELSE (2.0 * sin((r + 1) * (pi() / 8))) * sin((i % 12) * (2 * pi() / 12)) END AS z
-        |  FROM corners),
-        |tri AS (
-        |  SELECT cell_id,
-        |    max(CASE WHEN c = 0 THEN vid END) AS v0,
-        |    max(CASE WHEN c = 1 THEN vid END) AS v1,
-        |    max(CASE WHEN c = 2 THEN vid END) AS v2,
-        |    max(CASE WHEN c = 0 THEN x END) AS x0, max(CASE WHEN c = 0 THEN y END) AS y0,
-        |    max(CASE WHEN c = 0 THEN z END) AS z0,
-        |    max(CASE WHEN c = 1 THEN x END) AS x1, max(CASE WHEN c = 1 THEN y END) AS y1,
-        |    max(CASE WHEN c = 1 THEN z END) AS z1,
-        |    max(CASE WHEN c = 2 THEN x END) AS x2, max(CASE WHEN c = 2 THEN y END) AS y2,
-        |    max(CASE WHEN c = 2 THEN z END) AS z2
-        |  FROM pts GROUP BY 1),
-        |geo AS (
-        |  SELECT cell_id, v0, v1, v2,
-        |    (x0 + x1 + x2) / 3 AS cx, (y0 + y1 + y2) / 3 AS cy, (z0 + z1 + z2) / 3 AS cz,
-        |    (y1 - y0) * (z2 - z0) - (z1 - z0) * (y2 - y0) AS nx,
-        |    (z1 - z0) * (x2 - x0) - (x1 - x0) * (z2 - z0) AS ny,
-        |    (x1 - x0) * (y2 - y0) - (y1 - y0) * (x2 - x0) AS nz
-        |  FROM tri),
-        |dome AS (
-        |  SELECT CASE WHEN cx * (1.0 / sqrt(1.3125)) + cy * (0.25 / sqrt(1.3125))
-        |              + cz * (0.5 / sqrt(1.3125)) <= 0 THEN 'inlet'
-        |         ELSE 'outlet' END AS boundary,
-        |    v0, CASE WHEN flip THEN v2 ELSE v1 END AS w1,
-        |    CASE WHEN flip THEN v1 ELSE v2 END AS w2, cx, cy, cz,
-        |    0.5 * sqrt(nx * nx + ny * ny + nz * nz) AS area
-        |  FROM (SELECT *, cx * nx + cy * ny + cz * nz > 0 AS flip FROM geo)),
-        |hole AS (SELECT j, pi() / 12 + j * (pi() / 2) AS a,
-        |    0.8 * cos(pi() / 12 + j * (pi() / 2)) AS hx,
-        |    0.8 * sin(pi() / 12 + j * (pi() / 2)) AS hz
-        |  FROM (SELECT unnest(generate_series(0, 3)) AS j)),
-        |rim AS (SELECT i, i * (2 * pi() / 12) AS th,
-        |    (2.0 * sin((3 + 1.0) * (pi() / 8))) * cos((i % 12) * (2 * pi() / 12)) AS rx,
-        |    (2.0 * sin((3 + 1.0) * (pi() / 8))) * sin((i % 12) * (2 * pi() / 12)) AS rz
-        |  FROM (SELECT unnest(generate_series(0, 11)) AS i)),
-        |ra AS (SELECT r.i, coalesce(max(h.j) FILTER (WHERE h.a <= r.th), 3) AS aj
-        |  FROM rim r CROSS JOIN hole h GROUP BY r.i, r.th),
-        |rtri AS (
-        |  SELECT 84 + r.i AS cell_id,
-        |    37 + (r.i % 12) AS v0, 37 + ((r.i + 1) % 12) AS v1, 49 + ra.aj AS v2,
-        |    r.rx AS x0, r.rz AS z0, r1.rx AS x1, r1.rz AS z1, h.hx AS x2, h.hz AS z2
-        |  FROM rim r
-        |  JOIN rim r1 ON r1.i = (r.i + 1) % 12
-        |  JOIN ra ON ra.i = r.i
-        |  JOIN hole h ON h.j = ra.aj),
-        |htri AS (
-        |  SELECT 96 + h.j AS cell_id, 49 + h.j AS v0, 49 + h1.j AS v1,
-        |    37 + (CAST(ceil(h1.a / (2 * pi() / 12)) AS INT) % 12) AS v2,
-        |    h.hx AS x0, h.hz AS z0, h1.hx AS x1, h1.hz AS z1,
-        |    (2.0 * sin((3 + 1.0) * (pi() / 8))) *
-        |      cos((CAST(ceil(h1.a / (2 * pi() / 12)) AS INT) % 12) * (2 * pi() / 12)) AS x2,
-        |    (2.0 * sin((3 + 1.0) * (pi() / 8))) *
-        |      sin((CAST(ceil(h1.a / (2 * pi() / 12)) AS INT) % 12) * (2 * pi() / 12)) AS z2
-        |  FROM hole h JOIN hole h1 ON h1.j = (h.j + 1) % 4),
-        |ann AS (
-        |  SELECT 'symmetry' AS boundary, v0,
-        |    CASE WHEN ny < 0 THEN v2 ELSE v1 END AS w1,
-        |    CASE WHEN ny < 0 THEN v1 ELSE v2 END AS w2,
-        |    (x0 + x1 + x2) / 3 AS cx, 0.0 AS cy, (z0 + z1 + z2) / 3 AS cz,
-        |    0.5 * abs(ny) AS area
-        |  FROM (SELECT *, (z1 - z0) * (x2 - x0) - (x1 - x0) * (z2 - z0) AS ny
-        |        FROM (SELECT * FROM rtri UNION ALL SELECT * FROM htri))),
-        |allb AS (SELECT boundary, v0, w1, w2, cx, cy, cz, area FROM dome
-        |  UNION ALL SELECT boundary, v0, w1, w2, cx, cy, cz, area FROM ann)
-        |SELECT boundary, count(*) AS n_cells,
-        |  CAST(sum(v0) AS BIGINT) AS sum_v0, CAST(sum(w1) AS BIGINT) AS sum_v1,
-        |  CAST(sum(w2) AS BIGINT) AS sum_v2,
-        |  round(sum(cx) + 1e-9, 4) AS sum_cx, round(sum(cy) + 1e-9, 4) AS sum_cy,
-        |  round(sum(cz) + 1e-9, 4) AS sum_cz, round(sum(area) + 1e-9, 4) AS sum_area
-        |FROM allb GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_merge_points" ->
-      """WITH p AS (SELECT vec_id % 8 AS mesh_id, vec_id AS point_id,
-        |  CAST(embedding[1] AS DOUBLE) AS x, CAST(embedding[2] AS DOUBLE) AS y,
-        |  CAST(embedding[3] AS DOUBLE) AS z
-        |  FROM embeddings),
-        |q AS (SELECT mesh_id, point_id,
-        |  CAST(round(x/0.25) AS BIGINT) AS qx, CAST(round(y/0.25) AS BIGINT) AS qy,
-        |  CAST(round(z/0.25) AS BIGINT) AS qz FROM p)
-        |SELECT mesh_id, point_id,
-        |  CAST(min(point_id) OVER (PARTITION BY mesh_id, qx, qy, qz) AS BIGINT)
-        |    AS new_point_id
-        |FROM q ORDER BY mesh_id, point_id""".stripMargin,
-
-    // Mirrors q_vtu_roundtrip WITHOUT the file cycle: the appended-zlib VTU
-    // write→read is bit-exact for Float64, so aggregates over the re-read
-    // mesh equal aggregates over the source parquet.
-    "q_vtu_roundtrip" ->
-      """WITH p AS (SELECT vec_id % 4 AS mesh_id,
-        |  CAST(embedding[1] AS DOUBLE) AS x, CAST(embedding[4] AS DOUBLE) AS v
-        |  FROM embeddings)
-        |SELECT mesh_id, count(*) AS n_points, count(*) // 3 AS n_cells,
-        |  round(sum(x) + 1e-6, 2) AS sum_x, round(sum(v) + 1e-6, 2) AS sum_v
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // f64 payloads round-trip the .rst records bit-exactly, so the oracle
-    // rebuilds the fixture sums straight from events; component values are
-    // the per-key sums scaled by (component + 1), mirrored per element.
-    "q_ansys_decode" ->
-      """WITH t AS (SELECT event_id % 40 AS k, sum(value) AS v FROM events GROUP BY 1),
-        |hf AS (SELECT event_id % 15 AS k, sum(value) AS v FROM events GROUP BY 1),
-        |d AS (SELECT event_id % 30 AS k, sum(value) AS v FROM events GROUP BY 1),
-        |st AS (SELECT event_id % 12 AS k, sum(value) AS v FROM events GROUP BY 1),
-        |c3 AS (SELECT unnest(generate_series(0, 2)) AS c),
-        |c6 AS (SELECT unnest(generate_series(0, 5)) AS c),
-        |r AS (
-        |  SELECT 'thermal' AS mesh_id, 'nodal' AS loc, 'temperature' AS field,
-        |    CAST(40 AS BIGINT) AS n_values, (SELECT sum(v) FROM t) AS sv
-        |  UNION ALL
-        |  SELECT 'thermal', 'elemental', 'heat_flux_' || c, CAST(15 AS BIGINT),
-        |    sum(v * (c + 1))
-        |  FROM hf, c3 GROUP BY c
-        |  UNION ALL
-        |  SELECT 'structural', 'nodal', 'displacement_' || c, CAST(30 AS BIGINT),
-        |    sum(v * (c + 1))
-        |  FROM d, c3 GROUP BY c
-        |  UNION ALL
-        |  SELECT 'structural', 'elemental', 'stress_' || c, CAST(12 AS BIGINT),
-        |    sum(v * (c + 1))
-        |  FROM st, c6 GROUP BY c
-        |  UNION ALL
-        |  SELECT 'thermal', 'geometry', 'nodes', CAST(40 AS BIGINT),
-        |    (SELECT sum(v + v * CAST(0.5 AS DOUBLE) + v * CAST(0.25 AS DOUBLE)) FROM t)
-        |  UNION ALL
-        |  SELECT 'thermal', 'geometry', 'cells', CAST(15 AS BIGINT),
-        |    (SELECT CAST(sum(3 * j + 6) AS DOUBLE)
-        |     FROM (SELECT unnest(generate_series(0, 14)) AS j))
-        |  UNION ALL
-        |  SELECT 'structural', 'geometry', 'nodes', CAST(30 AS BIGINT),
-        |    (SELECT sum(v + v * CAST(0.5 AS DOUBLE) + v * CAST(0.25 AS DOUBLE)) FROM d)
-        |  UNION ALL
-        |  SELECT 'structural', 'geometry', 'cells', CAST(12 AS BIGINT),
-        |    (SELECT CAST(sum(3 * j + 6) AS DOUBLE)
-        |     FROM (SELECT unnest(generate_series(0, 11)) AS j)))
-        |SELECT mesh_id, loc, field, n_values, round(sv + 1e-6, 2) AS sum_value
-        |FROM r ORDER BY 1, 2, 3""".stripMargin,
-
-    "q_ansys_routing" ->
-      """WITH raw AS (SELECT
-        |    ['temperature','displacement','heat_flux','stress','custom_result']
-        |      [CAST(event_id % 5 AS INT) + 1] AS result,
-        |    CASE WHEN event_id % 2 = 0 THEN NULL
-        |         ELSE CAST(event_id % 3 AS VARCHAR) END AS component,
-        |    value
-        |  FROM events),
-        |f AS (SELECT * FROM raw
-        |  WHERE result IN ('temperature','displacement','heat_flux')),
-        |n AS (SELECT
-        |    CASE WHEN result IN ('heat_flux','stress','elastic_strain')
-        |         THEN 'elemental' ELSE 'nodal' END AS loc,
-        |    CASE WHEN component IS NULL THEN result
-        |         ELSE result || '_' || component END AS field,
-        |    value
-        |  FROM f)
-        |SELECT loc, field, count(*) AS n, round(sum(value) + 1e-6, 2) AS sum_value
-        |FROM n GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_mesh_sink_layout" ->
-      """SELECT l_returnflag AS flag, count(*) AS n_rows,
-        |  round(sum(l_quantity) + 1e-6, 2) AS sum_qty
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // 512 = the dense 16x32 grid each field's sidecar array materializes
-    // (absent cells hold fill 0.0, which leaves the sums unchanged).
-    "q_grid_sidecar" ->
-      """SELECT event_type AS field, CAST(512 AS BIGINT) AS n_cells,
-        |  round(sum(value) + 1e-6, 2) AS sum_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Assembly is byte-identity, so the mirror is q_vtu_roundtrip's.
-    "q_volume_assembly" ->
-      """WITH p AS (SELECT vec_id % 4 AS mesh_id,
-        |  CAST(embedding[1] AS DOUBLE) AS x, CAST(embedding[4] AS DOUBLE) AS v
-        |  FROM embeddings)
-        |SELECT mesh_id, count(*) AS n_points, count(*) // 3 AS n_cells,
-        |  round(sum(x) + 1e-6, 2) AS sum_x, round(sum(v) + 1e-6, 2) AS sum_v
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Fetch e2e mirror: values identical to q_volume_assembly (transport
-    // must not change the assembled bytes); staged_multi pins that more
-    // objects than runs crossed the wire (the multi-part layout itself).
-    "q_drivaerml_fetch" ->
-      """WITH p AS (SELECT vec_id % 4 AS mesh_id,
-        |  CAST(embedding[1] AS DOUBLE) AS x, CAST(embedding[4] AS DOUBLE) AS v
-        |  FROM embeddings)
-        |SELECT mesh_id, count(*) AS n_points, count(*) // 3 AS n_cells,
-        |  round(sum(x) + 1e-6, 2) AS sum_x, round(sum(v) + 1e-6, 2) AS sum_v,
-        |  1 AS staged_multi
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Interior = volume cell centroids (fp32) with the cell's data as point
-    // data; surface = boundary VTP; globals = exact-fraction CSV constants.
-    // Embedding elements are parquet float32, so only the centroid avg and
-    // the per-cell sum round through REAL.
-    "q_ahmedml_multi" ->
-      """WITH b AS (SELECT vec_id % 3 AS run_id,
-        |    CAST(embedding[1] AS DOUBLE) AS x,
-        |    CAST(embedding[4] AS DOUBLE) AS v,
-        |    (row_number() OVER (PARTITION BY vec_id % 3 ORDER BY vec_id) - 1) // 3 AS cell_id
-        |  FROM embeddings),
-        |c AS (SELECT run_id, cell_id,
-        |    CAST(CAST(avg(x) AS REAL) AS DOUBLE) AS cx,
-        |    CAST(CAST(sum(v) AS REAL) AS DOUBLE) AS p
-        |  FROM b GROUP BY 1, 2 HAVING count(*) = 3),
-        |i AS (SELECT run_id, count(*) AS n_interior,
-        |    round(sum(cx) + 1e-6, 2) AS sum_cx,
-        |    round(sum(p) + 1e-6, 2) AS sum_p,
-        |    count(*) AS n_stl_facets
-        |  FROM c GROUP BY 1),
-        |s AS (SELECT run_id, count(*) AS n_surface_points,
-        |    round(sum(v) + 1e-6, 2) AS sum_cp
-        |  FROM b GROUP BY 1)
-        |SELECT run_id, n_interior, sum_cx, sum_p, n_surface_points, sum_cp,
-        |  n_stl_facets, CAST(2 AS BIGINT) AS n_slices,
-        |  0.25 + run_id / 8.0 AS cd, run_id / 4.0 AS varref_cd,
-        |  CASE WHEN run_id = 0 THEN 25.0 END AS slant_angle
-        |FROM i JOIN s USING (run_id) ORDER BY run_id""".stripMargin,
-
-    // Fetch e2e mirror: values identical to q_ahmedml_multi (transport
-    // must not change data); n_staged pins the 22-object manifest (3 runs
-    // × 7 files + run 0's geo_parameters) that traveled over HTTP.
-    "q_ahmedml_fetch" ->
-      """WITH b AS (SELECT vec_id % 3 AS run_id,
-        |    CAST(embedding[1] AS DOUBLE) AS x,
-        |    CAST(embedding[4] AS DOUBLE) AS v,
-        |    (row_number() OVER (PARTITION BY vec_id % 3 ORDER BY vec_id) - 1) // 3 AS cell_id
-        |  FROM embeddings),
-        |c AS (SELECT run_id, cell_id,
-        |    CAST(CAST(avg(x) AS REAL) AS DOUBLE) AS cx,
-        |    CAST(CAST(sum(v) AS REAL) AS DOUBLE) AS p
-        |  FROM b GROUP BY 1, 2 HAVING count(*) = 3),
-        |i AS (SELECT run_id, count(*) AS n_interior,
-        |    round(sum(cx) + 1e-6, 2) AS sum_cx,
-        |    round(sum(p) + 1e-6, 2) AS sum_p,
-        |    count(*) AS n_stl_facets
-        |  FROM c GROUP BY 1),
-        |s AS (SELECT run_id, count(*) AS n_surface_points,
-        |    round(sum(v) + 1e-6, 2) AS sum_cp
-        |  FROM b GROUP BY 1)
-        |SELECT run_id, n_interior, sum_cx, sum_p, n_surface_points, sum_cp,
-        |  n_stl_facets, CAST(2 AS BIGINT) AS n_slices,
-        |  0.25 + run_id / 8.0 AS cd, run_id / 4.0 AS varref_cd,
-        |  CASE WHEN run_id = 0 THEN 25.0 END AS slant_angle,
-        |  22 AS n_staged
-        |FROM i JOIN s USING (run_id) ORDER BY run_id""".stripMargin,
-
-    // Mirrors the Geometry tet kernels with IDENTICAL IEEE operation order
-    // (edge norms, triple product, aspect/vol/jac) so per-cell values are
-    // bit-equal; only the aggregate means rely on the epsilon round guard.
-    "q_tet_quality" ->
-      """WITH p AS (SELECT vec_id // 4 AS tet, CAST(vec_id % 4 AS INT) AS pos,
-        |    CAST(embedding[1] AS DOUBLE) AS x, CAST(embedding[2] AS DOUBLE) AS y,
-        |    CAST(embedding[3] AS DOUBLE) AS z
-        |  FROM embeddings),
-        |w AS (SELECT tet % 3 AS mesh_id, tet,
-        |    max(CASE WHEN pos=0 THEN x END) AS x0, max(CASE WHEN pos=0 THEN y END) AS y0, max(CASE WHEN pos=0 THEN z END) AS z0,
-        |    max(CASE WHEN pos=1 THEN x END) AS x1, max(CASE WHEN pos=1 THEN y END) AS y1, max(CASE WHEN pos=1 THEN z END) AS z1,
-        |    max(CASE WHEN pos=2 THEN x END) AS x2, max(CASE WHEN pos=2 THEN y END) AS y2, max(CASE WHEN pos=2 THEN z END) AS z2,
-        |    max(CASE WHEN pos=3 THEN x END) AS x3, max(CASE WHEN pos=3 THEN y END) AS y3, max(CASE WHEN pos=3 THEN z END) AS z3
-        |  FROM p GROUP BY 1, 2 HAVING count(*) = 4),
-        |e AS (SELECT mesh_id,
-        |    sqrt((x1-x0)*(x1-x0)+(y1-y0)*(y1-y0)+(z1-z0)*(z1-z0)) AS l01,
-        |    sqrt((x2-x0)*(x2-x0)+(y2-y0)*(y2-y0)+(z2-z0)*(z2-z0)) AS l02,
-        |    sqrt((x3-x0)*(x3-x0)+(y3-y0)*(y3-y0)+(z3-z0)*(z3-z0)) AS l03,
-        |    sqrt((x2-x1)*(x2-x1)+(y2-y1)*(y2-y1)+(z2-z1)*(z2-z1)) AS l12,
-        |    sqrt((x3-x1)*(x3-x1)+(y3-y1)*(y3-y1)+(z3-z1)*(z3-z1)) AS l13,
-        |    sqrt((x3-x2)*(x3-x2)+(y3-y2)*(y3-y2)+(z3-z2)*(z3-z2)) AS l23,
-        |    ((x1-x0)*((y2-y0)*(z3-z0)-(z2-z0)*(y3-y0))
-        |     +(y1-y0)*((z2-z0)*(x3-x0)-(x2-x0)*(z3-z0))
-        |     +(z1-z0)*((x2-x0)*(y3-y0)-(y2-y0)*(x3-x0))) AS trip
-        |  FROM w),
-        |c AS (SELECT mesh_id,
-        |    greatest(l01,l02,l03,l12,l13,l23)/(least(l01,l02,l03,l12,l13,l23)+1e-30) AS aspect,
-        |    trip/6.0 AS vol,
-        |    trip/(l01*l02*l03+1e-30) AS jac
-        |  FROM e)
-        |SELECT mesh_id, count(*) AS n_cells,
-        |  round(min(aspect)+1e-9,4) AS aspect_min,
-        |  round(max(aspect)+1e-9,4) AS aspect_max,
-        |  round(avg(aspect)+1e-9,4) AS aspect_mean,
-        |  round(min(vol)+1e-9,6) AS vol_min,
-        |  round(max(vol)+1e-9,6) AS vol_max,
-        |  round(avg(vol)+1e-9,6) AS vol_mean,
-        |  round(stddev_pop(vol)+1e-9,6) AS vol_std,
-        |  CAST(sum(CASE WHEN vol < 0 THEN 1 ELSE 0 END) AS BIGINT) AS vol_n_inverted,
-        |  round(min(jac)+1e-9,6) AS jac_min,
-        |  round(max(jac)+1e-9,6) AS jac_max,
-        |  round(avg(jac)+1e-9,6) AS jac_mean,
-        |  CAST(sum(CASE WHEN jac < 0 THEN 1 ELSE 0 END) AS BIGINT) AS jac_n_inverted,
-        |  CAST(sum(CASE WHEN abs(jac) < 0.2 THEN 1 ELSE 0 END) AS BIGINT) AS jac_n_poor
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_field_info" ->
-      """WITH g AS (SELECT c_mktsegment, count(*) AS n_rows,
-        |  CAST(count(c_acctbal) AS BIGINT) AS n_a, CAST(count(c_name) AS BIGINT) AS n_c
-        |  FROM customer GROUP BY 1)
-        |SELECT c_mktsegment, n_rows, 'c_acctbal' AS field, 'double' AS dtype,
-        |  n_a AS n_non_null, n_a * 8 AS est_bytes FROM g
-        |UNION ALL
-        |SELECT c_mktsegment, n_rows, 'c_name', 'string', n_c, n_c * 8 FROM g
-        |ORDER BY c_mktsegment, field""".stripMargin,
-
-    "q_atomic_info" ->
-      """SELECT vec_id AS sys_id,
-        |  CAST(len(embedding) AS BIGINT) AS n_atoms,
-        |  CAST(8 AS BIGINT) AS n_edges,
-        |  CAST(len(list_distinct(list_transform(embedding,
-        |    x -> CAST(floor(CAST(x AS DOUBLE) * 4) + 5 AS INT)))) AS BIGINT) AS n_species,
-        |  true AS pbc,
-        |  round(CAST(embedding[1] AS DOUBLE) + 1e-9, 4) AS energy
-        |FROM embeddings ORDER BY sys_id""".stripMargin,
-
-    // Row-level ledger mirror: the executed index set and the per-index log
-    // messages are both reconstructible from orders; serde/registry gates
-    // are deterministic once correct.
-    "q_ledger_detail" ->
-      """WITH i AS (SELECT o_orderkey % 8 AS idx, count(*) AS n
-        |  FROM orders WHERE o_orderstatus = 'O' GROUP BY 1)
-        |SELECT idx, 'completed' AS status, 1 AS peak_mem_nonneg,
-        |  'INFO' AS log_level,
-        |  'completed idx ' || idx || ' with ' || n || ' rows' AS log_message,
-        |  1 AS serde_hash_equal,
-        |  'orders_by_mod8' AS registry_sources,
-        |  'open_orders' AS registry_filters
-        |FROM i ORDER BY idx""".stripMargin,
-
-    "q_ledger_summary" -> {
-      // config identity is dir-independent by construction, so the expected
-      // run id / config length are LITERALS — the oracle pins the exact hash
-      val p = ledgerPipelineFor("")
-      val runId = p.configHash.take(16)
-      val cfgLen = p.canonicalConfig.length
-      s"""WITH i AS (SELECT DISTINCT o_orderkey % 8 AS idx FROM orders)
-         |SELECT CAST(count(*) AS BIGINT) AS n_index_rows,
-         |  CAST(count(*) AS BIGINT) AS n_indices,
-         |  CAST(min(idx) AS BIGINT) AS min_idx,
-         |  CAST(max(idx) AS BIGINT) AS max_idx,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM orders
-         |     WHERE o_orderstatus = 'O') AS observed_rows,
-         |  1 AS wall_positive,
-         |  CAST(1 AS BIGINT) AS n_runs,
-         |  '$runId' AS run_id,
-         |  CAST($cfgLen AS BIGINT) AS config_len,
-         |  1 AS has_stage_metrics, 1 AS stage_wall_nonneg,
-         |  CAST(0 AS BIGINT) AS run2_executed,
-         |  CAST(count(*) AS BIGINT) AS run2_skipped
-         |FROM i""".stripMargin
-    },
-
-    "q_pipeline_e2e" ->
-      """SELECT CAST(l_orderkey % 8 AS BIGINT) AS idx,
-        |  l_returnflag AS return_flag,
-        |  count(*) AS n_rows,
-        |  round(sum(CAST(CAST(l_quantity AS REAL) AS DOUBLE)) + 1e-9, 4) AS sum_qty,
-        |  min(CAST(l_extendedprice AS REAL)) AS min_price,
-        |  max(CAST(l_extendedprice AS REAL)) AS max_price,
-        |  round(avg(CAST(CAST(l_extendedprice AS REAL) AS DOUBLE)) + 1e-9, 4) AS avg_price,
-        |  CAST(8 AS BIGINT) AS run1_executed,
-        |  CAST(0 AS BIGINT) AS run2_executed,
-        |  CAST(8 AS BIGINT) AS run2_skipped,
-        |  1 AS artifact_written
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // Text-pipeline mirror: the full gate chain replayed — token count
-    // on the canonical form, keep-first dedup via (md5 fp, min doc_id),
-    // blocklist hits under RE2 — then the identical integer accounting;
-    // run literals pin the 4-index execute/skip contract.
-    "q_text_pipeline_e2e" ->
-      s"""WITH base AS (SELECT doc_id, doc_id % 4 AS idx, lang,
-         |    $NormSql AS nt FROM documents),
-         |tok AS (SELECT doc_id, idx, lang, nt,
-         |    CAST(len(string_split(nt, ' ')) AS BIGINT) AS n_tokens
-         |  FROM base),
-         |g1 AS (SELECT * FROM tok WHERE n_tokens >= 20),
-         |kp AS (SELECT md5(nt) AS fp, min(doc_id) AS keep_id
-         |  FROM g1 GROUP BY 1),
-         |g2 AS (SELECT g1.* FROM g1
-         |  JOIN kp ON md5(g1.nt) = kp.fp AND g1.doc_id = kp.keep_id),
-         |g3 AS (SELECT * FROM g2 WHERE
-         |  len(regexp_extract_all(nt, '\\b(slow|dup|stream)\\b', 1)) <= 2)
-         |SELECT CAST(idx AS BIGINT) AS idx, lang, count(*) AS n_docs,
-         |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-         |  CAST(4 AS BIGINT) AS run1_executed,
-         |  CAST(0 AS BIGINT) AS run2_executed,
-         |  CAST(4 AS BIGINT) AS run2_skipped
-         |FROM g3 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_pipeline_partial" ->
-      """SELECT CAST(l_orderkey % 8 AS BIGINT) AS idx,
-        |  l_returnflag AS return_flag,
-        |  count(*) AS n_rows,
-        |  round(sum(l_quantity) + 1e-9, 4) AS sum_qty,
-        |  1 AS run1_crashed,
-        |  CAST(5 AS BIGINT) AS run1_completed,
-        |  CAST(1 AS BIGINT) AS run1_failed,
-        |  CAST(5 AS BIGINT) AS run1_recorded_paths,
-        |  CAST(3 AS BIGINT) AS run2_executed,
-        |  CAST(5 AS BIGINT) AS run2_skipped,
-        |  1 AS run2_returns_crashed_paths,
-        |  CAST(8 AS BIGINT) AS run2_total_paths
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // Dashboard index_df mirror: completed residues 0-4 carry their real
-    // per-index 'O'-order counts; the faulted idx 5 shows as error with
-    // its message and zero rows; 6-7 were never touched. gpu memory is
-    // pinned EXACTLY zero (CPU run, null gpu_memory_bytes column).
-    "q_dashboard_index" ->
-      """WITH c AS (SELECT o_orderkey % 8 AS idx, count(*) AS n
-        |  FROM orders WHERE o_orderstatus = 'O' GROUP BY 1)
-        |SELECT CAST(idx AS BIGINT) AS idx, 'completed' AS status,
-        |  '' AS error, CAST(n AS BIGINT) AS n_rows,
-        |  1 AS gpu_mb_zero, 1 AS wall_nonneg
-        |FROM c WHERE idx <= 4
-        |UNION ALL
-        |SELECT 5, 'error', 'injected fault', 0, 1, 1
-        |ORDER BY idx""".stripMargin,
-
-    // Dashboard summary mirror (retry-wins accounting): 8 total indices,
-    // 5 completed / 1 failed / 2 remaining, with the completed row total
-    // tied to the orders data.
-    "q_dashboard_summary" ->
-      """WITH c AS (SELECT o_orderkey % 8 AS idx, count(*) AS n
-        |  FROM orders WHERE o_orderstatus = 'O' GROUP BY 1)
-        |SELECT CAST(8 AS BIGINT) AS total, CAST(5 AS BIGINT) AS completed,
-        |  CAST(1 AS BIGINT) AS failed, CAST(2 AS BIGINT) AS remaining,
-        |  1 AS elapsed_nonneg,
-        |  CAST((SELECT sum(n) FROM c WHERE idx <= 4) AS BIGINT) AS completed_rows
-        |""".stripMargin,
-
-    // Dashboard workers_df mirror: one claiming worker (the driver
-    // session), 5 completed / 1 failed indices, its throughput tied to
-    // the orders data.
-    "q_dashboard_workers" ->
-      """WITH c AS (SELECT o_orderkey % 8 AS idx, count(*) AS n
-        |  FROM orders WHERE o_orderstatus = 'O' GROUP BY 1)
-        |SELECT 'driver' AS worker_id, CAST(5 AS BIGINT) AS completed,
-        |  CAST(1 AS BIGINT) AS failed,
-        |  CAST((SELECT sum(n) FROM c WHERE idx <= 4) AS BIGINT) AS worker_rows
-        |""".stripMargin,
-
-    // Dashboard logs_df mirror: WARNING-gated tail over per-index log rows
-    // whose messages carry the real per-residue 'O'-order counts (odd
-    // indices log at WARNING; the minLevel=30 gate drops the INFO evens).
-    "q_dashboard_logs" ->
-      """WITH c AS (SELECT o_orderkey % 8 AS idx, count(*) AS n
-        |  FROM orders WHERE o_orderstatus = 'O' GROUP BY 1)
-        |SELECT CAST(idx AS BIGINT) AS idx, 'WARNING' AS level,
-        |  30 AS level_num, 'graft.runner' AS logger_name,
-        |  'idx ' || idx || ' completed ' || n || ' rows' AS message
-        |FROM c WHERE idx % 2 = 1 ORDER BY idx""".stripMargin,
-
-    // Dashboard stage_df mirror: stage timings are runtime values, so the
-    // gate pins the view's structure (rows exist, contiguous distinct
-    // stage_order from 0, sane walls/tasks) plus the deterministic run
-    // accounting (all 8 indices executed in run 1).
-    "q_dashboard_stages" ->
-      """SELECT 1 AS has_stages, 1 AS order_from_zero, 1 AS order_distinct,
-        |  1 AS wall_nonneg, 1 AS exec_nonneg, 1 AS tasks_pos,
-        |  CAST(8 AS BIGINT) AS run_executed""".stripMargin,
-
-    // Provenance mirror: every index records exactly one seq-0 output path
-    // named by its index, one stats_probe artifact at filter_order 1,
-    // eight artifacts total; per-index row counts replay from orders; the
-    // resumed run executes nothing yet returns all eight recorded paths.
-    "q_dashboard_artifacts" ->
-      """WITH c AS (SELECT o_orderkey % 8 AS idx, count(*) AS n
-        |  FROM orders WHERE o_orderstatus = 'O' GROUP BY 1)
-        |SELECT CAST(idx AS BIGINT) AS idx,
-        |  CAST(1 AS BIGINT) AS n_output_files,
-        |  CAST(1 AS BIGINT) AS path_named_by_idx,
-        |  0 AS max_seq,
-        |  CAST(1 AS BIGINT) AS n_artifacts,
-        |  'stats_probe' AS filter_name,
-        |  1 AS filter_order,
-        |  CAST(n AS BIGINT) AS n_rows,
-        |  CAST(8 AS BIGINT) AS total_artifacts,
-        |  CAST(0 AS BIGINT) AS run2_executed,
-        |  CAST(8 AS BIGINT) AS run2_recorded_paths
-        |FROM c ORDER BY idx""".stripMargin,
-
-    // Two-worker ledger mirror: w_1 completed residues 0-4 then crashed at
-    // 5 (its error row superseded by w_2's completion — retry-wins, so
-    // failed=0), w_2 completed 5-7 under a fresh invocation; per-worker
-    // row throughput replays from orders.
-    "q_dashboard_workers_multi" ->
-      """WITH c AS (SELECT o_orderkey % 8 AS idx, count(*) AS n
-        |  FROM orders WHERE o_orderstatus = 'O' GROUP BY 1)
-        |SELECT 'w_1' AS worker_id, CAST(5 AS BIGINT) AS completed,
-        |  CAST(0 AS BIGINT) AS failed,
-        |  CAST((SELECT sum(n) FROM c WHERE idx <= 4) AS BIGINT) AS worker_rows,
-        |  1 AS pid_positive, 1 AS hostname_nonempty, 1 AS heartbeat_ordered,
-        |  'inv_1' AS invocation_id, CAST(3 AS BIGINT) AS run2_executed
-        |UNION ALL
-        |SELECT 'w_2', CAST(3 AS BIGINT), CAST(0 AS BIGINT),
-        |  CAST((SELECT sum(n) FROM c WHERE idx >= 5) AS BIGINT),
-        |  1, 1, 1, 'inv_2', CAST(3 AS BIGINT)
-        |ORDER BY worker_id""".stripMargin,
-
-    // Per-index stage grain mirror: every executed index owns stage rows
-    // whose ordering restarts at zero (reference (idx, run_id,
-    // stage_order) key); timings are runtime values, gated as booleans.
-    "q_dashboard_stages_idx" ->
-      """WITH i AS (SELECT DISTINCT o_orderkey % 8 AS idx FROM orders)
-        |SELECT CAST(idx AS BIGINT) AS idx, 1 AS has_stages,
-        |  1 AS order_from_zero, 1 AS order_distinct, 1 AS wall_nonneg,
-        |  CAST(8 AS BIGINT) AS run_executed
-        |FROM i ORDER BY idx""".stripMargin,
-
-    // Progress/stall-view mirror: crashed-at-5 counters, a two-worker
-    // census, exactly one stalled claimant (the injected w_stuck holding
-    // idx 6 on a 10-minute-old heartbeat; the driver's heartbeat is
-    // fresh); throughput/ETA gate as booleans; completed rows replay from
-    // the per-residue 'O'-order counts.
-    "q_dashboard_progress" ->
-      """WITH c AS (SELECT o_orderkey % 8 AS idx, count(*) AS n
-        |  FROM orders WHERE o_orderstatus = 'O' GROUP BY 1)
-        |SELECT CAST(8 AS BIGINT) AS total, CAST(5 AS BIGINT) AS completed,
-        |  CAST(1 AS BIGINT) AS failed, CAST(2 AS BIGINT) AS remaining,
-        |  CAST(2 AS BIGINT) AS n_workers, CAST(1 AS BIGINT) AS n_stalled,
-        |  'w_stuck' AS first_stalled_worker, 1 AS throughput_pos,
-        |  1 AS eta_nonneg, CAST(6 AS BIGINT) AS stalled_index,
-        |  CAST((SELECT sum(n) FROM c WHERE idx <= 4) AS BIGINT) AS completed_rows
-        |""".stripMargin,
-
-    // Reset-family mirror (reference reset()/reset_index()): run A's
-    // per-index completed counts replay from orders; the reset counters
-    // are analytic — resetIndex(3) leaves 5 completed and the resume
-    // re-runs exactly 1; resetRun(B) zeroes B's records and its run meta.
-    "q_ledger_reset" ->
-      """SELECT CAST(o_orderkey % 6 AS BIGINT) AS idx,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(5 AS BIGINT) AS a_completed_after_reset,
-        |  CAST(1 AS BIGINT) AS resume_executed,
-        |  CAST(5 AS BIGINT) AS resume_skipped,
-        |  CAST(0 AS BIGINT) AS b_completed_after_reset,
-        |  1 AS b_meta_cleared
-        |FROM orders WHERE o_orderstatus = 'O'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Config-file-driven run mirror: the loaded pipeline's artifact values
-    // replay from orders; hash_equal pins load(save(p)) == p's identity.
-    "q_pipeline_from_config" ->
-      """SELECT CAST(o_orderkey % 8 AS BIGINT) AS idx, count(*) AS n_open,
-        |  CAST(sum(o_custkey) AS BIGINT) AS sum_cust,
-        |  1 AS hash_equal, CAST(8 AS BIGINT) AS run_executed,
-        |  CAST(1 AS BIGINT) AS artifact_recorded
-        |FROM orders WHERE o_orderstatus = 'O'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_aselmdb_roundtrip" ->
-      """SELECT vec_id AS sys_id,
-        |  CAST(len(embedding) AS BIGINT) AS n_atoms,
-        |  CAST(len(list_distinct(list_transform(embedding,
-        |    x -> CAST(floor(CAST(x AS DOUBLE) * 4) + 5 AS BIGINT)))) AS BIGINT) AS n_species,
-        |  round(CAST(embedding[1] AS DOUBLE) + 1e-9, 4) AS energy,
-        |  round(list_sum(embedding::DOUBLE[]) + 1e-9, 4) AS sum_pos
-        |FROM embeddings ORDER BY sys_id""".stripMargin,
-
-    "q_atomic_stats" ->
-      """WITH pos AS (SELECT unnest(embedding::DOUBLE[]) AS v FROM embeddings),
-        |chg AS (SELECT floor(unnest(embedding::DOUBLE[]) * 4) + 5 AS v FROM embeddings),
-        |s AS (
-        |  SELECT 'positions' AS field, count(*) AS n, avg(v) AS mean,
-        |    var_pop(v) AS var_pop, min(v) AS mn, max(v) AS mx FROM pos
-        |  UNION ALL
-        |  SELECT 'charges', count(*), avg(v), var_pop(v), min(v), max(v) FROM chg)
-        |SELECT field, n, round(mean + 1e-9, 4) AS mean,
-        |  round(var_pop + 1e-9, 4) AS var_pop,
-        |  round(mn + 1e-9, 4) AS min, round(mx + 1e-9, 4) AS max
-        |FROM s ORDER BY field""".stripMargin,
-
-    // Same feature pipeline as q_text_quality, gated: thresholds compare
-    // exact int/int rationals, so the kept set is engine-stable unrounded.
-    "q_quality_gate" ->
-      s"""WITH f AS (SELECT doc_id, length(text) AS n_chars,
-         |    len(string_split($NormSql, ' ')) AS n_tokens,
-         |    len(regexp_extract_all(lower(text), '${StopPatterns("en")}')) AS n_stop,
-         |    length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit
-         |  FROM documents),
-         |g AS (SELECT doc_id, n_chars, n_tokens, n_stop,
-         |    CAST(n_chars - n_tokens + 1 AS DOUBLE) / n_tokens AS atl,
-         |    CAST(n_stop AS DOUBLE) / n_tokens AS sr,
-         |    CAST(n_digit AS DOUBLE) / n_chars AS dr
-         |  FROM f)
-         |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-         |  round(sr + 1e-9, 4) AS stop_ratio, round(dr + 1e-9, 4) AS digit_ratio,
-         |  round(least(1.0, greatest(0.0, 0.2 + sr * 2.0 + atl * 0.05 - dr * 3.0)) + 1e-9, 4)
-         |    AS quality_score
-         |FROM g WHERE n_tokens >= 20 AND sr >= 0.02 AND dr <= 0.1
-         |ORDER BY doc_id""".stripMargin,
-
-    // 60-bit md5 bucket mirror (see q_doc_fingerprints): ASCII digits ⇒
-    // VARCHAR md5 == binary md5.
-    "q_stratified_sample" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10000 <
-        |  CASE lang WHEN 'en' THEN 5000 WHEN 'de' THEN 2500
-        |            WHEN 'fr' THEN 1000 WHEN 'es' THEN 2500 ELSE 0 END
-        |ORDER BY doc_id""".stripMargin,
-
-    // Domain-mix mirror: weights recomputed from the source suffix (exact
-    // binary fractions), the same md5 bucket picks the fractional-epoch
-    // rows, epochs unnested identically.
-    "q_domain_mix" ->
-      """WITH d AS (SELECT source, n_chars,
-        |    (CAST(regexp_extract(source, 'src(\d+)', 1) AS INT) % 4) * 0.75 + 0.5 AS wt,
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |      % 10000 AS b
-        |  FROM documents),
-        |c AS (SELECT source, n_chars,
-        |    CAST(floor(wt) AS INT) +
-        |      (CASE WHEN b < (wt - floor(wt)) * 10000.0 THEN 1 ELSE 0 END) AS nc
-        |  FROM d),
-        |e AS (SELECT source, n_chars,
-        |    unnest(generate_series(0, nc - 1)) AS epoch
-        |  FROM c WHERE nc > 0)
-        |SELECT source, CAST(epoch AS INT) AS epoch,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // d3plot cycle mirror: float32 words round-trip exactly; sx/epsp are
-    // exact binary fractions (powers of two × small ints) so their sums
-    // collapse to closed forms; dx mirrors the per-term double→float cast.
-    "q_d3plot_roundtrip" ->
-      """WITH m AS (SELECT vec_id % 2 AS mesh_id,
-        |    CAST(embedding[4] AS DOUBLE) AS e4, CAST(embedding[5] AS DOUBLE) AS e5
-        |  FROM embeddings),
-        |a AS (SELECT mesh_id, count(*) AS n_points, count(*) // 4 AS n_cells,
-        |    sum(e4 + CAST(CAST(e4 + e5 AS FLOAT) AS DOUBLE)) AS sdx
-        |  FROM m GROUP BY 1)
-        |SELECT mesh_id, n_points, n_cells, CAST(2 AS BIGINT) AS n_states,
-        |  round(sdx + 1e-6, 2) AS sum_dx,
-        |  round(1.5 * n_cells * (n_cells + 1) / 2 + 1e-6, 2) AS sum_sx,
-        |  round(0.25 * n_cells * n_cells + 1e-6, 2) AS sum_epsp
-        |FROM a ORDER BY mesh_id""".stripMargin,
-
-    // SPH cycle mirror: every field value is an exact binary fraction of
-    // (id, t), so each per-field sum recomputes in closed form; the static
-    // node & material list adds the particle_list row.
-    "q_d3plot_sph" ->
-      """WITH e AS (SELECT vec_id AS id FROM embeddings WHERE vec_id < 100),
-        |st AS (SELECT id, t FROM e CROSS JOIN (SELECT unnest([0, 1]) AS t)),
-        |f AS (
-        |  SELECT 'density' AS field, (id % 13) * CAST(0.75 AS DOUBLE) AS v FROM st
-        |  UNION ALL SELECT 'mass', (id + 2) * CAST(0.125 AS DOUBLE) FROM st
-        |  UNION ALL SELECT 'material', CAST(id % 3 + 1 AS DOUBLE) FROM st
-        |  UNION ALL SELECT 'neighbors', CAST(id % 7 AS DOUBLE) FROM st
-        |  UNION ALL SELECT 'pressure', (id + t) * CAST(0.5 AS DOUBLE) FROM st
-        |  UNION ALL SELECT 'radius', (id + 1) * CAST(0.25 AS DOUBLE) FROM st)
-        |SELECT field, CAST(count(*) AS BIGINT) AS n,
-        |  round(sum(v) + 1e-6, 2) AS sum_value
-        |FROM f GROUP BY 1
-        |UNION ALL
-        |SELECT 'particle_list', CAST(count(*) AS BIGINT),
-        |  round(sum(CAST(id % 3 + 1 + id AS DOUBLE)) + 1e-6, 2) FROM e
-        |ORDER BY 1""".stripMargin,
-
-    // NetCDF cycle mirror: <f8 record grids round-trip bit-exactly; fills
-    // are 0. The lattice is rebuilt COMPLETE (every variable × record),
-    // because the sink always writes nRecs records even when a
-    // (variable, parity) group has no events.
-    // Tumbling-window mirror in exact integer microseconds: Spark's window
-    // start = ts_us - ts_us % dur_us; DuckDB reads the raw TIMESTAMP_NS and
-    // epoch_ns keeps full precision (epoch() would round through a double).
-    "q_streaming_stats" ->
-      """WITH e AS (SELECT event_type,
-        |    epoch_ns(ts) // 1000 AS us, value FROM events),
-        |w AS (SELECT make_timestamp(us - us % 2592000000000) AS window_start,
-        |    event_type, value FROM e)
-        |SELECT window_start, event_type, count(value) AS n,
-        |  round(avg(value) + 1e-9, 4) AS mean,
-        |  round(var_pop(value) + 1e-9, 4) AS var_pop,
-        |  round(min(value) + 1e-9, 4) AS min,
-        |  round(max(value) + 1e-9, 4) AS max
-        |FROM w GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // session_window windows merge when they TOUCH (spec-pinned): an event
-    // at exactly last+gap joins, so the break condition is strict >.
-    "q_streaming_sessions" ->
-      """WITH m AS (SELECT user_id, ts, value, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |         OR epoch_ns(ts) // 1000 - epoch_ns(lag(ts) OVER w) // 1000
-        |            > 3600000000 THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, ts, value,
-        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM m)
-        |SELECT user_id, CAST(min(epoch_ns(ts) // 1000) AS BIGINT) AS session_start_us,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  round(sum(value) + 1e-9, 4) AS sum_value
-        |FROM s GROUP BY user_id, sid ORDER BY 1, 2""".stripMargin,
-
-    // Same mirror as q_netcdf_roundtrip: the HDF5 container also
-    // round-trips <f8 cells bit-exactly; `dims` pins the DIMENSION_LIST
-    // names recovered from the netCDF-4 attribute messages.
-    "q_netcdf4_roundtrip" ->
-      """WITH g AS (SELECT event_type AS variable, event_id % 2 AS t,
-        |    sum(value) AS v
-        |  FROM events GROUP BY 1, 2),
-        |l AS (SELECT DISTINCT e.event_type AS variable, r.range AS t
-        |  FROM events e, range(2) r),
-        |f AS (SELECT l.variable, l.t, coalesce(g.v, 0.0) AS v
-        |  FROM l LEFT JOIN g ON l.variable = g.variable AND l.t = g.t)
-        |SELECT variable, t, CAST(128 AS BIGINT) AS n_cells,
-        |  round(v + 1e-6, 2) AS sum_value, 'time,lat,lon' AS dims
-        |FROM f ORDER BY 1, 2""".stripMargin,
-
-    // Both containers hold the same grids (<f8 cells, bit-exact), so each
-    // variable's total is its events sum; the netCDF-4 files add index-
-    // valued time/lat/lon scales per file (n files = n distinct variables).
-    "q_netcdf_auto" ->
-      """WITH g AS (SELECT event_type AS variable, sum(value) AS v
-        |  FROM events GROUP BY 1),
-        |nv AS (SELECT CAST(count(*) AS BIGINT) AS n FROM g),
-        |gg AS (SELECT event_type AS variable, event_id % 2 AS t,
-        |    user_id % 8 AS i, user_id % 16 AS j, sum(value) AS value
-        |  FROM events GROUP BY 1, 2, 3, 4),
-        |p AS (SELECT variable, t,
-        |    least(greatest(CAST(floor((value + CAST(20.0 AS DOUBLE))
-        |        / CAST(0.01 AS DOUBLE)) AS BIGINT), 0), 4095) AS x
-        |  FROM gg WHERE (i + j) % 5 <> 0),
-        |vn AS (SELECT variable,
-        |    CAST(row_number() OVER (ORDER BY variable) - 1 AS BIGINT) AS num
-        |  FROM (SELECT DISTINCT variable FROM gg))
-        |SELECT * FROM (
-        |  SELECT 'classic' AS format, variable, CAST(256 AS BIGINT) AS n_values,
-        |    round(v + 1e-6, 2) AS sum_value FROM g
-        |  UNION ALL
-        |  SELECT 'hdf5', variable, CAST(256 AS BIGINT), round(v + 1e-6, 2) FROM g
-        |  UNION ALL
-        |  SELECT 'hdf5', 'lat', CAST(8 * n AS BIGINT), round(28.0 * n + 1e-6, 2) FROM nv
-        |  UNION ALL
-        |  SELECT 'hdf5', 'lon', CAST(16 * n AS BIGINT), round(120.0 * n + 1e-6, 2) FROM nv
-        |  UNION ALL
-        |  SELECT 'hdf5', 'time', CAST(2 * n AS BIGINT), round(1.0 * n + 1e-6, 2) FROM nv
-        |  UNION ALL
-        |  SELECT 'grib2',
-        |    'grib_d0_c0_n' || CAST(vn.num AS VARCHAR) || '_f'
-        |      || CAST(p.t * 6 AS VARCHAR),
-        |    CAST(count(*) AS BIGINT),
-        |    round(sum(CAST(p.x AS DOUBLE) * CAST(0.01 AS DOUBLE)
-        |      + CAST(-20.0 AS DOUBLE)) + 1e-6, 2)
-        |  FROM p JOIN vn USING (variable) GROUP BY 1, 2)
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q_netcdf_roundtrip" ->
-      """WITH g AS (SELECT event_type AS variable, event_id % 2 AS t,
-        |    sum(value) AS v
-        |  FROM events GROUP BY 1, 2),
-        |l AS (SELECT DISTINCT e.event_type AS variable, r.range AS t
-        |  FROM events e, range(2) r),
-        |f AS (SELECT l.variable, l.t, coalesce(g.v, 0.0) AS v
-        |  FROM l LEFT JOIN g ON l.variable = g.variable AND l.t = g.t)
-        |SELECT variable, t, CAST(128 AS BIGINT) AS n_cells,
-        |  round(v + 1e-6, 2) AS sum_value
-        |FROM f ORDER BY 1, 2""".stripMargin,
-
-    // The packed cycle re-derives: same grouping, same clamped-floor
-    // quantization (both engines floor the same IEEE double), same exact
-    // stored*scale+offset unpack; holes are the same (i+j)%5 cut the
-    // writer turned into _FillValue cells (→ NaN → filtered on read).
-    "q_netcdf_packed" ->
-      """WITH g AS (SELECT event_type AS variable, event_id % 2 AS t,
-        |    user_id % 8 AS i, user_id % 16 AS j, sum(value) AS value
-        |  FROM events GROUP BY 1, 2, 3, 4),
-        |p AS (SELECT variable, t,
-        |    least(greatest(floor((value - CAST(0.5 AS DOUBLE)) / CAST(0.01 AS DOUBLE)),
-        |      CAST(-32767 AS DOUBLE)), CAST(32767 AS DOUBLE)) AS stored
-        |  FROM g WHERE (i + j) % 5 <> 0)
-        |SELECT variable, t, CAST(count(*) AS BIGINT) AS n_cells,
-        |  round(sum(stored * CAST(0.01 AS DOUBLE) + CAST(0.5 AS DOUBLE)) + 1e-6, 2)
-        |    AS sum_value
-        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // GeoTIFF mirror: quantization, the float32 decode cast, nodata
-    // census, compression assignment (sorted variable index % 3), and
-    // the PixelIsArea lat/lon envelope — all from the event stream.
-    "q_geotiff_grid" ->
-      """WITH g AS (SELECT event_type AS variable,
-        |    user_id % 8 AS i, user_id % 16 AS j, sum(value) AS value
-        |  FROM events GROUP BY 1, 2, 3),
-        |c AS (SELECT variable, i, j,
-        |    least(greatest(CAST(floor((value + CAST(20.0 AS DOUBLE))
-        |        / CAST(0.01 AS DOUBLE)) AS BIGINT), 0), 65534) AS stored
-        |  FROM g WHERE (i + j) % 5 <> 0),
-        |vi AS (SELECT variable, row_number() OVER (ORDER BY variable) - 1 AS ix
-        |  FROM (SELECT DISTINCT variable FROM c)),
-        |comp AS (SELECT variable,
-        |    CAST(CASE ix % 3 WHEN 0 THEN 5 WHEN 1 THEN 32773 ELSE 1 END
-        |      AS INT) AS compression
-        |  FROM vi),
-        |agg AS (SELECT variable, CAST(count(*) AS BIGINT) AS n_cells,
-        |    sum(CAST(stored AS DOUBLE)) AS sum_u16,
-        |    sum(CAST(CAST(CAST(stored AS DOUBLE) * CAST(0.01 AS DOUBLE)
-        |        - CAST(20.0 AS DOUBLE) AS FLOAT) AS DOUBLE)) AS sum_f32,
-        |    min(CAST(50.0 AS DOUBLE) - (i + CAST(0.5 AS DOUBLE))
-        |      * CAST(0.25 AS DOUBLE)) AS min_lat,
-        |    max(CAST(50.0 AS DOUBLE) - (i + CAST(0.5 AS DOUBLE))
-        |      * CAST(0.25 AS DOUBLE)) AS max_lat,
-        |    min(CAST(10.0 AS DOUBLE) + (j + CAST(0.5 AS DOUBLE))
-        |      * CAST(0.25 AS DOUBLE)) AS min_lon,
-        |    max(CAST(10.0 AS DOUBLE) + (j + CAST(0.5 AS DOUBLE))
-        |      * CAST(0.25 AS DOUBLE)) AS max_lon
-        |  FROM c GROUP BY 1),
-        |pages AS (
-        |  SELECT a.variable, 0 AS page, a.n_cells,
-        |    round(a.sum_u16 + 1e-6, 2) AS sum_value, cm.compression,
-        |    16 AS bits, 1 AS sample_format,
-        |    a.min_lat, a.max_lat, a.min_lon, a.max_lon
-        |  FROM agg a JOIN comp cm USING (variable)
-        |  UNION ALL
-        |  SELECT a.variable, 1 AS page, a.n_cells,
-        |    round(a.sum_f32 + 1e-6, 2) AS sum_value, 5 AS compression,
-        |    32 AS bits, 3 AS sample_format,
-        |    a.min_lat, a.max_lat, a.min_lon, a.max_lon
-        |  FROM agg a)
-        |SELECT variable, CAST(page AS INT) AS page, n_cells, sum_value,
-        |  16 AS width, 8 AS height, compression, bits, sample_format,
-        |  min_lat, max_lat, min_lon, max_lon
-        |FROM pages ORDER BY variable, page""".stripMargin,
-
-    // GRIB2 mirror: same packed-lattice recomputation as the NetCDF CF
-    // oracle, with the simple-packing unpack (−20.0 + X·0.01 — the
-    // (R + X·2^E)/10^D order both engines evaluate) and the section-walk
-    // identity/grid fields as literals.
-    "q_grib2_decode" ->
-      """WITH g AS (SELECT event_type AS variable, event_id % 2 AS t,
-        |    user_id % 8 AS i, user_id % 16 AS j, sum(value) AS value
-        |  FROM events GROUP BY 1, 2, 3, 4),
-        |p AS (SELECT variable, t,
-        |    least(greatest(CAST(floor((value + CAST(20.0 AS DOUBLE))
-        |        / CAST(0.01 AS DOUBLE)) AS BIGINT), 0), 4095) AS x
-        |  FROM g WHERE (i + j) % 5 <> 0)
-        |SELECT variable, CAST(t * 6 AS BIGINT) AS forecast_hours,
-        |  CAST(count(*) AS BIGINT) AS n_cells,
-        |  round(sum(CAST(x AS DOUBLE) * CAST(0.01 AS DOUBLE)
-        |    + CAST(-20.0 AS DOUBLE)) + 1e-6, 2) AS sum_value,
-        |  CAST(16 AS BIGINT) AS ni, CAST(8 AS BIGINT) AS nj,
-        |  CAST(90.0 AS DOUBLE) AS lat1, CAST(0.0 AS DOUBLE) AS lon1,
-        |  CAST(0.25 AS DOUBLE) AS di, CAST(0.25 AS DOUBLE) AS dj,
-        |  CAST(2026 AS INTEGER) AS ref_year
-        |FROM p GROUP BY 1, 2 ORDER BY variable, forecast_hours""".stripMargin,
-
-    // CF time mirror: same packed lattice, plus the 6-hourly calendar
-    // arithmetic as plain literals.
-    "q_netcdf_time" ->
-      """WITH g AS (SELECT event_type AS variable, event_id % 2 AS t,
-        |    user_id % 8 AS i, user_id % 16 AS j, sum(value) AS value
-        |  FROM events GROUP BY 1, 2, 3, 4),
-        |p AS (SELECT variable, t,
-        |    least(greatest(floor((value - CAST(0.5 AS DOUBLE)) / CAST(0.01 AS DOUBLE)),
-        |      CAST(-32767 AS DOUBLE)), CAST(32767 AS DOUBLE)) AS stored
-        |  FROM g WHERE (i + j) % 5 <> 0)
-        |SELECT variable, t, CAST(631152000 + t * 21600 AS BIGINT) AS time_s,
-        |  CAST(count(*) AS BIGINT) AS n_cells,
-        |  round(sum(stored * CAST(0.01 AS DOUBLE) + CAST(0.5 AS DOUBLE)) + 1e-6, 2)
-        |    AS sum_value
-        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // Salting only changes the shuffle layout — the result must equal a
-    // plain join.
-    "q_salted_join" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        |  round(sum(l_quantity) + 1e-6, 2) AS sum_qty
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Bloom-prune mirror: the position set and the three membership tests
-    // rebuilt with the same row-salted md5 family — the pruned census
-    // matches exactly, deterministic false positives included.
-    "q_bloom_prune" ->
-      """WITH dimk AS (SELECT DISTINCT o_orderkey AS k FROM orders
-        |  WHERE o_orderpriority = '1-URGENT'),
-        |b AS (SELECT DISTINCT
-        |    CAST('0x' || substr(md5(CAST(j AS VARCHAR) || '_' ||
-        |      CAST(k AS VARCHAR)), 1, 15) AS BIGINT) % 16384 AS pos
-        |  FROM dimk, (SELECT unnest(generate_series(0, 2)) AS j) s),
-        |f AS (SELECT l_returnflag, l_orderkey FROM lineitem),
-        |p AS (SELECT l_returnflag FROM f WHERE
-        |  (CAST('0x' || substr(md5('0_' || CAST(l_orderkey AS VARCHAR)), 1, 15)
-        |     AS BIGINT) % 16384) IN (SELECT pos FROM b)
-        |  AND (CAST('0x' || substr(md5('1_' || CAST(l_orderkey AS VARCHAR)), 1, 15)
-        |     AS BIGINT) % 16384) IN (SELECT pos FROM b)
-        |  AND (CAST('0x' || substr(md5('2_' || CAST(l_orderkey AS VARCHAR)), 1, 15)
-        |     AS BIGINT) % 16384) IN (SELECT pos FROM b)),
-        |bp AS (SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_bloom_pass
-        |  FROM p GROUP BY 1),
-        |t AS (SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_true
-        |  FROM f WHERE l_orderkey IN (SELECT k FROM dimk) GROUP BY 1)
-        |SELECT bp.l_returnflag, n_bloom_pass, n_true,
-        |  n_bloom_pass - n_true AS n_false_pos
-        |FROM bp JOIN t USING (l_returnflag) ORDER BY 1""".stripMargin,
-
-    // Zarr cycle mirror: <f8 cells are bit-exact through the chunk files,
-    // so the oracle rebuilds the full fill-padded lattice from events.
-    "q_zarr_roundtrip" ->
-      """WITH g AS (SELECT user_id % 32 AS i, event_id % 64 AS j, sum(value) AS v
-        |  FROM events GROUP BY 1, 2),
-        |l AS (SELECT a.range AS i, b.range AS j FROM range(32) a, range(64) b),
-        |f AS (SELECT l.i, l.j, coalesce(g.v, 0.0) AS v
-        |  FROM l LEFT JOIN g ON l.i = g.i AND l.j = g.j)
-        |SELECT CAST(count(*) AS BIGINT) AS n_cells,
-        |  round(sum(v) + 1e-6, 2) AS sum_value,
-        |  round(min(v) + 1e-6, 2) AS min_value,
-        |  round(max(v) + 1e-6, 2) AS max_value
-        |FROM f""".stripMargin,
-
-    // float16 Zarr cycle mirror: cell values are integers mod 1024 —
-    // exactly representable in binary16 — so the half round-trip is
-    // lossless and the oracle rebuilds the fill-padded lattice from
-    // events; the dtype literal pins the on-disk artifact width.
-    "q_zarr_f16_roundtrip" ->
-      """WITH g AS (SELECT user_id % 16 AS i, event_id % 32 AS j,
-        |    CAST(count(*) % 1024 AS DOUBLE) AS v
-        |  FROM events GROUP BY 1, 2),
-        |l AS (SELECT a.range AS i, b.range AS j FROM range(16) a, range(32) b),
-        |f AS (SELECT l.i, l.j, coalesce(g.v, 0.0) AS v
-        |  FROM l LEFT JOIN g ON l.i = g.i AND l.j = g.j)
-        |SELECT '<f2' AS dtype, CAST(count(*) AS BIGINT) AS n_cells,
-        |  CAST(sum(v) AS BIGINT) AS sum_value,
-        |  CAST(min(v) AS BIGINT) AS min_value,
-        |  CAST(max(v) AS BIGINT) AS max_value
-        |FROM f""".stripMargin,
-
-    // STL cycle mirror: each kept point (first 3·⌊n/3⌋ per mesh in id
-    // order) appears exactly once among the re-read facet corners.
-    "q_stl_roundtrip" ->
-      """WITH p AS (SELECT vec_id % 3 AS mesh_id, vec_id,
-        |    CAST(embedding[1] AS DOUBLE) AS x,
-        |    row_number() OVER (PARTITION BY vec_id % 3 ORDER BY vec_id) AS rn,
-        |    count(*) OVER (PARTITION BY vec_id % 3) AS n
-        |  FROM embeddings)
-        |SELECT mesh_id, CAST(3 * (n // 3) AS BIGINT) AS n_points,
-        |  CAST(n // 3 AS BIGINT) AS n_facets,
-        |  round(sum(CASE WHEN rn <= 3 * (n // 3) THEN x ELSE 0 END) + 1e-6, 2) AS sum_x
-        |FROM p GROUP BY mesh_id, n ORDER BY mesh_id""".stripMargin,
-
-    // Pure generator oracle: the DSv2 source's structural contract
-    // (dense per-mesh point ids); the value stream is spec-pinned.
-    // Co-location gates: one partition per index, one index per partition.
-    "q_partition_indices" ->
-      """SELECT CAST(m.range AS BIGINT) AS mesh_id, CAST(400 AS BIGINT) AS n_rows,
-        |  CAST(1 AS BIGINT) AS n_partitions,
-        |  CAST(1 AS BIGINT) AS max_meshes_per_partition
-        |FROM range(0, 6) m ORDER BY mesh_id""".stripMargin,
-
-    // Grid contract: 19×36 cells per (sample, variable); time = 2020-01-01
-    // + 1 h/index; lat linspace 90→-90 sums to exactly 0 across the grid
-    // (symmetric, integral values), lon = lo·10 sums to 19·6300.
-    "q_random_dataarray" ->
-      """WITH g AS (SELECT s.range AS si, v.v
-        |  FROM range(0, 3) s, (SELECT unnest(['u10m','v10m','t2m']) AS v) v)
-        |SELECT CAST(si AS BIGINT) AS sample_idx, v AS variable,
-        |  CAST(684 AS BIGINT) AS n_cells,
-        |  strftime(TIMESTAMP '2020-01-01 00:00:00' + INTERVAL (si) HOUR,
-        |           '%Y-%m-%d %H:%M:%S') AS time,
-        |  round(0.0 + 1e-9, 4) AS sum_lat,
-        |  round(119700.0 + 1e-9, 4) AS sum_lon
-        |FROM g ORDER BY 1, 2""".stripMargin,
-
-    // Structural gates over the seeded atomic generator.
-    "q_random_atoms" ->
-      """SELECT CAST(s.range AS BIGINT) AS sample_idx,
-        |  CAST(50 AS BIGINT) AS n_atoms, CAST(1225 AS BIGINT) AS sum_atom_id,
-        |  1 AS z_in_set, 1 AS pos_in_box, 1 AS energy_in_range,
-        |  1 AS six_stresses, CAST(10.0 AS DOUBLE) AS cell, 0 AS pbc
-        |FROM range(0, 4) s ORDER BY sample_idx""".stripMargin,
-
-    "q_random_mesh" ->
-      """SELECT CAST(m.range AS BIGINT) AS mesh_id, CAST(500 AS BIGINT) AS n_points,
-        |  CAST(0 AS BIGINT) AS min_pid, CAST(499 AS BIGINT) AS max_pid,
-        |  CAST(124750 AS BIGINT) AS sum_pid
-        |FROM range(0, 6) m ORDER BY mesh_id""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH s AS (SELECT user_id, ts, event_id, value,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |       OR CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 3600
-        |       THEN 1 ELSE 0 END AS ns
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |t AS (SELECT user_id, value,
-        |  CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id FROM s)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |  round(sum(value) + 1e-6, 2) AS sum_value
-        |FROM t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // Brute-force mirror of the planted-triple near-dup clustering: the same
-    // deterministic perturbation (1-based lambda index = Spark's i+1), all
-    // pairs at τ=0.9, recursive-CTE component labels.
-    "q_dedup_clusters" ->
-      s"""WITH RECURSIVE
-         |trip AS (SELECT CAST(vec_id*3 + c AS BIGINT) AS id,
-         |  list_transform(embedding::DOUBLE[],
-         |    (x, i) -> x + c * ((vec_id*31 + i*7) % 13 - 6) * 0.0005)::FLOAT[] AS v
-         |  FROM embeddings, (VALUES (0), (1), (2)) t(c)),
-         |p AS (SELECT a.id AS da, b.id AS db,
-         |  round(list_dot_product(a.v::DOUBLE[], b.v::DOUBLE[]) /
-         |    (sqrt(list_dot_product(a.v::DOUBLE[], a.v::DOUBLE[])) *
-         |     sqrt(list_dot_product(b.v::DOUBLE[], b.v::DOUBLE[]))) + 1e-9, 4) AS cos_r
-         |  FROM trip a JOIN trip b ON a.id < b.id),
-         |e AS (SELECT da, db FROM p WHERE cos_r >= 0.9),
-         |sym(a, b) AS (SELECT da, db FROM e UNION SELECT db, da FROM e),
-         |walk(node, label) AS (
-         |  SELECT id, id FROM trip
-         |  UNION
-         |  SELECT s.b, w.label FROM walk w JOIN sym s ON s.a = w.node)
-         |SELECT node AS vec_id, CAST(min(label) AS BIGINT) AS component,
-         |  node = min(label) AS is_survivor
-         |FROM walk GROUP BY node ORDER BY vec_id""".stripMargin,
-
-    "q_grid_coarsen" ->
-      """SELECT event_type AS field,
-        |  CAST((user_id % 32) // 4 AS BIGINT) AS i,
-        |  CAST((event_id % 64) // 4 AS BIGINT) AS j,
-        |  count(*) AS n_cells, round(avg(value) + 1e-9, 4) AS value
-        |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    // Bilinear regrid mirror: the same endpoint-aligned mapping
-    // (31/8 and 63/11 as identical IEEE doubles), four corner weights,
-    // and inner-join sparse semantics; out-of-lattice corners only occur
-    // with weight 0 and vanish at the join on both engines.
-    "q_regrid" ->
-      """WITH src AS (SELECT event_type AS field, user_id % 32 AS i,
-        |    event_id % 64 AS j, sum(value) AS v
-        |  FROM events GROUP BY 1, 2, 3),
-        |tgt AS (SELECT f.field, gi.ti, gj.tj,
-        |    gi.ti * (CAST(31 AS DOUBLE) / 8) AS x,
-        |    gj.tj * (CAST(63 AS DOUBLE) / 11) AS y
-        |  FROM (SELECT DISTINCT field FROM src) f
-        |  CROSS JOIN (SELECT unnest(range(0, 9)) AS ti) gi
-        |  CROSS JOIN (SELECT unnest(range(0, 12)) AS tj) gj),
-        |c AS (SELECT field, ti, tj, x, y,
-        |    CAST(floor(x) AS BIGINT) AS i0, CAST(floor(y) AS BIGINT) AS j0
-        |  FROM tgt),
-        |k AS (
-        |  SELECT field, ti, tj, i0 AS i, j0 AS j,
-        |    (1 - (x - i0)) * (1 - (y - j0)) AS w FROM c
-        |  UNION ALL SELECT field, ti, tj, i0 + 1, j0,
-        |    (x - i0) * (1 - (y - j0)) FROM c
-        |  UNION ALL SELECT field, ti, tj, i0, j0 + 1,
-        |    (1 - (x - i0)) * (y - j0) FROM c
-        |  UNION ALL SELECT field, ti, tj, i0 + 1, j0 + 1,
-        |    (x - i0) * (y - j0) FROM c),
-        |jv AS (SELECT k.field, k.ti, k.tj, k.w * s.v AS wv, k.w AS w
-        |  FROM k JOIN src s ON k.field = s.field AND k.i = s.i AND k.j = s.j
-        |  WHERE s.v IS NOT NULL)
-        |SELECT field, CAST(ti AS BIGINT) AS i, CAST(tj AS BIGINT) AS j,
-        |  round(sum(wv) + 1e-9, 4) AS value_r,
-        |  round(sum(w) + 1e-9, 4) AS w_cover_r
-        |FROM jv GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    // The `.vti` cycle is bit-exact for the Float64 lattice cells, so the
-    // oracle rebuilds the dense grid's aggregates straight from events;
-    // fill cells contribute 0 to both sums and n_points is the full lattice.
-    "q_vti_roundtrip" ->
-      """WITH cells AS (
-        |  SELECT event_type AS field, CAST(user_id % 32 AS INT) AS i,
-        |    CAST(event_id % 64 AS INT) AS j, sum(value) AS v
-        |  FROM events GROUP BY 1, 2, 3)
-        |SELECT field, CAST(2048 AS BIGINT) AS n_points,
-        |  round(sum(v) + 1e-9, 2) AS sum_value,
-        |  round(sum((i + j * 100) * v) + 1e-9, 2) AS wsum
-        |FROM cells GROUP BY field ORDER BY field""".stripMargin,
-
-    "q_atom_offsets" ->
-      """SELECT doc_id, n_chars,
-        |  CAST(sum(n_chars) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n_chars
-        |    AS BIGINT) AS offset
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_mean_filter" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-        |  round(avg(l_quantity) + 1e-9, 4) AS mean_qty,
-        |  round(avg(l_extendedprice) + 1e-9, 4) AS mean_price,
-        |  round(avg(l_discount) + 1e-9, 6) AS mean_disc,
-        |  round(avg(l_tax) + 1e-9, 6) AS mean_tax
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_field_stats" ->
-      """WITH longv AS (
-        |  SELECT 'l_quantity' AS field, CAST(l_quantity AS DOUBLE) AS value FROM lineitem
-        |  UNION ALL SELECT 'l_discount', CAST(l_discount AS DOUBLE) FROM lineitem
-        |  UNION ALL SELECT 'l_tax', CAST(l_tax AS DOUBLE) FROM lineitem),
-        |m AS (
-        |  SELECT field, count(value) AS n, avg(value) AS mu, var_pop(value) AS m2,
-        |    avg(value*value) AS e2, avg(value*value*value) AS e3,
-        |    avg(value*value*value*value) AS e4,
-        |    min(value) AS vmin, max(value) AS vmax, median(value) AS med,
-        |    avg(abs(value)) AS amean, max(abs(value)) AS amax
-        |  FROM longv GROUP BY 1)
-        |SELECT field, n, round(mu + 1e-9, 4) AS mean, round(m2 + 1e-9, 4) AS var_pop,
-        |  round(sqrt(m2) + 1e-9, 4) AS std_pop, round(vmin + 1e-9, 4) AS min, round(vmax + 1e-9, 4) AS max,
-        |  round(med + 1e-9, 4) AS median, round(amean + 1e-9, 4) AS abs_mean, round(amax + 1e-9, 4) AS abs_max,
-        |  round((e3 - 3*mu*e2 + 2*mu*mu*mu) / pow(m2, 1.5) + 1e-9, 4) AS skew,
-        |  round((e4 - 4*mu*e3 + 6*mu*mu*e2 - 3*mu*mu*mu*mu) / (m2*m2) - 3 + 1e-9, 4) AS kurt
-        |FROM m ORDER BY field""".stripMargin,
-
-    "q_welford_state" ->
-      """WITH longv AS (
-        |  SELECT 'l_quantity' AS field, CAST(l_quantity AS DOUBLE) AS value FROM lineitem
-        |  UNION ALL SELECT 'l_discount', CAST(l_discount AS DOUBLE) FROM lineitem
-        |  UNION ALL SELECT 'l_tax', CAST(l_tax AS DOUBLE) FROM lineitem),
-        |m AS (
-        |  SELECT field, count(value) AS n, avg(value) AS mu, var_pop(value) AS m2,
-        |    avg(value*value) AS e2, avg(value*value*value) AS e3,
-        |    avg(value*value*value*value) AS e4,
-        |    min(value) AS vmin, max(value) AS vmax, avg(abs(value)) AS amean
-        |  FROM longv GROUP BY 1)
-        |SELECT field, n, round(mu + 1e-9, 6) AS mean, round(m2 + 1e-9, 4) AS mom2,
-        |  round(e3 - 3*mu*e2 + 2*mu*mu*mu + 1e-9, 4) AS mom3,
-        |  round(e4 - 4*mu*e3 + 6*mu*mu*e2 - 3*mu*mu*mu*mu + 1e-9, 3) AS mom4,
-        |  round(vmin + 1e-9, 4) AS min, round(vmax + 1e-9, 4) AS max, round(amean + 1e-9, 6) AS abs_mean
-        |FROM m ORDER BY field""".stripMargin,
-
-    // revenue in exact integer cents·basis-points (order-free; the
-    // round-11 standing float-sum rule — see q_bucketed_join)
-    "q_join_regional_revenue" ->
-      """SELECT r_name, n_name, count(*) AS n_items,
-        |  round(CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
-        |    (10000 - CAST(round(l_discount * 10000) AS BIGINT))) AS DOUBLE)
-        |    / 1000000 + 1e-9, 2) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_semi_customers_with_orders" ->
-      """SELECT c_custkey, c_mktsegment, c_acctbal FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_anti_customers_without_orders" ->
-      """SELECT c_custkey, c_mktsegment, c_acctbal FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_distinct_edges" ->
-      """SELECT DISTINCT least(l_partkey, l_suppkey) AS edge_a,
-        |  greatest(l_partkey, l_suppkey) AS edge_b
-        |FROM lineitem
-        |WHERE least(l_partkey, l_suppkey) <> greatest(l_partkey, l_suppkey)
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q_keep_first_dedup" ->
-      """SELECT l_partkey, l_suppkey, CAST(min(l_orderkey) AS BIGINT) AS min_l_orderkey,
-        |  count(*) AS n_dups
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_permutation_ids" ->
-      """SELECT * FROM (
-        |  SELECT l_returnflag, l_orderkey, l_linenumber,
-        |    CAST(row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_orderkey, l_linenumber) AS INTEGER) AS new_id
-        |  FROM lineitem) t
-        |WHERE new_id <= 100 ORDER BY l_returnflag, new_id""".stripMargin,
-
-    "q_window_lag_delta" ->
-      """SELECT user_id, event_id,
-        |  round(value - lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) + 1e-6, 2)
-        |    AS delta
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-
-    "q_pivot_event_matrix" ->
-      """SELECT user_id,
-        |  round(sum(CASE WHEN event_type = 'click' THEN value END) + 1e-6, 2) AS click,
-        |  round(sum(CASE WHEN event_type = 'error' THEN value END) + 1e-6, 2) AS error,
-        |  round(sum(CASE WHEN event_type = 'purchase' THEN value END) + 1e-6, 2) AS purchase,
-        |  round(sum(CASE WHEN event_type = 'signup' THEN value END) + 1e-6, 2) AS signup,
-        |  round(sum(CASE WHEN event_type = 'view' THEN value END) + 1e-6, 2) AS view
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_grid_stats" ->
-      """SELECT event_type, date_trunc('hour', ts) AS hour, count(value) AS n,
-        |  round(avg(value) + 1e-9, 4) AS mean, round(var_pop(value) + 1e-9, 4) AS var_pop,
-        |  min(value) AS min, max(value) AS max
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_year_partition_counts" ->
-      """SELECT event_type, CAST(year(ts) AS INTEGER) AS yr, count(*) AS n,
-        |  round(CAST(sum(value) AS DOUBLE) + 1e-6, 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_nan_inf_census" ->
-      """SELECT
-        |  CAST(sum(CASE WHEN isnan(l_quantity) THEN 1 ELSE 0 END) AS BIGINT) AS n_nan_l_quantity,
-        |  CAST(sum(CASE WHEN isinf(l_quantity) THEN 1 ELSE 0 END) AS BIGINT) AS n_inf_l_quantity,
-        |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_l_quantity,
-        |  CAST(sum(CASE WHEN isnan(l_extendedprice) THEN 1 ELSE 0 END) AS BIGINT) AS n_nan_l_extendedprice,
-        |  CAST(sum(CASE WHEN isinf(l_extendedprice) THEN 1 ELSE 0 END) AS BIGINT) AS n_inf_l_extendedprice,
-        |  CAST(sum(CASE WHEN l_extendedprice IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_l_extendedprice,
-        |  CAST(sum(CASE WHEN isnan(l_discount) THEN 1 ELSE 0 END) AS BIGINT) AS n_nan_l_discount,
-        |  CAST(sum(CASE WHEN isinf(l_discount) THEN 1 ELSE 0 END) AS BIGINT) AS n_inf_l_discount,
-        |  CAST(sum(CASE WHEN l_discount IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_l_discount
-        |FROM lineitem""".stripMargin,
-
-    "q_von_mises" ->
-      """WITH v AS (
-        |  SELECT l_returnflag,
-        |    sqrt(
-        |      (pow(l_quantity - l_extendedprice/1000.0, 2)
-        |       + pow(l_extendedprice/1000.0 - l_discount*100.0, 2)
-        |       + pow(l_discount*100.0 - l_quantity, 2)) / 2.0
-        |      + 3.0 * (pow(l_tax*10.0, 2) + pow(CAST(l_linenumber AS DOUBLE), 2)
-        |               + pow(l_quantity/2.0, 2))) AS vm
-        |  FROM lineitem)
-        |SELECT l_returnflag, count(*) AS n, round(avg(vm) + 1e-9, 4) AS vm_mean,
-        |  round(min(vm) + 1e-9, 4) AS vm_min, round(max(vm) + 1e-9, 4) AS vm_max
-        |FROM v GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_precision_cast" ->
-      """SELECT l_orderkey, l_linenumber, CAST(l_extendedprice AS REAL) AS price_f32,
-        |  CAST(l_discount AS REAL) AS disc_f32
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_field_select_pushdown" ->
-      """SELECT l_orderkey, l_shipdate FROM lineitem
-        |WHERE l_shipdate < TIMESTAMP '1996-07-01' AND l_discount > 0.05
-        |ORDER BY l_orderkey, l_shipdate""".stripMargin,
-
-    "q_global_inject" ->
-      """SELECT c_custkey, c_acctbal, CAST(1.225 AS DOUBLE) AS rho_inf, g.s_avg
-        |FROM customer, (SELECT round(avg(s_acctbal) + 1e-9, 4) AS s_avg FROM supplier) g
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_array_explode" ->
-      """SELECT vec_id, CAST(unnest(generate_series(1, len(embedding))) AS INTEGER) AS pos,
-        |  CAST(unnest(embedding) AS DOUBLE) AS val
-        |FROM embeddings ORDER BY vec_id, pos""".stripMargin,
-
-    "q_point_to_cell_mean" ->
-      """SELECT vec_id, label, count(*) AS n_vertices,
-        |  round(avg(CAST(v AS DOUBLE)) + 1e-9, 6) AS cell_mean
-        |FROM (SELECT vec_id, label, unnest(embedding) AS v FROM embeddings)
-        |GROUP BY 1, 2 ORDER BY vec_id""".stripMargin,
-
-    // JSON-flatten mirror: the same census straight from the events —
-    // any loss in the serialize→parse→explode cycle breaks the match.
-    "q_json_flatten" ->
-      """WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT) AS v,
-        |    row_number() OVER (PARTITION BY user_id % 10 ORDER BY event_id) AS rn
-        |  FROM events)
-        |SELECT g, CAST(count(*) AS BIGINT) AS n_pos,
-        |  CAST(sum(v) AS BIGINT) AS sum_pos,
-        |  min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM q WHERE v > 0 AND rn <= 1000 GROUP BY 1 ORDER BY g""".stripMargin,
-
-    "q_json_extract" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
-        |  round(avg(CAST(json_extract_string(props, '$.k') AS INTEGER)) + 1e-9, 4) AS avg_k
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // The cycle is checked against the PARAMETERS (documents), not its own
-    // output: record/status censuses, doc ids parsed back from the URIs,
-    // body byte hashes, and the HTTP-wrapped content length re-derived
-    // arithmetically (status line 15+text, Content-Type 25, Content-Length
-    // 18+digits, blank line 2 ⇒ body + 60 + status-text + digit count).
-    "q_warc_roundtrip" ->
-      s"""WITH h AS (SELECT doc_id, doc_id % 4 AS g,
-         |    CASE WHEN doc_id % 11 = 0 THEN 404 ELSE 200 END AS status,
-         |    $htmlFixtureSql AS html
-         |  FROM documents)
-         |SELECT CAST(g AS INT) AS g,
-         |  CAST(count(*) + 1 AS BIGINT) AS n_records,
-         |  CAST(count(*) AS BIGINT) AS n_resp,
-         |  CAST(sum(CASE WHEN status = 200 THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
-         |  CAST(sum(CASE WHEN status = 404 THEN 1 ELSE 0 END) AS BIGINT) AS n_404,
-         |  CAST(sum(doc_id) AS BIGINT) AS sum_doc,
-         |  CAST(sum(length(html)) AS BIGINT) AS body_bytes,
-         |  CAST(sum(length(html) + 60
-         |    + CASE WHEN status = 200 THEN 2 ELSE 9 END
-         |    + length(CAST(length(html) AS VARCHAR))) AS BIGINT) AS content_len,
-         |  CAST(sum(CAST('0x' || substr(md5(html), 1, 8) AS BIGINT)) AS BIGINT)
-         |    AS body_hash
-         |FROM h GROUP BY g ORDER BY g""".stripMargin,
-
-    // Step-for-step replay of TextOps.htmlExtract's regexp chain — every
-    // pattern is RE2-safe by construction, so DuckDB runs the SAME
-    // extraction algorithm (DuckDB regexp_replace needs the explicit 'g'
-    // option; Spark's is global by default).
-    "q_html_extract" -> {
-      def clean(inner: String): String =
-        "trim(regexp_replace(" +
-          "replace(replace(replace(replace(replace(replace(" +
-          s"regexp_replace($inner, '(?s)<[^>]*>', ' ', 'g'), " +
-          "'&lt;', '<'), '&gt;', '>'), '&quot;', '\"'), '&#39;', ''''), " +
-          """'&nbsp;', ' '), '&amp;', '&'), '\s+', ' ', 'g'))"""
-      s"""WITH h AS (SELECT doc_id, $htmlFixtureSql AS html FROM documents),
-         |nb AS (SELECT doc_id, html,
-         |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(html,
-         |      '(?s)<!--.*?-->', ' ', 'g'),
-         |      '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-         |      '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-         |      '(?is)<head[^>]*>.*?</head>', ' ', 'g') AS nob
-         |  FROM h),
-         |c AS (SELECT doc_id,
-         |    ${clean("regexp_extract(html, '(?is)<title[^>]*>(.*?)</title>', 1)")}
-         |      AS title,
-         |    CAST(len(regexp_extract_all(nob, '(?is)<a[\\s>]')) AS INT) AS n_links,
-         |    ${clean("nob")} AS text,
-         |    ${clean("coalesce(array_to_string(regexp_extract_all(nob, " +
-                       "'(?is)<a[^>]*>(.*?)</a>', 1), ' '), '')")} AS anchor_text
-         |  FROM nb)
-         |SELECT doc_id, title, n_links,
-         |  CAST(length(text) AS INT) AS n_text_chars,
-         |  CASE WHEN length(text) > 0
-         |    THEN round(CAST(length(anchor_text) AS DOUBLE) / length(text) + 1e-9, 6)
-         |    ELSE 0.0 END AS link_density,
-         |  md5(text) AS text_md5
-         |FROM c ORDER BY doc_id""".stripMargin
-    },
-
-    // Every satisfaction fraction recomputed; thresholds and verdicts
-    // replayed.
-    "q_quality_report" ->
-      """WITH m AS (SELECT
-        |    round(sum(CASE WHEN text IS NOT NULL THEN 1.0 ELSE 0.0 END)
-        |      / count(*) + 1e-9, 6) AS not_null_text,
-        |    round(CAST(count(DISTINCT doc_id) AS DOUBLE) / count(*) + 1e-9, 6)
-        |      AS uniq_id,
-        |    round(CAST(count(DISTINCT text) AS DOUBLE) / count(*) + 1e-9, 6)
-        |      AS uniq_text,
-        |    round(sum(CASE WHEN n_chars >= 1 AND n_chars <= 400
-        |      THEN 1.0 ELSE 0.0 END) / count(*) + 1e-9, 6) AS in_range,
-        |    round(sum(CASE WHEN regexp_matches(lang, '^[a-z]{2}$')
-        |      THEN 1.0 ELSE 0.0 END) / count(*) + 1e-9, 6) AS re_lang
-        |  FROM documents)
-        |SELECT * FROM (
-        |  SELECT 'not_null' AS rule, 'text' AS "column",
-        |    CAST(1.0 AS DOUBLE) AS threshold, not_null_text AS metric,
-        |    not_null_text >= 1.0 AS passed FROM m
-        |  UNION ALL SELECT 'unique', 'doc_id', 1.0, uniq_id,
-        |    uniq_id >= 1.0 FROM m
-        |  UNION ALL SELECT 'unique', 'text', 0.99, uniq_text,
-        |    uniq_text >= 0.99 FROM m
-        |  UNION ALL SELECT 'in_range', 'n_chars', 0.9, in_range,
-        |    in_range >= 0.9 FROM m
-        |  UNION ALL SELECT 'matches_regex', 'lang', 1.0, re_lang,
-        |    re_lang >= 1.0 FROM m)
-        |ORDER BY rule, "column", threshold""".stripMargin,
-
-    // Identical Morton interleave arithmetic (sum of disjoint shifted
-    // bit-tests) and bucket split.
-    "q_zorder" -> {
-      val interleave = (0 until 8).map(i =>
-        s"(((x >> $i) & 1) << ${2 * i}) + (((y >> $i) & 1) << ${2 * i + 1})")
-        .mkString(" + ")
-      s"""WITH c AS (SELECT user_id % 256 AS x, event_id % 256 AS y FROM events),
-         |z AS (SELECT x, y, $interleave AS zv FROM c)
-         |SELECT zv >> 8 AS bucket, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(min(x) AS BIGINT) AS min_x, CAST(max(x) AS BIGINT) AS max_x,
-         |  CAST(min(y) AS BIGINT) AS min_y, CAST(max(y) AS BIGINT) AS max_y
-         |FROM z GROUP BY 1 ORDER BY bucket""".stripMargin
-    },
-
-    // The window replay of the bounded-aggregator sample: identical
-    // 60-bit md5 bucket cast to DOUBLE (the shared precision), identical
-    // (prio desc, id asc) order.
-    "q_sample_n_per_group" ->
-      """SELECT lang, rank, doc_id FROM (
-        |  SELECT lang, doc_id, CAST(row_number() OVER (PARTITION BY lang
-        |      ORDER BY CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)),
-        |        1, 15) AS BIGINT) AS DOUBLE) DESC, doc_id) AS INT) AS rank
-        |  FROM documents)
-        |WHERE rank <= 10 ORDER BY lang, rank""".stripMargin,
-
-    // DuckDB's native jaro_winkler_similarity — an independent
-    // implementation — over the identical vocabulary pair set.
-    // Entity-resolution mirror: identical blocking, DuckDB's own
-    // jaro_winkler_similarity at the same rounded threshold, and the
-    // recursive-CTE min-label walk over the verified edges.
-    "q_entity_resolution" ->
-      """WITH RECURSIVE
-        |vv AS (SELECT name, CAST(row_number() OVER (ORDER BY name) AS BIGINT) AS id
-        |  FROM (SELECT DISTINCT p_name AS name FROM part)),
-        |cand AS (SELECT a.id AS da, b.id AS db,
-        |    round(jaro_winkler_similarity(a.name, b.name) + 1e-9, 6) AS jw
-        |  FROM vv a JOIN vv b
-        |    ON substr(lower(a.name), 1, 1) = substr(lower(b.name), 1, 1)
-        |    AND a.id < b.id),
-        |e AS (SELECT da, db FROM cand WHERE jw >= 0.95),
-        |sym(a, b) AS (SELECT da, db FROM e UNION SELECT db, da FROM e),
-        |walk(node, label) AS (
-        |  SELECT id, id FROM vv
-        |  UNION
-        |  SELECT s.b, w.label FROM walk w JOIN sym s ON s.a = w.node),
-        |lab AS (SELECT node, min(label) AS entity FROM walk GROUP BY node)
-        |SELECT l.entity, CAST(count(*) AS BIGINT) AS n_members,
-        |  min(vv.name) AS rep_name
-        |FROM lab l JOIN vv ON vv.id = l.node
-        |GROUP BY 1 ORDER BY entity""".stripMargin,
-
-    "q_jaro_winkler" ->
-      """WITH v AS (SELECT DISTINCT unnest(string_split(text, ' ')) AS w
-        |  FROM documents),
-        |vv AS (SELECT w FROM v WHERE w <> ''),
-        |p AS (SELECT a.w AS wa, b.w AS wb,
-        |    jaro_winkler_similarity(a.w, b.w) AS jw
-        |  FROM vv a JOIN vv b ON a.w < b.w)
-        |SELECT wa, wb, round(jw + 1e-9, 6) AS jw FROM p
-        |WHERE round(jw + 1e-9, 6) >= 0.7 ORDER BY wa, wb""".stripMargin,
-
-    // lag/lead windows replayed in µs with the same (ts, event id) order.
-    // Islands mirror: the same two windows (prev-max-end break, running
-    // break sum) over the identical (s, e) sort.
-    "q_interval_merge" ->
-      """WITH iv AS (SELECT o_custkey % 50 AS k,
-        |    date_diff('day', DATE '1992-01-01', o_orderdate) AS s,
-        |    date_diff('day', DATE '1992-01-01', o_orderdate)
-        |      + o_orderkey % 14 AS e
-        |  FROM orders),
-        |w AS (SELECT k, s, e,
-        |    max(e) OVER (PARTITION BY k ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM iv),
-        |b AS (SELECT k, s, e,
-        |    CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END AS brk FROM w),
-        |i AS (SELECT k, s, e,
-        |    sum(brk) OVER (PARTITION BY k ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-        |  FROM b)
-        |SELECT k, CAST(island AS BIGINT) AS island,
-        |  CAST(min(s) AS BIGINT) AS start_day,
-        |  CAST(max(e) AS BIGINT) AS end_day,
-        |  CAST(count(*) AS BIGINT) AS n_intervals
-        |FROM i GROUP BY 1, 2 ORDER BY k, island""".stripMargin,
-
-    // Skew mirror: per-key census + the same (n DESC, key) top-5.
-    "q_skew_report" ->
-      """WITH c AS (SELECT l_partkey AS key, CAST(count(*) AS BIGINT) AS n
-        |  FROM lineitem GROUP BY 1),
-        |s AS (SELECT CAST(count(*) AS BIGINT) AS n_keys,
-        |    CAST(sum(n) AS BIGINT) AS n_rows,
-        |    CAST(max(n) AS BIGINT) AS max_count,
-        |    CAST(sum(n) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_count
-        |  FROM c),
-        |t AS (SELECT key, n,
-        |    CAST(row_number() OVER (ORDER BY n DESC, key) AS INT) AS rank
-        |  FROM c)
-        |SELECT t.rank, t.key, t.n, s.n_keys, s.n_rows, s.max_count,
-        |  round(s.avg_count + 1e-9, 4) AS avg_count,
-        |  round(CAST(s.max_count AS DOUBLE) / s.avg_count + 1e-9, 4) AS skew
-        |FROM t CROSS JOIN s WHERE t.rank <= 5 ORDER BY t.rank""".stripMargin,
-
-    // BFS mirror: recursive-CTE walk, min hop per node, bounded by the
-    // 45-node universe.
-    "q_shortest_paths" ->
-      """WITH RECURSIVE e AS (SELECT DISTINCT user_id % 40 AS src,
-        |    event_id % 45 AS dst FROM events WHERE user_id % 40 <> event_id % 45),
-        |walk(node, d) AS (
-        |  SELECT CAST(0 AS BIGINT) AS node, 0 AS d
-        |  UNION
-        |  SELECT e.dst, w.d + 1 FROM walk w JOIN e ON e.src = w.node
-        |  WHERE w.d < 50)
-        |SELECT node, CAST(min(d) AS BIGINT) AS dist
-        |FROM walk GROUP BY 1 ORDER BY node""".stripMargin,
-
-    // Rollup mirror: GROUP BY ROLLUP with the same NULL-marker fold.
-    "q_rollup" ->
-      """SELECT coalesce(l_returnflag, '(all)') AS rf,
-        |  coalesce(l_linestatus, '(all)') AS ls,
-        |  CAST(count(*) AS BIGINT) AS n, sum(l_quantity) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY rf, ls""".stripMargin,
-
-    // Range-frame mirror: identical value-based frame bounds.
-    "q_range_window" ->
-      """SELECT user_id, event_id,
-        |  CAST(count(*) OVER w AS BIGINT) AS n_frame,
-        |  round(sum(value) OVER w + 1e-9, 4) AS sum_frame
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-        |  RANGE BETWEEN 100 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    // CDC mirror: the same latest-order change set folded with a window
-    // + left join; tombstones drop, latest change wins.
-    "q_cdc_apply" ->
-      """WITH l AS (SELECT o_custkey AS c_custkey, o_totalprice AS price,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-        |  FROM orders),
-        |ch AS (SELECT c_custkey, price FROM l WHERE rn = 1),
-        |m AS (SELECT c.c_mktsegment,
-        |    CASE WHEN ch.c_custkey IS NOT NULL THEN ch.price
-        |         ELSE c.c_acctbal END AS bal,
-        |    ch.c_custkey IS NOT NULL AND c.c_custkey % 97 = 0 AS del
-        |  FROM customer c LEFT JOIN ch USING (c_custkey))
-        |SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n,
-        |  round(sum(bal) + 1e-6, 2) AS sum_bal
-        |FROM m WHERE NOT del GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Transition mirror: identical lag pairing and row normalization.
-    "q_transitions" ->
-      """WITH p AS (SELECT user_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY event_id) AS prev
-        |  FROM events),
-        |c AS (SELECT prev AS prev_state, event_type AS next_state,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM p WHERE prev IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT prev_state, sum(n) AS tot FROM c GROUP BY 1)
-        |SELECT c.prev_state, c.next_state, c.n,
-        |  round(CAST(c.n AS DOUBLE) / CAST(t.tot AS DOUBLE) + 1e-9, 6) AS p
-        |FROM c JOIN t USING (prev_state)
-        |ORDER BY prev_state, next_state""".stripMargin,
-
-    // KS mirror: identical distinct-value cumulative counts, identical
-    // integer numerator, one double division — plus the min-v argmax.
-    "q_ks_test" ->
-      """WITH t AS (SELECT value AS v,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS ia,
-        |    CASE WHEN event_type = 'view' THEN 1 ELSE 0 END AS ib
-        |  FROM events WHERE event_type IN ('click', 'view')),
-        |c AS (SELECT v, CAST(sum(ia) AS BIGINT) AS ca,
-        |    CAST(sum(ib) AS BIGINT) AS cb FROM t GROUP BY 1),
-        |w AS (SELECT v,
-        |    sum(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND CURRENT ROW) AS cuma,
-        |    sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-        |      AND CURRENT ROW) AS cumb
-        |  FROM c),
-        |g AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-        |    CAST(sum(cb) AS BIGINT) AS nb FROM c),
-        |s AS (SELECT w.v, abs(w.cuma * g.nb - w.cumb * g.na) AS num
-        |  FROM w CROSS JOIN g),
-        |m AS (SELECT max(num) AS mx FROM s)
-        |SELECT g.na AS n_a, g.nb AS n_b, CAST(m.mx AS BIGINT) AS d_num,
-        |  round(CAST(m.mx AS DOUBLE)
-        |    / (CAST(g.na AS DOUBLE) * CAST(g.nb AS DOUBLE)) + 1e-9, 6) AS d,
-        |  (SELECT min(s2.v) FROM s s2, m m2 WHERE s2.num = m2.mx) AS at_v
-        |FROM g CROSS JOIN m""".stripMargin,
-
-    // PSI mirror: identical floor bins, skip census, ln terms.
-    "q_psi" ->
-      """WITH t AS (SELECT CAST(floor(value / 0.5) AS BIGINT) AS bin,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS ia,
-        |    CASE WHEN event_type = 'view' THEN 1 ELSE 0 END AS ib
-        |  FROM events WHERE event_type IN ('click', 'view')),
-        |c AS (SELECT bin, CAST(sum(ia) AS BIGINT) AS ca,
-        |    CAST(sum(ib) AS BIGINT) AS cb FROM t GROUP BY 1),
-        |g AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-        |    CAST(sum(cb) AS BIGINT) AS nb FROM c),
-        |terms AS (SELECT c.ca, c.cb,
-        |    CASE WHEN c.ca > 0 AND c.cb > 0 THEN
-        |      (CAST(c.ca AS DOUBLE) / g.na - CAST(c.cb AS DOUBLE) / g.nb)
-        |      * ln((CAST(c.ca AS DOUBLE) / g.na)
-        |          / (CAST(c.cb AS DOUBLE) / g.nb))
-        |    ELSE 0.0 END AS term,
-        |    g.na, g.nb
-        |  FROM c CROSS JOIN g)
-        |SELECT CAST(count(*) AS BIGINT) AS n_bins,
-        |  CAST(sum(CASE WHEN ca = 0 OR cb = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_skipped,
-        |  max(na) AS n_a, max(nb) AS n_b,
-        |  round(sum(term) + 1e-9, 4) AS psi
-        |FROM terms""".stripMargin,
-
-    // Chi-square mirror: full grid from the exact integer marginals.
-    "q_chi_square" ->
-      """WITH d AS (SELECT event_type, user_id % 4 AS bucket FROM events),
-        |obs AS (SELECT event_type, bucket, CAST(count(*) AS BIGINT) AS n_obs
-        |  FROM d GROUP BY 1, 2),
-        |ra AS (SELECT event_type, sum(n_obs) AS ra FROM obs GROUP BY 1),
-        |rb AS (SELECT bucket, sum(n_obs) AS rb FROM obs GROUP BY 1),
-        |g AS (SELECT sum(n_obs) AS n,
-        |    count(DISTINCT event_type) AS da, count(DISTINCT bucket) AS db
-        |  FROM obs),
-        |cells AS (SELECT ra.event_type, rb.bucket,
-        |    coalesce(obs.n_obs, 0) AS n_obs,
-        |    CAST(ra.ra AS DOUBLE) * CAST(rb.rb AS DOUBLE) / CAST(g.n AS DOUBLE)
-        |      AS expected
-        |  FROM ra CROSS JOIN rb CROSS JOIN g
-        |  LEFT JOIN obs USING (event_type, bucket)),
-        |wc AS (SELECT *, (CAST(n_obs AS DOUBLE) - expected)
-        |    * (CAST(n_obs AS DOUBLE) - expected) / expected AS contrib
-        |  FROM cells),
-        |st AS (SELECT sum(contrib) AS chi2 FROM wc)
-        |SELECT wc.event_type, wc.bucket, wc.n_obs,
-        |  round(wc.expected + 1e-9, 4) AS expected,
-        |  round(wc.contrib + 1e-9, 4) AS contrib,
-        |  round(st.chi2 + 1e-9, 4) AS chi2,
-        |  CAST((g.da - 1) * (g.db - 1) AS BIGINT) AS dof
-        |FROM wc CROSS JOIN st CROSS JOIN g
-        |ORDER BY event_type, bucket""".stripMargin,
-
-    "q_scd2" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |    epoch_ns(ts) // 1000 AS us FROM events),
-        |c AS (SELECT *, lag(event_type) OVER
-        |    (PARTITION BY user_id ORDER BY us, event_id) AS prev FROM e),
-        |runs AS (SELECT user_id, event_type, us, event_id FROM c
-        |  WHERE prev IS NULL OR prev <> event_type),
-        |iv AS (SELECT user_id, event_type, us AS valid_from,
-        |    lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id)
-        |      AS valid_to FROM runs)
-        |SELECT user_id, event_type, CAST(valid_from AS BIGINT) AS valid_from,
-        |  CAST(valid_to AS BIGINT) AS valid_to
-        |FROM iv ORDER BY user_id, valid_from, event_type""".stripMargin,
-
-    // Sequential firsts replayed as chained min-aggregations.
-    "q_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000 AS us
-        |  FROM events WHERE event_id % 19 = 0),
-        |t0 AS (SELECT user_id, min(us) AS t0 FROM e
-        |  WHERE event_type = 'signup' GROUP BY 1),
-        |t1 AS (SELECT e.user_id, min(us) AS t1 FROM e JOIN t0 USING (user_id)
-        |  WHERE event_type = 'click' AND us > t0 GROUP BY 1),
-        |t2 AS (SELECT e.user_id, min(us) AS t2 FROM e JOIN t1 USING (user_id)
-        |  WHERE event_type = 'purchase' AND us > t1 GROUP BY 1),
-        |u AS (SELECT k.user_id, t0.t0, t1.t1, t2.t2
-        |  FROM (SELECT DISTINCT user_id FROM e) k
-        |  LEFT JOIN t0 USING (user_id) LEFT JOIN t1 USING (user_id)
-        |  LEFT JOIN t2 USING (user_id)),
-        |r AS (SELECT user_id,
-        |    CASE WHEN t2 IS NOT NULL THEN 3 WHEN t1 IS NOT NULL THEN 2
-        |         WHEN t0 IS NOT NULL THEN 1 ELSE 0 END AS reached,
-        |    t2 - t0 AS delay FROM u)
-        |SELECT CAST(reached AS INT) AS reached,
-        |  CAST(count(*) AS BIGINT) AS n_users,
-        |  CAST(coalesce(sum(CASE WHEN reached = 3 THEN delay END), 0) AS BIGINT)
-        |    AS sum_delay_us
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_cohort_retention" ->
-      """WITH f AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-        |  FROM events GROUP BY 1),
-        |a AS (SELECT e.user_id, CAST(e.ts AS DATE) AS day, f.cohort_day
-        |  FROM events e JOIN f USING (user_id))
-        |SELECT cohort_day, CAST(day - cohort_day AS INT) AS offset_days,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_active
-        |FROM a GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // The INDEPENDENT id-ordered brute triangle enumeration — a different
-    // algorithm from the degree-ordered orientation under test.
-    "q_triangles" ->
-      """WITH e AS (SELECT DISTINCT least(user_id % 30, event_id % 30) AS a,
-        |    greatest(user_id % 30, event_id % 30) AS b
-        |  FROM events WHERE user_id % 30 <> event_id % 30),
-        |t AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |  FROM e e1 JOIN e e2 ON e1.a = e2.a AND e1.b < e2.b
-        |  JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b)
-        |SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
-        |FROM (SELECT unnest([x, y, z]) AS node FROM t)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // The hand-derived lineage edge list for the flagship join — a
-    // structural gate on the plan-analysis result.
-    "q_column_lineage" ->
-      """SELECT * FROM (VALUES
-        |  ('n_items', 'literal', ''),
-        |  ('n_name', 'nation', 'n_name'),
-        |  ('r_name', 'region', 'r_name'),
-        |  ('revenue', 'lineitem', 'l_discount'),
-        |  ('revenue', 'lineitem', 'l_extendedprice'))
-        |  v(out_col, src_table, src_col)
-        |ORDER BY out_col, src_table, src_col""".stripMargin,
-
-    // The export cycle checked against the parameters; null-union
-    // branches and both codecs covered by the fixture split.
-    // ZIP mirror: census, byte totals, and the name-ordered text md5
-    // recomputed straight from the documents table.
-    "q_zip_roundtrip" ->
-      """SELECT doc_id % 4 AS shard, CAST(count(*) AS BIGINT) AS n_entries,
-        |  CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes,
-        |  md5(string_agg(text, '' ORDER BY printf('doc_%06d.txt', doc_id)))
-        |    AS text_md5
-        |FROM documents GROUP BY 1 ORDER BY shard""".stripMargin,
-
-    // ORC mirror: the same aggregation over the ORIGINAL parquet — the
-    // ORC write/read cycle must be lossless for the match to hold.
-    "q_orc_roundtrip" ->
-      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-        |  sum(l_quantity) AS sum_qty,
-        |  CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
-        |  min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price
-        |FROM lineitem WHERE l_quantity > 25
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_avro_roundtrip" ->
-      """WITH h AS (SELECT doc_id % 4 AS g, doc_id,
-        |    CASE WHEN doc_id % 23 = 0 THEN NULL ELSE lang END AS lang,
-        |    n_chars, n_chars * 0.5 AS score, doc_id % 2 = 0 AS flag
-        |  FROM documents)
-        |SELECT CAST(g AS INT) AS g, CAST(count(*) AS BIGINT) AS n_records,
-        |  CAST(sum(doc_id) AS BIGINT) AS sum_doc,
-        |  CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_null_lang,
-        |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  round(sum(score) + 1e-9, 4) AS sum_score,
-        |  CAST(sum(CASE WHEN flag THEN 1 ELSE 0 END) AS BIGINT) AS n_flags
-        |FROM h GROUP BY g ORDER BY g""".stripMargin,
-
-    // The window form the bounded aggregator replaces, replayed as the
-    // oracle: identical (score desc, id asc) total order.
-    "q_topk_per_group" ->
-      """SELECT grp, rank, doc_id, n_chars FROM (
-        |  SELECT lang || '_' || source AS grp, doc_id,
-        |    CAST(n_chars AS BIGINT) AS n_chars,
-        |    CAST(row_number() OVER (PARTITION BY lang || '_' || source
-        |      ORDER BY n_chars DESC, doc_id) AS INT) AS rank
-        |  FROM documents)
-        |WHERE rank <= 5 ORDER BY grp, rank""".stripMargin,
-
-    // DuckDB's own parquet reader on the SAME staged file — a fully
-    // independent implementation of the Thrift-compact footer walk.
-    "q_parquet_meta" ->
-      s"""SELECT CAST(row_group_id AS INT) AS rg, path_in_schema AS col_name,
-         |  CAST(type AS VARCHAR) AS type,
-         |  CAST(num_values AS BIGINT) AS num_values,
-         |  CAST(compression AS VARCHAR) AS codec,
-         |  CAST(total_compressed_size AS BIGINT) AS n_compressed,
-         |  CAST(total_uncompressed_size AS BIGINT) AS n_uncompressed,
-         |  CAST(stats_null_count AS BIGINT) AS null_count,
-         |  CAST(stats_min_value AS VARCHAR) AS min_v,
-         |  CAST(stats_max_value AS VARCHAR) AS max_v
-         |FROM parquet_metadata('$PqMetaDir/documents.parquet')
-         |ORDER BY rg, col_name""".stripMargin,
-
-    // The pair graph from the shared jaccard CTEs at tau 0.5, components
-    // via the recursive walk, survivor = argmax(n_chars, min id).
-    "q_keep_best" ->
-      s"""WITH RECURSIVE $SigCte,
-         |band AS ($BandUnion),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |         FROM band a JOIN band b USING (band, bk) WHERE a.doc_id < b.doc_id),
-         |sh2 AS (SELECT s.doc_id, s.sh FROM sh s
-         |        JOIN (SELECT sh FROM sh GROUP BY 1 HAVING count(*) <= $MaxShingleDf) f
-         |        USING (sh)),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM sh2 GROUP BY 1),
-         |p AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS c
-         |      FROM sh2 a JOIN sh2 b USING (sh) WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         |e AS (SELECT p.da, p.db FROM p JOIN cand USING (da, db)
-         |      JOIN sz x ON x.doc_id = p.da JOIN sz y ON y.doc_id = p.db
-         |      WHERE CAST(c AS DOUBLE) / (x.sz + y.sz - c) >= 0.5),
-         |sym(a, b) AS (SELECT da, db FROM e UNION SELECT db, da FROM e),
-         |walk(node, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT s.b, w.label FROM walk w JOIN sym s ON s.a = w.node),
-         |cc AS (SELECT node AS doc_id, CAST(min(label) AS BIGINT) AS component
-         |  FROM walk GROUP BY 1)
-         |SELECT cc.doc_id, cc.component, d.n_chars,
-         |  row_number() OVER (PARTITION BY cc.component
-         |    ORDER BY d.n_chars DESC, cc.doc_id) = 1 AS is_survivor
-         |FROM cc JOIN documents d USING (doc_id) ORDER BY cc.doc_id""".stripMargin,
-
-    // Same punctuation injection, same RE2-safe regexp counts, same
-    // Flesch arithmetic nesting.
-    "q_readability" ->
-      """WITH t AS (SELECT doc_id, replace(text, ' scan', '. scan') AS t
-        |  FROM documents),
-        |c AS (SELECT doc_id,
-        |    CAST(len(list_filter(string_split(trim(regexp_replace(lower(t),
-        |      '\s+', ' ', 'g')), ' '), x -> x <> '')) AS INT) AS n_words,
-        |    CAST(greatest(1, len(regexp_extract_all(t, '[.!?]+'))) AS INT)
-        |      AS n_sents,
-        |    CAST(greatest(1, len(regexp_extract_all(lower(t), '[aeiouy]+'))) AS INT)
-        |      AS n_syllables
-        |  FROM t)
-        |SELECT doc_id, n_words, n_sents, n_syllables,
-        |  round(206.835 - 1.015 * (CAST(n_words AS DOUBLE) / n_sents)
-        |    - 84.6 * (CAST(n_syllables AS DOUBLE) / n_words) + 1e-9, 4) AS flesch
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // Leakage-guard mirror: the q_lsh_jaccard candidate+verify chain at
-    // τ=0.5, min-label components via the recursive walk, then the
-    // q_assign_splits md5 bucket convention applied to the COMPONENT.
-    "q_leakage_safe_splits" ->
-      s"""WITH RECURSIVE $SigCte,
-         |band AS ($BandUnion),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |         FROM band a JOIN band b USING (band, bk) WHERE a.doc_id < b.doc_id),
-         |sh2 AS (SELECT s.doc_id, s.sh FROM sh s
-         |        JOIN (SELECT sh FROM sh GROUP BY 1 HAVING count(*) <= $MaxShingleDf) f
-         |        USING (sh)),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM sh2 GROUP BY 1),
-         |p AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS c
-         |      FROM sh2 a JOIN sh2 b USING (sh) WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-         |pc AS (SELECT p.* FROM p JOIN cand USING (da, db)),
-         |ed AS (SELECT da, db FROM pc
-         |  JOIN sz x ON x.doc_id = pc.da JOIN sz y ON y.doc_id = pc.db
-         |  WHERE CAST(c AS DOUBLE) / (x.sz + y.sz - c) >= 0.5),
-         |sym(a, b) AS (SELECT da, db FROM ed UNION SELECT db, da FROM ed),
-         |walk(node, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT s.b, w.label FROM walk w JOIN sym s ON s.a = w.node),
-         |comp AS (SELECT node AS doc_id, CAST(min(label) AS BIGINT) AS component
-         |  FROM walk GROUP BY 1)
-         |SELECT doc_id, component,
-         |  CASE WHEN b < 9000 THEN 'train'
-         |       WHEN b < 9500 THEN 'val' ELSE 'test' END AS split
-         |FROM (SELECT doc_id, component,
-         |    CAST('0x' || substr(md5(CAST(component AS VARCHAR)), 1, 15) AS BIGINT)
-         |      % 10000 AS b
-         |  FROM comp)
-         |ORDER BY doc_id""".stripMargin,
-
-    // Same 60-bit md5 bucket as the samplers; cumulative boundaries
-    // 9000/9500/10000.
-    "q_assign_splits" ->
-      """SELECT doc_id,
-        |  CASE WHEN b < 9000 THEN 'train'
-        |       WHEN b < 9500 THEN 'val' ELSE 'test' END AS split
-        |FROM (SELECT doc_id,
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |      % 10000 AS b
-        |  FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    // The jaccard mirror's inverted-index join with per-SIDE (|A|)
-    // normalization and directed pairs.
-    "q_containment" ->
-      s"""WITH $ShingleCte,
-         |sh2 AS (SELECT s.doc_id, s.sh FROM sh s
-         |        JOIN (SELECT sh FROM sh GROUP BY 1 HAVING count(*) <= $MaxShingleDf) f
-         |        USING (sh)),
-         |sz AS (SELECT doc_id, count(*) AS sz FROM sh2 GROUP BY 1),
-         |p AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS c
-         |      FROM sh2 a JOIN sh2 b USING (sh)
-         |      WHERE a.doc_id <> b.doc_id GROUP BY 1, 2)
-         |SELECT da, db, round(CAST(c AS DOUBLE) / x.sz + 1e-9, 4) AS containment
-         |FROM p JOIN sz x ON x.doc_id = p.da
-         |WHERE CAST(c AS DOUBLE) / x.sz >= 0.8
-         |ORDER BY da, db""".stripMargin,
-
-    // 1-based token positions rebuilt with generate_series; adjacency via
-    // the same (doc, start) alignment join.
-    "q_phrase_search" ->
-      """WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |p AS (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i FROM ws),
-        |t AS (SELECT doc_id, CAST(i AS INT) AS pos,
-        |    list_extract(w, CAST(i AS INT)) AS term FROM p),
-        |m AS (SELECT a.doc_id, a.pos AS start
-        |  FROM t a JOIN t b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |  WHERE a.term = 'batch' AND b.term = 'stream')
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_occurrences,
-        |  CAST(min(start) AS INT) AS first_pos
-        |FROM m GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    // Profiles re-trained and documents re-classified in SQL: identical
-    // trigram explode, identical (count desc, trigram asc) rank windows,
-    // identical out-of-place penalty arithmetic.
-    "q_ngram_lang_id" ->
-      s"""WITH nt AS (SELECT doc_id, lang, $NormSql AS t FROM documents),
-         |tri AS (SELECT doc_id, lang, unnest(list_transform(
-         |    generate_series(1, length(t) - 2), i -> substr(t, CAST(i AS INT), 3)))
-         |    AS tri
-         |  FROM nt WHERE length(t) >= 3),
-         |pc AS (SELECT lang, tri, count(*) AS cnt FROM tri GROUP BY 1, 2),
-         |prof AS (SELECT lang, tri, rank FROM (
-         |    SELECT lang, tri, cnt, CAST(row_number() OVER (PARTITION BY lang
-         |      ORDER BY cnt DESC, tri) AS INT) AS rank FROM pc)
-         |  WHERE rank <= 50),
-         |dc AS (SELECT doc_id, tri, count(*) AS cnt FROM tri GROUP BY 1, 2),
-         |dr AS (SELECT doc_id, tri, drank FROM (
-         |    SELECT doc_id, tri, cnt, CAST(row_number() OVER (PARTITION BY doc_id
-         |      ORDER BY cnt DESC, tri) AS INT) AS drank FROM dc)
-         |  WHERE drank <= 50),
-         |langs AS (SELECT DISTINCT lang FROM prof),
-         |d AS (SELECT dr.doc_id, langs.lang,
-         |    sum(CASE WHEN prof.rank IS NULL THEN CAST(50 AS BIGINT)
-         |        ELSE abs(dr.drank - prof.rank) END) AS dist
-         |  FROM dr CROSS JOIN langs
-         |  LEFT JOIN prof ON prof.lang = langs.lang AND prof.tri = dr.tri
-         |  GROUP BY 1, 2)
-         |SELECT doc_id, lang AS lang_pred, CAST(dist AS BIGINT) AS dist FROM (
-         |  SELECT doc_id, lang, dist, row_number() OVER (PARTITION BY doc_id
-         |    ORDER BY dist, lang) AS rn FROM d)
-         |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    // Export-cycle aggregates recomputed from the documents table (ASCII
-    // text ⇒ VARCHAR md5 == payload-bytes md5).
-    "q_tfrecord" ->
-      """SELECT CAST(doc_id % 4 AS INT) AS g,
-        |  CAST(count(*) AS BIGINT) AS n_records,
-        |  CAST(sum(doc_id) AS BIGINT) AS sum_doc,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(sum(length(text)) AS BIGINT) AS text_bytes,
-        |  CAST(sum(CAST('0x' || substr(md5(text), 1, 8) AS BIGINT)) AS BIGINT)
-        |    AS text_hash
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Fingerprints, cross-side band probe, and candidate-restricted
-    // Jaccard all recomputed; sides split by id parity at the joins.
-    "q_incremental_dedup" ->
-      s"""WITH $SigCte,
-         |band AS ($BandUnion),
-         |cp AS (SELECT doc_id + 500000 AS doc_id, doc_id AS src
-         |  FROM documents WHERE doc_id % 50 = 0),
-         |nw AS (SELECT doc_id FROM documents WHERE doc_id % 2 = 1
-         |  UNION ALL SELECT doc_id FROM cp),
-         |fp AS (SELECT doc_id, md5($NormSql) AS f FROM documents),
-         |ex AS (SELECT n.doc_id, min(o.doc_id) AS m
-         |  FROM fp n JOIN fp o ON n.f = o.f
-         |  WHERE n.doc_id % 2 = 1 AND o.doc_id % 2 = 0 GROUP BY 1
-         |  UNION ALL
-         |  SELECT cp.doc_id, min(o.doc_id)
-         |  FROM cp JOIN fp s ON s.doc_id = cp.src
-         |    JOIN fp o ON o.f = s.f AND o.doc_id % 2 = 0 GROUP BY 1),
-         |cand AS (SELECT DISTINCT a.doc_id AS dn, b.doc_id AS dod
-         |  FROM band a JOIN band b USING (band, bk)
-         |  WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0),
-         |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         |cm AS (SELECT a.doc_id AS dn, b.doc_id AS dod, count(*) AS c
-         |  FROM sh a JOIN sh b ON a.sh = b.sh
-         |  JOIN cand ON cand.dn = a.doc_id AND cand.dod = b.doc_id
-         |  GROUP BY 1, 2),
-         |near AS (SELECT dn AS doc_id, min(dod) AS m
-         |  FROM cm JOIN sz sa ON sa.doc_id = cm.dn
-         |    JOIN sz sb ON sb.doc_id = cm.dod
-         |  WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5 GROUP BY 1)
-         |SELECT nw.doc_id,
-         |  CASE WHEN ex.m IS NOT NULL THEN 'exact'
-         |       WHEN near.m IS NOT NULL THEN 'near'
-         |       ELSE 'novel' END AS verdict,
-         |  coalesce(ex.m, near.m) AS match_id
-         |FROM nw LEFT JOIN ex USING (doc_id) LEFT JOIN near USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    // Pixels, luma cell sums, thresholds, and both hash packings rebuilt
-    // from the event stream. DuckDB's BIGINT << errors at bit 63, so bits
-    // pack as HUGEINT shifts and the sum wraps to signed two's complement
-    // (subtract 2^64 when >= 2^63) to match the Spark long.
-    "q_image_phash" ->
-      s"""WITH q AS (SELECT user_id % 10 AS g, event_id,
-        |    CAST(least(greatest(floor(value * 100), -32768), 32767) AS BIGINT)
-        |      AS v
-        |  FROM events),
-        |r AS (SELECT g, v,
-        |    row_number() OVER (PARTITION BY g ORDER BY event_id) - 1 AS idx
-        |  FROM q),
-        |cnt AS (SELECT g, count(*) AS c FROM r GROUP BY 1),
-        |e AS (SELECT cnt.g, gs.p AS idx, r.v
-        |  FROM cnt CROSS JOIN generate_series(0, 255) gs(p)
-        |  JOIN r ON r.g = cnt.g AND r.idx = gs.p % cnt.c),
-        |p AS (SELECT g, idx,
-        |    ((v * 1) % 256 + 256) % 256 AS red,
-        |    ((v * 3) % 256 + 256) % 256 AS grn,
-        |    ((v * 7) % 256 + 256) % 256 AS blu
-        |  FROM e),
-        |cells AS (SELECT g, (idx // 16) // 2 AS cy, (idx % 16) // 2 AS cx,
-        |    sum(299 * red + 587 * grn + 114 * blu) AS cs
-        |  FROM p GROUP BY 1, 2, 3),
-        |tot AS (SELECT g, sum(cs) AS ts FROM cells GROUP BY 1),
-        |ah AS (SELECT c.g, sum(CASE WHEN c.cs * 64 > t.ts
-        |      THEN CAST(1 AS HUGEINT) << CAST(c.cy * 8 + c.cx AS INT)
-        |      ELSE 0 END) AS s
-        |  FROM cells c JOIN tot t USING (g) GROUP BY 1),
-        |dh AS (SELECT l.g, sum(CASE WHEN l.cs < rr.cs
-        |      THEN CAST(1 AS HUGEINT) << CAST(l.cy * 7 + l.cx AS INT)
-        |      ELSE 0 END) AS s
-        |  FROM cells l JOIN cells rr
-        |    ON l.g = rr.g AND l.cy = rr.cy AND rr.cx = l.cx + 1
-        |  GROUP BY 1)
-        |SELECT ah.g, CAST(16 AS INT) AS width, CAST(16 AS INT) AS height,
-        |  CAST(CASE WHEN ah.s >= 9223372036854775808
-        |       THEN ah.s - 18446744073709551616 ELSE ah.s END AS BIGINT)
-        |    AS ahash,
-        |  CAST(CASE WHEN dh.s >= 9223372036854775808
-        |       THEN dh.s - 18446744073709551616 ELSE dh.s END AS BIGINT)
-        |    AS dhash
-        |FROM ah JOIN dh USING (g) ORDER BY g""".stripMargin,
-
-    // Band candidates rebuilt from the shared signature CTEs, then DuckDB's
-    // native levenshtein confirms — both engines implement unit-cost edit
-    // distance, so distances (and the derived similarity) match exactly.
-    "q_edit_verify" ->
-      s"""WITH $SigCte,
-         |band AS ($BandUnion),
-         |cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         |  FROM band a JOIN band b USING (band, bk)
-         |  WHERE a.doc_id < b.doc_id),
-         |v AS (SELECT cand.da, cand.db,
-         |    levenshtein(x.text, y.text) AS lev,
-         |    1.0 - CAST(levenshtein(x.text, y.text) AS DOUBLE)
-         |      / greatest(length(x.text), length(y.text)) AS es
-         |  FROM cand JOIN documents x ON cand.da = x.doc_id
-         |    JOIN documents y ON cand.db = y.doc_id)
-         |SELECT da, db, CAST(lev AS INT) AS lev,
-         |  round(es + 1e-9, 6) AS edit_sim
-         |FROM v WHERE es >= 0.4 ORDER BY da, db""".stripMargin,
-
-    // Both snapshots rebuilt from the documents table; the classification
-    // is one full-outer fingerprint compare.
-    "q_corpus_diff" ->
-      """WITH a AS (SELECT doc_id, text FROM documents),
-        |b AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 13 = 0 THEN text || ' v2' ELSE text END AS text
-        |  FROM documents WHERE doc_id % 17 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 19 = 0),
-        |j AS (SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
-        |    md5(a.text) AS ha, md5(b.text) AS hb
-        |  FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id)
-        |SELECT doc_id,
-        |  CASE WHEN ha IS NULL THEN 'added'
-        |       WHEN hb IS NULL THEN 'removed'
-        |       WHEN ha <> hb THEN 'changed'
-        |       ELSE 'unchanged' END AS status
-        |FROM j ORDER BY doc_id""".stripMargin,
-
-    // The robots parse replayed in SQL: same comment strip, same
-    // ignore-nulls running group window, same precedence arithmetic.
-    // range(1, 9) matches the fixture's fixed 8-line robots text (DuckDB's
-    // range cannot laterally reference len(ls)).
-    "q_robots_filter" ->
-      """WITH gs AS (SELECT DISTINCT doc_id % 7 AS g FROM documents),
-        |r AS (SELECT 'ex' || CAST(g AS VARCHAR) || '.com' AS domain,
-        |    'User-agent: *' || chr(10) || '# crawl rules' || chr(10) ||
-        |    'Disallow: /private' || chr(10) ||
-        |    'Allow: /private/ok' || CAST(g AS VARCHAR) || chr(10) ||
-        |    'Disallow: /tmp' || chr(10) || chr(10) ||
-        |    'User-agent: bot' || chr(10) || 'Disallow: /' AS robots FROM gs),
-        |ln AS (SELECT domain, i AS pos,
-        |    trim(regexp_replace(list_extract(ls, CAST(i AS INT)), '#.*$', ''))
-        |      AS line
-        |  FROM (SELECT domain, string_split(robots, chr(10)) AS ls FROM r),
-        |    range(1, 9) t(i) WHERE i <= len(ls)),
-        |tagged AS (SELECT domain, pos, line,
-        |    last_value(CASE WHEN regexp_matches(line, '(?i)^user-agent:')
-        |        THEN trim(regexp_extract(line, '(?i)^user-agent:(.*)$', 1)) END
-        |      IGNORE NULLS) OVER (PARTITION BY domain ORDER BY pos
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS group_ua
-        |  FROM ln),
-        |rules AS (SELECT domain,
-        |    lower(regexp_extract(line, '(?i)^(allow|disallow):', 1)) AS rule,
-        |    trim(regexp_extract(line, '(?i)^(allow|disallow):\s*(\S*)', 2))
-        |      AS prefix
-        |  FROM tagged WHERE group_ua = '*'
-        |    AND lower(regexp_extract(line, '(?i)^(allow|disallow):', 1)) <> ''
-        |    AND trim(regexp_extract(line, '(?i)^(allow|disallow):\s*(\S*)', 2))
-        |      <> ''),
-        |u AS (SELECT doc_id, 'ex' || CAST(doc_id % 7 AS VARCHAR) || '.com'
-        |      AS domain,
-        |    CASE WHEN doc_id % 5 = 0 THEN '/doc/' || CAST(doc_id AS VARCHAR)
-        |         WHEN doc_id % 5 = 1 THEN '/private/x' || CAST(doc_id AS VARCHAR)
-        |         WHEN doc_id % 5 = 2 THEN '/private/ok' ||
-        |           CAST(doc_id % 7 AS VARCHAR) || '/page'
-        |         WHEN doc_id % 5 = 3 THEN '/tmp/' || CAST(doc_id AS VARCHAR)
-        |         ELSE '/' END AS path
-        |  FROM documents),
-        |m AS (SELECT u.doc_id, u.domain, u.path,
-        |    max(CASE WHEN rules.rule = 'allow'
-        |          AND starts_with(u.path, rules.prefix)
-        |        THEN length(rules.prefix) END) AS allow_len,
-        |    max(CASE WHEN rules.rule = 'disallow'
-        |          AND starts_with(u.path, rules.prefix)
-        |        THEN length(rules.prefix) END) AS disallow_len
-        |  FROM u LEFT JOIN rules ON u.domain = rules.domain
-        |  GROUP BY 1, 2, 3)
-        |SELECT doc_id, domain, path,
-        |  coalesce(allow_len, -1) >= coalesce(disallow_len, -1) AS allowed
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    // Identical messy input built with chr() concatenation; the fold chain
-    // replayed over utf8proc's nfc_normalize — two independent NFC
-    // implementations must land on the same bytes, md5-pinned.
-    "q_text_normalize" ->
-      """WITH m AS (SELECT doc_id, text || ' cafe' || chr(769) || ' ' ||
-        |    chr(8217) || 'quote' || chr(8217) || ' a' || chr(8211) || 'b ' ||
-        |    chr(7) || ' x' || chr(8203) || 'y' AS t FROM documents),
-        |n AS (SELECT doc_id, length(t) AS n_before,
-        |    trim(regexp_replace(regexp_replace(regexp_replace(
-        |      replace(replace(replace(replace(replace(replace(
-        |        nfc_normalize(t),
-        |        chr(8217), ''''), chr(8216), ''''), chr(8220), '"'),
-        |        chr(8221), '"'), chr(8211), '-'), chr(8212), '-'),
-        |      '[\x{200b}\x{200c}\x{200d}\x{feff}]', '', 'g'),
-        |      '[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]', '', 'g'),
-        |      '[ \t]+', ' ', 'g')) AS text_norm
-        |  FROM m)
-        |SELECT doc_id, CAST(n_before AS INT) AS n_chars_before,
-        |  CAST(length(text_norm) AS INT) AS n_chars_after,
-        |  md5(text_norm) AS norm_md5
-        |FROM n ORDER BY doc_id""".stripMargin,
-
-    // The join replayed in µs arithmetic (the stream compares µs-normalized
-    // timestamps; comparing at DuckDB's ns precision could flip boundary
-    // rows inside the same microsecond).
-    "q_streaming_join" ->
-      """WITH i AS (SELECT user_id, epoch_ns(ts) // 1000 AS i_us FROM events
-        |    WHERE event_id % 2 = 0),
-        |c AS (SELECT user_id, epoch_ns(ts) // 1000 AS c_us, value FROM events
-        |    WHERE event_id % 2 = 1),
-        |j AS (SELECT i.user_id, c.c_us - i.i_us AS d, c.value
-        |  FROM i JOIN c ON i.user_id = c.user_id
-        |    AND c.c_us >= i.i_us AND c.c_us <= i.i_us + 3600000000)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(sum(d) AS BIGINT) AS sum_delay_us,
-        |  round(sum(value) + 1e-9, 4) AS sum_value
-        |FROM j GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // All 5 power-iteration rounds replayed as chained CTEs: per round,
-    // contributions rank/outdeg summed per destination, dangling mass from
-    // out-degree-less nodes redistributed uniformly, damping applied with
-    // the same operand nesting as the Spark side.
-    "q_pagerank" -> {
-      val iters = (1 to 5).map { k =>
-        s"""r$k AS (SELECT nd.node AS node,
-           |    (1.0 - 0.85) / c.n + 0.85 * (coalesce(s.contrib, 0.0) + d.m / c.n)
-           |      AS rank
-           |  FROM nodes nd CROSS JOIN cnt c
-           |  LEFT JOIN (SELECT e.dst AS node, sum(r.rank / dg.outdeg) AS contrib
-           |      FROM e JOIN r${k - 1} r ON e.src = r.node
-           |      JOIN deg dg ON e.src = dg.src GROUP BY 1) s ON nd.node = s.node
-           |  CROSS JOIN (SELECT coalesce(sum(rank), 0.0) AS m FROM r${k - 1}
-           |      WHERE node NOT IN (SELECT src FROM deg)) d)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS (SELECT DISTINCT user_id % 40 AS src, event_id % 45 AS dst
-         |    FROM events WHERE user_id % 40 <> event_id % 45),
-         |nodes AS (SELECT DISTINCT node FROM
-         |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-         |cnt AS (SELECT count(*) AS n FROM nodes),
-         |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-         |r0 AS (SELECT node, 1.0 / (SELECT n FROM cnt) AS rank FROM nodes),
-         |$iters
-         |SELECT node, round(rank + 1e-9, 6) AS rank FROM r5
-         |ORDER BY node""".stripMargin
-    },
-
-    // The same facet regexes and parameter filtering as
-    // TextOps.urlNormalize, replayed over the same three URL shapes.
-    "q_url_normalize" ->
-      """WITH u AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN
-        |      'HTTPS://WWW.Example' || CAST(doc_id % 5 AS VARCHAR) ||
-        |      '.COM:443/Path/' || lang || '/' || CAST(doc_id AS VARCHAR) ||
-        |      '?utm_source=feed&id=' || CAST(doc_id AS VARCHAR) || '&ref_=rss#sec'
-        |    WHEN doc_id % 3 = 1 THEN
-        |      'http://user@Blog.Site' || CAST(doc_id % 5 AS VARCHAR) ||
-        |      '.org:8080/posts//' || CAST(doc_id AS VARCHAR) || '/?a=1&gclid=xyz&b=2'
-        |    ELSE 'https://cdn' || CAST(doc_id % 5 AS VARCHAR) || '.net' END AS url
-        |  FROM documents),
-        |p1 AS (SELECT doc_id, url,
-        |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*):', 1)) AS scheme,
-        |    regexp_extract(regexp_extract(url,
-        |      '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1),
-        |      '^(?:[^@]*@)?(.*)$', 1) AS hostport
-        |  FROM u),
-        |p2 AS (SELECT *, lower(regexp_extract(hostport, '^([^:]*)', 1)) AS host,
-        |    regexp_extract(hostport, ':([0-9]+)$', 1) AS port FROM p1),
-        |p3 AS (SELECT *,
-        |    CASE WHEN regexp_extract(host, '([^.]+\.[^.]+)$', 1) = '' THEN host
-        |         ELSE regexp_extract(host, '([^.]+\.[^.]+)$', 1) END AS domain,
-        |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1)
-        |      AS path0,
-        |    regexp_extract(url, '\?([^#]*)', 1) AS query,
-        |    CASE WHEN (scheme = 'http' AND port = '80')
-        |           OR (scheme = 'https' AND port = '443') OR port = ''
-        |         THEN '' ELSE ':' || port END AS portpart
-        |  FROM p2),
-        |p4 AS (SELECT *, CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path,
-        |    list_filter(string_split(query, '&'), x -> x <> '') AS params
-        |  FROM p3),
-        |p5 AS (SELECT *, list_filter(params, x -> NOT (starts_with(x, 'utm_')
-        |    OR starts_with(x, 'gclid') OR starts_with(x, 'fbclid')
-        |    OR starts_with(x, 'ref_'))) AS kept FROM p4)
-        |SELECT doc_id, scheme, host, domain, path,
-        |  CAST(len(list_filter(string_split(path, '/'), x -> x <> '')) AS INT)
-        |    AS path_depth,
-        |  CAST(len(params) AS INT) AS n_params,
-        |  CAST(len(kept) AS INT) AS n_params_kept,
-        |  scheme || '://' || host || portpart || path ||
-        |    CASE WHEN len(kept) > 0 THEN '?' || array_to_string(kept, '&')
-        |         ELSE '' END AS url_norm
-        |FROM p5 ORDER BY doc_id""".stripMargin,
-
-    // Full recomputation of tf/df/dl/avgdl and the Okapi saturation
-    // formula (Lucene idf form), same operand nesting as the Spark side so
-    // only summation order differs (absorbed by the shared rounding).
-    "q_bm25_topk" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |    FROM documents),
-        |tt AS (SELECT doc_id, term FROM t WHERE term <> ''),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tt GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM tt GROUP BY 1),
-        |dfreq AS (SELECT term, count(*) AS df_t FROM tf GROUP BY 1),
-        |consts AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-        |    (SELECT avg(dl) FROM dl) AS avgdl),
-        |q AS (SELECT col0 AS query_id, col1 AS term FROM (VALUES
-        |    (1, 'hash'), (1, 'join'), (2, 'window'), (2, 'scan'),
-        |    (3, 'stream'), (3, 'batch'), (3, 'spark'))),
-        |s AS (SELECT q.query_id, tf.doc_id,
-        |    round(sum(ln(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
-        |      * tf * (1.2 + 1.0)
-        |      / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl))) + 1e-9, 6) AS score
-        |  FROM tf JOIN q USING (term) JOIN dfreq USING (term)
-        |    JOIN dl USING (doc_id) CROSS JOIN consts
-        |  GROUP BY 1, 2),
-        |r AS (SELECT query_id, doc_id, score,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY score DESC, doc_id) AS INT) AS rank
-        |  FROM s)
-        |SELECT query_id, rank, doc_id, score FROM r
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-  )
 }

@@ -8,8 +8,8 @@ package graft.tools
   * Protocol (the bench-noise findings, machine-encoded):
   *  1. SUITE PASSES IN BOTH ORDERS — `graft.Bench` as a plain quiet
   *     `java` child (never sbt: its compile burst inflates loadavg and
-  *     falsely marks artifacts loaded), per-rep walls on
-  *     (SPARK_GRAFT_TIMES=1), order A,B then B,A. Single-pass totals on a
+  *     falsely marks artifacts loaded), per-rep walls read from the
+  *     artifact each child names, order A,B then B,A. Single-pass totals on a
   *     shared box are a weak instrument (identical-code wobble ±12%,
   *     single queries up to 4×) — so nothing is concluded from them.
   *  2. PER-QUERY BEST-OF FLOORS across every rep of every pass: noise is
@@ -38,31 +38,6 @@ object AbBench {
       .trim.split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** scala-library jar: taken from THIS JVM's classpath when present,
-    * else located in the local coursier cache. No pinned paths.
-    */
-  private def scalaLib(): String = {
-    val own = sys.props("java.class.path").split(java.io.File.pathSeparator)
-      .find(_.matches(".*scala-library-2\\.13[^/]*\\.jar"))
-    own.getOrElse {
-      val cache = java.nio.file.Paths.get(
-        sys.props("user.home"), ".cache", "coursier")
-      val found = new scala.collection.mutable.ArrayBuffer[String]()
-      if (java.nio.file.Files.exists(cache))
-        java.nio.file.Files.walkFileTree(cache,
-          new java.nio.file.SimpleFileVisitor[java.nio.file.Path] {
-            override def visitFile(f: java.nio.file.Path,
-                a: java.nio.file.attribute.BasicFileAttributes) = {
-              if (f.getFileName.toString.matches(
-                  "scala-library-2\\.13[^/]*\\.jar")) found += f.toString
-              java.nio.file.FileVisitResult.CONTINUE
-            }
-          })
-      found.sorted.lastOption.getOrElse(
-        sys.error("scala-library 2.13 jar not found on classpath or in cache"))
-    }
-  }
-
   /** Spark jars dir: a classpath entry's parent qualifies only if it
     * holds the FULL distribution (spark-core present too — sbt's
     * bg-jobs staging copies single jars into one-jar dirs, which must
@@ -79,7 +54,8 @@ object AbBench {
 
   private def runBench(classes: String, sfDir: String, reps: Int,
                        queries: Option[String], cpus: Int): String = {
-    val cp = s"$classes:${scalaLib()}:${sparkJars()}/*"
+    // the Spark distribution ships the Scala library too
+    val cp = s"$classes:${sparkJars()}/*"
     val cmd = new java.util.ArrayList[String]()
     Seq("java", "-Xmx16g", "-cp", cp, "graft.Bench").foreach(cmd.add)
     if (sys.env.contains("GRAFT_ABBENCH_DEBUG"))
@@ -87,7 +63,6 @@ object AbBench {
     val pb = new ProcessBuilder(cmd)
     pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
     pb.environment().put("SPARK_GRAFT_REPS", reps.toString)
-    pb.environment().put("SPARK_GRAFT_TIMES", "1")
     pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
     // child must not clobber this repo's standing quiet artifact
     pb.environment().put("SPARK_GRAFT_BENCH_OUT",
@@ -111,25 +86,28 @@ object AbBench {
     })
     errDrain.setDaemon(true); errDrain.start()
     var line: String = null
-    var json: String = null
+    var compact: String = null
     while ({ line = outReader.readLine(); line != null })
-      if (line.contains("\"metric\":\"total\"")) json = line
+      if (line.contains("\"metric\":\"total\"")) compact = line
     val code = proc.waitFor()
     errDrain.join(2000)
-    require(code == 0 && json != null,
-      s"bench child on $classes exited $code (json ${json != null}); " +
+    require(code == 0 && compact != null,
+      s"bench child on $classes exited $code (json ${compact != null}); " +
         s"stderr tail:\n${errTail.toArray.mkString("\n")}")
-    json
+    // the compact stdout line names the artifact holding the full line
+    val artifact = "\"artifact\":\"([^\"]+)\"".r.findFirstMatchIn(compact)
+      .getOrElse(sys.error(s"bench child named no artifact: $compact")).group(1)
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(artifact)), "UTF-8")
   }
 
-  /** Pull per-rep walls per query out of a Bench JSON line (its "times"
+  /** Pull per-rep walls per query out of a full Bench line (its "times"
     * object: `"name":[t1,t2,...]`). No JSON library in scope — the shape
     * is regular and self-emitted.
     */
   private def repTimes(json: String): Map[String, Seq[Double]] = {
     val start = json.indexOf("\"times\":{")
-    require(start >= 0, "bench child emitted no times object " +
-      "(SPARK_GRAFT_TIMES not honored?)")
+    require(start >= 0, "bench artifact has no times object")
     val body = json.substring(start + 9, json.indexOf("}", start))
     val re = "\"([^\"]+)\":\\[([^\\]]*)\\]".r
     re.findAllMatchIn(body).map { m =>

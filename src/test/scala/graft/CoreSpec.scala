@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
+import graft.queries.Q
 import graft.sinks.Sinks
 
 /** Pipeline algebra, config identity, serialization round-trip, and
@@ -1018,6 +1019,43 @@ class CoreSpec extends SparkSpec {
     val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
     assert(proc.waitFor() === 0)
     assert(out.linesIterator.toSeq.last === "local[3] 3 UTC false")
+  }
+
+  test("query registry: 243 distinct q_ names, non-blank oracles, no empty family") {
+    val all = SparkEntry.families.flatMap(_.queries)
+    assert(all.size === 243 && SparkEntry.registry.size === 243)
+    assert(all.map(_.name).distinct.size === all.size)
+    all.foreach(q => assert(q.name.matches("q_[a-z0-9_]+"), q.name))
+    all.foreach(q => assert(q.oracle.trim.nonEmpty, q.name))
+    SparkEntry.families.foreach(f => assert(f.queries.nonEmpty, f.name))
+    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
+    val run: (SparkSession, String) => DataFrame = (s, _) => s.range(1).toDF()
+    val e = intercept[IllegalArgumentException](Q.index(Seq(
+      new Q("q_a", "f", run, "SELECT 1"),
+      new Q("q_b", "f", run, "SELECT 2"),
+      new Q("q_a", "g", run, "SELECT 3"))))
+    assert(e.getMessage.contains("q_a") && !e.getMessage.contains("q_b"))
+  }
+
+  test("oracle_sql.json escaping round-trips every oracle and control chars") {
+    val sql = SparkEntry.oracleSql + ("q_ctrl" -> "a\tb\r\nc\u0001\"d\\e")
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Verify.oracleJson(sql), classOf[java.util.Map[String, String]])
+    import scala.jdk.CollectionConverters._
+    assert(parsed.asScala.toMap === sql)
+  }
+
+  test("Bench compact line stays under 1,500 chars with all 243 queries failed") {
+    val names = SparkEntry.registry.keys.toSeq.sorted
+    val fams = SparkEntry.families.map(f => f.name -> 123456.789012345)
+    val line = Bench.compactLine(0.0, names.size, names, fams, loaded = true,
+      cpus = 32, reps = 3, sf = "/data/graft/testdata/sf0.1",
+      artifact = "/home/user/physicsnemocuratorspark/bench_full_latest.json.loaded.json")
+    assert(line.length < 1500, s"${line.length} chars")
+    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(m.get("n").asInt === 243 && m.get("n_errors").asInt === 243)
+    assert(m.get("errors").size === 10 && m.get("families").size === fams.size)
+    assert(m.get("artifact").asText.endsWith(".loaded.json"))
   }
 }
 

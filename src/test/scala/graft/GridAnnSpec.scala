@@ -139,7 +139,7 @@ class GridAnnSpec extends SparkSpec {
   test("planted-triple edges: multi-table LSH == brute force (q_dedup_clusters edge set)") {
     // at the GATE scale (sf0.01): a recall regression surfaces here as a
     // named assertion, not a nondeterministic CORRECTNESS hash mismatch
-    val trip = SparkEntry.plantedTriples(spark, "/root/testdata/sf0.01")
+    val trip = graft.queries.QuerySupport.plantedTriples(spark, "/root/testdata/sf0.01")
     val ann = SimilarityOps.annCosinePairsMulti(trip, "id", "embedding", 0.9,
       nTables = 6, planesPerTable = 12, dimHint = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -154,7 +154,7 @@ class GridAnnSpec extends SparkSpec {
   }
 
   test("annCosinePairsMulti plan has no cartesian/nested-loop join") {
-    val trip = SparkEntry.plantedTriples(spark, "/root/testdata/sf0.001")
+    val trip = graft.queries.QuerySupport.plantedTriples(spark, "/root/testdata/sf0.001")
     val plan = SimilarityOps.annCosinePairsMulti(trip, "id", "embedding", 0.9,
       nTables = 6, planesPerTable = 12, dimHint = 64)
       .queryExecution.executedPlan.toString
