@@ -38,9 +38,13 @@ final case class PSink(name: String, params: Map[String, String],
                        write: DataFrame => Seq[String])
 
 /** Immutable pipeline builder (reference `core/base.py:448-502`): `filter` and
-  * `write` return NEW pipelines; nothing executes until an action on the built
-  * DataFrame (invariants 1-2 of `ARCHITECTURE.md:66-72` — laziness and
-  * immutability — are Catalyst's own contract).
+  * `write` return NEW pipelines; the built DataFrame is lazy (invariants 1-2
+  * of `ARCHITECTURE.md:66-72` — laziness and immutability — are Catalyst's
+  * own contract), but building it is not free: a `transform` may run jobs
+  * while the plan is built (iterative operators such as the connected-
+  * components loops count and checkpoint every round). `Runner.runPipeline`
+  * therefore calls the transforms only when its source-index probe finds
+  * work left in the ledger.
   */
 final case class Pipeline(
     source: PSource,

@@ -28,7 +28,13 @@ final case class RunResult(
   *    curator index == one group of rows), not a Python worker unit;
   *  - checkpoint skip is a ledger anti-join BEFORE the action, so skipped
   *    indices are never read past the scan (partition pruning applies when
-  *    the source is partitioned by the index column);
+  *    the source is partitioned by the index column). A batch run probes
+  *    twice: first the SOURCE's index column, before any filter is called
+  *    (a completed run never builds its chain), then, only if that finds
+  *    work, the post-filter index column (a source index that every row of
+  *    was filtered out is never recorded, so only this probe skips it).
+  *    Both rest on one invariant: filters carry the source's index values
+  *    and never invent new ones;
   *  - the reference's per-worker shard files + `gather_pipeline` merge are
   *    replaced by Spark's partial+final aggregation and its all-or-nothing
   *    file commit protocol — per-index isolation survives as per-partition
@@ -55,27 +61,53 @@ object Runner {
         ledger.recordFilterArtifacts(spark, runId, idx, f.name, order, a)
     }
 
+  /** Batch execution: the whole filter chain as one plan, one sink action,
+    * one all-or-nothing ledger commit of the executed index set.
+    *
+    * With `resume`, a full skip is decided from the source's index column
+    * before any `PFilter.transform` is called. This is sound because every
+    * successful invocation records its post-filter index set as completed,
+    * and filters carry the source's index values without inventing new
+    * ones: once every source index is completed, so is every post-filter
+    * index. A reset index (`Ledger.resetIndex`) leaves `completed`, so the
+    * source probe misses and the index runs again. When the source probe
+    * finds work, the chain is built and the post-filter probe decides: it
+    * still skips a run whose only uncompleted source indices were filtered
+    * out entirely, without calling the sink. A source without `idxCol`
+    * (a filter adds it) goes straight to the post-filter probe.
+    */
   def runPipeline(spark: SparkSession, pipeline: Pipeline, idxCol: String,
                   ledgerDir: String, resume: Boolean = true): RunResult = {
     val ledger = new Ledger(ledgerDir)
     val runId = pipeline.configHash.take(16)
     val t0 = System.nanoTime()
 
-    val full = pipeline.dataFrame(spark)
+    val src = pipeline.source.load(spark)
     val completed = ledger.completedIndices(spark, runId)
-    val work = if (resume) ledger.remaining(spark, runId, full, idxCol) else full
 
     def recordedPaths(): Seq[String] =
       ledger.outputFiles(spark, runId).orderBy("idx", "seq")
         .select("path").collect().map(_.getString(0)).toSeq
-
-    // Skip probe on the INDEX COLUMN only (column-pruned anti-join scan):
-    // stops at the first un-completed row in the normal case; in the
-    // everything-done case it reads just the index column, never full rows.
-    if (resume && work.select(idxCol).isEmpty) {
+    def fullSkip(): RunResult = {
       val done = completed.count()
-      return RunResult(runId, done, done, 0, Nil, recordedPaths())
+      RunResult(runId, done, done, 0, Nil, recordedPaths())
     }
+
+    // Source probe (index column only), before any transform runs: a
+    // transform may run jobs while the plan is built (the CC loops do).
+    if (resume && src.columns.contains(idxCol) &&
+        src.select(col(idxCol).cast("long").as("idx"))
+          .join(completed, Seq("idx"), "left_anti").isEmpty)
+      return fullSkip()
+
+    val full = pipeline.filters.foldLeft(src)((d, f) => f.transform(d))
+    val work = if (resume) ledger.remaining(spark, runId, full, idxCol) else full
+
+    // Post-filter probe on the INDEX COLUMN only (column-pruned anti-join
+    // scan): decides the skip when a filter dropped every row of some
+    // source index (never recorded, so the source probe misses) — the sink
+    // must not see an empty frame, an overwrite sink would erase its output.
+    if (resume && work.select(idxCol).isEmpty) return fullSkip()
 
     // run_dir = the sink's declared artifact root (relative filter
     // artifacts resolve against it); batch mode records no total_indices —

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 /** VTU writer (reference `domains/mesh/sinks/mesh_vtu.py:49`): one `.vtu`
   * file per mesh, assembled per-mesh ON EXECUTORS (collect_list per mesh —
   * one index fits in memory, the reference's own working assumption) and
-  * written through the Hadoop FS API so any scheme (file/hdfs/s3a) works.
+  * written through the Hadoop FS API so any scheme (file/hdfs/s3a) works;
+  * each file's bytes count into the writing task's output metrics.
   * Round-trips with `VtkXmlSource.read` in every format.
   *
   * `format`:
@@ -90,6 +91,7 @@ object VtuSink {
       val fs = path.getFileSystem(hadoopConf.value)
       val os = fs.create(path, true)
       try os.write(bytes) finally os.close()
+      org.apache.spark.sql.graft.Bridge.addWrittenFile(bytes.length)
       path.toString
     }(Encoders.STRING).collect().toSeq.sorted
   }

@@ -18,4 +18,18 @@ object Bridge {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Count one file of `bytes` that a task wrote outside Spark's writers
+    * (a Hadoop FS stream opened in a `map`) into the task's output metrics
+    * as one record, since their setters are `private[spark]`; a no-op off
+    * a task thread.
+    */
+  def addWrittenFile(bytes: Long): Unit = {
+    val tc = org.apache.spark.TaskContext.get()
+    if (tc != null) {
+      val om = tc.taskMetrics().outputMetrics
+      om.setBytesWritten(om.bytesWritten + bytes)
+      om.setRecordsWritten(om.recordsWritten + 1)
+    }
+  }
 }

@@ -1,8 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -97,6 +98,76 @@ class CoreSpec extends SparkSpec {
     assert(idxRows.schema("gpu_memory_bytes").dataType ==
       org.apache.spark.sql.types.LongType)
     assert(idxRows.filter(col("gpu_memory_bytes").isNotNull).count() == 0)
+  }
+
+  /** A pipeline over `mkSource(n)` whose one filter (`doubleFilter`, then
+    * dropping the rows of each index `drop` selects) and whose sink count
+    * their calls: the transform is called when the chain is built, the
+    * sink once per write. */
+  private def countingPipeline(n: Int, sink: PSink,
+                               drop: Column => Column = _ => lit(false))
+      : (Pipeline, AtomicInteger, AtomicInteger) = {
+    val transforms = new AtomicInteger
+    val writes = new AtomicInteger
+    val p = Pipeline(mkSource(n))
+      .filter(PFilter("double_dropping", Map("factor" -> "2"), df => {
+        transforms.incrementAndGet()
+        doubleFilter.transform(df).filter(!drop(col("idx")))
+      }))
+      .write(sink.copy(write = df => { writes.incrementAndGet(); sink.write(df) }))
+    (p, transforms, writes)
+  }
+
+  test("runPipeline: a completed run is skipped from the source index, no filter or sink call") {
+    val dir = Files.createTempDirectory("graft-srcskip").toString
+    val out = Files.createTempDirectory("graft-srcskip-out").toString
+    val (p, transforms, writes) =
+      countingPipeline(10, Sinks.parquetSink(s"$out/data", Seq("idx")))
+    val r1 = Runner.runPipeline(spark, p, "idx", dir)
+    assert(r1.nExecuted == 10 && transforms.get == 1 && writes.get == 1)
+    val r2 = Runner.runPipeline(spark, p, "idx", dir)
+    assert(transforms.get == 1 && writes.get == 1)
+    assert(r2.nExecuted == 0 && r2.nSkipped == 10 && r2.nTotal == 10)
+    assert(r2.outputPaths == r1.outputPaths && r2.writtenPaths.isEmpty)
+  }
+
+  test("runPipeline: an index the filters drop entirely is skipped by the post-filter probe") {
+    val dir = Files.createTempDirectory("graft-fbskip").toString
+    val out = Files.createTempDirectory("graft-fbskip-out").toString.concat("/data")
+    // an overwrite sink: called with an empty frame it would erase its output
+    val overwrite = PSink("parquet_overwrite", Map("path" -> out),
+      df => { df.write.mode("overwrite").parquet(out); Seq(out) })
+    val (p, transforms, writes) = countingPipeline(5, overwrite, _ === 4L)
+    val r1 = Runner.runPipeline(spark, p, "idx", dir)
+    assert(r1.nExecuted == 4 && writes.get == 1)
+    def rows() = spark.read.parquet(out).orderBy("idx").collect()
+      .map(r => (r.getAs[Long]("idx"), r.getAs[Long]("value"))).toSeq
+    val before = rows()
+    assert(before == (0L until 4L).map(i => (i, i * 4)))
+    // index 4 is never recorded, so the source probe finds work and the
+    // chain is built; the post-filter probe finds none and skips the sink
+    val r2 = Runner.runPipeline(spark, p, "idx", dir)
+    assert(transforms.get == 2 && writes.get == 1)
+    assert(r2.nExecuted == 0 && r2.nSkipped == 4)
+    assert(rows() == before)
+  }
+
+  test("runPipeline: after resetIndex a rerun executes exactly that index") {
+    val dir = Files.createTempDirectory("graft-rsskip").toString
+    val out = Files.createTempDirectory("graft-rsskip-out").toString
+    val (p, transforms, writes) =
+      countingPipeline(10, Sinks.parquetSink(s"$out/data", Seq("idx")))
+    val r1 = Runner.runPipeline(spark, p, "idx", dir)
+    val led = new Ledger(dir)
+    led.resetIndex(spark, r1.runId, 2L)
+    val r2 = Runner.runPipeline(spark, p, "idx", dir)
+    assert(transforms.get == 2 && writes.get == 2)
+    assert(r2.nExecuted == 1 && r2.nSkipped == 9 && r2.nTotal == 10)
+    assert(led.completedIndices(spark, r1.runId).count() == 10)
+    // the append sink got index 2's row a second time and nothing else
+    val perIdx = spark.read.parquet(s"$out/data").groupBy(col("idx").cast("long"))
+      .count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(perIdx == (0L until 10L).map(i => i -> (if (i == 2L) 2L else 1L)).toMap)
   }
 
   test("runPerIndex: injected failure leaves completed prefix durable; resume runs exactly the rest") {

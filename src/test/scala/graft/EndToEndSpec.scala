@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.functions._
 
@@ -22,14 +23,19 @@ class EndToEndSpec extends SparkSpec {
       s => s.read.format("graft.sources.RandomMeshSource")
         .option("n_meshes", 6).option("points_per_mesh", 300).option("seed", 7)
         .load())
+    // count chain builds and sink writes, so the rerun's "nothing
+    // recomputed" is asserted, not only its counts
+    val transforms = new AtomicInteger
+    val writes = new AtomicInteger
     val downcast = PFilter("precision", Map("target" -> "float"),
-      df => graft.operators.FieldOps.precisionCast(df))
+      df => { transforms.incrementAndGet(); graft.operators.FieldOps.precisionCast(df) })
     val stats = PFilter("field_stats", Map("field" -> "field_a"),
       df => df.groupBy("mesh_id").agg(
         count(lit(1)).as("n_points"),
         avg("field_a").as("mean_a"), min("x").as("min_x"), max("x").as("max_x")))
-    val pipeline = Pipeline(source).filter(downcast).filter(stats)
-      .write(Sinks.parquetSink(s"$out/stats", Seq("mesh_id")))
+    val parquet = Sinks.parquetSink(s"$out/stats", Seq("mesh_id"))
+    val sink = parquet.copy(write = df => { writes.incrementAndGet(); parquet.write(df) })
+    val pipeline = Pipeline(source).filter(downcast).filter(stats).write(sink)
 
     // simulate a killed earlier run that completed meshes 0-2
     val runId = pipeline.configHash.take(16)
@@ -48,8 +54,10 @@ class EndToEndSpec extends SparkSpec {
     assert(m3.getAs[Long]("n_points") == 300)
 
     // rerun: everything checkpointed, nothing recomputed
+    assert(transforms.get == 1 && writes.get == 1)
     val r2 = Runner.runPipeline(spark, pipeline, "mesh_id", ledgerDir)
     assert(r2.nExecuted == 0 && r2.nSkipped == 6)
+    assert(transforms.get == 1 && writes.get == 1)
   }
 
   test("mesh quality report runs on DSv2 source points end to end") {

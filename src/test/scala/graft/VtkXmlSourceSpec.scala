@@ -110,6 +110,35 @@ class VtkXmlSourceSpec extends SparkSpec {
     assert(rc.collect()(0).getSeq[Long](2) == Seq(0L, 1L, 2L))
   }
 
+  test("VtuSink reports the bytes it writes in the tasks' output metrics") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("vtu-metrics").toString
+    val pts = Seq(1L, 2L).flatMap(m => Seq(
+      (m, 0L, 0.0, 0.0, 0.0), (m, 1L, 2.0 * m, 0.0, 0.0), (m, 2L, 0.0, 3.0, 0.0)))
+      .toDF("mesh_id", "point_id", "x", "y", "z")
+    val cls = Seq(1L, 2L).map(m => (m, 0L, Seq(0L, 1L, 2L)))
+      .toDF("mesh_id", "cell_id", "vertices")
+    val pd = Seq(1L, 2L).flatMap(m => (0L until 3L).map(p => (m, p, "u", p * 1.5)))
+      .toDF("mesh_id", "point_id", "field", "value")
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.outputMetrics.bytesWritten)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val paths =
+      try {
+        val p = graft.sinks.VtuSink.write(pts, cls, pd, dir, "appended-zlib")
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+        p
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(paths.length == 2)
+    val files = new java.io.File(dir).listFiles().filterNot(_.getName.endsWith(".crc"))
+    assert(files.map(_.getName).sorted.toSeq == Seq("mesh_1.vtu", "mesh_2.vtu"))
+    assert(bytes.get() == files.map(_.length).sum)
+  }
+
   test("VtuSink cellData + nameTemplate round trip (ascii and appended-zlib)") {
     val s = spark
     import s.implicits._
