@@ -14,6 +14,15 @@ import org.apache.spark.sql.functions._
   *  - equiangle skewness = max(θmax−θideal, θideal−θmin)/(π−θideal), clamped [0,1];
   *  - scaled Jacobian: signed 2-D area / unsigned 3-D area / signed tet triple
   *    product over the product of edge norms.
+  *
+  * `Vec` builds expression trees, not values: every use of a `Vec` or of a
+  * kernel's result copies its operands in full into the consuming
+  * expression. A value used more than once must be staged as a named column
+  * in its own `select` and read back with `col`. Inlined, the analyzed plan
+  * of the tet quality report over four `RandomMeshSource` meshes had 42,093
+  * expression nodes (each dihedral re-expands two face normals; min, max
+  * and the degenerate test re-expand all six dihedrals); staged in three
+  * projections it has 2,145 (`MeshOps.tetQualityReport`).
   */
 object Geometry {
 
@@ -91,11 +100,10 @@ object Geometry {
   def tetVolume(v0: Vec, v1: Vec, v2: Vec, v3: Vec): Column =
     (v1 - v0).dot((v2 - v0).cross(v3 - v0)) / 6.0
 
-  /** The six tet dihedral angles (radians), edge order
-    * (0-1, 0-2, 0-3, 1-2, 1-3, 2-3) — π − angle between outward face normals
-    * (`quality.py:180-262`).
+  /** Outward (unnormalized) face normals n0..n3 of tet (v0, v1, v2, v3); face i is
+    * the one opposite vertex i, oriented away from it (`quality.py:180-262`).
     */
-  def tetDihedralAngles(v0: Vec, v1: Vec, v2: Vec, v3: Vec): Seq[Column] = {
+  def tetOutwardNormals(v0: Vec, v1: Vec, v2: Vec, v3: Vec): Seq[Vec] = {
     def outwardNormal(a: Vec, b: Vec, c: Vec, opposite: Vec): Vec = {
       val n = (b - a).cross(c - a)
       val centroid = Vec((a.x + b.x + c.x) / 3.0, (a.y + b.y + c.y) / 3.0,
@@ -103,15 +111,27 @@ object Geometry {
       val s = signum((centroid - opposite).dot(n))
       Vec(n.x * s, n.y * s, n.z * s)
     }
-    val n0 = outwardNormal(v1, v2, v3, v0)
-    val n1 = outwardNormal(v0, v2, v3, v1)
-    val n2 = outwardNormal(v0, v1, v3, v2)
-    val n3 = outwardNormal(v0, v1, v2, v3)
+    Seq(outwardNormal(v1, v2, v3, v0), outwardNormal(v0, v2, v3, v1),
+      outwardNormal(v0, v1, v3, v2), outwardNormal(v0, v1, v2, v3))
+  }
+
+  /** The six tet dihedral angles (radians) from the outward face normals
+    * n0..n3, edge order (0-1, 0-2, 0-3, 1-2, 1-3, 2-3): π − angle between
+    * the normals of the two faces sharing the edge.
+    */
+  def dihedralAngles(normals: Seq[Vec]): Seq[Column] = {
+    val Seq(n0, n1, n2, n3) = normals
     def dihedral(na: Vec, nb: Vec): Column =
       lit(math.Pi) - acos(clamp1(na.dot(nb) / (na.norm * nb.norm + Eps)))
     Seq(dihedral(n2, n3), dihedral(n1, n3), dihedral(n1, n2),
       dihedral(n0, n3), dihedral(n0, n2), dihedral(n0, n1))
   }
+
+  /** The six tet dihedral angles (radians), edge order
+    * (0-1, 0-2, 0-3, 1-2, 1-3, 2-3), as one inline expression each.
+    */
+  def tetDihedralAngles(v0: Vec, v1: Vec, v2: Vec, v3: Vec): Seq[Column] =
+    dihedralAngles(tetOutwardNormals(v0, v1, v2, v3))
 
   /** Degenerate-cell predicate: any angle < 1° or > 179° (`quality.py:774-775`). */
   def degenerate(angles: Seq[Column]): Column = {

@@ -207,20 +207,36 @@ object MeshOps {
     * (`quality.py:180-262,648`): per-mesh aspect / dihedral-angle / signed
     * scaled-Jacobian / signed-volume statistics with degenerate, inverted,
     * near-zero and poor counts — the tet analogue of
-    * `triangleQualityReport`, one grouped aggregation over codegen'd
-    * per-cell column expressions (no UDFs).
+    * `triangleQualityReport`, as three projections, then one grouped
+    * aggregation (codegen'd column expressions, no UDFs). Each derived
+    * quantity is computed once as a named column: stage 1 volume, Jacobian,
+    * the outward face normals `nx0..nz3` and edge lengths `l0..l5`; stage 2
+    * the dihedrals `d0..d5`; stage 3 aspect, min/max dihedral and the
+    * degenerate flag. Inlined, the normals and dihedrals would be copied
+    * into every consumer (see the `Geometry` doc).
     */
   def tetQualityReport(points: DataFrame, cells: DataFrame): DataFrame = {
     val wide = cellsWithCoords(points, cells, 4)
     val v0 = Vec.at(0); val v1 = Vec.at(1); val v2 = Vec.at(2); val v3 = Vec.at(3)
-    val dih = Geometry.tetDihedralAngles(v0, v1, v2, v3)
-    val perCell = wide.select(col("mesh_id"),
-      Geometry.aspectRatio(Geometry.tetEdgeLens(v0, v1, v2, v3)).as("aspect"),
+    def named(prefix: String, cs: Seq[Column]) =
+      cs.zipWithIndex.map { case (c, i) => c.as(s"$prefix$i") }
+    def cols(prefix: String, n: Int) = (0 until n).map(i => col(s"$prefix$i"))
+    val normals = Geometry.tetOutwardNormals(v0, v1, v2, v3)
+    val stage1 = wide.select(Seq(col("mesh_id"),
+      Geometry.tetVolume(v0, v1, v2, v3).as("vol"),
+      Geometry.scaledJacobianTet(v0, v1, v2, v3).as("jac")) ++
+      named("nx", normals.map(_.x)) ++ named("ny", normals.map(_.y)) ++
+      named("nz", normals.map(_.z)) ++ named("l", Geometry.tetEdgeLens(v0, v1, v2, v3)): _*)
+    val stage2 = stage1.select(Seq(col("mesh_id"), col("vol"), col("jac")) ++ cols("l", 6) ++
+      named("d", Geometry.dihedralAngles(
+        (0 to 3).map(i => Vec(col(s"nx$i"), col(s"ny$i"), col(s"nz$i"))))): _*)
+    val dih = cols("d", 6)
+    val perCell = stage2.select(col("mesh_id"),
+      Geometry.aspectRatio(cols("l", 6)).as("aspect"),
       (dih.reduce(least(_, _)) * (180.0 / math.Pi)).as("min_dihedral_deg"),
       (dih.reduce(greatest(_, _)) * (180.0 / math.Pi)).as("max_dihedral_deg"),
       Geometry.degenerate(dih).cast("long").as("is_degen"),
-      Geometry.tetVolume(v0, v1, v2, v3).as("vol"),
-      Geometry.scaledJacobianTet(v0, v1, v2, v3).as("jac"))
+      col("vol"), col("jac"))
     perCell.groupBy(col("mesh_id")).agg(
       count(lit(1)).as("n_cells"),
       min("aspect").as("geom_min_aspect_ratio"),

@@ -798,7 +798,9 @@ object MeshSourceQueries extends Family("mesh/sources") {
     * identical order ⇒ bit-equal per-cell values; aggregate means are
     * epsilon-round-guarded). Dihedral-angle columns are spec-pinned in
     * MeshSpec instead (acos + outward-normal sign machinery has no practical
-    * SQL mirror).
+    * SQL mirror): the regular-tet pins, and "tetDihedralAngles: corner tet
+    * pins the edge order …" plus the corner/sliver report spec, which fix
+    * the edge order and the degenerate count.
     */
   q("q_tet_quality",
     // Mirrors the Geometry tet kernels with IDENTICAL IEEE operation order

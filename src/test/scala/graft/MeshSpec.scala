@@ -131,6 +131,65 @@ class MeshSpec extends SparkSpec {
     assert(math.abs(math.toDegrees(r.getDouble(3)) - 70.52877936550931) < 1e-6)
   }
 
+  /** Corner tet (0,0,0), (1,0,0), (0,1,0), (0,0,1) as mesh 1 and the sliver
+    * (0,0,0), (1,0,0), (0,1,0), (0.3,0.3,1e-4) as mesh 2, one cell each.
+    */
+  private def cornerAndSliver = {
+    val s = spark
+    import s.implicits._
+    val pts = Seq(
+      (1L, 0L, 0.0, 0.0, 0.0), (1L, 1L, 1.0, 0.0, 0.0),
+      (1L, 2L, 0.0, 1.0, 0.0), (1L, 3L, 0.0, 0.0, 1.0),
+      (2L, 4L, 0.0, 0.0, 0.0), (2L, 5L, 1.0, 0.0, 0.0),
+      (2L, 6L, 0.0, 1.0, 0.0), (2L, 7L, 0.3, 0.3, 1e-4)
+    ).toDF("mesh_id", "point_id", "x", "y", "z")
+    val cls = Seq((1L, 0L, Seq(0L, 1L, 2L, 3L)), (2L, 1L, Seq(4L, 5L, 6L, 7L)))
+      .toDF("mesh_id", "cell_id", "vertices")
+    (pts, cls)
+  }
+
+  test("tetDihedralAngles: corner tet pins the edge order 0-1, 0-2, 0-3, 1-2, 1-3, 2-3") {
+    val s = spark
+    import s.implicits._
+    val wide = Seq((0.0, 0.0, 0.0, 1.0, 0.0, 0.0, 0.0, 1.0, 0.0, 0.0, 0.0, 1.0))
+      .toDF("x0", "y0", "z0", "x1", "y1", "z1", "x2", "y2", "z2", "x3", "y3", "z3")
+    val v = (0 to 3).map(Geometry.Vec.at)
+    val r = wide.select(Geometry.tetDihedralAngles(v(0), v(1), v(2), v(3)): _*).collect()(0)
+    // the three edges at the right-angled corner meet at 90°; the three
+    // edges of the slanted face at acos(1/√3) ≈ 54.7356°
+    val slant = math.toDegrees(math.acos(1.0 / math.sqrt(3)))
+    val expected = Seq(90.0, 90.0, 90.0, slant, slant, slant)
+    (0 until 6).foreach { i =>
+      assert(math.abs(math.toDegrees(r.getDouble(i)) - expected(i)) < 1e-9, s"edge $i")
+    }
+  }
+
+  test("tetQualityReport: corner tet min/max dihedral, sliver tet counted degenerate") {
+    val (pts, cls) = cornerAndSliver
+    val rows = MeshOps.tetQualityReport(pts, cls).collect()
+      .map(r => r.getAs[Long]("mesh_id") -> r).toMap
+    val corner = rows(1L)
+    val slant = math.toDegrees(math.acos(1.0 / math.sqrt(3)))
+    assert(math.abs(corner.getAs[Double]("geom_min_dihedral_deg") - slant) < 1e-9)
+    assert(math.abs(corner.getAs[Double]("geom_max_dihedral_deg") - 90.0) < 1e-9)
+    assert(corner.getAs[Long]("geom_n_degenerate_cells") == 0)
+    val sliver = rows(2L)
+    assert(sliver.getAs[Long]("geom_n_degenerate_cells") == 1)
+    assert(sliver.getAs[Double]("geom_min_dihedral_deg") < 1.0)
+    assert(sliver.getAs[Double]("geom_max_dihedral_deg") > 179.0)
+  }
+
+  test("quality reports stay small plans: at most 3,000 expression nodes") {
+    val (pts, cls) = cornerAndSliver
+    val tet = MeshOps.tetQualityReport(pts, cls).queryExecution
+    // one inlined expression per column gave ~42,000 (shared normals and
+    // dihedrals copied into every consumer)
+    assert(Explain.exprNodes(tet.analyzed) <= 3000, "tet analyzed")
+    assert(Explain.exprNodes(tet.optimizedPlan) <= 3000, "tet optimized")
+    val tri = MeshOps.triangleQualityReport(points, cells).queryExecution
+    assert(Explain.exprNodes(tri.analyzed) <= 3000, "triangle analyzed")
+  }
+
   test("mergeDuplicatePoints + remapConnectivity + dropDuplicateCells + dropUnusedPoints") {
     val s = spark
     import s.implicits._
