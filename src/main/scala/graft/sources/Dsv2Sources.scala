@@ -9,6 +9,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{GlobFilter, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -22,38 +23,34 @@ import org.apache.spark.unsafe.types.UTF8String
   * derives reader-level pruning from the query instead of the caller
   * passing include/exclude lists — the reference prunes at its readers the
   * same way (`vtk.py:120-123` key_filters, `era5.py`'s `variables` list,
-  * `_key_filter.py:45-110`):
+  * `_key_filter.py:45-110`).
   *
-  *  - [[VtuDataSource]] — wide point table, one DOUBLE column per
-  *    PointData array; `SupportsPushDownRequiredColumns` maps column
-  *    pruning onto `parseVtu`'s include set, so unselected arrays are
-  *    NEVER payload-decoded (and Points/Cells decode only when needed).
-  *  - [[NetCdfDataSource]] — long `(file, variable, pos, value)` table;
-  *    `SupportsPushDownFilters` on `variable` (EqualTo/In) maps predicate
-  *    pushdown onto `NetCdfSource.values`' `wanted` set, so unselected
-  *    variables are never read.
-  *  - [[AseLmdbDataSource]] — `(db_id, row_id, json)` rows;
-  *    `SupportsPushDownRequiredColumns` skips the zlib inflate + UTF-8
-  *    decode of every value when `json` is pruned (id/count scans touch
-  *    only the key B-tree).
+  * Every relation is one [[UnitSource]] binding over one scan skeleton:
+  * a format supplies its schema, its units (one per file, one per d3plot
+  * family, one per RandomMesh index), its key column, its payload fraction
+  * and a reader of one unit's rows. The skeleton supplies the Table,
+  * ScanBuilder, Scan and reader factory once, with:
   *
-  * Scale shape: one [[InputPartition]] per file (the curator per-index
-  * unit — independently executable and retryable); file listing happens
-  * once on the driver, bytes are read ON THE EXECUTOR via Hadoop
-  * FileSystem with the driver's Hadoop conf shipped as a string map, so
-  * the relations scan distributed on any FileSystem scheme.
+  *  - one [[InputPartition]] per unit (the curator per-index unit —
+  *    independently executable and retryable);
+  *  - column pruning handed to the reader, so unselected arrays are never
+  *    decoded (and for the ranged readers never read);
+  *  - key-column unit pruning: `EqualTo`/`In` on the key column keeps only
+  *    the matching units, so a per-index slice reads only its own index
+  *    (the reference's `Source.__getitem__(i)`, `core/base.py:77-131`). Every
+  *    row of a unit carries that unit's key, so the pruning is exact and the
+  *    filter leaves the plan;
+  *  - `SupportsReportStatistics` sized from the kept units only.
+  *
+  * File listing happens once on the driver; bytes are read ON THE EXECUTOR
+  * via Hadoop FileSystem with the driver's Hadoop conf shipped as a string
+  * map, so the relations scan distributed on any FileSystem scheme.
   */
 object Dsv2 {
 
-  /** Driver-side listing: directory → recursive files matching
-    * `globFilter`; globbed path → expansion (filtered by `globFilter`).
-    */
-  def listFiles(spark: SparkSession, path: String, globFilter: String): Seq[String] =
-    listFilesWithSize(spark, path, globFilter).map(_._1)
-
-  /** Listing with file sizes — one pass; the sizes feed each Scan's
-    * `SupportsReportStatistics` so Catalyst can size broadcast decisions
-    * over the custom relations the same way it does over parquet.
+  /** Driver-side listing with file sizes: directory → recursive files
+    * matching `globFilter`; globbed path → expansion (filtered by
+    * `globFilter`). The sizes feed the scan statistics.
     */
   def listFilesWithSize(spark: SparkSession, path: String,
                         globFilter: String): Seq[(String, Long)] = {
@@ -106,18 +103,6 @@ object Dsv2 {
 
   private[sources] def opt(o: CaseInsensitiveStringMap, k: String, dflt: String): String =
     Option(o.get(k)).getOrElse(dflt)
-
-  /** Size-only Statistics for `SupportsReportStatistics`: without it a
-    * DSv2 relation defaults to `spark.sql.defaultSizeInBytes` (maxed), so
-    * a small pruned mesh side could NEVER broadcast — reporting bytes
-    * scaled by the selected-column fraction lets Catalyst make the same
-    * join-strategy calls it makes over parquet.
-    */
-  private[sources] def statsOf(bytes: Long): Statistics = new Statistics {
-    override def sizeInBytes: java.util.OptionalLong =
-      java.util.OptionalLong.of(math.max(bytes, 1L))
-    override def numRows: java.util.OptionalLong = java.util.OptionalLong.empty()
-  }
 
   /** Fraction of a file's payload a pruned schema still reads: selected
     * non-metadata columns over all non-metadata columns (metadata columns
@@ -188,6 +173,204 @@ object Dsv2 {
   }
 }
 
+// ------------------------------------------------------------- skeleton
+
+/** One scan unit: its key-column value (a `String` path or a `Long`
+  * index), the files it reads, its size in bytes and, when known, its row
+  * count. One unit is one input partition.
+  */
+private[sources] case class ScanUnit(key: Any, files: Seq[String], bytes: Long,
+                                     rows: Long = -1L) extends InputPartition {
+  /** The key as Catalyst stores it in every row of the unit. */
+  def datum: Any = key match {
+    case s: String => UTF8String.fromString(s)
+    case k => k
+  }
+}
+
+/** A format bound to the unit-scan skeleton (see [[Dsv2]]). Options are
+  * checked on the driver when the relation is created, so a missing
+  * `path` or an unknown `table` fails at `load()`, not in a task.
+  */
+abstract class UnitSource extends TableProvider with Serializable {
+  /** `graft_<label>` names the table and prefixes the scan description. */
+  protected def label: String
+  /** The column every row of a unit carries its unit's key in. */
+  protected def keyColumn: String
+  /** Valid `table` option values, the default first; empty = no tables. */
+  protected def tables: Seq[String] = Nil
+  /** Format-specific option checks; file formats require `path`. */
+  protected def check(o: CaseInsensitiveStringMap): Unit
+  protected def schemaOf(o: CaseInsensitiveStringMap): StructType
+  protected def units(o: CaseInsensitiveStringMap): Seq[ScanUnit]
+  /** Share of a unit's bytes a scan of `required` reads, for statistics. */
+  protected def payloadFraction(o: CaseInsensitiveStringMap, full: StructType,
+                                required: StructType): Double = 1.0
+  /** Built on the driver; the returned function runs on the executor and
+    * yields one unit's rows carrying `required`'s columns in order.
+    */
+  protected def reader(o: CaseInsensitiveStringMap, required: StructType,
+                       pushed: Array[Filter]): ScanUnit => Iterator[InternalRow]
+  /** A non-key filter the format applies exactly itself (NetCDF's variable). */
+  protected def pushes(f: Filter): Boolean = false
+  protected def describe(o: CaseInsensitiveStringMap, required: StructType,
+                         pushed: Array[Filter]): String =
+    s"graft_$label ReadSchema: ${required.fieldNames.mkString(",")}"
+
+  protected final def sourceName: String = getClass.getSimpleName
+  protected final def table(o: CaseInsensitiveStringMap): String =
+    Dsv2.opt(o, "table", tables.headOption.getOrElse(""))
+
+  private def validate(o: CaseInsensitiveStringMap): Unit = {
+    check(o)
+    if (tables.nonEmpty && !tables.contains(table(o)))
+      throw new IllegalArgumentException(
+        s"$sourceName: unknown table '${table(o)}' (${tables.mkString("|")})")
+  }
+
+  final override def inferSchema(o: CaseInsensitiveStringMap): StructType = {
+    validate(o)
+    schemaOf(o)
+  }
+
+  final override def getTable(schema: StructType, partitioning: Array[Transform],
+                              properties: util.Map[String, String]): Table = {
+    val o = new CaseInsensitiveStringMap(properties)
+    validate(o)
+    val tableName = Option(o.get("path")).fold(s"graft_$label")(p => s"graft_$label($p)")
+    val full = schema
+    new Table with SupportsRead {
+      override def name(): String = tableName
+      override def schema(): StructType = full
+      override def capabilities(): util.Set[TableCapability] =
+        util.EnumSet.of(TableCapability.BATCH_READ)
+      override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+        new UnitScanBuilder(full, options)
+    }
+  }
+
+  /** `n` indexed rows of unit `u`: the key column holds the unit's key,
+    * any other column `c` holds `value(c)(i)` in row `i`.
+    */
+  protected final def indexedRows(u: ScanUnit, cols: Array[String], n: Long)(
+      value: String => Long => Any): Iterator[InternalRow] = {
+    val key = u.datum
+    val getters = cols.map(c => if (c == keyColumn) (_: Long) => key else value(c))
+    Iterator.range(0L, n).map(i => new GenericInternalRow(getters.map(_(i))))
+  }
+
+  private class UnitScanBuilder(full: StructType, o: CaseInsensitiveStringMap)
+      extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
+    private var required: StructType = full
+    private var pushed: Array[Filter] = Array.empty
+    private val key = keyColumn
+
+    override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
+
+    override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+      val (exact, residual) = filters.partition {
+        case EqualTo(`key`, _) | In(`key`, _) | IsNotNull(`key`) => true
+        case f => pushes(f)
+      }
+      pushed = exact
+      residual
+    }
+    override def pushedFilters(): Array[Filter] = pushed
+
+    override def build(): Scan = {
+      val kept = units(o).filter(u => pushed.forall {
+        case EqualTo(`key`, v) => u.key == v
+        case In(`key`, vs) => vs.contains(u.key)
+        case _ => true
+      })
+      val bytes = math.round(kept.map(_.bytes).sum * payloadFraction(o, full, required))
+      val rows = if (kept.forall(_.rows >= 0)) Some(kept.map(_.rows).sum) else None
+      new UnitScan(required, kept, bytes, rows, reader(o, required, pushed),
+        describe(o, required, pushed))
+    }
+  }
+}
+
+private class UnitScan(required: StructType, kept: Seq[ScanUnit], bytes: Long,
+                       rows: Option[Long], read: ScanUnit => Iterator[InternalRow],
+                       desc: String)
+    extends Scan with Batch with SupportsReportStatistics {
+  override def readSchema(): StructType = required
+  override def toBatch: Batch = this
+  // without statistics a DSv2 relation sizes at spark.sql.defaultSizeInBytes
+  // (maxed), so a small pruned mesh side could never broadcast
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes: util.OptionalLong = util.OptionalLong.of(math.max(bytes, 1L))
+    override def numRows: util.OptionalLong =
+      rows.fold(util.OptionalLong.empty())(n => util.OptionalLong.of(n))
+  }
+  override def planInputPartitions(): Array[InputPartition] = kept.toArray
+  override def createReaderFactory(): PartitionReaderFactory = new UnitReaderFactory(read)
+  override def description(): String = desc
+}
+
+private class UnitReaderFactory(read: ScanUnit => Iterator[InternalRow])
+    extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val rows = read(p.asInstanceOf[ScanUnit])
+    new PartitionReader[InternalRow] {
+      private var cur: InternalRow = _
+      override def next(): Boolean = rows.hasNext && { cur = rows.next(); true }
+      override def get(): InternalRow = cur
+      override def close(): Unit = ()
+    }
+  }
+}
+
+/** A [[UnitSource]] over files under `option("path", …)`: one unit per
+  * file matching `globFilter` (default `glob`), keyed by its path.
+  */
+abstract class FileUnitSource(glob: String) extends UnitSource {
+  override protected def check(o: CaseInsensitiveStringMap): Unit =
+    if (o.get("path") == null)
+      throw new IllegalArgumentException(s"$sourceName requires option 'path'")
+
+  protected final def listed(o: CaseInsensitiveStringMap): Seq[(String, Long)] =
+    Dsv2.listFilesWithSize(SparkSession.active, o.get("path"),
+      Dsv2.opt(o, "globFilter", glob))
+
+  override protected def units(o: CaseInsensitiveStringMap): Seq[ScanUnit] =
+    listed(o).map { case (f, n) => ScanUnit(f, Seq(f), n) }
+
+  protected final def conf: Map[String, String] = Dsv2.confMap(SparkSession.active)
+
+  /** Sorted union of the array names `names` finds in each file's header
+    * (heterogeneous runs still get one schema; files lacking an array emit
+    * null for it). Each file costs only its XML HEADER bytes, so planning
+    * stays O(header) per file even against multi-GB meshes. `inferLimit`
+    * (default 0 = all) samples the first N files when the corpus is
+    * homogeneous; `.schema(...)` skips inference entirely.
+    */
+  protected final def headerArrays(o: CaseInsensitiveStringMap)(
+      names: Dsv2.HadoopRawData => Seq[String]): Seq[String] = {
+    val files = listed(o).map(_._1)
+    require(files.nonEmpty, s"$sourceName: no files under ${o.get("path")}")
+    val limit = Dsv2.opt(o, "inferLimit", "0").toInt
+    val c = conf
+    Dsv2.parMap(if (limit > 0) files.take(limit) else files) { f =>
+      val raw = new Dsv2.HadoopRawData(f, c)
+      try names(raw) finally raw.close()
+    }.flatten.distinct.sorted
+  }
+}
+
+private object UnitSource {
+  def str(n: String) = StructField(n, StringType, nullable = false)
+  def lng(n: String) = StructField(n, LongType, nullable = false)
+  def int(n: String) = StructField(n, IntegerType, nullable = false)
+  def dbl(n: String) = StructField(n, DoubleType, nullable = false)
+  def arrays(names: Seq[String]): Seq[StructField] =
+    names.map(a => StructField(a, DoubleType, nullable = true))
+  def vertices: StructField = StructField("vertices", ArrayType(LongType), nullable = false)
+}
+
+import UnitSource.{arrays, dbl, int, lng, str, vertices}
+
 // ------------------------------------------------------------------ VTU
 
 /** `spark.read.format("graft.sources.VtuDataSource").option("path", dir)`.
@@ -205,191 +388,71 @@ object Dsv2 {
   * connectivity decodes only when `vertices` is selected, cell arrays
   * only when their columns are.
   */
-class VtuDataSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val spark = SparkSession.active
-    val files = Dsv2.listFiles(spark, Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException("VtuDataSource requires option 'path'")),
-      Dsv2.opt(options, "globFilter", "*.vt[up]"))
-    require(files.nonEmpty, s"VtuDataSource: no files under ${options.get("path")}")
-    if (Dsv2.opt(options, "table", "points") == "cells") {
-      // cells table carries the CellData arrays (AhmedML/DrivAerML volume
-      // flow fields live here, `ahmedml.py:774-883`) — header-only reads,
-      // same as the points table
-      val conf = Dsv2.confMap(spark)
-      val limit = Dsv2.opt(options, "inferLimit", "0").toInt
-      val sample = if (limit > 0) files.take(limit) else files
-      val arrays = Dsv2.parMap(sample) { f =>
-        val raw = new Dsv2.HadoopRawData(f, conf)
-        try VtkXmlSource.listVtuArraysRaw(raw)._4 finally raw.close()
-      }.flatten.distinct.sorted
-      StructType(Seq(
-        StructField("mesh_id", StringType, nullable = false),
-        StructField("cell_id", LongType, nullable = false),
-        StructField("vertices", ArrayType(LongType), nullable = false)) ++
-        arrays.map(a => StructField(a, DoubleType, nullable = true)))
-    } else {
-      val conf = Dsv2.confMap(spark)
-      // Union of array names across files (heterogeneous runs still get one
-      // schema; files lacking an array emit null for it). Each file costs
-      // only its XML HEADER bytes — listVtuArraysRaw never touches the
-      // appended payload, so planning stays O(header) per file even against
-      // multi-GB meshes. `inferLimit` (default 0 = all) samples the first N
-      // files when the corpus is homogeneous; `.schema(...)` skips
-      // inference entirely (supportsExternalMetadata).
-      val limit = Dsv2.opt(options, "inferLimit", "0").toInt
-      val sample = if (limit > 0) files.take(limit) else files
-      val arrays = Dsv2.parMap(sample) { f =>
-        val raw = new Dsv2.HadoopRawData(f, conf)
-        try VtkXmlSource.listVtuArraysRaw(raw)._3 finally raw.close()
-      }.flatten.distinct.sorted
-      StructType(
-        Seq(StructField("mesh_id", StringType, nullable = false),
-          StructField("point_id", LongType, nullable = false),
-          StructField("x", DoubleType, nullable = false),
-          StructField("y", DoubleType, nullable = false),
-          StructField("z", DoubleType, nullable = false)) ++
-          arrays.map(a => StructField(a, DoubleType, nullable = true)))
-    }
-  }
-
+class VtuDataSource extends FileUnitSource("*.vt[up]") {
+  override protected def label = "vtu"
+  override protected def keyColumn = "mesh_id"
+  override protected def tables = Seq("points", "cells")
   override def supportsExternalMetadata(): Boolean = true
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new VtuTable(schema, properties.asScala.toMap)
-}
+  /** (row-id column, geometry columns) of the points or cells table. */
+  private def layout(cells: Boolean): (String, Seq[StructField]) =
+    if (cells) ("cell_id", Seq(vertices)) else ("point_id", Seq(dbl("x"), dbl("y"), dbl("z")))
 
-private class VtuTable(schema0: StructType, props: Map[String, String])
-    extends Table with SupportsRead {
-  override def name(): String = s"graft_vtu(${props.getOrElse("path", "")})"
-  override def schema(): StructType = schema0
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new VtuScanBuilder(schema0, options)
-}
-
-private class VtuScanBuilder(full: StructType, options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = full
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = {
-    val spark = SparkSession.active
-    val files = Dsv2.listFilesWithSize(spark, options.get("path"),
-      Dsv2.opt(options, "globFilter", "*.vt[up]"))
-    val cells = Dsv2.opt(options, "table", "points") == "cells"
-    val frac =
-      if (cells) 0.2 // connectivity is a small slice of a typical mesh file
-      else Dsv2.payloadFraction(full, required, Set("mesh_id", "point_id"))
-    new VtuScan(files.map(_._1), (files.map(_._2).sum * frac).toLong,
-      Dsv2.confMap(spark), required, cells)
+  override protected def schemaOf(o: CaseInsensitiveStringMap): StructType = {
+    val cells = table(o) == "cells"
+    val (id, geom) = layout(cells)
+    StructType(Seq(str("mesh_id"), lng(id)) ++ geom ++ arrays(headerArrays(o) { raw =>
+      val (_, _, pointArrays, cellArrays) = VtkXmlSource.listVtuArraysRaw(raw)
+      if (cells) cellArrays else pointArrays
+    }))
   }
-}
 
-private case class FilePartition(path: String) extends InputPartition
+  override protected def payloadFraction(o: CaseInsensitiveStringMap, full: StructType,
+                                         required: StructType): Double =
+    if (table(o) == "cells") 0.2 // connectivity is a small slice of a typical mesh file
+    else Dsv2.payloadFraction(full, required, Set("mesh_id", "point_id"))
 
-private class VtuScan(files: Seq[String], estBytes: Long,
-                      conf: Map[String, String],
-                      required: StructType, cellsTable: Boolean)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def estimateStatistics(): Statistics = Dsv2.statsOf(estBytes)
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map(f => FilePartition(f): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new VtuReaderFactory(conf, required.fieldNames, cellsTable)
-  override def description(): String =
-    s"graft_vtu ReadSchema: ${required.map(f => f.name).mkString(",")}"
-}
-
-private class VtuReaderFactory(conf: Map[String, String], cols: Array[String],
-                               cellsTable: Boolean)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val path = p.asInstanceOf[FilePartition].path
-    // ranged handle: the XML header reads in a bounded window and each kept
-    // DataArray's appended payload is one pread at its offset -- pruning
-    // saves I/O BYTES, not just decode CPU, and files past 2 GiB scan fine
-    val raw = new Dsv2.HadoopRawData(path, conf)
-    val meshId = UTF8String.fromString(path)
-    if (cellsTable) {
-      val meta = Seq("mesh_id", "cell_id", "vertices")
-      val arrays = cols.filterNot(meta.contains)
-      val needCells = cols.contains("vertices")
-      val (cells, decoded, n) =
+  override protected def reader(o: CaseInsensitiveStringMap, required: StructType,
+                                pushed: Array[Filter]): ScanUnit => Iterator[InternalRow] = {
+    val c = conf
+    val cells = table(o) == "cells"
+    val (id, geomFields) = layout(cells)
+    val geom = geomFields.map(_.name).toSet
+    val cols = required.fieldNames
+    val arrayCols = cols.filterNot(n => n == keyColumn || n == id || geom(n))
+    val needGeom = cols.exists(geom)
+    u => {
+      val path = u.files.head
+      // ranged handle: the XML header reads in a bounded window and each
+      // kept DataArray's appended payload is one pread at its offset --
+      // pruning saves I/O BYTES, not just decode CPU, and files past 2 GiB
+      // scan fine
+      val raw = new Dsv2.HadoopRawData(path, c)
+      val (piece, data, n) =
         try {
-          val piece = VtkXmlSource.parseVtuRaw(raw, include = arrays.toSet,
-            decodePoints = false, decodeCells = needCells,
-            decodePointData = arrays.nonEmpty)
+          val p = VtkXmlSource.parseVtuRaw(raw, include = arrayCols.toSet,
+            decodePoints = needGeom && !cells, decodeCells = needGeom && cells,
+            decodePointData = arrayCols.nonEmpty)
+          val data = if (cells) p.cellData else p.pointData
           val rows: Long =
-            if (needCells) piece.cells.length.toLong
-            else piece.cellData.values.headOption.map(_.length.toLong).getOrElse {
-              val listed = VtkXmlSource.listVtuArraysRaw(raw)._2
-              require(listed >= 0,
-                s"$path: no decoded array and no NumberOfCells attribute to count rows")
+            if (needGeom) (if (cells) p.cells.length else p.points.length).toLong
+            else data.values.headOption.map(_.length.toLong).getOrElse {
+              val (nPoints, nCells, _, _) = VtkXmlSource.listVtuArraysRaw(raw)
+              val listed = if (cells) nCells else nPoints
+              require(listed >= 0, s"$path: no decoded array and no " +
+                s"NumberOf${if (cells) "Cells" else "Points"} attribute to count rows")
               listed
             }
-          (piece.cells, piece.cellData, rows)
+          (p, data, rows)
         } finally raw.close()
-      new PartitionReader[InternalRow] {
-        private var i = -1L
-        override def next(): Boolean = { i += 1; i < n }
-        override def get(): InternalRow = {
-          val values: Array[Any] = cols.map {
-            case "mesh_id" => meshId
-            case "cell_id" => i
-            case "vertices" => new GenericArrayData(cells(i.toInt))
-            case a =>
-              decoded.get(a) match {
-                case Some(vs) if i < vs.length => vs(i.toInt)
-                case _ => null
-              }
-          }
-          InternalRow.fromSeq(values.toIndexedSeq)
+      indexedRows(u, cols, n) {
+        case `id` => i => i
+        case "vertices" if cells => i => new GenericArrayData(piece.cells(i.toInt))
+        case a if geom(a) => val k = a(0) - 'x'; i => piece.points(i.toInt)(k)
+        case a => data.get(a) match {
+          case Some(vs) => i => if (i < vs.length) vs(i.toInt) else null
+          case None => _ => null
         }
-        override def close(): Unit = ()
-      }
-    } else {
-      val meta = Seq("mesh_id", "point_id", "x", "y", "z")
-      val arrays = cols.filterNot(meta.contains)
-      val needPoints = cols.exists(c => c == "x" || c == "y" || c == "z")
-      val (piece, n) =
-        try {
-          val pc = VtkXmlSource.parseVtuRaw(raw, include = arrays.toSet,
-            decodePoints = needPoints, decodeCells = false,
-            decodePointData = arrays.nonEmpty)
-          val rows: Long =
-            if (needPoints) pc.points.length.toLong
-            else pc.pointData.values.headOption.map(_.length.toLong).getOrElse {
-              val listed = VtkXmlSource.listVtuArraysRaw(raw)._1
-              require(listed >= 0,
-                s"$path: no decoded array and no NumberOfPoints attribute to count rows")
-              listed
-            }
-          (pc, rows)
-        } finally raw.close()
-      val decoded: Map[String, Array[Double]] = piece.pointData
-      new PartitionReader[InternalRow] {
-        private var i = -1L
-        override def next(): Boolean = { i += 1; i < n }
-        override def get(): InternalRow = {
-          val values: Array[Any] = cols.map {
-            case "mesh_id" => meshId
-            case "point_id" => i
-            case "x" => piece.points(i.toInt)(0)
-            case "y" => piece.points(i.toInt)(1)
-            case "z" => piece.points(i.toInt)(2)
-            case a =>
-              decoded.get(a) match {
-                case Some(vs) if i < vs.length => vs(i.toInt)
-                case _ => null
-              }
-          }
-          InternalRow.fromSeq(values.toIndexedSeq)
-        }
-        override def close(): Unit = ()
       }
     }
   }
@@ -405,122 +468,60 @@ private class VtuReaderFactory(conf: Map[String, String], cols: Array[String],
   * (`era5.py:103-382`). Options: `globFilter` (default `*.nc`),
   * `decodeCf`, `decodeTimes` (as in [[NetCdfSource.read]]).
   */
-class NetCdfDataSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+class NetCdfDataSource extends FileUnitSource("*.nc") {
+  override protected def label = "netcdf"
+  override protected def keyColumn = "file"
+  override protected def schemaOf(o: CaseInsensitiveStringMap): StructType =
     NetCdfDataSource.Schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new NetCdfTable(properties.asScala.toMap)
+
+  override protected def pushes(f: Filter): Boolean = f match {
+    case EqualTo("variable", _: String) | IsNotNull("variable") => true
+    case In("variable", vs) => vs.forall(_.isInstanceOf[String])
+    case _ => false
+  }
+
+  /** The EXACT variable-name set the pushed predicates allow; None = all. */
+  private def allowed(pushed: Array[Filter]): Option[Set[String]] = {
+    val sets = pushed.collect {
+      case EqualTo("variable", v: String) => Set(v)
+      case In("variable", vs) => vs.collect { case s: String => s }.toSet
+    }
+    if (sets.isEmpty) None else Some(sets.reduce(_ intersect _))
+  }
+
+  override protected def describe(o: CaseInsensitiveStringMap, required: StructType,
+                                  pushed: Array[Filter]): String =
+    s"graft_netcdf vars=${allowed(pushed).map(_.toSeq.sorted.mkString("[", ",", "]")).getOrElse("*")}"
+
+  override protected def reader(o: CaseInsensitiveStringMap, required: StructType,
+                                pushed: Array[Filter]): ScanUnit => Iterator[InternalRow] = {
+    val c = conf
+    val vars = allowed(pushed)
+    val decodeCf = Dsv2.opt(o, "decodeCf", "false").toBoolean
+    val decodeTimes = Dsv2.opt(o, "decodeTimes", "false").toBoolean
+    val cols = required.fieldNames
+    u => {
+      // ranged handle: a pushed variable predicate prunes I/O — a file with
+      // no wanted variable costs only its header bytes, and wanted
+      // variables read as slices at their CDF begin offsets
+      val raw = new Dsv2.HadoopRawData(u.files.head, c)
+      val wanted: String => Boolean = name => vars.forall(_.contains(name))
+      // toArray: the decoder returns a List, and positional List access in
+      // the row loop is O(n²) — quadratic at real grid sizes
+      val rows =
+        try NetCdfSource.valuesRanged(raw, wanted, decodeCf, decodeTimes).toArray
+        finally raw.close()
+      indexedRows(u, cols, rows.length) {
+        case "variable" => i => UTF8String.fromString(rows(i.toInt)._1)
+        case "pos" => i => rows(i.toInt)._2
+        case "value" => i => rows(i.toInt)._3
+      }
+    }
+  }
 }
 
 object NetCdfDataSource {
-  val Schema: StructType = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("variable", StringType, nullable = false),
-    StructField("pos", LongType, nullable = false),
-    StructField("value", DoubleType, nullable = false)))
-}
-
-private class NetCdfTable(props: Map[String, String]) extends Table with SupportsRead {
-  override def name(): String = s"graft_netcdf(${props.getOrElse("path", "")})"
-  override def schema(): StructType = NetCdfDataSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new NetCdfScanBuilder(options)
-}
-
-private class NetCdfScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
-  private var required: StructType = NetCdfDataSource.Schema
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, residual) = filters.partition {
-      case EqualTo("variable", _: String) => true
-      case In("variable", vs) => vs.forall(_.isInstanceOf[String])
-      case IsNotNull("variable") => true
-      case _ => false
-    }
-    pushed = supported
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def build(): Scan = {
-    val spark = SparkSession.active
-    val files = Dsv2.listFilesWithSize(spark, options.get("path"),
-      Dsv2.opt(options, "globFilter", "*.nc"))
-    // the EXACT variable-name sets the pushed predicates allow; None = all
-    val allowed: Option[Set[String]] = {
-      val sets = pushed.collect {
-        case EqualTo("variable", v: String) => Set(v)
-        case In("variable", vs) => vs.collect { case s: String => s }.toSet
-      }
-      if (sets.isEmpty) None else Some(sets.reduce(_ intersect _))
-    }
-    // one .nc per variable is the sink layout; a variable filter therefore
-    // bounds bytes by the matching files (here: coarse whole-listing sum —
-    // the planner only needs the broadcastability order of magnitude)
-    new NetCdfScan(files.map(_._1), files.map(_._2).sum,
-      Dsv2.confMap(spark), required, allowed,
-      Dsv2.opt(options, "decodeCf", "false").toBoolean,
-      Dsv2.opt(options, "decodeTimes", "false").toBoolean)
-  }
-}
-
-private class NetCdfScan(files: Seq[String], estBytes: Long,
-                         conf: Map[String, String],
-                         required: StructType, allowed: Option[Set[String]],
-                         decodeCf: Boolean, decodeTimes: Boolean)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def estimateStatistics(): Statistics = Dsv2.statsOf(estBytes)
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map(f => FilePartition(f): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new NetCdfReaderFactory(conf, required.fieldNames, allowed, decodeCf, decodeTimes)
-  override def description(): String =
-    s"graft_netcdf vars=${allowed.map(_.toSeq.sorted.mkString("[", ",", "]")).getOrElse("*")}"
-}
-
-private class NetCdfReaderFactory(conf: Map[String, String], cols: Array[String],
-                                  allowed: Option[Set[String]],
-                                  decodeCf: Boolean, decodeTimes: Boolean)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val path = p.asInstanceOf[FilePartition].path
-    // ranged handle: a pushed variable predicate prunes I/O — a file with
-    // no wanted variable costs only its header bytes, and wanted variables
-    // read as slices at their CDF begin offsets
-    val raw = new Dsv2.HadoopRawData(path, conf)
-    val wanted: String => Boolean = name => allowed.forall(_.contains(name))
-    // toArray: the decoder returns a List, and positional List access in
-    // the row loop is O(n²) — quadratic at real grid sizes
-    val rows =
-      try NetCdfSource.valuesRanged(raw, wanted, decodeCf, decodeTimes).toArray
-      finally raw.close()
-    val file = UTF8String.fromString(path)
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = {
-        val (v, pos, x) = rows(i)
-        val values: Array[Any] = cols.map {
-          case "file" => file
-          case "variable" => UTF8String.fromString(v)
-          case "pos" => pos
-          case "value" => x
-        }
-        InternalRow.fromSeq(values.toIndexedSeq)
-      }
-      override def close(): Unit = ()
-    }
-  }
+  val Schema: StructType = StructType(Seq(str("file"), str("variable"), lng("pos"), dbl("value")))
 }
 
 // ------------------------------------------------------------------ LMDB
@@ -531,97 +532,48 @@ private class NetCdfReaderFactory(conf: Map[String, String], cols: Array[String]
   * decode of every value — the scan walks only the key B-tree, the LMDB
   * analogue of not reading data arrays (`_key_filter.py:45`).
   */
-class AseLmdbDataSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+class AseLmdbDataSource extends FileUnitSource("*.aselmdb") {
+  override protected def label = "aselmdb"
+  override protected def keyColumn = "db_id"
+  override protected def schemaOf(o: CaseInsensitiveStringMap): StructType =
     AseLmdbDataSource.Schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new AseLmdbTable(properties.asScala.toMap)
+  // json pruned away → only the key B-tree is walked (a small slice)
+  override protected def payloadFraction(o: CaseInsensitiveStringMap, full: StructType,
+                                         required: StructType): Double =
+    if (required.fieldNames.contains("json")) 1.0 else 0.1
+
+  override protected def reader(o: CaseInsensitiveStringMap, required: StructType,
+                                pushed: Array[Filter]): ScanUnit => Iterator[InternalRow] = {
+    val c = conf
+    val cols = required.fieldNames
+    val needJson = cols.contains("json")
+    u => {
+      // ranged page walk: with `json` pruned away the B-tree skeleton is
+      // all that's read — F_BIGDATA overflow pages (where ASE's large
+      // compressed rows live) never move off disk
+      val raw = new Dsv2.HadoopRawData(u.files.head, c)
+      val entries =
+        try AseLmdbSource.parseAllRanged(raw, needValues = needJson).iterator
+          .collect { case AseLmdbSource.LmdbEntry("", k, v) => (k, v) }
+          .filter { case (k, _) => !AseLmdbSource.ReservedKeys.contains(k) }
+          .flatMap { case (k, v) => k.toLongOption.map(id => (id, v)) }
+          .toArray
+        finally raw.close()
+      indexedRows(u, cols, entries.length) {
+        case "row_id" => i => entries(i.toInt)._1
+        case "json" => i =>
+          // the expensive part — only paid when the query keeps `json`
+          val v = entries(i.toInt)._2
+          val payload =
+            if (v.length >= 2 && (v(0) & 0xff) == 0x78) AseLmdbSource.inflate(v) else v
+          UTF8String.fromString(new String(payload, "UTF-8"))
+      }
+    }
+  }
 }
 
 object AseLmdbDataSource {
-  val Schema: StructType = StructType(Seq(
-    StructField("db_id", StringType, nullable = false),
-    StructField("row_id", LongType, nullable = false),
-    StructField("json", StringType, nullable = false)))
-}
-
-private class AseLmdbTable(props: Map[String, String]) extends Table with SupportsRead {
-  override def name(): String = s"graft_aselmdb(${props.getOrElse("path", "")})"
-  override def schema(): StructType = AseLmdbDataSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new AseLmdbScanBuilder(options)
-}
-
-private class AseLmdbScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = AseLmdbDataSource.Schema
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = {
-    val spark = SparkSession.active
-    val files = Dsv2.listFilesWithSize(spark, options.get("path"),
-      Dsv2.opt(options, "globFilter", "*.aselmdb"))
-    // json pruned away → only the key B-tree is walked (a small slice)
-    val frac = if (required.fieldNames.contains("json")) 1.0 else 0.1
-    new AseLmdbScan(files.map(_._1), (files.map(_._2).sum * frac).toLong,
-      Dsv2.confMap(spark), required)
-  }
-}
-
-private class AseLmdbScan(files: Seq[String], estBytes: Long,
-                          conf: Map[String, String],
-                          required: StructType)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def estimateStatistics(): Statistics = Dsv2.statsOf(estBytes)
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map(f => FilePartition(f): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new AseLmdbReaderFactory(conf, required.fieldNames)
-  override def description(): String =
-    s"graft_aselmdb ReadSchema: ${required.map(_.name).mkString(",")}"
-}
-
-private class AseLmdbReaderFactory(conf: Map[String, String], cols: Array[String])
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val path = p.asInstanceOf[FilePartition].path
-    val needJson = cols.contains("json")
-    // ranged page walk: with `json` pruned away the B-tree skeleton is
-    // all that's read — F_BIGDATA overflow pages (where ASE's large
-    // compressed rows live) never move off disk
-    val raw = new Dsv2.HadoopRawData(path, conf)
-    val entries =
-      try AseLmdbSource.parseAllRanged(raw, needValues = needJson).iterator
-        .collect { case AseLmdbSource.LmdbEntry("", k, v) => (k, v) }
-        .filter { case (k, _) => !AseLmdbSource.ReservedKeys.contains(k) }
-        .flatMap { case (k, v) => k.toLongOption.map(id => (id, v)) }
-        .toArray
-      finally raw.close()
-    val dbId = UTF8String.fromString(path)
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < entries.length }
-      override def get(): InternalRow = {
-        val (id, v) = entries(i)
-        val values: Array[Any] = cols.map {
-          case "db_id" => dbId
-          case "row_id" => id
-          case "json" =>
-            // the expensive part — only paid when the query keeps `json`
-            val payload =
-              if (v.length >= 2 && (v(0) & 0xff) == 0x78) AseLmdbSource.inflate(v)
-              else v
-            UTF8String.fromString(new String(payload, "UTF-8"))
-        }
-        InternalRow.fromSeq(values.toIndexedSeq)
-      }
-      override def close(): Unit = ()
-    }
-  }
+  val Schema: StructType = StructType(Seq(str("db_id"), lng("row_id"), str("json")))
 }
 
 // ------------------------------------------------------------------ VTI
@@ -640,137 +592,66 @@ private class AseLmdbReaderFactory(conf: Map[String, String], cols: Array[String
   * coordinates are COMPUTED from the header's extent/origin/spacing (zero
   * payload), and schema inference reads only XML headers.
   */
-class VtiDataSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val spark = SparkSession.active
-    val files = Dsv2.listFiles(spark, Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException("VtiDataSource requires option 'path'")),
-      Dsv2.opt(options, "globFilter", "*.vti"))
-    require(files.nonEmpty, s"VtiDataSource: no files under ${options.get("path")}")
-    val conf = Dsv2.confMap(spark)
-    val cellsTable = Dsv2.opt(options, "table", "points") == "cells"
-    val limit = Dsv2.opt(options, "inferLimit", "0").toInt
-    val sample = if (limit > 0) files.take(limit) else files
-    val arrays = Dsv2.parMap(sample) { f =>
-      val raw = new Dsv2.HadoopRawData(f, conf)
-      try {
-        val (_, _, _, pd, cd) = VtkXmlSource.listVtiMeta(raw)
-        if (cellsTable) cd else pd
-      } finally raw.close()
-    }.flatten.distinct.sorted
-    StructType(
-      Seq(StructField("grid_id", StringType, nullable = false),
-        StructField("i", IntegerType, nullable = false),
-        StructField("j", IntegerType, nullable = false),
-        StructField("k", IntegerType, nullable = false),
-        StructField("x", DoubleType, nullable = false),
-        StructField("y", DoubleType, nullable = false),
-        StructField("z", DoubleType, nullable = false)) ++
-        arrays.map(a => StructField(a, DoubleType, nullable = true)))
-  }
-
+class VtiDataSource extends FileUnitSource("*.vti") {
+  override protected def label = "vti"
+  override protected def keyColumn = "grid_id"
+  override protected def tables = Seq("points", "cells")
   override def supportsExternalMetadata(): Boolean = true
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new VtiTable(schema, properties.asScala.toMap)
-}
+  private val lattice = Seq("grid_id", "i", "j", "k", "x", "y", "z")
 
-private class VtiTable(schema0: StructType, props: Map[String, String])
-    extends Table with SupportsRead {
-  override def name(): String = s"graft_vti(${props.getOrElse("path", "")})"
-  override def schema(): StructType = schema0
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new VtiScanBuilder(schema0, options)
-}
-
-private class VtiScanBuilder(full: StructType, options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = full
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = {
-    val spark = SparkSession.active
-    val files = Dsv2.listFilesWithSize(spark, options.get("path"),
-      Dsv2.opt(options, "globFilter", "*.vti"))
-    // i/j/k/x/y/z are COMPUTED from the header (zero payload)
-    val frac = Dsv2.payloadFraction(full, required,
-      Set("grid_id", "i", "j", "k", "x", "y", "z"))
-    new VtiScan(files.map(_._1), (files.map(_._2).sum * frac).toLong,
-      Dsv2.confMap(spark), required,
-      Dsv2.opt(options, "table", "points") == "cells")
+  override protected def schemaOf(o: CaseInsensitiveStringMap): StructType = {
+    val cells = table(o) == "cells"
+    StructType(Seq(str("grid_id"), int("i"), int("j"), int("k"), dbl("x"), dbl("y"), dbl("z")) ++
+      arrays(headerArrays(o) { raw =>
+        val (_, _, _, pd, cd) = VtkXmlSource.listVtiMeta(raw)
+        if (cells) cd else pd
+      }))
   }
-}
 
-private class VtiScan(files: Seq[String], estBytes: Long,
-                      conf: Map[String, String],
-                      required: StructType, cellsTable: Boolean)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def estimateStatistics(): Statistics = Dsv2.statsOf(estBytes)
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map(f => FilePartition(f): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new VtiReaderFactory(conf, required.fieldNames, cellsTable)
-  override def description(): String =
-    s"graft_vti ReadSchema: ${required.map(_.name).mkString(",")}"
-}
+  // i/j/k/x/y/z are COMPUTED from the header (zero payload)
+  override protected def payloadFraction(o: CaseInsensitiveStringMap, full: StructType,
+                                         required: StructType): Double =
+    Dsv2.payloadFraction(full, required, lattice.toSet)
 
-private class VtiReaderFactory(conf: Map[String, String], cols: Array[String],
-                               cellsTable: Boolean)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val path = p.asInstanceOf[FilePartition].path
-    val raw = new Dsv2.HadoopRawData(path, conf)
-    val meta = Seq("grid_id", "i", "j", "k", "x", "y", "z")
-    val arrays = cols.filterNot(meta.contains)
-    val (extent, origin, spacing, decoded) =
-      try {
-        val (ext, org0, spc, _, _) = VtkXmlSource.listVtiMeta(raw)
-        val d: Map[String, Array[Double]] =
-          if (arrays.isEmpty) Map.empty
-          else {
-            val g = VtkXmlSource.parseVtiRaw(raw, include = arrays.toSet)
-            if (cellsTable) g.cellData else g.pointData
-          }
-        (ext, org0, spc, d)
-      } finally raw.close()
-    val nx = extent(1) - extent(0) + 1
-    val ny = extent(3) - extent(2) + 1
-    val nz = extent(5) - extent(4) + 1
-    // cell lattice dims (a flat axis keeps one layer, as in readVti)
-    val off = if (cellsTable) 1 else 0
-    val dx = math.max(nx - off, 1); val dy = math.max(ny - off, 1)
-    val dz = math.max(nz - off, 1)
-    val shift = if (cellsTable) 0.5 else 0.0
-    val n = dx.toLong * dy * dz
-    val gridId = UTF8String.fromString(path)
-    new PartitionReader[InternalRow] {
-      private var idx = -1L
-      override def next(): Boolean = { idx += 1; idx < n }
-      override def get(): InternalRow = {
-        val i = (idx % dx).toInt
-        val j = ((idx / dx) % dy).toInt
-        val k = (idx / (dx.toLong * dy)).toInt
-        val values: Array[Any] = cols.map {
-          case "grid_id" => gridId
-          case "i" => extent(0) + i
-          case "j" => extent(2) + j
-          case "k" => extent(4) + k
-          case "x" => origin(0) + (extent(0) + i + shift) * spacing(0)
-          case "y" => origin(1) + (extent(2) + j + shift) * spacing(1)
-          case "z" => origin(2) + (extent(4) + k + shift) * spacing(2)
-          case a =>
-            decoded.get(a) match {
-              case Some(vs) if idx < vs.length => vs(idx.toInt)
-              case _ => null
+  override protected def reader(o: CaseInsensitiveStringMap, required: StructType,
+                                pushed: Array[Filter]): ScanUnit => Iterator[InternalRow] = {
+    val c = conf
+    val cells = table(o) == "cells"
+    val cols = required.fieldNames
+    val arrayCols = cols.filterNot(lattice.contains)
+    u => {
+      val raw = new Dsv2.HadoopRawData(u.files.head, c)
+      val (extent, origin, spacing, decoded) =
+        try {
+          val (ext, org0, spc, _, _) = VtkXmlSource.listVtiMeta(raw)
+          val data: Map[String, Array[Double]] =
+            if (arrayCols.isEmpty) Map.empty
+            else {
+              val g = VtkXmlSource.parseVtiRaw(raw, include = arrayCols.toSet)
+              if (cells) g.cellData else g.pointData
             }
-        }
-        InternalRow.fromSeq(values.toIndexedSeq)
+          (ext, org0, spc, data)
+        } finally raw.close()
+      // cell lattice dims (a flat axis keeps one layer, as in readVti)
+      val off = if (cells) 1 else 0
+      val dims = Array.tabulate(3)(a => math.max(extent(2 * a + 1) - extent(2 * a) + 1 - off, 1))
+      val shift = if (cells) 0.5 else 0.0
+      // lattice index of row idx along axis a (x fastest)
+      def at(idx: Long, a: Int): Int = a match {
+        case 0 => (idx % dims(0)).toInt
+        case 1 => ((idx / dims(0)) % dims(1)).toInt
+        case _ => (idx / (dims(0).toLong * dims(1))).toInt
       }
-      override def close(): Unit = ()
+      indexedRows(u, cols, dims(0).toLong * dims(1) * dims(2)) {
+        case a @ ("i" | "j" | "k") => val ax = a(0) - 'i'; idx => extent(2 * ax) + at(idx, ax)
+        case a @ ("x" | "y" | "z") => val ax = a(0) - 'x'
+          idx => origin(ax) + (extent(2 * ax) + at(idx, ax) + shift) * spacing(ax)
+        case a => decoded.get(a) match {
+          case Some(vs) => idx => if (idx < vs.length) vs(idx.toInt) else null
+          case None => _ => null
+        }
+      }
     }
   }
 }
@@ -780,7 +661,8 @@ private class VtiReaderFactory(conf: Map[String, String], cols: Array[String],
 /** `spark.read.format("graft.sources.D3PlotDataSource").option("path", g)`
   * over LS-DYNA d3plot families (root + `d3plot01…` continuations grouped
   * per directory, numerically ordered — the same family rule as
-  * `D3PlotSource.read`). `option("table", ...)` picks the long model:
+  * `D3PlotSource.read`); one unit per family, keyed by its root path.
+  * `option("table", ...)` picks the long model:
   *
   *  - `points` (default): `mesh_id, point_id, x, y, z`
   *  - `cells`:  `mesh_id, cell_id, vertices, part_id, cell_type`
@@ -793,32 +675,44 @@ private class VtiReaderFactory(conf: Map[String, String], cols: Array[String],
   * documented per-block strides (`d3plot.py:334` analogue). Schemas are
   * static, so planning reads zero file bytes.
   */
-class D3PlotDataSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    D3PlotDataSource.schemaOf(Dsv2.opt(options, "table", "points"))
+class D3PlotDataSource extends FileUnitSource("*d3plot*") {
+  override protected def label = "d3plot"
+  override protected def keyColumn = "mesh_id"
+  override protected def tables = D3PlotDataSource.Schemas.map(_._1)
   override def supportsExternalMetadata(): Boolean = true
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new D3PlotTable(schema, properties.asScala.toMap)
+  override protected def schemaOf(o: CaseInsensitiveStringMap): StructType =
+    D3PlotDataSource.Schemas.toMap.apply(table(o))
+
+  override protected def units(o: CaseInsensitiveStringMap): Seq[ScanUnit] = {
+    val sizes = listed(o).toMap
+    D3PlotDataSource.families(sizes.keys.toSeq).map { case (root, conts) =>
+      val files = root +: conts
+      ScanUnit(root, files, files.map(sizes).sum)
+    }
+  }
+  override protected def describe(o: CaseInsensitiveStringMap, required: StructType,
+                                  pushed: Array[Filter]): String =
+    s"graft_d3plot table=${table(o)} ReadSchema: ${required.map(_.name).mkString(",")}"
+
+  override protected def reader(o: CaseInsensitiveStringMap, required: StructType,
+                                pushed: Array[Filter]): ScanUnit => Iterator[InternalRow] = {
+    val c = conf
+    val t = table(o)
+    val cols = required.fieldNames
+    u => D3PlotDataSource.rows(u, t, cols, c).map(new GenericInternalRow(_))
+  }
 }
 
 object D3PlotDataSource {
-  private def s(n: String) = StructField(n, StringType, nullable = false)
-  private def l(n: String) = StructField(n, LongType, nullable = false)
-  private def i(n: String) = StructField(n, IntegerType, nullable = false)
-  private def d(n: String) = StructField(n, DoubleType, nullable = false)
-  def schemaOf(table: String): StructType = table match {
-    case "points" => StructType(Seq(s("mesh_id"), l("point_id"), d("x"), d("y"), d("z")))
-    case "cells" => StructType(Seq(s("mesh_id"), l("cell_id"),
-      StructField("vertices", ArrayType(LongType), nullable = false),
-      l("part_id"), i("cell_type")))
-    case "states" => StructType(Seq(s("mesh_id"), i("t"), d("time"),
-      l("point_id"), d("dx"), d("dy"), d("dz")))
-    case "shell" => StructType(Seq(s("mesh_id"), i("t"), l("cell_id"), i("layer"),
-      d("sx"), d("sy"), d("sz"), d("txy"), d("tyz"), d("tzx"), d("epsp")))
-    case other => throw new IllegalArgumentException(
-      s"unknown d3plot table '$other' (points|cells|states|shell)")
-  }
+  /** The `table` option's values with their schemas, the default first. */
+  val Schemas: Seq[(String, StructType)] = Seq(
+    "points" -> StructType(Seq(str("mesh_id"), lng("point_id"), dbl("x"), dbl("y"), dbl("z"))),
+    "cells" -> StructType(Seq(str("mesh_id"), lng("cell_id"), vertices,
+      lng("part_id"), int("cell_type"))),
+    "states" -> StructType(Seq(str("mesh_id"), int("t"), dbl("time"),
+      lng("point_id"), dbl("dx"), dbl("dy"), dbl("dz"))),
+    "shell" -> StructType(Seq(str("mesh_id"), int("t"), lng("cell_id"), int("layer"),
+      dbl("sx"), dbl("sy"), dbl("sz"), dbl("txy"), dbl("tyz"), dbl("tzx"), dbl("epsp"))))
 
   /** Driver-side family grouping: per directory, `d3plotNN` continuations
     * (numeric order) belong to the bare `d3plot` root; any other matching
@@ -836,55 +730,11 @@ object D3PlotDataSource {
         familyRoot.map(r => (r, sortedConts)) ++ soloRoots.sorted.map(r => (r, Nil))
     }
   }
-}
 
-private class D3PlotTable(schema0: StructType, props: Map[String, String])
-    extends Table with SupportsRead {
-  override def name(): String = s"graft_d3plot(${props.getOrElse("path", "")})"
-  override def schema(): StructType = schema0
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new D3PlotScanBuilder(schema0, options)
-}
-
-private class D3PlotScanBuilder(full: StructType, options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = full
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = {
-    val spark = SparkSession.active
-    val files = Dsv2.listFilesWithSize(spark, options.get("path"),
-      Dsv2.opt(options, "globFilter", "*d3plot*"))
-    new D3PlotScan(D3PlotDataSource.families(files.map(_._1)),
-      files.map(_._2).sum, Dsv2.confMap(spark),
-      required, Dsv2.opt(options, "table", "points"))
-  }
-}
-
-private case class D3FamilyPartition(root: String, conts: Seq[String])
-    extends InputPartition
-
-private class D3PlotScan(fams: Seq[(String, Seq[String])], estBytes: Long,
-                         conf: Map[String, String],
-                         required: StructType, table: String)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def estimateStatistics(): Statistics = Dsv2.statsOf(estBytes)
-  override def planInputPartitions(): Array[InputPartition] =
-    fams.map { case (r, c) => D3FamilyPartition(r, c): InputPartition }.toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new D3PlotReaderFactory(conf, required.fieldNames, table)
-  override def description(): String =
-    s"graft_d3plot table=$table ReadSchema: ${required.map(_.name).mkString(",")}"
-}
-
-private class D3PlotReaderFactory(conf: Map[String, String], cols: Array[String],
-                                  table: String)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val fam = p.asInstanceOf[D3FamilyPartition]
+  /** One family's rows of `table`, as values of `cols` in order. */
+  private def rows(fam: ScanUnit, table: String, cols: Array[String],
+                   conf: Map[String, String]): Iterator[Array[Any]] = {
+    val root = fam.files.head
     val sel = table match {
       case "points" | "cells" =>
         D3PlotSource.D3Select(geometry = true, nodeVec = false, shell = false, sph = false)
@@ -893,13 +743,12 @@ private class D3PlotReaderFactory(conf: Map[String, String], cols: Array[String]
       case "shell" =>
         D3PlotSource.D3Select(geometry = false, nodeVec = false, shell = true, sph = false)
     }
-    val geometryOnly = table == "points" || table == "cells"
     val f =
-      if (geometryOnly) {
+      if (sel.geometry) {
         // the geometry sits entirely before the first state: pread just
         // that prefix of the root and skip every continuation file
         // (continuations are state payload only)
-        val raw = new Dsv2.HadoopRawData(fam.root, conf)
+        val raw = new Dsv2.HadoopRawData(root, conf)
         val rootBytes =
           try {
             val head = raw.slice(0L, math.min(raw.size, 64L << 10))
@@ -908,10 +757,10 @@ private class D3PlotReaderFactory(conf: Map[String, String], cols: Array[String]
           } finally raw.close()
         D3PlotSource.parseFamily(rootBytes, Nil, sel)
       } else
-        D3PlotSource.parseFamily(Dsv2.readBytes(fam.root, conf),
-          fam.conts.map(Dsv2.readBytes(_, conf)), sel)
-    val meshId = UTF8String.fromString(fam.root)
-    val rows: Iterator[Array[Any]] = table match {
+        D3PlotSource.parseFamily(Dsv2.readBytes(root, conf),
+          fam.files.tail.map(Dsv2.readBytes(_, conf)), sel)
+    val meshId = fam.datum
+    table match {
       case "points" =>
         f.coords.iterator.zipWithIndex.map { case (c, n) =>
           cols.map[Any] {
@@ -973,15 +822,6 @@ private class D3PlotReaderFactory(conf: Map[String, String], cols: Array[String]
             }
           }
         }
-    }
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean = {
-        if (rows.hasNext) { cur = InternalRow.fromSeq(rows.next().toIndexedSeq); true }
-        else false
-      }
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
     }
   }
 }

@@ -1,13 +1,6 @@
 package graft.sources
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -15,12 +8,14 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 synthetic mesh source (reference
   * `domains/mesh/sources/random.py:39`: seeded tet meshes, `seed + index` per
-  * item) — the custom-reader showcase of SURVEY §4(a):
+  * item) — the custom-reader showcase of SURVEY §4(a), bound to the
+  * [[UnitSource]] skeleton:
   *
-  *  - one InputPartition per mesh index (the curator per-index contract:
-  *    independently executable, retryable units);
-  *  - `SupportsPushDownRequiredColumns`: pruned columns are never generated
-  *    (the reader-level `key_filters` pruning of `vtk.py:120-123`);
+  *  - one unit, so one InputPartition, per mesh index (the curator
+  *    per-index contract: independently executable, retryable units), keyed
+  *    by `mesh_id` — a `mesh_id = i` slice plans and generates index i only;
+  *  - pruned columns are never generated (the reader-level `key_filters`
+  *    pruning of `vtk.py:120-123`);
   *  - deterministic per-(seed, index, row) values, so any subset re-reads
   *    identically — the property checkpoint/resume depends on.
   *
@@ -31,12 +26,50 @@ import org.apache.spark.unsafe.types.UTF8String
   *   .load()  // (mesh_id, point_id, x, y, z, field_a, field_b)
   * }}}
   */
-class RandomMeshSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+class RandomMeshSource extends UnitSource {
+  override protected def label = "random_mesh"
+  override protected def keyColumn = "mesh_id"
+
+  private def meshes(o: CaseInsensitiveStringMap) = o.getLong("n_meshes", 4)
+  private def points(o: CaseInsensitiveStringMap) = o.getLong("points_per_mesh", 100)
+
+  override protected def check(o: CaseInsensitiveStringMap): Unit =
+    Seq("n_meshes" -> meshes(o), "points_per_mesh" -> points(o)).foreach { case (k, v) =>
+      if (v < 0) throw new IllegalArgumentException(s"$sourceName: $k must be >= 0, got $v")
+    }
+
+  override protected def schemaOf(o: CaseInsensitiveStringMap): StructType =
     RandomMeshSource.Schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new RandomMeshTable(properties.asScala.toMap)
+
+  // synthetic: rows and width are exactly known, so report both — a small
+  // generated mesh side can then broadcast like any sized relation
+  override protected def units(o: CaseInsensitiveStringMap): Seq[ScanUnit] = {
+    val n = points(o)
+    (0L until meshes(o)).map(i => ScanUnit(i, Nil, n * 8L * RandomMeshSource.Schema.size, n))
+  }
+  override protected def payloadFraction(o: CaseInsensitiveStringMap, full: StructType,
+                                         required: StructType): Double =
+    math.max(required.size, 1).toDouble / full.size
+
+  override protected def reader(o: CaseInsensitiveStringMap, required: StructType,
+                                pushed: Array[Filter]): ScanUnit => Iterator[InternalRow] = {
+    val n = points(o)
+    val seed = o.getLong("seed", 42)
+    val cols = required.fieldNames
+    u => {
+      val mesh = RandomMeshSource.mix(seed * 1000003L + u.key.asInstanceOf[Long])
+      // only the REQUIRED columns are generated — pruning reaches the source
+      indexedRows(u, cols, n) {
+        case "point_id" => i => i
+        case "x" => i => RandomMeshSource.unit(mesh + i * 7L)
+        case "y" => i => RandomMeshSource.unit(mesh + i * 7L + 1)
+        case "z" => i => RandomMeshSource.unit(mesh + i * 7L + 2)
+        case "field_a" => i => RandomMeshSource.unit(mesh + i * 7L + 3) * 100.0
+        case "field_b" => i => UTF8String.fromString(
+          if (RandomMeshSource.mix(mesh + i * 7L + 4) % 2 == 0) "solid" else "fluid")
+      }
+    }
+  }
 }
 
 object RandomMeshSource {
@@ -57,73 +90,4 @@ object RandomMeshSource {
     z ^ (z >>> 31)
   }
   def unit(z: Long): Double = (mix(z) >>> 11).toDouble / (1L << 53).toDouble
-}
-
-private class RandomMeshTable(props: Map[String, String]) extends Table with SupportsRead {
-  override def name(): String = "graft_random_mesh"
-  override def schema(): StructType = RandomMeshSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new RandomMeshScanBuilder(
-      options.getLong("n_meshes", 4),
-      options.getLong("points_per_mesh", 100),
-      options.getLong("seed", 42))
-}
-
-private class RandomMeshScanBuilder(nMeshes: Long, pointsPerMesh: Long, seed: Long)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = RandomMeshSource.Schema
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = new RandomMeshScan(nMeshes, pointsPerMesh, seed, required)
-}
-
-private class RandomMeshScan(nMeshes: Long, pointsPerMesh: Long, seed: Long,
-                             required: StructType)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  // synthetic: rows and width are exactly known, so report both — a small
-  // generated mesh side can then broadcast like any sized relation
-  override def estimateStatistics(): Statistics = new Statistics {
-    override def numRows: java.util.OptionalLong =
-      java.util.OptionalLong.of(nMeshes * pointsPerMesh)
-    override def sizeInBytes: java.util.OptionalLong =
-      java.util.OptionalLong.of(math.max(1L,
-        nMeshes * pointsPerMesh * 8L * math.max(required.size, 1)))
-  }
-  // one partition per mesh index — the per-index isolation contract
-  override def planInputPartitions(): Array[InputPartition] =
-    (0L until nMeshes).map(i => MeshPartition(i): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new RandomMeshReaderFactory(pointsPerMesh, seed, required.fieldNames)
-}
-
-private case class MeshPartition(meshId: Long) extends InputPartition
-
-private class RandomMeshReaderFactory(pointsPerMesh: Long, seed: Long,
-                                      cols: Array[String])
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val meshId = p.asInstanceOf[MeshPartition].meshId
-    new PartitionReader[InternalRow] {
-      private var i = -1L
-      override def next(): Boolean = { i += 1; i < pointsPerMesh }
-      override def get(): InternalRow = {
-        val base = RandomMeshSource.mix(seed * 1000003L + meshId) + i * 7L
-        // only the REQUIRED columns are generated — pruning reaches the source
-        val values: Array[Any] = cols.map {
-          case "mesh_id" => meshId
-          case "point_id" => i
-          case "x" => RandomMeshSource.unit(base)
-          case "y" => RandomMeshSource.unit(base + 1)
-          case "z" => RandomMeshSource.unit(base + 2)
-          case "field_a" => RandomMeshSource.unit(base + 3) * 100.0
-          case "field_b" => UTF8String.fromString(if (RandomMeshSource.mix(base + 4) % 2 == 0) "solid" else "fluid")
-        }
-        InternalRow.fromSeq(values.toIndexedSeq)
-      }
-      override def close(): Unit = ()
-    }
-  }
 }

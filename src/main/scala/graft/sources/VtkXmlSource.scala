@@ -910,7 +910,7 @@ object VtkXmlSource {
               keyFilterRules: Seq[KeyFilters.KeyFilterRule] = Nil): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
     // comma-separated multi-path form (used by readVtm's resolved refs)
-    val files = Dsv2.listFiles(spark, pathGlob, globFilter)
+    val files = Dsv2.listFilesWithSize(spark, pathGlob, globFilter).map(_._1)
     val conf = Dsv2.confMap(spark)
     val rules = keyFilterRules // serialized into the task closure
     val paths = spark.createDataset(files)
