@@ -18,27 +18,47 @@ import org.apache.spark.sql.SparkSession
 object AdaptiveWidth {
   val RowsPerPartitionKey = "spark.graft.loop.rowsPerPartition"
 
-  def forRows(s: SparkSession, rows: Long): Int = {
-    val perPart = s.conf.getOption(RowsPerPartitionKey)
-      .map(_.toLong).getOrElse(2000000L)
+  /** The shared width rule (also [[graft.streaming.StatePartitions]]'s):
+    * ceil(amount / per-partition amount), the per-partition amount read
+    * from conf `perPartKey` (else `perPartDefault`), floored at min(4,
+    * session width) and capped by the session's
+    * `spark.sql.shuffle.partitions`.
+    */
+  def width(s: SparkSession, amount: Long, perPartKey: String,
+            perPartDefault: Long): Int = {
+    val perPart = s.conf.getOption(perPartKey).map(_.toLong)
+      .getOrElse(perPartDefault)
     val cur = math.max(1, s.conf.get("spark.sql.shuffle.partitions").toInt)
-    val bySize = math.ceil(rows.toDouble / perPart.toDouble).toInt
+    val bySize = math.ceil(amount.toDouble / perPart.toDouble).toInt
     math.min(cur, math.max(math.min(4, cur), bySize))
   }
 
-  /** Run `f` with `spark.sql.shuffle.partitions` scaled to the loop
-    * state's row count, restoring the session value after.
+  /** Run `f` with `spark.sql.shuffle.partitions` set to `n`, restoring the
+    * session value after — batch stages planned outside the scope keep
+    * the session's parallelism.
     *
-    * NOT thread-safe across loops: mutates the session-scoped conf
-    * (set/restore) — concurrent scopes on one SparkSession can clobber or
-    * leak each other's width. All in-repo callers run single-threaded on
-    * the session (see StatePartitions.scaled for the same contract);
-    * concurrent callers need per-thread `SparkSession.newSession`.
+    * NOT thread-safe: the override mutates the SESSION-scoped conf
+    * (set/restore), so two scopes racing on one SparkSession can clobber
+    * or leak each other's width. Every in-repo caller runs its scopes
+    * single-threaded on the session (the bench and Verify drivers are
+    * sequential; the only in-repo multi-threaded job submission — the
+    * AhmedML fixture writes — never enters a scope). A caller that needs
+    * concurrent scopes must give each thread its own
+    * `SparkSession.newSession` (session confs are per-session there).
     */
-  def scaled[A](s: SparkSession, rows: Long)(f: => A): A = {
+  def withWidth[A](s: SparkSession, n: Int)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val old = s.conf.get(key)
-    s.conf.set(key, forRows(s, rows).toString)
+    s.conf.set(key, n.toString)
     try f finally s.conf.set(key, old)
   }
+
+  def forRows(s: SparkSession, rows: Long): Int =
+    width(s, rows, RowsPerPartitionKey, 2000000L)
+
+  /** Run `f` with the shuffle width scaled to the loop state's row count
+    * (see [[withWidth]] for the session-conf contract).
+    */
+  def scaled[A](s: SparkSession, rows: Long)(f: => A): A =
+    withWidth(s, forRows(s, rows))(f)
 }

@@ -1,95 +1,88 @@
 package graft.core
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types._
 
-/** Driver-side parquet writer for the BOUNDED materialization dumps (the
-  * oracle-read quantizer/constant tables: centroids, codebooks, planes,
-  * twiddles, BPE merges). The rows are already ON THE DRIVER — a
-  * `Seq.toDF.coalesce(1).write` pays a full Spark job (plan + codegen +
-  * scheduling round-trip, ~0.2-0.4 s) per dump to move driver memory to a
-  * driver-local file. This writes the same columns in the same order with
-  * the same parquet types straight through parquet-mr (the
-  * `Ledger.appendLocal` discipline), so the DuckDB oracle's
-  * per-directory parquet-glob reads are unchanged.
+/** The one driver-side parquet writer: rows the driver already holds are
+  * written straight through parquet-mr, with no Spark job (a
+  * `Seq.toDF.coalesce(1).write` pays plan + codegen + a scheduling
+  * round-trip, ~0.2-0.4 s, to move driver memory into one file). Two kinds
+  * of caller use it: the [[Ledger]]'s per-commit appends and compaction
+  * merges, and the bounded materialization dumps the oracle reads
+  * (centroids, codebooks, planes, twiddles, BPE merges).
   *
-  * Overwrite semantics match `mode("overwrite")`: the directory is
-  * replaced. Supported cell types: Int, Long, Double, String,
-  * Seq[Double] (written as the standard 3-level LIST of double, the same
-  * physical shape Spark writes for array<double>).
+  * The parquet schema comes from Spark's own converter, so a file written
+  * here carries the same physical types Spark writes for the same
+  * `StructType` (`spark_schema` root, `(STRING)` binaries, the standard
+  * 3-level `list`/`element` LIST for arrays). Supported cell types: Int,
+  * Long, Double, Float, String and a `Seq` of any of them for an
+  * `ArrayType`; `None` or `null` leaves an optional field absent.
   */
 object DriverParquet {
 
-  sealed trait ColT
-  case object IntT extends ColT
-  case object LongT extends ColT
-  case object DoubleT extends ColT
-  case object StringT extends ColT
-  case object DoubleArrT extends ColT
-  case object FloatArrT extends ColT
-
-  private def msgType(cols: Seq[(String, ColT)]): org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val b = Types.buildMessage()
-    cols.foreach { case (n, t) =>
-      t match {
-        case IntT => b.addField(Types.optional(INT32).named(n))
-        case LongT => b.addField(Types.optional(INT64).named(n))
-        case DoubleT => b.addField(Types.optional(DOUBLE).named(n))
-        case StringT => b.addField(Types.optional(BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(n))
-        case DoubleArrT => b.addField(
-          Types.optionalList().optionalElement(DOUBLE).named(n))
-        case FloatArrT => b.addField(
-          Types.optionalList().optionalElement(FLOAT).named(n))
-      }
-    }
-    b.named("spark_schema")
-  }
-
-  def write(spark: SparkSession, dir: String,
-            cols: Seq[(String, ColT)], rows: Seq[Seq[Any]]): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroup
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    import org.apache.parquet.hadoop.util.HadoopOutputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    val schema = msgType(cols)
-    val target = new org.apache.hadoop.fs.Path(dir)
-    val fs = target.getFileSystem(conf)
-    // stage beside the target, then swap — a reader never sees a half
-    // directory (same stage-then-install shape as the ledger appends)
-    val staging = new org.apache.hadoop.fs.Path(
-      dir + "_staging_" + java.util.UUID.randomUUID())
-    fs.mkdirs(staging)
-    val file = new org.apache.hadoop.fs.Path(staging, "part-00000.parquet")
-    val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(file, conf))
+  /** A SNAPPY parquet-mr writer of `schema` to one file. */
+  private[core] def open(conf: Configuration, file: Path,
+                         schema: MessageType): ParquetWriter[Group] =
+    ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
       .withConf(conf).withType(schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
+
+  /** Write `rows` (cells in `schema`'s column order) to the single file
+    * `file`.
+    */
+  private[core] def writeFile(conf: Configuration, file: Path,
+                              schema: StructType,
+                              rows: Seq[Seq[Any]]): Unit = {
+    val msg = new org.apache.spark.sql.execution.datasources.parquet
+      .SparkToParquetSchemaConverter().convert(schema)
+    val writer = open(conf, file, msg)
     try rows.foreach { r =>
-      val g = new SimpleGroup(schema)
-      cols.zip(r).foreach { case ((n, t), v) =>
-        t match {
-          case IntT => g.add(n, v.asInstanceOf[Int])
-          case LongT => g.add(n, v.asInstanceOf[Long])
-          case DoubleT => g.add(n, v.asInstanceOf[Double])
-          case StringT => g.add(n, v.asInstanceOf[String])
-          case DoubleArrT =>
-            val lg = g.addGroup(n)
-            v.asInstanceOf[Seq[Double]].foreach { d =>
-              lg.addGroup("list").add("element", d)
-            }
-          case FloatArrT =>
-            val lg = g.addGroup(n)
-            v.asInstanceOf[Seq[Float]].foreach { d =>
-              lg.addGroup("list").add("element", d)
-            }
-        }
+      val g = new org.apache.parquet.example.data.simple.SimpleGroup(msg)
+      schema.fields.zip(r).foreach { case (f, v) =>
+        put(g, f.name, f.dataType, v)
       }
       writer.write(g)
     } finally writer.close()
+  }
+
+  private def put(g: Group, n: String, dt: DataType, v: Any): Unit = v match {
+    case None | null =>
+    case Some(x) => put(g, n, dt, x)
+    case _ => dt match {
+      case LongType => g.add(n, v.asInstanceOf[Long])
+      case IntegerType => g.add(n, v.asInstanceOf[Int])
+      case DoubleType => g.add(n, v.asInstanceOf[Double])
+      case FloatType => g.add(n, v.asInstanceOf[Float])
+      case StringType => g.add(n, v.asInstanceOf[String])
+      case ArrayType(et, _) =>
+        val lg = g.addGroup(n)
+        v.asInstanceOf[Seq[Any]].foreach(put(lg.addGroup("list"), "element", et, _))
+      case other => throw new IllegalArgumentException(
+        s"driver parquet: unsupported type $other for column $n")
+    }
+  }
+
+  /** Replace the directory `dir` with one file of `rows`, as
+    * `mode("overwrite")` would: the file is staged beside the target, then
+    * swapped in, so a reader never sees a half directory.
+    */
+  def write(spark: SparkSession, dir: String, schema: StructType,
+            rows: Seq[Seq[Any]]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val target = new Path(dir)
+    val fs = target.getFileSystem(conf)
+    val staging = new Path(dir + "_staging_" + java.util.UUID.randomUUID())
+    fs.mkdirs(staging)
+    writeFile(conf, new Path(staging, "part-00000.parquet"), schema, rows)
     fs.delete(target, true)
     require(fs.rename(staging, target),
       s"driver parquet install into $dir failed")

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Checkpoint + metrics ledger as partitioned Parquet (replaces the
@@ -17,19 +17,20 @@ import org.apache.spark.sql.functions._
 final class Ledger(dir: String) {
   /** The ledger root, for callers reading a table directly. */
   def path: String = dir
-  private def idxPath = s"$dir/index_results"
-  private def runsPath = s"$dir/runs"
 
-  /** Canonical column contract of every ledger table — the static schema
-    * each read requests. The tables gained columns across rounds (runs:
-    * run_dir/total_indices, logs: worker_id, stage_metrics: idx) and mixed
-    * old+new ledgers are an explicitly supported back-compat case. The
-    * first fix (r13) read with `mergeSchema`, which is CORRECT but pays a
-    * footer parse per file — O(committed indices) before compaction runs,
-    * exactly the probe cost the compaction work exists to bound (measured:
-    * the most ledger-read-heavy fixture regressed 2.9 → 3.9 s). A ledger
-    * table's schema isn't data-dependent — it is a versioned contract this
-    * map states once — so reads request it explicitly: O(1) in file count,
+  /** Canonical column contract of every ledger table, and the only place
+    * the columns are stated: the driver-side appends write it, every read
+    * requests it, a table not yet written reads as an empty frame of it,
+    * and the reset rewrites pad legacy files up to it. The tables gained
+    * columns across rounds (runs: run_dir/total_indices, logs: worker_id,
+    * stage_metrics: idx) and mixed old+new ledgers are an explicitly
+    * supported back-compat case. The first fix (r13) read with
+    * `mergeSchema`, which is CORRECT but pays a footer parse per file —
+    * O(committed indices) before compaction runs, exactly the probe cost
+    * the compaction work exists to bound (measured: the most
+    * ledger-read-heavy fixture regressed 2.9 → 3.9 s). A ledger table's
+    * schema isn't data-dependent — it is a versioned contract this map
+    * states once — so reads request it explicitly: O(1) in file count,
     * old files surface missing columns as null (the same semantics merge
     * gave), and unknown extra columns are ignored on the hot path.
     * `compact()` keeps a mergeSchema read (it is a maintenance pass that
@@ -118,20 +119,20 @@ final class Ledger(dir: String) {
     if (kept.size == parquet) None else Some(kept)
   }
 
-  /** EVERY hot-path ledger-table read goes through here with the table's
-    * canonical schema (see [[tableSchemas]]); an unknown table name (none
-    * exist today) falls back to the mergeSchema read rather than guessing.
-    * `forRun` additionally prunes other runs' tail files by name (see
-    * [[runPrefix]]): a shared multi-run ledger's resume probe then costs
+  /** EVERY ledger-table read goes through here with the table's canonical
+    * schema (see [[tableSchemas]]): all runs' rows, or with `forRun` that
+    * run's rows only, its other runs' tail files pruned by name (see
+    * [[runPrefix]]) — a shared multi-run ledger's resume probe then costs
     * O(this run's uncompacted commits + compacted bins), not O(every run's
-    * history).
+    * history). A table not yet written (or a run with no file left after
+    * pruning) reads as an empty local relation of the same schema, so no
+    * reader special-cases a fresh ledger and no empty job is planned.
     */
-  private def readTable(spark: SparkSession, p: String): DataFrame =
-    readTable(spark, p, None)
-
-  private def readTable(spark: SparkSession, p: String,
-                        forRun: Option[String]): DataFrame = {
-    val table = p.substring(p.lastIndexOf('/') + 1)
+  private[core] def readTable(spark: SparkSession, table: String,
+                              forRun: Option[String] = None): DataFrame = {
+    val schema = tableSchemas(table)
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$table")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // ignoreMissingFiles, scoped to ledger reads: a reader whose plan
     // listed a tail file that compact() then re-binned and DELETED would
     // otherwise crash at execution (seen under the naf soak; the window
@@ -142,34 +143,41 @@ final class Ledger(dir: String) {
     // duplicate-sensitive view resolves at read. The maintenance paths
     // that must NOT under-read (compact/reset rewrites) read their own
     // explicit snapshots under the maintenance lock, not this path.
-    tableSchemas.get(table) match {
-      case Some(schema) =>
-        val pruned = forRun.flatMap { runId =>
-          val hp = new org.apache.hadoop.fs.Path(p)
-          prunedFiles(hp.getFileSystem(
-            spark.sparkContext.hadoopConfiguration), hp, runId)
+    val rd = spark.read.schema(schema).option("ignoreMissingFiles", "true")
+    val files =
+      if (!fs.exists(p)) Some(Nil) else forRun.flatMap(prunedFiles(fs, p, _))
+    val df = files match {
+      case Some(Nil) =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      case Some(kept) =>
+        // explicit roots are STATTED at planning — a root compact() just
+        // deleted throws there, where ignoreMissingFiles does not apply;
+        // fall back to the directory read (one LIST, sees the
+        // post-compaction state)
+        try rd.parquet(kept: _*)
+        catch {
+          case _: org.apache.spark.sql.AnalysisException |
+              _: java.io.FileNotFoundException => rd.parquet(p.toString)
         }
-        val rd = spark.read.schema(schema)
-          .option("ignoreMissingFiles", "true")
-        pruned match {
-          case Some(files) if files.isEmpty =>
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          case Some(files) =>
-            // explicit roots are STATTED at planning — a root compact()
-            // just deleted throws there, where ignoreMissingFiles does
-            // not apply; fall back to the directory read (one LIST, sees
-            // the post-compaction state)
-            try rd.parquet(files: _*)
-            catch {
-              case _: org.apache.spark.sql.AnalysisException |
-                  _: java.io.FileNotFoundException => rd.parquet(p)
-            }
-          case None => rd.parquet(p)
-        }
-      case None => spark.read.option("mergeSchema", "true")
-        .option("ignoreMissingFiles", "true").parquet(p)
+      case None => rd.parquet(p.toString)
     }
+    forRun.fold(df)(runId => df.filter(col("run_id") === runId))
+  }
+
+  /** Move every staged `*.parquet` under `staging` into `dest` as
+    * `<prefix><uuid>.parquet`, then drop the staging dir.
+    */
+  private def install(fs: org.apache.hadoop.fs.FileSystem,
+                      staging: org.apache.hadoop.fs.Path,
+                      dest: org.apache.hadoop.fs.Path, prefix: String): Unit = {
+    fs.listStatus(staging).iterator
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .foreach { f =>
+        require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(dest,
+          s"$prefix${java.util.UUID.randomUUID()}.parquet")),
+          s"ledger install into $dest failed")
+      }
+    fs.delete(staging, true)
   }
 
   /** MULTI-WRITER-safe append: stage the rows under a UUID dir, then move
@@ -201,93 +209,36 @@ final class Ledger(dir: String) {
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dest = new org.apache.hadoop.fs.Path(s"$dir/$table")
     fs.mkdirs(dest)
-    fs.listStatus(staging).iterator
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .foreach { f =>
-        require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(dest,
-          s"${runPrefix(runId)}${java.util.UUID.randomUUID()}.parquet")),
-          s"ledger append: rename into $dest failed")
-      }
-    fs.delete(staging, true)
-  }
-
-  // Column types the driver-side fast path writes (all ledger tables are
-  // flat rows of these three shapes; Option/null → optional field absent).
-  private sealed trait ColT
-  private case object LongT extends ColT
-  private case object IntT extends ColT
-  private case object StringT extends ColT
-
-  private def msgType(cols: Seq[(String, ColT)]): org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val b = Types.buildMessage()
-    cols.foreach { case (n, t) =>
-      t match {
-        case LongT => b.addField(Types.optional(INT64).named(n))
-        case IntT => b.addField(Types.optional(INT32).named(n))
-        case StringT => b.addField(Types.optional(BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(n))
-      }
-    }
-    b.named("spark_schema")
+    install(fs, staging, dest, runPrefix(runId))
   }
 
   /** DRIVER-SIDE commit fast path: ledger rows the driver already holds
     * (one index's metrics, a heartbeat, a handful of artifact paths) are
-    * written straight through parquet-mr — no Spark job — then installed
-    * by the same stage-then-rename protocol as [[appendRows]]. This is
-    * what keeps per-index commit latency in the reference's SQLite class
-    * (~ms) instead of paying a full job-scheduling round-trip (~80 ms)
-    * per table per index; at 10⁴ indices × 3 tables that difference is
-    * the run. Goes through the Hadoop FileSystem API, so it works against
-    * HDFS/S3 exactly like the Spark path. The distributed variant of
+    * written under the table's [[tableSchemas]] entry by
+    * [[DriverParquet.writeFile]] — no Spark job — then installed by the
+    * same stage-then-rename protocol as [[appendRows]]. This is what keeps
+    * per-index commit latency in the reference's SQLite class (~ms)
+    * instead of paying a full job-scheduling round-trip (~80 ms) per table
+    * per index; at 10⁴ indices × 3 tables that difference is the run. Goes
+    * through the Hadoop FileSystem API, so it works against HDFS/S3
+    * exactly like the Spark path. The distributed variant of
     * recordCompleted keeps the Spark path — its index set never lands on
     * the driver.
     */
   private def appendLocal(spark: SparkSession, table: String, runId: String,
-                          cols: Seq[(String, ColT)],
                           rows: Seq[Seq[Any]]): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroup
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    import org.apache.parquet.hadoop.util.HadoopOutputFile
     val conf = spark.sparkContext.hadoopConfiguration
-    val schema = msgType(cols)
     val staging = new org.apache.hadoop.fs.Path(
       s"$dir/_staging/${java.util.UUID.randomUUID()}.parquet")
     val fs = staging.getFileSystem(conf)
     fs.mkdirs(staging.getParent)
-    val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(staging, conf))
-      .withConf(conf).withType(schema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    try rows.foreach { r =>
-      val g = new SimpleGroup(schema)
-      cols.zip(r).foreach { case ((n, t), v0) =>
-        val v = v0 match {
-          case Some(x) => x
-          case None | null => null
-          case x => x
-        }
-        if (v != null) t match {
-          case LongT => g.add(n, v.asInstanceOf[Long])
-          case IntT => g.add(n, v.asInstanceOf[Int])
-          case StringT => g.add(n, v.asInstanceOf[String])
-        }
-      }
-      writer.write(g)
-    } finally writer.close()
+    DriverParquet.writeFile(conf, staging, tableSchemas(table), rows)
     val dest = new org.apache.hadoop.fs.Path(s"$dir/$table")
     fs.mkdirs(dest)
     require(fs.rename(staging, new org.apache.hadoop.fs.Path(dest,
       s"${runPrefix(runId)}${java.util.UUID.randomUUID()}.parquet")),
       s"ledger append: rename into $dest failed")
   }
-
-  def recordRunStart(spark: SparkSession, runId: String, configJson: String): Unit =
-    recordRunStart(spark, runId, configJson, None, None)
 
   /** `run_dir` and `total_indices` mirror the reference's pipeline_runs
     * columns (`pipeline_store.py:540-548`): the artifact root relative
@@ -297,34 +248,22 @@ final class Ledger(dir: String) {
     * `dashboard/data.py:178-189`).
     */
   def recordRunStart(spark: SparkSession, runId: String, configJson: String,
-                     runDir: Option[String],
-                     totalIndices: Option[Long]): Unit = {
+                     runDir: Option[String] = None,
+                     totalIndices: Option[Long] = None): Unit =
     appendLocal(spark, "runs", runId,
-      Seq("run_id" -> StringT, "config_json" -> StringT,
-        "started_at" -> LongT, "run_dir" -> StringT,
-        "total_indices" -> LongT),
-      Seq(Seq(runId, configJson, System.currentTimeMillis(),
-        runDir, totalIndices)))
-  }
+      Seq(Seq(runId, configJson, System.currentTimeMillis(), runDir,
+        totalIndices)))
 
   /** The run's recorded metadata row, latest-start wins (reruns of the
     * same config append a fresh row; the newest carries current values).
     * Returns (run_dir, total_indices) — either may be absent.
     */
   def runMeta(spark: SparkSession, runId: String): (Option[String], Option[Long]) = {
-    if (!pathExists(spark, runsPath)) return (None, None)
-    val df = readTable(spark, runsPath, Some(runId)).filter(col("run_id") === runId)
-    val withCols = Seq("run_dir", "total_indices").foldLeft(df) { (d, c) =>
-      if (d.columns.contains(c)) d else d.withColumn(c, lit(null))
-    }
-    val rows = withCols
-      .agg(max(struct(col("started_at"),
-        col("run_dir").cast("string").as("run_dir"),
-        col("total_indices").cast("long").as("total_indices"))).as("m"))
-      .select(col("m.run_dir"), col("m.total_indices")).collect()
-    rows.headOption.map { r =>
-      (Option(r.getString(0)), if (r.isNullAt(1)) None else Some(r.getLong(1)))
-    }.getOrElse((None, None))
+    val r = readTable(spark, "runs", Some(runId))
+      .agg(max(struct(col("started_at"), col("run_dir"),
+        col("total_indices"))).as("m"))
+      .select(col("m.run_dir"), col("m.total_indices")).first()
+    (Option(r.getString(0)), if (r.isNullAt(1)) None else Some(r.getLong(1)))
   }
 
   /** `is_completed` parity (`pipeline_store.py:1035-1058`): the cached
@@ -355,15 +294,6 @@ final class Ledger(dir: String) {
     if (p.startsWith("/") || p.contains("://")) p
     else runMeta(spark, runId)._1.map(d => s"$d/$p").getOrElse(p)
 
-  def recordCompleted(spark: SparkSession, runId: String, indices: Seq[Long],
-                      wallNs: Long, nRows: Long): Unit =
-    recordCompleted(spark, runId, indices, wallNs, nRows, 0L)
-
-  def recordCompleted(spark: SparkSession, runId: String, indices: Seq[Long],
-                      wallNs: Long, nRows: Long,
-                      peakMemoryBytes: Long): Unit =
-    recordCompleted(spark, runId, indices, wallNs, nRows, peakMemoryBytes, None)
-
   /** `gpuMemoryBytes` mirrors the reference's nullable `gpu_memory_bytes`
     * (`core/pipeline_store.py:550-563`): always None on CPU runs — Spark
     * here schedules no GPUs — but the column exists so schema-compatible
@@ -374,22 +304,12 @@ final class Ledger(dir: String) {
     * identifies the submitting session.
     */
   def recordCompleted(spark: SparkSession, runId: String, indices: Seq[Long],
-                      wallNs: Long, nRows: Long, peakMemoryBytes: Long,
-                      gpuMemoryBytes: Option[Long]): Unit =
-    recordCompleted(spark, runId, indices, wallNs, nRows, peakMemoryBytes,
-      gpuMemoryBytes, "driver")
-
-  def recordCompleted(spark: SparkSession, runId: String, indices: Seq[Long],
-                      wallNs: Long, nRows: Long, peakMemoryBytes: Long,
-                      gpuMemoryBytes: Option[Long],
-                      workerId: String): Unit = {
+                      wallNs: Long, nRows: Long, peakMemoryBytes: Long = 0L,
+                      gpuMemoryBytes: Option[Long] = None,
+                      workerId: String = "driver"): Unit = {
     if (indices.isEmpty) return
     val now = System.currentTimeMillis()
     appendLocal(spark, "index_results", runId,
-      Seq("idx" -> LongT, "run_id" -> StringT, "status" -> StringT,
-        "wall_ns" -> LongT, "n_rows" -> LongT,
-        "peak_memory_bytes" -> LongT, "gpu_memory_bytes" -> LongT,
-        "worker_id" -> StringT, "finished_at" -> LongT),
       indices.map(i => Seq(i, runId, "completed", wallNs, nRows,
         peakMemoryBytes, gpuMemoryBytes, workerId, now)))
   }
@@ -400,10 +320,8 @@ final class Ledger(dir: String) {
     * the recorded count, piggybacked on the write via `observe`.
     */
   def recordCompleted(spark: SparkSession, runId: String, indices: DataFrame,
-                      wallNs: Long, nRows: Long,
-                      peakMemoryBytes: Long = 0L,
-                      gpuMemoryBytes: Option[Long] = None,
-                      workerId: String = "driver"): Long = {
+                      wallNs: Long, nRows: Long, peakMemoryBytes: Long,
+                      gpuMemoryBytes: Option[Long], workerId: String): Long = {
     val obs = org.apache.spark.sql.Observation()
     appendRows(indices.select(col("idx").cast("long"))
       .withColumn("run_id", lit(runId))
@@ -443,10 +361,6 @@ final class Ledger(dir: String) {
                             stages: Seq[(Long, StageListener#StageRec)]): Unit = {
     if (stages.isEmpty) return
     appendLocal(spark, "stage_metrics", runId,
-      Seq("run_id" -> StringT, "idx" -> LongT, "stage_order" -> IntT,
-        "stage_id" -> IntT, "stage_name" -> StringT, "wall_ns" -> LongT,
-        "executor_run_ns" -> LongT, "n_tasks" -> IntT,
-        "peak_memory_bytes" -> LongT),
       stages.groupBy(_._1).toSeq.flatMap { case (idx, recs) =>
         recs.map(_._2).sortBy(_.stageId).zipWithIndex.map { case (s, ord) =>
           Seq[Any](runId, idx, ord, s.stageId, s.name, s.wallNs,
@@ -455,18 +369,9 @@ final class Ledger(dir: String) {
       })
   }
 
-  /** Stage rows for a run — an empty frame WITH the table schema when none
-    * were recorded, so filters/selects on the no-rows path still resolve.
-    */
-  def stageMetrics(spark: SparkSession, runId: String): DataFrame = {
-    val p = s"$dir/stage_metrics"
-    if (!pathExists(spark, p)) {
-      import spark.implicits._
-      Seq.empty[(String, Long, Int, Int, String, Long, Long, Int, Long)]
-        .toDF("run_id", "idx", "stage_order", "stage_id", "stage_name",
-          "wall_ns", "executor_run_ns", "n_tasks", "peak_memory_bytes")
-    } else readTable(spark, p, Some(runId)).filter(col("run_id") === runId)
-  }
+  /** Stage rows for a run. */
+  def stageMetrics(spark: SparkSession, runId: String): DataFrame =
+    readTable(spark, "stage_metrics", Some(runId))
 
   // ------------------------------------------------ provenance tables
   // The reference's `output_files(path, idx, run_id, seq)` and
@@ -484,8 +389,6 @@ final class Ledger(dir: String) {
                         paths: Seq[String]): Unit = {
     if (paths.isEmpty) return
     appendLocal(spark, "output_files", runId,
-      Seq("path" -> StringT, "idx" -> LongT, "run_id" -> StringT,
-        "seq" -> IntT),
       paths.zipWithIndex.map { case (p, seq) => Seq[Any](p, idx, runId, seq) })
   }
 
@@ -497,12 +400,10 @@ final class Ledger(dir: String) {
                             paths: Seq[String]): Unit = {
     if (paths.isEmpty) return
     appendLocal(spark, "filter_artifacts", runId,
-      Seq("path" -> StringT, "idx" -> LongT, "run_id" -> StringT,
-        "filter_name" -> StringT, "filter_order" -> IntT),
       paths.map(p => Seq[Any](p, idx, runId, filterName, filterOrder)))
   }
 
-  /** Raw output_files rows for a run (schema-typed empty frame if none).
+  /** Raw output_files rows for a run.
     *
     * The (path, run_id) PRIMARY KEY resolves at read, first-writer-wins:
     * the Runner appends only paths absent from its recorded-set snapshot,
@@ -513,27 +414,16 @@ final class Ledger(dir: String) {
     * surfacing duplicates. Single-worker ledgers are unaffected (the
     * groupBy is a no-op on already-unique paths).
     */
-  def outputFiles(spark: SparkSession, runId: String): DataFrame = {
-    val p = s"$dir/output_files"
-    if (!pathExists(spark, p)) {
-      import spark.implicits._
-      Seq.empty[(String, Long, String, Int)].toDF("path", "idx", "run_id", "seq")
-    } else readTable(spark, p, Some(runId)).filter(col("run_id") === runId)
+  def outputFiles(spark: SparkSession, runId: String): DataFrame =
+    readTable(spark, "output_files", Some(runId))
       .groupBy(col("path"))
       .agg(min(struct(col("idx"), col("seq"))).as("_m"))
       .select(col("path"), col("_m.idx").as("idx"),
         lit(runId).as("run_id"), col("_m.seq").as("seq"))
-  }
 
-  /** Raw filter_artifacts rows for a run (schema-typed empty if none). */
-  def filterArtifacts(spark: SparkSession, runId: String): DataFrame = {
-    val p = s"$dir/filter_artifacts"
-    if (!pathExists(spark, p)) {
-      import spark.implicits._
-      Seq.empty[(String, Long, String, String, Int)]
-        .toDF("path", "idx", "run_id", "filter_name", "filter_order")
-    } else readTable(spark, p, Some(runId)).filter(col("run_id") === runId)
-  }
+  /** Raw filter_artifacts rows for a run. */
+  def filterArtifacts(spark: SparkSession, runId: String): DataFrame =
+    readTable(spark, "filter_artifacts", Some(runId))
 
   /** `output_paths` view (`dashboard/data.py:247-262` over
     * `output_paths_for_index`): the files one index produced, seq-ordered.
@@ -570,129 +460,68 @@ final class Ledger(dir: String) {
     * matching the reference's NULL between indices); `completedCount` is
     * this worker's own running commit counter (the VIEW recomputes
     * authoritative counts from index_results, like the reference's
-    * `workers_df` does, so this column is informational).
+    * `workers_df` does, so this column is informational). Monitors compare
+    * heartbeat ages against their own clock, so writers that already read
+    * the clock (the Runner's throttled stage-grain refresh) pass `tsMs`
+    * through, and tests/oracles can pin deterministic liveness states.
     */
   def recordWorkerHeartbeat(spark: SparkSession, runId: String,
                             workerId: String, pid: Long, hostname: String,
                             invocationId: String,
                             currentIndex: Option[Long],
-                            completedCount: Long): Unit =
-    recordWorkerHeartbeat(spark, runId, workerId, pid, hostname,
-      invocationId, currentIndex, completedCount, System.currentTimeMillis())
-
-  /** Explicit-timestamp variant — monitors compare heartbeat ages against
-    * their own clock, so writers that already read the clock (the Runner's
-    * throttled stage-grain refresh) pass it through, and tests/oracles can
-    * pin deterministic liveness states.
-    */
-  def recordWorkerHeartbeat(spark: SparkSession, runId: String,
-                            workerId: String, pid: Long, hostname: String,
-                            invocationId: String,
-                            currentIndex: Option[Long],
-                            completedCount: Long, tsMs: Long): Unit = {
+                            completedCount: Long,
+                            tsMs: Long = System.currentTimeMillis()): Unit =
     appendLocal(spark, "workers", runId,
-      Seq("worker_id" -> StringT, "run_id" -> StringT, "pid" -> LongT,
-        "hostname" -> StringT, "invocation_id" -> StringT,
-        "current_index" -> LongT, "completed_count" -> LongT,
-        "ts" -> LongT),
       Seq(Seq(workerId, runId, pid, hostname, invocationId,
         currentIndex, completedCount, tsMs)))
-  }
 
-  /** Raw workers rows for a run (schema-typed empty frame if none). */
-  def workers(spark: SparkSession, runId: String): DataFrame = {
-    val p = s"$dir/workers"
-    if (!pathExists(spark, p)) {
-      import spark.implicits._
-      Seq.empty[(String, String, Long, String, String, Option[Long], Long, Long)]
-        .toDF("worker_id", "run_id", "pid", "hostname", "invocation_id",
-          "current_index", "completed_count", "ts")
-    } else readTable(spark, p, Some(runId)).filter(col("run_id") === runId)
-  }
-
-  def recordError(spark: SparkSession, runId: String, idx: Long,
-                  error: String): Unit =
-    recordError(spark, runId, idx, error, "driver")
+  /** Raw workers rows for a run. */
+  def workers(spark: SparkSession, runId: String): DataFrame =
+    readTable(spark, "workers", Some(runId))
 
   def recordError(spark: SparkSession, runId: String, idx: Long, error: String,
-                  workerId: String): Unit = {
+                  workerId: String = "driver"): Unit =
     appendLocal(spark, "errors", runId,
-      Seq("idx" -> LongT, "run_id" -> StringT, "status" -> StringT,
-        "wall_ns" -> LongT, "n_rows" -> LongT, "worker_id" -> StringT,
-        "finished_at" -> LongT, "error" -> StringT),
       Seq(Seq(idx, runId, "error", 0L, 0L, workerId,
         System.currentTimeMillis(), error)))
-  }
 
   /** Structured run logs — the reference's `logs` table
     * (`pipeline_store.py:592-604`): (run_id, ts, level, logger, message,
     * idx). Batched appends: collect log rows, write once per flush, so
-    * logging never becomes one-file-per-message at scale.
-    */
-  def recordLogs(spark: SparkSession, runId: String,
-                 entries: Seq[(String, String, String, Long)]): Unit =
-    recordLogs(spark, runId, entries, "driver")
-
-  /** `workerId` tags each log row with its emitting worker (the
-    * reference's `logs.worker_id`, `pipeline_store.py:592-604` — its
-    * dashboard renders NULL as "Main"; here the driver session claims by
-    * name, so the default is explicit).
+    * logging never becomes one-file-per-message at scale. `workerId` tags
+    * each log row with its emitting worker (the reference's
+    * `logs.worker_id` — its dashboard renders NULL as "Main"; here the
+    * driver session claims by name, so the default is explicit).
     */
   def recordLogs(spark: SparkSession, runId: String,
                  entries: Seq[(String, String, String, Long)],
-                 workerId: String): Unit = {
+                 workerId: String = "driver"): Unit = {
     if (entries.isEmpty) return
     val now = System.currentTimeMillis()
     appendLocal(spark, "logs", runId,
-      Seq("level" -> StringT, "logger_name" -> StringT,
-        "message" -> StringT, "idx" -> LongT, "run_id" -> StringT,
-        "ts" -> LongT, "worker_id" -> StringT),
       entries.map { case (lv, lg, msg, idx) =>
         Seq[Any](lv, lg, msg, idx, runId, now, workerId) })
   }
 
-  /** Log rows for a run — schema-typed empty frame when none were written. */
-  def logs(spark: SparkSession, runId: String): DataFrame = {
-    val p = s"$dir/logs"
-    if (!pathExists(spark, p)) {
-      import spark.implicits._
-      Seq.empty[(String, String, String, Long, String, Long, String)]
-        .toDF("level", "logger_name", "message", "idx", "run_id", "ts",
-          "worker_id")
-    } else {
-      val df = readTable(spark, p, Some(runId)).filter(col("run_id") === runId)
-      // Ledgers written before the worker_id column read as "driver". The
-      // static table schema always injects the column (pre-column files
-      // surface NULL), so the back-compat shim is per-ROW, not per-schema:
-      // recordLogs never writes a null worker_id, so NULL ⇔ legacy row.
-      df.withColumn("worker_id", coalesce(col("worker_id"), lit("driver")))
-    }
-  }
+  /** Log rows for a run. Ledgers written before the worker_id column read
+    * as "driver": the static table schema always injects the column
+    * (pre-column files surface NULL), so the back-compat shim is per-ROW,
+    * not per-schema — recordLogs never writes a null worker_id, so NULL ⇔
+    * legacy row.
+    */
+  def logs(spark: SparkSession, runId: String): DataFrame =
+    readTable(spark, "logs", Some(runId))
+      .withColumn("worker_id", coalesce(col("worker_id"), lit("driver")))
 
-  private def pathExists(spark: SparkSession, p: String): Boolean = {
-    // Hadoop FS API, not java.io.File — the ledger dir may be HDFS/S3/GCS
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  /** Completed indices for a run — empty frame when the ledger doesn't exist. */
-  def completedIndices(spark: SparkSession, runId: String): DataFrame = {
-    import spark.implicits._
-    if (!pathExists(spark, idxPath)) Seq.empty[Long].toDF("idx")
-    else readTable(spark, idxPath, Some(runId))
-      .filter(col("run_id") === runId && col("status") === "completed")
+  /** Completed indices for a run. */
+  def completedIndices(spark: SparkSession, runId: String): DataFrame =
+    readTable(spark, "index_results", Some(runId))
+      .filter(col("status") === "completed")
       .select("idx").distinct()
-  }
 
   /** Failed indices for a run (`core/base.py:858-951` failed_indices). */
-  def failedIndices(spark: SparkSession, runId: String): DataFrame = {
-    import spark.implicits._
-    val errPath = s"$dir/errors"
-    if (!pathExists(spark, errPath)) Seq.empty[Long].toDF("idx")
-    else readTable(spark, errPath, Some(runId))
-      .filter(col("run_id") === runId)
-      .select("idx").distinct()
-  }
+  def failedIndices(spark: SparkSession, runId: String): DataFrame =
+    readTable(spark, "errors", Some(runId)).select("idx").distinct()
 
   /** Checkpoint skip: work list minus completed ledger (left-anti join). */
   def remaining(spark: SparkSession, runId: String, work: DataFrame,
@@ -704,7 +533,7 @@ final class Ledger(dir: String) {
     * `dashboard/data.py:49-321`, as one grouped aggregation).
     */
   def runSummary(spark: SparkSession): DataFrame =
-    readTable(spark, idxPath)
+    readTable(spark, "index_results")
       .groupBy("run_id", "status")
       .agg(count(lit(1)).as("n_indices"),
         sum("n_rows").as("total_rows"),
@@ -726,27 +555,18 @@ final class Ledger(dir: String) {
     * `error` is the (latest) recorded message, empty for never-failed.
     */
   def indexDf(spark: SparkSession, runId: String): DataFrame = {
-    import spark.implicits._
-    val comp =
-      (if (pathExists(spark, idxPath)) readTable(spark, idxPath, Some(runId))
-         .filter(col("run_id") === runId && col("status") === "completed")
-       else Seq.empty[(Long, Long, Long, Long)]
-         .toDF("idx", "wall_ns", "peak_memory_bytes", "finished_at")
-         .withColumn("gpu_memory_bytes", lit(null).cast("long")))
-        .groupBy(col("idx").cast("long").as("idx"))
-        .agg(max(struct(col("finished_at"), col("wall_ns"),
-          col("peak_memory_bytes"), col("gpu_memory_bytes"))).as("m"))
-        .select(col("idx"), col("m.wall_ns").as("_wall"),
-          col("m.peak_memory_bytes").as("_peak"),
-          col("m.gpu_memory_bytes").as("_gpu"), lit(1).as("_done"))
-    val errPath = s"$dir/errors"
-    val errs =
-      (if (pathExists(spark, errPath)) readTable(spark, errPath, Some(runId))
-         .filter(col("run_id") === runId)
-       else Seq.empty[(Long, Long, String)].toDF("idx", "finished_at", "error"))
-        .groupBy(col("idx").cast("long").as("idx"))
-        .agg(max(struct(col("finished_at"), col("error"))).as("e"))
-        .select(col("idx"), col("e.error").as("_err"))
+    val comp = readTable(spark, "index_results", Some(runId))
+      .filter(col("status") === "completed")
+      .groupBy("idx")
+      .agg(max(struct(col("finished_at"), col("wall_ns"),
+        col("peak_memory_bytes"), col("gpu_memory_bytes"))).as("m"))
+      .select(col("idx"), col("m.wall_ns").as("_wall"),
+        col("m.peak_memory_bytes").as("_peak"),
+        col("m.gpu_memory_bytes").as("_gpu"), lit(1).as("_done"))
+    val errs = readTable(spark, "errors", Some(runId))
+      .groupBy("idx")
+      .agg(max(struct(col("finished_at"), col("error"))).as("e"))
+      .select(col("idx"), col("e.error").as("_err"))
     comp.join(errs, Seq("idx"), "full_outer")
       .select(col("idx"),
         when(col("_done").isNotNull, "completed").otherwise("error").as("status"),
@@ -796,26 +616,29 @@ final class Ledger(dir: String) {
         .otherwise(0.0)).as("total_elapsed_s"))
   }
 
+  /** The run's (worker_id, idx) completion rows, and its failure rows that
+    * no completion retried — retry-wins, matching the reference's
+    * REPLACE-on-retry rows (an index another worker later completed no
+    * longer counts as a failure).
+    */
+  private def workerIndexRows(spark: SparkSession,
+                              runId: String): (DataFrame, DataFrame) = {
+    val comp = readTable(spark, "index_results", Some(runId))
+      .filter(col("status") === "completed")
+      .select(col("worker_id"), col("idx"))
+    val errs = readTable(spark, "errors", Some(runId))
+      .select(col("worker_id"), col("idx"))
+      .join(comp.select("idx").distinct(), Seq("idx"), "left_anti")
+    (comp, errs)
+  }
+
   /** `indices_by_worker` parity (`pipeline_store.py:1200-1246`): the
     * sorted completed and failed index lists one worker owns, with the
-    * same retry-wins rule as [[workersDf]] (an index another worker later
-    * completed no longer counts as this worker's failure).
+    * same retry-wins rule as [[workersDf]].
     */
   def indicesByWorker(spark: SparkSession, runId: String,
                       workerId: String): DataFrame = {
-    import spark.implicits._
-    val comp =
-      (if (pathExists(spark, idxPath)) readTable(spark, idxPath, Some(runId))
-         .filter(col("run_id") === runId && col("status") === "completed")
-       else Seq.empty[(Long, String)].toDF("idx", "worker_id"))
-        .select(col("worker_id"), col("idx").cast("long").as("idx"))
-    val errPath = s"$dir/errors"
-    val errs =
-      (if (pathExists(spark, errPath)) readTable(spark, errPath, Some(runId))
-         .filter(col("run_id") === runId)
-       else Seq.empty[(Long, String)].toDF("idx", "worker_id"))
-        .select(col("worker_id"), col("idx").cast("long").as("idx"))
-        .join(comp.select("idx").distinct(), Seq("idx"), "left_anti")
+    val (comp, errs) = workerIndexRows(spark, runId)
     comp.filter(col("worker_id") === workerId)
       .select(col("idx"), lit("completed").as("status"))
       .unionByName(errs.filter(col("worker_id") === workerId)
@@ -845,17 +668,18 @@ final class Ledger(dir: String) {
     }
   }
 
-  /** DRIVER-SIDE compaction fast path (the [[appendLocal]] insight applied
-    * to the rewrite): a fragmented ledger table is huge in FILE COUNT but
-    * tiny in BYTES (one row per commit), so a Spark rewrite pays ~20k task
-    * schedulings to move ~20 MB — measured 113–138 s per 20k-file table at
-    * the 10⁵ decade. Reading the snapshot sequentially with parquet-mr and
-    * writing one merged file is pure I/O. Schemas are UNION-merged across
-    * footers (tables gain columns across versions; every ledger field is a
-    * flat optional primitive) with values copied field-by-field, so the
-    * fast path preserves added columns exactly like the mergeSchema read
-    * path. Rows buffer in memory — callers gate this on total BYTES, which
-    * for these one-row-per-commit tables is megabytes at 10⁵ commits.
+  /** DRIVER-SIDE compaction fast path: a fragmented ledger table is huge
+    * in FILE COUNT but tiny in BYTES (one row per commit), so a Spark
+    * rewrite pays ~20k task schedulings to move ~20 MB — measured
+    * 113–138 s per 20k-file table at the 10⁵ decade. Reading the
+    * snapshot sequentially with parquet-mr and writing one merged file
+    * (through [[DriverParquet.open]]) is pure I/O. Schemas are
+    * UNION-merged across footers (tables gain columns across versions;
+    * every ledger field is a flat optional primitive) with values copied
+    * field-by-field, so the fast path preserves added columns exactly like
+    * the mergeSchema read path. Rows buffer in memory — callers gate this
+    * on total BYTES, which for these one-row-per-commit tables is
+    * megabytes at 10⁵ commits.
     *
     * The read pass is PARALLEL across a bounded driver pool — measured at
     * 20k single-row files: sequential merge 233 s (open cost serializes),
@@ -871,9 +695,7 @@ final class Ledger(dir: String) {
     import org.apache.parquet.example.data.Group
     import org.apache.parquet.example.data.simple.SimpleGroup
     import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.hadoop.example.GroupReadSupport
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
     // pass 1: read every file on a bounded pool (open cost dominates)
@@ -916,11 +738,7 @@ final class Ledger(dir: String) {
         .as(pt.getLogicalTypeAnnotation).named(n))
     }
     val schema = b.named("spark_schema")
-    val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(out, conf))
-      .withConf(conf).withType(schema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
+    val writer = DriverParquet.open(conf, out, schema)
     try rows.result().foreach { g =>
       val o = new SimpleGroup(schema)
       fieldOrder.foreach { case (n, pt) =>
@@ -1074,8 +892,7 @@ final class Ledger(dir: String) {
   }
 
   /** The ledger's table directories, the compaction/maintenance universe. */
-  private val allTables = Seq("index_results", "runs", "errors", "logs",
-    "stage_metrics", "output_files", "filter_artifacts", "workers")
+  private def allTables = tableSchemas.keys
 
   /** Auto-compaction policy: compact ONLY when some table's file count
     * exceeds `maxFilesPerTable`, checked with one LIST per table BEFORE
@@ -1155,14 +972,7 @@ final class Ledger(dir: String) {
             // with the staged output orphaned for clean() — installing and
             // deleting without exclusion could race a rival's rewrite.
             checkFence()
-            fs.listStatus(tmp).iterator
-              .filter(_.getPath.getName.endsWith(".parquet"))
-              .foreach { f =>
-                require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(p,
-                  s"${java.util.UUID.randomUUID()}.parquet")),
-                  s"compact: install into $p failed")
-              }
-            fs.delete(tmp, true)
+            install(fs, tmp, p, "")
             checkFence() // fence again before the snapshot unlinks
             snap.foreach(f => fs.delete(f.getPath, false))
             val after = {
@@ -1249,9 +1059,10 @@ final class Ledger(dir: String) {
       all.filter(q => !tailFileRe.matcher(q.getName).matches()))
   }
 
-  /** Rewrite `shared` without the rows matching `drop`, installing under
-    * plain (shared-bucket) names; no-op when no shared file holds such
-    * rows. mergeSchema read — a maintenance pass, like compact's.
+  /** Rewrite `files` of table dir `p` without the rows matching `drop`,
+    * installing the kept rows as `<prefix><uuid>.parquet`; no-op when no
+    * file holds such rows. mergeSchema read — a maintenance pass, like
+    * compact's. Caller holds the maintenance lock.
     *
     * NULL discipline: legacy mixed-ledger rows may lack a column the
     * predicate references (e.g. pre-idx stage_metrics), making `drop`
@@ -1263,20 +1074,17 @@ final class Ledger(dir: String) {
     * trigger check and the kept set both coalesce the predicate, and the
     * kept rows are written back with their ORIGINAL columns only.
     */
-  private def rewriteSharedWithout(spark: SparkSession,
-                                   fs: org.apache.hadoop.fs.FileSystem,
-                                   p: org.apache.hadoop.fs.Path,
-                                   shared: Seq[org.apache.hadoop.fs.Path],
-                                   drop: Column): Unit = {
-    if (shared.isEmpty) return
+  private def rewriteWithout(spark: SparkSession,
+                             fs: org.apache.hadoop.fs.FileSystem,
+                             p: org.apache.hadoop.fs.Path,
+                             files: Seq[org.apache.hadoop.fs.Path],
+                             drop: Column, prefix: String): Unit = {
+    if (files.isEmpty) return
     val raw = spark.read.option("mergeSchema", "true")
-      .parquet(shared.map(_.toString): _*)
-    val df = tableSchemas.get(p.getName) match {
-      case Some(sc) => sc.fields.foldLeft(raw)((d, f) =>
-        if (d.columns.contains(f.name)) d
-        else d.withColumn(f.name, lit(null).cast(f.dataType)))
-      case None => raw
-    }
+      .parquet(files.map(_.toString): _*)
+    val df = tableSchemas(p.getName).fields.foldLeft(raw)((d, f) =>
+      if (d.columns.contains(f.name)) d
+      else d.withColumn(f.name, lit(null).cast(f.dataType)))
     if (df.filter(coalesce(drop, lit(false))).isEmpty) return
     val keep = df.filter(coalesce(!drop, lit(true)))
       .select(raw.columns.map(col).toIndexedSeq: _*)
@@ -1284,15 +1092,8 @@ final class Ledger(dir: String) {
       s"$dir/_staging/reset_${java.util.UUID.randomUUID()}")
     keep.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     checkFence() // abort before install/unlink if the lock was stolen
-    fs.listStatus(tmp).iterator
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .foreach { f =>
-        require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(p,
-          s"${java.util.UUID.randomUUID()}.parquet")),
-          s"reset: install into $p failed")
-      }
-    fs.delete(tmp, true)
-    shared.foreach(f => fs.delete(f, false))
+    install(fs, tmp, p, prefix)
+    files.foreach(f => fs.delete(f, false))
   }
 
   /** Reference `reset()` (`pipeline_store.py:1455-1477`): clear every
@@ -1326,9 +1127,8 @@ final class Ledger(dir: String) {
             mine.partition(f => provable.contains(f.getName))
           checkFence() // abort before the unlinks if the lock was stolen
           clean.foreach(f => fs.delete(f, false)) // provably only this run's rows
-          rewriteSharedWithout(spark, fs, p, dirty,
-            col("run_id") === runId)
-          rewriteSharedWithout(spark, fs, p, shared, col("run_id") === runId)
+          rewriteWithout(spark, fs, p, dirty, col("run_id") === runId, "")
+          rewriteWithout(spark, fs, p, shared, col("run_id") === runId, "")
           t -> clean.size
         }
       }.toMap
@@ -1338,51 +1138,21 @@ final class Ledger(dir: String) {
       report
     }
 
-  /** Rewrite one table without the rows matching `drop`, touching only
-    * `runId`'s own tail files and the shared bucket: surviving tail rows
-    * are re-installed UNDER THE RUN'S PREFIX (so per-run pruning keeps
-    * working after the rewrite); other runs' tail files are never read.
-    * Caller holds the maintenance lock.
+  /** [[rewriteWithout]] over one table, touching only `runId`'s own tail
+    * files and the shared bucket: surviving tail rows are re-installed
+    * UNDER THE RUN'S PREFIX (so per-run pruning keeps working after the
+    * rewrite); other runs' tail files are never read. Caller holds the
+    * maintenance lock.
     */
-  private def rewriteRunWithout(spark: SparkSession, table: String,
-                                runId: String, drop: Column): Unit = {
-    val fsConf = spark.sparkContext.hadoopConfiguration
+  private def dropRows(spark: SparkSession, table: String, runId: String,
+                       drop: Column): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val fs = p.getFileSystem(fsConf)
-    if (!fs.exists(p)) return
-    val (mine, shared) = splitSnapshot(fs, p, runId)
-    if (mine.nonEmpty) {
-      val raw = spark.read.option("mergeSchema", "true")
-        .parquet(mine.map(_.toString): _*)
-      // same NULL discipline as rewriteSharedWithout: a row or file the
-      // predicate can't see (missing column → NULL/unresolvable) is KEPT
-      val df = tableSchemas.get(table) match {
-        case Some(sc) => sc.fields.foldLeft(raw)((d, f) =>
-          if (d.columns.contains(f.name)) d
-          else d.withColumn(f.name, lit(null).cast(f.dataType)))
-        case None => raw
-      }
-      if (!df.filter(coalesce(drop, lit(false))).isEmpty) {
-        val keep = df.filter(coalesce(!drop, lit(true)))
-          .select(raw.columns.map(col).toIndexedSeq: _*)
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"$dir/_staging/reset_${java.util.UUID.randomUUID()}")
-        keep.coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(tmp.toString)
-        checkFence() // abort before install/unlink if the lock was stolen
-        fs.listStatus(tmp).iterator
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .foreach { f =>
-            require(fs.rename(f.getPath,
-              new org.apache.hadoop.fs.Path(p,
-                s"${runPrefix(runId)}${java.util.UUID.randomUUID()}.parquet")),
-              s"rewrite: install into $p failed")
-          }
-        fs.delete(tmp, true)
-        mine.foreach(f => fs.delete(f, false))
-      }
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) {
+      val (mine, shared) = splitSnapshot(fs, p, runId)
+      rewriteWithout(spark, fs, p, mine, drop, runPrefix(runId))
+      rewriteWithout(spark, fs, p, shared, drop, "")
     }
-    rewriteSharedWithout(spark, fs, p, shared, drop)
   }
 
   /** Reference `reset_index(i)` (`pipeline_store.py:1478-1508`): clear one
@@ -1397,7 +1167,7 @@ final class Ledger(dir: String) {
       val drop = col("run_id") === runId && col("idx") === idx
       Seq("filter_artifacts", "output_files", "stage_metrics",
         "index_results", "errors")
-        .foreach(rewriteRunWithout(spark, _, runId, drop))
+        .foreach(dropRows(spark, _, runId, drop))
       // drop the index's claim files in every invocation namespace, so a
       // resumed invocation re-claims it
       val claims = new org.apache.hadoop.fs.Path(s"$dir/claims/$runId")
@@ -1446,7 +1216,7 @@ final class Ledger(dir: String) {
         recordFilterArtifacts(spark, runId, 0L, filterName, filterOrder,
           Seq(mergedPath))
       if (oldPaths.nonEmpty)
-        rewriteRunWithout(spark, "filter_artifacts", runId,
+        dropRows(spark, "filter_artifacts", runId,
           col("run_id") === runId && col("path").isin(oldPaths: _*) &&
             col("path") =!= mergedPath)
     }
@@ -1488,21 +1258,7 @@ final class Ledger(dir: String) {
     * a ledger each appear as their own worker row.
     */
   def workersDf(spark: SparkSession, runId: String): DataFrame = {
-    import spark.implicits._
-    val compRows =
-      (if (pathExists(spark, idxPath)) readTable(spark, idxPath, Some(runId))
-         .filter(col("run_id") === runId && col("status") === "completed")
-       else Seq.empty[(Long, String)].toDF("idx", "worker_id"))
-        .select(col("worker_id"), col("idx").cast("long").as("idx"))
-    val errPath = s"$dir/errors"
-    val errRows =
-      (if (pathExists(spark, errPath)) readTable(spark, errPath, Some(runId))
-         .filter(col("run_id") === runId)
-       else Seq.empty[(Long, String)].toDF("idx", "worker_id"))
-        .select(col("worker_id"), col("idx").cast("long").as("idx"))
-        // retry-wins, matching the reference's REPLACE-on-retry rows: an
-        // index that later completed no longer counts as failed
-        .join(compRows.select("idx").distinct(), Seq("idx"), "left_anti")
+    val (compRows, errRows) = workerIndexRows(spark, runId)
     val comp = compRows.groupBy("worker_id")
       .agg(countDistinct("idx").as("completed"))
     val errs = errRows.groupBy("worker_id")
@@ -1565,17 +1321,12 @@ final class Ledger(dir: String) {
     val (total, completed, failed, remaining) =
       (sm.getAs[Long]("total"), sm.getAs[Long]("completed"),
         sm.getAs[Long]("failed"), sm.getAs[Long]("remaining"))
-    val startedAt: Option[Long] =
-      if (!pathExists(spark, runsPath)) None
-      else readTable(spark, runsPath, Some(runId)).filter(col("run_id") === runId)
-        .agg(min("started_at")).collect().headOption
-        .filterNot(_.isNullAt(0)).map(_.getLong(0))
-    val lastFinished: Option[Long] =
-      if (!pathExists(spark, idxPath)) None
-      else readTable(spark, idxPath, Some(runId))
-        .filter(col("run_id") === runId && col("status") === "completed")
-        .agg(max("finished_at")).collect().headOption
-        .filterNot(_.isNullAt(0)).map(_.getLong(0))
+    def one(df: DataFrame): Option[Long] =
+      Option(df.first()).filterNot(_.isNullAt(0)).map(_.getLong(0))
+    val startedAt = one(readTable(spark, "runs", Some(runId))
+      .agg(min("started_at")))
+    val lastFinished = one(readTable(spark, "index_results", Some(runId))
+      .filter(col("status") === "completed").agg(max("finished_at")))
     val throughputPerMin: Option[Double] = for {
       s <- startedAt; f <- lastFinished if completed > 0
     } yield completed * 60000.0 / math.max(f - s, 1L)

@@ -44,8 +44,8 @@ object LedgerCatalog {
     try {
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = fsOf(spark, p)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/runs"))) return None
-      val runs = spark.read.parquet(s"$dir/runs")
+      val ledger = new Ledger(dir)
+      val runs = ledger.readTable(spark, "runs")
         .select(col("run_id"), col("config_json"), col("started_at"))
         .collect() // one row per recorded run — bounded
       if (runs.isEmpty) return None
@@ -72,18 +72,11 @@ object LedgerCatalog {
           val end = cfg.indexOf("],\"sink\":", i)
           cfg.substring(i, if (end >= 0) end else cfg.length)
       }
-      val idxPath = new org.apache.hadoop.fs.Path(s"$dir/index_results")
-      val (total, completed) =
-        if (!fs.exists(idxPath)) (0L, 0L)
-        else {
-          val ir = spark.read.parquet(s"$dir/index_results")
-          val r = ir.agg(count(lit(1)), count(when(col("status") === "completed", 1))).first()
-          (r.getLong(0), r.getLong(1))
-        }
-      val errPath = new org.apache.hadoop.fs.Path(s"$dir/errors")
-      val failed =
-        if (!fs.exists(errPath)) 0L
-        else spark.read.parquet(s"$dir/errors").count()
+      val r = ledger.readTable(spark, "index_results")
+        .agg(count(lit(1)), count(when(col("status") === "completed", 1)))
+        .first()
+      val (total, completed) = (r.getLong(0), r.getLong(1))
+      val failed = ledger.readTable(spark, "errors").count()
       Some(LedgerInfo(p.getName, dir, dirSize(fs, p), created,
         runs.map(_.getString(0)).distinct.sorted.toSeq,
         jsonName("source"), jsonName("sink"),

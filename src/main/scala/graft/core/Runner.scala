@@ -159,7 +159,7 @@ object Runner {
     // core/pipeline_store.py:550-563)
     val peakMem = stages.records.map(_.peakMemoryBytes).maxOption.getOrElse(0L)
     val nExecuted = ledger.recordCompleted(spark, runId, executedIdx,
-      System.nanoTime() - t0, nRows, peakMem)
+      System.nanoTime() - t0, nRows, peakMem, None, "driver")
     // Provenance: the batch sink commits ONCE for every index, so its paths
     // are run-scoped — recorded under idx = −1 (documented divergence from
     // the reference's per-index grain; the per-index mode matches exactly).

@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.DriverParquet
-import graft.core.DriverParquet.{DoubleArrT, DoubleT, IntT}
 import graft.operators.{CurationOps, DedupOps, SimilarityOps}
 import graft.sources.Tables
 
@@ -127,7 +127,7 @@ object AnnQueries extends Family("ann") {
     import s.implicits._
     val k = SimilarityOps.annPlanesFor(n = 2000L, targetBucket = 250L)
     DriverParquet.write(s, AnnPlanesDir,
-      Seq("tbl" -> IntT, "plane" -> IntT, "w" -> DoubleArrT),
+      StructType.fromDDL("tbl INT, plane INT, w ARRAY<DOUBLE>"),
       SimilarityOps.tablePlanes(dim = 64, nTables = 12, planesPerTable = k)
         .flatMap { case (t, pls) =>
           pls.zipWithIndex.map { case (pl, p) =>
@@ -262,7 +262,7 @@ object AnnQueries extends Family("ann") {
       m = 8, k = 16, iters = 2, dimHint = 64)
     // bounded codebook dump: m·k rows × subDim doubles — the broadcast index
     DriverParquet.write(s, PqCodebooksDir,
-      Seq("sub" -> IntT, "code" -> IntT, "c" -> DoubleArrT),
+      StructType.fromDDL("sub INT, code INT, c ARRAY<DOUBLE>"),
       books.zipWithIndex.flatMap { case (cb, sub) =>
         cb.zipWithIndex.map { case (c, code) =>
           Seq(sub, code, c.map(_.toDouble).toSeq) }
@@ -320,7 +320,7 @@ object AnnQueries extends Family("ann") {
     val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
       k = 8, iters = 3, dimHint = 64)
     DriverParquet.write(s, IvfSqCentroidsDir,
-      Seq("cid" -> IntT, "w" -> DoubleArrT),
+      StructType.fromDDL("cid INT, w ARRAY<DOUBLE>"),
       cents.zipWithIndex.map { case (c, i) => Seq(i, c.map(_.toDouble).toSeq) })
     SimilarityOps.ivfSq8TopK(emb, "vec_id", "embedding",
       queryIds = Seq(0L, 1L, 2L), k = 5, cents, nProbe = 2)
@@ -407,7 +407,7 @@ object AnnQueries extends Family("ann") {
     val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
       k = 8, iters = 3, dimHint = 64)
     DriverParquet.write(s, IvfSqResCentroidsDir,
-      Seq("cid" -> IntT, "w" -> DriverParquet.FloatArrT),
+      StructType.fromDDL("cid INT, w ARRAY<FLOAT>"),
       cents.zipWithIndex.map { case (c, i) => Seq(i, c.toSeq) })
     SimilarityOps.ivfSq8ResidualTopK(emb, "vec_id", "embedding",
       queryIds = Seq(0L, 1L, 2L), k = 5, cents, nProbe = 2)
@@ -538,8 +538,8 @@ object AnnQueries extends Family("ann") {
       (c, wf.map(_.toDouble).toSeq, md, lam)
     }
     DriverParquet.write(s, PcaBasisDir,
-      Seq("comp" -> IntT, "w" -> DoubleArrT, "mu_dot" -> DoubleT,
-        "eigenvalue" -> DoubleT),
+      StructType.fromDDL(
+        "comp INT, w ARRAY<DOUBLE>, mu_dot DOUBLE, eigenvalue DOUBLE"),
       rows.map { case (c, w, md, lam) => Seq(c, w, md, lam) })
     val projs = rows.map { case (c, _, md, _) =>
       (rnd(graft.operators.SimilarityOps.dot(col("embedding"),
@@ -628,14 +628,14 @@ object AnnQueries extends Family("ann") {
     val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
       k = 8, iters = 2, dimHint = 64)
     DriverParquet.write(s, IvfPqResCentroidsDir,
-      Seq("cid" -> IntT, "c" -> DoubleArrT),
+      StructType.fromDDL("cid INT, c ARRAY<DOUBLE>"),
       cents.zipWithIndex.map { case (c, cid) =>
         Seq(cid, c.map(_.toDouble).toSeq) })
     val books = SimilarityOps.pqCodebooks(
       SimilarityOps.residualFrame(emb, "vec_id", "embedding", cents),
       "vec_id", "resid", m = 8, k = 16, iters = 2, dimHint = 64)
     DriverParquet.write(s, IvfPqResCodebooksDir,
-      Seq("sub" -> IntT, "code" -> IntT, "c" -> DoubleArrT),
+      StructType.fromDDL("sub INT, code INT, c ARRAY<DOUBLE>"),
       books.zipWithIndex.flatMap { case (cb, sub) =>
         cb.zipWithIndex.map { case (c, code) =>
           Seq(sub, code, c.map(_.toDouble).toSeq) }
@@ -700,13 +700,13 @@ object AnnQueries extends Family("ann") {
     val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
       k = 8, iters = 2, dimHint = 64)
     DriverParquet.write(s, IvfPqCentroidsDir,
-      Seq("cid" -> IntT, "c" -> DoubleArrT),
+      StructType.fromDDL("cid INT, c ARRAY<DOUBLE>"),
       cents.zipWithIndex.map { case (c, cid) =>
         Seq(cid, c.map(_.toDouble).toSeq) })
     val books = SimilarityOps.pqCodebooks(emb, "vec_id", "embedding",
       m = 8, k = 16, iters = 2, dimHint = 64)
     DriverParquet.write(s, IvfPqCodebooksDir,
-      Seq("sub" -> IntT, "code" -> IntT, "c" -> DoubleArrT),
+      StructType.fromDDL("sub INT, code INT, c ARRAY<DOUBLE>"),
       books.zipWithIndex.flatMap { case (cb, sub) =>
         cb.zipWithIndex.map { case (c, code) =>
           Seq(sub, code, c.map(_.toDouble).toSeq) }
@@ -817,12 +817,12 @@ object AnnQueries extends Family("ann") {
     val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
       k = 8, iters = 3, dimHint = 64)
     DriverParquet.write(s, AnnRecallCentroidsDir,
-      Seq("cid" -> IntT, "w" -> DoubleArrT),
+      StructType.fromDDL("cid INT, w ARRAY<DOUBLE>"),
       cents.zipWithIndex.map { case (c, i) => Seq(i, c.map(_.toDouble).toSeq) })
     val books = SimilarityOps.pqCodebooks(emb, "vec_id", "embedding",
       m = 8, k = 16, iters = 2, dimHint = 64)
     DriverParquet.write(s, AnnRecallCodebooksDir,
-      Seq("sub" -> IntT, "code" -> IntT, "c" -> DoubleArrT),
+      StructType.fromDDL("sub INT, code INT, c ARRAY<DOUBLE>"),
       books.zipWithIndex.flatMap { case (cb, sub) =>
         cb.zipWithIndex.map { case (c, code) =>
           Seq(sub, code, c.map(_.toDouble).toSeq) }
@@ -851,7 +851,7 @@ object AnnQueries extends Family("ann") {
     import s.implicits._
     val outDim = 8
     DriverParquet.write(s, RpPlanesDir,
-      Seq("plane" -> IntT, "w" -> DoubleArrT),
+      StructType.fromDDL("plane INT, w ARRAY<DOUBLE>"),
       SimilarityOps.hyperplanes(64, outDim, seed = 20260813L).zipWithIndex
         .map { case (w, j) => Seq(j, w.map(_.toDouble).toSeq) })
     SimilarityOps.randomProject(Tables.embeddings(s, dir), "vec_id", "embedding",
@@ -929,7 +929,7 @@ object AnnQueries extends Family("ann") {
     // bounded quantizer dump (k rows × dim doubles); written per run so the
     // oracle reads EXACTLY the centroids this run clustered with
     DriverParquet.write(s, SemCentroidsDir,
-      Seq("cid" -> IntT, "w" -> DoubleArrT),
+      StructType.fromDDL("cid INT, w ARRAY<DOUBLE>"),
       cents.zipWithIndex.map { case (c, i) => Seq(i, c.map(_.toDouble).toSeq) })
     SimilarityOps.semanticDedup(emb, "vec_id", "embedding", tau = 0.3, cents)
       .select(col("id").as("vec_id"), col("cid"), col("component"),
@@ -974,7 +974,7 @@ object AnnQueries extends Family("ann") {
     val cents = SimilarityOps.ivfCentroids(emb, "vec_id", "embedding",
       k = 8, iters = 3, dimHint = 64)
     DriverParquet.write(s, EmbOutCentroidsDir,
-      Seq("cid" -> IntT, "w" -> DoubleArrT),
+      StructType.fromDDL("cid INT, w ARRAY<DOUBLE>"),
       cents.zipWithIndex.map { case (c, i) => Seq(i, c.map(_.toDouble).toSeq) })
     val assigned = SimilarityOps.centroidAssignment(emb, "vec_id",
       "embedding", cents)

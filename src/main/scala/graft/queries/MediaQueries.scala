@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.DriverParquet
-import graft.core.DriverParquet.{DoubleArrT, IntT}
 import graft.operators.MultimodalOps
 import graft.sinks.TarSink
 import graft.sources.{Tables, TarSource}
@@ -142,7 +142,7 @@ object MediaQueries extends Family("media") {
          |FROM agg JOIN pk USING (g, frame) ORDER BY g, frame""".stripMargin) { (s, dir) =>
     import s.implicits._
     DriverParquet.write(s, DftTwiddlesDir,
-      Seq("k" -> IntT, "re_w" -> DoubleArrT, "im_w" -> DoubleArrT),
+      StructType.fromDDL("k INT, re_w ARRAY<DOUBLE>, im_w ARRAY<DOUBLE>"),
       MultimodalOps.dftTwiddles(64).map { case (k, re, im) => Seq(k, re, im) })
     MultimodalOps.audioSpectral(audioCorpus(s, dir, withCopies = false),
       "g", "wav", frameLen = 64, nFrames = 4)
@@ -215,7 +215,7 @@ object MediaQueries extends Family("media") {
          |FROM bits GROUP BY 1 ORDER BY g""".stripMargin) { (s, dir) =>
     import s.implicits._
     DriverParquet.write(s, DftTwiddlesDir,
-      Seq("k" -> IntT, "re_w" -> DoubleArrT, "im_w" -> DoubleArrT),
+      StructType.fromDDL("k INT, re_w ARRAY<DOUBLE>, im_w ARRAY<DOUBLE>"),
       MultimodalOps.dftTwiddles(64).map { case (k, re, im) => Seq(k, re, im) })
     MultimodalOps.audioFingerprint(
       audioCorpus(s, dir, withCopies = false), "g", "wav")

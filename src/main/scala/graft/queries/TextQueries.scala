@@ -3,9 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.DriverParquet
-import graft.core.DriverParquet.{IntT, StringT}
 import graft.functions.Text
 import graft.operators.{CurationOps, DedupOps, StatsOps, TextOps}
 import graft.sinks.TarSink
@@ -247,7 +247,7 @@ object TextQueries extends Family("text") {
     val docs = Tables.documents(s, dir)
     val merges = TextOps.trainBpe(docs, "text", BpeNumMerges)
     DriverParquet.write(s, BpeMergesDir,
-      Seq("rank" -> IntT, "lhs" -> StringT, "rhs" -> StringT),
+      StructType.fromDDL("rank INT, lhs STRING, rhs STRING"),
       merges.zipWithIndex.map { case ((l, r), i) => Seq(i, l, r) })
     TextOps.bpeEncode(docs, "doc_id", "text", merges)
   }

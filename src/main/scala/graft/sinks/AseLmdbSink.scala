@@ -5,6 +5,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Zlib
+
 /** ASE LMDB (`.aselmdb`) writer — the inverse of `AseLmdbSource` and an
   * independent implementation of the PUBLIC LMDB on-disk format (the
   * reference's atm domain only READS these stores, delegating to an LMDB
@@ -36,17 +38,6 @@ object AseLmdbSink {
   // spare; beyond this the value goes to overflow pages (mirrors LMDB's
   // own max-inline threshold in spirit, not exact constant)
   private val MaxInline = Psize / 4
-
-  private def zlib(b: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    try {
-      d.setInput(b); d.finish()
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-      out.toByteArray
-    } finally d.end()
-  }
 
   /** Build a complete single-file LMDB image from sorted (key, value)
     * entries. Exposed for specs; `write` drives it per partition.
@@ -197,7 +188,7 @@ object AseLmdbSink {
         else {
           val pid = org.apache.spark.TaskContext.getPartitionId()
           val entries = rows.map { case (id, json) =>
-            id.toString -> zlib(json.getBytes("UTF-8"))
+            id.toString -> Zlib.deflate(json.getBytes("UTF-8"))
           }
           val img = buildImage(entries)
           val p = new org.apache.hadoop.fs.Path(s"$outDir/shard_$pid.aselmdb")

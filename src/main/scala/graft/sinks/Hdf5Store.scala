@@ -2,6 +2,8 @@ package graft.sinks
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import graft.functions.Zlib
+
 /** Minimal HDF5 container codec — the storage layer of the reference's
   * NETCDF4 output (`domains/da/sinks/netcdf_writer.py:75` writes via the
   * netCDF4 lib, whose on-disk container is HDF5; this is an independent
@@ -197,29 +199,6 @@ object Hdf5Store {
       case None => Nil
     }
 
-  private def zlib(b: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    try {
-      d.setInput(b); d.finish()
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-      out.toByteArray
-    } finally d.end()
-  }
-
-  private def inflate(b: Array[Byte], outLen: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(b)
-      val out = new Array[Byte](outLen)
-      var n = 0
-      while (n < outLen && !inf.finished()) n += inf.inflate(out, n, outLen - n)
-      require(n == outLen, s"HDF5 chunk inflated to $n bytes, expected $outLen")
-      out
-    } finally inf.end()
-  }
-
   // ------------------------------------------------------------- writer
 
   /** Backwards-compatible contiguous entry point. */
@@ -312,7 +291,7 @@ object Hdf5Store {
       walk(Nil, 0).map { gi =>
         val raw = cells(gi)
         Chunk(gi.zip(cd).map { case (g, c) => g * c.toLong } :+ 0L,
-          if (d.deflate) zlib(raw) else raw)
+          if (d.deflate) Zlib.deflate(raw) else raw)
       }
     }
     val chunkSets: Seq[Option[Seq[Chunk]]] =
@@ -819,7 +798,17 @@ object Hdf5Store {
         s"dataset '$name': incomplete object header")
       val esz = ElemSize(dtype)
 
-      val total = dims.product.toInt
+      // the dense values must be coverable by the file's own bytes (stored
+      // raw, or inflated at most Zlib.MaxRatio-fold), so a corrupted
+      // dataspace is rejected here instead of allocating its extent
+      val totalL = dims.foldLeft(1L) { (a, d) =>
+        require(d >= 0 && (d == 0 || a <= Int.MaxValue / d),
+          s"dataset '$name': dims ${dims.mkString("x")} too large")
+        a * d
+      }
+      require(totalL * esz <= Zlib.MaxRatio.toLong * bytes.length,
+        s"dataset '$name': dims ${dims.mkString("x")} exceed the file's data")
+      val total = totalL.toInt
       val vals = new Array[Double](total)
       if (layoutClass == 1) {
         require(dataSize / esz == total.toLong, s"dataset '$name': dims/data size mismatch")
@@ -831,22 +820,27 @@ object Hdf5Store {
         val chunkElems = chunkDims.product.toInt
         val strides = dims.scanRight(1L)(_ * _).tail
         val keySize = 8 + (rank + 1) * 8
-        def walkChunkBtree(addr: Long): Unit = {
+        def walkChunkBtree(addr: Long, parentLevel: Int): Unit = {
           val n0 = toOffset(addr, "chunk B-tree node")
           require(new String(bytes, n0, 4, "US-ASCII") == "TREE", "bad chunk B-tree")
           require(bytes(n0 + 4) == 1, "not a chunk B-tree")
           val level = bytes(n0 + 5)
+          require(level >= 0 && level < parentLevel, "chunk B-tree level out of order")
           val used = buf.getShort(n0 + 6) & 0xffff
           var p2 = n0 + 24
           (0 until used).foreach { _ =>
             val nbytes = buf.getInt(p2)
             val offs = (0 until rank).map(r => buf.getLong(p2 + 8 + r * 8))
             val child = buf.getLong(p2 + keySize)
-            if (level > 0) walkChunkBtree(child)
+            if (level > 0) walkChunkBtree(child, level)
             else {
               val c0 = toOffset(child, s"dataset '$name' chunk")
+              require(nbytes >= 0 && c0.toLong + nbytes <= bytes.length,
+                s"dataset '$name': chunk beyond end of file")
               val raw0 = java.util.Arrays.copyOfRange(bytes, c0, c0 + nbytes)
-              val raw = if (deflated) inflate(raw0, chunkElems * esz) else raw0
+              val raw =
+                if (deflated) Zlib.inflate(raw0, 0, raw0.length, chunkElems * esz)
+                else raw0
               require(raw.length == chunkElems * esz, s"dataset '$name': bad chunk size")
               val cb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
               // scatter the dense chunk, clipping fill-padded edge cells
@@ -869,7 +863,7 @@ object Hdf5Store {
             p2 += keySize + 8
           }
         }
-        walkChunkBtree(dataAddr)
+        walkChunkBtree(dataAddr, Int.MaxValue)
       }
       H5Var(name, dims, vals, isScale, scaleName, dimId, dimNames, dtype)
     }.sortBy(_.name)

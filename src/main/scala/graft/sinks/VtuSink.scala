@@ -5,6 +5,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Zlib
+
 /** VTU writer (reference `domains/mesh/sinks/mesh_vtu.py:49`): one `.vtu`
   * file per mesh, assembled per-mesh ON EXECUTORS (collect_list per mesh —
   * one index fits in memory, the reference's own working assumption) and
@@ -210,17 +212,6 @@ object VtuSink {
   }
   private def byteBytes(a: Array[Int]): Array[Byte] = a.map(_.toByte)
 
-  private def deflate(block: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    try {
-      d.setInput(block); d.finish()
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-      out.toByteArray
-    } finally d.end()
-  }
-
   /** One array's appended payload: `[UInt64 len][data]` raw, or the VTK
     * zlib block layout `[nb][blockSize][lastSize][c_i...][blocks]`.
     */
@@ -233,7 +224,7 @@ object VtuSink {
       le(24).putLong(0L).putLong(BlockSize.toLong).putLong(0L).array()
     } else {
       val blocks = data.grouped(BlockSize).toArray
-      val comp = blocks.map(deflate)
+      val comp = blocks.map(Zlib.deflate)
       val header = le(8 * (3 + comp.length))
       header.putLong(blocks.length.toLong)
       header.putLong(BlockSize.toLong)

@@ -5,6 +5,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Zlib
+
 /** Real Zarr v2 directory-store writer + reader (reference
   * `domains/da/sinks/zarr_writer.py`, `domains/atm/sinks/zarr_writer.py`,
   * `domains/mesh/sinks/mesh_zarr.py` — which delegate to zarr-python; this
@@ -25,29 +27,6 @@ import org.apache.spark.sql.functions._
   * and inflated per-task into long (i, j, value) rows.
   */
 object ZarrStore {
-
-  private def zlib(b: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    try {
-      d.setInput(b); d.finish()
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-      out.toByteArray
-    } finally d.end()
-  }
-
-  private def inflate(b: Array[Byte], outLen: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(b)
-      val out = new Array[Byte](outLen)
-      var n = 0
-      while (n < outLen && !inf.finished()) n += inf.inflate(out, n, outLen - n)
-      require(n == outLen, s"zarr chunk inflated to $n bytes, expected $outLen")
-      out
-    } finally inf.end()
-  }
 
   private def writeFile(path: String, bytes: Array[Byte],
                         conf: org.apache.hadoop.conf.Configuration): Unit = {
@@ -151,7 +130,7 @@ object ZarrStore {
           }
           val bb = ByteBuffer.allocate(ci * cj * esz).order(ByteOrder.LITTLE_ENDIAN)
           buf.foreach(putCell(bb, dtype, _))
-          writeFile(s"$out/$cci.$ccj", zlib(bb.array()), hadoopConf.value)
+          writeFile(s"$out/$cci.$ccj", Zlib.deflate(bb.array()), hadoopConf.value)
         }
       }
 
@@ -164,7 +143,7 @@ object ZarrStore {
     val emptyChunk = {
       val bb = ByteBuffer.allocate(ci * cj * esz).order(ByteOrder.LITTLE_ENDIAN)
       (0 until ci * cj).foreach(_ => putCell(bb, dtype, fillValue))
-      zlib(bb.array())
+      Zlib.deflate(bb.array())
     }
     for (a <- 0 until nci; b <- 0 until ncj) {
       val p = new org.apache.hadoop.fs.Path(s"$out/$a.$b")
@@ -229,7 +208,7 @@ object ZarrStore {
       .flatMap { case (p, bytes) =>
         val name = p.split("/").last
         val Array(cci, ccj) = name.split("\\.").map(_.toInt)
-        val raw = inflate(bytes, ci * cj * esz)
+        val raw = Zlib.inflate(bytes, 0, bytes.length, ci * cj * esz)
         val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
         for {
           li <- 0 until ci

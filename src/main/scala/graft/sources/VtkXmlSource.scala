@@ -10,6 +10,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Zlib
+
 /** VTK XML mesh reader (reference `domains/mesh/sources/vtk.py:74` + Rust
   * `vtk/parser.rs:303`, `vtk/reader.rs:38,60`), Spark-first:
   *
@@ -55,24 +57,6 @@ object VtkXmlSource {
     if (ht == "UInt64") buf.getLong else buf.getInt.toLong & 0xffffffffL
   }
 
-  /** Inflate one zlib block; `outLen` is the known uncompressed size. */
-  private def inflate(src: Array[Byte], off: Int, len: Int, outLen: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(src, off, len)
-      val out = new Array[Byte](outLen)
-      var written = 0
-      while (written < outLen && !inf.finished()) {
-        val n = inf.inflate(out, written, outLen - written)
-        if (n == 0 && inf.needsInput())
-          throw new IllegalArgumentException("truncated zlib block in VTK data")
-        written += n
-      }
-      require(written == outLen, s"zlib block inflated to $written bytes, expected $outLen")
-      out
-    } finally inf.end()
-  }
-
   /** Inflate the VTK block-compressed layout given its already-decoded
     * header words `[nBlocks, blockSize, lastSize, c_1..c_N]` and a reader
     * for the concatenated compressed blocks.
@@ -90,7 +74,7 @@ object VtkXmlSource {
     var i = 0
     while (i < nb) {
       val rawLen = if (i == nb - 1) lastSize else blockSize
-      out.write(inflate(compressedAt(off, sizes(i)), 0, sizes(i), rawLen))
+      out.write(Zlib.inflate(compressedAt(off, sizes(i)), 0, sizes(i), rawLen))
       off += sizes(i)
       i += 1
     }

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.core.AdaptiveWidth
+
 /** Scale-adaptive state partitioning for streaming queries.
   *
   * A stateful streaming operator pins its state-store count to
@@ -45,34 +47,15 @@ object StatePartitions {
     catch { case _: java.io.FileNotFoundException => 0L }
   }
 
-  def forBytes(s: SparkSession, inputBytes: Long): Int = {
-    val perPart = s.conf.getOption(BytesPerPartitionKey)
-      .map(_.toLong).getOrElse(64L << 20)
-    val cur = math.max(1, s.conf.get("spark.sql.shuffle.partitions").toInt)
-    val bySize = math.ceil(inputBytes.toDouble / perPart.toDouble).toInt
-    math.min(cur, math.max(math.min(4, cur), bySize))
-  }
+  def forBytes(s: SparkSession, inputBytes: Long): Int =
+    AdaptiveWidth.width(s, inputBytes, BytesPerPartitionKey, 64L << 20)
 
-  /** Run `f` (which starts and drains streaming queries) with
-    * `spark.sql.shuffle.partitions` scaled to the input volume, restoring
-    * the session value after — batch stages planned outside this scope
-    * keep the session's parallelism.
-    *
-    * NOT thread-safe across queries: the override mutates the
-    * SESSION-scoped conf (set/restore), so two scopes racing on one
-    * SparkSession can clobber or leak each other's width. Every declared
-    * query runs its scopes single-threaded on the session (the bench and
-    * Verify drivers are sequential; the only in-repo multi-threaded job
-    * submission — the AhmedML fixture writes — never enters a scope). A
-    * caller that needs concurrent scopes must give each thread its own
-    * `SparkSession.newSession` (session confs are per-session there).
+  /** Run `f` (which starts and drains streaming queries) with the shuffle
+    * width scaled to the input volume (see [[AdaptiveWidth.withWidth]] for
+    * the session-conf contract).
     */
-  def scaled[A](s: SparkSession, inputBytes: Long)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, forBytes(s, inputBytes).toString)
-    try f finally s.conf.set(key, old)
-  }
+  def scaled[A](s: SparkSession, inputBytes: Long)(f: => A): A =
+    AdaptiveWidth.withWidth(s, forBytes(s, inputBytes))(f)
 
   /** [[scaled]] with the volume read from a staged input path. */
   def scaledFor[A](s: SparkSession, path: String)(f: => A): A =

@@ -288,7 +288,7 @@ object StreamingDedup {
     // cluster-width parallelism and ~rows-per-partition-sized files.
     val rows = index.count()
     val w = graft.core.AdaptiveWidth.forRows(index.sparkSession, rows)
-    graft.core.AdaptiveWidth.scaled(index.sparkSession, rows) {
+    graft.core.AdaptiveWidth.withWidth(index.sparkSession, w) {
       install(withNullSig(indexKeys(index, idCol, textCol, k))
         .unionByName(indexSigRows(index, idCol, textCol, k)).coalesce(w),
         indexDir, "seed_")

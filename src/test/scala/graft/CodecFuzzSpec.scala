@@ -103,6 +103,14 @@ class CodecFuzzSpec extends AnyFunSuite {
       ("wind", Seq(8L), Array.tabulate(8)(_ * -0.25)))))(Hdf5Store.parse)
   }
 
+  test("HDF5 chunked + deflate survives corruption") {
+    harden("hdf5z", Hdf5Store.renderDatasets(Seq(
+      Hdf5Store.H5Dataset("temp", Seq(4L, 6L), Array.tabulate(24)(_ * 1.5),
+        chunkDims = Some(Seq(2L, 4L)), deflate = true),
+      Hdf5Store.H5Dataset("wind", Seq(8L), Array.tabulate(8)(_ * -0.25),
+        chunkDims = Some(Seq(8L)), deflate = true))))(Hdf5Store.parse)
+  }
+
   test("binary STL survives corruption") {
     val bb = java.nio.ByteBuffer.allocate(84 + 2 * 50)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)

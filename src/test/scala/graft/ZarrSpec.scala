@@ -241,4 +241,33 @@ class ZarrSpec extends SparkSpec {
     assert(m((0L, 1L)) == -1.0) // fill value where no row existed
     assert(m.keySet == (for (i <- 0L until 5L; j <- 0L until 7L) yield (i, j)).toSet)
   }
+
+  test("readArray2D fails fast on a truncated chunk instead of hanging") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("zarr").toString + "/trunc"
+    val df = (0 until 16).map(k => (k / 4L, k % 4L, k * 0.5))
+      .toDF("i", "j", "value")
+    ZarrStore.writeArray2D(df, dir, shape = (4L, 4L), chunks = (2, 2))
+    assert(ZarrStore.readArray2D(spark, dir).count() == 16) // intact store
+    val chunk = Paths.get(dir, "0.0")
+    val bytes = Files.readAllBytes(chunk)
+    Files.write(chunk, bytes.take(bytes.length / 2))
+    // a daemon thread, so a spinning inflate fails this spec instead of
+    // hanging the suite
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor { r =>
+      val t = new Thread(r); t.setDaemon(true); t
+    }
+    try {
+      val read = scala.concurrent.Future(scala.util.Try(
+        ZarrStore.readArray2D(spark, dir).collect()))(
+        scala.concurrent.ExecutionContext.fromExecutor(pool))
+      val res = scala.concurrent.Await.result(read,
+        scala.concurrent.duration.Duration(2, "s"))
+      val msgs = Iterator.iterate(res.failed.get)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+        .mkString("\n")
+      assert(msgs.contains("truncated zlib block"), msgs)
+    } finally pool.shutdown()
+  }
 }
