@@ -164,22 +164,6 @@ final class Ledger(dir: String) {
     forRun.fold(df)(runId => df.filter(col("run_id") === runId))
   }
 
-  /** Move every staged `*.parquet` under `staging` into `dest` as
-    * `<prefix><uuid>.parquet`, then drop the staging dir.
-    */
-  private def install(fs: org.apache.hadoop.fs.FileSystem,
-                      staging: org.apache.hadoop.fs.Path,
-                      dest: org.apache.hadoop.fs.Path, prefix: String): Unit = {
-    fs.listStatus(staging).iterator
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .foreach { f =>
-        require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(dest,
-          s"$prefix${java.util.UUID.randomUUID()}.parquet")),
-          s"ledger install into $dest failed")
-      }
-    fs.delete(staging, true)
-  }
-
   /** MULTI-WRITER-safe append: stage the rows under a UUID dir, then move
     * each part file into the table under a unique name. A plain
     * `write.mode(Append)` is NOT safe under concurrent writers — every
@@ -209,7 +193,7 @@ final class Ledger(dir: String) {
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dest = new org.apache.hadoop.fs.Path(s"$dir/$table")
     fs.mkdirs(dest)
-    install(fs, staging, dest, runPrefix(runId))
+    Ledger.install(fs, staging, dest, runPrefix(runId))
   }
 
   /** DRIVER-SIDE commit fast path: ledger rows the driver already holds
@@ -588,12 +572,6 @@ final class Ledger(dir: String) {
         (col("executor_run_ns") / 1e9).as("executor_run_s"),
         col("n_tasks"))
 
-  /** `summary` parity (`pipeline_store.py:1248-1295` via
-    * `dashboard/data.py:169-190`): one row of run-state counters. `failed`
-    * counts CURRENTLY-failed indices (errored, never completed) so
-    * `remaining = total - completed - failed` matches the reference's
-    * retry-replaces-error accounting.
-    */
   /** `summary` without a caller-supplied total: reads the run's recorded
     * `total_indices` (per-index runs store it at start), falling back to
     * touched-index accounting exactly like `dashboard/data.py:178-189`
@@ -605,6 +583,12 @@ final class Ledger(dir: String) {
     summaryDf(spark, runId, total)
   }
 
+  /** `summary` parity (`pipeline_store.py:1248-1295` via
+    * `dashboard/data.py:169-190`): one row of run-state counters. `failed`
+    * counts CURRENTLY-failed indices (errored, never completed) so
+    * `remaining = total - completed - failed` matches the reference's
+    * retry-replaces-error accounting.
+    */
   def summaryDf(spark: SparkSession, runId: String, total: Long): DataFrame = {
     val idxView = indexDf(spark, runId)
     idxView.agg(
@@ -762,134 +746,33 @@ final class Ledger(dir: String) {
     } finally writer.close()
   }
 
-  /** Ledger small-files compaction — the scale discipline the ledger's OWN
-    * metadata needs: per-index commits append one tiny parquet file each,
-    * so a 10⁴–10⁵-index `runPerIndex` run turns every resume probe into a
-    * 10⁴–10⁵-footer listing (the reference's SQLite WAL has no analogue of
-    * this cost). `compact` rewrites any table whose file count exceeds
-    * `maxFilesPerTable` into size-targeted files (64 MB apiece, minimum
-    * one). Contents are unchanged — the tables are append-only row logs,
-    * so a rewrite is a pure physical re-bin.
-    *
-    * CONCURRENCY CONTRACT (r13 — the r12 form documented "quiesce first"
-    * without enforcing it; the reference dedicates WAL + busy_timeout to
-    * exactly this class, `pipeline_store.py:758-777`):
-    *
-    *  - ONE COMPACTOR AT A TIME, enforced: an atomic create-exclusive
-    *    maintenance lock at `<dir>/_maintenance/compact.lock` (the same
-    *    NIO-for-`file://` / `create(overwrite=false)`-for-HDFS split as
-    *    the Runner's index claims). A second concurrent `compact` throws
-    *    `IllegalStateException`. A lock older than `lockTtlMs` is treated
-    *    as a crashed compactor's and broken.
-    *  - RACING COMMITTERS LOSE NOTHING, structurally: each table's rewrite
-    *    SNAPSHOTS the exact parquet file set, reads only those files,
-    *    installs the compacted files INTO the live table dir under fresh
-    *    UUID names, then deletes exactly the snapshot. Commits are pure
-    *    file ADDS (see [[appendRows]]), so there is no retired directory a
-    *    racing stage-then-rename commit could land in — a concurrent
-    *    commit's file is neither read nor deleted and simply survives.
-    *  - Readers overlapping the install→delete window may transiently see
-    *    a row both in its original file and in the compacted one. Every
-    *    resolve-at-read view tolerates duplicates by construction
-    *    (`completedIndices` is distinct, `indexDf`/`workersDf`/`runMeta`
-    *    resolve latest-wins via max-struct, `outputFiles` first-wins);
-    *    only raw-count dashboards can transiently over-count during an
-    *    overlapping maintenance window.
-    *
-    * Returns table → (files before, files after) for every table present.
-    */
-  /** `smallTableBytes` gates the DRIVER-SIDE rewrite ([[compactLocal]]):
-    * a table whose snapshot totals at most this many bytes is merged
-    * sequentially with parquet-mr into one file (rows buffer in memory —
-    * these are one-row-per-commit tables, megabytes at 10⁵ commits)
-    * instead of paying one Spark task per tiny file; measured 113–138 s →
-    * single-digit seconds per 20k-file table. Pass 0 to force the Spark
-    * path (large or externally-written tables take it automatically).
-    */
   /** ONE maintenance lock serializes every destructive table rewrite —
     * compact() AND the reset family — against each other (two concurrent
-    * rewrites could re-install each other's deleted snapshots). Stale-lock
-    * break is CRASH-RECOVERY, not normal mutual exclusion: a live holder
-    * releases in `finally`, so a lock older than the TTL means a killed
-    * process. The status read tolerates the lock vanishing underneath it
-    * (a racing holder's release), and the break itself is best-effort: two
-    * processes both breaking a stale lock in the same instant can at worst
-    * DUPLICATE rows (both install their rewritten copy), never lose them —
-    * and every resolve-at-read view tolerates duplicates.
+    * rewrites could re-install each other's deleted snapshots), held
+    * through [[LockProvider.withLease]]; None = refused. Stale-lock break
+    * is CRASH-RECOVERY and best-effort: two processes both breaking a
+    * stale lock in the same instant can at worst DUPLICATE rows (both
+    * install their rewritten copy), never lose them — and every
+    * resolve-at-read view tolerates duplicates.
     */
+  private def maintenanceLease[A](spark: SparkSession, lockTtlMs: Long)(
+      body: LockProvider.Fence => A): Option[A] =
+    LockProvider.withLease(
+      maintenanceLock.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      maintenanceLock, lockTtlMs, "maintenance lock", "clean()")(body)
+
+  private def maintenanceLock =
+    new org.apache.hadoop.fs.Path(s"$dir/_maintenance/compact.lock")
+
+  /** [[maintenanceLease]] for a public maintenance call: a refusal throws. */
   private[graft] def withMaintenanceLock[A](spark: SparkSession, what: String,
-                                            lockTtlMs: Long)(body: => A): A = {
-    val fsConf = spark.sparkContext.hadoopConfiguration
-    val lock = new org.apache.hadoop.fs.Path(s"$dir/_maintenance/compact.lock")
-    val lfs = lock.getFileSystem(fsConf)
-    lfs.mkdirs(lock.getParent)
-    // Per-store exclusion primitive (LockProvider): create-exclusive on
-    // file/HDFS, fencing-token lease on stores configured
-    // `graft.lock.provider.<scheme>=lease`. Stale-break (TTL) lives in
-    // the provider.
-    val lp = LockProvider.forFs(lfs)
-    if (!lp.tryAcquire(lfs, lock, lockTtlMs))
+                                            lockTtlMs: Long)(
+      body: LockProvider.Fence => A): A =
+    maintenanceLease(spark, lockTtlMs)(body).getOrElse(
       throw new IllegalStateException(
         s"ledger maintenance already in progress — $what refused " +
-          s"(maintenance lock $lock; locks older than $lockTtlMs ms are " +
-          "broken as stale)")
-    // RENEWAL: a rewrite that outlives the TTL (a 100 TB-class ledger's
-    // compaction) must not have its lock stale-broken mid-install by a
-    // rival maintainer — a live holder refreshes at TTL/4 from a daemon
-    // thread, so staleness again means exactly "crashed holder". A FAILED
-    // renew means the lock is no longer ours (lease stolen, or broken
-    // after a pause past the TTL): record the loss and stop renewing —
-    // the destructive phases fence on it (checkFence below) and abort
-    // rather than rewrite/delete without exclusion.
-    val lost = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val renewer = new Thread(() => {
-      val period = math.max(lockTtlMs / 4, 250L)
-      try {
-        var ours = true
-        while (ours && !Thread.interrupted()) {
-          Thread.sleep(period)
-          // interrupt = the release path, not a fence loss; don't renew
-          // a lease release is about to delete
-          if (!Thread.currentThread().isInterrupted &&
-              !lp.renew(lfs, lock)) {
-            lost.set(true)
-            ours = false
-          }
-        }
-      } catch { case _: InterruptedException => () }
-    }, "graft-maintenance-lock-renewer")
-    renewer.setDaemon(true)
-    renewer.start()
-    // Resource fence for the body's destructive phases: before every
-    // install/unlink, checkFence() re-verifies the lock is still OURS
-    // (renewer flag + a token read through the provider), so a holder
-    // whose lease was stolen aborts with its staged output orphaned for
-    // clean() instead of deleting rows a rival maintainer now owns.
-    Ledger.fence.set(() =>
-      if (lost.get() || !lp.verify(lfs, lock))
-        throw new IllegalStateException(
-          s"maintenance lock $lock lost mid-$what (lease stolen or renew " +
-            "failed) — aborting before the destructive phase; staged " +
-            "output is orphaned for clean()"))
-    try body finally {
-      Ledger.fence.remove()
-      renewer.interrupt()
-      // JOIN before release: a renew already past its token check could
-      // otherwise re-PUT the lease after release deletes it, leaving an
-      // orphan lock that refuses all maintenance until the TTL expires
-      renewer.join()
-      lp.release(lfs, lock)
-    }
-  }
-
-  /** Fence gate for destructive maintenance phases (see
-    * [[withMaintenanceLock]]): throws when the maintenance lock is no
-    * longer this holder's; no-op outside a maintenance-lock scope.
-    */
-  private[graft] def checkFence(): Unit = {
-    val g = Ledger.fence.get()
-    if (g != null) g()
-  }
+          s"(maintenance lock $maintenanceLock; locks older than " +
+          s"$lockTtlMs ms are broken as stale)"))
 
   /** The ledger's table directories, the compaction/maintenance universe. */
   private def allTables = tableSchemas.keys
@@ -919,75 +802,108 @@ final class Ledger(dir: String) {
       } > maxFilesPerTable
     }
     if (!over) Some(Map.empty)
-    else
-      try Some(compact(spark, maxFilesPerTable, lockTtlMs))
-      catch {
-        case e: IllegalStateException
-            if e.getMessage.contains("already in progress") => None
-      }
+    else maintenanceLease(spark, lockTtlMs)(
+      compactTables(spark, maxFilesPerTable, 64L << 20))
   }
 
+  /** Ledger small-files compaction — the scale discipline the ledger's OWN
+    * metadata needs: per-index commits append one tiny parquet file each,
+    * so a 10⁴–10⁵-index `runPerIndex` run turns every resume probe into a
+    * 10⁴–10⁵-footer listing (the reference's SQLite WAL has no analogue of
+    * this cost). `compact` rewrites any table whose file count exceeds
+    * `maxFilesPerTable` into size-targeted files (64 MB apiece, minimum
+    * one). Contents are unchanged — the tables are append-only row logs,
+    * so a rewrite is a pure physical re-bin.
+    *
+    * CONCURRENCY CONTRACT (r13 — the r12 form documented "quiesce first"
+    * without enforcing it; the reference dedicates WAL + busy_timeout to
+    * exactly this class, `pipeline_store.py:758-777`):
+    *
+    *  - ONE COMPACTOR AT A TIME, enforced: the maintenance lock at
+    *    `<dir>/_maintenance/compact.lock` ([[withMaintenanceLock]]). A
+    *    second concurrent `compact` throws `IllegalStateException`. A lock
+    *    older than `lockTtlMs` is treated as a crashed compactor's and
+    *    broken.
+    *  - RACING COMMITTERS LOSE NOTHING, structurally: each table's rewrite
+    *    SNAPSHOTS the exact parquet file set, reads only those files,
+    *    installs the compacted files INTO the live table dir under fresh
+    *    UUID names, then deletes exactly the snapshot. Commits are pure
+    *    file ADDS (see [[appendRows]]), so there is no retired directory a
+    *    racing stage-then-rename commit could land in — a concurrent
+    *    commit's file is neither read nor deleted and simply survives.
+    *  - Readers overlapping the install→delete window may transiently see
+    *    a row both in its original file and in the compacted one. Every
+    *    resolve-at-read view tolerates duplicates by construction
+    *    (`completedIndices` is distinct, `indexDf`/`workersDf`/`runMeta`
+    *    resolve latest-wins via max-struct, `outputFiles` first-wins);
+    *    only raw-count dashboards can transiently over-count during an
+    *    overlapping maintenance window.
+    *
+    * `smallTableBytes` gates the DRIVER-SIDE rewrite ([[compactLocal]]):
+    * a table whose snapshot totals at most this many bytes is merged
+    * sequentially with parquet-mr into one file (rows buffer in memory —
+    * these are one-row-per-commit tables, megabytes at 10⁵ commits)
+    * instead of paying one Spark task per tiny file; measured 113–138 s →
+    * single-digit seconds per 20k-file table. Pass 0 to force the Spark
+    * path (large or externally-written tables take it automatically).
+    *
+    * Returns table → (files before, files after) for every table present.
+    */
   def compact(spark: SparkSession, maxFilesPerTable: Int = 64,
               lockTtlMs: Long = 60L * 60 * 1000,
-              smallTableBytes: Long = 64L << 20): Map[String, (Int, Int)] = {
+              smallTableBytes: Long = 64L << 20): Map[String, (Int, Int)] =
+    withMaintenanceLock(spark, "compact", lockTtlMs)(
+      compactTables(spark, maxFilesPerTable, smallTableBytes))
+
+  /** [[compact]]'s rewrite; the caller holds the maintenance lock. */
+  private def compactTables(spark: SparkSession, maxFilesPerTable: Int,
+                            smallTableBytes: Long)(
+      fence: LockProvider.Fence): Map[String, (Int, Int)] = {
     val fsConf = spark.sparkContext.hadoopConfiguration
-    withMaintenanceLock(spark, "compact", lockTtlMs) {
-      clean(spark) // janitor staging orphans while we hold the lock
-      val tables = allTables
-      tables.flatMap { t =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$t")
-        val fs = p.getFileSystem(fsConf)
-        if (!fs.exists(p)) None
-        else {
-          // SNAPSHOT: the rewrite reads exactly these files and later
-          // deletes exactly these files — nothing else
-          val snap = {
-            val it = fs.listFiles(p, true)
-            val b = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-            while (it.hasNext) {
-              val f = it.next()
-              if (f.getPath.getName.endsWith(".parquet")) b += f
-            }
-            b.result()
-          }
-          val nFiles = snap.size
-          if (nFiles <= maxFilesPerTable) Some(t -> (nFiles, nFiles))
-          else {
-            val nBytes = snap.map(_.getLen).sum
-            val target = math.max(1L, nBytes / (64L << 20)).toInt
-            val tmp = new org.apache.hadoop.fs.Path(
-              s"$dir/_staging/compact_${java.util.UUID.randomUUID()}")
-            if (nBytes <= smallTableBytes) {
-              // driver fast path: sequential parquet-mr merge, one file
-              fs.mkdirs(tmp)
-              compactLocal(fsConf, snap.map(_.getPath),
-                new org.apache.hadoop.fs.Path(tmp, "merged.parquet"))
-            } else spark.read.option("mergeSchema", "true")
-              .parquet(snap.map(_.getPath.toString): _*)
-              .coalesce(target)
-              .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-            // install compacted files into the LIVE dir, then drop the
-            // snapshot; concurrent commits are adds and survive both steps.
-            // Fence first: if the lock was stolen mid-rewrite, abort here
-            // with the staged output orphaned for clean() — installing and
-            // deleting without exclusion could race a rival's rewrite.
-            checkFence()
-            install(fs, tmp, p, "")
-            checkFence() // fence again before the snapshot unlinks
-            snap.foreach(f => fs.delete(f.getPath, false))
-            val after = {
-              val it = fs.listFiles(p, true)
-              var m = 0
-              while (it.hasNext) {
-                if (it.next().getPath.getName.endsWith(".parquet")) m += 1
-              }
-              m
-            }
-            Some(t -> (nFiles, after))
-          }
+    clean(spark) // janitor staging orphans while we hold the lock
+    allTables.flatMap { t =>
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$t")
+      val fs = p.getFileSystem(fsConf)
+      def parquetFiles() = {
+        val it = fs.listFiles(p, true)
+        val b = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
+        while (it.hasNext) {
+          val f = it.next()
+          if (f.getPath.getName.endsWith(".parquet")) b += f
         }
-      }.toMap
-    }
+        b.result()
+      }
+      if (!fs.exists(p)) None
+      else {
+        // SNAPSHOT: the rewrite reads exactly these files and later
+        // deletes exactly these files — nothing else
+        val snap = parquetFiles()
+        val nFiles = snap.size
+        if (nFiles <= maxFilesPerTable) Some(t -> (nFiles, nFiles))
+        else {
+          val nBytes = snap.map(_.getLen).sum
+          val target = math.max(1L, nBytes / (64L << 20)).toInt
+          val tmp = new org.apache.hadoop.fs.Path(
+            s"$dir/_staging/compact_${java.util.UUID.randomUUID()}")
+          if (nBytes <= smallTableBytes) {
+            // driver fast path: sequential parquet-mr merge, one file
+            fs.mkdirs(tmp)
+            compactLocal(fsConf, snap.map(_.getPath),
+              new org.apache.hadoop.fs.Path(tmp, "merged.parquet"))
+          } else spark.read.option("mergeSchema", "true")
+            .parquet(snap.map(_.getPath.toString): _*)
+            .coalesce(target)
+            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+          // install compacted files into the LIVE dir, then drop the
+          // snapshot; concurrent commits are adds and survive both steps.
+          fence("compact")
+          Ledger.install(fs, tmp, p, "")
+          fence("compact") // again before the snapshot unlinks
+          snap.foreach(f => fs.delete(f.getPath, false))
+          Some(t -> (nFiles, parquetFiles().size))
+        }
+      }
+    }.toMap
   }
 
   // ------------------------------------------------------- reset family
@@ -1062,7 +978,7 @@ final class Ledger(dir: String) {
   /** Rewrite `files` of table dir `p` without the rows matching `drop`,
     * installing the kept rows as `<prefix><uuid>.parquet`; no-op when no
     * file holds such rows. mergeSchema read — a maintenance pass, like
-    * compact's. Caller holds the maintenance lock.
+    * compact's. Caller holds the maintenance lock; `fence` is its fence.
     *
     * NULL discipline: legacy mixed-ledger rows may lack a column the
     * predicate references (e.g. pre-idx stage_metrics), making `drop`
@@ -1078,7 +994,8 @@ final class Ledger(dir: String) {
                              fs: org.apache.hadoop.fs.FileSystem,
                              p: org.apache.hadoop.fs.Path,
                              files: Seq[org.apache.hadoop.fs.Path],
-                             drop: Column, prefix: String): Unit = {
+                             drop: Column, prefix: String,
+                             fence: LockProvider.Fence): Unit = {
     if (files.isEmpty) return
     val raw = spark.read.option("mergeSchema", "true")
       .parquet(files.map(_.toString): _*)
@@ -1091,8 +1008,8 @@ final class Ledger(dir: String) {
     val tmp = new org.apache.hadoop.fs.Path(
       s"$dir/_staging/reset_${java.util.UUID.randomUUID()}")
     keep.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    checkFence() // abort before install/unlink if the lock was stolen
-    install(fs, tmp, p, prefix)
+    fence("rewrite")
+    Ledger.install(fs, tmp, p, prefix)
     files.foreach(f => fs.delete(f, false))
   }
 
@@ -1104,7 +1021,7 @@ final class Ledger(dir: String) {
     */
   def resetRun(spark: SparkSession, runId: String,
                lockTtlMs: Long = 60L * 60 * 1000): Map[String, Int] =
-    withMaintenanceLock(spark, s"resetRun($runId)", lockTtlMs) {
+    withMaintenanceLock(spark, s"resetRun($runId)", lockTtlMs) { fence =>
       val fsConf = spark.sparkContext.hadoopConfiguration
       val tables = Seq("filter_artifacts", "output_files", "stage_metrics",
         "index_results", "errors", "workers", "runs")
@@ -1125,10 +1042,10 @@ final class Ledger(dir: String) {
           val provable = provablyExclusive(spark, fs, mine, runId)
           val (clean, dirty) =
             mine.partition(f => provable.contains(f.getName))
-          checkFence() // abort before the unlinks if the lock was stolen
+          fence(s"resetRun($runId)")
           clean.foreach(f => fs.delete(f, false)) // provably only this run's rows
-          rewriteWithout(spark, fs, p, dirty, col("run_id") === runId, "")
-          rewriteWithout(spark, fs, p, shared, col("run_id") === runId, "")
+          Seq(dirty, shared).foreach(rewriteWithout(spark, fs, p, _,
+            col("run_id") === runId, "", fence))
           t -> clean.size
         }
       }.toMap
@@ -1142,16 +1059,16 @@ final class Ledger(dir: String) {
     * files and the shared bucket: surviving tail rows are re-installed
     * UNDER THE RUN'S PREFIX (so per-run pruning keeps working after the
     * rewrite); other runs' tail files are never read. Caller holds the
-    * maintenance lock.
+    * maintenance lock; `fence` is its fence.
     */
   private def dropRows(spark: SparkSession, table: String, runId: String,
-                       drop: Column): Unit = {
+                       drop: Column, fence: LockProvider.Fence): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$table")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) {
       val (mine, shared) = splitSnapshot(fs, p, runId)
-      rewriteWithout(spark, fs, p, mine, drop, runPrefix(runId))
-      rewriteWithout(spark, fs, p, shared, drop, "")
+      rewriteWithout(spark, fs, p, mine, drop, runPrefix(runId), fence)
+      rewriteWithout(spark, fs, p, shared, drop, "", fence)
     }
   }
 
@@ -1163,11 +1080,12 @@ final class Ledger(dir: String) {
     */
   def resetIndex(spark: SparkSession, runId: String, idx: Long,
                  lockTtlMs: Long = 60L * 60 * 1000): Unit =
-    withMaintenanceLock(spark, s"resetIndex($runId, $idx)", lockTtlMs) {
+    withMaintenanceLock(spark, s"resetIndex($runId, $idx)",
+        lockTtlMs) { fence =>
       val drop = col("run_id") === runId && col("idx") === idx
       Seq("filter_artifacts", "output_files", "stage_metrics",
         "index_results", "errors")
-        .foreach(dropRows(spark, _, runId, drop))
+        .foreach(dropRows(spark, _, runId, drop, fence))
       // drop the index's claim files in every invocation namespace, so a
       // resumed invocation re-claims it
       val claims = new org.apache.hadoop.fs.Path(s"$dir/claims/$runId")
@@ -1205,7 +1123,8 @@ final class Ledger(dir: String) {
                              filterName: String, filterOrder: Int,
                              oldPaths: Seq[String], mergedPath: String,
                              lockTtlMs: Long = 60L * 60 * 1000): Unit =
-    withMaintenanceLock(spark, s"replaceFilterArtifacts($runId)", lockTtlMs) {
+    withMaintenanceLock(spark, s"replaceFilterArtifacts($runId)",
+        lockTtlMs) { fence =>
       // insert-if-absent keeps a retry of the same merge (after a crash
       // between the two steps) from stacking duplicate merged rows
       val already = filterArtifacts(spark, runId)
@@ -1218,7 +1137,7 @@ final class Ledger(dir: String) {
       if (oldPaths.nonEmpty)
         dropRows(spark, "filter_artifacts", runId,
           col("run_id") === runId && col("path").isin(oldPaths: _*) &&
-            col("path") =!= mergedPath)
+            col("path") =!= mergedPath, fence)
     }
 
   /** `logs_df` parity (`dashboard/data.py:283-321` over
@@ -1346,10 +1265,23 @@ final class Ledger(dir: String) {
 }
 
 object Ledger {
-  /** Per-thread fence installed by [[Ledger.withMaintenanceLock]] for the
-    * duration of a maintenance body; destructive phases consult it via
-    * `checkFence()`. Thread-local because maintenance bodies run on the
-    * calling thread and two ledgers may maintain concurrently.
+  /** Stage-then-rename install: move every staged `*.parquet` under
+    * `staging` into `dest` as `<prefix><uuid>.parquet`, then drop the
+    * staging dir. Each rename installs one COMPLETE file, so a reader of
+    * `dest` never sees a partial write (the ledger's commits and rewrites,
+    * the standing dedup index's batch installs).
     */
-  private val fence = new ThreadLocal[() => Unit]
+  private[graft] def install(fs: org.apache.hadoop.fs.FileSystem,
+                             staging: org.apache.hadoop.fs.Path,
+                             dest: org.apache.hadoop.fs.Path,
+                             prefix: String): Unit = {
+    fs.listStatus(staging).iterator
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .foreach { f =>
+        require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(dest,
+          s"$prefix${java.util.UUID.randomUUID()}.parquet")),
+          s"install into $dest failed")
+      }
+    fs.delete(staging, true)
+  }
 }

@@ -4,8 +4,13 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Pluggable atomic-exclusion primitive behind the ledger's maintenance
-  * lock and the Runner's per-index claims.
+/** Pluggable atomic-exclusion primitive. It has four users: the ledger's
+  * maintenance lock (compact and the reset family), the standing dedup
+  * index's fold (`StreamingDedup.maintainIndexDir`), the IVF index
+  * compaction (`SimilarityOps.compactIvfIndex`) and the Runner's per-index
+  * claims. The first three hold a lock for a whole destructive pass and go
+  * through [[LockProvider.withLease]]; claims call [[tryAcquire]] once per
+  * index and never release.
   *
   * The reference serializes destructive store maintenance through SQLite's
   * WAL + busy_timeout (`pipeline_store.py:758-777`); on a shared
@@ -36,8 +41,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    read-back windows. The lease protocol alone is therefore exclusion
   *    with high probability, not a proof; the SAFETY net is fencing at
   *    the resource: destructive phases re-[[LockProvider.verify]] the
-  *    token before every install/unlink (the ledger's maintenance
-  *    rewrites do exactly this), so a holder whose lease was overwritten
+  *    token before every install/unlink (the fence of
+  *    [[LockProvider.withLease]]), so a holder whose lease was overwritten
   *    aborts before damage instead of proceeding. A store with a true
   *    CAS primitive (S3 conditional PUT, GCS generation preconditions)
   *    should get its own provider; the Hadoop FS API doesn't expose one.
@@ -218,13 +223,7 @@ object LockProvider {
 
     override def renew(fs: FileSystem, path: Path): Boolean =
       readLease(fs, path) match {
-        case Held(t, _) if t == token =>
-          // the release path interrupts the renewer and JOINS it before
-          // deleting the lease; still, don't re-PUT once interrupted — a
-          // renew racing its own release would re-create the just-deleted
-          // file as an orphan that refuses all maintenance until the TTL
-          if (Thread.currentThread().isInterrupted) false
-          else { put(fs, path); true }
+        case Held(t, _) if t == token => put(fs, path); true
         case _ => false
       }
 
@@ -234,6 +233,71 @@ object LockProvider {
         case Held(t, _) => t == token
         case _ => false
       }
+  }
+
+  /** A held lease's resource fence: `fence(phase)` throws
+    * `IllegalStateException` when the lock is no longer this holder's.
+    */
+  type Fence = String => Unit
+
+  /** Run `body` while holding the lock at `lock` (`fs` is its file
+    * system, the provider comes from [[forFs]]); None, without running
+    * `body`, when a live rival holds it. A lock older than `ttlMs` is a
+    * crashed holder's and is broken by the provider.
+    *
+    *  - RENEWAL: a hold that outlives the TTL (a 100 TB-class rewrite)
+    *    must not be stale-broken mid-install by a rival, so a daemon
+    *    thread renews every max(TTL/4, 250 ms) and staleness again means
+    *    exactly "crashed holder". A FAILED renew means the lock is no
+    *    longer ours (lease stolen, or broken after a pause past the TTL):
+    *    the thread records the loss and stops renewing.
+    *  - FENCE: the body calls `fence(phase)` immediately before every
+    *    install and unlink. It checks the lost flag and re-[[verify]]s the
+    *    token, so a holder whose lease was stolen aborts with its staged
+    *    output orphaned for `janitor` instead of rewriting or deleting
+    *    files a rival now owns. The message names `label` and `lock`.
+    *  - RELEASE: stop the renewer and JOIN it before releasing: a
+    *    renew already past its token check could otherwise re-PUT the
+    *    lease after release deletes it, leaving an orphan lock that
+    *    refuses every holder until the TTL expires.
+    */
+  def withLease[A](fs: FileSystem, lock: Path, ttlMs: Long, label: String,
+                   janitor: String)(body: Fence => A): Option[A] = {
+    fs.mkdirs(lock.getParent)
+    val lp = forFs(fs)
+    if (!lp.tryAcquire(fs, lock, ttlMs)) None
+    else {
+      val lost = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val releasing = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val renewer = new Thread(() => {
+        val period = math.max(ttlMs / 4, 250L)
+        try {
+          // `releasing`, not the interrupt flag, ends the loop: a blocking
+          // call inside renew may swallow the interrupt (Hadoop's Shell
+          // does, under RawLocalFileSystem's chmod), and the join below
+          // would then wait forever
+          while (!releasing.get() && !lost.get()) {
+            Thread.sleep(period)
+            // don't renew a lease release is about to delete
+            if (!releasing.get() && !lp.renew(fs, lock)) lost.set(true)
+          }
+        } catch { case _: InterruptedException => () }
+      }, s"graft-lease-renewer-${lock.getName}")
+      renewer.setDaemon(true)
+      renewer.start()
+      val fence: Fence = phase =>
+        if (lost.get() || !lp.verify(fs, lock))
+          throw new IllegalStateException(
+            s"$label $lock lost mid-$phase (lease stolen or renew failed) " +
+              "— aborting before the destructive phase; staged output is " +
+              s"orphaned for $janitor")
+      try Some(body(fence)) finally {
+        releasing.set(true)
+        renewer.interrupt()
+        renewer.join()
+        lp.release(fs, lock)
+      }
+    }
   }
 
   /** Provider for `fs`, per the documented scheme routing. */

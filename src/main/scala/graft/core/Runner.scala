@@ -204,8 +204,8 @@ object Runner {
     * no daemon). Per-index scheduler-stage rows are batched and flushed
     * once per invocation (and on crash), keyed (idx, run_id, stage_order)
     * exactly like the reference's stage_metrics.
-    */
-  /** `heartbeatIntervalMs` throttles the STAGE-GRAIN heartbeat refresh:
+    *
+    * `heartbeatIntervalMs` throttles the STAGE-GRAIN heartbeat refresh:
     * commit-grained heartbeats alone would let a long-running index read
     * as a stall (`Ledger.stalledWorkersDf`), so every scheduler-stage
     * completion inside an index also refreshes the heartbeat — but only

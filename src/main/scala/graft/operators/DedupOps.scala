@@ -224,11 +224,6 @@ object DedupOps {
     sigs
   }
 
-  /** Distinct (id, shingle) rows — the sparse set representation shared by
-    * Jaccard and MinHash. Tokens are materialized in their own projection so
-    * the shingle lambda slices a computed array instead of re-tokenizing per
-    * position (see `Text.shinglesFromTokens`).
-    */
   /** Asymmetric containment pairs: |A∩B| / |A| ≥ τ — the subsumption
     * detector Jaccard is blind to (a paragraph quoted inside a much longer
     * page has tiny Jaccard but containment ≈ 1; near-dup pipelines drop
@@ -282,6 +277,11 @@ object DedupOps {
         round(col("edit_sim") + lit(1e-9), 6).as("edit_sim"))
   }
 
+  /** Distinct (id, shingle) rows — the sparse set representation shared by
+    * Jaccard and MinHash. Tokens are materialized in their own projection so
+    * the shingle lambda slices a computed array instead of re-tokenizing per
+    * position (see `Text.shinglesFromTokens`).
+    */
   def shingleSet(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     df.select(col(idCol), Text.tokens(col(textCol)).as("_ws"))
       .select(col(idCol), explode(Text.shinglesFromTokens(col("_ws"), k)).as("sh"))
@@ -290,8 +290,6 @@ object DedupOps {
   /** N-gram Jaccard near-dup pairs via the sparse inverted-index join:
     * docs sharing a shingle → common counts → |A∩B| / |A∪B| ≥ τ.
     * `candidates` (e.g. from `bandPairs`) restricts the pair space at scale.
-    */
-  /** N-gram Jaccard near-dup pairs via the sparse inverted-index join.
     * `maxDocFreq` drops shingles present in more than that many docs before
     * ANY pairing — the standard stop-shingle cut that bounds the per-shingle
     * pair blowup to maxDocFreq² (without it, one ubiquitous shingle makes the
@@ -344,9 +342,6 @@ object DedupOps {
     withH.groupBy(col(idCol)).agg(sigs.head, sigs.tail: _*)
   }
 
-  /** LSH banding: docs sharing any (band, bandKey) bucket become candidate
-    * pairs — the O(n²)-avoiding scale path for near-dup detection.
-    */
   /** Explode a signature table to its (id, band, band_key) rows — the
     * shared banding step behind within-corpus pairing ([[bandPairs]]) and
     * cross-corpus probing ([[incrementalDedup]]).
@@ -361,6 +356,9 @@ object DedupOps {
     }.reduce(_ unionByName _)
   }
 
+  /** LSH banding: docs sharing any (band, bandKey) bucket become candidate
+    * pairs — the O(n²)-avoiding scale path for near-dup detection.
+    */
   def bandPairs(signatures0: DataFrame, idCol: String): DataFrame = {
     val banded = cached(bandKeys(signatures0, idCol)) // self-joined below
     val l = banded.select(col(idCol).as("da"), col("band"), col("band_key"))

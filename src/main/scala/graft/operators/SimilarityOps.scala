@@ -127,23 +127,6 @@ object SimilarityOps {
       .select("ia", "ib", "cos_r")
   }
 
-  /** Multi-table hyperplane LSH near-dup pairs — the 100 TB ANN shape.
-    *
-    * One hyperplane table with k planes has 2^k buckets: recall per pair is
-    * p^k (p = 1 − θ/π), and raising k for selectivity kills recall. The
-    * standard fix (same as MinHash banding, `DedupOps.bandPairs`) is L
-    * INDEPENDENT tables unioned: per-pair miss probability (1 − p^k)^L decays
-    * geometrically in L while bucket occupancy stays n/2^k per table. Grow k
-    * with log2(n / target bucket size) so within-bucket self-joins stay
-    * bounded as the corpus grows; L then buys back recall at linear cost.
-    *
-    * Shape: signatures for all L tables are computed in ONE projection over
-    * the persisted base (L·k codegen'd FloatVecDot calls), exploded to
-    * (table, bucket, id) rows, self-joined per (table, bucket) bucket —
-    * never all-pairs — deduplicated, and only then verified with the exact
-    * rounded cosine (candidate-driven verify: the quadratic space is never
-    * materialized).
-    */
   /** Planes per table for a target bucket occupancy: k = ⌈log2(n/target)⌉,
     * floored at 1. Growing k with log2(n) keeps within-bucket self-join work
     * constant as the corpus grows; raise L to recover the recall k costs.
@@ -162,6 +145,23 @@ object SimilarityOps {
       t -> hyperplanes(dim, planesPerTable, seed + 1299721L * (t + 1))
     }
 
+  /** Multi-table hyperplane LSH near-dup pairs — the 100 TB ANN shape.
+    *
+    * One hyperplane table with k planes has 2^k buckets: recall per pair is
+    * p^k (p = 1 − θ/π), and raising k for selectivity kills recall. The
+    * standard fix (same as MinHash banding, `DedupOps.bandPairs`) is L
+    * INDEPENDENT tables unioned: per-pair miss probability (1 − p^k)^L decays
+    * geometrically in L while bucket occupancy stays n/2^k per table. Grow k
+    * with log2(n / target bucket size) so within-bucket self-joins stay
+    * bounded as the corpus grows; L then buys back recall at linear cost.
+    *
+    * Shape: signatures for all L tables are computed in ONE projection over
+    * the persisted base (L·k codegen'd FloatVecDot calls), exploded to
+    * (table, bucket, id) rows, self-joined per (table, bucket) bucket —
+    * never all-pairs — deduplicated, and only then verified with the exact
+    * rounded cosine (candidate-driven verify: the quadratic space is never
+    * materialized).
+    */
   def annCosinePairsMulti(df: DataFrame, idCol: String, vecCol: String,
                           tau: Double, nTables: Int = 6, planesPerTable: Int = 12,
                           seed: Long = 42L, dimHint: Int = 0): DataFrame =
@@ -676,14 +676,14 @@ object SimilarityOps {
   /** Fold an appendable IVF index's committed parts into one generation
     * when the part count passes `maxParts` — the standing-dedup-index
     * compaction discipline ([[graft.streaming.StreamingDedup.maintainIndexDir]])
-    * applied to the ANN lists: LockProvider lease + TTL/4 renewer, fence
-    * re-verify (renewer lost-flag + token read-back) before the install
-    * rename AND before the delete pass, and a SNAPSHOT-SCOPED delete —
-    * exactly the parts read into the fold plus name-identifiable stale
-    * artifacts, never "everything not the new fold" — so a rival append
-    * landing after the snapshot survives unfolded. Returns true iff a
-    * fold ran; throws on a fence loss (staged output orphaned, nothing
-    * destroyed).
+    * applied to the ANN lists: a [[graft.core.LockProvider.withLease]]
+    * hold whose fence runs before the install rename AND before the
+    * delete pass, and a SNAPSHOT-SCOPED delete — exactly the parts read
+    * into the fold plus name-identifiable stale artifacts, never
+    * "everything not the new fold" — so a rival append landing after the
+    * snapshot survives unfolded. Returns true iff a fold ran (false when a
+    * rival holds the lock); throws on a fence loss (staged output
+    * orphaned, nothing destroyed).
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                       maxParts: Int = 8,
@@ -691,30 +691,6 @@ object SimilarityOps {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lock = new org.apache.hadoop.fs.Path(s"$dir/_maintenance/compact.lock")
-    val lfs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    lfs.mkdirs(lock.getParent)
-    val lp = graft.core.LockProvider.forFs(lfs)
-    if (!lp.tryAcquire(lfs, lock, lockTtlMs)) return false // rival folding
-    val lost = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val renewer = new Thread(() => {
-      val period = math.max(lockTtlMs / 4, 250L)
-      try {
-        var ours = true
-        while (ours && !Thread.interrupted()) {
-          Thread.sleep(period)
-          if (!Thread.currentThread().isInterrupted &&
-              !lp.renew(lfs, lock)) { lost.set(true); ours = false }
-        }
-      } catch { case _: InterruptedException => () }
-    }, "graft-ivf-compact-renewer")
-    renewer.setDaemon(true)
-    renewer.start()
-    def fence(phase: String): Unit =
-      if (lost.get() || !lp.verify(lfs, lock))
-        throw new IllegalStateException(
-          s"ivf compact lock $lock lost mid-$phase (lease stolen or " +
-            "renew failed) — aborting before the destructive phase; " +
-            "staged output is orphaned for the next compaction's janitor")
     // stale-by-NAME artifacts given a newest complete fold at `foldGen`
     // (ignoring `keep`): older folds, duplicate attempts of the newest
     // generation, appends a fold already covers, and the base build once
@@ -741,7 +717,8 @@ object SimilarityOps {
       }
       if (gens.isEmpty) -1L else gens.max
     }
-    try {
+    graft.core.LockProvider.withLease(fs, lock, lockTtlMs,
+        "ivf compact lock", "the next compaction's janitor") { fence =>
       val (snap, maxGen) = committedIvfParts(fs, root) // re-list under lock
       if (snap.size <= maxParts) {
         // below threshold: no fold, but JANITOR leftovers a fence-aborted
@@ -752,33 +729,30 @@ object SimilarityOps {
           fence("janitor delete")
           stale.foreach(fs.delete(_, true))
         }
-        return false
+        false
+      } else {
+        // janitor crashed-fold staging (lock held: nothing there is live)
+        val staging = new org.apache.hadoop.fs.Path(s"$dir/_staging")
+        if (fs.exists(staging)) fs.delete(staging, true)
+        val attempt = f"${scala.util.Random.nextInt(0x7fffffff)}%08x"
+        val staged = new org.apache.hadoop.fs.Path(
+          s"$dir/_staging/fold_${maxGen}_$attempt.parquet")
+        spark.read.parquet(snap.map(_.toString): _*)
+          .write.mode("overwrite").parquet(staged.toString)
+        fence("fold install")
+        require(fs.rename(staged,
+          new org.apache.hadoop.fs.Path(root, staged.getName)),
+          s"ivf fold install into $dir failed")
+        postIvfFoldInstallHook()
+        // snapshot-scoped delete: the folded parts, plus stale-by-name
+        // artifacts (older folds, appends at or below the new generation
+        // that a previous fold already superseded). An append landing
+        // after the snapshot carries gen > maxGen and survives.
+        fence("fold delete")
+        staleParts(maxGen, staged.getName).foreach(fs.delete(_, true))
+        true
       }
-      // janitor crashed-fold staging (lock held: nothing there is live)
-      val staging = new org.apache.hadoop.fs.Path(s"$dir/_staging")
-      if (fs.exists(staging)) fs.delete(staging, true)
-      val attempt = f"${scala.util.Random.nextInt(0x7fffffff)}%08x"
-      val staged = new org.apache.hadoop.fs.Path(
-        s"$dir/_staging/fold_${maxGen}_$attempt.parquet")
-      spark.read.parquet(snap.map(_.toString): _*)
-        .write.mode("overwrite").parquet(staged.toString)
-      fence("fold install")
-      require(fs.rename(staged,
-        new org.apache.hadoop.fs.Path(root, staged.getName)),
-        s"ivf fold install into $dir failed")
-      postIvfFoldInstallHook()
-      // snapshot-scoped delete: the folded parts, plus stale-by-name
-      // artifacts (older folds, appends at or below the new generation
-      // that a previous fold already superseded). An append landing
-      // after the snapshot carries gen > maxGen and survives.
-      fence("fold delete")
-      staleParts(maxGen, staged.getName).foreach(fs.delete(_, true))
-      true
-    } finally {
-      renewer.interrupt()
-      renewer.join() // see maintainIndexDir: no post-release re-PUT
-      lp.release(lfs, lock)
-    }
+    }.getOrElse(false) // a rival is compacting
   }
 
   /** Build-or-load the IVF index through a [[graft.core.Ledger]] — the
@@ -1085,17 +1059,6 @@ object SimilarityOps {
     (mean, comps.result())
   }
 
-  /** Per-dimension int8 scalar quantization — the OTHER standard embedding
-    * compression next to PQ (4× over fp32, one code per dimension):
-    * per-dim [min, max] ranges train on the corpus, codes are
-    * round((x−min)/(max−min)·255)−128, and dequantization error is the
-    * quality metric a pipeline monitors before switching storage to int8.
-    * Shapes: one posexplode (linear), one 〈dim〉-group aggregate for the
-    * ranges (state = dim rows), one broadcast join back. Rounding is
-    * half-up on non-negative arguments — identical in DuckDB — and the
-    * range arithmetic is double on both engines, so codes are exact.
-    * Output: one row per dimension — range, code census, mean |x − x̂|.
-    */
   /** SQ8 code table: per-dimension min/max ranges (broadcast) quantize
     * every vector to signed-int8 codes packed into ONE BINARY column —
     * the FAISS SQ8 layout, 4× smaller than float32 and the input to the
@@ -1505,6 +1468,17 @@ object SimilarityOps {
     pinned
   }
 
+  /** Per-dimension int8 scalar quantization — the OTHER standard embedding
+    * compression next to PQ (4× over fp32, one code per dimension):
+    * per-dim [min, max] ranges train on the corpus, codes are
+    * round((x−min)/(max−min)·255)−128, and dequantization error is the
+    * quality metric a pipeline monitors before switching storage to int8.
+    * Shapes: one posexplode (linear), one 〈dim〉-group aggregate for the
+    * ranges (state = dim rows), one broadcast join back. Rounding is
+    * half-up on non-negative arguments — identical in DuckDB — and the
+    * range arithmetic is double on both engines, so codes are exact.
+    * Output: one row per dimension — range, code census, mean |x − x̂|.
+    */
   def scalarQuantize(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val xs = df.select(col(idCol).as("id"),
       posexplode(col(vecCol)).as(Seq("pos", "xf")))

@@ -497,14 +497,6 @@ object StatsOps {
         est(size(col("_ap")) - col("_ni")).as("est_a_not_b"))
   }
 
-  /** Single-pass column profiler: per column, row/null/distinct counts
-    * plus numeric min/max/mean (string columns report lexicographic
-    * min/max instead). ALL columns aggregate in ONE pass over the data —
-    * one job, not one per column — then the 1-row result explodes to the
-    * long (column, stats) layout. The exact distinct counts plan through
-    * Expand; swap for approx_count_distinct when profiling 100 TB and the
-    * exact figure isn't required.
-    */
   /** Declarative data-quality expectations (the Deequ-style contract a
     * curated release ships with): each rule reduces to a satisfaction
     * fraction and passes against its threshold. ALL rules evaluate in ONE
@@ -556,6 +548,14 @@ object StatsOps {
         (col("metric") >= col("threshold")).as("passed"))
   }
 
+  /** Single-pass column profiler: per column, row/null/distinct counts
+    * plus numeric min/max/mean (string columns report lexicographic
+    * min/max instead). ALL columns aggregate in ONE pass over the data —
+    * one job, not one per column — then the 1-row result explodes to the
+    * long (column, stats) layout. The exact distinct counts plan through
+    * Expand; swap for approx_count_distinct when profiling 100 TB and the
+    * exact figure isn't required.
+    */
   def profileColumns(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "no columns to profile")
     import org.apache.spark.sql.types.NumericType

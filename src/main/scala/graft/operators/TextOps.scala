@@ -927,16 +927,6 @@ object TextOps {
         (log(col("n_tokens").cast("double")) + col("_sclogc") / col("n_tokens"))
           .as("entropy"))
 
-  /** TF-IDF top-k terms per document (smooth idf, sklearn convention:
-    * idf = ln((N+1)/(df+1)) + 1, score = tf·idf). The keyword-extraction
-    * primitive of corpus triage: surfacing what makes a document atypical.
-    *
-    * Scale shape: token explode → (doc, term) partial+final count →
-    * term-document-frequency agg joined back on the term (shuffle bounded
-    * by vocabulary) → a 1-row corpus-count broadcast → per-doc top-k
-    * window. Nothing is collected; ties break on the term so ranks are
-    * deterministic.
-    */
   /** HTML → text extraction — the step between a WARC crawl capture and
     * every text operator in this file (the reference curates domain files
     * already parsed; web corpora need the parse). Implemented as a chain
@@ -1210,6 +1200,16 @@ object TextOps {
       .select(col(queryIdCol), col("rank"), col(idCol), col("score"))
   }
 
+  /** TF-IDF top-k terms per document (smooth idf, sklearn convention:
+    * idf = ln((N+1)/(df+1)) + 1, score = tf·idf). The keyword-extraction
+    * primitive of corpus triage: surfacing what makes a document atypical.
+    *
+    * Scale shape: token explode → (doc, term) partial+final count →
+    * term-document-frequency agg joined back on the term (shuffle bounded
+    * by vocabulary) → a 1-row corpus-count broadcast → per-doc top-k
+    * window. Nothing is collected; ties break on the term so ranks are
+    * deterministic.
+    */
   def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k > 0, s"k $k must be positive")

@@ -490,20 +490,13 @@ object StreamingDedup {
     *    never "everything not the new fold", so an install that landed
     *    AFTER the snapshot (a rival backfill's `b<i>_` files, a newer
     *    writer's fold) survives unfolded rather than being destroyed;
-    *  - takes a [[graft.core.LockProvider]] lock at
-    *    `<dir>/_maintenance/fold.lock` and REFUSES (skips, retried next
-    *    batch) when a rival maintainer holds it — the streaming query is
-    *    the only writer by contract, but a manual backfill or external
-    *    maintenance call must not interleave destructively;
-    *  - FENCES its destructive phases (the ledger maintenance discipline,
-    *    [[graft.core.Ledger]] withMaintenanceLock): a daemon renewer
-    *    refreshes the lease at TTL/4, and the lock is re-verified
-    *    (renewer lost-flag + token read-back) immediately before the
-    *    install renames and again before the delete pass — a holder
-    *    whose lease was stolen (paused past the TTL, or overwritten in
-    *    the lease protocol's residual race window) ABORTS with its
-    *    staged output orphaned for the next fold's janitor instead of
-    *    deleting files a live rival now owns;
+    *  - holds `<dir>/_maintenance/fold.lock` through
+    *    [[graft.core.LockProvider.withLease]] and REFUSES (skips, retried
+    *    next batch) when a rival maintainer holds it — the streaming query
+    *    is the only writer by contract, but a manual backfill or external
+    *    maintenance call must not interleave destructively. The lease's
+    *    fence runs before the install renames and again before the delete
+    *    pass;
     *  - treats `b<i>_` files with i ≥ currentBatchId as a NEWER writer
     *    incarnation's installs (the wipe at the top of this batch
     *    removed our own): visible at snapshot time → REFUSES the fold
@@ -531,38 +524,6 @@ object StreamingDedup {
     if (probe.size <= maxFiles || probeGen == currentBatchId) return false
     val lock = new org.apache.hadoop.fs.Path(
       s"$indexDir/_maintenance/fold.lock")
-    val lfs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    lfs.mkdirs(lock.getParent)
-    val lp = graft.core.LockProvider.forFs(lfs)
-    if (!lp.tryAcquire(lfs, lock, lockTtlMs)) return false // rival folding
-    // TTL/4 renewer + lost-flag: a fold that outlives the TTL (100 TB
-    // index generations) must not be stale-broken mid-run; a FAILED renew
-    // means the lease is no longer ours and the destructive phases below
-    // must abort (see graft.core.Ledger's withMaintenanceLock, the same
-    // discipline).
-    val lost = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val renewer = new Thread(() => {
-      val period = math.max(lockTtlMs / 4, 250L)
-      try {
-        var ours = true
-        while (ours && !Thread.interrupted()) {
-          Thread.sleep(period)
-          if (!Thread.currentThread().isInterrupted &&
-              !lp.renew(lfs, lock)) {
-            lost.set(true)
-            ours = false
-          }
-        }
-      } catch { case _: InterruptedException => () }
-    }, "graft-fold-lock-renewer")
-    renewer.setDaemon(true)
-    renewer.start()
-    def fence(phase: String): Unit =
-      if (lost.get() || !lp.verify(lfs, lock))
-        throw new IllegalStateException(
-          s"fold lock $lock lost mid-$phase (lease stolen or renew " +
-            "failed) — aborting before the destructive phase; staged " +
-            "output is orphaned for the next fold's janitor")
     // b<i>_ with i ≥ currentBatchId: the wipe removed our own, so any
     // such file was installed by a NEWER writer incarnation — this
     // fold's watermark is stale (we are the zombie).
@@ -571,96 +532,92 @@ object StreamingDedup {
         val m = BatchFileRe.matcher(s.getPath.getName)
         s.isFile && m.matches() && m.group(1).toLong >= currentBatchId
       }
-    try {
+    graft.core.LockProvider.withLease(fs, lock, lockTtlMs, "fold lock",
+        "the next fold's janitor") { fence =>
       val (snap, gen) = committedIndexFiles(fs, p) // re-list under the lock
-      if (snap.size <= maxFiles || gen == currentBatchId) return false
       // REFUSE (skip — a fold at the right watermark will run later)
       // when newer batch installs are already visible at snapshot time:
       // an old-batch backfill or a stale replay must not fold at a
       // superseded watermark
-      if (newerWriterVisible()) return false
-      // janitor crashed-fold staging first (single writer + lock held:
-      // nothing in _staging can be live)
-      val staging = new org.apache.hadoop.fs.Path(s"$indexDir/_staging")
-      if (fs.exists(staging)) fs.delete(staging, true)
-      val attempt = java.util.UUID.randomUUID().toString
-        .replace("-", "").take(8)
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$indexDir/_staging/fold_$attempt")
-      // Size the fold output from the snapshot's known bytes (guide §6):
-      // the fold plan has no shuffle, so AQE cannot coalesce it — without
-      // this a fold of many tiny batch installs keeps the oversharded
-      // layout instead of compacting it. Target bytes/file rides the
-      // streaming state conf; floor 1 (a compaction may legitimately
-      // produce one file), no cap needed (bytes-derived).
-      val snapBytes = snap.iterator.map(f =>
-        try fs.getFileStatus(f).getLen catch { case _: Throwable => 0L }).sum
-      val targetBytes = spark.conf
-        .getOption(graft.streaming.StatePartitions.BytesPerPartitionKey)
-        .map(_.toLong).getOrElse(64L * 1024 * 1024)
-      val foldParts = math.max(1L,
-        math.ceil(snapBytes.toDouble / targetBytes.toDouble).toLong).toInt
-      spark.read.schema(IndexSchema)
-        .parquet(snap.map(_.toString): _*)
-        .coalesce(foldParts)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val parts = fs.listStatus(tmp).iterator
-        .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath).toSeq
-      val n = parts.size
-      fence("fold install")
-      if (newerWriterVisible())
-        throw new IllegalStateException(
-          s"fold of $indexDir aborted mid-fold install: batch files with " +
-            s"id >= $currentBatchId appeared since the locked snapshot — " +
-            "a newer writer incarnation is live; this fold's watermark " +
-            "is stale")
-      parts.zipWithIndex.foreach { case (f, i) =>
-        require(fs.rename(f, new org.apache.hadoop.fs.Path(p,
-          s"fold${currentBatchId}_${attempt}_p${i + 1}of$n.parquet")),
-          s"fold install into $indexDir failed")
-      }
-      fs.delete(tmp, true)
-      postFoldInstallHook()
-      // SNAPSHOT-SCOPED delete: exactly the folded sources plus artifacts
-      // identifiable as stale from the names alone — (a) fold attempts of
-      // generations ≤ ours that aren't the one just installed (older
-      // generations, partial/duplicate attempts: crash leftovers — no
-      // LIVE rival can be installing one while we hold the fenced lock),
-      // (b) seed files (superseded by ANY complete fold, and ours now
-      // exists), (c) `b<i>_` files with i < the snapshot generation
-      // (superseded before we started — never readable). A `b<i>_` file
-      // NOT in the snapshot with i ≥ gen is a rival install that landed
-      // after the snapshot: it SURVIVES to be folded by a later pass.
-      fence("fold delete")
-      val snapNames = snap.map(_.getName).toSet
-      fs.listStatus(p).iterator
-        .filter { s =>
-          val name = s.getPath.getName
-          s.isFile && name.endsWith(".parquet") && {
-            snapNames.contains(name) || {
-              val fm = FoldRe.matcher(name)
-              if (fm.matches())
-                fm.group(1).toLong < currentBatchId ||
-                  (fm.group(1).toLong == currentBatchId &&
-                    fm.group(2) != attempt)
-              else if (name.startsWith("seed_")) true
-              else {
-                val bm = BatchFileRe.matcher(name)
-                bm.matches() && bm.group(1).toLong < gen
+      if (snap.size <= maxFiles || gen == currentBatchId ||
+          newerWriterVisible()) false
+      else {
+        // janitor crashed-fold staging first (single writer + lock held:
+        // nothing in _staging can be live)
+        val staging = new org.apache.hadoop.fs.Path(s"$indexDir/_staging")
+        if (fs.exists(staging)) fs.delete(staging, true)
+        val attempt = java.util.UUID.randomUUID().toString
+          .replace("-", "").take(8)
+        val tmp = new org.apache.hadoop.fs.Path(
+          s"$indexDir/_staging/fold_$attempt")
+        // Size the fold output from the snapshot's known bytes (guide §6):
+        // the fold plan has no shuffle, so AQE cannot coalesce it — without
+        // this a fold of many tiny batch installs keeps the oversharded
+        // layout instead of compacting it. Target bytes/file rides the
+        // streaming state conf; floor 1 (a compaction may legitimately
+        // produce one file), no cap needed (bytes-derived).
+        val snapBytes = snap.iterator.map(f =>
+          try fs.getFileStatus(f).getLen catch { case _: Throwable => 0L }).sum
+        val targetBytes = spark.conf
+          .getOption(graft.streaming.StatePartitions.BytesPerPartitionKey)
+          .map(_.toLong).getOrElse(64L * 1024 * 1024)
+        val foldParts = math.max(1L,
+          math.ceil(snapBytes.toDouble / targetBytes.toDouble).toLong).toInt
+        spark.read.schema(IndexSchema)
+          .parquet(snap.map(_.toString): _*)
+          .coalesce(foldParts)
+          .write.mode("overwrite").parquet(tmp.toString)
+        val parts = fs.listStatus(tmp).iterator
+          .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath).toSeq
+        val n = parts.size
+        fence("fold install")
+        if (newerWriterVisible())
+          throw new IllegalStateException(
+            s"fold of $indexDir aborted mid-fold install: batch files with " +
+              s"id >= $currentBatchId appeared since the locked snapshot — " +
+              "a newer writer incarnation is live; this fold's watermark " +
+              "is stale")
+        parts.zipWithIndex.foreach { case (f, i) =>
+          require(fs.rename(f, new org.apache.hadoop.fs.Path(p,
+            s"fold${currentBatchId}_${attempt}_p${i + 1}of$n.parquet")),
+            s"fold install into $indexDir failed")
+        }
+        fs.delete(tmp, true)
+        postFoldInstallHook()
+        // SNAPSHOT-SCOPED delete: exactly the folded sources plus artifacts
+        // identifiable as stale from the names alone — (a) fold attempts of
+        // generations ≤ ours that aren't the one just installed (older
+        // generations, partial/duplicate attempts: crash leftovers — no
+        // LIVE rival can be installing one while we hold the fenced lock),
+        // (b) seed files (superseded by ANY complete fold, and ours now
+        // exists), (c) `b<i>_` files with i < the snapshot generation
+        // (superseded before we started — never readable). A `b<i>_` file
+        // NOT in the snapshot with i ≥ gen is a rival install that landed
+        // after the snapshot: it SURVIVES to be folded by a later pass.
+        fence("fold delete")
+        val snapNames = snap.map(_.getName).toSet
+        fs.listStatus(p).iterator
+          .filter { s =>
+            val name = s.getPath.getName
+            s.isFile && name.endsWith(".parquet") && {
+              snapNames.contains(name) || {
+                val fm = FoldRe.matcher(name)
+                if (fm.matches())
+                  fm.group(1).toLong < currentBatchId ||
+                    (fm.group(1).toLong == currentBatchId &&
+                      fm.group(2) != attempt)
+                else if (name.startsWith("seed_")) true
+                else {
+                  val bm = BatchFileRe.matcher(name)
+                  bm.matches() && bm.group(1).toLong < gen
+                }
               }
             }
           }
-        }
-        .foreach(s => fs.delete(s.getPath, false))
-      true
-    } finally {
-      renewer.interrupt()
-      // JOIN before release: a renew already past its token check could
-      // otherwise re-PUT the lease after release deletes it, leaving an
-      // orphan lock that refuses all folds until the TTL expires
-      renewer.join()
-      lp.release(lfs, lock)
-    }
+          .foreach(s => fs.delete(s.getPath, false))
+        true
+      }
+    }.getOrElse(false) // a rival is folding
   }
 
   /** Stage-then-rename install (the ledger commit discipline): write to a
@@ -668,22 +625,14 @@ object StreamingDedup {
     * paths), rename the part files in under `<prefix><uuid>.parquet`.
     */
   private def install(df: DataFrame, dir: String, prefix: String): Unit = {
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
     val target = new org.apache.hadoop.fs.Path(dir)
-    val fs = target.getFileSystem(conf)
+    val fs =
+      target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     fs.mkdirs(target)
     val tmp = new org.apache.hadoop.fs.Path(
       s"$dir/_staging/${java.util.UUID.randomUUID()}")
     df.write.mode("overwrite").parquet(tmp.toString)
-    fs.listStatus(tmp).iterator
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .foreach { f =>
-        require(fs.rename(f.getPath, new org.apache.hadoop.fs.Path(target,
-          s"$prefix${java.util.UUID.randomUUID()}.parquet")),
-          s"folding install into $dir failed")
-      }
-    fs.delete(tmp, true)
+    graft.core.Ledger.install(fs, tmp, target, prefix)
   }
 
   private def removeBatchFiles(spark: SparkSession, dir: String,

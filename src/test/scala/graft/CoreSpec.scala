@@ -864,7 +864,7 @@ class CoreSpec extends SparkSpec {
     (0L until 6L).foreach(i => led.recordCompleted(spark, "r", Seq(i), 1L, 1L))
     val holderDone = new java.util.concurrent.atomic.AtomicBoolean(false)
     val holder = new Thread(() =>
-      led.withMaintenanceLock(spark, "slow-holder", lockTtlMs = 1000L) {
+      led.withMaintenanceLock(spark, "slow-holder", lockTtlMs = 1000L) { _ =>
         Thread.sleep(2600); holderDone.set(true)
       })
     holder.start()

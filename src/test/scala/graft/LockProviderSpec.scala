@@ -7,7 +7,25 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.tools.NonAtomicFileSystem
+import graft.operators.SimilarityOps
+import graft.streaming.StreamingDedup
+import graft.tools.{ClusteredEmbeddings, NonAtomicFileSystem}
+
+/** The `naf` store, except that a stage-then-rename INSTALL (a rename out
+  * of a `_staging` dir into a live one) first sleeps `delayMs`. That
+  * stretches a maintenance hold past a lease renew period without a hook
+  * in the holder; Spark's own commit renames stay inside `_staging`.
+  */
+object SlowInstallFileSystem { @volatile var delayMs: Long = 0L }
+
+class SlowInstallFileSystem extends NonAtomicFileSystem {
+  override def rename(src: Path, dst: Path): Boolean = {
+    val d = SlowInstallFileSystem.delayMs
+    if (d > 0 && src.toString.contains("/_staging/") &&
+        !dst.toString.contains("/_staging/")) Thread.sleep(d)
+    super.rename(src, dst)
+  }
+}
 
 /** Pluggable lock providers under an ADVERSARIAL store: the `naf:` scheme
   * simulates an object store without atomic create-exclusive (check-then-
@@ -177,7 +195,7 @@ class LockProviderSpec extends SparkSpec {
     // The r14 renewer discarded renew()'s Boolean: a holder whose lease
     // was stolen (GC pause past the TTL, or the lease race's residual
     // window) kept rewriting and deleting without exclusion. Now every
-    // destructive phase runs checkFence() — renewer flag + a token
+    // destructive phase runs the lease's fence — renewer flag + a token
     // re-verify through the provider — and must abort BEFORE damage.
     withNaf(lease = true) {
       val dir = "naf://" + Files.createTempDirectory("graft-naf-steal").toString
@@ -190,10 +208,11 @@ class LockProviderSpec extends SparkSpec {
       val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
       val victim = new Thread(() => {
         try {
-          led.withMaintenanceLock(spark, "steal-victim", lockTtlMs = 60000L) {
+          led.withMaintenanceLock(spark, "steal-victim",
+              lockTtlMs = 60000L) { fence =>
             inBody.countDown()
             stolen.await()
-            led.checkFence() // the gate every install/unlink phase runs
+            fence("steal-victim") // the gate every install/unlink phase runs
             throw new AssertionError("fence did not trip after the steal")
           }
         } catch { case t: Throwable => err.set(t) }
@@ -225,7 +244,7 @@ class LockProviderSpec extends SparkSpec {
       val lockPath = new Path(s"$dir/_maintenance/compact.lock")
       val fs = lockPath.getFileSystem(hconf)
       // TTL small enough that the renewer fires (period = max(ttl/4, 250))
-      led.withMaintenanceLock(spark, "renewing-hold", lockTtlMs = 1000L) {
+      led.withMaintenanceLock(spark, "renewing-hold", lockTtlMs = 1000L) { _ =>
         Thread.sleep(700) // at least one renew lands mid-hold
       }
       // release ran after interrupt+join: a renew past its token check
@@ -233,8 +252,97 @@ class LockProviderSpec extends SparkSpec {
       // all maintenance until the TTL
       assert(!fs.exists(lockPath), "orphan lease left after release")
       // and the lock is immediately re-acquirable
-      led.withMaintenanceLock(spark, "reacquire", lockTtlMs = 1000L)(())
+      led.withMaintenanceLock(spark, "reacquire", lockTtlMs = 1000L)(_ => ())
       assert(!fs.exists(lockPath))
+    }
+  }
+
+  /** One lease holder over a fixture that is past its threshold: `run(ttl)`
+    * is one maintenance call, true iff it rewrote; `refusal` is what that
+    * call answers while a rival holds `lock` (Left = the message of the
+    * IllegalStateException it throws).
+    */
+  private case class Holder(name: String, lock: Path, run: Long => Boolean,
+                            refusal: Either[String, Boolean])
+
+  private def holders(root: String): Seq[Holder] = {
+    val s = spark
+    import s.implicits._
+    val led = new Ledger(s"$root/ledger")
+    (0L until 8L).foreach(i => led.recordCompleted(s, "r", Seq(i), 1L, 1L))
+    val idx = s"$root/idx"
+    StreamingDedup.seedIndex(
+      Seq((10L, "the quick brown fox jumps over the lazy dog"))
+        .toDF("doc_id", "text"), "doc_id", "text", 3, idx)
+    (0 until 6).foreach(i => StreamingDedup.applyIncrementalBatch(
+      Seq((100L * i + 1, s"novel doc $i about subject ${i % 3} in detail"))
+        .toDF("doc_id", "text"), i.toLong, "doc_id", "text", 3,
+      idx, s"$root/out", maxIndexFiles = 0))
+    val ivf = s"$root/ivf"
+    val vecs = (0 until 64).map(i =>
+      (i.toLong, ClusteredEmbeddings.vector(42L, 4, 8, 0.25, i.toLong)))
+      .toDF("vec_id", "embedding")
+    val cents = SimilarityOps.ivfCentroids(vecs, "vec_id", "embedding",
+      k = 4, iters = 2, dimHint = 8)
+    SimilarityOps.saveIvfIndex(SimilarityOps.ivfLists(
+      vecs.filter(col("vec_id") < 32), "vec_id", "embedding", cents), cents, ivf)
+    (32 until 35).foreach(i => SimilarityOps.appendToIvfIndex(
+      vecs.filter(col("vec_id") === i.toLong), "vec_id", "embedding", ivf))
+    Seq(
+      Holder("ledger compact", new Path(s"$root/ledger/_maintenance/compact.lock"),
+        ttl => led.compact(s, maxFilesPerTable = 4, lockTtlMs = ttl)
+          .exists { case (_, (before, after)) => after < before },
+        Left("already in progress")),
+      Holder("dedup index fold", new Path(s"$idx/_maintenance/fold.lock"),
+        ttl => StreamingDedup.maintainIndexDir(s, idx, currentBatchId = 6L,
+          maxFiles = 4, lockTtlMs = ttl),
+        Right(false)),
+      Holder("IVF compaction", new Path(s"$ivf/_maintenance/compact.lock"),
+        ttl => SimilarityOps.compactIvfIndex(s, ivf, maxParts = 2,
+          lockTtlMs = ttl),
+        Right(false)))
+  }
+
+  test("every lease holder refuses a live rival untouched, then holds past a renew and leaves no lease") {
+    withNaf(lease = true) {
+      hconf.set("fs.naf.impl", classOf[SlowInstallFileSystem].getName)
+      val local = Files.createTempDirectory("graft-naf-holders")
+      // every file under the fixture root -> (bytes, mtime)
+      def files(): Map[String, (Long, Long)] = {
+        import scala.jdk.CollectionConverters._
+        val w = Files.walk(local)
+        try w.iterator().asScala.filter(Files.isRegularFile(_)).map(f =>
+          f.toString -> (Files.size(f), Files.getLastModifiedTime(f).toMillis))
+          .toMap
+        finally w.close()
+      }
+      try holders(s"naf://$local").foreach { h =>
+        val fs = h.lock.getFileSystem(hconf)
+        // 1. a live rival lease: the holder refuses and touches no file
+        fs.mkdirs(h.lock.getParent)
+        val rival = new LockProvider.Lease(60)
+        assert(rival.tryAcquire(fs, h.lock, 60000L), h.name)
+        val before = files()
+        val outcome =
+          try Right(h.run(60000L))
+          catch { case e: IllegalStateException => Left(e.getMessage) }
+        assert(outcome match {
+          case Left(msg) => h.refusal.left.exists(msg.contains)
+          case ran => ran == h.refusal
+        }, s"${h.name}: $outcome")
+        assert(files() == before, s"${h.name}: a refused holder touched files")
+        rival.release(fs, h.lock)
+        // 2. a hold longer than one renew period (TTL 1000 ms renews every
+        // 250 ms): it rewrites, releases after joining the renewer, and
+        // leaves no lease behind, so the lock is free at once
+        SlowInstallFileSystem.delayMs = 700L
+        try assert(h.run(1000L), s"${h.name}: over threshold, but no rewrite")
+        finally SlowInstallFileSystem.delayMs = 0L
+        assert(!fs.exists(h.lock), s"${h.name}: orphan lease after release")
+        val next = new LockProvider.Lease(60)
+        assert(next.tryAcquire(fs, h.lock, 1000L), s"${h.name}: not re-acquirable")
+        next.release(fs, h.lock)
+      } finally hconf.set("fs.naf.impl", classOf[NonAtomicFileSystem].getName)
     }
   }
 
