@@ -302,21 +302,22 @@ final class Ledger(dir: String) {
     * DataFrame written straight to the ledger — the index set never lands
     * on the driver (at 100 TB a run can have millions of indices). Returns
     * the recorded count, piggybacked on the write via `observe`.
+    *
+    * The commit's own values (wall time, row count, finished_at, …) reach
+    * the plan as DATA, a one-row table broadcast against the index set,
+    * not as literals: Spark inlines a long literal into the generated
+    * source, so each commit's new values compiled 2 new classes.
     */
   def recordCompleted(spark: SparkSession, runId: String, indices: DataFrame,
                       wallNs: Long, nRows: Long, peakMemoryBytes: Long,
                       gpuMemoryBytes: Option[Long], workerId: String): Long = {
     val obs = org.apache.spark.sql.Observation()
+    val values = Row(runId, "completed", wallNs, nRows, peakMemoryBytes,
+      gpuMemoryBytes.map(Long.box).orNull, workerId, System.currentTimeMillis())
+    val valueCols = tableSchemas("index_results").filterNot(_.name == "idx")
     appendRows(indices.select(col("idx").cast("long"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("status", lit("completed"))
-      .withColumn("wall_ns", lit(wallNs))
-      .withColumn("n_rows", lit(nRows))
-      .withColumn("peak_memory_bytes", lit(peakMemoryBytes))
-      .withColumn("gpu_memory_bytes",
-        gpuMemoryBytes.map(lit(_)).getOrElse(lit(null)).cast("long"))
-      .withColumn("worker_id", lit(workerId))
-      .withColumn("finished_at", lit(System.currentTimeMillis()))
+      .crossJoin(broadcast(spark.createDataFrame(java.util.List.of(values),
+        org.apache.spark.sql.types.StructType(valueCols))))
       .observe(obs, count(lit(1)).as("n")),
       "index_results", runId, singleFile = false)
     obs.get("n").asInstanceOf[Long]

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.Text
 
@@ -146,7 +148,6 @@ object DedupOps {
     */
   def removeDupSpans(df: DataFrame, idCol: String, textCol: String,
                      k: Int, minOtherDocs: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base = cached(df
       .select(col(idCol).as("id"), Text.tokens(col(textCol)).as("_ws")))
     val starts = base
@@ -462,14 +463,24 @@ object DedupOps {
     * resolution* step (pairs → clusters → one survivor each): every node
     * ends labeled with the minimum id reachable in its component.
     *
-    * ADAPTIVE default (the caller no longer needs to know the graph
-    * shape): min-label propagation — O(diameter) rounds, the fastest path
-    * for the shallow clusters dedup actually produces — runs up to
-    * `maxIter` rounds; if the component structure is deeper than that, the
-    * probe is abandoned and the large-star/small-star algorithm (O(log²)
-    * rounds regardless of diameter, `connectedComponentsStars`) finishes
-    * the job instead of throwing. Identical output on both paths
-    * (spec-pinned), so the escalation is invisible except in wall time.
+    * Three tiers behind one bound, with one output (spec-pinned equal on
+    * every fixture), so the caller never needs to know the graph's size or
+    * shape:
+    *  1. DRIVER. The edge set is persisted and counted once. When its label
+    *     table (a `(node, root)` row of two longs per endpoint, 32 bytes an
+    *     edge) fits [[graft.core.DriverBound]] — Spark's broadcast
+    *     threshold, about 300k edges at the 10 MB default — the edges are
+    *     collected, union-find with the minimum id as root labels them, and
+    *     the labels join back to `ids` as a broadcast `LocalRelation`: no
+    *     checkpoint and no propagation round, whatever the depth.
+    *  2. MIN-LABEL PROBE. Above the bound, or when `checkpointDir` asks for
+    *     reliable-checkpoint fault tolerance, min-label propagation —
+    *     O(diameter) rounds, the fastest distributed path for the shallow
+    *     clusters dedup produces — runs up to `maxIter` rounds.
+    *  3. STARS. A component deeper than the probe budget abandons the probe
+    *     for the large-star/small-star algorithm
+    *     ([[connectedComponentsStars]], O(log²) rounds regardless of
+    *     diameter) instead of throwing.
     * The probe budget deliberately equals the old fail-loud budget: every
     * graph that converged before runs the identical rounds (a shorter
     * probe was measured costing the mid-depth tier — q_semantic_dedup's
@@ -477,16 +488,14 @@ object DedupOps {
     * cost on genuinely deep graphs is bounded by maxIter cheap rounds
     * before the O(log²) path takes over). Callers that need the round
     * count (or strict fail-loud min-label semantics) use
-    * [[connectedComponentsRounds]] / [[connectedComponentsStarsRounds]].
+    * [[connectedComponentsRounds]] / [[connectedComponentsStarsRounds]],
+    * which are always distributed.
     */
   def connectedComponents(ids: DataFrame, idCol: String, pairs: DataFrame,
                           maxIter: Int = 20,
                           checkpointDir: Option[String] = None): DataFrame =
-    minLabelRoundsOpt(ids, idCol, pairs, maxIter, checkpointDir) match {
-      case Some((labels, _)) => labels
-      case None => connectedComponentsStars(ids, idCol, pairs,
-        checkpointDir = checkpointDir)
-    }
+    tiered(ids, idCol, pairs, maxIter, checkpointDir)(
+      driverLabels(ids, idCol, _), identity)
 
   /** [[connectedComponents]] plus the number of propagation rounds it took
     * to converge — the scale-measurement surface (rounds ≈ component
@@ -495,80 +504,201 @@ object DedupOps {
     */
   def connectedComponentsRounds(ids: DataFrame, idCol: String, pairs: DataFrame,
                                 maxIter: Int = 20,
-                                checkpointDir: Option[String] = None): (DataFrame, Int) =
+                                checkpointDir: Option[String] = None): (DataFrame, Int) = {
+    val edges = edgeSet(pairs)
     // Never return silently-wrong labels: a component with diameter > maxIter
     // would diverge from the recursive-CTE oracle. Callers with deep chains
     // raise maxIter, switch to stars, or use the adaptive default.
-    minLabelRoundsOpt(ids, idCol, pairs, maxIter, checkpointDir).getOrElse(
-      throw new IllegalStateException(
-        s"connectedComponents did not converge after $maxIter rounds; " +
-          "raise maxIter or use large-star/small-star for deep components"))
+    try minLabelRoundsOpt(ids, idCol, edges, maxIter, checkpointDir)
+    finally edges.unpersist(false)
+  }.getOrElse(throw new IllegalStateException(
+    s"connectedComponents did not converge after $maxIter rounds; " +
+      "raise maxIter or use large-star/small-star for deep components"))
 
-  /** Min-label propagation core: `Some(labels, rounds)` on convergence
-    * within `maxIter`, `None` when the budget runs out (the adaptive entry
-    * point's escalation signal). The materialized edge set is dropped on
-    * BOTH exits — labels are checkpointed each round, so nothing returned
-    * references it.
+  /** The edge set `(a, b)` of `pairs`, persisted; its caller unpersists it.
+    * Materialized ONCE (guide §2.4): the caller's `pairs` is typically an
+    * expensive LSH-band + verify chain, which both the driver tier's
+    * collect and min-label's two symmetrized union branches then read from
+    * the cache. persist — NOT localCheckpoint — because a local
+    * checkpoint's RDD blocks survive clearCache()/unpersist and only
+    * ContextCleaner GC frees them: at a 100× clone-dense edge set (tools
+    * ScaleUp sf10, tens of millions of pairs) the leaked blocks pressured
+    * every later query in the session (measured: q_pq_topk 68→92 s at sf10
+    * before this was a persist).
     */
-  private def minLabelRoundsOpt(ids: DataFrame, idCol: String, pairs: DataFrame,
+  private def edgeSet(pairs: DataFrame): DataFrame =
+    pairs.select(col("da").as("a"), col("db").as("b"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The tier walk of [[connectedComponents]]: `onDriver` builds the result
+    * from the driver's union-find roots, `distributed` from a distributed
+    * tier's `(idCol, component)` labels. The edge set is dropped before
+    * either result is returned: neither references it.
+    */
+  private def tiered(ids: DataFrame, idCol: String, pairs: DataFrame,
+                     maxIter: Int, checkpointDir: Option[String])(
+      onDriver: DriverRoots => DataFrame,
+      distributed: DataFrame => DataFrame): DataFrame = {
+    val edges = edgeSet(pairs)
+    val resolved =
+      try {
+        (if (checkpointDir.isEmpty) driverRoots(ids, idCol, edges) else None)
+          .map(onDriver)
+          .orElse(minLabelRoundsOpt(ids, idCol, edges, maxIter, checkpointDir)
+            .map { case (labels, _) => distributed(labels) })
+      } finally edges.unpersist(false)
+    resolved.getOrElse(distributed(connectedComponentsStars(ids, idCol, pairs,
+      checkpointDir = checkpointDir)))
+  }
+
+  /** The driver tier's union-find result: `roots` is a `(node, root)`
+    * `LocalRelation` over every pair endpoint (both long; root = the
+    * minimum endpoint of the node's edge component), and `idField` the id
+    * column as the min-label path types it (the common type of the id and
+    * both pair columns, nullable if any of them is).
+    */
+  private final case class DriverRoots(roots: DataFrame, idField: StructField)
+
+  /** A `(node, root)` label row is two longs, and an edge adds at most two
+    * rows: the driver tier's bytes per edge.
+    */
+  private val LabelBytesPerEdge = 32L
+
+  private val IntegralIds: Set[DataType] =
+    Set(ByteType, ShortType, IntegerType, LongType)
+
+  /** Tier 1's gate and union-find over the persisted `edges`: `None` (the
+    * distributed tiers run) when the driver bound is off or too small for
+    * the edge set, when the ids are not integral (the union-find keys are
+    * longs) or when an endpoint is null. Counting materializes the edge
+    * cache; the collect then reads it.
+    */
+  private def driverRoots(ids: DataFrame, idCol: String,
+                          edges: DataFrame): Option[DriverRoots] = {
+    val spark = ids.sparkSession
+    val idField = scala.util.Try(ids.select(col(idCol).as("node"))
+      .union(edges.select(col("a").as("node")))
+      .union(edges.select(col("b").as("node"))).schema.head).toOption
+    // with the bound off the edges are not counted here: the probe counts
+    // them inside its width scope, as it always has
+    if (!idField.exists(f => IntegralIds(f.dataType)) ||
+        !graft.core.DriverBound.fits(spark, 0L) ||
+        !graft.core.DriverBound.fits(spark, edges.count() * LabelBytesPerEdge))
+      return None
+    val rows = edges.select(col("a").cast(LongType), col("b").cast(LongType))
+      .collect()
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val (nodes, roots) = minRoots(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+    val schema = StructType(Seq(
+      StructField("node", LongType, idField.get.nullable),
+      StructField("root", LongType, nullable = false)))
+    val table = java.util.Arrays.asList(
+      nodes.indices.map(i => Row(nodes(i), roots(i))): _*)
+    Some(DriverRoots(spark.createDataFrame(table, schema), idField.get))
+  }
+
+  /** Union-find with the minimum id as every root: the distinct endpoints
+    * of the edge list `(a(i), b(i))` in ascending order and, aligned with
+    * them, the minimum endpoint of each one's component. Nodes are dense
+    * indices into the sorted endpoints, and a union hangs the larger root
+    * under the smaller, so a component's root is its minimum.
+    */
+  private[operators] def minRoots(a: Array[Long],
+                                  b: Array[Long]): (Array[Long], Array[Long]) = {
+    val nodes = (a ++ b).distinct.sorted
+    val parent = Array.range(0, nodes.length)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x // path compression
+      while (parent(y) != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    def at(v: Long): Int = java.util.Arrays.binarySearch(nodes, v)
+    for (i <- a.indices) {
+      val (ra, rb) = (find(at(a(i))), find(at(b(i))))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    (nodes, nodes.indices.map(j => nodes(find(j))).toArray)
+  }
+
+  /** Tier 1's `(idCol, component)` relation: what min-label propagation
+    * converges to, as one plan over `ids` and the broadcast roots, with one
+    * shuffle. Every row of `ids` is listed (a duplicate id as often as it
+    * occurs); an id no pair touches keeps its own id. An edge component is
+    * labelled with the minimum id of `ids` in it, and its endpoints absent
+    * from `ids` are listed once under that label (propagation reaches
+    * them) — unless no id reaches the component, which then has no rows.
+    */
+  private def driverLabels(ids: DataFrame, idCol: String,
+                           d: DriverRoots): DataFrame = {
+    val present = ids.select(col(idCol).cast(LongType).as("node"))
+      .join(broadcast(d.roots), Seq("node"), "left")
+      .select(col("node"), coalesce(col("root"), col("node")).as("key"),
+        lit(true).as("present"))
+    val endpoints = d.roots.select(col("node"), col("root").as("key"),
+      lit(false).as("present"))
+    // both windows partition within `key`, so they share one exchange
+    present.union(endpoints)
+      .select(col("node"), col("present"),
+        min(when(col("present"), col("node")))
+          .over(Window.partitionBy("key")).as("component"),
+        max(col("present")).over(Window.partitionBy("key", "node")).as("in_ids"))
+      .filter(col("component").isNotNull && (col("present") || !col("in_ids")))
+      .select(col("node").cast(d.idField.dataType).as(idCol), col("component"))
+  }
+
+  /** Min-label propagation core over the caller's persisted `edges`:
+    * `Some(labels, rounds)` on convergence within `maxIter`, `None` when
+    * the budget runs out (the adaptive entry point's escalation signal).
+    * Labels are checkpointed each round, so nothing returned references
+    * `edges`; on any exit but convergence (escalation or a throw) the last
+    * round's checkpoint is dropped too — with a `checkpointDir` that is a
+    * full label snapshot on storage.
+    */
+  private def minLabelRoundsOpt(ids: DataFrame, idCol: String, edges: DataFrame,
                                 maxIter: Int,
                                 checkpointDir: Option[String]): Option[(DataFrame, Int)] = {
     val ckpt = new CkptCycle(ids.sparkSession, checkpointDir)
-    def checkpointed(df: DataFrame): (DataFrame, Set[String]) = ckpt.checkpointed(df)
-    def dropCkptDirs(dirs: Set[String]): Unit = ckpt.dropCkptDirs(dirs)
-    var (labels, labelDirs) = checkpointed(
+    var (labels, labelDirs) = ckpt.checkpointed(
       ids.select(col(idCol).as("node"), col(idCol).cast("long").as("label")))
-    // One cheap count over the just-checkpointed labels sizes the loop:
-    // every round re-pays the shuffle width in per-stage constants, so the
-    // width follows the label-set size (capped at the session's configured
-    // parallelism — production-scale graphs keep cluster width).
-    val nNodes = labels.count()
     var converged = false
-    var it = 0
-    // Materialize the edge set ONCE before symmetrizing (guide §2.4): the
-    // caller's `pairs` is typically an expensive LSH-band + verify chain,
-    // and the old persist-of-a-union evaluated that subtree TWICE (both
-    // union branches inside the union's one materialization). Persist +
-    // eager count (inside the scaled scope, where the old first-round
-    // materialization also ran) runs the chain once; both union branches
-    // then read the cache. persist — NOT localCheckpoint — because a
-    // local checkpoint's RDD blocks survive clearCache()/unpersist and
-    // only ContextCleaner GC frees them: at a 100× clone-dense edge set
-    // (tools ScaleUp sf10, tens of millions of pairs) the leaked blocks
-    // pressured every later query in the session (measured: q_pq_topk
-    // 68→92 s at sf10 before this was a persist).
-    val edges = pairs.select(col("da").as("a"), col("db").as("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sym = edges.union(edges.select(col("b").as("a"), col("a").as("b")))
-    graft.core.AdaptiveWidth.scaled(ids.sparkSession, nNodes) {
-    edges.count()
-    while (!converged && it < maxIter) {
-      // Convergence detection piggybacks on the propagation action itself:
-      // the old labels are LEFT-joined below the checkpoint and the
-      // changed-count rides an `observe` on the same job — one action per
-      // round instead of propagation + a separate count job.
-      val obs = org.apache.spark.sql.Observation()
-      val prop = labels.join(sym, col("node") === col("a"))
-        .select(col("b").as("node"), col("label"))
-        .union(labels)
-        .groupBy(col("node")).agg(min(col("label")).as("label"))
-        .join(labels.withColumnRenamed("label", "_old"), Seq("node"), "left")
-        .observe(obs, sum(when(col("_old").isNull ||
-          col("label") =!= col("_old"), 1L).otherwise(0L)).as("changed"))
-        .select("node", "label")
-      val (propagated, newDirs) = checkpointed(prop)
-      val changed = obs.get("changed").asInstanceOf[Long]
-      dropCkptDirs(labelDirs) // old labels no longer referenced past here
-      labels = propagated
-      labelDirs = newDirs
-      converged = changed == 0
-      it += 1
-    }
-    }
-    edges.unpersist(false) // labels are checkpointed; nothing references edges
-    if (!converged) None
-    else Some((labels.withColumnRenamed("node", idCol)
-      .withColumnRenamed("label", "component"), it))
+    try {
+      // One cheap count over the just-checkpointed labels sizes the loop:
+      // every round re-pays the shuffle width in per-stage constants, so the
+      // width follows the label-set size (capped at the session's configured
+      // parallelism — production-scale graphs keep cluster width).
+      val nNodes = labels.count()
+      var it = 0
+      val sym = edges.union(edges.select(col("b").as("a"), col("a").as("b")))
+      graft.core.AdaptiveWidth.scaled(ids.sparkSession, nNodes) {
+      edges.count() // materialized inside the scaled scope
+      while (!converged && it < maxIter) {
+        // Convergence detection piggybacks on the propagation action itself:
+        // the old labels are LEFT-joined below the checkpoint and the
+        // changed-count rides an `observe` on the same job — one action per
+        // round instead of propagation + a separate count job.
+        val obs = org.apache.spark.sql.Observation()
+        val prop = labels.join(sym, col("node") === col("a"))
+          .select(col("b").as("node"), col("label"))
+          .union(labels)
+          .groupBy(col("node")).agg(min(col("label")).as("label"))
+          .join(labels.withColumnRenamed("label", "_old"), Seq("node"), "left")
+          .observe(obs, sum(when(col("_old").isNull ||
+            col("label") =!= col("_old"), 1L).otherwise(0L)).as("changed"))
+          .select("node", "label")
+        val (propagated, newDirs) = ckpt.checkpointed(prop)
+        ckpt.dropCkptDirs(labelDirs) // old labels no longer referenced past here
+        labels = propagated
+        labelDirs = newDirs
+        converged = obs.get("changed").asInstanceOf[Long] == 0
+        it += 1
+      }
+      }
+      if (!converged) None
+      else Some((labels.withColumnRenamed("node", idCol)
+        .withColumnRenamed("label", "component"), it))
+    } finally if (!converged) ckpt.dropCkptDirs(labelDirs)
   }
 
   /** Connected components by alternating large-star / small-star rounds
@@ -631,24 +761,28 @@ object DedupOps {
     var (edges, edgeDirs) = ckpt.checkpointed(
       pairs.select(col("da").cast("long").as("u"), col("db").cast("long").as("v"))
         .filter(col("u") =!= col("v")).distinct())
-    var prev = summary(edges)
     var converged = false
     var it = 0
-    // loop width follows the edge-set size (see minLabelRoundsOpt)
-    graft.core.AdaptiveWidth.scaled(spark, prev._1) {
-    while (!converged && it < maxIter) {
-      val (next, newDirs) = ckpt.checkpointed(smallStar(largeStar(edges)))
-      val cur = summary(next)
-      ckpt.dropCkptDirs(edgeDirs)
-      edges = next
-      edgeDirs = newDirs
-      converged = cur == prev
-      prev = cur
-      it += 1
-    }
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStars did not converge after $maxIter rounds")
+    // the returned labels reference the last round's checkpoint; any other
+    // exit drops it (with a checkpointDir, a full edge snapshot on storage)
+    try {
+      var prev = summary(edges)
+      // loop width follows the edge-set size (see minLabelRoundsOpt)
+      graft.core.AdaptiveWidth.scaled(spark, prev._1) {
+      while (!converged && it < maxIter) {
+        val (next, newDirs) = ckpt.checkpointed(smallStar(largeStar(edges)))
+        ckpt.dropCkptDirs(edgeDirs)
+        edges = next
+        edgeDirs = newDirs
+        val cur = summary(next)
+        converged = cur == prev
+        prev = cur
+        it += 1
+      }
+      }
+      if (!converged) throw new IllegalStateException(
+        s"connectedComponentsStars did not converge after $maxIter rounds")
+    } finally if (!converged) ckpt.dropCkptDirs(edgeDirs)
     // converged edges form stars u -> root; nodes absent from any pair are
     // their own singleton components
     val labels = edges.select(col("u").as("node"), col("v").as("component"))
@@ -707,14 +841,23 @@ object DedupOps {
     */
   def resolveClustersBest(ids: DataFrame, idCol: String, pairs: DataFrame,
                           scoreCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cc = connectedComponents(ids.select(col(idCol)), idCol, pairs)
-    val w = Window.partitionBy("component")
-      .orderBy(col(scoreCol).desc, col(idCol).asc)
-    cc.join(ids, idCol :: Nil)
-      .withColumn("_rk", row_number().over(w))
+    def best(clustered: DataFrame, cluster: Column): DataFrame = clustered
+      .withColumn("_rk", row_number().over(Window.partitionBy(cluster)
+        .orderBy(col(scoreCol).desc, col(idCol).asc)))
       .withColumn("is_survivor", col("_rk") === 1)
       .drop("_rk")
+    tiered(ids.select(col(idCol)), idCol, pairs, 20, None)(
+      d => { // one pass over `ids`: label and rank under one partitioning
+        val id = col(idCol).cast(LongType)
+        val keyed = ids
+          .join(broadcast(d.roots.toDF("_node", "_root")), id === col("_node"), "left")
+          .withColumn("_key", coalesce(col("_root"), id))
+          .withColumn("component", min(id).over(Window.partitionBy("_key")))
+        best(keyed, col("_key")).select(
+          (col(idCol).cast(d.idField.dataType).as(idCol) +: col("component") +:
+            ids.columns.filter(_ != idCol).map(col) :+ col("is_survivor")): _*)
+      },
+      cc => best(cc.join(ids, idCol :: Nil), col("component")))
   }
 
   /** SimHash: per-token hash bits weighted ±1 and summed per bit position;

@@ -146,4 +146,25 @@ class LedgerContractSpec extends SparkSpec {
     }
     assert(led.runMeta(s, r) == ((None, None)))
   }
+
+  test("a second distributed commit with new values compiles no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft-ledger-codegen").toString
+    val led = new Ledger(dir)
+    val idx = spark.range(0, 8).toDF("idx")
+    def commit(run: String, v: Long): (Long, Long) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val n = led.recordCompleted(spark, run, idx, v, 2 * v, 3 * v, None, s"w$v")
+      (n, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    }
+    assert(commit("r1", 10L)._1 == 8L) // warms the plan shape
+    Thread.sleep(2) // a new finished_at too
+    assert(commit("r2", 11L) == ((8L, 0L)), "(observed rows, new classes)")
+    val got = spark.read.parquet(s"$dir/index_results")
+      .filter(col("run_id") === "r2")
+      .select("status", "wall_ns", "n_rows", "peak_memory_bytes", "worker_id")
+      .distinct().collect().map(_.toSeq)
+    assert(got.toSeq == Seq(Seq("completed", 11L, 22L, 33L, "w11")))
+  }
 }

@@ -10,6 +10,16 @@ import graft.operators.DedupOps
   */
 class TextDedupSpec extends SparkSpec {
 
+  /** Run `f` with the connected-components driver tier off (Spark's
+    * broadcast threshold at -1), restoring the session's value after.
+    */
+  private def withoutDriverTier[A](f: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try f finally spark.conf.set(key, prev)
+  }
+
   private def docs = {
     val s = spark
     import s.implicits._
@@ -330,13 +340,16 @@ class TextDedupSpec extends SparkSpec {
     // a 200-deep chain: min-label needs ~200 rounds, far past the adaptive
     // probe budget AND past maxIter=20 (the strict form throws on this
     // graph) — the default entry point must converge via the stars
-    // escalation and label every node with the chain minimum
+    // escalation and label every node with the chain minimum. The driver
+    // tier is off, so the entry point probes and escalates.
+    withoutDriverTier {
     val n = 200L
     val ids = (1L to n).toDF("doc_id")
     val chain = (1L until n).map(i => (i, i + 1)).toDF("da", "db")
     val r = graft.operators.DedupOps.connectedComponents(ids, "doc_id", chain)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r.size == n && (1L to n).forall(r(_) == 1L))
+    }
   }
 
   test("simhashPairs 64-bit default: lossless vs brute popcount on full-width sigs") {
@@ -370,6 +383,8 @@ class TextDedupSpec extends SparkSpec {
   test("connectedComponentsStars == min-label CC; deep chains converge in log rounds") {
     val s = spark
     import s.implicits._
+    // the driver tier is off, so `expected` comes from min-label propagation
+    withoutDriverTier {
     // clustered random graph: 60 nodes, triples + extra random intra-cluster
     // edges, plus isolated singletons
     val rng = new scala.util.Random(13)
@@ -401,6 +416,7 @@ class TextDedupSpec extends SparkSpec {
       chainIds, "doc_id", chain, maxIter = 15)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert((1L to n).forall(r(_) == 1L))
+    }
   }
 
   test("crossSourceOverlap: shared shingles and contaminated docs per pair") {
@@ -453,6 +469,115 @@ class TextDedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r(1L) == r(2L))
     assert(r(1L) != r(4L))
+  }
+
+  test("connectedComponents: driver tier == min-label path == stars, schema and rows") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    // `escalates`: min-label runs out of rounds and the distributed path
+    // ends in stars, whose `coalesce`d component is non-null — so there,
+    // and against stars, names and types are compared, not nullability.
+    // `stars`: stars types the id LONG, lists only ids of `ids` and labels
+    // a component with its minimum endpoint, in `ids` or not; it is
+    // compared on the fixtures inside that contract.
+    // `uniqueIds`: resolveClustersBest's distributed form joins a
+    // duplicated id's rows against each other (m² rows), its driver form
+    // lists each row once; it is compared where ids are unique.
+    case class Fixture(name: String, ids: DataFrame, pairs: DataFrame,
+                       escalates: Boolean = false, stars: Boolean = true,
+                       uniqueIds: Boolean = true)
+    def chain(name: String, n: Long) = Fixture(name, (1L to n).toDF("doc_id"),
+      (1L until n).map(i => (i, i + 1)).toDF("da", "db"), escalates = n > 20)
+    val rng = new scala.util.Random(13) // the stars spec's clustered graph
+    val clustered = (0 until 20).flatMap { c =>
+      val ids = (0 until 3).map(k => (c * 3 + k).toLong)
+      ids.zip(ids.tail :+ ids.head) ++
+        (if (rng.nextBoolean()) Seq((ids(0), ids(2))) else Nil)
+    }
+    val fixtures = Seq(
+      Fixture("7 nodes", (1L to 7L).toDF("doc_id"),
+        Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("da", "db")),
+      chain("12-chain", 12), chain("200-chain", 200),
+      Fixture("66-node clustered", (0L until 66L).toDF("doc_id"),
+        clustered.toDF("da", "db")),
+      Fixture("split fixture", (1L to 6L).toDF("doc_id"),
+        Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("da", "db")),
+      Fixture("empty pairs", (1L to 5L).toDF("doc_id"),
+        Seq.empty[(Long, Long)].toDF("da", "db")),
+      Fixture("self-loops", (1L to 5L).toDF("doc_id"),
+        Seq((1L, 1L), (2L, 3L), (3L, 3L)).toDF("da", "db")),
+      Fixture("duplicate and reversed pairs", (1L to 6L).toDF("doc_id"),
+        Seq((1L, 2L), (2L, 1L), (1L, 2L), (4L, 3L), (3L, 4L)).toDF("da", "db")),
+      Fixture("Int ids", (1 to 6).toDF("doc_id"),
+        Seq((1, 2), (2, 3), (5, 6)).toDF("da", "db"), stars = false),
+      Fixture("Int ids, long pairs", (1 to 6).toDF("doc_id"),
+        Seq((2L, 3L), (5L, 6L)).toDF("da", "db"), stars = false),
+      Fixture("duplicate ids", Seq(1L, 1L, 2L, 3L, 3L, 4L, 5L).toDF("doc_id"),
+        Seq((1L, 2L), (3L, 4L)).toDF("da", "db"), uniqueIds = false),
+      Fixture("endpoint absent from ids", (1L to 6L).toDF("doc_id"),
+        // 9 joins 2 to 3; 0 < 4 labels nothing; {7, 8} holds no id
+        Seq((1L, 2L), (2L, 9L), (9L, 3L), (0L, 4L), (7L, 8L)).toDF("da", "db"),
+        stars = false))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString(","))
+      .toSeq
+    def shape(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    def checkpointed(df: DataFrame) =
+      df.queryExecution.logical.collectFirst { case r: LogicalRDD => r }.isDefined
+    for (f <- fixtures) {
+      def best() = DedupOps.resolveClustersBest(
+        f.ids.withColumn("score", col("doc_id") * 7919 % 13), "doc_id", f.pairs,
+        "score")
+      val (driver, driverBest) =
+        (DedupOps.connectedComponents(f.ids, "doc_id", f.pairs), best())
+      val (dist, distBest) = withoutDriverTier {
+        (DedupOps.connectedComponents(f.ids, "doc_id", f.pairs), best())
+      }
+      assert(!checkpointed(driver), s"${f.name}: the driver tier ran")
+      assert(checkpointed(dist), s"${f.name}: the distributed tier ran")
+      if (f.escalates) assert(shape(driver) == shape(dist), s"${f.name}: schema")
+      else assert(driver.schema == dist.schema, s"${f.name}: schema")
+      assert(rows(driver) == rows(dist), s"${f.name}: rows")
+      if (f.uniqueIds) {
+        if (f.escalates) assert(shape(driverBest) == shape(distBest))
+        else assert(driverBest.schema == distBest.schema, s"${f.name}: best schema")
+        assert(rows(driverBest) == rows(distBest), s"${f.name}: best rows")
+      }
+      if (f.stars) {
+        val stars = DedupOps.connectedComponentsStars(f.ids, "doc_id", f.pairs)
+        assert(shape(stars) == shape(dist), s"${f.name}: stars schema")
+        assert(rows(stars) == rows(dist), s"${f.name}: stars rows")
+      }
+    }
+  }
+
+  test("connectedComponents with a checkpointDir leaves only the checkpoints its labels reference") {
+    val s = spark
+    import s.implicits._
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.LogicalRDD
+    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt-leak").toString
+    val n = 200L // past the min-label probe: escalates to stars
+    val ids = (1L to n).toDF("doc_id")
+    val chain = (1L until n).map(i => (i, i + 1)).toDF("da", "db")
+    withoutDriverTier {
+      val r = DedupOps.connectedComponents(ids, "doc_id", chain,
+        checkpointDir = Some(dir))
+      def local(p: String) = new Path(p).toUri.getPath
+      val referenced = r.queryExecution.logical
+        .collect { case l: LogicalRDD => l.rdd.getCheckpointFile }.flatten
+        .map(local).toSet
+      // each tier's setCheckpointDir opens its own subdirectory of `dir`
+      val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+      val onStorage = fs.listStatus(new Path(dir))
+        .flatMap(sub => fs.listStatus(sub.getPath))
+        .map(x => local(x.getPath.toString)).toSet
+      assert(referenced.nonEmpty)
+      assert(onStorage == referenced)
+      val got = r.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+      assert(got.size == n && (1L to n).forall(got(_) == 1L))
+    }
   }
 
   test("resolveClustersBest keeps the highest-scoring copy per component") {
