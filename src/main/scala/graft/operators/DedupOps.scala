@@ -551,13 +551,23 @@ object DedupOps {
       checkpointDir = checkpointDir)))
   }
 
-  /** The driver tier's union-find result: `roots` is a `(node, root)`
-    * `LocalRelation` over every pair endpoint (both long; root = the
-    * minimum endpoint of the node's edge component), and `idField` the id
-    * column as the min-label path types it (the common type of the id and
-    * both pair columns, nullable if any of them is).
+  /** A `(node, root)` relation over the pair endpoints (both long; root =
+    * the minimum endpoint of the node's edge component), and `idField` the
+    * id column as the min-label path types it (the common type of the id
+    * and both pair columns, nullable if any of them is). The driver tier's
+    * union-find gives a `local` `LocalRelation` that [[driverLabels]]
+    * broadcasts; stars' converged edges give a distributed one.
     */
-  private final case class DriverRoots(roots: DataFrame, idField: StructField)
+  private final case class DriverRoots(roots: DataFrame, idField: StructField,
+                                       local: Boolean = true)
+
+  /** The common type of `ids`' id column and every column of `ends`, or
+    * None when they have none.
+    */
+  private def idFieldOf(ids: DataFrame, idCol: String,
+                        ends: DataFrame): Option[StructField] =
+    scala.util.Try(ends.columns.foldLeft(ids.select(col(idCol).as("node")))(
+      (u, c) => u.union(ends.select(col(c).as("node")))).schema.head).toOption
 
   /** A `(node, root)` label row is two longs, and an edge adds at most two
     * rows: the driver tier's bytes per edge.
@@ -576,9 +586,7 @@ object DedupOps {
   private def driverRoots(ids: DataFrame, idCol: String,
                           edges: DataFrame): Option[DriverRoots] = {
     val spark = ids.sparkSession
-    val idField = scala.util.Try(ids.select(col(idCol).as("node"))
-      .union(edges.select(col("a").as("node")))
-      .union(edges.select(col("b").as("node"))).schema.head).toOption
+    val idField = idFieldOf(ids, idCol, edges)
     // with the bound off the edges are not counted here: the probe counts
     // them inside its width scope, as it always has
     if (!idField.exists(f => IntegralIds(f.dataType)) ||
@@ -622,9 +630,9 @@ object DedupOps {
     (nodes, nodes.indices.map(j => nodes(find(j))).toArray)
   }
 
-  /** Tier 1's `(idCol, component)` relation: what min-label propagation
-    * converges to, as one plan over `ids` and the broadcast roots, with one
-    * shuffle. Every row of `ids` is listed (a duplicate id as often as it
+  /** The `(idCol, component)` relation of tier 1 and of stars: what
+    * min-label propagation converges to, as one plan over `ids` and the
+    * roots (broadcast when `local`), with one shuffle. Every row of `ids` is listed (a duplicate id as often as it
     * occurs); an id no pair touches keeps its own id. An edge component is
     * labelled with the minimum id of `ids` in it, and its endpoints absent
     * from `ids` are listed once under that label (propagation reaches
@@ -633,7 +641,7 @@ object DedupOps {
   private def driverLabels(ids: DataFrame, idCol: String,
                            d: DriverRoots): DataFrame = {
     val present = ids.select(col(idCol).cast(LongType).as("node"))
-      .join(broadcast(d.roots), Seq("node"), "left")
+      .join(if (d.local) broadcast(d.roots) else d.roots, Seq("node"), "left")
       .select(col("node"), coalesce(col("root"), col("node")).as("key"),
         lit(true).as("present"))
     val endpoints = d.roots.select(col("node"), col("root").as("key"),
@@ -708,7 +716,10 @@ object DedupOps {
     * minimum in O(log²) rounds regardless of DIAMETER — the swap-in for
     * deep chains or web-scale skew where min-label propagation's
     * O(diameter) rounds would dominate. Same inputs and output schema as
-    * `connectedComponents`; results are identical (spec-pinned).
+    * `connectedComponents`; results are identical (spec-pinned): the
+    * converged stars are labelled by the driver tier's rule
+    * ([[driverLabels]]), so endpoints absent from `ids` and the id type
+    * come out as on the other tiers.
     *
     *  - large-star: per node u, attach every LARGER neighbor to
     *    m = min(Γ(u) ∪ u);
@@ -783,13 +794,13 @@ object DedupOps {
       if (!converged) throw new IllegalStateException(
         s"connectedComponentsStars did not converge after $maxIter rounds")
     } finally if (!converged) ckpt.dropCkptDirs(edgeDirs)
-    // converged edges form stars u -> root; nodes absent from any pair are
-    // their own singleton components
-    val labels = edges.select(col("u").as("node"), col("v").as("component"))
-    (ids.select(col(idCol).cast("long").as("node"))
-      .join(labels, Seq("node"), "left")
-      .select(col("node").as(idCol),
-        coalesce(col("component"), col("node")).as("component")), it)
+    // converged edges form stars u -> root on each component's minimum
+    // endpoint; with the roots themselves they label like the driver tier
+    val roots = edges.select(col("u").as("node"), col("v").as("root"))
+      .union(edges.select(col("v").as("node"), col("v").as("root"))).distinct()
+    val idField = idFieldOf(ids, idCol, pairs.select("da", "db"))
+      .getOrElse(StructField("node", LongType))
+    (driverLabels(ids, idCol, DriverRoots(roots, idField, local = false)), it)
   }
 
   /** Dedup resolution: (id, component, is_survivor) — survivor = min id per
@@ -857,7 +868,8 @@ object DedupOps {
           (col(idCol).cast(d.idField.dataType).as(idCol) +: col("component") +:
             ids.columns.filter(_ != idCol).map(col) :+ col("is_survivor")): _*)
       },
-      cc => best(cc.join(ids, idCol :: Nil), col("component")))
+      // a duplicated id has one label row per occurrence: join one of them
+      cc => best(cc.distinct().join(ids, idCol :: Nil), col("component")))
   }
 
   /** SimHash: per-token hash bits weighted ±1 and summed per bit position;

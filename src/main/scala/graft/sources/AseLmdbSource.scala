@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 /** ASE LMDB (`.aselmdb`) reader (reference `domains/atm/sources/aselmdb.py`
   * + Rust `lmdb/reader.rs:110-189` — which delegate to an LMDB library;
   * this is an independent read-only walker of the PUBLIC LMDB on-disk
-  * format), Spark-first: file distribution via `binaryFile`, per-file
-  * B-tree walk + zlib/JSON decode inside `flatMap`.
+  * format), Spark-first: `read` is the [[AseLmdbDataSource]] table, a
+  * per-file B-tree walk + zlib/JSON decode in one task per file.
   *
   * LMDB layout walked (little-endian, NO_SUB_DIR single-file env):
   *  - pages 0/1 are meta pages; the one with the larger txnid wins. Page
@@ -243,28 +243,14 @@ object AseLmdbSource {
 
   /** Data rows from a glob of `.aselmdb` files: (db_id, row_id, json) —
     * reserved keys skipped, values zlib-inflated (plain-JSON values pass
-    * through), ordered ids. JSON stays a string: extract typed columns
-    * with `ndarray`/`systems` below, so unqueried fields are never parsed.
+    * through), ordered ids. The [[AseLmdbDataSource]] table, one file per
+    * task. JSON stays a string: extract typed columns with
+    * `ndarray`/`systems` below, so unqueried fields are never parsed.
     */
   def read(spark: SparkSession, pathGlob: String,
-           globFilter: String = "*.aselmdb"): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", globFilter).load(pathGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        parse(bytes).iterator
-          .filter { case (k, _) => !ReservedKeys.contains(k) }
-          .flatMap { case (k, v) =>
-            k.toLongOption.map { id =>
-              val payload =
-                if (v.length >= 2 && (v(0) & 0xff) == 0x78) inflate(v) else v
-              (path, id, new String(payload, "UTF-8"))
-            }
-          }.toSeq
-      }.toDF("db_id", "row_id", "json")
-  }
+           globFilter: String = "*.aselmdb"): DataFrame =
+    spark.read.format("graft.sources.AseLmdbDataSource")
+      .option("path", pathGlob).option("globFilter", globFilter).load()
 
   /** Flat data of an ASE `__ndarray__` field (`[shape, dtype, flatdata]`),
     * tolerating the plain-JSON-list form some writers emit. `ddl` is the

@@ -8,15 +8,16 @@ import org.apache.spark.sql.functions._
 /** LS-DYNA d3plot binary reader (reference `domains/mesh/sources/d3plot.py`
   * — which delegates decode to lasso-python; this is an independent JVM
   * decoder of the PUBLIC "LS-DYNA Database Binary Output Files" layout),
-  * Spark-first: `binaryFile` distribution + per-file word-addressed decode
-  * inside `flatMap`, emitting the long mesh model plus per-state tables.
+  * Spark-first: `read`/`readSph` are the tables of [[D3PlotDataSource]],
+  * a word-addressed decode of one family per task, emitting the long mesh
+  * model plus per-state tables.
   *
   * Supported subset (the shape the reference's crash pipelines consume):
   *  - little-endian 32-bit OR 64-bit words (word size auto-detected from
   *    control-block plausibility; 64-bit floats downcast to fp32 exactly as
   *    the reference's `_downcast_fp32` does); family continuation files
   *    (d3plot01, d3plot02, … — state data only) assemble per run via
-  *    `parseFamily` / `read`;
+  *    `parseFamily` (grouped by [[D3PlotDataSource.families]]);
   *  - control block (64 words): TITLE[10], NDIM, NUMNP, NGLBV, IT/IU/IV/IA,
   *    NEL8/NUMMAT8/NV3D, NEL2/NUMMAT2/NV1D, NEL4/NUMMAT4/NV2D, NEIPS,
   *    MAXINT, NELT/NV3DT, NARBS, IOSHL(1-4) (1-based manual words 1..64);
@@ -430,7 +431,9 @@ object D3PlotSource {
   }
 
   /** Long-model tables from a glob of d3plot files:
-    * (points, cells, states, shell_data), mesh keyed by file path.
+    * (points, cells, states, shell_data), mesh keyed by file path — the
+    * `points`, `cells`, `states` and `shell` tables of [[D3PlotDataSource]],
+    * one family per task.
     *
     *  - points:     (mesh_id, point_id, x, y, z) — reference configuration
     *  - cells:      (mesh_id, cell_id, vertices, part_id, cell_type)
@@ -443,81 +446,13 @@ object D3PlotSource {
     */
   def read(spark: SparkSession, pathGlob: String,
            globFilter: String = "*d3plot*"): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import spark.implicits._
-    val parsed = parsedFamilies(spark, pathGlob, globFilter).persist()
-
-    val points = parsed.flatMap { case (path, f) =>
-      f.coords.iterator.zipWithIndex.map { case (c, i) =>
-        (path, i.toLong, c(0).toDouble, c(1).toDouble, c(2).toDouble)
-      }.toSeq
-    }.toDF("mesh_id", "point_id", "x", "y", "z")
-
-    val cells = parsed.flatMap { case (path, f) =>
-      val solidRows = f.solids.iterator.zipWithIndex.map { case ((vs, part), i) =>
-        (path, i.toLong, vs.toSeq, part, 12) // VTK_HEXAHEDRON
-      }
-      val shellRows = f.shells.iterator.zipWithIndex.map { case ((vs, part), i) =>
-        (path, (f.solids.length + i).toLong, vs.toSeq, part, 9) // VTK_QUAD
-      }
-      (solidRows ++ shellRows).toSeq
-    }.toDF("mesh_id", "cell_id", "vertices", "part_id", "cell_type")
-
-    val states = parsed.flatMap { case (path, f) =>
-      f.states.iterator.zipWithIndex.flatMap { case (st, t) =>
-        st.nodeVec.iterator.zipWithIndex.map { case (v, n) =>
-          (path, t, st.time.toDouble, n.toLong,
-            v(0).toDouble, v(1).toDouble, v(2).toDouble)
-        }
-      } // iterator: streams out of the task, not materialized
-    }.toDF("mesh_id", "t", "time", "point_id", "dx", "dy", "dz")
-
-    val shellData = parsed.flatMap { case (path, f) =>
-      val nSolids = f.solids.length
-      f.states.iterator.zipWithIndex.flatMap { case (st, t) =>
-        st.shellStress.iterator.zipWithIndex.flatMap { case (layers, e) =>
-          layers.iterator.zipWithIndex.map { case (s, l) =>
-            (path, t, (nSolids + e).toLong, l,
-              s(0).toDouble, s(1).toDouble, s(2).toDouble,
-              s(3).toDouble, s(4).toDouble, s(5).toDouble,
-              st.shellEpsp(e)(l).toDouble)
-          }
-        }
-      } // iterator: streams out of the task, not materialized
-    }.toDF("mesh_id", "t", "cell_id", "layer",
-      "sx", "sy", "sz", "txy", "tyz", "tzx", "epsp")
-
-    (points, cells, states, shellData)
-  }
-
-  /** Distributed parse shared by `read`/`readSph`. Family continuation
-    * files (d3plot01, d3plot02, … — state data only) belong to the bare
-    * `d3plot` root in the same directory, ordered NUMERICALLY (d3plot2
-    * before d3plot10). Any other matching file is an independent root;
-    * continuations without a root fail loudly.
-    */
-  private def parsedFamilies(spark: SparkSession, pathGlob: String,
-                             globFilter: String): org.apache.spark.sql.Dataset[(String, D3PlotFile)] = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", globFilter).load(pathGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .groupByKey { case (path, _) => path.replaceAll("/[^/]*$", "") }
-      .flatMapGroups { (dir, it) =>
-        val files = it.toSeq
-        def base(p: String) = p.split("/").last
-        val (conts, roots) = files.partition(f => base(f._1).matches("d3plot\\d+"))
-        val sortedConts = conts.sortBy(f => base(f._1).drop("d3plot".length).toInt)
-        val (familyRoot, soloRoots) = roots.partition(f => base(f._1) == "d3plot")
-        require(sortedConts.isEmpty || familyRoot.nonEmpty,
-          s"$dir has continuation files ${sortedConts.map(f => base(f._1))} but no d3plot root")
-        familyRoot.map { case (p, b) => (p, parseFamily(b, sortedConts.map(_._2))) } ++
-          soloRoots.sortBy(_._1).map { case (p, b) => (p, parse(b)) }
-      }
+    val t = tables(spark, pathGlob, globFilter) _
+    (t("points"), t("cells"), t("states"), t("shell"))
   }
 
   /** SPH particle universe from a glob of d3plot files (the long tables
-    * behind the reference's Rust SPH decode):
+    * behind the reference's Rust SPH decode) — the `sph_particles` and
+    * `sph_states` tables of [[D3PlotDataSource]]:
     *
     *  - particles:  (mesh_id, particle_id, node_id, material) — the static
     *                node & material list (node_id 0-based)
@@ -528,23 +463,13 @@ object D3PlotSource {
     */
   def readSph(spark: SparkSession, pathGlob: String,
               globFilter: String = "*d3plot*"): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val parsed = parsedFamilies(spark, pathGlob, globFilter).persist()
-    val particles = parsed.flatMap { case (path, f) =>
-      f.sphParticles.iterator.zipWithIndex.map { case ((node, mat), i) =>
-        (path, i.toLong, node, mat)
-      } // iterator: streams out of the task
-    }.toDF("mesh_id", "particle_id", "node_id", "material")
-    val sphStates = parsed.flatMap { case (path, f) =>
-      val labels = f.sphLabels.toArray
-      f.states.iterator.zipWithIndex.flatMap { case (st, t) =>
-        st.sph.iterator.zipWithIndex.flatMap { case (vals, i) =>
-          vals.iterator.zipWithIndex.map { case (v, k) =>
-            (path, t, st.time.toDouble, i.toLong, labels(k), v.toDouble)
-          }
-        }
-      }
-    }.toDF("mesh_id", "t", "time", "particle_id", "field", "value")
-    (particles, sphStates)
+    val t = tables(spark, pathGlob, globFilter) _
+    (t("sph_particles"), t("sph_states"))
   }
+
+  private def tables(spark: SparkSession, pathGlob: String, globFilter: String)(
+      table: String): DataFrame =
+    spark.read.format("graft.sources.D3PlotDataSource")
+      .option("path", pathGlob).option("globFilter", globFilter)
+      .option("table", table).load()
 }

@@ -133,7 +133,6 @@ object DrivAerMlSource {
         piece.pointData.toSeq.map { case (k, v) => (k, v) })
     }.persist() // three tables project from one parse; the caller releases
                 // via unpersist/clearCache once the frames are consumed
-                // (same lifecycle as VtkXmlSource.read / NetCdfSource.read)
 
     val points = pieces.flatMap { case (mesh, pts, _, _) =>
       pts.zipWithIndex.map { case ((x, y, z), i) => (mesh, i.toLong, x, y, z) }

@@ -430,20 +430,24 @@ class VtuDataSource extends FileUnitSource("*.vt[up]") {
       val raw = new Dsv2.HadoopRawData(path, c)
       val (piece, data, n) =
         try {
-          val p = VtkXmlSource.parseVtuRaw(raw, include = arrayCols.toSet,
-            decodePoints = needGeom && !cells, decodeCells = needGeom && cells,
-            decodePointData = arrayCols.nonEmpty)
-          val data = if (cells) p.cellData else p.pointData
-          val rows: Long =
-            if (needGeom) (if (cells) p.cells.length else p.points.length).toLong
-            else data.values.headOption.map(_.length.toLong).getOrElse {
+          // one row per point (cell): the Piece's NumberOf* count, or the
+          // decoded geometry's when that is selected or the header has none
+          // (a .vts piece); an array shorter than the count is null past
+          // its end, a longer one keeps its first `n` values
+          val listed =
+            if (needGeom) -1L
+            else {
               val (nPoints, nCells, _, _) = VtkXmlSource.listVtuArraysRaw(raw)
-              val listed = if (cells) nCells else nPoints
-              require(listed >= 0, s"$path: no decoded array and no " +
-                s"NumberOf${if (cells) "Cells" else "Points"} attribute to count rows")
-              listed
+              if (cells) nCells else nPoints
             }
-          (p, data, rows)
+          val decodeGeom = listed < 0
+          val p = VtkXmlSource.parseVtuRaw(raw, include = arrayCols.toSet,
+            decodePoints = decodeGeom && !cells, decodeCells = decodeGeom && cells,
+            decodePointData = arrayCols.nonEmpty)
+          val rows =
+            if (decodeGeom) (if (cells) p.cells.length else p.points.length).toLong
+            else listed
+          (p, if (cells) p.cellData else p.pointData, rows)
         } finally raw.close()
       indexedRows(u, cols, n) {
         case `id` => i => i
@@ -461,18 +465,26 @@ class VtuDataSource extends FileUnitSource("*.vt[up]") {
 // --------------------------------------------------------------- NetCDF
 
 /** `spark.read.format("graft.sources.NetCdfDataSource").option("path", dir)`
-  * → `file STRING, variable STRING, pos LONG, value DOUBLE`. A
-  * `variable = 'x'` / `variable IN (...)` predicate pushes down into the
+  * → `file STRING, variable STRING, pos LONG, value DOUBLE` (`table=data`,
+  * the default). `option("table", "vars")` is the header-only variable
+  * list: `file, variable, dims ARRAY<STRING>, shape ARRAY<LONG>,
+  * is_record BOOLEAN` (shape counts the records of a record variable).
+  * A `variable = 'x'` / `variable IN (...)` predicate pushes down into the
   * decoder's `wanted` set, so non-matching variables are never read —
   * the Catalyst-native form of the reference's `variables` selection
   * (`era5.py:103-382`). Options: `globFilter` (default `*.nc`),
-  * `decodeCf`, `decodeTimes` (as in [[NetCdfSource.read]]).
+  * `decodeCf`, `decodeTimes` (see [[NetCdfSource.read]]).
   */
 class NetCdfDataSource extends FileUnitSource("*.nc") {
   override protected def label = "netcdf"
   override protected def keyColumn = "file"
+  override protected def tables = NetCdfDataSource.Schemas.map(_._1)
   override protected def schemaOf(o: CaseInsensitiveStringMap): StructType =
-    NetCdfDataSource.Schema
+    NetCdfDataSource.Schemas.toMap.apply(table(o))
+  // the variable list is header bytes only
+  override protected def payloadFraction(o: CaseInsensitiveStringMap, full: StructType,
+                                         required: StructType): Double =
+    if (table(o) == "vars") 0.02 else 1.0
 
   override protected def pushes(f: Filter): Boolean = f match {
     case EqualTo("variable", _: String) | IsNotNull("variable") => true
@@ -491,12 +503,15 @@ class NetCdfDataSource extends FileUnitSource("*.nc") {
 
   override protected def describe(o: CaseInsensitiveStringMap, required: StructType,
                                   pushed: Array[Filter]): String =
-    s"graft_netcdf vars=${allowed(pushed).map(_.toSeq.sorted.mkString("[", ",", "]")).getOrElse("*")}"
+    s"graft_netcdf table=${table(o)} " +
+      s"vars=${allowed(pushed).map(_.toSeq.sorted.mkString("[", ",", "]")).getOrElse("*")}"
 
   override protected def reader(o: CaseInsensitiveStringMap, required: StructType,
                                 pushed: Array[Filter]): ScanUnit => Iterator[InternalRow] = {
     val c = conf
     val vars = allowed(pushed)
+    val wanted: String => Boolean = name => vars.forall(_.contains(name))
+    val header = table(o) == "vars"
     val decodeCf = Dsv2.opt(o, "decodeCf", "false").toBoolean
     val decodeTimes = Dsv2.opt(o, "decodeTimes", "false").toBoolean
     val cols = required.fieldNames
@@ -505,23 +520,43 @@ class NetCdfDataSource extends FileUnitSource("*.nc") {
       // no wanted variable costs only its header bytes, and wanted
       // variables read as slices at their CDF begin offsets
       val raw = new Dsv2.HadoopRawData(u.files.head, c)
-      val wanted: String => Boolean = name => vars.forall(_.contains(name))
-      // toArray: the decoder returns a List, and positional List access in
-      // the row loop is O(n²) — quadratic at real grid sizes
-      val rows =
-        try NetCdfSource.valuesRanged(raw, wanted, decodeCf, decodeTimes).toArray
-        finally raw.close()
-      indexedRows(u, cols, rows.length) {
-        case "variable" => i => UTF8String.fromString(rows(i.toInt)._1)
-        case "pos" => i => rows(i.toInt)._2
-        case "value" => i => rows(i.toInt)._3
+      if (header) {
+        val f = try NetCdfSource.parseHeaderRaw(raw) finally raw.close()
+        val vs = f.vars.filter(v => wanted(v.name)).toArray
+        def isRec(v: NetCdfSource.NcVar) = v.dimIds.headOption.exists(f.dims(_).length == 0L)
+        indexedRows(u, cols, vs.length) {
+          case "variable" => i => UTF8String.fromString(vs(i.toInt).name)
+          case "dims" => i => new GenericArrayData(
+            vs(i.toInt).dimIds.map(d => UTF8String.fromString(f.dims(d).name)).toArray[Any])
+          case "shape" => i => new GenericArrayData(vs(i.toInt).dimIds.map { d =>
+            if (f.dims(d).length == 0L) f.numRecs else f.dims(d).length
+          }.toArray[Any])
+          case "is_record" => i => isRec(vs(i.toInt))
+        }
+      } else {
+        // toArray: the decoder returns a List, and positional List access in
+        // the row loop is O(n²) — quadratic at real grid sizes
+        val rows =
+          try NetCdfSource.valuesRanged(raw, wanted, decodeCf, decodeTimes).toArray
+          finally raw.close()
+        indexedRows(u, cols, rows.length) {
+          case "variable" => i => UTF8String.fromString(rows(i.toInt)._1)
+          case "pos" => i => rows(i.toInt)._2
+          case "value" => i => rows(i.toInt)._3
+        }
       }
     }
   }
 }
 
 object NetCdfDataSource {
-  val Schema: StructType = StructType(Seq(str("file"), str("variable"), lng("pos"), dbl("value")))
+  /** The `table` option's values with their schemas, the default first. */
+  val Schemas: Seq[(String, StructType)] = Seq(
+    "data" -> StructType(Seq(str("file"), str("variable"), lng("pos"), dbl("value"))),
+    "vars" -> StructType(Seq(str("file"), str("variable"),
+      StructField("dims", ArrayType(StringType, containsNull = false), nullable = false),
+      StructField("shape", ArrayType(LongType, containsNull = false), nullable = false),
+      StructField("is_record", BooleanType, nullable = false))))
 }
 
 // ------------------------------------------------------------------ LMDB
@@ -660,20 +695,23 @@ class VtiDataSource extends FileUnitSource("*.vti") {
 
 /** `spark.read.format("graft.sources.D3PlotDataSource").option("path", g)`
   * over LS-DYNA d3plot families (root + `d3plot01…` continuations grouped
-  * per directory, numerically ordered — the same family rule as
-  * `D3PlotSource.read`); one unit per family, keyed by its root path.
-  * `option("table", ...)` picks the long model:
+  * per directory, numerically ordered — see [[D3PlotDataSource.families]]);
+  * one unit per family, keyed by its root path. `option("table", ...)`
+  * picks the long model:
   *
   *  - `points` (default): `mesh_id, point_id, x, y, z`
   *  - `cells`:  `mesh_id, cell_id, vertices, part_id, cell_type`
   *  - `states`: `mesh_id, t, time, point_id, dx, dy, dz`
   *  - `shell`:  `mesh_id, t, cell_id, layer, sx..tzx, epsp`
+  *  - `sph_particles`: `mesh_id, particle_id, node_id, material`
+  *  - `sph_states`: `mesh_id, t, time, particle_id, field, value`
   *
   * The table choice maps onto [[D3PlotSource.D3Select]] block pruning: a
   * `states` scan never materializes geometry or shell stress, a `shell`
   * scan never materializes node vectors — the state walker advances at the
-  * documented per-block strides (`d3plot.py:334` analogue). Schemas are
-  * static, so planning reads zero file bytes.
+  * documented per-block strides (`d3plot.py:334` analogue). `points`,
+  * `cells` and `sph_particles` read only the root's geometry prefix.
+  * Schemas are static, so planning reads zero file bytes.
   */
 class D3PlotDataSource extends FileUnitSource("*d3plot*") {
   override protected def label = "d3plot"
@@ -712,11 +750,16 @@ object D3PlotDataSource {
     "states" -> StructType(Seq(str("mesh_id"), int("t"), dbl("time"),
       lng("point_id"), dbl("dx"), dbl("dy"), dbl("dz"))),
     "shell" -> StructType(Seq(str("mesh_id"), int("t"), lng("cell_id"), int("layer"),
-      dbl("sx"), dbl("sy"), dbl("sz"), dbl("txy"), dbl("tyz"), dbl("tzx"), dbl("epsp"))))
+      dbl("sx"), dbl("sy"), dbl("sz"), dbl("txy"), dbl("tyz"), dbl("tzx"), dbl("epsp"))),
+    "sph_particles" -> StructType(Seq(str("mesh_id"), lng("particle_id"), lng("node_id"),
+      lng("material"))),
+    "sph_states" -> StructType(Seq(str("mesh_id"), int("t"), dbl("time"),
+      lng("particle_id"), str("field"), dbl("value"))))
 
   /** Driver-side family grouping: per directory, `d3plotNN` continuations
-    * (numeric order) belong to the bare `d3plot` root; any other matching
-    * file is an independent root. Mirrors `D3PlotSource.parsedFamilies`.
+    * (numeric order, d3plot2 before d3plot10) belong to the bare `d3plot`
+    * root; any other matching file is an independent root, and
+    * continuations without a root fail loudly.
     */
   private[sources] def families(files: Seq[String]): Seq[(String, Seq[String])] = {
     def base(p: String) = p.split("/").last
@@ -742,12 +785,14 @@ object D3PlotDataSource {
         D3PlotSource.D3Select(geometry = false, nodeVec = true, shell = false, sph = false)
       case "shell" =>
         D3PlotSource.D3Select(geometry = false, nodeVec = false, shell = true, sph = false)
+      case "sph_particles" | "sph_states" =>
+        D3PlotSource.D3Select(geometry = false, nodeVec = false, shell = false, sph = true)
     }
     val f =
-      if (sel.geometry) {
-        // the geometry sits entirely before the first state: pread just
-        // that prefix of the root and skip every continuation file
-        // (continuations are state payload only)
+      if (table == "points" || table == "cells" || table == "sph_particles") {
+        // the geometry and the SPH node & material list sit entirely
+        // before the first state: pread just that prefix of the root and
+        // skip every continuation file (continuations are state payload only)
         val raw = new Dsv2.HadoopRawData(root, conf)
         val rootBytes =
           try {
@@ -818,6 +863,31 @@ object D3PlotDataSource {
                 case "tyz" => sv(4).toDouble
                 case "tzx" => sv(5).toDouble
                 case "epsp" => st.shellEpsp(e)(l).toDouble
+              }
+            }
+          }
+        }
+      case "sph_particles" =>
+        f.sphParticles.iterator.zipWithIndex.map { case ((node, mat), i) =>
+          cols.map[Any] {
+            case "mesh_id" => meshId
+            case "particle_id" => i.toLong
+            case "node_id" => node
+            case "material" => mat
+          }
+        }
+      case "sph_states" =>
+        val labels = f.sphLabels.map(UTF8String.fromString).toArray
+        f.states.iterator.zipWithIndex.flatMap { case (st, t) =>
+          st.sph.iterator.zipWithIndex.flatMap { case (vals, i) =>
+            vals.iterator.zipWithIndex.map { case (v, k) =>
+              cols.map[Any] {
+                case "mesh_id" => meshId
+                case "t" => t
+                case "time" => st.time.toDouble
+                case "particle_id" => i.toLong
+                case "field" => labels(k)
+                case "value" => v.toDouble
               }
             }
           }

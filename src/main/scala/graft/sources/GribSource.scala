@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions.col
   * loudly.
   *
   * Pure JVM byte/bit twiddling; `read` decodes per file on executors, no
-  * shuffle — the same distribution shape as [[NetCdfSource.read]].
+  * shuffle.
   */
 object GribSource {
 
@@ -295,7 +295,7 @@ object GribSource {
   /** Distributed read: one row per grid point, with per-message metadata —
     * (file, msg, discipline, category, number, forecast_hours, ni, nj,
     * lat1, lon1, di, dj, pos, value). Per-file executor-side decode, no
-    * shuffle (the [[NetCdfSource.read]] shape).
+    * shuffle.
     */
   def read(spark: SparkSession, pathGlob: String,
            globFilter: String = "*.grib2"): DataFrame = {

@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** NetCDF classic reader (CDF-1, CDF-2, and CDF-5 — the public netCDF
   * "classic format spec"), Spark-first — the real ingestion path behind the
@@ -25,7 +24,8 @@ import org.apache.spark.sql.functions._
   *
   * `read` emits the long model: a `vars` table (variable, dims, shape,
   * record flag) and a `data` table (variable, linear row-major `pos`,
-  * value as double) — the grid operators' input shape. NetCDF-4 (HDF5
+  * value as double) — the grid operators' input shape — as projections
+  * of [[NetCdfDataSource]]. NetCDF-4 (HDF5
   * container) is out of scope and rejected by magic.
   */
 object NetCdfSource {
@@ -290,7 +290,8 @@ object NetCdfSource {
   }
 
   /** Long tables from a glob of `.nc` files: vars (file, variable, dims,
-    * shape, is_record) and data (file, variable, pos, value).
+    * shape, is_record) and data (file, variable, pos, value) — the
+    * `vars` and `data` tables of [[NetCdfDataSource]], one file per task.
     * `decodeCf = true` unpacks CF packed variables at decode ([[CfCodec]]);
     * `decodeTimes = true` additionally converts variables carrying a
     * parseable `units = "<unit> since <epoch>"` attribute to epoch
@@ -300,25 +301,11 @@ object NetCdfSource {
            globFilter: String = "*.nc",
            decodeCf: Boolean = false,
            decodeTimes: Boolean = false): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val raw = spark.read.format("binaryFile")
-      .option("pathGlobFilter", globFilter)
-      .load(Fetchers.resolve(spark, pathGlob))
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])].persist()
-    val vars = raw.flatMap { case (path, bytes) =>
-      val f = parseHeader(bytes)
-      f.vars.map { v =>
-        val isRec = v.dimIds.headOption.exists(f.dims(_).length == 0L)
-        val shape = v.dimIds.map(d =>
-          if (f.dims(d).length == 0L) f.numRecs else f.dims(d).length)
-        (path, v.name, v.dimIds.map(f.dims(_).name), shape, isRec)
-      }
-    }.toDF("file", "variable", "dims", "shape", "is_record")
-    val data = raw.flatMap { case (path, bytes) =>
-      values(bytes, decodeCf = decodeCf, decodeTimes = decodeTimes)
-        .map { case (v, pos, x) => (path, v, pos, x) }
-    }.toDF("file", "variable", "pos", "value")
-    (vars, data)
+    val path = Fetchers.resolve(spark, pathGlob)
+    def table(name: String) = spark.read.format("graft.sources.NetCdfDataSource")
+      .option("path", path).option("globFilter", globFilter)
+      .option("decodeCf", decodeCf).option("decodeTimes", decodeTimes)
+      .option("table", name).load()
+    (table("vars"), table("data"))
   }
 }

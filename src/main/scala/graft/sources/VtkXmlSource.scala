@@ -15,15 +15,15 @@ import graft.functions.Zlib
 /** VTK XML mesh reader (reference `domains/mesh/sources/vtk.py:74` + Rust
   * `vtk/parser.rs:303`, `vtk/reader.rs:38,60`), Spark-first:
   *
-  *  - file distribution via `binaryFile` (one row per file, content as bytes
-  *    — Spark distributes listing and assigns files to tasks);
-  *  - StAX streaming parse per file inside `flatMap` (iterator-in/out, no
-  *    DOM materialization);
+  *  - the parsers here decode one file (StAX streaming, no DOM); the
+  *    [[VtuDataSource]] and [[VtiDataSource]] tables run them one file per
+  *    task, with ranged reads;
   *  - reader-level array include/exclude (`_key_filter.py:45-110`): excluded
   *    DataArrays are skipped DURING parsing, never materialized — column
   *    pruning at the reader, like the reference's key_filters;
-  *  - output is the long mesh model (`mesh/MeshOps`): points / cells /
-  *    point_data tables keyed by file path, ready for the mesh filter family.
+  *  - `read`/`readAll`/`readVti` give the long mesh model (`mesh/MeshOps`):
+  *    points / cells / point_data tables keyed by file path, projected from
+  *    those tables, ready for the mesh filter family.
   *
   * DataArray layouts covered (the full VTK XML matrix):
   *  - `format="ascii"`;
@@ -343,14 +343,10 @@ object VtkXmlSource {
     * Catalyst asks for the schema before it knows which columns survive
     * pruning). Returns (nPoints, nCells, pointData names, cellData names);
     * counts are -1 when the Piece element carries no NumberOf* attribute.
-    */
-  def listVtuArrays(bytes: Array[Byte]): (Long, Long, Seq[String], Seq[String]) =
-    listVtuArraysXml(splitAppended(bytes)._1)
-
-  /** [[listVtuArrays]] over a random-access handle — reads ONLY the bounded
-    * XML head window, never the appended payload: the schema-inference read
-    * of the DSv2 relation stays O(header bytes) per file even for the
-    * reference's ~50 GB DrivAerML volume VTUs (`drivaerml.py:17-30`).
+    * Reads ONLY the bounded XML head window, never the appended payload:
+    * the schema-inference read of the DSv2 relation stays O(header bytes)
+    * per file even for the reference's ~50 GB DrivAerML volume VTUs
+    * (`drivaerml.py:17-30`).
     */
   private[sources] def listVtuArraysRaw(raw: RawData): (Long, Long, Seq[String], Seq[String]) =
     listVtuArraysXml(splitAppendedRaw(raw)._1)
@@ -815,53 +811,44 @@ object VtkXmlSource {
   /** Long structured-grid tables from a glob of `.vti` files:
     * point_data (grid_id, field, i, j, k, x, y, z, value) on the point
     * lattice and cell_data (same shape, cell-center coords) on the cell
-    * lattice — x fastest-varying, the VTK array order.
+    * lattice — x fastest-varying, the VTK array order. Each is the unpivot
+    * of [[VtiDataSource]]'s `points` / `cells` table: one row per lattice
+    * site and kept array, absent values dropped, NaN kept; an array longer
+    * than the lattice keeps its first values. `include`/`exclude` select
+    * the array columns.
     */
   def readVti(spark: SparkSession, pathGlob: String,
               include: Set[String] = Set.empty,
               exclude: Set[String] = Set.empty): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val raw = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.vti").load(pathGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-    val grids = raw.map { case (path, bytes) =>
-      val g = parseVti(bytes, include, exclude)
-      (path, g.extent, g.origin, g.spacing,
-        g.pointData.toSeq.map { case (k, v) => (k, v) },
-        g.cellData.toSeq.map { case (k, v) => (k, v) })
-    }.persist()
-
-    def longRows(cell: Boolean) = grids.flatMap {
-      case (path, extent, origin, spacing, pd, cd) =>
-        val nx = extent(1) - extent(0) + 1
-        val ny = extent(3) - extent(2) + 1
-        val nz = extent(5) - extent(4) + 1
-        val (dx, dy, dz) = (math.max(nx - (if (cell) 1 else 0), 1),
-          math.max(ny - (if (cell) 1 else 0), 1),
-          math.max(nz - (if (cell) 1 else 0), 1))
-        val shift = if (cell) 0.5 else 0.0
-        (if (cell) cd else pd).iterator.flatMap { case (field, vals) =>
-          vals.iterator.zipWithIndex.map { case (v, idx) =>
-            val i = idx % dx; val j = (idx / dx) % dy; val k = idx / (dx * dy)
-            (path, field, extent(0) + i, extent(2) + j, extent(4) + k,
-              origin(0) + (extent(0) + i + shift) * spacing(0),
-              origin(1) + (extent(2) + j + shift) * spacing(1),
-              origin(2) + (extent(4) + k + shift) * spacing(2), v)
-          }
-        }.toSeq
-    }.toDF("grid_id", "field", "i", "j", "k", "x", "y", "z", "value")
-
-    (longRows(cell = false), longRows(cell = true))
+    val lattice = Seq("grid_id", "i", "j", "k", "x", "y", "z")
+    def long(table: String): DataFrame = {
+      val wide = spark.read.format("graft.sources.VtiDataSource")
+        .option("path", pathGlob).option("table", table).load()
+      unpivot(wide, lattice, wide.columns.toSeq.diff(lattice).filter(keeps(include, exclude)))
+        .select("grid_id", "field", "i", "j", "k", "x", "y", "z", "value")
+    }
+    (long("points"), long("cells"))
   }
+
+  /** Whether `include`/`exclude` keep array `a` (empty include = all). */
+  private def keeps(include: Set[String], exclude: Set[String])(a: String): Boolean =
+    (include.isEmpty || include.contains(a)) && !exclude.contains(a)
+
+  /** The long `(ids…, field, value)` form of a wide table's nullable DOUBLE
+    * `arrays` columns: one row per non-null value (NaN is a value), an
+    * empty table when there are no arrays.
+    */
+  private def unpivot(wide: DataFrame, ids: Seq[String], arrays: Seq[String]): DataFrame =
+    if (arrays.isEmpty)
+      wide.select(ids.map(col) :+ lit("").as("field") :+ lit(0.0).as("value"): _*)
+        .where(lit(false))
+    else
+      wide.unpivot(ids.map(col).toArray, arrays.map(col).toArray, "field", "value")
+        .where(col("value").isNotNull)
 
   /** Long-model tables from a glob of VTK XML files (`.vtu`/`.vtp`/`.vts`
     * by default): (points, cells, point_data), mesh keyed by file path.
-    *
-    * Array pruning happens DURING the per-file parse: either a single
-    * global `include`/`exclude` set, or per-path `keyFilterRules`
-    * (longest-glob-wins, `_key_filter.py:45-110`) resolved per file —
-    * rules take precedence over the global sets when both are given.
+    * See [[readAll]].
     */
   def read(spark: SparkSession, pathGlob: String,
            include: Set[String] = Set.empty,
@@ -878,55 +865,47 @@ object VtkXmlSource {
     * files carry their flow fields as cell data (`ahmedml.py:774-883`,
     * interior point-cloud uses cell_data at the centroids).
     *
-    * Scan shape: a PATHS-ONLY listing distributes file names (not bytes) to
-    * tasks; each task opens its file through a ranged Hadoop handle and
-    * parses via [[parseVtuRaw]] — the XML header reads in a bounded window
-    * and each KEPT array's appended payload is one positioned pread. So
-    * include/exclude pruning saves I/O bytes (excluded arrays are never
-    * read, not just never decoded), and per-file size is unbounded — the
-    * old `binaryFile` path materialized every file whole (2 GiB hard cap,
-    * the reference's ~50 GB DrivAerML pain point, `drivaerml.py:17-30`).
+    * Every table is a projection of [[VtuDataSource]] (`pathGlob`, which
+    * may list several comma-separated paths, and `globFilter` pass through
+    * as its options): points and cells select its `points` / `cells`
+    * tables, and point_data / cell_data are the unpivot of their wide
+    * array columns — one row per point (cell) and array with a value
+    * there, NaN included; an array longer than the point (cell) count
+    * keeps its first values, and a file without the array has no rows for
+    * it. `include`/`exclude` select the array columns, so pruned arrays
+    * are never read. Per-path `keyFilterRules` (longest-glob-wins,
+    * `_key_filter.py:45-110`) take precedence over the global sets: each
+    * file's `(include, exclude)` is resolved on the driver, and the long
+    * tables keep a row only when its file keeps its field.
     */
   def readAll(spark: SparkSession, pathGlob: String,
               include: Set[String] = Set.empty,
               exclude: Set[String] = Set.empty,
               globFilter: String = "*.vt[ups]",
               keyFilterRules: Seq[KeyFilters.KeyFilterRule] = Nil): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import spark.implicits._
-    // comma-separated multi-path form (used by readVtm's resolved refs)
-    val files = Dsv2.listFilesWithSize(spark, pathGlob, globFilter).map(_._1)
-    val conf = Dsv2.confMap(spark)
-    val rules = keyFilterRules // serialized into the task closure
-    val paths = spark.createDataset(files)
-      .repartition(math.max(1, math.min(files.size,
-        spark.sparkContext.defaultParallelism * 2)))
-    val pieces = paths.map { path =>
-      val (inc, exc) =
-        if (rules.nonEmpty) KeyFilters.resolveArrays(path, rules)
-        else (include, exclude)
-      val raw = new Dsv2.HadoopRawData(path, conf)
-      val p = try parseVtuRaw(raw, inc, exc) finally raw.close()
-      (path, p.points.map(a => (a(0), a(1), a(2))), p.cells,
-        p.pointData.toSeq.map { case (k, v) => (k, v) },
-        p.cellData.toSeq.map { case (k, v) => (k, v) })
-    }.persist()
-
-    val points = pieces.flatMap { case (path, pts, _, _, _) =>
-      pts.zipWithIndex.map { case ((x, y, z), i) => (path, i.toLong, x, y, z) }
-    }.toDF("mesh_id", "point_id", "x", "y", "z")
-    val cells = pieces.flatMap { case (path, _, cs, _, _) =>
-      cs.zipWithIndex.map { case (vs, i) => (path, i.toLong, vs.toSeq) }
-    }.toDF("mesh_id", "cell_id", "vertices")
-    val pointData = pieces.flatMap { case (path, _, _, pd, _) =>
-      pd.flatMap { case (field, vals) =>
-        vals.zipWithIndex.map { case (v, i) => (path, i.toLong, field, v) }
+    def table(name: String) = spark.read.format("graft.sources.VtuDataSource")
+      .option("path", pathGlob).option("globFilter", globFilter)
+      .option("table", name).load()
+    val (points, cells) = (table("points"), table("cells"))
+    // per file, its rules' (include, exclude)
+    val rules =
+      if (keyFilterRules.isEmpty) None
+      else Some(Dsv2.listFilesWithSize(spark, pathGlob, globFilter)
+        .map { case (f, _) => f -> KeyFilters.resolveArrays(f, keyFilterRules) }.toMap)
+    def long(wide: DataFrame, id: String, geometry: Seq[String]): DataFrame = {
+      val all = wide.columns.toSeq.diff("mesh_id" +: id +: geometry)
+      rules match {
+        case None => unpivot(wide, Seq("mesh_id", id), all.filter(keeps(include, exclude)))
+        case Some(r) =>
+          val perFile = r.map { case (f, (inc, exc)) => f -> all.filter(keeps(inc, exc)) }
+          unpivot(wide, Seq("mesh_id", id), all.filter(a => perFile.values.exists(_.contains(a))))
+            .where(array_contains(try_element_at(typedLit(perFile), col("mesh_id")),
+              col("field")))
       }
-    }.toDF("mesh_id", "point_id", "field", "value")
-    val cellData = pieces.flatMap { case (path, _, _, _, cd) =>
-      cd.flatMap { case (field, vals) =>
-        vals.zipWithIndex.map { case (v, i) => (path, i.toLong, field, v) }
-      }
-    }.toDF("mesh_id", "cell_id", "field", "value")
-    (points, cells, pointData, cellData)
+    }
+    (points.select("mesh_id", "point_id", "x", "y", "z"),
+      cells.select("mesh_id", "cell_id", "vertices"),
+      long(points, "point_id", Seq("x", "y", "z")),
+      long(cells, "cell_id", Seq("vertices")))
   }
 }

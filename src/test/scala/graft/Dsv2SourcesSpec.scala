@@ -111,33 +111,97 @@ class Dsv2SourcesSpec extends SparkSpec {
     assert(e.getMessage != null && e.getMessage.contains("AppendedData"), e.getMessage)
   }
 
+  /** The mesh index of a sink-written `…/mesh_<i>.vtu` path. */
+  private def meshIndex(path: String): Long =
+    path.replaceAll(".*mesh_(\\d+)\\.vtu$", "$1").toLong
+
   test("VTU DSv2 matches the function-API reader on real sink output") {
     val s = spark
     import s.implicits._
-    val pts = Seq(
+    val written = Seq(
       (0L, 0L, 0.0, 0.0, 0.0), (0L, 1L, 1.0, 0.0, 0.0), (0L, 2L, 0.0, 1.0, 0.0),
       (1L, 0L, 2.0, 0.0, 0.0), (1L, 1L, 3.0, 0.0, 0.0), (1L, 2L, 2.0, 1.0, 0.0))
-      .toDF("mesh_id", "point_id", "x", "y", "z")
+    val pts = written.toDF("mesh_id", "point_id", "x", "y", "z")
     val cls = Seq((0L, 0L, Seq(0L, 1L, 2L)), (1L, 0L, Seq(0L, 1L, 2L)))
       .toDF("mesh_id", "cell_id", "vertices")
     val pd = pts.select(col("mesh_id"), col("point_id"), lit("v").as("field"),
       (col("x") + col("y")).as("value"))
     val out = tmpDir("dsv2_vtu_sink")
     graft.sinks.VtuSink.write(pts, cls, pd, out, format = "appended-zlib")
+    val writtenV = written.map { case (m, p, x, y, _) => (m, p, x + y) }.toSet
+    val writtenXyz = written.toSet
 
     val (rp, _, rpd) = graft.sources.VtkXmlSource.read(spark, out)
     val wide = spark.read.format("graft.sources.VtuDataSource")
       .option("path", out).load()
     val fromWide = wide.select(col("mesh_id"), col("point_id"), col("v"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+      .collect().map(r => (meshIndex(r.getString(0)), r.getLong(1), r.getDouble(2))).toSet
     val fromLong = rpd.filter(col("field") === "v")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(3))).toSet
-    assert(fromWide == fromLong)
-    val wxyz = wide.select("mesh_id", "point_id", "x", "y", "z").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toSet
-    val lxyz = rp.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toSet
-    assert(wxyz == lxyz)
+      .collect().map(r => (meshIndex(r.getString(0)), r.getLong(1), r.getDouble(3))).toSet
+    assert(fromWide == writtenV, fromWide.toString)
+    assert(fromLong == writtenV, fromLong.toString)
+    def xyz(df: org.apache.spark.sql.DataFrame) =
+      df.select("mesh_id", "point_id", "x", "y", "z").collect().map(r =>
+        (meshIndex(r.getString(0)), r.getLong(1), r.getDouble(2), r.getDouble(3),
+          r.getDouble(4))).toSet
+    assert(xyz(wide) == writtenXyz)
+    assert(xyz(rp) == writtenXyz)
+  }
+
+  test("VTU long tables: the unpivot lists NaN, skips absent arrays, keeps per-file rules") {
+    def vtu(arrays: String) =
+      s"""<?xml version="1.0"?>
+         |<VTKFile type="UnstructuredGrid" version="0.1" byte_order="LittleEndian">
+         | <UnstructuredGrid><Piece NumberOfPoints="3" NumberOfCells="1">
+         |  <Points><DataArray type="Float64" NumberOfComponents="3" format="ascii">0 0 0 1 0 0 0 1 0</DataArray></Points>
+         |  <Cells>
+         |   <DataArray type="Int64" Name="connectivity" format="ascii">0 1 2</DataArray>
+         |   <DataArray type="Int64" Name="offsets" format="ascii">3</DataArray>
+         |  </Cells>
+         |  <PointData>$arrays</PointData>
+         | </Piece></UnstructuredGrid>
+         |</VTKFile>""".stripMargin
+    val dir = tmpDir("dsv2_vtu_long")
+    // a.vtu: u holds a NaN, w has two components (6 values over 3 points);
+    // b.vtu has no w at all
+    Files.writeString(Paths.get(dir, "a.vtu"), vtu(
+      """<DataArray type="Float64" Name="u" format="ascii">1 NaN 3</DataArray>
+        |<DataArray type="Float64" Name="w" NumberOfComponents="2" format="ascii">10 11 12 13 14 15</DataArray>""".stripMargin))
+    Files.writeString(Paths.get(dir, "b.vtu"), vtu(
+      """<DataArray type="Float64" Name="u" format="ascii">4 5 6</DataArray>"""))
+    def rows(pd: org.apache.spark.sql.DataFrame) = pd.collect().map(r =>
+      (r.getString(0).split('/').last, r.getLong(1), r.getString(2),
+        r.getDouble(3).toString)).toSet
+
+    val (_, _, pd) = graft.sources.VtkXmlSource.read(spark, dir)
+    // NaN is a value; b has no w rows; an array longer than the point
+    // count keeps its first three values
+    assert(rows(pd) == Set(
+      ("a.vtu", 0L, "u", "1.0"), ("a.vtu", 1L, "u", "NaN"), ("a.vtu", 2L, "u", "3.0"),
+      ("a.vtu", 0L, "w", "10.0"), ("a.vtu", 1L, "w", "11.0"), ("a.vtu", 2L, "w", "12.0"),
+      ("b.vtu", 0L, "u", "4.0"), ("b.vtu", 1L, "u", "5.0"), ("b.vtu", 2L, "u", "6.0")),
+      rows(pd).toString)
+
+    // per-file rules: a keeps only w (its longer include rule wins), b
+    // drops w and keeps u
+    import graft.sources.KeyFilters.KeyFilterRule
+    val (_, _, ruled) = graft.sources.VtkXmlSource.read(spark, dir, keyFilterRules = Seq(
+      KeyFilterRule("*.vtu", "exclude", Set("w")),
+      KeyFilterRule("*/a.vtu", "include", Set("w"))))
+    assert(rows(ruled) == rows(pd).filter { case (f, _, a, _) =>
+      (f == "a.vtu") == (a == "w") })
+
+    // a corpus without arrays has an empty long table
+    val bare = tmpDir("dsv2_vtu_bare")
+    Files.writeString(Paths.get(bare, "c.vtu"), vtu(""))
+    val (points, _, none) = graft.sources.VtkXmlSource.read(spark, bare)
+    assert(points.count() == 3)
+    assert(none.columns.toSeq == Seq("mesh_id", "point_id", "field", "value"))
+    assert(none.count() == 0)
+    // no files at all: schema inference fails at load(), as the relation does
+    val e = intercept[IllegalArgumentException](
+      graft.sources.VtkXmlSource.read(spark, tmpDir("dsv2_vtu_empty")))
+    assert(e.getMessage.contains("no files under"), e.getMessage)
   }
 
   test("NetCDF DSv2: variable predicate pushes into the decoder's wanted set") {
@@ -152,13 +216,17 @@ class Dsv2SourcesSpec extends SparkSpec {
 
     val ds = spark.read.format("graft.sources.NetCdfDataSource")
       .option("path", out).load()
-    // full read equals the function-API reader
-    val (_, data) = graft.sources.NetCdfSource.read(spark, out)
-    val a = ds.select("variable", "pos", "value").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    val b = data.select("variable", "pos", "value").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(a == b && a.nonEmpty)
+    // the relation and the long reader both return the rows the sink wrote
+    // (pos is row-major over (t, i, j) on the 1 x 2 grid)
+    val written = g.select(col("variable"), (col("t") * 2 + col("i") * 2 + col("j")),
+      col("value")).collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    val (vars, data) = graft.sources.NetCdfSource.read(spark, out)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("variable", "pos", "value")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(rows(ds) == written && written.size == 4)
+    assert(rows(data) == written)
+    assert(vars.select("variable").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("temp", "wind"))
 
     // the filter lands in the scan (vars=[temp] in the DSv2 description)
     val f = ds.filter(col("variable") === "temp")
@@ -327,24 +395,25 @@ class Dsv2SourcesSpec extends SparkSpec {
       s"scan not pruned: ${leafCols(sel)}")
     val got = sel.collect().map(r =>
       (r.getString(0).split('/').last, r.getInt(1), r.getInt(2), r.getDouble(3))).toSet
-    assert(got == Set(
+    // the temp rows the sink wrote: `g` densified with 0.0
+    val written = Set(
       ("grid_g0.vti", 0, 0, 1.5), ("grid_g0.vti", 1, 0, 0.0), ("grid_g0.vti", 2, 0, 0.0),
       ("grid_g0.vti", 0, 1, 0.0), ("grid_g0.vti", 1, 1, 0.0), ("grid_g0.vti", 2, 1, 2.5),
       ("grid_g1.vti", 0, 0, 7.0), ("grid_g1.vti", 1, 0, 0.0), ("grid_g1.vti", 2, 0, 0.0),
-      ("grid_g1.vti", 0, 1, 0.0), ("grid_g1.vti", 1, 1, 0.0), ("grid_g1.vti", 2, 1, 0.0)),
-      got.toString)
+      ("grid_g1.vti", 0, 1, 0.0), ("grid_g1.vti", 1, 1, 0.0), ("grid_g1.vti", 2, 1, 0.0))
+    assert(got == written, got.toString)
 
     // coordinates computed from origin/spacing in the header — zero decode
     val xy = wide.filter(col("i") === 2 && col("j") === 1)
       .select("x", "y").distinct().collect().head
     assert(xy.getDouble(0) == 11.0 && xy.getDouble(1) == 22.0, xy.toString)
 
-    // parity with the function-API reader (long model)
+    // the long reader returns the written rows too
     val (pd, _) = graft.sources.VtkXmlSource.readVti(s, out)
     val fromLong = pd.filter(col("field") === "temp")
       .select("grid_id", "i", "j", "value").collect()
       .map(r => (r.getString(0).split('/').last, r.getInt(1), r.getInt(2), r.getDouble(3))).toSet
-    assert(fromLong == got, s"long=$fromLong wide=$got")
+    assert(fromLong == written, s"long=$fromLong")
 
     // poison file: the pruned array must never decode
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out, "grid_poison.vti"),
@@ -392,13 +461,28 @@ class Dsv2SourcesSpec extends SparkSpec {
     def load(table: String) = s.read.format("graft.sources.D3PlotDataSource")
       .option("path", s"$out/*").option("table", table).load()
 
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-    assert(key(load("points")) == key(rp.select("mesh_id", "point_id", "x", "y", "z")))
-    assert(key(load("states")) == key(rs.select("mesh_id", "t", "time", "point_id", "dx", "dy", "dz")))
-    assert(key(load("shell")) == key(rsh))
-    assert(key(load("cells").select("mesh_id", "cell_id", "part_id", "cell_type")) ==
-      key(rc.select("mesh_id", "cell_id", "part_id", "cell_type")))
+    // rows keyed by the mesh index of their `<out>/<m>/d3plot` family
+    def key(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
+      (r.getString(0).split('/').init.last +: r.toSeq.tail.map(String.valueOf)).mkString("|")
+    }.sorted.toSeq
+    def str(rows: Seq[Product]) =
+      rows.map(_.productIterator.map(String.valueOf).mkString("|")).sorted
+    // what the sink wrote, each mesh's points renumbered in point_id order
+    // (mesh m holds the ids m, m+2, m+4, m+6), its one quad a shell cell
+    val wPoints = str((0L until 8L).map(i => (i % 2, i / 2, i * 1.0 + 0.5, 0.0, 0.0)))
+    val wStates = str(for (t <- 0 to 1; i <- 0L until 8L)
+      yield (i % 2, t, t * 0.5, i / 2, i * 0.25 + t, 0.0, 0.0))
+    val wShell = str(for (t <- 0 to 1; l <- 0 to 1; m <- 0L to 1L)
+      yield (m, t, 0L, l, (l + 1) * 0.25, 0.0, 0.0, 0.0, 0.0, 0.0, t * 0.125))
+    val wCells = str(Seq((0L, 0L, 1L, 9), (1L, 0L, 1L, 9)))
+    for ((points, states, shell, cells) <- Seq(
+        (load("points"), load("states"), load("shell"), load("cells")),
+        (rp, rs, rsh, rc))) {
+      assert(key(points) == wPoints)
+      assert(key(states) == wStates)
+      assert(key(shell) == wShell)
+      assert(key(cells.select("mesh_id", "cell_id", "part_id", "cell_type")) == wCells)
+    }
 
     // column pruning reaches the scan
     val prun = load("states").select("mesh_id", "dx")
@@ -473,9 +557,10 @@ class Dsv2SourcesSpec extends SparkSpec {
     val ds = spark.read.format("graft.sources.AseLmdbDataSource")
       .option("path", out).load()
     val viaFn = graft.sources.AseLmdbSource.read(spark, out)
-    val a = ds.collect().map(r => (r.getLong(1), r.getString(2))).toSet
-    val b = viaFn.collect().map(r => (r.getLong(1), r.getString(2))).toSet
-    assert(a == b && a.size == 6)
+    // both return the rows the sink wrote
+    val written = (0L until 6L).map(i => (i, s"""{"energy":${i * 1.5}}""")).toSet
+    assert(ds.collect().map(r => (r.getLong(1), r.getString(2))).toSet == written)
+    assert(viaFn.collect().map(r => (r.getLong(1), r.getString(2))).toSet == written)
 
     val ids = ds.select("row_id")
     assert(leafCols(ids) == Seq("row_id"), s"scan not pruned: ${leafCols(ids)}")

@@ -477,17 +477,12 @@ class TextDedupSpec extends SparkSpec {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.LogicalRDD
     // `escalates`: min-label runs out of rounds and the distributed path
-    // ends in stars, whose `coalesce`d component is non-null — so there,
-    // and against stars, names and types are compared, not nullability.
-    // `stars`: stars types the id LONG, lists only ids of `ids` and labels
-    // a component with its minimum endpoint, in `ids` or not; it is
-    // compared on the fixtures inside that contract.
-    // `uniqueIds`: resolveClustersBest's distributed form joins a
-    // duplicated id's rows against each other (m² rows), its driver form
-    // lists each row once; it is compared where ids are unique.
+    // ends in stars, whose id nullability follows its checkpointed edges —
+    // so there, and against stars, names and types are compared, not
+    // nullability. Stars and resolveClustersBest are compared on every
+    // fixture.
     case class Fixture(name: String, ids: DataFrame, pairs: DataFrame,
-                       escalates: Boolean = false, stars: Boolean = true,
-                       uniqueIds: Boolean = true)
+                       escalates: Boolean = false)
     def chain(name: String, n: Long) = Fixture(name, (1L to n).toDF("doc_id"),
       (1L until n).map(i => (i, i + 1)).toDF("da", "db"), escalates = n > 20)
     val rng = new scala.util.Random(13) // the stars spec's clustered graph
@@ -511,15 +506,14 @@ class TextDedupSpec extends SparkSpec {
       Fixture("duplicate and reversed pairs", (1L to 6L).toDF("doc_id"),
         Seq((1L, 2L), (2L, 1L), (1L, 2L), (4L, 3L), (3L, 4L)).toDF("da", "db")),
       Fixture("Int ids", (1 to 6).toDF("doc_id"),
-        Seq((1, 2), (2, 3), (5, 6)).toDF("da", "db"), stars = false),
+        Seq((1, 2), (2, 3), (5, 6)).toDF("da", "db")),
       Fixture("Int ids, long pairs", (1 to 6).toDF("doc_id"),
-        Seq((2L, 3L), (5L, 6L)).toDF("da", "db"), stars = false),
+        Seq((2L, 3L), (5L, 6L)).toDF("da", "db")),
       Fixture("duplicate ids", Seq(1L, 1L, 2L, 3L, 3L, 4L, 5L).toDF("doc_id"),
-        Seq((1L, 2L), (3L, 4L)).toDF("da", "db"), uniqueIds = false),
+        Seq((1L, 2L), (3L, 4L)).toDF("da", "db")),
       Fixture("endpoint absent from ids", (1L to 6L).toDF("doc_id"),
         // 9 joins 2 to 3; 0 < 4 labels nothing; {7, 8} holds no id
-        Seq((1L, 2L), (2L, 9L), (9L, 3L), (0L, 4L), (7L, 8L)).toDF("da", "db"),
-        stars = false))
+        Seq((1L, 2L), (2L, 9L), (9L, 3L), (0L, 4L), (7L, 8L)).toDF("da", "db")))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString(","))
       .toSeq
     def shape(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
@@ -539,16 +533,12 @@ class TextDedupSpec extends SparkSpec {
       if (f.escalates) assert(shape(driver) == shape(dist), s"${f.name}: schema")
       else assert(driver.schema == dist.schema, s"${f.name}: schema")
       assert(rows(driver) == rows(dist), s"${f.name}: rows")
-      if (f.uniqueIds) {
-        if (f.escalates) assert(shape(driverBest) == shape(distBest))
-        else assert(driverBest.schema == distBest.schema, s"${f.name}: best schema")
-        assert(rows(driverBest) == rows(distBest), s"${f.name}: best rows")
-      }
-      if (f.stars) {
-        val stars = DedupOps.connectedComponentsStars(f.ids, "doc_id", f.pairs)
-        assert(shape(stars) == shape(dist), s"${f.name}: stars schema")
-        assert(rows(stars) == rows(dist), s"${f.name}: stars rows")
-      }
+      if (f.escalates) assert(shape(driverBest) == shape(distBest))
+      else assert(driverBest.schema == distBest.schema, s"${f.name}: best schema")
+      assert(rows(driverBest) == rows(distBest), s"${f.name}: best rows")
+      val stars = DedupOps.connectedComponentsStars(f.ids, "doc_id", f.pairs)
+      assert(shape(stars) == shape(dist), s"${f.name}: stars schema")
+      assert(rows(stars) == rows(dist), s"${f.name}: stars rows")
     }
   }
 

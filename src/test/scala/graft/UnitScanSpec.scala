@@ -39,7 +39,10 @@ class UnitScanSpec extends SparkSpec {
       ("VtiDataSource", Map("path" -> "/nonexistent", "table" -> "cell"), false,
         "VtiDataSource: unknown table 'cell' (points|cells)"),
       ("D3PlotDataSource", Map("path" -> "/nonexistent", "table" -> "shells"), true,
-        "D3PlotDataSource: unknown table 'shells' (points|cells|states|shell)"),
+        "D3PlotDataSource: unknown table 'shells' " +
+          "(points|cells|states|shell|sph_particles|sph_states)"),
+      ("NetCdfDataSource", Map("path" -> "/nonexistent", "table" -> "var"), false,
+        "NetCdfDataSource: unknown table 'var' (data|vars)"),
       ("RandomMeshSource", Map("n_meshes" -> "-1"), false,
         "RandomMeshSource: n_meshes must be >= 0, got -1"),
       ("RandomMeshSource", Map("points_per_mesh" -> "-5"), false,
