@@ -260,6 +260,12 @@ object LockProvider {
     *    renew already past its token check could otherwise re-PUT the
     *    lease after release deletes it, leaving an orphan lock that
     *    refuses every holder until the TTL expires.
+    *  - A renew, a fence check and the renewer's interrupt never overlap:
+    *    a renew's PUT is not atomically visible on a local or simulated
+    *    store (the file is empty between create and write), so a fence
+    *    reading it then would see a torn lease and abort a live hold, and
+    *    an interrupt landing inside it could leave the torn lease behind
+    *    for release to refuse.
     */
   def withLease[A](fs: FileSystem, lock: Path, ttlMs: Long, label: String,
                    janitor: String)(body: Fence => A): Option[A] = {
@@ -269,6 +275,7 @@ object LockProvider {
     else {
       val lost = new java.util.concurrent.atomic.AtomicBoolean(false)
       val releasing = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val io = new Object // serializes renew, fence and interrupt
       val renewer = new Thread(() => {
         val period = math.max(ttlMs / 4, 250L)
         try {
@@ -279,21 +286,23 @@ object LockProvider {
           while (!releasing.get() && !lost.get()) {
             Thread.sleep(period)
             // don't renew a lease release is about to delete
-            if (!releasing.get() && !lp.renew(fs, lock)) lost.set(true)
+            io.synchronized {
+              if (!releasing.get() && !lp.renew(fs, lock)) lost.set(true)
+            }
           }
         } catch { case _: InterruptedException => () }
       }, s"graft-lease-renewer-${lock.getName}")
       renewer.setDaemon(true)
       renewer.start()
       val fence: Fence = phase =>
-        if (lost.get() || !lp.verify(fs, lock))
+        if (io.synchronized(lost.get() || !lp.verify(fs, lock)))
           throw new IllegalStateException(
             s"$label $lock lost mid-$phase (lease stolen or renew failed) " +
               "— aborting before the destructive phase; staged output is " +
               s"orphaned for $janitor")
       try Some(body(fence)) finally {
         releasing.set(true)
-        renewer.interrupt()
+        io.synchronized(renewer.interrupt())
         renewer.join()
         lp.release(fs, lock)
       }
