@@ -33,66 +33,6 @@ object Avc {
     }
   }
 
-  private final class BitWriter {
-    private val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    private var cur = 0
-    private var nb = 0
-    def bit(b: Int): Unit = {
-      cur = (cur << 1) | (b & 1); nb += 1
-      if (nb == 8) { out += cur.toByte; cur = 0; nb = 0 }
-    }
-    def bits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { bit((v >> i) & 1); i -= 1 }
-    }
-    /** Unsigned exp-Golomb: n leading zeros then (v+1) in n+1 bits. */
-    def ue(v: Int): Unit = {
-      require(v >= 0, s"ue($v)")
-      val k = v + 1
-      val n = 31 - Integer.numberOfLeadingZeros(k)
-      bits(0, n)
-      bits(k, n + 1)
-    }
-    /** rbsp_trailing_bits: stop bit then zero-align. */
-    def close(): Array[Byte] = {
-      bit(1)
-      while (nb != 0) bit(0)
-      out.toArray
-    }
-  }
-
-  private final class BitReader(bytes: Array[Byte]) {
-    private var pos = 0
-    private var nb = 0
-    def bit(): Int = {
-      require(pos < bytes.length, "SPS bitstream exhausted")
-      val b = (bytes(pos) >> (7 - nb)) & 1
-      nb += 1
-      if (nb == 8) { nb = 0; pos += 1 }
-      b
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    def ue(): Int = {
-      var zeros = 0
-      while (bit() == 0) {
-        zeros += 1
-        // zeros == 31 would overflow (1 << 31) to a NEGATIVE value and
-        // feed garbage geometry downstream; cap below it
-        require(zeros <= 30, "exp-Golomb run too long")
-      }
-      if (zeros == 0) 0 else ((1 << zeros) | bits(zeros)) - 1
-    }
-    def se(): Int = { // signed exp-Golomb: k -> (-1)^(k+1) * ceil(k/2)
-      val k = ue()
-      if (k % 2 == 0) -(k / 2) else (k + 1) / 2
-    }
-  }
-
   /** Insert emulation-prevention bytes: 00 00 {00,01,02,03} → 00 00 03 xx. */
   private[graft] def escape(rbsp: Array[Byte]): Array[Byte] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
@@ -132,7 +72,7 @@ object Avc {
     require(!HighProfiles.contains(s.profileIdc),
       s"renderSps writes the baseline branch; profile ${s.profileIdc} needs chroma fields")
     require(s.widthMbs >= 1 && s.heightMapUnits >= 1, s"bad geometry $s")
-    val w = new BitWriter
+    val w = new H264.BitWriter
     w.bits(s.profileIdc, 8)
     w.bits(0, 8)                   // constraint flags + reserved
     w.bits(s.levelIdc, 8)
@@ -158,7 +98,7 @@ object Avc {
   def parseSps(nal: Array[Byte]): Sps = {
     require(nal.length >= 4, s"SPS NAL of ${nal.length} bytes")
     require((nal(0) & 0x1f) == 7, s"NAL type ${nal(0) & 0x1f} is not SPS(7)")
-    val r = new BitReader(unescape(nal.drop(1)))
+    val r = new H264.BitReader(unescape(nal.drop(1)))
     val profile = r.bits(8)
     r.bits(8)                      // constraint flags + reserved
     val level = r.bits(8)

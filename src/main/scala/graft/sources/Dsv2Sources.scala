@@ -7,14 +7,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{GlobFilter, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, In, IsNotNull}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.{EqualTo, Filter, In, IsNotNull, Not}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -339,23 +340,24 @@ abstract class FileUnitSource(glob: String) extends UnitSource {
 
   protected final def conf: Map[String, String] = Dsv2.confMap(SparkSession.active)
 
-  /** Sorted union of the array names `names` finds in each file's header
-    * (heterogeneous runs still get one schema; files lacking an array emit
-    * null for it). Each file costs only its XML HEADER bytes, so planning
-    * stays O(header) per file even against multi-GB meshes. `inferLimit`
-    * (default 0 = all) samples the first N files when the corpus is
-    * homogeneous; `.schema(...)` skips inference entirely.
+  /** `parse` of each file's header, in file order — for schema inference
+    * over the union of the arrays the headers list (heterogeneous runs
+    * still get one schema; files lacking an array emit null for it). Each
+    * file costs only its XML HEADER bytes, so planning stays O(header) per
+    * file even against multi-GB meshes. `inferLimit` (default 0 = all)
+    * samples the first N files when the corpus is homogeneous;
+    * `.schema(...)` skips inference entirely.
     */
-  protected final def headerArrays(o: CaseInsensitiveStringMap)(
-      names: Dsv2.HadoopRawData => Seq[String]): Seq[String] = {
+  protected final def headers[A](o: CaseInsensitiveStringMap)(
+      parse: Dsv2.HadoopRawData => A): Seq[A] = {
     val files = listed(o).map(_._1)
     require(files.nonEmpty, s"$sourceName: no files under ${o.get("path")}")
     val limit = Dsv2.opt(o, "inferLimit", "0").toInt
     val c = conf
     Dsv2.parMap(if (limit > 0) files.take(limit) else files) { f =>
       val raw = new Dsv2.HadoopRawData(f, c)
-      try names(raw) finally raw.close()
-    }.flatten.distinct.sorted
+      try parse(raw) finally raw.close()
+    }
   }
 }
 
@@ -364,8 +366,9 @@ private object UnitSource {
   def lng(n: String) = StructField(n, LongType, nullable = false)
   def int(n: String) = StructField(n, IntegerType, nullable = false)
   def dbl(n: String) = StructField(n, DoubleType, nullable = false)
+  /** One nullable DOUBLE column per distinct array name, sorted. */
   def arrays(names: Seq[String]): Seq[StructField] =
-    names.map(a => StructField(a, DoubleType, nullable = true))
+    names.distinct.sorted.map(a => StructField(a, DoubleType, nullable = true))
   def vertices: StructField = StructField("vertices", ArrayType(LongType), nullable = false)
 }
 
@@ -399,12 +402,23 @@ class VtuDataSource extends FileUnitSource("*.vt[up]") {
     if (cells) ("cell_id", Seq(vertices)) else ("point_id", Seq(dbl("x"), dbl("y"), dbl("z")))
 
   override protected def schemaOf(o: CaseInsensitiveStringMap): StructType = {
-    val cells = table(o) == "cells"
-    val (id, geom) = layout(cells)
-    StructType(Seq(str("mesh_id"), lng(id)) ++ geom ++ arrays(headerArrays(o) { raw =>
+    val (points, cells) = schemas(o)
+    if (table(o) == "cells") cells else points
+  }
+
+  /** The `points` and `cells` schemas from ONE pass over the file headers;
+    * a caller loading both tables hands them over with `.schema(...)`.
+    */
+  private[sources] def schemas(o: CaseInsensitiveStringMap): (StructType, StructType) = {
+    val lists = headers(o) { raw =>
       val (_, _, pointArrays, cellArrays) = VtkXmlSource.listVtuArraysRaw(raw)
-      if (cells) cellArrays else pointArrays
-    }))
+      (pointArrays, cellArrays)
+    }
+    def schema(cells: Boolean, names: Seq[String]) = {
+      val (id, geom) = layout(cells)
+      StructType(Seq(str("mesh_id"), lng(id)) ++ geom ++ arrays(names))
+    }
+    (schema(cells = false, lists.flatMap(_._1)), schema(cells = true, lists.flatMap(_._2)))
   }
 
   override protected def payloadFraction(o: CaseInsensitiveStringMap, full: StructType,
@@ -465,15 +479,40 @@ class VtuDataSource extends FileUnitSource("*.vt[up]") {
 // --------------------------------------------------------------- NetCDF
 
 /** `spark.read.format("graft.sources.NetCdfDataSource").option("path", dir)`
-  * → `file STRING, variable STRING, pos LONG, value DOUBLE` (`table=data`,
-  * the default). `option("table", "vars")` is the header-only variable
-  * list: `file, variable, dims ARRAY<STRING>, shape ARRAY<LONG>,
-  * is_record BOOLEAN` (shape counts the records of a record variable).
-  * A `variable = 'x'` / `variable IN (...)` predicate pushes down into the
-  * decoder's `wanted` set, so non-matching variables are never read —
-  * the Catalyst-native form of the reference's `variables` selection
-  * (`era5.py:103-382`). Options: `globFilter` (default `*.nc`),
-  * `decodeCf`, `decodeTimes` (see [[NetCdfSource.read]]).
+  * over gridded files of three formats, told apart per file by their first
+  * bytes: NetCDF classic (`CDF`, CDF-1/2/5, [[NetCdfSource]]), netCDF-4
+  * (`\x89HDF`, the HDF5 container, [[graft.sinks.Hdf5Store]]) and GRIB2
+  * (`GRIB`, [[GribSource]]); any other file fails the scan, naming it.
+  * Only the classic decoder is ranged (header window, then per-variable
+  * slices); an HDF5 or GRIB2 file is read whole into memory, so it must
+  * stay under 2 GiB. A GRIB2 message becomes the variable
+  * `grib_d<discipline>_c<category>_n<number>_f<forecast hours>` on the
+  * dims `(lat, lon)`, its bitmap holes NaN.
+  *
+  * `table=data` (the default): `file STRING, variable STRING, pos LONG,
+  * value DOUBLE`, `pos` row-major with the record dimension outermost.
+  * `option("table", "vars")` lists the variables: `file, variable,
+  * dims ARRAY<STRING>, shape ARRAY<LONG>, is_record, is_coord, format,
+  * scale_name, dim_id, dtype`. `shape` counts the records of a record
+  * variable; `format` is `classic`, `hdf5` or `grib2`; `is_coord` marks a
+  * classic coordinate variable (its only dimension is its name) and an HDF5
+  * dimension scale. A column a format does not carry is null:
+  *
+  *  - classic: `scale_name`, `dim_id` and `dtype`;
+  *  - hdf5: `is_record`; `scale_name` is "" and `dim_id` -1 on a variable
+  *    that is not a dimension scale;
+  *  - grib2: `is_record`, `scale_name`, `dim_id` and `dtype`.
+  *
+  * The classic `vars` table reads only the header; the HDF5 and GRIB2
+  * `vars` tables decode the whole file.
+  *
+  * `variable = 'x'`, `variable IN (...)` and their negations push down into
+  * the decoder's `wanted` set, so a classic file never reads an unwanted
+  * variable's bytes — the Catalyst-native form of the reference's
+  * `variables` selection (`era5.py:103-382`). Options: `globFilter`
+  * (default `*.nc`), and `decodeCf`/`decodeTimes`, the CF unpacking and
+  * time conversion of the classic branch ([[NetCdfSource.CfCodec]],
+  * [[NetCdfSource.CfTime]]; HDF5 and GRIB2 values stay raw).
   */
 class NetCdfDataSource extends FileUnitSource("*.nc") {
   override protected def label = "netcdf"
@@ -481,64 +520,71 @@ class NetCdfDataSource extends FileUnitSource("*.nc") {
   override protected def tables = NetCdfDataSource.Schemas.map(_._1)
   override protected def schemaOf(o: CaseInsensitiveStringMap): StructType =
     NetCdfDataSource.Schemas.toMap.apply(table(o))
-  // the variable list is header bytes only
+  // a classic variable list is header bytes only
   override protected def payloadFraction(o: CaseInsensitiveStringMap, full: StructType,
                                          required: StructType): Double =
     if (table(o) == "vars") 0.02 else 1.0
 
-  override protected def pushes(f: Filter): Boolean = f match {
-    case EqualTo("variable", _: String) | IsNotNull("variable") => true
-    case In("variable", vs) => vs.forall(_.isInstanceOf[String])
-    case _ => false
+  /** The variable names an `EqualTo`/`In` on `variable` lists. */
+  private def names(f: Filter): Option[Set[String]] = f match {
+    case EqualTo("variable", v: String) => Some(Set(v))
+    case In("variable", vs) if vs.forall(_.isInstanceOf[String]) =>
+      Some(vs.map(_.asInstanceOf[String]).toSet)
+    case _ => None
   }
 
-  /** The EXACT variable-name set the pushed predicates allow; None = all. */
-  private def allowed(pushed: Array[Filter]): Option[Set[String]] = {
-    val sets = pushed.collect {
-      case EqualTo("variable", v: String) => Set(v)
-      case In("variable", vs) => vs.collect { case s: String => s }.toSet
-    }
-    if (sets.isEmpty) None else Some(sets.reduce(_ intersect _))
+  override protected def pushes(f: Filter): Boolean = f match {
+    case IsNotNull("variable") => true
+    case Not(g) => names(g).isDefined
+    case g => names(g).isDefined
+  }
+
+  /** The EXACT variable-name set the pushed predicates allow (None = all),
+    * and the set they exclude.
+    */
+  private def selection(pushed: Array[Filter]): (Option[Set[String]], Set[String]) = {
+    val in = pushed.flatMap(names)
+    (if (in.isEmpty) None else Some(in.reduce(_ intersect _)),
+      pushed.collect { case Not(g) => names(g) }.flatten.flatten.toSet)
   }
 
   override protected def describe(o: CaseInsensitiveStringMap, required: StructType,
-                                  pushed: Array[Filter]): String =
-    s"graft_netcdf table=${table(o)} " +
-      s"vars=${allowed(pushed).map(_.toSeq.sorted.mkString("[", ",", "]")).getOrElse("*")}"
+                                  pushed: Array[Filter]): String = {
+    def list(vs: Set[String]) = vs.toSeq.sorted.mkString("[", ",", "]")
+    val (in, out) = selection(pushed)
+    s"graft_netcdf table=${table(o)} vars=${in.map(list).getOrElse("*")}" +
+      (if (out.isEmpty) "" else s" not=${list(out)}")
+  }
 
   override protected def reader(o: CaseInsensitiveStringMap, required: StructType,
                                 pushed: Array[Filter]): ScanUnit => Iterator[InternalRow] = {
     val c = conf
-    val vars = allowed(pushed)
-    val wanted: String => Boolean = name => vars.forall(_.contains(name))
+    val (in, out) = selection(pushed)
+    val wanted: String => Boolean = name => in.forall(_.contains(name)) && !out(name)
     val header = table(o) == "vars"
     val decodeCf = Dsv2.opt(o, "decodeCf", "false").toBoolean
     val decodeTimes = Dsv2.opt(o, "decodeTimes", "false").toBoolean
     val cols = required.fieldNames
     u => {
-      // ranged handle: a pushed variable predicate prunes I/O — a file with
-      // no wanted variable costs only its header bytes, and wanted
-      // variables read as slices at their CDF begin offsets
-      val raw = new Dsv2.HadoopRawData(u.files.head, c)
+      val path = u.files.head
+      val raw = new Dsv2.HadoopRawData(path, c)
+      val (vs, rows) =
+        try NetCdfDataSource.decode(raw, path, wanted, header, decodeCf, decodeTimes)
+        finally raw.close()
       if (header) {
-        val f = try NetCdfSource.parseHeaderRaw(raw) finally raw.close()
-        val vs = f.vars.filter(v => wanted(v.name)).toArray
-        def isRec(v: NetCdfSource.NcVar) = v.dimIds.headOption.exists(f.dims(_).length == 0L)
         indexedRows(u, cols, vs.length) {
           case "variable" => i => UTF8String.fromString(vs(i.toInt).name)
           case "dims" => i => new GenericArrayData(
-            vs(i.toInt).dimIds.map(d => UTF8String.fromString(f.dims(d).name)).toArray[Any])
-          case "shape" => i => new GenericArrayData(vs(i.toInt).dimIds.map { d =>
-            if (f.dims(d).length == 0L) f.numRecs else f.dims(d).length
-          }.toArray[Any])
-          case "is_record" => i => isRec(vs(i.toInt))
+            vs(i.toInt).dims.map(UTF8String.fromString).toArray[Any])
+          case "shape" => i => new GenericArrayData(vs(i.toInt).shape.toArray[Any])
+          case "is_record" => i => vs(i.toInt).isRecord
+          case "is_coord" => i => vs(i.toInt).isCoord
+          case "format" => i => UTF8String.fromString(vs(i.toInt).format)
+          case "scale_name" => i => UTF8String.fromString(vs(i.toInt).scaleName)
+          case "dim_id" => i => vs(i.toInt).dimId
+          case "dtype" => i => UTF8String.fromString(vs(i.toInt).dtype)
         }
       } else {
-        // toArray: the decoder returns a List, and positional List access in
-        // the row loop is O(n²) — quadratic at real grid sizes
-        val rows =
-          try NetCdfSource.valuesRanged(raw, wanted, decodeCf, decodeTimes).toArray
-          finally raw.close()
         indexedRows(u, cols, rows.length) {
           case "variable" => i => UTF8String.fromString(rows(i.toInt)._1)
           case "pos" => i => rows(i.toInt)._2
@@ -556,7 +602,90 @@ object NetCdfDataSource {
     "vars" -> StructType(Seq(str("file"), str("variable"),
       StructField("dims", ArrayType(StringType, containsNull = false), nullable = false),
       StructField("shape", ArrayType(LongType, containsNull = false), nullable = false),
-      StructField("is_record", BooleanType, nullable = false))))
+      StructField("is_record", BooleanType, nullable = true),
+      StructField("is_coord", BooleanType, nullable = false),
+      str("format"),
+      StructField("scale_name", StringType, nullable = true),
+      StructField("dim_id", IntegerType, nullable = true),
+      StructField("dtype", StringType, nullable = true))))
+
+  /** The `vars` and `data` tables over `pathGlob` (resolved through
+    * [[Fetchers]]); a non-empty `include` or `exclude` becomes a pushed
+    * `variable` filter on both. The grid readers project these.
+    */
+  private[sources] def load(spark: SparkSession, pathGlob: String, globFilter: String,
+                            decodeCf: Boolean = false, decodeTimes: Boolean = false,
+                            include: Set[String] = Set.empty,
+                            exclude: Set[String] = Set.empty): (DataFrame, DataFrame) = {
+    val path = Fetchers.resolve(spark, pathGlob)
+    val variable = col("variable")
+    def table(name: String) = {
+      val t = spark.read.format("graft.sources.NetCdfDataSource")
+        .option("path", path).option("globFilter", globFilter)
+        .option("decodeCf", decodeCf).option("decodeTimes", decodeTimes)
+        .option("table", name).load()
+      val kept = if (include.isEmpty) t else t.where(variable.isin(include.toSeq: _*))
+      if (exclude.isEmpty) kept else kept.where(!variable.isin(exclude.toSeq: _*))
+    }
+    (table("vars"), table("data"))
+  }
+
+  /** One `vars` row; null is a column the file's format does not carry. */
+  private final case class GridVar(name: String, dims: Seq[String], shape: Seq[Long],
+                                   isRecord: java.lang.Boolean, isCoord: Boolean,
+                                   format: String, scaleName: String = null,
+                                   dimId: Integer = null, dtype: String = null)
+
+  /** The format a file's first bytes name. */
+  private def format(raw: VtkXmlSource.RawData, path: String): String = {
+    val b = raw.slice(0L, math.min(raw.size, 8L))
+    def starts(magic: Int*): Boolean =
+      b.length >= magic.length && magic.indices.forall(i => (b(i) & 0xff) == magic(i))
+    if (b.length >= 4 && starts('C', 'D', 'F')) "classic"
+    else if (b.length >= 8 && starts(0x89, 'H', 'D', 'F')) "hdf5"
+    else if (starts('G', 'R', 'I', 'B')) "grib2"
+    else throw new IllegalArgumentException(
+      s"$path: no classic NetCDF (CDF), HDF5, or GRIB signature")
+  }
+
+  /** One file's wanted variables: their `vars` rows when `header`, else
+    * their `(variable, pos, value)` rows. A decode error names the file.
+    */
+  private def decode(raw: VtkXmlSource.RawData, path: String, wanted: String => Boolean,
+                     header: Boolean, decodeCf: Boolean,
+                     decodeTimes: Boolean): (Array[GridVar], Array[(String, Long, Double)]) =
+    try format(raw, path) match {
+      case "classic" if header =>
+        val f = NetCdfSource.parseHeaderRaw(raw)
+        (f.vars.filter(v => wanted(v.name)).map { v =>
+          val dims = v.dimIds.map(f.dims(_).name)
+          GridVar(v.name, dims,
+            v.dimIds.map(d => if (f.dims(d).length == 0L) f.numRecs else f.dims(d).length),
+            v.dimIds.headOption.exists(f.dims(_).length == 0L),
+            isCoord = dims == Seq(v.name), "classic")
+        }.toArray, Array.empty)
+      case "classic" =>
+        // toArray: the decoder returns a List, and positional List access in
+        // the row loop is O(n²) — quadratic at real grid sizes
+        (Array.empty, NetCdfSource.valuesRanged(raw, wanted, decodeCf, decodeTimes).toArray)
+      case fmt =>
+        val bytes = raw.slice(0L, raw.size)
+        val decoded =
+          if (fmt == "hdf5") graft.sinks.Hdf5Store.parseVars(bytes).map { v =>
+            GridVar(v.name, v.dimNames, v.dims, null, v.isScale, fmt,
+              v.scaleName, v.dimId, v.dtype) -> v.values
+          } else GribSource.parse(bytes).map { m =>
+            GridVar(s"grib_d${m.discipline}_c${m.category}_n${m.number}_f${m.forecastHours}",
+              Seq("lat", "lon"), Seq(m.nj, m.ni), null, isCoord = false, fmt) -> m.values
+          }
+        val kept = decoded.filter(d => wanted(d._1.name)).toArray
+        (kept.map(_._1),
+          if (header) Array.empty
+          else kept.flatMap { case (v, vals) => vals.indices.map(i => (v.name, i.toLong, vals(i))) })
+    } catch {
+      case e: Exception if !String.valueOf(e.getMessage).contains(path) =>
+        throw new IllegalArgumentException(s"$path: $e", e)
+    }
 }
 
 // ------------------------------------------------------------------ LMDB
@@ -638,10 +767,10 @@ class VtiDataSource extends FileUnitSource("*.vti") {
   override protected def schemaOf(o: CaseInsensitiveStringMap): StructType = {
     val cells = table(o) == "cells"
     StructType(Seq(str("grid_id"), int("i"), int("j"), int("k"), dbl("x"), dbl("y"), dbl("z")) ++
-      arrays(headerArrays(o) { raw =>
+      arrays(headers(o) { raw =>
         val (_, _, _, pd, cd) = VtkXmlSource.listVtiMeta(raw)
         if (cells) cd else pd
-      }))
+      }.flatten))
   }
 
   // i/j/k/x/y/z are COMPUTED from the header (zero payload)

@@ -7,38 +7,20 @@ import org.apache.spark.sql.functions._
   * `sinks/NetCdf4Sink`/`Hdf5Store`, emitting the same long grid model as
   * `NetCdfSource`: a `vars` table (file, variable, dims, plus the
   * netCDF-4 dimension metadata: is_scale / scale_name / dim_id /
-  * dim_names) and a `data` table (file, variable, row-major pos, value)
-  * covering every dataset, coordinate scales included. File distribution
-  * via `binaryFile`, per-file decode in `flatMap` on executors.
+  * dim_names / dtype) and a `data` table (file, variable, row-major pos,
+  * value) covering every dataset, coordinate scales included. Both are
+  * projections of [[NetCdfDataSource]]'s `vars` and `data` tables (`dims`
+  * is its `shape`, `is_scale` its `is_coord`, `dim_names` its `dims`), so
+  * a classic or GRIB2 file the glob matches decodes through the same
+  * dispatch.
   */
 object Hdf5Source {
 
   def read(spark: SparkSession, pathGlob: String,
            globFilter: String = "*.nc4"): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    // parse ONCE per file; the persisted dataset (shared by both returned
-    // frames) holds decoded values, not raw file bytes — same lifecycle as
-    // the other binary sources: released by unpersist/clearCache when the
-    // caller is done with both frames
-    val parsed = spark.read.format("binaryFile")
-      .option("pathGlobFilter", globFilter).load(pathGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        graft.sinks.Hdf5Store.parseVars(bytes).map { v =>
-          (path, v.name, v.dims, v.isScale, v.scaleName, v.dimId, v.dimNames,
-            v.dtype, v.values)
-        }
-      }.persist()
-    val vars = parsed
-      .map { case (path, name, dims, isScale, scaleName, dimId, dimNames, dtype, _) =>
-        (path, name, dims, isScale, scaleName, dimId, dimNames, dtype)
-      }
-      .toDF("file", "variable", "dims", "is_scale", "scale_name", "dim_id",
-        "dim_names", "dtype")
-    val data = parsed.flatMap { case (path, name, _, _, _, _, _, _, vals) =>
-      vals.iterator.zipWithIndex.map { case (v, i) => (path, name, i.toLong, v) }
-    }.toDF("file", "variable", "pos", "value")
-    (vars, data)
+    val (vars, data) = NetCdfDataSource.load(spark, pathGlob, globFilter)
+    (vars.select(col("file"), col("variable"), col("shape").as("dims"),
+      col("is_coord").as("is_scale"), col("scale_name"), col("dim_id"),
+      col("dims").as("dim_names"), col("dtype")), data)
   }
 }

@@ -3,15 +3,13 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sinks.Hdf5Store
-
 /** Format-dispatching NetCDF ingestion: real-world archives mix classic
   * (CDF-1/2/5) and netCDF-4 (HDF5 container) files — ERA5 downloads in
   * particular are netCDF-4, while GFS/HRRR subsets are classic — and the
   * reference reads both transparently through xarray
   * (`domains/da/sources/era5.py`). Each file is routed by its MAGIC BYTES
-  * (`CDF` → `NetCdfSource` decoder, `\x89HDF` → `Hdf5Store`), per file on
-  * executors, into one unified long model:
+  * inside [[NetCdfDataSource]] (`CDF` → classic, `\x89HDF` → HDF5,
+  * `GRIB` → GRIB2), and both tables are projections of its tables:
   *
   *  - `vars`:  (file, variable, dim_names, shape, is_coord, format) —
   *    `is_coord` marks classic coordinate variables (name == its only
@@ -19,20 +17,11 @@ import graft.sinks.Hdf5Store
   *  - `data`:  (file, variable, pos, value) — row-major, record dimension
   *    outermost, identical to both single-format sources.
   *
-  * `include`/`exclude` prune VARIABLES before value expansion (the
-  * KeyFilters discipline: unwanted arrays are dropped at the decode, not
-  * filtered afterwards).
+  * `include`/`exclude` become pushed `variable` filters, so unwanted
+  * variables are dropped at the decode, not filtered afterwards (the
+  * KeyFilters discipline).
   */
 object NetCdfAutoSource {
-
-  private def isHdf5(b: Array[Byte]): Boolean =
-    b.length >= 8 && (b(0) & 0xff) == 0x89 && b(1) == 'H' && b(2) == 'D' && b(3) == 'F'
-
-  private def isClassic(b: Array[Byte]): Boolean =
-    b.length >= 4 && b(0) == 'C' && b(1) == 'D' && b(2) == 'F'
-
-  private def isGrib(b: Array[Byte]): Boolean =
-    b.length >= 4 && b(0) == 'G' && b(1) == 'R' && b(2) == 'I' && b(3) == 'B'
 
   /** `decodeCf = true` applies CF `scale_factor`/`add_offset`/`_FillValue`
     * unpacking and `decodeTimes = true` CF time-coordinate conversion on
@@ -48,70 +37,9 @@ object NetCdfAutoSource {
            exclude: Set[String] = Set.empty,
            decodeCf: Boolean = false,
            decodeTimes: Boolean = false): (DataFrame, DataFrame) = {
-    val (vars, data, _) = readWithRelease(spark, pathGlob, globFilter,
-      include, exclude, decodeCf, decodeTimes)
-    (vars, data)
-  }
-
-  /** Like `read`, but returns a RELEASE HANDLE for the internal decode
-    * cache: long-lived sessions iterating many archives call it after
-    * consuming both frames, so cached blocks never accumulate waiting for
-    * a global `clearCache()` (the `annCosinePairsMultiEager` discipline).
-    * After release, the frames recompute from the files if re-used.
-    */
-  def readWithRelease(spark: SparkSession, pathGlob: String,
-                      globFilter: String = "*.nc*",
-                      include: Set[String] = Set.empty,
-                      exclude: Set[String] = Set.empty,
-                      decodeCf: Boolean = false,
-                      decodeTimes: Boolean = false): (DataFrame, DataFrame, () => Unit) = {
-    import spark.implicits._
-    def wanted(name: String): Boolean =
-      (include.isEmpty || include.contains(name)) && !exclude.contains(name)
-
-    // decode ONCE per file; both frames project from the persisted decode
-    // (released via the returned handle, or — for `read` callers — by
-    // clearCache, like the other binary sources)
-    val parsed = spark.read.format("binaryFile")
-      .option("pathGlobFilter", globFilter).load(pathGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        if (isHdf5(bytes)) {
-          Hdf5Store.parseVars(bytes).filter(v => wanted(v.name)).map { v =>
-            (path, v.name, v.dimNames, v.dims, v.isScale, "hdf5", v.values)
-          }
-        } else if (isClassic(bytes)) {
-          val f = NetCdfSource.parseHeader(bytes)
-          val byVar = NetCdfSource.values(bytes, wanted, decodeCf, decodeTimes)
-            .groupBy(_._1).view.mapValues(_.map(_._3).toArray)
-          f.vars.filter(v => wanted(v.name)).map { v =>
-            val dimNames = v.dimIds.map(f.dims(_).name)
-            val shape = v.dimIds.map(d =>
-              if (f.dims(d).length == 0L) f.numRecs else f.dims(d).length)
-            val isCoord = dimNames == Seq(v.name)
-            (path, v.name, dimNames, shape, isCoord, "classic",
-              byVar.getOrElse(v.name, Array.empty[Double]))
-          }
-        } else if (isGrib(bytes)) {
-          // GRIB2 messages become synthetic variables keyed by parameter
-          // identity + forecast hour (the filename-free identity a real
-          // archive walk needs); bitmap holes stay NaN in the value run —
-          // callers filter like any CF fill
-          GribSource.parse(bytes).map { m =>
-            val name = s"grib_d${m.discipline}_c${m.category}_n${m.number}_f${m.forecastHours}"
-            (path, name, Seq("lat", "lon"), Seq(m.nj, m.ni), false, "grib2",
-              m.values)
-          }.filter(t => wanted(t._2))
-        } else throw new IllegalArgumentException(
-          s"$path: no classic NetCDF (CDF), HDF5, or GRIB signature")
-      }.persist()
-
-    val vars = parsed.map { case (f, n, dn, sh, c, fmt, _) => (f, n, dn, sh, c, fmt) }
-      .toDF("file", "variable", "dim_names", "shape", "is_coord", "format")
-    val data = parsed.flatMap { case (f, n, _, _, _, _, vals) =>
-      vals.iterator.zipWithIndex.map { case (v, i) => (f, n, i.toLong, v) }
-    }.toDF("file", "variable", "pos", "value")
-    (vars, data, () => { parsed.unpersist(true); () })
+    val (vars, data) = NetCdfDataSource.load(spark, pathGlob, globFilter,
+      decodeCf, decodeTimes, include, exclude)
+    (vars.select(col("file"), col("variable"), col("dims").as("dim_names"),
+      col("shape"), col("is_coord"), col("format")), data)
   }
 }

@@ -25,8 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `read` emits the long model: a `vars` table (variable, dims, shape,
   * record flag) and a `data` table (variable, linear row-major `pos`,
   * value as double) — the grid operators' input shape — as projections
-  * of [[NetCdfDataSource]]. NetCDF-4 (HDF5
-  * container) is out of scope and rejected by magic.
+  * of [[NetCdfDataSource]], which also dispatches netCDF-4 (HDF5
+  * container) and GRIB2 files by their magic bytes.
   */
 object NetCdfSource {
 
@@ -290,22 +290,19 @@ object NetCdfSource {
   }
 
   /** Long tables from a glob of `.nc` files: vars (file, variable, dims,
-    * shape, is_record) and data (file, variable, pos, value) — the
-    * `vars` and `data` tables of [[NetCdfDataSource]], one file per task.
-    * `decodeCf = true` unpacks CF packed variables at decode ([[CfCodec]]);
-    * `decodeTimes = true` additionally converts variables carrying a
-    * parseable `units = "<unit> since <epoch>"` attribute to epoch
-    * seconds ([[CfTime]]).
+    * shape, is_record) and data (file, variable, pos, value) — projections
+    * of the `vars` and `data` tables of [[NetCdfDataSource]], one file per
+    * task. A netCDF-4 or GRIB2 file the glob matches decodes too (its
+    * `is_record` is null). `decodeCf = true` unpacks CF packed variables at
+    * decode ([[CfCodec]]); `decodeTimes = true` additionally converts
+    * variables carrying a parseable `units = "<unit> since <epoch>"`
+    * attribute to epoch seconds ([[CfTime]]).
     */
   def read(spark: SparkSession, pathGlob: String,
            globFilter: String = "*.nc",
            decodeCf: Boolean = false,
            decodeTimes: Boolean = false): (DataFrame, DataFrame) = {
-    val path = Fetchers.resolve(spark, pathGlob)
-    def table(name: String) = spark.read.format("graft.sources.NetCdfDataSource")
-      .option("path", path).option("globFilter", globFilter)
-      .option("decodeCf", decodeCf).option("decodeTimes", decodeTimes)
-      .option("table", name).load()
-    (table("vars"), table("data"))
+    val (vars, data) = NetCdfDataSource.load(spark, pathGlob, globFilter, decodeCf, decodeTimes)
+    (vars.select("file", "variable", "dims", "shape", "is_record"), data)
   }
 }

@@ -9,6 +9,8 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.functions.Zlib
 
@@ -883,10 +885,14 @@ object VtkXmlSource {
               exclude: Set[String] = Set.empty,
               globFilter: String = "*.vt[ups]",
               keyFilterRules: Seq[KeyFilters.KeyFilterRule] = Nil): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    def table(name: String) = spark.read.format("graft.sources.VtuDataSource")
-      .option("path", pathGlob).option("globFilter", globFilter)
-      .option("table", name).load()
-    val (points, cells) = (table("points"), table("cells"))
+    // one header pass yields both schemas, so planning reads each header once
+    val (pointsSchema, cellsSchema) = new VtuDataSource().schemas(new CaseInsensitiveStringMap(
+      java.util.Map.of("path", pathGlob, "globFilter", globFilter)))
+    def table(name: String, schema: StructType) =
+      spark.read.format("graft.sources.VtuDataSource").schema(schema)
+        .option("path", pathGlob).option("globFilter", globFilter)
+        .option("table", name).load()
+    val (points, cells) = (table("points", pointsSchema), table("cells", cellsSchema))
     // per file, its rules' (include, exclude)
     val rules =
       if (keyFilterRules.isEmpty) None

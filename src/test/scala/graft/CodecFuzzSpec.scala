@@ -98,9 +98,7 @@ class CodecFuzzSpec extends AnyFunSuite {
   }
 
   test("HDF5 survives corruption") {
-    harden("hdf5", Hdf5Store.render(Seq(
-      ("temp", Seq(4L, 4L), Array.tabulate(16)(_ * 1.5)),
-      ("wind", Seq(8L), Array.tabulate(8)(_ * -0.25)))))(Hdf5Store.parse)
+    harden("hdf5", hdf5)(Hdf5Store.parse)
   }
 
   test("HDF5 chunked + deflate survives corruption") {
@@ -137,11 +135,7 @@ class CodecFuzzSpec extends AnyFunSuite {
   }
 
   test("GRIB2 survives corruption") {
-    val stored: Array[Option[Long]] = Array.tabulate(12)(i =>
-      if (i % 5 == 4) None else Some((i * 3L) % 255))
-    val spec = GribSource.Spec(0, 0, 0, 2026, 1, 1, 0, 6L, 4L, 3L,
-      90000000L, 0L, 250000L, 250000L, 250.5f, 0, 0, 8, stored)
-    harden("grib", GribSource.render(Seq(spec)))(GribSource.parse)
+    harden("grib", grib2)(GribSource.parse)
   }
 
   test("D3Plot survives corruption") {
@@ -175,7 +169,10 @@ class CodecFuzzSpec extends AnyFunSuite {
     harden("d3plot", bb.array())(graft.sources.D3PlotSource.parse(_))
   }
 
-  test("NetCDF classic header survives corruption") {
+  /** A CDF-1 file: dims (time=record, lat=3), one global attribute, one
+    * fixed double variable.
+    */
+  private def classicNc: Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val o = new java.io.DataOutputStream(bos)
     def name(s: String): Unit = {
@@ -195,7 +192,55 @@ class CodecFuzzSpec extends AnyFunSuite {
     o.writeInt(6); o.writeInt(24); o.writeInt(0)
     (0 until 3).foreach(i => o.writeDouble(i * 30.0))
     o.flush()
-    harden("netcdf", bos.toByteArray)(graft.sources.NetCdfSource.parseHeader)
+    bos.toByteArray
+  }
+
+  private def hdf5: Array[Byte] = Hdf5Store.render(Seq(
+    ("temp", Seq(4L, 4L), Array.tabulate(16)(_ * 1.5)),
+    ("wind", Seq(8L), Array.tabulate(8)(_ * -0.25))))
+
+  private def grib2: Array[Byte] = {
+    val stored: Array[Option[Long]] = Array.tabulate(12)(i =>
+      if (i % 5 == 4) None else Some((i * 3L) % 255))
+    GribSource.render(Seq(GribSource.Spec(0, 0, 0, 2026, 1, 1, 0, 6L, 4L, 3L,
+      90000000L, 0L, 250000L, 250000L, 250.5f, 0, 0, 8, stored)))
+  }
+
+  test("NetCDF classic header survives corruption") {
+    harden("netcdf", classicNc)(graft.sources.NetCdfSource.parseHeader)
+  }
+
+  test("NetCDF binding: damaged classic, HDF5 and GRIB2 files fail naming the file") {
+    val spark = SparkSpec.spark
+    val dir = java.nio.file.Files.createTempDirectory("fuzz_grid")
+    def read(name: String, bytes: Array[Byte]): Long = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.write(f, bytes)
+      spark.read.format("graft.sources.NetCdfDataSource")
+        .option("path", f.toString).option("globFilter", "*").load().count()
+    }
+    // a bit flip per format that keeps the signature and breaks the
+    // decode: CDF version 1 -> 3, HDF5 superblock version 0 -> 1, GRIB
+    // edition 2 -> 3
+    def flip(bytes: Array[Byte], at: Int): Array[Byte] = {
+      val m = bytes.clone(); m(at) = (m(at) ^ 2).toByte; m
+    }
+    val pristine = Seq(("classic", classicNc, 3), ("hdf5", hdf5, 8), ("grib2", grib2, 7))
+    pristine.foreach { case (fmt, bytes, _) => assert(read(s"ok_$fmt", bytes) > 0, fmt) }
+    val damaged = pristine.flatMap { case (fmt, bytes, at) =>
+      Seq(s"cut_$fmt" -> bytes.take(bytes.length / 2), s"flip_$fmt" -> flip(bytes, at))
+    } :+ ("nosig" -> "no signature here".getBytes("US-ASCII"))
+    damaged.foreach { case (name, bytes) =>
+      val t0 = System.nanoTime()
+      val e = intercept[Throwable](read(name, bytes))
+      val ms = (System.nanoTime() - t0) / 1e6
+      val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(!chain.exists(c => c.isInstanceOf[StackOverflowError] ||
+        c.isInstanceOf[OutOfMemoryError]), s"$name: $e")
+      assert(chain.exists(c => String.valueOf(c.getMessage).contains(s"$dir/$name")),
+        s"$name: the error does not name the file: $e")
+      assert(ms < 2000, s"$name took $ms ms (hang?)")
+    }
   }
 
   test("parquet footer survives corruption") {

@@ -197,7 +197,6 @@ class NetCdfSpec extends SparkSpec {
     assert(v2.select("variable").distinct().collect().map(_.getString(0)).toSet ==
       Set("t2m", "u10"))
     assert(d2.filter(col("variable") === "lat").count() == 0)
-    spark.catalog.clearCache()
   }
 
   test("CF packed write -> decodeCf read: scale/offset applied, fill -> NaN") {
@@ -229,7 +228,6 @@ class NetCdfSpec extends SparkSpec {
     val (_, autoData) = graft.sources.NetCdfAutoSource.read(spark, dir,
       globFilter = "*.nc", decodeCf = true)
     assert(autoData.filter(isnan(col("value"))).count() == 8)
-    spark.catalog.clearCache()
   }
 
   test("CF time coordinate: units parse; decodeTimes converts to epoch s") {
@@ -273,20 +271,118 @@ class NetCdfSpec extends SparkSpec {
       globFilter = "*.nc", decodeCf = true, decodeTimes = true)
     assert(autoD.filter(col("variable") === "time").orderBy("pos")
       .collect().map(_.getDouble(3)).toSeq == Seq(631152000.0, 631152000.0 + 21600))
-    spark.catalog.clearCache()
   }
 
-  test("readWithRelease: consuming then releasing leaves no cached blocks") {
-    val dir = Files.createTempDirectory("ncrel").toString
-    Files.write(Paths.get(dir, "era.nc"), fixture)
-    spark.catalog.clearCache() // start from a clean slate
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val (vars, data, release) = graft.sources.NetCdfAutoSource.readWithRelease(
-      spark, dir, globFilter = "*.nc")
-    assert(vars.count() == 2 && data.count() > 0) // consume both frames
-    assert(spark.sparkContext.getPersistentRDDs.size > before) // cache live
-    release()
-    assert(spark.sparkContext.getPersistentRDDs.size == before) // all released
+  /** A directory with the classic fixture, a netCDF-4 file (u10 on the
+    * scales yy, xx) and a one-message GRIB2 file (4 x 3, two bitmap holes).
+    */
+  private def mixedDir(prefix: String): String = {
+    import graft.sinks.Hdf5Store
+    val dir = Files.createTempDirectory(prefix).toString
+    Files.write(Paths.get(dir, "classic.nc"), fixture)
+    Files.write(Paths.get(dir, "modern.nc4"), Hdf5Store.renderDatasets(Seq(
+      Hdf5Store.H5Dataset("u10", Seq(2L, 3L), Array(1.0, 2.0, 3.0, 4.0, 5.0, 6.0),
+        dimNames = Seq("yy", "xx")),
+      Hdf5Store.H5Dataset("yy", Seq(2L), Array(0.0, 1.0), scaleName = Some("yy"), dimId = 0),
+      Hdf5Store.H5Dataset("xx", Seq(3L), Array(0.0, 0.5, 1.0), scaleName = Some("xx"),
+        dimId = 1))))
+    val stored: Array[Option[Long]] = Array.tabulate(12)(i =>
+      if (i % 5 == 4) None else Some((i * 3L) % 255))
+    Files.write(Paths.get(dir, "field.grib2"), graft.sources.GribSource.render(Seq(
+      graft.sources.GribSource.Spec(0, 0, 0, 2026, 1, 1, 0, 6L, 4L, 3L,
+        90000000L, 0L, 250000L, 250000L, 250.5f, 0, 0, 8, stored))))
+    dir
+  }
+
+  test("read: consuming both frames of every grid reader persists nothing") {
+    val dir = mixedDir("ncnocache")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val frames = Seq(graft.sources.Hdf5Source.read(spark, dir),
+      graft.sources.NetCdfAutoSource.read(spark, dir, globFilter = "*"),
+      NetCdfSource.read(spark, dir))
+    frames.foreach { case (vars, data) =>
+      assert(vars.count() > 0 && data.count() > 0) // consume both frames
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("vars table: each format fills its own columns, the others are null") {
+    val dir = mixedDir("ncvars")
+    val vars = spark.read.format("graft.sources.NetCdfDataSource")
+      .option("path", dir).option("globFilter", "*").option("table", "vars").load()
+    val byVar = vars.collect().map(r => r.getAs[String]("variable") -> r).toMap
+    assert(byVar.keySet == Set("lat", "t2m", "u10", "yy", "xx", "grib_d0_c0_n0_f6"))
+    def cells(v: String, c: String*) = c.map(byVar(v).getAs[Any](_))
+    val nulls = Seq("scale_name", "dim_id", "dtype")
+    // classic: no HDF5 scale metadata
+    assert(cells("t2m", "format", "is_record", "is_coord") == Seq("classic", true, false))
+    assert(cells("lat", "is_record", "is_coord") == Seq(false, true))
+    assert(cells("t2m", nulls: _*).forall(_ == null))
+    // hdf5: no record flag; a data variable's scale fields are "" and -1
+    assert(cells("u10", "format", "is_record", "is_coord", "scale_name", "dim_id", "dtype") ==
+      Seq("hdf5", null, false, "", -1, "f64"))
+    assert(cells("yy", "is_coord", "scale_name", "dim_id") == Seq(true, "yy", 0))
+    // grib2: dims (lat, lon), shape (nj, ni), nothing else
+    val g = byVar("grib_d0_c0_n0_f6")
+    assert(g.getAs[scala.collection.Seq[String]]("dims") == Seq("lat", "lon"))
+    assert(g.getAs[scala.collection.Seq[Long]]("shape") == Seq(3L, 4L))
+    assert(cells("grib_d0_c0_n0_f6", "format", "is_record", "is_coord") ==
+      Seq("grib2", null, false))
+    assert(cells("grib_d0_c0_n0_f6", nulls: _*).forall(_ == null))
+    // bitmap holes decode to NaN in the value run
+    val grib = spark.read.format("graft.sources.NetCdfDataSource")
+      .option("path", dir).option("globFilter", "*.grib2").load()
+    assert(grib.count() == 12 && grib.filter(isnan(col("value"))).count() == 2)
+  }
+
+  test("variable filters: HDF5 and GRIB2 apply them, and a negation pushes too") {
+    val dir = mixedDir("ncfilter")
+    val (v1, d1) = graft.sources.NetCdfAutoSource.read(spark, dir, globFilter = "*",
+      include = Set("u10", "grib_d0_c0_n0_f6"))
+    assert(v1.collect().map(_.getString(1)).toSet == Set("u10", "grib_d0_c0_n0_f6"))
+    assert(d1.select("variable").distinct().collect().map(_.getString(0)).toSet ==
+      Set("u10", "grib_d0_c0_n0_f6"))
+    val (v2, d2) = graft.sources.NetCdfAutoSource.read(spark, dir, globFilter = "*",
+      exclude = Set("t2m", "yy", "grib_d0_c0_n0_f6"))
+    val plan = d2.queryExecution.executedPlan.toString
+    assert(plan.contains("not=[grib_d0_c0_n0_f6,t2m,yy]"), s"exclude not pushed:\n$plan")
+    assert(v2.collect().map(_.getString(1)).toSet == Set("lat", "u10", "xx"))
+    assert(d2.select("variable").distinct().collect().map(_.getString(0)).toSet ==
+      Set("lat", "u10", "xx"))
+    // one excluded name: Spark writes it as Not(EqualTo)
+    val (_, d3) = graft.sources.NetCdfAutoSource.read(spark, dir, globFilter = "*",
+      exclude = Set("xx"))
+    assert(d3.queryExecution.executedPlan.toString.contains("vars=* not=[xx]"))
+    assert(d3.filter(col("variable") === "xx").count() == 0 && d3.count() == 14 + 8 + 12)
+  }
+
+  test("grid readers: missing root, unmatched glob, absent variable, file URI") {
+    val dir = mixedDir("ncedge")
+    val readers: Seq[(String, String => (org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame))] = Seq(
+      "NetCdfSource" -> (p => NetCdfSource.read(spark, p, globFilter = "*")),
+      "Hdf5Source" -> (p => graft.sources.Hdf5Source.read(spark, p, globFilter = "*")),
+      "NetCdfAutoSource" -> (p => graft.sources.NetCdfAutoSource.read(spark, p,
+        globFilter = "*")))
+    readers.foreach { case (name, read) =>
+      // a missing root fails before planning, the same way for all three
+      val e = intercept[IllegalArgumentException](read(s"$dir/nope"))
+      assert(e.getMessage.contains("no such dataset root"), s"$name: ${e.getMessage}")
+      // a glob that matches nothing is two empty tables
+      val (v0, d0) = read(s"$dir/*.none")
+      assert(v0.count() == 0 && d0.count() == 0, name)
+      // `file` is the qualified URI of the listed file
+      val (_, data) = read(dir)
+      assert(data.select("file").distinct().collect().map(_.getString(0)).toSet ==
+        Set("classic.nc", "modern.nc4", "field.grib2").map(f => s"file:$dir/$f"), name)
+    }
+    // a wanted variable absent from a file: that file has no rows for it
+    val (vars, data) = graft.sources.NetCdfAutoSource.read(spark, dir, globFilter = "*",
+      include = Set("t2m", "u10"))
+    val perFile = data.groupBy("file", "variable").count().collect()
+      .map(r => (r.getString(0).split("/").last, r.getString(1)) -> r.getLong(2)).toMap
+    assert(perFile == Map(("classic.nc", "t2m") -> 12L, ("modern.nc4", "u10") -> 6L))
+    assert(vars.count() == 2)
   }
 
   test("read: long tables compose with grid stats") {

@@ -380,6 +380,23 @@ class VtkXmlSourceSpec extends SparkSpec {
     assert(byFile.toSet == Set(("volume_a.vtu", "u")))
   }
 
+  test("readAll plans its points and cells tables from one read of each header") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cntfs.impl", classOf[graft.tools.CountingFileSystem].getName)
+    val dir = Files.createTempDirectory("vtu-headers").toString
+    Files.writeString(Paths.get(dir, "a.vtu"), vtu)
+    Files.writeString(Paths.get(dir, "b.vtu"), vtu)
+    // one plain load infers one schema: one header read per file
+    graft.tools.CountingFileSystem.reset()
+    spark.read.format("graft.sources.VtuDataSource").option("path", s"cntfs:$dir").load()
+    val once = graft.tools.CountingFileSystem.bytesRead.get()
+    graft.tools.CountingFileSystem.reset()
+    val (points, cells, pointData, _) = VtkXmlSource.readAll(spark, s"cntfs:$dir")
+    val planned = graft.tools.CountingFileSystem.bytesRead.get()
+    assert(once > 0 && planned == once, s"readAll read $planned header bytes, one pass is $once")
+    assert(points.count() == 8 && cells.count() == 4 && pointData.count() == 16)
+  }
+
   test(".vts StructuredGrid: implicit hex cells from the piece extent") {
     val vts =
       """<?xml version="1.0"?>
