@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** DrivAerML multi-part volume assembly (reference
   * `domains/mesh/sources/drivaerml.py:275-301,624-733` — run discovery by
@@ -9,18 +8,16 @@ import org.apache.spark.sql.functions._
   * `volume_<i>.vtu.NN.part` byte shards that are concatenated before
   * parsing, with a direct `volume_<i>.vtu` taking precedence when present).
   *
-  * Spark-first: the listing scan reads PATHS only (binaryFile with the
-  * content column pruned away — file bytes never shuffle); paths group by
-  * run id, and each run's task streams its parts from storage in order
-  * into an executor-local temp file (chunked copy, no whole-file buffer —
-  * unlike the reference's in-memory concat, which is exactly what makes
-  * its ~50 GB VTUs painful), then parses via the file-backed
-  * `VtkXmlSource.parseVtuFile`. One run = one task — the same parallel
-  * grain as the reference's per-index worker, but scheduled by Spark
-  * across executors.
+  * Spark-first: [[readVolume]] projects [[DrivAerMlDataSource]], whose unit
+  * per run reads the run's shards back to back through ranged preads —
+  * nothing is copied or held whole (unlike the reference's in-memory
+  * concat, which is exactly what makes its ~50 GB VTUs painful), and only
+  * each DataArray must fit in memory. One run = one task — the same
+  * parallel grain as the reference's per-index worker, but scheduled by
+  * Spark across executors.
   *
   * Completeness check: part indices must be contiguous from 00; a gap
-  * (lost shard) fails the run's task loudly instead of assembling a
+  * (lost shard) fails at load, on the driver, instead of assembling a
   * corrupt mesh.
   */
 object DrivAerMlSource {
@@ -50,103 +47,37 @@ object DrivAerMlSource {
 
   /** Assembled volume meshes for every run under `root`:
     * `(points, cells, pointData)` in the standard long mesh model with
-    * `mesh_id = "run_<i>"`.
+    * `mesh_id = "run_<i>"` — the [[VtkXmlSource.readAll]] projection of
+    * [[DrivAerMlDataSource]].
     */
   def readVolume(spark: SparkSession, rootUri: String,
                  include: Set[String] = Set.empty,
                  exclude: Set[String] = Set.empty): (DataFrame, DataFrame, DataFrame) = {
-    val root = Fetchers.resolve(spark, rootUri)
-    import spark.implicits._
-    // paths only: content is pruned from the scan, so nothing heavier than
-    // strings reaches the run-grouping shuffle
-    val paths = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "volume_*.vtu*")
-      .load(s"$root/run_*")
-      .select(col("path")).as[String]
-
-    val classified = paths.flatMap {
-      case p @ PartRe(run, part) => Some((run.toInt, part.toInt, p))
-      case p @ DirectRe(run) => Some((run.toInt, -1, p))
-      case _ => None
-    }
-
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val (inc, exc) = (include, exclude)
-
-    // Streamed assembly: parts are CONCATENATED to an executor-local temp
-    // file in 8 MiB chunks — nothing whole-file ever sits in memory, so the
-    // assembled size is unbounded (the reference's ~50 GB VTU pain point,
-    // `drivaerml.py:17-30`). The file-backed parser then reads each
-    // DataArray payload at its Long offset; only a single array must fit
-    // in memory.
-    // Assemble to an executor-local temp file and parse; the temp is
-    // deleted on ANY failure — copy or parse — not just after the parse.
-    def parseAssembled(paths: Seq[String]) = {
-      val tmp = java.io.File.createTempFile("graft_vtu_asm", ".vtu")
-      try {
-        val out = new java.io.FileOutputStream(tmp)
-        try paths.foreach { p =>
-          val hp = new org.apache.hadoop.fs.Path(p)
-          val fs = hp.getFileSystem(hadoopConf.value)
-          val in = fs.open(hp)
-          try {
-            val buf = new Array[Byte](8 << 20)
-            var n = in.read(buf)
-            while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-          } finally in.close()
-        } finally out.close()
-        VtkXmlSource.parseVtuFile(tmp, inc, exc)
-      } finally { tmp.delete(); () }
-    }
-
-    // A direct VTU already on a local filesystem needs no copy at all —
-    // the file-backed parser reads the original in place (a ~50 GB copy
-    // would double both I/O and local-disk footprint).
-    def localFileOf(p: String): Option[java.io.File] = {
-      val uri = new java.net.URI(p)
-      val f = Option(uri.getScheme) match {
-        case None => Some(new java.io.File(p))
-        case Some("file") => Some(new java.io.File(uri.getPath))
-        case Some(_) => None
-      }
-      f.filter(_.isFile)
-    }
-
-    val pieces = classified.groupByKey(_._1).mapGroups { (runId, it) =>
-      val items = it.toSeq
-      val direct = items.find(_._2 == -1)
-      val piece = direct match {
-        case Some((_, _, p)) => // direct VTU wins (drivaerml.py:649)
-          localFileOf(p) match {
-            case Some(f) => VtkXmlSource.parseVtuFile(f, inc, exc)
-            case None => parseAssembled(Seq(p))
-          }
-        case None =>
-          val parts = items.sortBy(_._2)
-          val idxs = parts.map(_._2)
-          require(idxs == (0 until parts.length),
-            s"run_$runId volume parts not contiguous from 00: found ${idxs.mkString(",")}")
-          parseAssembled(parts.map(_._3))
-      }
-      (s"run_$runId", piece.points.map(a => (a(0), a(1), a(2))), piece.cells,
-        piece.pointData.toSeq.map { case (k, v) => (k, v) })
-    }.persist() // three tables project from one parse; the caller releases
-                // via unpersist/clearCache once the frames are consumed
-
-    val points = pieces.flatMap { case (mesh, pts, _, _) =>
-      pts.zipWithIndex.map { case ((x, y, z), i) => (mesh, i.toLong, x, y, z) }
-    }.toDF("mesh_id", "point_id", "x", "y", "z")
-    val cells = pieces.flatMap { case (mesh, _, cs, _) =>
-      cs.zipWithIndex.map { case (vs, i) => (mesh, i.toLong, vs.toSeq) }
-    }.toDF("mesh_id", "cell_id", "vertices")
-    val pointData = pieces.flatMap { case (mesh, _, _, pd) =>
-      pd.flatMap { case (field, vals) =>
-        vals.zipWithIndex.map { case (v, i) => (mesh, i.toLong, field, v) }
-      }
-    }.toDF("mesh_id", "point_id", "field", "value")
+    val (points, cells, pointData, _) = VtkXmlSource.tables(spark, new DrivAerMlDataSource,
+      Fetchers.resolve(spark, rootUri), "*", include, exclude)
     (points, cells, pointData)
   }
+
+  /** One unit per run from a listing of the `volume_*.vtu*` files of the
+    * `run_<i>` directories: the run's direct VTU (it wins,
+    * `drivaerml.py:649`), else its part shards in part order, which must be
+    * contiguous from 00.
+    */
+  private[sources] def runUnits(files: Seq[(String, Long)]): Seq[ScanUnit] =
+    files.flatMap {
+      case (p @ PartRe(run, part), n) => Some((run.toInt, part.toInt, p, n))
+      case (p @ DirectRe(run), n) => Some((run.toInt, -1, p, n))
+      case _ => None
+    }.groupBy(_._1).toSeq.sortBy(_._1).map { case (runId, items) =>
+      val files = items.find(_._2 == -1).map(Seq(_)).getOrElse {
+        val parts = items.sortBy(_._2)
+        val idxs = parts.map(_._2)
+        require(idxs == parts.indices,
+          s"run_$runId volume parts not contiguous from 00: found ${idxs.mkString(",")}")
+        parts
+      }
+      ScanUnit(s"run_$runId", files.map(_._3), files.map(_._4).sum)
+    }
 
   /** Split the files of a flat VTU directory into the DrivAerML on-disk
     * layout (`run_<i>/volume_<i>.vtu.NN.part` byte shards) — the fixture

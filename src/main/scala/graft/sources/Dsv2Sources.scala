@@ -153,7 +153,7 @@ object Dsv2 {
     * unbounded (only each individual slice must fit in one array). One
     * open stream per handle; callers close after parsing.
     */
-  private[sources] final class HadoopRawData(path: String, conf: Map[String, String])
+  private[graft] final class HadoopRawData(path: String, conf: Map[String, String])
       extends VtkXmlSource.RawData with AutoCloseable {
     private val c = new Configuration(false)
     conf.foreach { case (k, v) => c.set(k, v) }
@@ -167,10 +167,43 @@ object Dsv2 {
       require(len <= Int.MaxValue - 8,
         s"$path: payload of $len bytes exceeds the 2 GiB per-array limit")
       val out = new Array[Byte](len.toInt)
-      in.readFully(off, out)
+      readInto(off, out, 0, len.toInt)
       out
     }
+    /** `len` bytes at `off` into `buf` from `at`. */
+    def readInto(off: Long, buf: Array[Byte], at: Int, len: Int): Unit =
+      in.readFully(off, buf, at, len)
     def close(): Unit = in.close()
+  }
+
+  /** Ranged random-access over Hadoop paths read back to back as one file
+    * (a file's byte shards): a slice is the preads of the shards it spans,
+    * so the whole is never copied or held, and only each slice must fit in
+    * one array.
+    */
+  private[graft] final class ConcatRawData(paths: Seq[String], conf: Map[String, String])
+      extends VtkXmlSource.RawData with AutoCloseable {
+    private val parts = paths.map(new HadoopRawData(_, conf)).toArray
+    // starts(i) is the offset of shard i; starts.last the total size
+    private val starts = parts.scanLeft(0L)(_ + _.size)
+    val size: Long = starts.last
+    def slice(off: Long, len: Long): Array[Byte] = {
+      require(off >= 0 && len >= 0 && off + len <= size,
+        s"${paths.head}…: slice [$off,+$len) outside $size bytes")
+      require(len <= Int.MaxValue - 8,
+        s"${paths.head}…: payload of $len bytes exceeds the 2 GiB per-array limit")
+      val out = new Array[Byte](len.toInt)
+      var done = 0
+      while (done < len) {
+        val at = off + done
+        val i = starts.lastIndexWhere(_ <= at, parts.length - 1)
+        val n = math.min(len - done, starts(i + 1) - at).toInt
+        parts(i).readInto(at - starts(i), out, done, n)
+        done += n
+      }
+      out
+    }
+    def close(): Unit = parts.foreach(_.close())
   }
 }
 
@@ -340,23 +373,31 @@ abstract class FileUnitSource(glob: String) extends UnitSource {
 
   protected final def conf: Map[String, String] = Dsv2.confMap(SparkSession.active)
 
-  /** `parse` of each file's header, in file order — for schema inference
+  /** The unit hook: one ranged handle over a unit's bytes — its file, or
+    * its files back to back when it has several (a file's byte shards).
+    * Runs on the executor; callers close it after parsing.
+    */
+  protected final def open(u: ScanUnit, c: Map[String, String]): VtkXmlSource.RawData with AutoCloseable =
+    if (u.files.length == 1) new Dsv2.HadoopRawData(u.files.head, c)
+    else new Dsv2.ConcatRawData(u.files, c)
+
+  /** `parse` of each unit's header, in unit order — for schema inference
     * over the union of the arrays the headers list (heterogeneous runs
     * still get one schema; files lacking an array emit null for it). Each
-    * file costs only its XML HEADER bytes, so planning stays O(header) per
+    * unit costs only its XML HEADER bytes, so planning stays O(header) per
     * file even against multi-GB meshes. `inferLimit` (default 0 = all)
-    * samples the first N files when the corpus is homogeneous;
+    * samples the first N units when the corpus is homogeneous;
     * `.schema(...)` skips inference entirely.
     */
   protected final def headers[A](o: CaseInsensitiveStringMap)(
-      parse: Dsv2.HadoopRawData => A): Seq[A] = {
-    val files = listed(o).map(_._1)
-    require(files.nonEmpty, s"$sourceName: no files under ${o.get("path")}")
+      parse: VtkXmlSource.RawData => A): Seq[(ScanUnit, A)] = {
+    val us = units(o)
+    require(us.nonEmpty, s"$sourceName: no files under ${o.get("path")}")
     val limit = Dsv2.opt(o, "inferLimit", "0").toInt
     val c = conf
-    Dsv2.parMap(if (limit > 0) files.take(limit) else files) { f =>
-      val raw = new Dsv2.HadoopRawData(f, c)
-      try parse(raw) finally raw.close()
+    Dsv2.parMap(if (limit > 0) us.take(limit) else us) { u =>
+      val raw = open(u, c)
+      try u -> parse(raw) finally raw.close()
     }
   }
 }
@@ -366,30 +407,83 @@ private object UnitSource {
   def lng(n: String) = StructField(n, LongType, nullable = false)
   def int(n: String) = StructField(n, IntegerType, nullable = false)
   def dbl(n: String) = StructField(n, DoubleType, nullable = false)
-  /** One nullable DOUBLE column per distinct array name, sorted. */
-  def arrays(names: Seq[String]): Seq[StructField] =
-    names.distinct.sorted.map(a => StructField(a, DoubleType, nullable = true))
   def vertices: StructField = StructField("vertices", ArrayType(LongType), nullable = false)
+
+  /** The columns of a k-component array: its name when k is 1, else
+    * `<name>_0 … <name>_{k-1}`.
+    */
+  def components(name: String, k: Int): Seq[String] =
+    if (k <= 1) Seq(name) else Seq.tabulate(k)(c => s"${name}_$c")
+
+  /** One nullable DOUBLE column per component of each distinct array
+    * (`(name, NumberOfComponents)`), by array name; a component column
+    * names its array in its metadata.
+    */
+  def arrays(lists: Seq[(String, Int)]): Seq[StructField] =
+    lists.distinct.sorted.flatMap { case (a, k) =>
+      val meta = if (k <= 1) Metadata.empty else new MetadataBuilder().putString("array", a).build()
+      components(a, k).map(StructField(_, DoubleType, nullable = true, meta))
+    }.distinctBy(_.name)
+
+  /** The array a column of [[arrays]] belongs to. */
+  def arrayOf(f: StructField): String =
+    if (f.metadata.contains("array")) f.metadata.getString("array") else f.name
+
+  /** Row `i` of every column of the `decoded` arrays, given every array's
+    * component count k (`lists`): component c of row i is value `i·k + c`,
+    * null past the array's end.
+    */
+  def columnValues(decoded: Map[String, Array[Double]],
+                   lists: Seq[(String, Int)]): Map[String, Long => Any] =
+    lists.flatMap { case (a, k) =>
+      decoded.get(a).toSeq.flatMap { vs =>
+        components(a, k).zipWithIndex.map { case (column, c) =>
+          column -> { (i: Long) =>
+            val at = i * k + c
+            if (at < vs.length) vs(at.toInt) else null
+          }
+        }
+      }
+    }.toMap
+
+  /** Whether the `required` columns need array `(name, k)` decoded. */
+  def wanted(required: Set[String])(name: String, k: Int): Boolean =
+    components(name, k).exists(required)
 }
 
-import UnitSource.{arrays, dbl, int, lng, str, vertices}
+import UnitSource.{arrays, columnValues, dbl, int, lng, str, vertices, wanted}
 
 // ------------------------------------------------------------------ VTU
 
-/** `spark.read.format("graft.sources.VtuDataSource").option("path", dir)`.
+/** `spark.read.format("graft.sources.VtuDataSource").option("path", dir)`
+  * over VTK XML meshes: `.vtu`, `.vtp` and, with a `globFilter` that
+  * matches them, `.vts`.
   *
   * Default table (`table=points`): `mesh_id STRING, point_id LONG,
-  * x/y/z DOUBLE` + one nullable DOUBLE column per PointData array found
-  * across the globbed files (union, sorted). `.select` prunes straight to
-  * the parser: unselected arrays are never decoded, Points decodes only
-  * when x/y/z are referenced, and a count over `mesh_id` alone touches no
-  * payload at all (row count from the Piece's NumberOfPoints attribute).
+  * x/y/z DOUBLE` + the nullable DOUBLE columns of every PointData array
+  * found across the globbed files (union, sorted): one column named as the
+  * array, or for an array of NumberOfComponents k > 1 the k columns
+  * `<name>_0 … <name>_{k-1}` (point i's component c is the array's value
+  * i·k + c). The component count comes from the header, so schema
+  * inference reads headers only. `.select` prunes straight to the parser:
+  * unselected arrays are never decoded, Points decodes only when x/y/z are
+  * referenced, and a count over `mesh_id` alone touches no payload at all
+  * (row count from the Piece's NumberOfPoints attribute).
   *
   * `option("table", "cells")`: `mesh_id STRING, cell_id LONG,
-  * vertices ARRAY<LONG>` + one nullable DOUBLE column per CellData array
-  * (the AhmedML/DrivAerML volume flow fields, `ahmedml.py:774-883`) —
-  * connectivity decodes only when `vertices` is selected, cell arrays
-  * only when their columns are.
+  * vertices ARRAY<LONG>` + the CellData array columns (the
+  * AhmedML/DrivAerML volume flow fields, `ahmedml.py:774-883`) —
+  * connectivity decodes only when `vertices` is selected, cell arrays only
+  * when their columns are. A StructuredGrid (`.vts`) piece's cells are the
+  * implicit hexahedra of its Extent ([[VtkXmlSource.structuredCells]]),
+  * and its row counts come from the Extent; every scan of such a piece
+  * checks the Extent's point count against its Points array (decoded, or
+  * sized from its size words) and fails naming the file on a mismatch.
+  *
+  * Each unit is read through the unit hook ([[FileUnitSource.open]]): one
+  * ranged handle over the unit's file, or over its files back to back —
+  * [[DrivAerMlDataSource]] binds a run's byte shards that way. Schema
+  * inference reads the headers through the same hook.
   */
 class VtuDataSource extends FileUnitSource("*.vt[up]") {
   override protected def label = "vtu"
@@ -402,23 +496,23 @@ class VtuDataSource extends FileUnitSource("*.vt[up]") {
     if (cells) ("cell_id", Seq(vertices)) else ("point_id", Seq(dbl("x"), dbl("y"), dbl("z")))
 
   override protected def schemaOf(o: CaseInsensitiveStringMap): StructType = {
-    val (points, cells) = schemas(o)
+    val (points, cells) = schemas(headerPass(o).map(_._2))
     if (table(o) == "cells") cells else points
   }
 
-  /** The `points` and `cells` schemas from ONE pass over the file headers;
-    * a caller loading both tables hands them over with `.schema(...)`.
+  /** Each unit with its header, from one pass over the unit heads. */
+  private[sources] def headerPass(o: CaseInsensitiveStringMap): Seq[(ScanUnit, VtkXmlSource.VtuHeader)] =
+    headers(o)(new VtkXmlSource.VtuFile(_).header)
+
+  /** The `points` and `cells` schemas of the units' headers; a caller
+    * loading both tables hands them over with `.schema(...)`.
     */
-  private[sources] def schemas(o: CaseInsensitiveStringMap): (StructType, StructType) = {
-    val lists = headers(o) { raw =>
-      val (_, _, pointArrays, cellArrays) = VtkXmlSource.listVtuArraysRaw(raw)
-      (pointArrays, cellArrays)
-    }
-    def schema(cells: Boolean, names: Seq[String]) = {
+  private[sources] def schemas(hs: Seq[VtkXmlSource.VtuHeader]): (StructType, StructType) = {
+    def schema(cells: Boolean, lists: Seq[(String, Int)]) = {
       val (id, geom) = layout(cells)
-      StructType(Seq(str("mesh_id"), lng(id)) ++ geom ++ arrays(names))
+      StructType(Seq(str("mesh_id"), lng(id)) ++ geom ++ arrays(lists))
     }
-    (schema(cells = false, lists.flatMap(_._1)), schema(cells = true, lists.flatMap(_._2)))
+    (schema(cells = false, hs.flatMap(_.pointArrays)), schema(cells = true, hs.flatMap(_.cellArrays)))
   }
 
   override protected def payloadFraction(o: CaseInsensitiveStringMap, full: StructType,
@@ -433,47 +527,56 @@ class VtuDataSource extends FileUnitSource("*.vt[up]") {
     val (id, geomFields) = layout(cells)
     val geom = geomFields.map(_.name).toSet
     val cols = required.fieldNames
-    val arrayCols = cols.filterNot(n => n == keyColumn || n == id || geom(n))
     val needGeom = cols.exists(geom)
+    val keep = wanted(cols.toSet) _
     u => {
-      val path = u.files.head
       // ranged handle: the XML header reads in a bounded window and each
       // kept DataArray's appended payload is one pread at its offset --
       // pruning saves I/O BYTES, not just decode CPU, and files past 2 GiB
       // scan fine
-      val raw = new Dsv2.HadoopRawData(path, c)
-      val (piece, data, n) =
+      val raw = open(u, c)
+      val (header, piece) =
         try {
-          // one row per point (cell): the Piece's NumberOf* count, or the
-          // decoded geometry's when that is selected or the header has none
-          // (a .vts piece); an array shorter than the count is null past
-          // its end, a longer one keeps its first `n` values
-          val listed =
-            if (needGeom) -1L
-            else {
-              val (nPoints, nCells, _, _) = VtkXmlSource.listVtuArraysRaw(raw)
-              if (cells) nCells else nPoints
-            }
-          val decodeGeom = listed < 0
-          val p = VtkXmlSource.parseVtuRaw(raw, include = arrayCols.toSet,
-            decodePoints = decodeGeom && !cells, decodeCells = decodeGeom && cells,
-            decodePointData = arrayCols.nonEmpty)
-          val rows =
-            if (decodeGeom) (if (cells) p.cells.length else p.points.length).toLong
-            else listed
-          (p, if (cells) p.cellData else p.pointData, rows)
+          val f = new VtkXmlSource.VtuFile(raw)
+          // one row per point (cell): the header's count, or the decoded
+          // geometry's when that is selected or the header has none; an
+          // array shorter than the count is null past its end
+          val decodeGeom = needGeom || (if (cells) f.header.cells else f.header.points) < 0
+          (f.header, f.parse(keep, decodePoints = decodeGeom && !cells,
+            decodeCells = decodeGeom && cells))
+        } catch {
+          case e: Exception if !String.valueOf(e.getMessage).contains(u.key.toString) =>
+            throw new IllegalArgumentException(s"${u.key}: ${e.getMessage}", e)
         } finally raw.close()
+      val n =
+        if (cells) (if (needGeom || header.cells < 0) piece.cells.length.toLong else header.cells)
+        else if (needGeom || header.points < 0) piece.points.length.toLong else header.points
+      val values =
+        if (cells) columnValues(piece.cellData, header.cellArrays)
+        else columnValues(piece.pointData, header.pointArrays)
       indexedRows(u, cols, n) {
         case `id` => i => i
         case "vertices" if cells => i => new GenericArrayData(piece.cells(i.toInt))
         case a if geom(a) => val k = a(0) - 'x'; i => piece.points(i.toInt)(k)
-        case a => data.get(a) match {
-          case Some(vs) => i => if (i < vs.length) vs(i.toInt) else null
-          case None => _ => null
-        }
+        case a => values.getOrElse(a, _ => null)
       }
     }
   }
+}
+
+/** `spark.read.format("graft.sources.DrivAerMlDataSource").option("path",
+  * root)`: [[VtuDataSource]]'s tables over the DrivAerML run layout
+  * (`drivaerml.py:275-301,624-733`), one unit per run keyed `run_<i>`. A
+  * run's unit is its direct `volume_<i>.vtu` when present, else its
+  * `volume_<i>.vtu.NN.part` byte shards in part order, which the unit hook
+  * reads back to back as one file; shards not contiguous from 00 fail at
+  * `load()`. Only each DataArray must fit in memory, so assemblies past
+  * 2 GiB read.
+  */
+class DrivAerMlDataSource extends VtuDataSource {
+  override protected def units(o: CaseInsensitiveStringMap): Seq[ScanUnit] =
+    DrivAerMlSource.runUnits(Dsv2.listFilesWithSize(SparkSession.active,
+      s"${o.get("path")}/run_*", "volume_*.vtu*"))
 }
 
 // --------------------------------------------------------------- NetCDF
@@ -745,13 +848,14 @@ object AseLmdbDataSource {
 /** `spark.read.format("graft.sources.VtiDataSource").option("path", dir)`.
   *
   * Default table (`table=points`): `grid_id STRING, i/j/k INT,
-  * x/y/z DOUBLE` + one nullable DOUBLE column per PointData array found
-  * across the globbed `.vti` files — the dense x-fastest point lattice
-  * (reference `sources/vti.py:100-143`). `option("table", "cells")` is the
-  * cell lattice (`(nx-1)(ny-1)(nz-1)` cells, coordinates at cell centers)
-  * carrying the CellData arrays.
+  * x/y/z DOUBLE` + the nullable DOUBLE columns of every PointData array
+  * found across the globbed `.vti` files — the dense x-fastest point
+  * lattice (reference `sources/vti.py:100-143`). `option("table", "cells")`
+  * is the cell lattice (`(nx-1)(ny-1)(nz-1)` cells, coordinates at cell
+  * centers) carrying the CellData arrays.
   *
-  * Pruning semantics mirror [[VtuDataSource]]: unselected arrays are never
+  * Array columns and pruning mirror [[VtuDataSource]]: a k-component array
+  * is the k columns `<name>_0 … <name>_{k-1}`, unselected arrays are never
   * payload-read (ranged reads into the appended block), lattice indices and
   * coordinates are COMPUTED from the header's extent/origin/spacing (zero
   * payload), and schema inference reads only XML headers.
@@ -770,7 +874,7 @@ class VtiDataSource extends FileUnitSource("*.vti") {
       arrays(headers(o) { raw =>
         val (_, _, _, pd, cd) = VtkXmlSource.listVtiMeta(raw)
         if (cells) cd else pd
-      }.flatten))
+      }.flatMap(_._2)))
   }
 
   // i/j/k/x/y/z are COMPUTED from the header (zero payload)
@@ -783,19 +887,21 @@ class VtiDataSource extends FileUnitSource("*.vti") {
     val c = conf
     val cells = table(o) == "cells"
     val cols = required.fieldNames
-    val arrayCols = cols.filterNot(lattice.contains)
+    val keep = wanted(cols.toSet) _
     u => {
-      val raw = new Dsv2.HadoopRawData(u.files.head, c)
-      val (extent, origin, spacing, decoded) =
+      val raw = open(u, c)
+      val (extent, origin, spacing, values) =
         try {
-          val (ext, org0, spc, _, _) = VtkXmlSource.listVtiMeta(raw)
+          val (ext, org0, spc, pd, cd) = VtkXmlSource.listVtiMeta(raw)
+          val lists = if (cells) cd else pd
+          val kept = lists.collect { case (a, k) if keep(a, k) => a }
           val data: Map[String, Array[Double]] =
-            if (arrayCols.isEmpty) Map.empty
+            if (kept.isEmpty) Map.empty
             else {
-              val g = VtkXmlSource.parseVtiRaw(raw, include = arrayCols.toSet)
+              val g = VtkXmlSource.parseVtiRaw(raw, include = kept.toSet)
               if (cells) g.cellData else g.pointData
             }
-          (ext, org0, spc, data)
+          (ext, org0, spc, columnValues(data, lists))
         } finally raw.close()
       // cell lattice dims (a flat axis keeps one layer, as in readVti)
       val off = if (cells) 1 else 0
@@ -811,10 +917,7 @@ class VtiDataSource extends FileUnitSource("*.vti") {
         case a @ ("i" | "j" | "k") => val ax = a(0) - 'i'; idx => extent(2 * ax) + at(idx, ax)
         case a @ ("x" | "y" | "z") => val ax = a(0) - 'x'
           idx => origin(ax) + (extent(2 * ax) + at(idx, ax) + shift) * spacing(ax)
-        case a => decoded.get(a) match {
-          case Some(vs) => idx => if (idx < vs.length) vs(idx.toInt) else null
-          case None => _ => null
-        }
+        case a => values.getOrElse(a, _ => null)
       }
     }
   }

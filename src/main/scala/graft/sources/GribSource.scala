@@ -167,14 +167,16 @@ object GribSource {
     val r = new Reader(bytes)
     val msgs = Seq.newBuilder[Message]
     var off = 0
-    while (off + 16 <= r.len) {
+    while (off < r.len) {
+      require(off + 16 <= r.len, s"truncated GRIB message at offset $off")
       require(r.ascii(off, 4) == "GRIB", s"no GRIB magic at offset $off")
       require(r.u8(off + 7) == 2, s"GRIB edition ${r.u8(off + 7)} unsupported (2 only)")
       val discipline = r.u8(off + 6)
       val total = r.u64At(off + 8)
+      require(total >= 20 && total <= r.len - off,
+        s"GRIB message at offset $off claims $total bytes, ${r.len - off} remain")
       val end = off + total.toInt
-      require(end <= r.len && r.ascii(end - 4, 4) == "7777",
-        "message does not end in 7777")
+      require(r.ascii(end - 4, 4) == "7777", "message does not end in 7777")
       var p = off + 16
       var cat = -1; var num = -1
       var refYear = 0; var refMonth = 0; var refDay = 0; var refHour = 0
@@ -187,6 +189,10 @@ object GribSource {
       var values: Array[Double] = null
       while (p < end - 4) {
         val slen = r.u32At(p)
+        // every section holds its 5-byte length and number, and ends
+        // before the message's 7777 end section
+        require(slen >= 5 && slen <= end - 4 - p,
+          s"GRIB2 section at offset $p claims $slen bytes, ${end - 4 - p} remain in its message")
         val snum = r.u8(p + 4)
         snum match {
           case 1 =>

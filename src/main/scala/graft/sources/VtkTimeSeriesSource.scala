@@ -5,10 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** VTK timestep-series reader — the OpenRadioss ingestion shape (reference
   * `domains/mesh/sources/openradioss.py:295-360`: a run directory holds one
-  * converted VTK file per animation state, read in name-sorted order). One
-  * run = one task (the reference's own unit of work); each task parses its
-  * run's files in sequence through `VtkXmlSource.parseVtu`, so every
-  * DataArray layout and grid type the VTK layer supports works here too.
+  * converted VTK file per animation state, read in name-sorted order).
+  * Every table is a projection of [[VtuDataSource]] over `rootGlob` with
+  * `globFilter = vtkGlob`, so every DataArray layout and grid type the VTK
+  * layer supports works here too. From the driver's file listing each file
+  * gets its `run_id` (its parent directory) and its `t` (its rank in name
+  * order within the run), joined in as a small broadcast table; every
+  * timestep of a run must list t0's point count in its header.
   *
   * Tables:
   *  - points:    (run_id, point_id, x, y, z) — reference configuration (t0)
@@ -17,7 +20,10 @@ import org.apache.spark.sql.functions._
   *    positions per timestep plus displacement relative to t0 (the
   *    reference's `displacement_t{idx}` fields)
   *  - point_data:(run_id, t, point_id, field, value) — nodal fields per
-  *    timestep (stress/temperature/velocity arrive here when present)
+  *    timestep (stress/temperature/velocity arrive here when present); a
+  *    k-component array gives the fields `<name>_0 … <name>_{k-1}`
+  *
+  * points and cells read only the t0 files (key-column pruning).
   */
 object VtkTimeSeriesSource {
 
@@ -26,66 +32,32 @@ object VtkTimeSeriesSource {
            include: Set[String] = Set.empty,
            exclude: Set[String] = Set.empty): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    val raw = spark.read.format("binaryFile")
-      .option("pathGlobFilter", vtkGlob)
-      .option("recursiveFileLookup", "true").load(rootGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-
-    val runs = raw
-      .groupByKey { case (path, _) => path.replaceAll("/[^/]*$", "") }
-      .mapGroups { (run, it) =>
-        val series = it.toSeq.sortBy(_._1)
-          .map { case (_, bytes) => VtkXmlSource.parseVtu(bytes, include, exclude) }
-        require(series.nonEmpty, s"no VTK files in run $run")
-        val n0 = series.head.points.length
-        series.zipWithIndex.foreach { case (p, t) =>
-          require(p.points.length == n0,
-            s"run $run timestep $t has ${p.points.length} points, t0 has $n0")
-        }
-        (run,
-          series.head.points.map(a => (a(0), a(1), a(2))),
-          series.head.cells,
-          series.map(p => p.points.map(a => (a(0), a(1), a(2)))),
-          series.map(_.pointData.toSeq.map { case (k, v) => (k, v) }))
-      }.persist()
-
-    val points = runs.flatMap { case (run, pts, _, _, _) =>
-      pts.iterator.zipWithIndex.map { case ((x, y, z), i) =>
-        (run, i.toLong, x, y, z)
-      }.toSeq
-    }.toDF("run_id", "point_id", "x", "y", "z")
-    val cells = runs.flatMap { case (run, _, cs, _, _) =>
-      cs.iterator.zipWithIndex.map { case (vs, i) => (run, i.toLong, vs.toSeq) }.toSeq
-    }.toDF("run_id", "cell_id", "vertices")
-    // iterators, not .toSeq: the timesteps × points expansion streams out
-    // of the task instead of materializing next to the held series
-    val states = runs.flatMap { case (run, p0, _, series, _) =>
-      series.iterator.zipWithIndex.flatMap { case (pts, t) =>
-        pts.iterator.zipWithIndex.map { case ((x, y, z), i) =>
-          val (x0, y0, z0) = p0(i)
-          (run, t, i.toLong, x, y, z, x - x0, y - y0, z - z0)
+    val (points, cells, heads) = VtkXmlSource.wide(spark, new VtuDataSource, rootGlob, vtkGlob)
+    // (file, run, t), t the file's rank in name order within its run
+    val steps = heads.map { case (u, h) => (u.key.toString, h.points) }
+      .groupBy(_._1.replaceAll("/[^/]*$", "")).toSeq.flatMap { case (run, files) =>
+        val series = files.sortBy(_._1)
+        val n0 = series.head._2
+        series.zipWithIndex.map { case ((file, n), t) =>
+          require(n == n0, s"run $run timestep $t has $n points, t0 has $n0")
+          (file, run, t)
         }
       }
-    }.toDF("run_id", "t", "point_id", "px", "py", "pz", "dx", "dy", "dz")
-    val pointData = runs.flatMap { case (run, p0, _, _, fieldsPerT) =>
-      val nPts = p0.length
-      fieldsPerT.iterator.zipWithIndex.flatMap { case (fields, t) =>
-        fields.iterator.flatMap { case (field, vals) =>
-          // multi-component arrays (velocity etc.): values interleave per
-          // point; emit one row per (point, component) with a suffixed name
-          val comps =
-            if (nPts == 0 || vals.length % nPts != 0) 1
-            else vals.length / nPts
-          require(vals.length == nPts * comps,
-            s"field $field has ${vals.length} values for $nPts points")
-          vals.iterator.zipWithIndex.map { case (v, flat) =>
-            val name = if (comps == 1) field else s"${field}_${flat % comps}"
-            (run, t, (flat / comps).toLong, name, v)
-          }
-        }
-      }
-    }.toDF("run_id", "t", "point_id", "field", "value")
-    (points, cells, states, pointData)
+    val stepTable = broadcast(steps.toDF("mesh_id", "run_id", "t"))
+    def at(wide: DataFrame) = wide.join(stepTable, "mesh_id")
+    val t0 = col("mesh_id").isin(steps.collect { case (f, _, 0) => f }: _*)
+
+    val base = at(points.where(t0)).select("run_id", "point_id", "x", "y", "z")
+    val states = at(points).select(col("run_id"), col("t"), col("point_id"),
+        col("x").as("px"), col("y").as("py"), col("z").as("pz"))
+      .join(base, Seq("run_id", "point_id"))
+      .select(col("run_id"), col("t"), col("point_id"), col("px"), col("py"), col("pz"),
+        (col("px") - col("x")).as("dx"), (col("py") - col("y")).as("dy"),
+        (col("pz") - col("z")).as("dz"))
+    val ids = Seq("run_id", "t", "point_id")
+    val pointData = VtkXmlSource.unpivot(at(points), ids,
+        VtkXmlSource.arrayColumns(points, Seq("mesh_id", "point_id", "x", "y", "z"), include, exclude))
+      .select("run_id", "t", "point_id", "field", "value")
+    (base, at(cells.where(t0)).select("run_id", "cell_id", "vertices"), states, pointData)
   }
 }

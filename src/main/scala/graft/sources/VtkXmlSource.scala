@@ -37,10 +37,10 @@ import graft.functions.Zlib
   *    zlib block-compressed (`compressor="vtkZLibDataCompressor"`);
   *  - `header_type` UInt32 (default) and UInt64, little-endian.
   *
-  * Grid types: UnstructuredGrid (`.vtu`, Cells) and PolyData (`.vtp`, Polys
-  * as cells; Verts/Lines/Strips are ignored). StructuredGrid (`.vts`) points
-  * and point data parse through the same path (its cells are implicit in the
-  * extent and not emitted). LZMA/LZ4 compressors and big-endian files throw.
+  * Grid types: UnstructuredGrid (`.vtu`, Cells), PolyData (`.vtp`, Polys
+  * as cells; Verts/Lines/Strips are ignored) and StructuredGrid (`.vts`,
+  * whose cells are the implicit hexahedra of its Extent). LZMA/LZ4
+  * compressors and big-endian files throw.
   */
 object VtkXmlSource {
 
@@ -83,12 +83,12 @@ object VtkXmlSource {
     out.toByteArray
   }
 
-  /** Random-access view of an AppendedData block: array-backed when the
-    * whole file is in memory, file-backed (RandomAccessFile) for spilled
-    * multi-gigabyte assemblies where file OFFSETS are unbounded and only
-    * each individual DataArray payload must fit in one array.
+  /** Random-access view of a file or of its AppendedData block: array-backed
+    * when the bytes are in memory, ranged ([[Dsv2.HadoopRawData]],
+    * [[Dsv2.ConcatRawData]]) for files whose OFFSETS are unbounded and where
+    * only each individual DataArray payload must fit in one array.
     */
-  private[sources] trait RawData {
+  private[graft] trait RawData {
     def size: Long
     def slice(off: Long, len: Long): Array[Byte]
   }
@@ -99,20 +99,6 @@ object VtkXmlSource {
       require(off >= 0 && len >= 0 && off + len <= a.length,
         s"appended slice [$off,+$len) outside ${a.length} bytes")
       java.util.Arrays.copyOfRange(a, off.toInt, (off + len).toInt)
-    }
-  }
-
-  private[sources] final class FileRawData(path: java.io.File, start: Long,
-                                           val size: Long) extends RawData {
-    def slice(off: Long, len: Long): Array[Byte] = {
-      require(off >= 0 && len >= 0 && off + len <= size,
-        s"appended slice [$off,+$len) outside $size bytes")
-      require(len <= Int.MaxValue - 8,
-        s"DataArray payload of $len bytes exceeds the 2 GiB per-array limit")
-      val out = new Array[Byte](len.toInt)
-      val raf = new java.io.RandomAccessFile(path, "r")
-      try { raf.seek(start + off); raf.readFully(out) } finally raf.close()
-      out
     }
   }
 
@@ -184,6 +170,29 @@ object VtkXmlSource {
     }
   }
 
+  /** Byte size of one value of a VTK binary type. */
+  private def typeSize(vtkType: String): Int = vtkType match {
+    case "Float64" | "Int64" | "UInt64" => 8
+    case "Float32" | "Int32" | "UInt32" => 4
+    case "Int16" | "UInt16" => 2
+    case "Int8" | "UInt8" => 1
+    case other => throw new IllegalArgumentException(s"unsupported binary type $other")
+  }
+
+  /** Decoded byte length of a raw (appended `encoding="raw"`) payload at
+    * byte offset `off`, from its size words alone.
+    */
+  private def rawPayloadSize(app: RawData, off: Long, ht: String,
+                             compressed: Boolean): Long = {
+    val ws = wordSize(ht)
+    if (!compressed) readWord(app.slice(off, ws.toLong), 0, ht)
+    else {
+      val h = app.slice(off, 3L * ws)
+      val (nb, block, last) = (readWord(h, 0, ht), readWord(h, ws, ht), readWord(h, 2 * ws, ht))
+      if (nb == 0) 0L else (nb - 1) * block + (if (last == 0) block else last)
+    }
+  }
+
   /** Reinterpret a raw little-endian payload as doubles per the VTK type. */
   private def typedDoubles(bytes: Array[Byte], vtkType: String): Array[Double] = {
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
@@ -220,33 +229,10 @@ object VtkXmlSource {
     * block (bytes after the `_` marker, trimmed of the closing tag). With
     * `encoding="raw"` the file is NOT well-formed XML past `<AppendedData>`
     * (raw bytes are embedded), so the head is cut at the tag and re-closed —
-    * the same byte-scan strategy the reference's Rust reader uses.
-    */
-  private[sources] def splitAppended(bytes: Array[Byte]): (Array[Byte], Option[(String, Array[Byte])]) = {
-    val openIdx = indexOfBytes(bytes, "<AppendedData".getBytes("US-ASCII"), 0)
-    if (openIdx < 0) return (bytes, None)
-    val head = new String(bytes, openIdx, math.min(512, bytes.length - openIdx), "US-ASCII")
-    val enc = "encoding\\s*=\\s*\"([^\"]+)\"".r.findFirstMatchIn(head)
-      .map(_.group(1)).getOrElse("base64")
-    val tagEnd = indexOfBytes(bytes, ">".getBytes("US-ASCII"), openIdx)
-    val underscore = indexOfBytes(bytes, "_".getBytes("US-ASCII"), tagEnd)
-    require(underscore >= 0, "AppendedData section has no '_' data marker")
-    val closeIdx = {
-      // raw binary may contain the byte pattern by chance: take the LAST match
-      val needle = "</AppendedData".getBytes("US-ASCII")
-      var last = -1
-      var at = indexOfBytes(bytes, needle, underscore)
-      while (at >= 0) { last = at; at = indexOfBytes(bytes, needle, at + 1) }
-      if (last < 0) bytes.length else last
-    }
-    val data = java.util.Arrays.copyOfRange(bytes, underscore + 1, closeIdx)
-    val xmlHead = (new String(bytes, 0, openIdx, "UTF-8") + "</VTKFile>").getBytes("UTF-8")
-    (xmlHead, Some((enc, data)))
-  }
-
-  /** [[splitAppended]] over a random-access handle, reading only a BOUNDED
-    * head window (grown geometrically until the `<AppendedData` marker or
-    * EOF is inside it) plus a 4 KiB tail window for the closing tag — never
+    * the same byte-scan strategy the reference's Rust reader uses. Reads
+    * only a BOUNDED head window (grown geometrically until the
+    * `<AppendedData` marker or EOF is inside it) plus a 4 KiB tail window
+    * for the closing tag — never
     * the appended payload. This is both the planning-time schema read of
     * the DSv2 relation (driver cost per file = XML header bytes, not file
     * bytes) and the scan-time entry for ranged per-array reads. Only a file
@@ -306,106 +292,72 @@ object VtkXmlSource {
 
   // ---------------------------------------------------------------- parsing
 
+  /** What a piece's XML header states, read without any payload: its point
+    * and cell counts (-1 when the Piece carries no NumberOf* attribute; a
+    * StructuredGrid piece's come from its point Extent, the Piece's, else
+    * the WholeExtent) and its PointData and CellData arrays with their
+    * NumberOfComponents.
+    */
+  private[sources] final case class VtuHeader(points: Long, cells: Long,
+                                              pointArrays: Seq[(String, Int)],
+                                              cellArrays: Seq[(String, Int)])
+
   /** Parse one .vtu/.vtp/.vts byte payload in any of the supported layouts.
     * `include`/`exclude` act on PointData array names (include wins if both;
-    * empty include = all).
+    * empty include = all). A StructuredGrid piece's cells are the implicit
+    * hexahedra of its Extent ([[structuredCells]]).
     */
   def parseVtu(bytes: Array[Byte], include: Set[String] = Set.empty,
                exclude: Set[String] = Set.empty,
                decodePoints: Boolean = true,
                decodeCells: Boolean = true,
                decodePointData: Boolean = true): VtuPiece = {
-    val (xmlBytes, appended) = splitAppended(bytes)
-    parseVtuCore(xmlBytes,
-      appended.map { case (enc, data) => (enc, new ArrayRawData(data): RawData) },
-      include, exclude, decodePoints, decodeCells, decodePointData)
+    new VtuFile(new ArrayRawData(bytes)).parse(
+      (a, _) => decodePointData && keeps(include, exclude)(a), decodePoints, decodeCells)
   }
 
-  /** [[parseVtu]] over a random-access handle: the XML header is read in a
-    * bounded window and each kept DataArray's appended-raw payload is a
-    * RANGED read at its offset — unselected arrays cost zero bytes of I/O,
-    * and per-file size is unbounded (only each individual payload must fit
-    * in one array). `decodePointData = false` skips every PointData /
-    * CellData array regardless of `include` (the DSv2 all-columns-pruned
-    * path). A base64 appended block still materializes whole (its offsets
-    * address chars of the whitespace-stripped text, ≤ 2 GiB).
+  /** One VTK XML file over a random-access handle, its XML head read once
+    * in a bounded window: [[header]] decodes no payload (the planning-time
+    * face of the DSv2 relations, O(header bytes) per file even for the
+    * reference's ~50 GB DrivAerML volume VTUs, `drivaerml.py:17-30`), and
+    * [[parse]] reads each kept DataArray's appended-raw payload at its
+    * offset — unselected arrays cost zero bytes of I/O, and the file size is
+    * unbounded (only each individual payload must fit in one array). A
+    * base64 appended block still materializes whole (its offsets address
+    * chars of the whitespace-stripped text, ≤ 2 GiB).
     */
-  private[sources] def parseVtuRaw(raw: RawData, include: Set[String] = Set.empty,
-                  exclude: Set[String] = Set.empty,
-                  decodePoints: Boolean = true,
-                  decodeCells: Boolean = true,
-                  decodePointData: Boolean = true): VtuPiece = {
-    val (xmlBytes, appended) = splitAppendedRaw(raw)
-    parseVtuCore(xmlBytes, appended, include, exclude,
-      decodePoints, decodeCells, decodePointData)
+  private[graft] final class VtuFile(raw: RawData) {
+    private val (xml, appended) = splitAppendedRaw(raw)
+
+    lazy val header: VtuHeader =
+      parseVtuCore(xml, None, (_, _) => false, decodePoints = false,
+        decodeCells = false, checkExtent = false)._1
+
+    /** The piece with the PointData / CellData arrays `wanted` names (by
+      * name and component count) and the asked geometry decoded. A
+      * StructuredGrid piece's Points are always sized against its Extent.
+      */
+    def parse(wanted: (String, Int) => Boolean = (_, _) => true,
+              decodePoints: Boolean = true, decodeCells: Boolean = true): VtuPiece =
+      parseVtuCore(xml, appended, wanted, decodePoints, decodeCells, checkExtent = true)._2
   }
 
-  /** Cheap header introspection — array NAMES and piece counts without any
-    * payload decode (the planning-time face of the DSv2 relations:
-    * Catalyst asks for the schema before it knows which columns survive
-    * pruning). Returns (nPoints, nCells, pointData names, cellData names);
-    * counts are -1 when the Piece element carries no NumberOf* attribute.
-    * Reads ONLY the bounded XML head window, never the appended payload:
-    * the schema-inference read of the DSv2 relation stays O(header bytes)
-    * per file even for the reference's ~50 GB DrivAerML volume VTUs
-    * (`drivaerml.py:17-30`).
+  /** Points of a point Extent `x0 x1 y0 y1 z0 z1`, and its implicit cells
+    * (an axis one point thick has none).
     */
-  private[sources] def listVtuArraysRaw(raw: RawData): (Long, Long, Seq[String], Seq[String]) =
-    listVtuArraysXml(splitAppendedRaw(raw)._1)
-
-  private def listVtuArraysXml(xmlBytes: Array[Byte]): (Long, Long, Seq[String], Seq[String]) = {
-    val f = XMLInputFactory.newInstance()
-    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    val r = f.createXMLStreamReader(new ByteArrayInputStream(xmlBytes))
-    var nPoints = -1L; var nCells = -1L; var section = ""
-    val pd = Seq.newBuilder[String]; val cd = Seq.newBuilder[String]
-    try {
-      while (r.hasNext) {
-        r.next() match {
-          case XMLStreamConstants.START_ELEMENT =>
-            r.getLocalName match {
-              case "Piece" =>
-                def attr(n: String): Option[Long] =
-                  Option(r.getAttributeValue(null, n)).map(_.trim.toLong)
-                attr("NumberOfPoints").foreach(nPoints = _)
-                attr("NumberOfCells").orElse(attr("NumberOfPolys"))
-                  .foreach(nCells = _)
-              case "PointData" | "CellData" => section = r.getLocalName
-              case "DataArray" if section.nonEmpty =>
-                Option(r.getAttributeValue(null, "Name")).foreach { n =>
-                  if (section == "PointData") pd += n else cd += n
-                }
-              case _ =>
-            }
-          case XMLStreamConstants.END_ELEMENT =>
-            if (r.getLocalName == "PointData" || r.getLocalName == "CellData")
-              section = ""
-          case _ =>
-        }
-      }
-    } finally r.close()
-    (nPoints, nCells, pd.result().distinct, cd.result().distinct)
+  private def extentCounts(e: Array[Int]): (Long, Long) = {
+    val n = Seq(0, 1, 2).map(a => e(2 * a + 1).toLong - e(2 * a) + 1)
+    require(n.forall(_ >= 1), s"empty Extent ${e.mkString(" ")}")
+    def product(xs: Seq[Long]): Long = xs.reduce((a, b) => math.multiplyExact(a, b))
+    (product(n), product(n.map(_ - 1)))
   }
-
-  /** File-backed variant for assemblies too large to hold in one array
-    * (the reference's ~50 GB DrivAerML volume VTUs, `drivaerml.py:17-30`):
-    * the XML head is read into memory (bounded window), the AppendedData
-    * block stays on disk behind `FileRawData`, and each DataArray payload
-    * is read at its (unbounded, Long) offset. Only `encoding="raw"` data
-    * can stay on disk — a base64 block beyond 2 GiB fails loudly.
-    */
-  def parseVtuFile(file: java.io.File, include: Set[String] = Set.empty,
-                   exclude: Set[String] = Set.empty): VtuPiece =
-    parseVtuRaw(new FileRawData(file, 0L, file.length()), include, exclude)
 
   private def parseVtuCore(xmlBytes: Array[Byte],
                            appended: Option[(String, RawData)],
-                           include: Set[String],
-                           exclude: Set[String],
-                           decodePoints: Boolean = true,
-                           decodeCells: Boolean = true,
-                           decodePointData: Boolean = true): VtuPiece = {
+                           wanted: (String, Int) => Boolean,
+                           decodePoints: Boolean,
+                           decodeCells: Boolean,
+                           checkExtent: Boolean): (VtuHeader, VtuPiece) = {
     // base64-appended offsets address CHARS of the whitespace-stripped block
     lazy val appendedB64: String = {
       val rd = appended.get._2
@@ -427,6 +379,13 @@ object VtkXmlSource {
     var headerType = "UInt32"
     var compressed = false
     var keepArray = false
+    var nPoints = -1L; var nCells = -1L
+    var structured = false
+    var wholeExtent: Option[Array[Int]] = None
+    var pieceExtent: Option[Array[Int]] = None
+    var pointValues = -1L                    // values in Points, when sized
+    val pointArrays = Seq.newBuilder[(String, Int)]
+    val cellArrays = Seq.newBuilder[(String, Int)]
     val text = new StringBuilder
     var pointsFlat: Array[Double] = Array.empty
     var connectivity: Array[Long] = Array.empty
@@ -434,8 +393,12 @@ object VtkXmlSource {
     val pointData = mutable.LinkedHashMap.empty[String, Array[Double]]
     val cellData = mutable.LinkedHashMap.empty[String, Array[Double]]
 
-    def wanted(name: String): Boolean =
-      (include.isEmpty || include.contains(name)) && !exclude.contains(name)
+    def attr(n: String): Option[String] = Option(r.getAttributeValue(null, n)).map(_.trim)
+    def ints(n: String): Option[Array[Int]] = attr(n).map { v =>
+      val e = v.split("\\s+").map(_.toInt)
+      require(e.length == 6, s"$n '$v' is not six integers")
+      e
+    }
 
     def decode(): Array[Double] = arrayFormat match {
       case "ascii" =>
@@ -458,36 +421,51 @@ object VtkXmlSource {
       case other => throw new IllegalArgumentException(s"unsupported DataArray format $other")
     }
 
+    // values of the current DataArray: a raw appended payload is sized by
+    // its size words alone; an inline one is already in memory and decodes
+    def valueCount(): Long = appended match {
+      case Some(("raw", data)) if arrayFormat == "appended" =>
+        rawPayloadSize(data, arrayOffset, headerType, compressed) / typeSize(arrayType)
+      case _ => decode().length.toLong
+    }
+
     try {
       while (r.hasNext) {
         r.next() match {
           case XMLStreamConstants.START_ELEMENT =>
             r.getLocalName match {
               case "VTKFile" =>
-                headerType = Option(r.getAttributeValue(null, "header_type"))
-                  .getOrElse("UInt32")
-                Option(r.getAttributeValue(null, "byte_order")).foreach { bo =>
+                headerType = attr("header_type").getOrElse("UInt32")
+                attr("byte_order").foreach { bo =>
                   require(bo == "LittleEndian", s"unsupported byte_order $bo")
                 }
-                Option(r.getAttributeValue(null, "compressor")).foreach { c =>
+                attr("compressor").foreach { c =>
                   require(c == "vtkZLibDataCompressor", s"unsupported compressor $c")
                   compressed = true
                 }
+              case "StructuredGrid" =>
+                structured = true
+                wholeExtent = ints("WholeExtent")
+              case "Piece" =>
+                attr("NumberOfPoints").foreach(v => nPoints = v.toLong)
+                attr("NumberOfCells").orElse(attr("NumberOfPolys")).foreach(v => nCells = v.toLong)
+                if (structured) pieceExtent = ints("Extent")
               case "Points" | "Cells" | "Polys" | "PointData" | "CellData" =>
                 section = r.getLocalName
               case "DataArray" =>
-                arrayName = Option(r.getAttributeValue(null, "Name")).getOrElse("")
-                arrayFormat = Option(r.getAttributeValue(null, "format")).getOrElse("ascii")
-                arrayType = Option(r.getAttributeValue(null, "type")).getOrElse("Float64")
-                arrayOffset = Option(r.getAttributeValue(null, "offset"))
-                  .map(_.trim.toLong).getOrElse(0L)
+                arrayName = attr("Name").getOrElse("")
+                arrayFormat = attr("format").getOrElse("ascii")
+                arrayType = attr("type").getOrElse("Float64")
+                arrayOffset = attr("offset").map(_.toLong).getOrElse(0L)
+                val k = math.max(attr("NumberOfComponents").map(_.toInt).getOrElse(1), 1)
+                if (section == "PointData") pointArrays += (arrayName -> k)
+                if (section == "CellData") cellArrays += (arrayName -> k)
                 keepArray = section match {
-                  case "Points" => decodePoints
+                  case "Points" => decodePoints || (structured && checkExtent)
                   case "Cells" | "Polys" =>
-                    decodeCells &&
+                    decodeCells && !structured &&
                       (arrayName == "connectivity" || arrayName == "offsets")
-                  case "PointData" | "CellData" =>
-                    decodePointData && wanted(arrayName)
+                  case "PointData" | "CellData" => wanted(arrayName, k)
                   case _ => false
                 }
                 text.clear()
@@ -498,15 +476,16 @@ object VtkXmlSource {
           case XMLStreamConstants.END_ELEMENT =>
             r.getLocalName match {
               case "DataArray" if keepArray =>
-                val nums = decode()
                 section match {
-                  case "Points" => pointsFlat = nums
+                  case "Points" if decodePoints =>
+                    pointsFlat = decode(); pointValues = pointsFlat.length
+                  case "Points" => pointValues = valueCount()
                   case "Cells" | "Polys" if arrayName == "connectivity" =>
-                    connectivity = nums.map(_.toLong)
+                    connectivity = decode().map(_.toLong)
                   case "Cells" | "Polys" if arrayName == "offsets" =>
-                    offsets = nums.map(_.toLong)
-                  case "PointData" => pointData(arrayName) = nums
-                  case "CellData" => cellData(arrayName) = nums
+                    offsets = decode().map(_.toLong)
+                  case "PointData" => pointData(arrayName) = decode()
+                  case "CellData" => cellData(arrayName) = decode()
                   case _ =>
                 }
                 keepArray = false
@@ -518,30 +497,34 @@ object VtkXmlSource {
       }
     } finally r.close()
 
-    val pts = pointsFlat.grouped(3).toArray
-    val cells = {
-      val out = Array.newBuilder[Array[Long]]
-      var start = 0L
-      offsets.foreach { off =>
-        out += connectivity.slice(start.toInt, off.toInt)
-        start = off
-      }
-      out.result()
+    val extent = if (structured) pieceExtent.orElse(wholeExtent) else None
+    if (structured) require(extent.isDefined, "no Extent in StructuredGrid")
+    extent.foreach { e =>
+      val (pts, cls) = extentCounts(e)
+      nPoints = pts; nCells = cls
+      // the Extent must describe the Points it comes with, or the implicit
+      // cells would index points that are not there
+      if (checkExtent) require(pointValues % 3 == 0 && pointValues / 3 == pts,
+        s"StructuredGrid Extent ${e.mkString(" ")} lists $pts points, " +
+          s"its Points array holds ${pointValues / 3}")
     }
-    VtuPiece(pts, cells, pointData.toMap, cellData.toMap)
+    val header = VtuHeader(nPoints, nCells, pointArrays.result().distinct,
+      cellArrays.result().distinct)
+    val cells = extent match {
+      case Some(e) if decodeCells => structuredCells(e)
+      case _ =>
+        val out = Array.newBuilder[Array[Long]]
+        var start = 0L
+        offsets.foreach { off =>
+          out += connectivity.slice(start.toInt, off.toInt)
+          start = off
+        }
+        out.result()
+    }
+    (header, VtuPiece(pointsFlat.grouped(3).toArray, cells, pointData.toMap, cellData.toMap))
   }
 
   // --------------------------------------------------------- StructuredGrid
-
-  /** Point extent of a StructuredGrid piece (its cells are implicit). */
-  def parsePieceExtent(bytes: Array[Byte]): Array[Int] = {
-    val (xmlBytes, _) = splitAppended(bytes)
-    val head = new String(xmlBytes, "UTF-8")
-    "<Piece[^>]*Extent=\"([^\"]+)\"".r.findFirstMatchIn(head)
-      .orElse("WholeExtent=\"([^\"]+)\"".r.findFirstMatchIn(head))
-      .map(_.group(1).trim.split("\\s+").map(_.toInt))
-      .getOrElse(throw new IllegalArgumentException("no Extent in StructuredGrid"))
-  }
 
   /** Implicit hexahedral connectivity of a structured point lattice, VTK
     * hexahedron vertex order, x fastest (point idx = i + nx·(j + ny·k)).
@@ -560,40 +543,15 @@ object VtkXmlSource {
     out.result()
   }
 
-  /** Long-model tables from a glob of `.vts` StructuredGrid files: explicit
-    * points/point-data parse through the shared path; the hex cells are
-    * generated from the piece extent (VTK_HEXAHEDRON, type 12).
+  /** Long-model tables from a glob of `.vts` StructuredGrid files: [[read]]
+    * with `globFilter = "*.vts"`, whose cells are the hexahedra of each
+    * piece's Extent, plus their VTK_HEXAHEDRON `cell_type` (12).
     */
   def readVts(spark: SparkSession, pathGlob: String,
               include: Set[String] = Set.empty,
               exclude: Set[String] = Set.empty): (DataFrame, DataFrame, DataFrame) = {
-    import spark.implicits._
-    val raw = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.vts").load(pathGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-    val pieces = raw.map { case (path, bytes) =>
-      val p = parseVtu(bytes, include, exclude)
-      (path, p.points.map(a => (a(0), a(1), a(2))),
-        structuredCells(parsePieceExtent(bytes)),
-        p.pointData.toSeq.map { case (k, v) => (k, v) })
-    }.persist()
-    val points = pieces.flatMap { case (path, pts, _, _) =>
-      pts.iterator.zipWithIndex.map { case ((x, y, z), i) =>
-        (path, i.toLong, x, y, z)
-      }.toSeq
-    }.toDF("mesh_id", "point_id", "x", "y", "z")
-    val cells = pieces.flatMap { case (path, _, cs, _) =>
-      cs.iterator.zipWithIndex.map { case (vs, i) =>
-        (path, i.toLong, vs.toSeq, 12)
-      }.toSeq
-    }.toDF("mesh_id", "cell_id", "vertices", "cell_type")
-    val pointData = pieces.flatMap { case (path, _, _, pd) =>
-      pd.iterator.flatMap { case (field, vals) =>
-        vals.iterator.zipWithIndex.map { case (v, i) => (path, i.toLong, field, v) }
-      }.toSeq
-    }.toDF("mesh_id", "point_id", "field", "value")
-    (points, cells, pointData)
+    val (points, cells, pointData) = read(spark, pathGlob, include, exclude, globFilter = "*.vts")
+    (points, cells.withColumn("cell_type", lit(12)), pointData)
   }
 
   // ------------------------------------------------------------ MultiBlock
@@ -635,18 +593,15 @@ object VtkXmlSource {
               include: Set[String] = Set.empty,
               exclude: Set[String] = Set.empty): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    val manifests = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.vtm").load(pathGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])].collect()
-    val blocks = manifests.flatMap { case (vtmPath, bytes) =>
+    val conf = Dsv2.confMap(spark)
+    val blocks = Dsv2.listFilesWithSize(spark, pathGlob, "*.vtm").flatMap { case (vtmPath, _) =>
       val base = vtmPath.replaceAll("/[^/]+$", "")
-      parseVtm(bytes).map { case (idx, name, file) =>
+      parseVtm(Dsv2.readBytes(vtmPath, conf)).map { case (idx, name, file) =>
         val resolved = if (file.startsWith("/") || file.contains("://")) file
                        else s"$base/$file"
         (vtmPath, idx, name, resolved)
       }
-    }.toSeq
+    }
     val blockDf = blocks.toDF("vtm_path", "block", "block_name", "mesh_id")
     val paths = blocks.map(_._4).distinct
     require(paths.nonEmpty, s"no DataSet references under $pathGlob")
@@ -672,142 +627,42 @@ object VtkXmlSource {
     * ± zlib) decodes here too.
     */
   def parseVti(bytes: Array[Byte], include: Set[String] = Set.empty,
-               exclude: Set[String] = Set.empty): VtiGrid = {
-    val (xmlBytes, app) = splitAppended(bytes)
-    parseVtiCore(xmlBytes,
-      app.map { case (enc, data) => (enc, new ArrayRawData(data): RawData) },
-      include, exclude)
-  }
+               exclude: Set[String] = Set.empty): VtiGrid =
+    parseVtiRaw(new ArrayRawData(bytes), include, exclude)
 
   /** [[parseVti]] over a random-access handle — bounded header read plus
-    * ranged per-array payload reads, like [[parseVtuRaw]]. */
+    * ranged per-array payload reads through the VTU parser, like
+    * [[VtuFile]]. */
   private[sources] def parseVtiRaw(raw: RawData, include: Set[String] = Set.empty,
                                    exclude: Set[String] = Set.empty): VtiGrid = {
     val (xmlBytes, app) = splitAppendedRaw(raw)
-    parseVtiCore(xmlBytes, app, include, exclude)
+    val (extent, origin, spacing) = vtiLattice(xmlBytes)
+    val (_, piece) = parseVtuCore(xmlBytes, app, (a, _) => keeps(include, exclude)(a),
+      decodePoints = false, decodeCells = false, checkExtent = false)
+    VtiGrid(extent, origin, spacing, piece.pointData, piece.cellData)
   }
 
   /** Header-only VTI introspection for DSv2 planning: (extent, origin,
-    * spacing, PointData names, CellData names) without any payload read.
+    * spacing, PointData and CellData arrays with their NumberOfComponents)
+    * without any payload read.
     */
-  private[sources] def listVtiMeta(raw: RawData): (Array[Int], Array[Double], Array[Double], Seq[String], Seq[String]) = {
+  private[sources] def listVtiMeta(raw: RawData): (Array[Int], Array[Double], Array[Double],
+      Seq[(String, Int)], Seq[(String, Int)]) = {
     val (xmlBytes, _) = splitAppendedRaw(raw)
-    val (_, _, pd, cd) = listVtuArraysXml(xmlBytes)
+    val (h, _) = parseVtuCore(xmlBytes, None, (_, _) => false, decodePoints = false,
+      decodeCells = false, checkExtent = false)
+    val (extent, origin, spacing) = vtiLattice(xmlBytes)
+    (extent, origin, spacing, h.pointArrays, h.cellArrays)
+  }
+
+  /** The ImageData WholeExtent, Origin and Spacing of a VTI XML head. */
+  private def vtiLattice(xmlBytes: Array[Byte]): (Array[Int], Array[Double], Array[Double]) = {
     val head = new String(xmlBytes, "UTF-8")
     def nums(attr: String, dflt: Array[Double]): Array[Double] =
       (attr + "=\"([^\"]+)\"").r.findFirstMatchIn(head)
         .map(_.group(1).trim.split("\\s+").map(_.toDouble)).getOrElse(dflt)
-    val extent = nums("WholeExtent", Array(0, 0, 0, 0, 0, 0)).map(_.toInt)
-    val origin = nums("Origin", Array(0.0, 0.0, 0.0))
-    val spacing = nums("Spacing", Array(1.0, 1.0, 1.0))
-    (extent, origin, spacing, pd, cd)
-  }
-
-  private def parseVtiCore(xmlBytes: Array[Byte],
-                           appended: Option[(String, RawData)],
-                           include: Set[String],
-                           exclude: Set[String]): VtiGrid = {
-    lazy val appendedB64: String = {
-      val rd = appended.get._2
-      require(rd.size <= Int.MaxValue - 8,
-        s"base64 AppendedData of ${rd.size} bytes exceeds 2 GiB (use raw encoding)")
-      new String(rd.slice(0L, rd.size), "US-ASCII").replaceAll("\\s", "")
-    }
-
-    val f = XMLInputFactory.newInstance()
-    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    val r = f.createXMLStreamReader(new ByteArrayInputStream(xmlBytes))
-
-    var extent = Array(0, 0, 0, 0, 0, 0)
-    var origin = Array(0.0, 0.0, 0.0)
-    var spacing = Array(1.0, 1.0, 1.0)
-    var section = ""
-    var arrayName = ""
-    var arrayFormat = "ascii"
-    var arrayType = "Float64"
-    var arrayOffset = 0L
-    var headerType = "UInt32"
-    var compressed = false
-    var keepArray = false
-    val text = new StringBuilder
-    val pointData = mutable.LinkedHashMap.empty[String, Array[Double]]
-    val cellData = mutable.LinkedHashMap.empty[String, Array[Double]]
-
-    def wanted(name: String): Boolean =
-      (include.isEmpty || include.contains(name)) && !exclude.contains(name)
-
-    def decode(): Array[Double] = arrayFormat match {
-      case "ascii" =>
-        text.toString.trim.split("\\s+").filter(_.nonEmpty).map(_.toDouble)
-      case "binary" =>
-        typedDoubles(
-          decodeB64Payload(text.toString.replaceAll("\\s", ""), 0, headerType, compressed),
-          arrayType)
-      case "appended" =>
-        val (enc, data) = appended.getOrElse(throw new IllegalArgumentException(
-          s"DataArray '$arrayName' is format=appended but the file has no AppendedData"))
-        val payload =
-          if (enc == "raw") decodeRawPayload(data, arrayOffset, headerType, compressed)
-          else {
-            require(arrayOffset <= Int.MaxValue - 8,
-              s"base64 appended offset $arrayOffset beyond 2 GiB (use raw encoding)")
-            decodeB64Payload(appendedB64, arrayOffset.toInt, headerType, compressed)
-          }
-        typedDoubles(payload, arrayType)
-      case other => throw new IllegalArgumentException(s"unsupported DataArray format $other")
-    }
-
-    try {
-      while (r.hasNext) {
-        r.next() match {
-          case XMLStreamConstants.START_ELEMENT =>
-            r.getLocalName match {
-              case "VTKFile" =>
-                headerType = Option(r.getAttributeValue(null, "header_type"))
-                  .getOrElse("UInt32")
-                Option(r.getAttributeValue(null, "byte_order")).foreach { bo =>
-                  require(bo == "LittleEndian", s"unsupported byte_order $bo")
-                }
-                Option(r.getAttributeValue(null, "compressor")).foreach { c =>
-                  require(c == "vtkZLibDataCompressor", s"unsupported compressor $c")
-                  compressed = true
-                }
-              case "ImageData" =>
-                def nums(a: String): Option[Array[Double]] =
-                  Option(r.getAttributeValue(null, a))
-                    .map(_.trim.split("\\s+").map(_.toDouble))
-                nums("WholeExtent").foreach(e => extent = e.map(_.toInt))
-                nums("Origin").foreach(origin = _)
-                nums("Spacing").foreach(spacing = _)
-              case "PointData" | "CellData" => section = r.getLocalName
-              case "DataArray" =>
-                arrayName = Option(r.getAttributeValue(null, "Name")).getOrElse("")
-                arrayFormat = Option(r.getAttributeValue(null, "format")).getOrElse("ascii")
-                arrayType = Option(r.getAttributeValue(null, "type")).getOrElse("Float64")
-                arrayOffset = Option(r.getAttributeValue(null, "offset"))
-                  .map(_.trim.toLong).getOrElse(0L)
-                keepArray = (section == "PointData" || section == "CellData") &&
-                  wanted(arrayName)
-                text.clear()
-              case _ =>
-            }
-          case XMLStreamConstants.CHARACTERS | XMLStreamConstants.CDATA =>
-            if (keepArray) text.append(r.getText)
-          case XMLStreamConstants.END_ELEMENT =>
-            r.getLocalName match {
-              case "DataArray" if keepArray =>
-                if (section == "PointData") pointData(arrayName) = decode()
-                else cellData(arrayName) = decode()
-                keepArray = false
-              case "PointData" | "CellData" => section = ""
-              case _ =>
-            }
-          case _ =>
-        }
-      }
-    } finally r.close()
-    VtiGrid(extent, origin, spacing, pointData.toMap, cellData.toMap)
+    (nums("WholeExtent", Array(0, 0, 0, 0, 0, 0)).map(_.toInt),
+      nums("Origin", Array(0.0, 0.0, 0.0)), nums("Spacing", Array(1.0, 1.0, 1.0)))
   }
 
   /** Long structured-grid tables from a glob of `.vti` files:
@@ -815,9 +670,9 @@ object VtkXmlSource {
     * lattice and cell_data (same shape, cell-center coords) on the cell
     * lattice — x fastest-varying, the VTK array order. Each is the unpivot
     * of [[VtiDataSource]]'s `points` / `cells` table: one row per lattice
-    * site and kept array, absent values dropped, NaN kept; an array longer
-    * than the lattice keeps its first values. `include`/`exclude` select
-    * the array columns.
+    * site and kept array column, absent values dropped, NaN kept; a
+    * k-component array gives the fields `<name>_0 … <name>_{k-1}`.
+    * `include`/`exclude` name arrays and select their columns.
     */
   def readVti(spark: SparkSession, pathGlob: String,
               include: Set[String] = Set.empty,
@@ -826,7 +681,7 @@ object VtkXmlSource {
     def long(table: String): DataFrame = {
       val wide = spark.read.format("graft.sources.VtiDataSource")
         .option("path", pathGlob).option("table", table).load()
-      unpivot(wide, lattice, wide.columns.toSeq.diff(lattice).filter(keeps(include, exclude)))
+      unpivot(wide, lattice, arrayColumns(wide, lattice, include, exclude))
         .select("grid_id", "field", "i", "j", "k", "x", "y", "z", "value")
     }
     (long("points"), long("cells"))
@@ -836,11 +691,20 @@ object VtkXmlSource {
   private def keeps(include: Set[String], exclude: Set[String])(a: String): Boolean =
     (include.isEmpty || include.contains(a)) && !exclude.contains(a)
 
+  /** The array columns of `wide` (those not in `ids`) that `include` /
+    * `exclude` keep; a component column `<name>_<c>` goes by its array's
+    * name, so `vel` keeps `vel_0..vel_2`.
+    */
+  private[sources] def arrayColumns(wide: DataFrame, ids: Seq[String],
+                                    include: Set[String], exclude: Set[String]): Seq[String] =
+    wide.schema.fields.toSeq.filterNot(f => ids.contains(f.name))
+      .filter(f => keeps(include, exclude)(UnitSource.arrayOf(f))).map(_.name)
+
   /** The long `(ids…, field, value)` form of a wide table's nullable DOUBLE
     * `arrays` columns: one row per non-null value (NaN is a value), an
     * empty table when there are no arrays.
     */
-  private def unpivot(wide: DataFrame, ids: Seq[String], arrays: Seq[String]): DataFrame =
+  private[sources] def unpivot(wide: DataFrame, ids: Seq[String], arrays: Seq[String]): DataFrame =
     if (arrays.isEmpty)
       wide.select(ids.map(col) :+ lit("").as("field") :+ lit(0.0).as("value"): _*)
         .where(lit(false))
@@ -871,40 +735,58 @@ object VtkXmlSource {
     * may list several comma-separated paths, and `globFilter` pass through
     * as its options): points and cells select its `points` / `cells`
     * tables, and point_data / cell_data are the unpivot of their wide
-    * array columns — one row per point (cell) and array with a value
-    * there, NaN included; an array longer than the point (cell) count
-    * keeps its first values, and a file without the array has no rows for
-    * it. `include`/`exclude` select the array columns, so pruned arrays
-    * are never read. Per-path `keyFilterRules` (longest-glob-wins,
-    * `_key_filter.py:45-110`) take precedence over the global sets: each
-    * file's `(include, exclude)` is resolved on the driver, and the long
-    * tables keep a row only when its file keeps its field.
+    * array columns — one row per point (cell) and array column with a
+    * value there, NaN included; a k-component array gives the fields
+    * `<name>_0 … <name>_{k-1}`, a file without the array has no rows for
+    * it. `include`/`exclude` name arrays and select their columns, so
+    * pruned arrays are never read. Per-path `keyFilterRules`
+    * (longest-glob-wins, `_key_filter.py:45-110`) take precedence over the
+    * global sets: each file's `(include, exclude)` is resolved on the
+    * driver, and the long tables keep a row only when its file keeps its
+    * field.
     */
   def readAll(spark: SparkSession, pathGlob: String,
               include: Set[String] = Set.empty,
               exclude: Set[String] = Set.empty,
               globFilter: String = "*.vt[ups]",
-              keyFilterRules: Seq[KeyFilters.KeyFilterRule] = Nil): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // one header pass yields both schemas, so planning reads each header once
-    val (pointsSchema, cellsSchema) = new VtuDataSource().schemas(new CaseInsensitiveStringMap(
-      java.util.Map.of("path", pathGlob, "globFilter", globFilter)))
+              keyFilterRules: Seq[KeyFilters.KeyFilterRule] = Nil): (DataFrame, DataFrame, DataFrame, DataFrame) =
+    tables(spark, new VtuDataSource, pathGlob, globFilter, include, exclude, keyFilterRules)
+
+  /** `source`'s `points` and `cells` tables over `path`, both planned from
+    * one pass over the unit headers (returned too, in unit order), so
+    * planning reads each header once.
+    */
+  private[sources] def wide(spark: SparkSession, source: VtuDataSource, path: String,
+                            globFilter: String): (DataFrame, DataFrame, Seq[(ScanUnit, VtuHeader)]) = {
+    val heads = source.headerPass(new CaseInsensitiveStringMap(
+      java.util.Map.of("path", path, "globFilter", globFilter)))
+    val (pointsSchema, cellsSchema) = source.schemas(heads.map(_._2))
     def table(name: String, schema: StructType) =
-      spark.read.format("graft.sources.VtuDataSource").schema(schema)
-        .option("path", pathGlob).option("globFilter", globFilter)
+      spark.read.format(source.getClass.getName).schema(schema)
+        .option("path", path).option("globFilter", globFilter)
         .option("table", name).load()
-    val (points, cells) = (table("points", pointsSchema), table("cells", cellsSchema))
+    (table("points", pointsSchema), table("cells", cellsSchema), heads)
+  }
+
+  /** [[readAll]] over any [[VtuDataSource]] binding. */
+  private[sources] def tables(spark: SparkSession, source: VtuDataSource, path: String,
+                              globFilter: String, include: Set[String], exclude: Set[String],
+                              keyFilterRules: Seq[KeyFilters.KeyFilterRule] = Nil)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val (points, cells, _) = wide(spark, source, path, globFilter)
     // per file, its rules' (include, exclude)
     val rules =
       if (keyFilterRules.isEmpty) None
-      else Some(Dsv2.listFilesWithSize(spark, pathGlob, globFilter)
+      else Some(Dsv2.listFilesWithSize(spark, path, globFilter)
         .map { case (f, _) => f -> KeyFilters.resolveArrays(f, keyFilterRules) }.toMap)
     def long(wide: DataFrame, id: String, geometry: Seq[String]): DataFrame = {
-      val all = wide.columns.toSeq.diff("mesh_id" +: id +: geometry)
+      val ids = "mesh_id" +: id +: geometry
       rules match {
-        case None => unpivot(wide, Seq("mesh_id", id), all.filter(keeps(include, exclude)))
+        case None => unpivot(wide, Seq("mesh_id", id), arrayColumns(wide, ids, include, exclude))
         case Some(r) =>
-          val perFile = r.map { case (f, (inc, exc)) => f -> all.filter(keeps(inc, exc)) }
-          unpivot(wide, Seq("mesh_id", id), all.filter(a => perFile.values.exists(_.contains(a))))
+          val perFile = r.map { case (f, (inc, exc)) => f -> arrayColumns(wide, ids, inc, exc) }
+          unpivot(wide, Seq("mesh_id", id), arrayColumns(wide, ids, Set.empty, Set.empty)
+            .filter(a => perFile.values.exists(_.contains(a))))
             .where(array_contains(try_element_at(typedLit(perFile), col("mesh_id")),
               col("field")))
       }

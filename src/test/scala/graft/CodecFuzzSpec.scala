@@ -243,6 +243,75 @@ class CodecFuzzSpec extends AnyFunSuite {
     }
   }
 
+  /** Errors of reading `bytes` as file `name` under `dir` through
+    * `read(path)`: each must be an ordinary exception that names the file
+    * and arrives within the harden bound.
+    */
+  private def failsNamingFile(dir: java.nio.file.Path, name: String, bytes: Array[Byte])(
+      read: String => Any): Unit = {
+    val f = dir.resolve(name)
+    java.nio.file.Files.write(f, bytes)
+    val t0 = System.nanoTime()
+    val e = intercept[Throwable](read(f.toString))
+    val ms = (System.nanoTime() - t0) / 1e6
+    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(!chain.exists(c => c.isInstanceOf[StackOverflowError] ||
+      c.isInstanceOf[OutOfMemoryError]), s"$name: $e")
+    assert(chain.exists(c => String.valueOf(c.getMessage).contains(s"$dir/$name")),
+      s"$name: the error does not name the file: $e")
+    assert(ms < 2000, s"$name took $ms ms (hang?)")
+  }
+
+  test("GRIB2: a zero-length section and a cut message fail, naming the file") {
+    // section 1's length zeroed: a loop that advances by the section
+    // length never moves, so the parse runs under a bounded wait
+    val zeroSection = grib2.clone()
+    (16 until 20).foreach(zeroSection(_) = 0)
+    val parse = scala.concurrent.Future(scala.util.Try(GribSource.parse(zeroSection)))(
+      scala.concurrent.ExecutionContext.global)
+    val done = scala.util.Try(scala.concurrent.Await.result(parse,
+      scala.concurrent.duration.Duration(5, "s")))
+    assert(done.isSuccess, "GRIB2 parse of a zero-length section did not return within 5 s")
+    assert(done.get.isFailure, "a zero-length section decoded")
+    // a file that starts a message it does not complete
+    val cut = grib2.take(12)
+    assert(scala.util.Try(GribSource.parse(cut)).isFailure, "a 12-byte GRIB file decoded")
+
+    val spark = SparkSpec.spark
+    val dir = java.nio.file.Files.createTempDirectory("fuzz_grib")
+    Seq("zero_section" -> zeroSection, "cut12" -> cut).foreach { case (name, bytes) =>
+      failsNamingFile(dir, name, bytes) { path =>
+        spark.read.format("graft.sources.NetCdfDataSource")
+          .option("path", path).option("globFilter", "*").load().count()
+      }
+    }
+  }
+
+  test("VTU binding: a .vts Extent its Points do not fill fails, naming the file") {
+    // an Extent of 100001³ points over 12 points would ask for ~10^15
+    // implicit hexahedra
+    val bomb =
+      """<?xml version="1.0"?>
+        |<VTKFile type="StructuredGrid" version="0.1">
+        | <StructuredGrid WholeExtent="0 100000 0 100000 0 100000">
+        |  <Piece Extent="0 100000 0 100000 0 100000">
+        |   <Points>
+        |    <DataArray type="Float64" NumberOfComponents="3" format="ascii">
+        |      0 0 0  1 0 0  2 0 0  0 1 0  1 1 0  2 1 0
+        |      0 0 1  1 0 1  2 0 1  0 1 1  1 1 1  2 1 1
+        |    </DataArray>
+        |   </Points>
+        |  </Piece>
+        | </StructuredGrid>
+        |</VTKFile>""".stripMargin.getBytes("UTF-8")
+    val spark = SparkSpec.spark
+    val dir = java.nio.file.Files.createTempDirectory("fuzz_vts")
+    def cells(path: String) = spark.read.format("graft.sources.VtuDataSource")
+      .option("path", path).option("globFilter", "*.vts").option("table", "cells").load()
+    failsNamingFile(dir, "bomb.vts", bomb)(path => cells(path).select("vertices").collect())
+    failsNamingFile(dir, "bomb.vts", bomb)(path => cells(path).count())
+  }
+
   test("parquet footer survives corruption") {
     val path = java.nio.file.Paths.get("/root/testdata/sf0.001/region.parquet")
     val all = java.nio.file.Files.readAllBytes(path)

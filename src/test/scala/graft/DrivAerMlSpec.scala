@@ -93,7 +93,7 @@ class DrivAerMlSpec extends SparkSpec {
     assert(msgs.contains("not contiguous"))
   }
 
-  test("parseVtuFile: file-backed raw-appended parse equals in-memory parse") {
+  test("ConcatRawData: shard-concatenating ranged parse equals in-memory parse") {
     val s = spark
     import s.implicits._
     val pts = Seq((0L, 0L, 0.5, 0.0, 0.0), (0L, 1L, 1.0, 0.25, 0.0),
@@ -107,13 +107,21 @@ class DrivAerMlSpec extends SparkSpec {
       val dir = Files.createTempDirectory(s"pvf-$fmt").toString
       graft.sinks.VtuSink.write(pts, cls, pd, dir, format = fmt)
       val f = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".vtu")).head
-      val inMem = graft.sources.VtkXmlSource.parseVtu(
-        Files.readAllBytes(f.toPath))
-      val onDisk = graft.sources.VtkXmlSource.parseVtuFile(f)
-      assert(onDisk.points.map(_.toSeq).toSeq == inMem.points.map(_.toSeq).toSeq,
+      val bytes = Files.readAllBytes(f.toPath)
+      val inMem = graft.sources.VtkXmlSource.parseVtu(bytes)
+      // the file as 80-byte shards, read back to back through ranged preads
+      val shards = Files.createTempDirectory(s"pvf-$fmt-parts")
+      val parts = bytes.grouped(80).zipWithIndex.map { case (b, i) =>
+        Files.write(shards.resolve(f"part$i%03d"), b).toString
+      }.toSeq
+      assert(parts.length > 2, s"format $fmt: ${bytes.length} bytes")
+      val raw = new graft.sources.Dsv2.ConcatRawData(parts, graft.sources.Dsv2.confMap(spark))
+      val onShards =
+        try new graft.sources.VtkXmlSource.VtuFile(raw).parse() finally raw.close()
+      assert(onShards.points.map(_.toSeq).toSeq == inMem.points.map(_.toSeq).toSeq,
         s"format $fmt points")
-      assert(onDisk.cells.map(_.toSeq).toSeq == inMem.cells.map(_.toSeq).toSeq)
-      assert(onDisk.pointData.view.mapValues(_.toSeq).toMap ==
+      assert(onShards.cells.map(_.toSeq).toSeq == inMem.cells.map(_.toSeq).toSeq)
+      assert(onShards.pointData.view.mapValues(_.toSeq).toMap ==
         inMem.pointData.view.mapValues(_.toSeq).toMap, s"format $fmt pointData")
     }
   }

@@ -174,11 +174,12 @@ class Dsv2SourcesSpec extends SparkSpec {
         r.getDouble(3).toString)).toSet
 
     val (_, _, pd) = graft.sources.VtkXmlSource.read(spark, dir)
-    // NaN is a value; b has no w rows; an array longer than the point
-    // count keeps its first three values
+    // NaN is a value; b has no w rows; the 2-component w keeps all six
+    // values as w_0 / w_1, point i's pair at values 2i, 2i+1
     assert(rows(pd) == Set(
       ("a.vtu", 0L, "u", "1.0"), ("a.vtu", 1L, "u", "NaN"), ("a.vtu", 2L, "u", "3.0"),
-      ("a.vtu", 0L, "w", "10.0"), ("a.vtu", 1L, "w", "11.0"), ("a.vtu", 2L, "w", "12.0"),
+      ("a.vtu", 0L, "w_0", "10.0"), ("a.vtu", 1L, "w_0", "12.0"), ("a.vtu", 2L, "w_0", "14.0"),
+      ("a.vtu", 0L, "w_1", "11.0"), ("a.vtu", 1L, "w_1", "13.0"), ("a.vtu", 2L, "w_1", "15.0"),
       ("b.vtu", 0L, "u", "4.0"), ("b.vtu", 1L, "u", "5.0"), ("b.vtu", 2L, "u", "6.0")),
       rows(pd).toString)
 
@@ -189,7 +190,7 @@ class Dsv2SourcesSpec extends SparkSpec {
       KeyFilterRule("*.vtu", "exclude", Set("w")),
       KeyFilterRule("*/a.vtu", "include", Set("w"))))
     assert(rows(ruled) == rows(pd).filter { case (f, _, a, _) =>
-      (f == "a.vtu") == (a == "w") })
+      (f == "a.vtu") == a.startsWith("w_") })
 
     // a corpus without arrays has an empty long table
     val bare = tmpDir("dsv2_vtu_bare")
@@ -436,6 +437,35 @@ class Dsv2SourcesSpec extends SparkSpec {
     // ...and only asking for poison hits its decode
     val e = intercept[Exception](wide2.select("poison").collect())
     assert(e.getMessage != null && e.getMessage.contains("AppendedData"), e.getMessage)
+  }
+
+  test("VTI DSv2: a k-component array is k columns <name>_0..<name>_{k-1}") {
+    val dir = tmpDir("dsv2_vti_comp")
+    // 2x1x1 point lattice; vel holds 3 components per point, interleaved
+    Files.writeString(Paths.get(dir, "g.vti"),
+      """<?xml version="1.0"?>
+        |<VTKFile type="ImageData" version="1.0" byte_order="LittleEndian">
+        | <ImageData WholeExtent="0 1 0 0 0 0" Origin="0 0 0" Spacing="1 1 1">
+        |  <Piece Extent="0 1 0 0 0 0">
+        |   <PointData>
+        |    <DataArray type="Float64" Name="vel" NumberOfComponents="3" format="ascii">10 11 12 20 21 22</DataArray>
+        |    <DataArray type="Float64" Name="p" format="ascii">1 2</DataArray>
+        |   </PointData>
+        |  </Piece>
+        | </ImageData>
+        |</VTKFile>""".stripMargin)
+    val wide = spark.read.format("graft.sources.VtiDataSource").option("path", dir).load()
+    assert(wide.columns.toSeq ==
+      Seq("grid_id", "i", "j", "k", "x", "y", "z", "p", "vel_0", "vel_1", "vel_2"))
+    val got = wide.select("i", "vel_0", "vel_1", "vel_2").collect()
+      .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))).toSet
+    assert(got == Set((0, 10.0, 11.0, 12.0), (1, 20.0, 21.0, 22.0)), got.toString)
+    // include names the array: vel keeps its three components
+    val (pd, _) = graft.sources.VtkXmlSource.readVti(spark, dir, include = Set("vel"))
+    val long = pd.collect().map(r => (r.getAs[String]("field"), r.getAs[Int]("i"),
+      r.getAs[Double]("value"))).toSet
+    assert(long == Set(("vel_0", 0, 10.0), ("vel_1", 0, 11.0), ("vel_2", 0, 12.0),
+      ("vel_0", 1, 20.0), ("vel_1", 1, 21.0), ("vel_2", 1, 22.0)), long.toString)
   }
 
   test("d3plot DSv2: family tables match the function API; block pruning via D3Select") {

@@ -397,24 +397,26 @@ class VtkXmlSourceSpec extends SparkSpec {
     assert(points.count() == 8 && cells.count() == 4 && pointData.count() == 16)
   }
 
+  // 3×2×2 structured point lattice with one point field
+  private val vts =
+    """<?xml version="1.0"?>
+      |<VTKFile type="StructuredGrid" version="0.1">
+      | <StructuredGrid WholeExtent="0 2 0 1 0 1">
+      |  <Piece Extent="0 2 0 1 0 1">
+      |   <Points>
+      |    <DataArray type="Float64" NumberOfComponents="3" format="ascii">
+      |      0 0 0  1 0 0  2 0 0  0 1 0  1 1 0  2 1 0
+      |      0 0 1  1 0 1  2 0 1  0 1 1  1 1 1  2 1 1
+      |    </DataArray>
+      |   </Points>
+      |   <PointData>
+      |    <DataArray type="Float64" Name="u" format="ascii">0 1 2 3 4 5 6 7 8 9 10 11</DataArray>
+      |   </PointData>
+      |  </Piece>
+      | </StructuredGrid>
+      |</VTKFile>""".stripMargin
+
   test(".vts StructuredGrid: implicit hex cells from the piece extent") {
-    val vts =
-      """<?xml version="1.0"?>
-        |<VTKFile type="StructuredGrid" version="0.1">
-        | <StructuredGrid WholeExtent="0 2 0 1 0 1">
-        |  <Piece Extent="0 2 0 1 0 1">
-        |   <Points>
-        |    <DataArray type="Float64" NumberOfComponents="3" format="ascii">
-        |      0 0 0  1 0 0  2 0 0  0 1 0  1 1 0  2 1 0
-        |      0 0 1  1 0 1  2 0 1  0 1 1  1 1 1  2 1 1
-        |    </DataArray>
-        |   </Points>
-        |   <PointData>
-        |    <DataArray type="Float64" Name="u" format="ascii">0 1 2 3 4 5 6 7 8 9 10 11</DataArray>
-        |   </PointData>
-        |  </Piece>
-        | </StructuredGrid>
-        |</VTKFile>""".stripMargin
     // 3×2×2 point lattice → 2×1×1 implicit hex cells
     val cs = VtkXmlSource.structuredCells(Array(0, 2, 0, 1, 0, 1))
     assert(cs.length == 2)
@@ -429,6 +431,68 @@ class VtkXmlSourceSpec extends SparkSpec {
     // hex volume check composes: each cell is a unit cube (tet-split = 6×1/6)
     val wide = graft.mesh.MeshOps.cellsWithCoords(points, cells, 8)
     assert(wide.count() == 2)
+  }
+
+  test(".vts through read: the default glob yields readVts' hexahedra") {
+    val dir = Files.createTempDirectory("vts-read").toString
+    Files.writeString(Paths.get(dir, "g.vts"), vts)
+    val (points, cells, pd) = VtkXmlSource.read(spark, dir)
+    val (_, hexes, _) = VtkXmlSource.readVts(spark, dir)
+    def verts(df: org.apache.spark.sql.DataFrame) =
+      df.select("cell_id", "vertices").collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
+    assert(points.count() == 12 && pd.count() == 12)
+    assert(verts(cells) == verts(hexes) && verts(cells).size == 2, verts(cells).toString)
+    // a count reads the cell count from the Extent alone
+    assert(cells.count() == 2)
+  }
+
+  /** One VTU of 3 points whose `vel` has 3 components per point. */
+  private def vtuVel(vel: String): String =
+    s"""<?xml version="1.0"?>
+       |<VTKFile type="UnstructuredGrid">
+       | <UnstructuredGrid><Piece NumberOfPoints="3" NumberOfCells="1">
+       |  <Points><DataArray type="Float64" NumberOfComponents="3" format="ascii">0 0 0 1 0 0 0 1 0</DataArray></Points>
+       |  <Cells>
+       |   <DataArray type="Int64" Name="connectivity" format="ascii">0 1 2</DataArray>
+       |   <DataArray type="Int64" Name="offsets" format="ascii">3</DataArray>
+       |  </Cells>
+       |  <PointData><DataArray type="Float64" Name="vel" NumberOfComponents="3" format="ascii">$vel</DataArray></PointData>
+       | </Piece></UnstructuredGrid>
+       |</VTKFile>""".stripMargin
+
+  test("a 3-component point array: read and the timestep series give the same rows") {
+    val root = Files.createTempDirectory("vel").toString
+    Files.createDirectories(Paths.get(root, "run_a"))
+    Files.writeString(Paths.get(root, "run_a", "s_000.vtu"), vtuVel("10 11 12 20 21 22 30 31 32"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("point_id", "field", "value")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+    val (_, _, pd) = VtkXmlSource.read(spark, root)
+    val (_, _, _, series) = graft.sources.VtkTimeSeriesSource.read(spark, root)
+    val expected = (for (i <- 0 until 3; c <- 0 until 3)
+      yield (i.toLong, s"vel_$c", (10 * (i + 1) + c).toDouble)).toSet
+    assert(rows(pd) == expected, rows(pd).toString)
+    assert(rows(series) == expected, rows(series).toString)
+    // include names the array, keeping every component
+    assert(rows(VtkXmlSource.read(spark, root, include = Set("vel"))._3) == expected)
+    assert(VtkXmlSource.read(spark, root, exclude = Set("vel"))._3.count() == 0)
+  }
+
+  test("readVts, the timestep series and readVolume cache nothing") {
+    val base = Files.createTempDirectory("nocache")
+    val vtsDir = Files.createDirectories(base.resolve("vts"))
+    Files.writeString(vtsDir.resolve("g.vts"), vts)
+    val series = Files.createDirectories(base.resolve("series/run_a"))
+    Files.writeString(series.resolve("s_000.vtu"), vtuVel("1 2 3 4 5 6 7 8 9"))
+    Files.writeString(series.resolve("s_001.vtu"), vtuVel("2 3 4 5 6 7 8 9 10"))
+    val runs = Files.createDirectories(base.resolve("runs/run_1"))
+    Files.writeString(runs.resolve("volume_1.vtu"), vtu)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (vp, vc, vpd) = VtkXmlSource.readVts(spark, vtsDir.toString)
+    val (sp, sc, ss, spd) = graft.sources.VtkTimeSeriesSource.read(spark, base.resolve("series").toString)
+    val (dp, dc, dpd) = graft.sources.DrivAerMlSource.readVolume(spark, base.resolve("runs").toString)
+    assert(Seq(vp, vc, vpd, sp, sc, ss, spd, dp, dc, dpd).map(_.count()) ==
+      Seq(12L, 2L, 12L, 3L, 1L, 6L, 18L, 4L, 2L, 8L))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
   test("timestep series: per-run file order → t index, displacement vs t0") {
