@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
   * different pipelines never collide. Resume = anti-join of the work list
   * against completed indices (`core/base.py:595-602` → SURVEY §2.5) — a
   * broadcastable join when the remaining-run ledger is small, a shuffled
-  * anti-join at 100 TB, both picked by Catalyst.
+  * anti-join at 100 TB, both picked by Catalyst. A table whose files fit
+  * [[DriverBound]] is read on the driver instead of by a Spark job (see
+  * [[readTable]]), as the reference's resume reads its SQLite store.
   */
 final class Ledger(dir: String) {
   /** The ledger root, for callers reading a table directly. */
@@ -93,46 +95,111 @@ final class Ledger(dir: String) {
 
   private val tailFileRe = java.util.regex.Pattern.compile("r[0-9a-f]{8}_.*")
 
-  /** The files a single-run read must touch: the run's own tail files plus
-    * every shared (compacted/legacy) file. None = prune nothing — either a
-    * nested directory appeared (not a layout this ledger writes, so fall
-    * back to the whole-directory read rather than risk under-reading) or
-    * the selection kept every file anyway (reading the directory plans one
-    * LIST instead of N per-path statuses — the cheaper shape on an object
-    * store).
+  /** A table's parquet files, and whether `forRun` pruned any: the run's
+    * own tail files plus every shared (compacted/legacy) file, or every
+    * file without `forRun`. A missing table lists as no files. None = a
+    * nested directory appeared (not a layout this ledger writes), which
+    * only the whole-directory Spark read handles.
+    */
+  private type Listing = Option[(Seq[org.apache.hadoop.fs.FileStatus], Boolean)]
+
+  private def listTable(fs: org.apache.hadoop.fs.FileSystem,
+                        p: org.apache.hadoop.fs.Path,
+                        forRun: Option[String]): Listing = {
+    val entries =
+      try fs.listStatus(p)
+      catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] }
+    if (entries.exists(_.isDirectory)) None
+    else {
+      val parquet = entries.toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+      val kept = forRun.map(runPrefix).fold(parquet)(pre => parquet.filter { f =>
+        val n = f.getPath.getName
+        !tailFileRe.matcher(n).matches() || n.startsWith(pre)
+      })
+      Some((kept, kept.size < parquet.size))
+    }
+  }
+
+  /** The files a single-run read must touch (see [[listTable]]). None =
+    * prune nothing: a nested directory, or the selection kept every file
+    * anyway (reading the directory plans one LIST instead of N per-path
+    * statuses — the cheaper shape on an object store).
     */
   private[graft] def prunedFiles(fs: org.apache.hadoop.fs.FileSystem,
                                 p: org.apache.hadoop.fs.Path,
-                                runId: String): Option[Seq[String]] = {
-    val pre = runPrefix(runId)
-    val entries = fs.listStatus(p)
-    if (entries.exists(_.isDirectory)) return None
-    val parquet = entries.iterator.map(_.getPath.getName)
-      .count(_.endsWith(".parquet"))
-    val kept = entries.iterator.map(_.getPath)
-      .filter { q =>
-        val n = q.getName
-        n.endsWith(".parquet") &&
-          (!tailFileRe.matcher(n).matches() || n.startsWith(pre))
-      }
-      .map(_.toString).toSeq
-    if (kept.size == parquet) None else Some(kept)
-  }
+                                runId: String): Option[Seq[String]] =
+    listTable(fs, p, Some(runId)).collect { case (kept, true) =>
+      kept.map(_.getPath.toString)
+    }
 
   /** EVERY ledger-table read goes through here with the table's canonical
     * schema (see [[tableSchemas]]): all runs' rows, or with `forRun` that
     * run's rows only, its other runs' tail files pruned by name (see
     * [[runPrefix]]) — a shared multi-run ledger's resume probe then costs
     * O(this run's uncompacted commits + compacted bins), not O(every run's
-    * history). A table not yet written (or a run with no file left after
-    * pruning) reads as an empty local relation of the same schema, so no
-    * reader special-cases a fresh ledger and no empty job is planned.
+    * history). Driver tier: when the kept files total within
+    * [[DriverBound]], the table is a local relation of the rows read here
+    * (see [[read]]), snapshotted when the frame is built. A table not yet
+    * written (or a run with no file left after pruning) reads as an empty
+    * local relation of the same schema, so no reader special-cases a fresh
+    * ledger and no empty job is planned.
     */
-  private[core] def readTable(spark: SparkSession, table: String,
-                              forRun: Option[String] = None): DataFrame = {
+  private[graft] def readTable(spark: SparkSession, table: String,
+                              forRun: Option[String] = None): DataFrame =
+    frame(spark, tableSchemas(table), read(spark, table, forRun))
+
+  /** A read of one ledger table or view: `Right` = its rows, read on the
+    * driver; `Left` = its Spark plan.
+    */
+  private type View = Either[DataFrame, Seq[Row]]
+
+  private def frame(spark: SparkSession,
+                    schema: org.apache.spark.sql.types.StructType,
+                    v: View): DataFrame =
+    v.fold(identity, rows => spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema))
+
+  /** One table read (see [[readTable]]). Within [[DriverBound]] the kept
+    * files are read through [[DriverParquet.readRows]] and filtered on
+    * `run_id` here, with no Spark job; above it, or with the bound off
+    * (-1), the Spark parquet scan.
+    */
+  private def read(spark: SparkSession, table: String,
+                   forRun: Option[String]): View = {
     val schema = tableSchemas(table)
+    val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(conf)
+    def driverRows(listing: Listing) =
+      listing.collect { case (files, _)
+          if DriverBound.fits(spark, files.map(_.getLen).sum) =>
+        DriverParquet.readRows(conf, files.map(_.getPath), schema)
+      }
+    // A tail file compact() re-binned and deleted after the listing: list
+    // again and read the post-compaction state. A second miss goes to the
+    // Spark read, which skips a vanished file (ignoreMissingFiles below).
+    val first = listTable(fs, p, forRun)
+    val (rows, listing) =
+      try (driverRows(first), first)
+      catch {
+        case _: java.io.FileNotFoundException =>
+          val again = listTable(fs, p, forRun)
+          try (driverRows(again), again)
+          catch { case _: java.io.FileNotFoundException => (None, again) }
+      }
+    rows match {
+      case Some(all) =>
+        val at = schema.fieldIndex("run_id")
+        Right(forRun.fold(all)(runId => all.filter(_.get(at) == runId)))
+      case None => Left(scan(spark, schema, p, listing, forRun))
+    }
+  }
+
+  /** The Spark parquet scan of table dir `p` over `listing`'s files. */
+  private def scan(spark: SparkSession,
+                   schema: org.apache.spark.sql.types.StructType,
+                   p: org.apache.hadoop.fs.Path,
+                   listing: Listing, forRun: Option[String]): DataFrame = {
     // ignoreMissingFiles, scoped to ledger reads: a reader whose plan
     // listed a tail file that compact() then re-binned and DELETED would
     // otherwise crash at execution (seen under the naf soak; the window
@@ -144,22 +211,20 @@ final class Ledger(dir: String) {
     // that must NOT under-read (compact/reset rewrites) read their own
     // explicit snapshots under the maintenance lock, not this path.
     val rd = spark.read.schema(schema).option("ignoreMissingFiles", "true")
-    val files =
-      if (!fs.exists(p)) Some(Nil) else forRun.flatMap(prunedFiles(fs, p, _))
-    val df = files match {
-      case Some(Nil) =>
+    val df = listing match {
+      case Some((Nil, _)) =>
         spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      case Some(kept) =>
+      case Some((kept, true)) =>
         // explicit roots are STATTED at planning — a root compact() just
         // deleted throws there, where ignoreMissingFiles does not apply;
         // fall back to the directory read (one LIST, sees the
         // post-compaction state)
-        try rd.parquet(kept: _*)
+        try rd.parquet(kept.map(_.getPath.toString): _*)
         catch {
           case _: org.apache.spark.sql.AnalysisException |
               _: java.io.FileNotFoundException => rd.parquet(p.toString)
         }
-      case None => rd.parquet(p.toString)
+      case _ => rd.parquet(p.toString)
     }
     forRun.fold(df)(runId => df.filter(col("run_id") === runId))
   }
@@ -400,11 +465,39 @@ final class Ledger(dir: String) {
     * groupBy is a no-op on already-unique paths).
     */
   def outputFiles(spark: SparkSession, runId: String): DataFrame =
-    readTable(spark, "output_files", Some(runId))
-      .groupBy(col("path"))
-      .agg(min(struct(col("idx"), col("seq"))).as("_m"))
-      .select(col("path"), col("_m.idx").as("idx"),
-        lit(runId).as("run_id"), col("_m.seq").as("seq"))
+    frame(spark, Ledger.OutputFilesSchema, outputFilesView(spark, runId))
+
+  /** The run's recorded artifact paths, (idx, seq)-ordered: what
+    * [[Runner]] returns as `outputPaths` and what it checks a sink's new
+    * paths against. No Spark job when the table fits the driver tier.
+    */
+  def recordedPaths(spark: SparkSession, runId: String): Seq[String] =
+    outputFilesView(spark, runId) match {
+      case Right(rows) => rows.map(_.getString(0))
+      case Left(df) => df.orderBy("idx", "seq").select("path").collect()
+        .map(_.getString(0)).toSeq
+    }
+
+  /** [[outputFiles]]' rows; on the driver tier already (idx, seq, path)-
+    * ordered, nulls first, as Spark orders them.
+    */
+  private def outputFilesView(spark: SparkSession, runId: String): View =
+    read(spark, "output_files", Some(runId)) match {
+      case Left(df) => Left(df.groupBy(col("path"))
+        .agg(min(struct(col("idx"), col("seq"))).as("_m"))
+        .select(col("path"), col("_m.idx").as("idx"),
+          lit(runId).as("run_id"), col("_m.seq").as("seq")))
+      case Right(rows) =>
+        val t = tableSchemas("output_files")
+        val (pathAt, idxAt, seqAt) =
+          (t.fieldIndex("path"), t.fieldIndex("idx"), t.fieldIndex("seq"))
+        def key(r: Row) = (Option(r.get(idxAt)).map(_.asInstanceOf[Long]),
+          Option(r.get(seqAt)).map(_.asInstanceOf[Int]))
+        Right(rows.groupBy(r => Option(r.getString(pathAt))).values
+          .map(_.minBy(key)).toSeq
+          .sortBy(r => (key(r), Option(r.getString(pathAt))))
+          .map(r => Row(r.get(pathAt), r.get(idxAt), runId, r.get(seqAt))))
+    }
 
   /** Raw filter_artifacts rows for a run. */
   def filterArtifacts(spark: SparkSession, runId: String): DataFrame =
@@ -498,21 +591,24 @@ final class Ledger(dir: String) {
     readTable(spark, "logs", Some(runId))
       .withColumn("worker_id", coalesce(col("worker_id"), lit("driver")))
 
-  /** Completed indices for a run. */
+  /** Completed indices for a run, distinct; on the driver tier a local
+    * relation (its `collect()` and [[Ledger.count]] run no Spark job).
+    */
   def completedIndices(spark: SparkSession, runId: String): DataFrame =
-    readTable(spark, "index_results", Some(runId))
-      .filter(col("status") === "completed")
-      .select("idx").distinct()
+    frame(spark, Ledger.IdxSchema,
+      read(spark, "index_results", Some(runId)) match {
+        case Left(df) =>
+          Left(df.filter(col("status") === "completed").select("idx").distinct())
+        case Right(rows) =>
+          val t = tableSchemas("index_results")
+          val (idxAt, statusAt) = (t.fieldIndex("idx"), t.fieldIndex("status"))
+          Right(rows.filter(_.get(statusAt) == "completed")
+            .map(r => Row(r.get(idxAt))).distinct)
+      })
 
   /** Failed indices for a run (`core/base.py:858-951` failed_indices). */
   def failedIndices(spark: SparkSession, runId: String): DataFrame =
     readTable(spark, "errors", Some(runId)).select("idx").distinct()
-
-  /** Checkpoint skip: work list minus completed ledger (left-anti join). */
-  def remaining(spark: SparkSession, runId: String, work: DataFrame,
-                idxCol: String): DataFrame =
-    work.join(completedIndices(spark, runId).withColumnRenamed("idx", idxCol),
-      Seq(idxCol), "left_anti")
 
   /** Per-run summary over the metrics rows (dashboard query layer,
     * `dashboard/data.py:49-321`, as one grouped aggregation).
@@ -657,8 +753,8 @@ final class Ledger(dir: String) {
     * in FILE COUNT but tiny in BYTES (one row per commit), so a Spark
     * rewrite pays ~20k task schedulings to move ~20 MB — measured
     * 113–138 s per 20k-file table at the 10⁵ decade. Reading the
-    * snapshot sequentially with parquet-mr and writing one merged file
-    * (through [[DriverParquet.open]]) is pure I/O. Schemas are
+    * snapshot with parquet-mr ([[DriverParquet.readFiles]]) and writing one
+    * merged file (through [[DriverParquet.open]]) is pure I/O. Schemas are
     * UNION-merged across footers (tables gain columns across versions;
     * every ledger field is a flat optional primitive) with values copied
     * field-by-field, so the fast path preserves added columns exactly like
@@ -679,30 +775,10 @@ final class Ledger(dir: String) {
                            out: org.apache.hadoop.fs.Path): Unit = {
     import org.apache.parquet.example.data.Group
     import org.apache.parquet.example.data.simple.SimpleGroup
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.Types
     // pass 1: read every file on a bounded pool (open cost dominates)
-    def readFile(f: org.apache.hadoop.fs.Path): Vector[Group] = {
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), f).withConf(conf).build()
-      try {
-        val b = Vector.newBuilder[Group]
-        var g = reader.read()
-        while (g != null) { b += g; g = reader.read() }
-        b.result()
-      } finally reader.close()
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-    val perFile =
-      try {
-        val futures = files.map(f => pool.submit(
-          new java.util.concurrent.Callable[Vector[Group]] {
-            override def call(): Vector[Group] = readFile(f)
-          }))
-        futures.map(_.get())
-      } finally pool.shutdown()
+    val perFile = DriverParquet.readFiles(conf, files)
     val fieldOrder = scala.collection.mutable.LinkedHashMap
       .empty[String, org.apache.parquet.schema.PrimitiveType]
     val rows = Seq.newBuilder[Group]
@@ -1266,6 +1342,27 @@ final class Ledger(dir: String) {
 }
 
 object Ledger {
+  import org.apache.spark.sql.types._
+
+  /** [[Ledger.completedIndices]]' shape. */
+  private val IdxSchema = StructType(Seq(StructField("idx", LongType)))
+
+  /** [[Ledger.outputFiles]]' shape; `run_id` is the read's own run. */
+  private val OutputFilesSchema = StructType(Seq(
+    StructField("path", StringType), StructField("idx", LongType),
+    StructField("run_id", StringType, nullable = false),
+    StructField("seq", IntegerType)))
+
+  /** `df.count()`, answered without a Spark job when `df` is a local
+    * relation (a driver-tier ledger read).
+    */
+  private[graft] def count(df: DataFrame): Long =
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data.size.toLong
+      case _ => df.count()
+    }
+
   /** Stage-then-rename install: move every staged `*.parquet` under
     * `staging` into `dest` as `<prefix><uuid>.parquet`, then drop the
     * staging dir. Each rename installs one COMPLETE file, so a reader of

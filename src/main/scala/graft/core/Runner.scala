@@ -83,14 +83,14 @@ object Runner {
     val t0 = System.nanoTime()
 
     val src = pipeline.source.load(spark)
-    val completed = ledger.completedIndices(spark, runId)
+    // one snapshot of the run's completed set serves every probe, skip and
+    // count below; on a ledger within the driver tier it is a local
+    // relation, so counting it and the recorded paths run no Spark job
+    lazy val completed = ledger.completedIndices(spark, runId)
 
-    def recordedPaths(): Seq[String] =
-      ledger.outputFiles(spark, runId).orderBy("idx", "seq")
-        .select("path").collect().map(_.getString(0)).toSeq
     def fullSkip(): RunResult = {
-      val done = completed.count()
-      RunResult(runId, done, done, 0, Nil, recordedPaths())
+      val done = Ledger.count(completed)
+      RunResult(runId, done, done, 0, Nil, ledger.recordedPaths(spark, runId))
     }
 
     // Source probe (index column only), before any transform runs: a
@@ -101,7 +101,10 @@ object Runner {
       return fullSkip()
 
     val full = pipeline.filters.foldLeft(src)((d, f) => f.transform(d))
-    val work = if (resume) ledger.remaining(spark, runId, full, idxCol) else full
+    val work =
+      if (resume) full.join(completed.withColumnRenamed("idx", idxCol),
+        Seq(idxCol), "left_anti")
+      else full
 
     // Post-filter probe on the INDEX COLUMN only (column-pruned anti-join
     // scan): decides the skip when a filter dropped every row of some
@@ -152,8 +155,9 @@ object Runner {
     // nBefore MUST be materialized before recordCompleted appends this run's
     // indices to the same index_results path — counting afterwards would rely
     // on the stale file-index snapshot staying stale (fragile under cache
-    // invalidation or a concurrent writer).
-    val nBefore = if (resume) completed.count() else 0L
+    // invalidation or a concurrent writer). A driver-tier `completed` holds
+    // its rows from when it was built.
+    val nBefore = if (resume) Ledger.count(completed) else 0L
     // run-level peak executor memory = the hungriest stage's summed task
     // peak (reference index_results.peak_memory_bytes parity,
     // core/pipeline_store.py:550-563)
@@ -165,12 +169,12 @@ object Runner {
     // the reference's per-index grain; the per-index mode matches exactly).
     // Only paths not yet recorded for this run are appended, preserving the
     // reference's (path, run_id) primary key on output_files.
-    val already = recordedPaths().toSet
+    val already = ledger.recordedPaths(spark, runId).toSet
     ledger.recordOutputFiles(spark, runId, -1L,
       paths.distinct.filterNot(already))
     recordArtifacts(spark, ledger, runId, -1L, pipeline)
     RunResult(runId, nBefore + nExecuted, nBefore, nExecuted, paths,
-      recordedPaths())
+      ledger.recordedPaths(spark, runId))
   }
 
   /** Per-index execution: one Spark job per curator index, each COMMITTED
@@ -235,13 +239,9 @@ object Runner {
       else Set.empty
     val todo = allIdx.filterNot(done)
 
-    def recordedPaths(): Seq[String] =
-      ledger.outputFiles(spark, runId).orderBy("idx", "seq")
-        .select("path").collect().map(_.getString(0)).toSeq
-
     if (todo.isEmpty)
       return RunResult(runId, allIdx.length, allIdx.length, 0, Nil,
-        recordedPaths())
+        ledger.recordedPaths(spark, runId))
 
     // claim namespace for cooperating concurrent workers (same invocation)
     val claimDir = invocationId.map { inv =>
@@ -276,8 +276,7 @@ object Runner {
     // paths not yet recorded for the run (sinks that report cumulative
     // listings — e.g. partition-dir sinks — then attribute each path to the
     // first index that produced it)
-    var recorded = ledger.outputFiles(spark, runId)
-      .select("path").collect().map(_.getString(0)).toSet
+    var recorded = ledger.recordedPaths(spark, runId).toSet
     val stageRecs = Seq.newBuilder[(Long, StageListener#StageRec)]
     var executed = 0
     // shared by the commit path and the stage-grain refresh callbacks
@@ -351,6 +350,6 @@ object Runner {
     ledger.recordWorkerHeartbeat(spark, runId, workerId, pid, hostname,
       invocationId.getOrElse(runId), None, executed.toLong)
     RunResult(runId, done.size + executed, done.size, executed,
-      paths.result(), recordedPaths())
+      paths.result(), ledger.recordedPaths(spark, runId))
   }
 }

@@ -791,12 +791,18 @@ object SimilarityOps {
     }
   }
 
-  /** Probe-bounded search over a prebuilt [[ivfLists]] index. */
+  /** Probe-bounded search over a prebuilt [[ivfLists]] index: the rows of
+    * `df` with `idCol` < `maxQueryId` query it. The bound reaches the
+    * generated code as a reference object (a UDF's closure), not as a
+    * literal: Spark inlines a long literal into the generated source, so a
+    * closed loop of queries with a new bound each compiled a new class per
+    * query.
+    */
   def ivfTopKOverLists(lists: DataFrame, df: DataFrame, idCol: String,
                        vecCol: String, k: Int, maxQueryId: Long,
                        centroids: Seq[Array[Float]],
                        nProbe: Int = 4): DataFrame = {
-    val queries = df.filter(col(idCol) < maxQueryId)
+    val queries = df.filter(col(idCol) < udf(() => maxQueryId).apply())
       .select(col(idCol).as("ia"), col(vecCol).as("va"), l2Norm(col(vecCol)).as("na"),
         explode(probeColumn(col(vecCol), centroids, nProbe)).as("cid"))
     val scored = queries.join(lists, Seq("cid")).filter(col("ia") =!= col("ib"))

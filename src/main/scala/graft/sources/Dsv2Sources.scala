@@ -116,13 +116,14 @@ object Dsv2 {
     if (selData == 0) 0.02 else selData.toDouble / totalData
   }
 
-  /** Bounded-parallel driver-side map for planning-time header reads:
-    * schema inference touches only O(header) bytes per file, but at 10⁵
+  /** Bounded-parallel driver-side map for small per-file reads (planning-
+    * time header reads, [[graft.core.DriverParquet.readFiles]]): schema
+    * inference touches only O(header) bytes per file, but at 10⁵
     * files the serial open/read/close latency dominates planning — a
     * fixed pool keeps inference latency ∝ files/16 without unbounded
     * thread growth. Fails fast on the first error (propagated unwrapped).
     */
-  private[sources] def parMap[A, B](items: Seq[A], parallelism: Int = 16)(f: A => B): Seq[B] = {
+  private[graft] def parMap[A, B](items: Seq[A], parallelism: Int = 16)(f: A => B): Seq[B] = {
     if (items.length <= 1) return items.map(f)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(parallelism, items.length))
@@ -150,8 +151,10 @@ object Dsv2 {
   /** Ranged random-access over a Hadoop path: each `slice` is one
     * positioned `readFully` (pread), so a reader that keeps k of n arrays
     * reads k payloads' bytes, not the file — and per-file size is
-    * unbounded (only each individual slice must fit in one array). One
-    * open stream per handle; callers close after parsing.
+    * unbounded (only each individual slice must fit in one array). The
+    * size comes from the file's status; its stream opens on the first
+    * read, so a handle nobody reads (a shard a header never reaches) holds
+    * none. Callers close after parsing.
     */
   private[graft] final class HadoopRawData(path: String, conf: Map[String, String])
       extends VtkXmlSource.RawData with AutoCloseable {
@@ -160,7 +163,7 @@ object Dsv2 {
     private val p = new Path(path)
     private val fs = p.getFileSystem(c)
     val size: Long = fs.getFileStatus(p).getLen
-    private val in = fs.open(p)
+    private var in: org.apache.hadoop.fs.FSDataInputStream = null
     def slice(off: Long, len: Long): Array[Byte] = {
       require(off >= 0 && len >= 0 && off + len <= size,
         s"$path: slice [$off,+$len) outside $size bytes")
@@ -172,8 +175,12 @@ object Dsv2 {
     }
     /** `len` bytes at `off` into `buf` from `at`. */
     def readInto(off: Long, buf: Array[Byte], at: Int, len: Int): Unit =
-      in.readFully(off, buf, at, len)
-    def close(): Unit = in.close()
+      stream.readFully(off, buf, at, len)
+    private def stream = synchronized {
+      if (in == null) in = fs.open(p)
+      in
+    }
+    def close(): Unit = synchronized { if (in != null) in.close() }
   }
 
   /** Ranged random-access over Hadoop paths read back to back as one file
@@ -872,8 +879,8 @@ class VtiDataSource extends FileUnitSource("*.vti") {
     val cells = table(o) == "cells"
     StructType(Seq(str("grid_id"), int("i"), int("j"), int("k"), dbl("x"), dbl("y"), dbl("z")) ++
       arrays(headers(o) { raw =>
-        val (_, _, _, pd, cd) = VtkXmlSource.listVtiMeta(raw)
-        if (cells) cd else pd
+        val h = new VtkXmlSource.VtiFile(raw).parse((_, _) => false)._1
+        if (cells) h.cellArrays else h.pointArrays
       }.flatMap(_._2)))
   }
 
@@ -892,16 +899,10 @@ class VtiDataSource extends FileUnitSource("*.vti") {
       val raw = open(u, c)
       val (extent, origin, spacing, values) =
         try {
-          val (ext, org0, spc, pd, cd) = VtkXmlSource.listVtiMeta(raw)
-          val lists = if (cells) cd else pd
-          val kept = lists.collect { case (a, k) if keep(a, k) => a }
-          val data: Map[String, Array[Double]] =
-            if (kept.isEmpty) Map.empty
-            else {
-              val g = VtkXmlSource.parseVtiRaw(raw, include = kept.toSet)
-              if (cells) g.cellData else g.pointData
-            }
-          (ext, org0, spc, columnValues(data, lists))
+          val (h, g) = new VtkXmlSource.VtiFile(raw).parse(keep)
+          val (lists, data) =
+            if (cells) (h.cellArrays, g.cellData) else (h.pointArrays, g.pointData)
+          (g.extent, g.origin, g.spacing, columnValues(data, lists))
         } finally raw.close()
       // cell lattice dims (a flat axis keeps one layer, as in readVti)
       val off = if (cells) 1 else 0

@@ -104,10 +104,11 @@ object VtkXmlSource {
 
   /** Window onto a sub-range of another RawData (the AppendedData block of
     * a file-backed handle) — offsets stay Long end-to-end, only individual
-    * slices must fit in one array.
+    * slices must fit in one array. `size` is evaluated on first use.
     */
   private[sources] final class SubRawData(under: RawData, start: Long,
-                                          val size: Long) extends RawData {
+                                          sizeOf: => Long) extends RawData {
+    lazy val size: Long = sizeOf
     def slice(off: Long, len: Long): Array[Byte] = {
       require(off >= 0 && len >= 0 && off + len <= size,
         s"appended slice [$off,+$len) outside $size bytes")
@@ -231,9 +232,9 @@ object VtkXmlSource {
     * (raw bytes are embedded), so the head is cut at the tag and re-closed —
     * the same byte-scan strategy the reference's Rust reader uses. Reads
     * only a BOUNDED head window (grown geometrically until the
-    * `<AppendedData` marker or EOF is inside it) plus a 4 KiB tail window
-    * for the closing tag — never
-    * the appended payload. This is both the planning-time schema read of
+    * `<AppendedData` marker or EOF is inside it) plus, when a payload is
+    * first sliced, a 4 KiB tail window for the closing tag — never the
+    * appended payload. This is both the planning-time schema read of
     * the DSv2 relation (driver cost per file = XML header bytes, not file
     * bytes) and the scan-time entry for ranged per-array reads. Only a file
     * with NO appended section is materialized whole (it is pure XML and
@@ -275,10 +276,12 @@ object VtkXmlSource {
     val enc = "encoding\\s*=\\s*\"([^\"]+)\"".r.findFirstMatchIn(tagHead)
       .map(_.group(1)).getOrElse("base64")
     // closing tag at the end of the file; raw binary may contain the byte
-    // pattern by chance, so take the LAST match in the tail window
-    val tailWindow = math.min(raw.size - underscore - 1, 4096L)
-    val tail = raw.slice(raw.size - tailWindow, tailWindow)
-    val closeAbs = {
+    // pattern by chance, so take the LAST match in the tail window. Read
+    // when a payload is first sliced, so a header-only read (schema
+    // inference) touches the head window alone.
+    lazy val closeAbs = {
+      val tailWindow = math.min(raw.size - underscore - 1, 4096L)
+      val tail = raw.slice(raw.size - tailWindow, tailWindow)
       val needle = "</AppendedData".getBytes("US-ASCII")
       var last = -1
       var at = indexOfBytes(tail, needle, 0)
@@ -628,31 +631,23 @@ object VtkXmlSource {
     */
   def parseVti(bytes: Array[Byte], include: Set[String] = Set.empty,
                exclude: Set[String] = Set.empty): VtiGrid =
-    parseVtiRaw(new ArrayRawData(bytes), include, exclude)
+    new VtiFile(new ArrayRawData(bytes)).parse((a, _) => keeps(include, exclude)(a))._2
 
-  /** [[parseVti]] over a random-access handle — bounded header read plus
-    * ranged per-array payload reads through the VTU parser, like
-    * [[VtuFile]]. */
-  private[sources] def parseVtiRaw(raw: RawData, include: Set[String] = Set.empty,
-                                   exclude: Set[String] = Set.empty): VtiGrid = {
-    val (xmlBytes, app) = splitAppendedRaw(raw)
-    val (extent, origin, spacing) = vtiLattice(xmlBytes)
-    val (_, piece) = parseVtuCore(xmlBytes, app, (a, _) => keeps(include, exclude)(a),
-      decodePoints = false, decodeCells = false, checkExtent = false)
-    VtiGrid(extent, origin, spacing, piece.pointData, piece.cellData)
-  }
-
-  /** Header-only VTI introspection for DSv2 planning: (extent, origin,
-    * spacing, PointData and CellData arrays with their NumberOfComponents)
-    * without any payload read.
+  /** One `.vti` file over a random-access handle, its XML head split once
+    * (one bounded head read, one tail read, as [[VtuFile]]): [[parse]]
+    * walks that head once for the lattice, the array lists (the planning-
+    * time header, with `wanted` false) and the arrays `wanted` names (by
+    * name and component count), reading only those arrays' payloads.
     */
-  private[sources] def listVtiMeta(raw: RawData): (Array[Int], Array[Double], Array[Double],
-      Seq[(String, Int)], Seq[(String, Int)]) = {
-    val (xmlBytes, _) = splitAppendedRaw(raw)
-    val (h, _) = parseVtuCore(xmlBytes, None, (_, _) => false, decodePoints = false,
-      decodeCells = false, checkExtent = false)
-    val (extent, origin, spacing) = vtiLattice(xmlBytes)
-    (extent, origin, spacing, h.pointArrays, h.cellArrays)
+  private[sources] final class VtiFile(raw: RawData) {
+    private val (xml, appended) = splitAppendedRaw(raw)
+
+    def parse(wanted: (String, Int) => Boolean): (VtuHeader, VtiGrid) = {
+      val (extent, origin, spacing) = vtiLattice(xml)
+      val (h, piece) = parseVtuCore(xml, appended, wanted,
+        decodePoints = false, decodeCells = false, checkExtent = false)
+      (h, VtiGrid(extent, origin, spacing, piece.pointData, piece.cellData))
+    }
   }
 
   /** The ImageData WholeExtent, Origin and Spacing of a VTI XML head. */

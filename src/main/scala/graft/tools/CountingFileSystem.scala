@@ -8,15 +8,16 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, PositionedRead
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Local filesystem under the `cntfs:` scheme that counts every byte
-  * delivered to readers — the observability harness for the DSv2 ranged-
-  * read contracts ("schema inference reads headers only", "pruned scans
-  * read selected payloads only"). Register with
+  * delivered to readers, and every `open` — the observability harness for
+  * the DSv2 ranged-read contracts ("schema inference reads headers only",
+  * "pruned scans read selected payloads only"). Register with
   * `hadoopConf.set("fs.cntfs.impl", classOf[CountingFileSystem].getName)`
   * and address files as `cntfs:<absolute local path>`.
   */
 object CountingFileSystem {
   val bytesRead = new AtomicLong(0L)
-  def reset(): Unit = bytesRead.set(0L)
+  val opens = new AtomicLong(0L)
+  def reset(): Unit = { bytesRead.set(0L); opens.set(0L) }
 
   private final class CountingStream(in: FSDataInputStream)
       extends InputStream with Seekable with PositionedReadable {
@@ -38,8 +39,10 @@ object CountingFileSystem {
 
 class CountingFileSystem extends RawLocalFileSystem {
   override def getUri: URI = URI.create("cntfs:///")
-  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CountingFileSystem.opens.incrementAndGet()
     new FSDataInputStream(new CountingFileSystem.CountingStream(super.open(f, bufferSize)))
+  }
 
   // RawLocalFileSystem's statuses load permissions LAZILY via `new
   // File(uri)`, which rejects the cntfs scheme — materialize plain

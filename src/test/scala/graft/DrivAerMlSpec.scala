@@ -126,6 +126,32 @@ class DrivAerMlSpec extends SparkSpec {
     }
   }
 
+  test("schema inference over an 8-shard run opens only the shard holding the head") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cntfs.impl", classOf[graft.tools.CountingFileSystem].getName)
+    val n = 6000L
+    val pts = spark.range(n).select(lit(0L).as("mesh_id"), col("id").as("point_id"),
+      col("id").cast("double").as("x"), lit(0.0).as("y"), lit(0.0).as("z"))
+    val cls = spark.range(1).select(lit(0L).as("mesh_id"), lit(0L).as("cell_id"),
+      array(lit(0L), lit(1L), lit(2L)).as("vertices"))
+    val pd = pts.select(col("mesh_id"), col("point_id"), lit("u").as("field"),
+      col("x").as("value"))
+    val flat = Files.createTempDirectory("dml-open-flat").toString
+    graft.sinks.VtuSink.write(pts, cls, pd, flat, format = "appended")
+    val size = new java.io.File(flat).listFiles()
+      .filter(_.getName.endsWith(".vtu")).head.length
+    val root = Files.createTempDirectory("dml-open").toString + "/runs"
+    DrivAerMlSource.shardToRunLayout(spark, flat, root, partBytes = ((size + 7) / 8).toInt)
+    assert(new java.io.File(s"$root/run_0").listFiles()
+      .count(_.getName.endsWith(".part")) == 8)
+    graft.tools.CountingFileSystem.reset()
+    val df = spark.read.format("graft.sources.DrivAerMlDataSource")
+      .option("path", s"cntfs:$root").load()
+    assert(graft.tools.CountingFileSystem.opens.get() == 1)
+    assert(df.columns.contains("u"))
+    assert(df.count() == n)
+  }
+
   test("shardToRunLayout -> readVolume round trip via VtuSink files") {
     val s = spark
     import s.implicits._

@@ -624,6 +624,41 @@ class SimilaritySpec extends SparkSpec {
     assert(rows() == pre)
   }
 
+  test("ivfTopKOverLists: a new query and bound compile no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val s = spark
+    import s.implicits._
+    val df = clusteredDf.cache()
+    val cents = SimilarityOps.ivfCentroids(df, "vec_id", "embedding",
+      k = 8, iters = 3, dimHint = 32)
+    val lists = SimilarityOps.ivfLists(df, "vec_id", "embedding", cents).cache()
+    val vecs = df.collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    def rows(d: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long, Double)] =
+      d.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        r.getDouble(3))).toSeq.sorted
+    // one query row and the bound past it, as a closed-loop client asks
+    def query(q: Long): (Seq[(Long, Int, Long, Double)], Long) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val got = rows(SimilarityOps.ivfTopKOverLists(lists,
+        Seq((q, vecs(q))).toDF("vec_id", "embedding"), "vec_id", "embedding",
+        5, q + 1, cents, nProbe = 3))
+      (got, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    }
+    try {
+      query(3L) // warms the plan shape
+      val (got, compiled) = query(11L)
+      assert(compiled == 0L, "new classes for a new query")
+      assert(got.nonEmpty && got.forall(_._1 == 11L))
+      // the bound selects exactly the rows a filter on the id keeps
+      for (maxQ <- Seq(1L, 6L, 40L))
+        assert(rows(SimilarityOps.ivfTopKOverLists(lists, df, "vec_id",
+          "embedding", 5, maxQ, cents, nProbe = 3)) ==
+          rows(SimilarityOps.ivfTopKOverLists(lists,
+            df.filter($"vec_id" < maxQ), "vec_id", "embedding", 5,
+            Long.MaxValue, cents, nProbe = 3)))
+    } finally { lists.unpersist(); df.unpersist() }
+  }
+
   test("IVF index persist/reload: loaded probe equals one-shot; ledger resume skips the build") {
     val df = clusteredDf
     val cents = SimilarityOps.ivfCentroids(df, "vec_id", "embedding",

@@ -397,6 +397,36 @@ class VtkXmlSourceSpec extends SparkSpec {
     assert(points.count() == 8 && cells.count() == 4 && pointData.count() == 16)
   }
 
+  test("a .vti scan splits each file's head once") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cntfs.impl", classOf[graft.tools.CountingFileSystem].getName)
+    val dir = Files.createTempDirectory("vti-head").toString
+    Files.writeString(Paths.get(dir, "g.vti"),
+      """<?xml version="1.0"?>
+        |<VTKFile type="ImageData" version="0.1">
+        | <ImageData WholeExtent="0 1 0 1 0 0" Origin="0 0 0" Spacing="1 1 1">
+        |  <Piece Extent="0 1 0 1 0 0">
+        |   <PointData>
+        |    <DataArray type="Float64" Name="u" format="ascii">0 1 2 3</DataArray>
+        |   </PointData>
+        |   <CellData>
+        |    <DataArray type="Float64" Name="c" format="ascii">5</DataArray>
+        |   </CellData>
+        |  </Piece>
+        | </ImageData>
+        |</VTKFile>""".stripMargin)
+    // an all-XML file: one head pass reads the whole file once
+    graft.tools.CountingFileSystem.reset()
+    val df = spark.read.format("graft.sources.VtiDataSource")
+      .option("path", s"cntfs:$dir").load()
+    val once = graft.tools.CountingFileSystem.bytesRead.get()
+    graft.tools.CountingFileSystem.reset()
+    val u = df.select("u").collect().map(_.getDouble(0)).sorted.toSeq
+    val scanned = graft.tools.CountingFileSystem.bytesRead.get()
+    assert(u == Seq(0.0, 1.0, 2.0, 3.0))
+    assert(once > 0 && scanned == once, s"the scan read $scanned bytes, one head pass is $once")
+  }
+
   // 3×2×2 structured point lattice with one point field
   private val vts =
     """<?xml version="1.0"?>
